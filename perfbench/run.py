@@ -33,53 +33,20 @@ WORKLOADS = ["corpus_ingest", "tick_store", "query_sweep"]
 JVM_TIMEOUT_S = 165
 BUILD_TIMEOUT_S = 800
 
-# name -> unit; the gated end-to-end metrics every workload reports
-E2E = {
-    "setup_s": "s",
-    "peak_rss_mb": "MB",
-    "work_per_s": "1/s",
-    "request_p50_ms": "ms",
-}
+# corpus_ingest's own per-layer metrics; BENCHMARK.json lists the rest
+CORPUS_LAYER = {"llm.writeback.ms": "ms", "llm.slice.ms": "ms"}
 
-SWEEP = {
-    "relational": ["agg_hash", "agg_stats", "join_inner", "win_rank", "topk_pergroup"],
-    "timeseries": ["join_asof", "resample_ohlcv", "ts_rolling_corr", "sessionize", "ts_concurrency"],
-    "stream": ["stream_tumbling"],
-    "vector": ["sim_cosine_topk", "sim_ann_ivf", "embed_kmeans"],
-}
 
-# name -> unit; the per-layer metrics of a traced run (0 where a layer
-# is bypassed by the workload)
-PER_LAYER = dict(
-    [
-        ("store.append.ms", "ms"), ("store.append.rows_offered", "rows"),
-        ("store.append.rows_kept", "rows"), ("store.append.keep_ratio", "ratio"),
-        ("store.append.bytes_written", "bytes"), ("store.append.files_written", "files"),
-        ("store.write.ms", "ms"), ("store.query.plan_ms", "ms"), ("store.query.exec_ms", "ms"),
-        ("store.query.files_read", "files"), ("store.query.rows_per_file", "rows"),
-        ("store.compact.ms", "ms"), ("store.compact.bytes_rewritten", "bytes"),
-        ("store.item.files", "files"), ("store.failed", "ops"),
-        ("v2.sql.plan_ms", "ms"), ("v2.sql.exec_ms", "ms"), ("v2.sql.footer_answered", "ratio"),
-        ("v2.sql.files_read", "files"), ("v2.sql.buckets_scanned", "buckets"),
-        ("v2.stream.drain_ms", "ms"), ("v2.stream.rows", "rows"), ("v2.stream.backlog_files", "files"),
-    ]
-    + [(f"query.{q}.ms", "ms") for qs in SWEEP.values() for q in qs]
-    + [(f"sweep.{g}.ms", "ms") for g in SWEEP]
-    + [(f"exec.{n}", u) for n, u in [
-        ("run_ms", "ms"), ("cpu_ms", "ms"), ("gc_ms", "ms"), ("sched_delay_ms", "ms"),
-        ("fetch_wait_ms", "ms"), ("shuffle_write_bytes", "bytes"), ("shuffle_read_bytes", "bytes"),
-        ("spill_bytes", "bytes"), ("input_bytes", "bytes"), ("output_bytes", "bytes"),
-        ("tasks", "count"), ("jobs", "count")]]
-    + [(f"self.{l}.ms", "ms") for l in ["bench", "store", "v2", "llm", "analytic"]]
-    + [("trace.spans", "spans")]
-)
+def spec():
+    """BENCHMARK.json: its end_to_end and per_layer lists, each entry with
+    name, unit, better (and bound, end to end)."""
+    path = os.path.join(ROOT, "BENCHMARK.json")
+    if not os.path.exists(path):
+        die(f"no {path}")
+    with open(path) as f:
+        b = json.load(f)
+    return b["end_to_end"], b["per_layer"]
 
-# corpus_ingest's own per-layer metrics (its pipeline stages)
-CORPUS_LAYER = {
-    "llm.normalize.ms": "ms", "llm.quality.ms": "ms", "llm.dedup.ms": "ms", "llm.mix.ms": "ms",
-    "llm.writeback.ms": "ms", "llm.slice.ms": "ms", "llm.dedup.pairs": "pairs",
-    "llm.dedup.drop_ratio": "ratio", "llm.mix.keep_ratio": "ratio",
-}
 
 JDK17_OPENS = [
     "java.base/java.lang", "java.base/java.lang.invoke", "java.base/java.lang.reflect",
@@ -161,7 +128,10 @@ def spark_home():
 
 
 def run_jvm(workload, seed, seconds, trace, work, out_file, timeout):
-    cmd = ["java", "-Xms1g", "-Xmx3g", "-XX:+UseG1GC", "-XX:TieredStopAtLevel=1"]
+    # C1 alone reserves a 48 MB code cache by default, which Spark's
+    # generated classes fill: the JIT then stops, and the JVM can die
+    cmd = ["java", "-Xms1g", "-Xmx3g", "-XX:+UseG1GC", "-XX:TieredStopAtLevel=1",
+           "-XX:ReservedCodeCacheSize=240m"]
     for o in JDK17_OPENS:
         cmd += ["--add-opens", f"{o}=ALL-UNNAMED"]
     cmd += [
@@ -236,6 +206,7 @@ def fmt(name, m):
 
 def one(workload, seed, seconds, trace, out_path):
     t_start = time.time()
+    e2e, per_layer = spec()
     build()  # only the first run in a checkout builds; its limit is longer
     work = os.path.join(HERE, ".work", f"{workload}-{os.getpid()}")
     shutil.rmtree(work, ignore_errors=True)
@@ -272,11 +243,13 @@ def one(workload, seed, seconds, trace, out_path):
         print(f"error {e}")
     if trace:
         layers = res.get("layers", {})
-        names = dict(PER_LAYER, **(CORPUS_LAYER if workload == "corpus_ingest" else {}))
+        names = dict({m["name"]: m["unit"] for m in per_layer},
+                     **(CORPUS_LAYER if workload == "corpus_ingest" else {}))
         metrics = {n: {"value": float(layers[n]["value"]) if n in layers else 0.0, "unit": u}
                    for n, u in names.items()}
     else:
-        metrics = {n: {"value": float(res["metrics"][n]["value"]), "unit": u} for n, u in E2E.items()}
+        metrics = {m["name"]: {"value": float(res["metrics"][m["name"]]["value"]), "unit": m["unit"]}
+                   for m in e2e}
     return {"correct": res["failed"] == 0, "attempted": int(res["attempted"]),
             "failed": int(res["failed"]), "metrics": metrics}
 

@@ -128,13 +128,16 @@ object Common {
       M(v, unit, Seq("percentile" -> p, "samples" -> xs.size))
     }
 
-  /** The end-to-end metrics every workload reports, from the durations
-    * (ms) of its closed-loop requests and the work they completed.
+  /** The end-to-end metrics every workload reports. Each timed call into
+    * the program is one closed-loop request: `request_p50_ms` is the
+    * median call, failed ones included; `work_per_s` is the work the
+    * successful calls completed per second of request time.
     */
-  def generic(requestsMs: Seq[Double], work: Double, workUnit: String): Seq[(String, M)] = {
-    val busyS = requestsMs.sum / 1e3
+  def generic(rec: Recorder, work: Double, workUnit: String): Seq[(String, M)] = {
+    val ms = rec.requests.map(_.ms)
+    val busyS = ms.sum / 1e3
     Seq(
       "work_per_s" -> M(if (busyS > 0) work / busyS else 0.0, "1/s", Seq("work_unit" -> workUnit)),
-      "request_p50_ms" -> summary(requestsMs, "ms"))
+      "request_p50_ms" -> summary(ms, "ms"))
   }
 }

@@ -6,97 +6,32 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import java.util.Random
 import scala.collection.mutable
 
 /** corpus_ingest: an LLM text corpus through the whole stack, one crawl
   * day per batch. Per batch the client lands the raw crawl in the store,
   * runs text_normalize → text_quality → dedup_minhash → corpus_mix
   * through `SparkEntry.queries`, appends the kept documents to a curated
-  * item and reads the day back through catalog SQL. Heavy on
-  * operators.LlmOps, light on sources.Store.
+  * item and reads the day back through catalog SQL. Each of these calls
+  * is one closed-loop request. Heavy on operators.LlmOps, light on
+  * sources.Store.
   *
-  * Input per batch (seeded): `BatchDocs` fresh documents, a tenth as
-  * many of them cloned with one extra word (Jaccard > 0.9, caught by
-  * dedup_minhash) and a twentieth as many exact copies of the previous
+  * Input per batch (seeded, `Docs.batch`): `BatchDocs` fresh documents, a
+  * tenth as many of them cloned with one extra word (Jaccard > 0.9, caught
+  * by dedup_minhash) and a twentieth as many exact copies of the previous
   * day's documents (caught by appendNewOnly in both items).
   */
 final class CorpusIngest(c: Ctx) extends Workload {
   import Common._
+  import Docs.Doc
   import c._
 
-  val BatchDocs = 600
+  val BatchDocs = 150
   val QualityMin = 0.5
   /** Days landed during set-up; later days are landed as the loop needs them. */
   val PreLanded = 2
   /** Fresh documents per warm-up batch. */
   val WarmDocs = 60
-
-  private val Vocab = Array(
-    "batch", "part", "spark", "line", "column", "order", "small", "sort", "fast",
-    "value", "scan", "hash", "slow", "group", "agg", "filter", "query", "big", "key",
-    "window", "row", "table", "stream", "merge", "data", "customer", "join", "vector",
-    "index", "store", "bucket", "day", "tick", "price", "token", "model", "shard")
-  private val Stop = Array("the", "a", "of", "and", "to", "in", "is", "that")
-  private val Langs = Array("en", "en", "en", "de", "fr", "es", "zh")
-
-  private case class Doc(id: Long, ts: Long, text: String, lang: String, source: String)
-
-  private def freshDocs(b: Int, size: Int): IndexedSeq[Doc] = {
-    val rnd = new Random(seed * 1000003L + b)
-    val t0 = dayStartMicros(b)
-    (0 until size).map { j =>
-      val n = 15 + rnd.nextInt(90)
-      val sb = new StringBuilder
-      var cap = true
-      for (k <- 0 until n) {
-        val w =
-          if (rnd.nextInt(5) == 0) Stop(rnd.nextInt(Stop.length))
-          else Vocab(rnd.nextInt(Vocab.length))
-        if (k > 0) sb.append(' ')
-        sb.append(if (cap) w.capitalize else w)
-        cap = false
-        val r = rnd.nextInt(12)
-        if (r == 0) { sb.append('.'); cap = true }
-        else if (r == 1) sb.append(',')
-      }
-      sb.append('.')
-      Doc(b.toLong * 100000L + j, t0 + rnd.nextLong(DayMicros), sb.toString,
-        Langs(rnd.nextInt(Langs.length)), s"src${rnd.nextInt(20)}")
-    }
-  }
-
-  /** Day `b` as crawled: `size` fresh documents, a tenth as many near
-    * duplicates of them, and a twentieth as many exact re-sends of the
-    * previous day's documents.
-    */
-  private def batch(b: Int, size: Int): IndexedSeq[Doc] = {
-    val fresh = freshDocs(b, size)
-    val rnd = new Random(seed * 7919L + b)
-    val near = (0 until size / 10).map { j =>
-      val d = fresh(rnd.nextInt(fresh.size))
-      d.copy(id = b.toLong * 100000L + 50000L + j, ts = dayStartMicros(b) + rnd.nextLong(DayMicros),
-        text = d.text + " " + Vocab(rnd.nextInt(Vocab.length)))
-    }
-    val resent = if (b == 0) Nil else {
-      val prev = freshDocs(b - 1, size)
-      rnd.ints(0, prev.size).distinct().limit((size / 20).toLong).toArray.toSeq.map(prev(_))
-    }
-    fresh ++ near ++ resent
-  }
-
-  private val docSchema = StructType(Seq(
-    StructField("doc_id", LongType), StructField("ts", LongType), StructField("text", StringType),
-    StructField("lang", StringType), StructField("source", StringType)))
-
-  /** Lands batch `b` as `<dir>/documents.parquet` (the crawl output). */
-  private def land(docs: Seq[Doc], dir: String): Unit = {
-    val rows = docs.map(d => Row(d.id, d.ts, d.text, d.lang, d.source))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), docSchema)
-      .withColumn("ts", timestamp_micros(col("ts")))
-      .withColumn("n_chars", length(col("text")).cast("long"))
-      .write.parquet(s"$dir/documents.parquet")
-  }
 
   private val cols = Seq("DOC_ID" -> LongType, "TEXT" -> StringType, "LANG" -> StringType,
     "SOURCE" -> StringType)
@@ -137,8 +72,8 @@ final class CorpusIngest(c: Ctx) extends Workload {
   private val landed = mutable.Map.empty[Int, IndexedSeq[Doc]]
 
   private def landDay(b: Int, size: Int, in: String): IndexedSeq[Doc] = {
-    val docs = batch(b, size)
-    land(docs, s"$in/b$b")
+    val docs = Docs.batch(seed, b, size)
+    Docs.land(spark, docs, s"$in/b$b")
     docs
   }
 
@@ -158,12 +93,11 @@ final class CorpusIngest(c: Ctx) extends Workload {
       val in = s"$dir/in"
       val docs = landed.remove(b).getOrElse(landDay(b, BatchDocs, in))
       inputBytes += docs.map(d => 16L + d.text.length + d.lang.length + d.source.length).sum
+      val failed0 = rec.failed
       val t0 = System.nanoTime()
-      val ok = tr.request("req.batch")(step(main, b, in, docs))
-      if (ok) {
-        batchMs += (System.nanoTime() - t0) / 1e6
-        docsDone += docs.size
-      }
+      tr.request("req.batch")(step(main, b, in, docs))
+      batchMs += (System.nanoTime() - t0) / 1e6
+      if (rec.failed == failed0) docsDone += docs.size
       b += 1
     }
   }
@@ -183,8 +117,8 @@ final class CorpusIngest(c: Ctx) extends Workload {
     }
   }
 
-  /** Runs batch `b` through `p`; false if any call failed. */
-  private def step(p: Pipeline, b: Int, in: String, docs: Seq[Doc]): Boolean = {
+  /** Runs batch `b` through `p`, up to the first call that throws. */
+  private def step(p: Pipeline, b: Int, in: String, docs: Seq[Doc]): Unit = {
     val bdir = s"$in/b$b"
     val ndir = s"$in/n$b"
     val n = docs.size
@@ -192,7 +126,7 @@ final class CorpusIngest(c: Ctx) extends Workload {
       .select(col("ts").as("TS"), col("doc_id").as("DOC_ID"), col("text").as("TEXT"),
         col("lang").as("LANG"), col("source").as("SOURCE"))
     val wrote = call("store.append")(put(p.raw, "RAW", raw, n))(_ => true)
-    if (wrote.isEmpty) return false
+    if (wrote.isEmpty) return
     p.offered ++= docs.map(_.id)
 
     val normalized = call("llm.normalize") {
@@ -202,25 +136,25 @@ final class CorpusIngest(c: Ctx) extends Workload {
           length(col("norm_text")).cast("long").as("n_chars"), col("n_tok"), col("ts"))
         .write.parquet(s"$ndir/documents.parquet")
     }(_ => true)
-    if (normalized.isEmpty) return false
+    if (normalized.isEmpty) return
 
     val ids = docs.map(_.id).toSet
     val quality = call("llm.quality") {
       SparkEntry.queries("text_quality")(spark, ndir).collect()
         .map(r => r.getLong(0) -> (if (r.isNullAt(1)) 0.0 else r.getDouble(1))).toMap
-    }(q => q.size == ids.size && q.keySet == ids).getOrElse(return false)
+    }(q => q.size == ids.size && q.keySet == ids).getOrElse(return)
 
-    // near-duplicates carry ids from 50000 up within their day (see `batch`)
+    // near-duplicates carry ids from 50000 up within their day (see `Docs.batch`)
     val planted = docs.count(d => d.id % 100000L >= 50000L)
     val dupPairs = call("llm.dedup") {
       SparkEntry.queries("dedup_minhash")(spark, ndir).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(3)))
     }(ps => ps.forall { case (a, bb, j) => a < bb && j >= 0.8 && ids(a) && ids(bb) } &&
-      ps.length >= planted * 9 / 10).getOrElse(return false)
+      ps.length >= planted * 9 / 10).getOrElse(return)
 
     val mixed = call("llm.mix") {
       SparkEntry.queries("corpus_mix")(spark, ndir).collect().map(_.getLong(0)).toSet
-    }(_.subsetOf(ids)).getOrElse(return false)
+    }(_.subsetOf(ids)).getOrElse(return)
 
     val drop = dupPairs.map(_._2).toSet
     val kept = mixed.filter(id => quality(id) >= QualityMin && !drop(id))
@@ -237,13 +171,13 @@ final class CorpusIngest(c: Ctx) extends Workload {
           col("source").as("SOURCE"), col("n_tok").as("N_TOK"), col("quality").as("QUALITY"))
       tr.span("store.append")(put(p.cur, "CURATED", df, kept.size))
     }(_ => true)
-    if (wroteBack.isEmpty) return false
+    if (wroteBack.isEmpty) return
     kept.foreach(id => p.curated(id) = tsOf(id))
 
     // the day just landed, read back through the catalog
     val lo = dayStartMicros(b)
     val want = p.curated.collect { case (id, ts) if ts >= lo && ts < lo + DayMicros => id }.toSet
-    val sliced = call("llm.slice") {
+    call("llm.slice") {
       tr.span("v2.sql") {
         val df = spark.sql(s"SELECT DOC_ID FROM ${p.catalog}.CURATED " +
           s"WHERE TS >= '${dayStr(b)}' AND TS < '${dayStr(b + 1)}'")
@@ -258,7 +192,6 @@ final class CorpusIngest(c: Ctx) extends Workload {
         rows
       }
     }(rows => rows.length == want.size && rows.toSet == want)
-    sliced.isDefined
   }
 
   def finish(): Unit = {
@@ -272,9 +205,10 @@ final class CorpusIngest(c: Ctx) extends Workload {
   private def storeBytes: Long = parquetBytes(spark, s"$dir/store")
 
   def metrics: Seq[(String, M)] = {
-    val docsPerS = if (batchMs.isEmpty) 0.0 else docsDone / (batchMs.sum / 1e3)
-    generic(batchMs.toSeq, docsDone.toDouble, "raw docs") ++ Seq(
-      "docs_per_s" -> M(docsPerS, "docs/s", Seq("batches" -> batchMs.size, "docs" -> docsDone)),
+    val gen = generic(rec, docsDone.toDouble, "raw docs")
+    gen ++ Seq(
+      "docs_per_s" -> gen.toMap.apply("work_per_s").copy(unit = "docs/s",
+        extra = Seq("batches" -> batchMs.size, "docs" -> docsDone)),
       "batch_p50_s" -> summary(batchMs.map(_ / 1e3).toSeq, "s"),
       "space_amp" -> M(if (inputBytes > 0) storeBytes.toDouble / inputBytes else 0.0, "ratio",
         Seq("store_bytes" -> storeBytes, "input_bytes" -> inputBytes)))

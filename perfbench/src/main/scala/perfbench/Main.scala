@@ -78,6 +78,16 @@ object Main {
     scala.io.Source.fromFile("/proc/self/status").getLines()
       .find(_.startsWith("VmHWM:")).map(_.split("\\s+")(1).toDouble / 1024.0).getOrElse(0.0)
 
+  /** Peak use of the JIT code cache: near its reserved size, the JIT
+    * stops compiling and timings drift.
+    */
+  def codeCachePeakMb(): Double = {
+    import scala.jdk.CollectionConverters._
+    ManagementFactory.getMemoryPoolMXBeans.asScala
+      .filter(p => p.getName.startsWith("CodeCache") || p.getName.startsWith("CodeHeap"))
+      .map(_.getPeakUsage.getUsed).sum / 1048576.0
+  }
+
   def deleteTree(f: File): Unit = {
     if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteTree))
     f.delete()
@@ -101,14 +111,16 @@ object Main {
     var w: Workload = null
     var ctx: Ctx = null
     for (i <- 0 until SetupReps) {
-      val wall0 =
-        if (i == 0) ManagementFactory.getRuntimeMXBean.getStartTime
-        else System.currentTimeMillis()
-      val nano0 = System.nanoTime()
+      // the previous repetition's session and files are cleared before
+      // the clock starts: that is the benchmark's housekeeping, not set-up
       if (spark != null) {
         spark.stop()
         deleteTree(new File(ctx.dir))
       }
+      val wall0 =
+        if (i == 0) ManagementFactory.getRuntimeMXBean.getStartTime
+        else System.currentTimeMillis()
+      val nano0 = System.nanoTime()
       spark = session(work)
       val dir = s"$work/rep$i"
       new File(dir).mkdirs()
@@ -146,6 +158,7 @@ object Main {
       "measured_s" -> wallS,
       "warmup_s" -> warmupS,
       "cpus" -> Runtime.getRuntime.availableProcessors(),
+      "code_cache_peak_mb" -> codeCachePeakMb(),
       "attempted" -> rec.attempted, "failed" -> rec.failed,
       "errors" -> rec.errors.toSeq,
       "calls_ms" -> rec.ops.groupBy(_.kind).toSeq.sortBy(_._1).map { case (k, os) => k -> os.map(_.ms).toSeq },

@@ -42,6 +42,10 @@ final class Recorder {
 
   def attempted: Int = ops.size
   def failed: Int = ops.count(!_.ok)
+  /** The closed-loop requests: every timed call into the program (the
+    * end-of-run checks aside), failed ones included.
+    */
+  def requests: Seq[Op] = ops.filterNot(_.kind.startsWith("check.")).toSeq
   def ms(kinds: String*): Seq[Double] = ops.filter(o => o.ok && kinds.contains(o.kind)).map(_.ms).toSeq
 }
 
