@@ -53,7 +53,7 @@ object Store {
   val MinStart: Timestamp = Timestamp.valueOf("1678-01-01 00:00:00")
 
   /** Metadata-only item statistics (see [[Store.describe]]). */
-  /** One retained version of a versioned item (see
+  /** One retained version of an item (see
     * [[Store!.versionsOf]]).
     */
   case class ItemVersion(
@@ -434,19 +434,16 @@ object Store {
     * 1 M-row sorted chunks (store.py:27, applied store.py:174) so
     * row-group min/max stats stay uniformly selective; same default.
     *
-    * `versioned = true` selects the OBJECT-STORE-NATIVE item layout:
-    * each item's data lives in immutable `v-<id>` version directories
-    * and the active one is named by a single `_current` pointer object.
-    * Rewrites (append/compact) write a fresh version and commit it with
-    * ONE pointer overwrite — a single-object PUT, atomic on every real
-    * object store — so no directory rename exists anywhere on the write
-    * path and a crash at any point leaves readers on the old complete
-    * version (orphaned versions swept by [[Store!.vacuum]]). The flat
-    * layout (default) keeps in-place appends cheapest on rename-atomic
-    * filesystems; versioned trades a pointer read per operation for
-    * rename-free atomicity. Persisted like the schema; a flat store
-    * cannot be reopened as versioned (the data would need migration),
-    * while a versioned store serves any caller transparently.
+    * Item layout: each item's data lives in immutable `v-<id>` version
+    * directories under `items/<KEY>/`, and the active one is named by a
+    * single `_current` pointer object. Rewrites (append/compact) write a
+    * fresh version and commit it with ONE pointer overwrite — a
+    * single-object PUT, atomic on every real object store — so no
+    * directory rename exists on the item-level write path and a crash
+    * at any point leaves readers on the old complete version (orphaned
+    * versions swept by [[Store!.vacuum]]). A store directory without
+    * the layout marker was written by the retired flat item layout and
+    * is refused with [[SchemaError]]; there is no migration.
     *
     * `writerLease = true` additionally takes a cross-JVM lease file per
     * mutated item (exclusive create + TTL + steal-on-expiry, contract
@@ -473,7 +470,6 @@ object Store {
       index: Option[String] = None,
       bucket: Option[String] = None,
       chunkRows: Long = 1000000L,
-      versioned: Boolean = false,
       writerLease: Boolean = false
   ): Store = {
     bucket.foreach { b =>
@@ -513,7 +509,7 @@ object Store {
               s"conflicting schema ${r.catalogString} requested"
           )
       }
-      val (persistedBucket, storeTz, persistedVersioned) = readLayout(fs, base)
+      val (persistedBucket, storeTz) = readLayout(fs, base)
       bucket.foreach { b =>
         if (!persistedBucket.contains(b))
           throw new SchemaError(
@@ -527,26 +523,18 @@ object Store {
       // alignment and their per-write guard ([[requireTzAligned]])
       // fails fast with the remedy. A read-only consumer in another
       // timezone — the common multi-region deployment — just works.
-      // the layout is a property of the data on disk: an existing store
-      // keeps its persisted layout (flat callers transparently read a
-      // versioned store), but explicitly requesting versioned semantics
-      // on a flat store must fail — the caller is relying on atomic
-      // pointer swaps the flat layout cannot provide
-      if (versioned && !persistedVersioned)
-        throw new SchemaError(
-          s"store at $basePath was created with the flat item layout; " +
-            "it cannot be reopened as versioned")
       new Store(spark, base, persisted, persistedBucket, chunkRows, storeTz,
-        persistedVersioned, writerLease)
+        writerLease)
     } else {
       val schema = requested.getOrElse(
         buildSchema(DefaultColumns, index.getOrElse(DefaultIndex))
       )
-      writeUTF8(fs, schemaPath, schema.json)
+      // schema.json last: it is what makes the directory a store, so a
+      // crash before it leaves nothing a reopen would misread
+      writeUTF8(fs, new HPath(base, VersionedMarker), "1")
       bucket.foreach(b => writeUTF8(fs, layoutPath, s"$b\n$sessionTz"))
-      if (versioned) writeUTF8(fs, new HPath(base, VersionedMarker), "1")
-      new Store(spark, base, schema, bucket, chunkRows, sessionTz, versioned,
-        writerLease)
+      writeUTF8(fs, schemaPath, schema.json)
+      new Store(spark, base, schema, bucket, chunkRows, sessionTz, writerLease)
     }
   }
 
@@ -581,30 +569,33 @@ object Store {
     if (!fs.exists(schemaPath))
       throw new SchemaError(s"no graft store at $basePath (missing $SchemaFile)")
     val persisted = readSchema(fs, schemaPath)
-    val (bucket, storeTz, versioned) = readLayout(fs, base)
+    val (bucket, storeTz) = readLayout(fs, base)
     new Store(spark, base, persisted,
-      bucket = bucket, storeTz = storeTz, versioned = versioned,
-      writerLease = writerLease)
+      bucket = bucket, storeTz = storeTz, writerLease = writerLease)
   }
 
-  /** The ONE reader of a store's persisted layout — (bucket, storeTz,
-    * versioned) — shared by [[open]] and [[attach]] so the parsing and
-    * defaulting rules can never diverge between the write-side and the
-    * read-only entry points. A missing layout file means unbucketed; a
-    * missing timezone line means the pre-tz vintage's hard-coded UTC
-    * invariant (NOT "skip the check"); versioned-ness is the marker
-    * file's existence.
+  /** The ONE reader of a store's persisted layout — (bucket, storeTz) —
+    * shared by [[open]] and [[attach]] so the parsing and defaulting
+    * rules can never diverge between the write-side and the read-only
+    * entry points. A missing layout file means unbucketed; a missing
+    * timezone line means the pre-tz vintage's hard-coded UTC invariant
+    * (NOT "skip the check"). A store without the `versioned` marker
+    * file was written by the retired flat item layout (item data
+    * directly in `items/<KEY>/`, no `_current` pointer): refused, so no
+    * read or write ever misreads its items as absent.
     */
-  private def readLayout(
-      fs: FileSystem, base: HPath): (Option[String], String, Boolean) = {
+  private def readLayout(fs: FileSystem, base: HPath): (Option[String], String) = {
+    if (!fs.exists(new HPath(base, VersionedMarker)))
+      throw new SchemaError(
+        s"store at $base uses the flat item layout (no '$VersionedMarker' " +
+          "marker), which this version no longer reads or writes; only " +
+          "the versioned `_current` layout is supported")
     val layoutPath = new HPath(base, LayoutFile)
     val lines =
       if (fs.exists(layoutPath))
         readUTF8(fs, layoutPath).split("\n").map(_.trim).filter(_.nonEmpty).toSeq
       else Seq.empty
-    (lines.headOption,
-      lines.drop(1).headOption.getOrElse("UTC"),
-      fs.exists(new HPath(base, VersionedMarker)))
+    (lines.headOption, lines.drop(1).headOption.getOrElse("UTC"))
   }
 
   /** Index column first (TimestampType), then value columns, all
@@ -745,7 +736,8 @@ object Store {
 
 /** A keyed, schema-enforced, append-only, time-partitioned Parquet store —
   * the reference's single abstraction (oakstore/store.py) re-expressed on
-  * Spark. Each item is a Parquet dataset directory under `items/<KEY>`;
+  * Spark. Each item is a Parquet dataset directory under
+  * `items/<KEY>/<version>/`, the version named by `items/<KEY>/_current`;
   * reads are lazy DataFrames; the time index is an ordinary TimestampType
   * column used for range-partitioned writes and pushdown range queries.
   *
@@ -766,7 +758,6 @@ class Store private[sources] (
     val bucket: Option[String] = None,
     val chunkRows: Long = 1000000L,
     val storeTz: String = "UTC",
-    val versioned: Boolean = false,
     val writerLease: Boolean = false
 ) {
   import Store._
@@ -1255,7 +1246,7 @@ class Store private[sources] (
     * bucket dirs through this directly (the bucket value lives in the
     * dir name, not the files).
     */
-  private def flatWriter(df: DataFrame) = {
+  private def plainWriter(df: DataFrame) = {
     requireMicrosTimestamps()
     df.write
       .option("compression", "snappy")
@@ -1264,7 +1255,7 @@ class Store private[sources] (
 
   private def writer(df: DataFrame) = {
     requireTzAligned() // withBucket's date_format renders in session tz
-    val w = flatWriter(withBucket(df))
+    val w = plainWriter(withBucket(df))
     bucket.fold(w)(_ => w.partitionBy(BucketCol))
   }
 
@@ -1306,7 +1297,7 @@ class Store private[sources] (
     * defined on the zero-padded STRING.
     */
   private def loadRaw(key: String): DataFrame = {
-    val p = dataPath(key, mustExist = true).toString
+    val p = dataPath(key).toString
     if (bucket.isDefined)
       spark.read.schema(schema.add(BucketCol, StringType)).parquet(p)
     else spark.read.schema(schema).parquet(p)
@@ -1317,9 +1308,8 @@ class Store private[sources] (
     * (`_SUCCESS`, dot-files) excluded. One flat recursive LIST (a
     * paged object-store LIST, not a directory walk) — the metadata
     * backbone of the DSv2 micro-batch stream's offsets
-    * ([[graft.sources.v2.GraftMicroBatchStream]]). On a versioned
-    * store this resolves the CURRENT version pointer at call time,
-    * like every read.
+    * ([[graft.sources.v2.GraftMicroBatchStream]]). It resolves the
+    * CURRENT version pointer at call time, like every read.
     */
   /** Recursive file listing, shaped per scheme:
     *
@@ -1350,9 +1340,9 @@ class Store private[sources] (
       rootMustExist: Boolean = true): Seq[org.apache.hadoop.fs.FileStatus] = {
     val buf = Vector.newBuilder[org.apache.hadoop.fs.FileStatus]
     if (base.toUri.getScheme == "file") {
-      // Every caller applies the Spark hidden-segment filter (`_`/`.`
-      // prefixes, `=`-bearing partition dirs exempt), so the walk never
-      // needs to ENTER a hidden directory — and must not: a concurrent
+      // Every caller applies the Spark hidden-segment filter
+      // ([[hiddenName]]), so the walk never needs to ENTER a hidden
+      // directory — and must not: a concurrent
       // committer's `_temporary/` task dirs appear and vanish mid-write,
       // and RawLocalFileSystem surfaces a dir deleted between the parent
       // listing and the child listStatus as an opaque
@@ -1365,10 +1355,6 @@ class Store private[sources] (
       // subtree — the listing is a point-in-time snapshot and callers
       // needing stronger consistency already retry; an I/O error on a
       // dir that still EXISTS stays fatal.
-      def hiddenDir(p: HPath): Boolean = {
-        val n = p.getName
-        (n.startsWith("_") || n.startsWith(".")) && !n.contains("=")
-      }
       def go(d: HPath, atRoot: Boolean): Unit = {
         val swallow = !atRoot || !rootMustExist
         val children =
@@ -1380,8 +1366,8 @@ class Store private[sources] (
               Array.empty[org.apache.hadoop.fs.FileStatus]
           }
         children.foreach { st =>
-          if (st.isDirectory) { if (!hiddenDir(st.getPath)) go(st.getPath, atRoot = false) }
-          else buf += st
+          if (!st.isDirectory) buf += st
+          else if (!hiddenName(st.getPath.getName)) go(st.getPath, atRoot = false)
         }
       }
       go(root, atRoot = true)
@@ -1406,43 +1392,43 @@ class Store private[sources] (
   }
 
   private[sources] def dataFiles(key: String): Seq[String] = {
-    val root = dataPath(key, mustExist = true)
-    val rootPrefix = root.toUri.getPath
+    val root = dataPath(key)
     val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-    // mustExist above already excludes never-existed roots, so a root
+    // dataPath above already excludes never-existed roots, so a root
     // missing INSIDE the walk is the vanished-mid-call snapshot race
-    // (concurrent compact move-out / drop) — tolerant, like every
+    // (concurrent compact / drop) — tolerant, like every
     // listing here; a strict root would re-introduce the very
     // throw-on-vanish the point-in-time contract forbids
     walkFiles(root, rootMustExist = false).foreach { st =>
-      // hidden-ness applies to EVERY path segment below the item root,
-      // not just the file name: a concurrent write's in-flight task
-      // files live under a `_temporary/` DIRECTORY with ordinary file
-      // names — a name-only filter would stream uncommitted data
-      val rel = st.getPath.toUri.getPath.stripPrefix(rootPrefix)
-      // Spark's hidden-path rule: `.`-prefixed, or `_`-prefixed UNLESS
-      // it is a partition segment (contains '='), which is how the
-      // `__bucket=...` dirs stay visible while `_temporary` does not
-      val hidden = rel.split('/').exists(seg =>
-        seg.startsWith(".") || (seg.startsWith("_") && !seg.contains("=")))
-      if (st.isFile && !hidden) buf += st.getPath.toString
+      if (st.isFile && !hiddenBelow(root, st.getPath)) buf += st.getPath.toString
     }
     buf.sorted.toSeq
   }
 
-  private def itemPath(key: String, mustExist: Boolean): HPath = {
-    val k = validateKey(key)
-    val p = new HPath(itemsRoot, k)
-    if (mustExist && !fs.exists(p))
-      throw new ItemKeyError(s"no such item: $k")
-    p
-  }
+  /** Spark's hidden-path rule for one path segment — the rule its file
+    * index applies: `.`-prefixed is always hidden; `_`-prefixed is
+    * hidden UNLESS it is a partition segment (contains '='), which is
+    * how the `__bucket=...` dirs stay visible while committer
+    * `_temporary` dirs and `_SUCCESS` markers do not. The one
+    * definition every listing below shares.
+    */
+  private def hiddenName(n: String): Boolean =
+    n.startsWith(".") || (n.startsWith("_") && !n.contains("="))
 
-  /** Versioned layout: the item's `_current` pointer object. */
+  /** Whether any segment of `f` BELOW `root` is hidden — hidden-ness
+    * applies to every segment, not just the file name: a concurrent
+    * write's in-flight task files live under a `_temporary/` DIRECTORY
+    * with ordinary file names, and a name-only filter would read
+    * uncommitted data.
+    */
+  private def hiddenBelow(root: HPath, f: HPath): Boolean =
+    f.toUri.getPath.stripPrefix(root.toUri.getPath).split('/').exists(hiddenName)
+
+  /** The item's `_current` pointer object. */
   private def ptrPath(key: String): HPath =
     new HPath(new HPath(itemsRoot, validateKey(key)), Store.CurrentPtr)
 
-  /** Versioned layout: the active version id named by the pointer. */
+  /** The active version id named by the pointer. */
   private def currentVersion(key: String): String = {
     val ptr = ptrPath(key)
     if (!fs.exists(ptr)) throw new ItemKeyError(s"no such item: ${validateKey(key)}")
@@ -1458,20 +1444,12 @@ class Store private[sources] (
     v
   }
 
-  /** The directory holding an item's live DATA — the item dir itself on
-    * the flat layout, the `_current`-named version dir on the versioned
-    * layout. Every read/append/describe resolves through here, so both
-    * layouts share all operator code below this point.
+  /** The directory holding an item's live DATA — the `_current`-named
+    * version dir; [[ItemKeyError]] when the item does not exist. Every
+    * read/append/describe resolves through here.
     */
-  private def dataPath(key: String, mustExist: Boolean): HPath =
-    if (!versioned) itemPath(key, mustExist)
-    else {
-      val k = validateKey(key)
-      if (!fs.exists(ptrPath(k))) {
-        if (mustExist) throw new ItemKeyError(s"no such item: $k")
-        new HPath(itemsRoot, k) // absent: caller only probes existence
-      } else new HPath(new HPath(itemsRoot, k), currentVersion(k))
-    }
+  private def dataPath(key: String): HPath =
+    new HPath(new HPath(itemsRoot, validateKey(key)), currentVersion(key))
 
   /** Reference `_validate_key` (store.py:183-194): regex-check, then
     * case-fold to upper for the on-disk directory name.
@@ -1481,19 +1459,16 @@ class Store private[sources] (
     case _ => throw new ItemKeyError(s"invalid item key: '$key'")
   }
 
-  def exists(key: String): Boolean =
-    if (versioned) fs.exists(ptrPath(key))
-    else fs.exists(itemPath(key, mustExist = false))
+  def exists(key: String): Boolean = fs.exists(ptrPath(key))
 
+  /** An item dir without a pointer is a half-created or half-dropped
+    * orphan — not an item (the pointer IS item existence).
+    */
   def listItems(): Seq[String] =
-    if (versioned)
-      // an item dir without a pointer is a half-created or half-dropped
-      // orphan — not an item (the pointer IS item existence)
-      fs.listStatus(itemsRoot).iterator
-        .map(_.getPath)
-        .filter(p => fs.exists(new HPath(p, Store.CurrentPtr)))
-        .map(_.getName).toVector.sorted
-    else fs.listStatus(itemsRoot).map(_.getPath.getName).toVector.sorted
+    fs.listStatus(itemsRoot).iterator
+      .map(_.getPath)
+      .filter(p => fs.exists(new HPath(p, Store.CurrentPtr)))
+      .map(_.getName).toVector.sorted
 
   /** Metadata-only item statistics: row count, index min/max, file
     * count and byte size — read from Parquet FOOTERS (row-group counts
@@ -1509,21 +1484,18 @@ class Store private[sources] (
     * Returns (rows, minIndex, maxIndex, nFiles, bytes); min/max are
     * None for an empty item (or if a writer produced no stats).
     */
-  /** The PRESENT versions of a versioned item — the current one, plus
+  /** The PRESENT versions of an item — the current one, plus
     * any orphans a crashed swap left behind (a completed swap deletes
     * its predecessor right after the pointer commit, so extras exist
     * only between a crash and the next [[vacuum]]). Maintenance
     * visibility: an operator can see exactly what `vacuum(0)` would
     * reclaim, and a post-incident read can open a listed orphan as raw
     * parquet (`spark.read.parquet(<item>/<version>)`) before sweeping
-    * it. Metadata-only (one listing per version dir). Refuses on the
-    * flat layout — there are no versions to report.
+    * it. Metadata-only (one listing per version dir). External readers
+    * (pyarrow, DuckDB) find the live data the same way: the current
+    * entry's id names `items/<KEY>/<id>/`.
     */
   def versionsOf(key: String): Seq[Store.ItemVersion] = {
-    if (!versioned)
-      throw new SchemaError(
-        s"store at $base uses the flat layout — version history exists " +
-          "only on versioned stores (Store.open(versioned = true))")
     val k = validateKey(key)
     val cur = currentVersion(k) // throws ItemKeyError when absent
     val itemDir = new HPath(itemsRoot, k)
@@ -1537,13 +1509,9 @@ class Store private[sources] (
         // walk cannot skip hidden DIRS up front (r16 ADVICE). The
         // version dir itself comes from a point-in-time listing a
         // concurrent vacuum can invalidate → rootMustExist = false.
-        val vprefix = st.getPath.toString + "/"
-        def hiddenSeg(path: String): Boolean =
-          path.stripPrefix(vprefix).split('/').exists(seg =>
-            (seg.startsWith("_") || seg.startsWith(".")) && !seg.contains("="))
         val files = walkFiles(st.getPath, rootMustExist = false)
           .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet") &&
-            !hiddenSeg(f.getPath.toString))
+            !hiddenBelow(st.getPath, f.getPath))
         Store.ItemVersion(
           id = st.getPath.getName,
           current = st.getPath.getName == cur,
@@ -1555,7 +1523,7 @@ class Store private[sources] (
   }
 
   def describe(key: String): Store.ItemStats = {
-    val p = dataPath(key, mustExist = true)
+    val p = dataPath(key)
     // (path, length) pairs from the single listing — no per-file driver
     // round-trips for sizes (on S3 a per-file getFileStatus would be a
     // HEAD request each). Paths under hidden segments (leading `_` or
@@ -1564,20 +1532,16 @@ class Store private[sources] (
     // in-flight append's uncommitted task files are not item data, and
     // they vanish when the committer promotes them (reading their
     // footers would race that rename).
-    val prefix = p.toString + "/"
-    def hidden(path: String): Boolean =
-      path.stripPrefix(prefix).split('/').exists(seg =>
-        (seg.startsWith("_") || seg.startsWith(".")) && !seg.contains("="))
     // the recursive iterator can throw mid-walk if a concurrent
     // committer removes its _temporary dir between the parent listing
     // and the descent — that's a stale snapshot, not an error, so
     // retake it (bounded; a persistent failure is a real one)
     def listing(): Seq[(String, Long)] =
-      // p passed dataPath(mustExist = true): vanish-mid-call is the
+      // p passed dataPath (the item exists): vanish-mid-call is the
       // snapshot race, not a missing item — tolerant root (see dataFiles)
       walkFiles(p, rootMustExist = false).collect {
         case st if st.isFile && st.getPath.getName.endsWith(".parquet") &&
-            !hidden(st.getPath.toString) =>
+            !hiddenBelow(p, st.getPath) =>
           (st.getPath.toString, st.getLen)
       }
     // "vanished mid-walk" shows up as FileNotFoundException on most
@@ -1887,14 +1851,10 @@ class Store private[sources] (
   private def dataFilesUnder(key: String, roots: Seq[HPath]): Seq[String] = {
     val buf = scala.collection.mutable.ArrayBuffer.empty[String]
     roots.foreach { root =>
-      val rootPrefix = root.toUri.getPath
       // pruned bucket roots come from a point-in-time listing a
       // concurrent compaction/prune can delete → tolerant root
       walkFiles(root, rootMustExist = false).foreach { st =>
-        val rel = st.getPath.toUri.getPath.stripPrefix(rootPrefix)
-        val hidden = rel.split('/').exists(seg =>
-          seg.startsWith(".") || (seg.startsWith("_") && !seg.contains("=")))
-        if (st.isFile && !hidden) buf += st.getPath.toString
+        if (st.isFile && !hiddenBelow(root, st.getPath)) buf += st.getPath.toString
       }
     }
     buf.sorted.toSeq
@@ -1916,16 +1876,10 @@ class Store private[sources] (
       try {
         val st = fs.getFileStatus(r)
         if (st.isFile) st.getLen
-        else {
-          val prefix = r.toString + "/"
-          def hidden(path: String): Boolean =
-            path.stripPrefix(prefix).split('/').exists(seg =>
-              (seg.startsWith("_") || seg.startsWith(".")) && !seg.contains("="))
-          walkFiles(r).collect {
-            case st if st.isFile && st.getPath.getName.endsWith(".parquet") &&
-                !hidden(st.getPath.toString) => st.getLen
-          }.sum
-        }
+        else walkFiles(r).collect {
+          case st if st.isFile && st.getPath.getName.endsWith(".parquet") &&
+              !hiddenBelow(r, st.getPath) => st.getLen
+        }.sum
       } catch { case _: java.io.IOException | _: RuntimeException => 0L }
     }.sum
 
@@ -1960,7 +1914,7 @@ class Store private[sources] (
 
   /** Groups an item's data files by their `__bucket=` directory and
     * returns them in CHRONOLOGICAL order — or None when the layout is
-    * not order-prunable: unbucketed/flat items, fewer than two buckets
+    * not order-prunable: unbucketed items, fewer than two buckets
     * (no pruning win), any file outside a bucket dir, or any bucket
     * value that isn't the store's zero-padded date shape (this is also
     * what rejects a `__HIVE_DEFAULT_PARTITION__` null-index bucket —
@@ -2083,45 +2037,32 @@ class Store private[sources] (
     val k = validateKey(key)
     if (exists(k))
       throw new ItemExistsError(s"item $k already exists; use append")
-    if (versioned) {
-      val id = "v-" + java.util.UUID.randomUUID().toString
-      // register the version id like versionSwap does: before the
-      // pointer exists every v-dir looks like an orphan, and a
-      // concurrent same-JVM vacuum(0) must not sweep the one being
-      // written this instant
-      Store.activeStagingIds.add(id.stripPrefix("v-"))
-      try {
-        writer(normalize(df)).mode("errorifexists")
-          .parquet(new HPath(new HPath(itemsRoot, k), id).toString)
-        // overwrite=false: the loser of a cross-JVM create race gets the
-        // same error an errorifexists write would — first pointer wins
-        writeUTF8(fs, ptrPath(k), id, overwrite = false)
-      } finally Store.activeStagingIds.remove(id.stripPrefix("v-"))
-    } else {
-      val p = itemPath(key, mustExist = false)
-      if (fs.exists(p))
-        throw new ItemExistsError(s"item $k already exists; use append")
-      // creating a key whose crash markers still pend would make the
-      // marker manifests ambiguous (is the new dir this swap's partial
-      // promote, or unrelated fresh data?) — recovery's no-clobber
-      // guarantee rests on this refusal, so it comes before any write
-      requireNoPendingMarkers(k)
-      writer(normalize(df)).mode("errorifexists").parquet(p.toString)
-    }
+    requireNoPendingMarkers(k)
+    val id = "v-" + java.util.UUID.randomUUID().toString
+    // register the version id like versionSwap does: before the
+    // pointer exists every v-dir looks like an orphan, and a
+    // concurrent same-JVM vacuum(0) must not sweep the one being
+    // written this instant
+    Store.activeStagingIds.add(id.stripPrefix("v-"))
+    try {
+      writer(normalize(df)).mode("errorifexists")
+        .parquet(new HPath(new HPath(itemsRoot, k), id).toString)
+      // overwrite=false: the loser of a cross-JVM create race gets the
+      // same error an errorifexists write would — first pointer wins
+      writeUTF8(fs, ptrPath(k), id, overwrite = false)
+    } finally Store.activeStagingIds.remove(id.stripPrefix("v-"))
   }
 
-  /** CTAS staging, step 1 of 2 (versioned layout only): write a
-    * COMPLETE version directory for a not-yet-existing item WITHOUT its
-    * pointer. The item stays invisible — the pointer IS existence — so
-    * a crash at any later point before [[commitStagedVersion]] leaves
-    * only an orphan v-dir for vacuum's sweep, never a visible partial
-    * item. The returned id stays registered against same-JVM vacuum(0)
-    * until the commit/abort that balances this call.
+  /** CTAS staging, step 1 of 2: write a COMPLETE version directory
+    * for a not-yet-existing item WITHOUT its pointer. The item stays
+    * invisible — the pointer IS existence — so a crash at any later
+    * point before [[commitStagedVersion]] leaves only an orphan v-dir
+    * for vacuum's sweep, never a visible partial item. The returned id
+    * stays registered against same-JVM vacuum(0) until the
+    * commit/abort that balances this call.
     */
   def writeStagedVersion(key: String, df: DataFrame): String = withItemLock(key) {
     val k = validateKey(key)
-    require(versioned,
-      s"writeStagedVersion requires the versioned layout; store at $base is flat")
     if (exists(k))
       throw new ItemExistsError(s"item $k already exists; use append")
     val id = "v-" + java.util.UUID.randomUUID().toString
@@ -2235,7 +2176,7 @@ class Store private[sources] (
     if (pending.nonEmpty)
       throw new PendingRecoveryError(
         s"item $k has pending crash-recovery state in .staging " +
-          "(an interrupted append/compact/drop/prune); run vacuum() " +
+          "(an interrupted compactBuckets/prune); run vacuum() " +
           "first — vacuum(0) if no other writer can be live")
   }
 
@@ -2274,9 +2215,9 @@ class Store private[sources] (
 
   /** Exact reference append semantics (`_append`, store.py:214-236):
     * union old+new, drop full-row duplicates with old rows winning
-    * (`keep='first'`, store.py:230), rewrite atomically via a temp dir
-    * and swap. O(history) per append — kept for small/compat use; the
-    * scalable path is [[appendNewOnly]].
+    * (`keep='first'`, store.py:230), rewrite atomically as a fresh
+    * version ([[versionSwap]]). O(history) per append — kept for
+    * small/compat use; the scalable path is [[appendNewOnly]].
     *
     * Documented divergence: the dedup key here is the FULL row including
     * the time index; the reference dedups on value columns only (its
@@ -2291,7 +2232,6 @@ class Store private[sources] (
         s"item ${validateKey(key)} does not exist; write it first"
       )
     requireNoPendingMarkers(key)
-    val p = dataPath(key, mustExist = true)
     val old = this(key).withColumn("__prov", lit(0))
     val incoming = normalize(df).withColumn("__prov", lit(1))
     // old-wins tie-break: min(__prov) row per full-row key. dropDuplicates
@@ -2304,7 +2244,7 @@ class Store private[sources] (
       .drop("__prov")
       .repartitionByRange(col(indexName))
       .sortWithinPartitions(col(indexName))
-    stagedOverwrite(key, p, merged)
+    versionSwap(key, merged)
   }
 
   /** Recursive (relative-path, byte-length) listing of `p` — the
@@ -2328,16 +2268,13 @@ class Store private[sources] (
       // the exists() guard above can race a concurrent remover; absent
       // then = absent now = empty manifest, so the root stays tolerant
       walkFiles(p, rootMustExist = false).foreach { f =>
-        val rel = f.getPath.toUri.getPath.stripPrefix(root).stripPrefix("/")
-        // DATA files only: Spark-hidden entries (`_`/`.`-prefixed
-        // segments; `=`-bearing partition dirs exempt) are excluded —
-        // `_SUCCESS` is a constant-name zero-length file present in
-        // every parquet dir of every incarnation, so including it
-        // would alias across unrelated writes and defeat the
-        // "manifests of distinct writes never intersect" property
-        val hidden = rel.split("/").exists(s =>
-          (s.startsWith("_") || s.startsWith(".")) && !s.contains("="))
-        if (!hidden) b += ((rel, f.getLen))
+        // DATA files only: Spark-hidden entries ([[hiddenName]]) are
+        // excluded — `_SUCCESS` is a constant-name zero-length file
+        // present in every parquet dir of every incarnation, so
+        // including it would alias across unrelated writes and defeat
+        // the "manifests of distinct writes never intersect" property
+        if (!hiddenBelow(p, f.getPath))
+          b += ((f.getPath.toUri.getPath.stripPrefix(root).stripPrefix("/"), f.getLen))
       }
       b.result()
     }
@@ -2386,16 +2323,13 @@ class Store private[sources] (
     * recorded one. The suffix below the last `/items/` segment
     * identifies the dir in any location (keys are uppercased and marker
     * tokens lowercase, so the literal lowercase segment can only be the
-    * layout's own). Paths without one fall back to `dflt`.
+    * layout's own). Paths without one are kept as recorded.
     */
-  private def rebase(recorded: HPath, dflt: HPath): HPath = {
+  private def rebase(recorded: HPath): HPath = {
     val s = recorded.toUri.getPath
     val i = s.lastIndexOf("/items/")
-    if (i < 0) dflt
-    else {
-      val rel = s.substring(i + "/items/".length)
-      if (rel.isEmpty) dflt else new HPath(itemsRoot, rel)
-    }
+    val rel = if (i < 0) "" else s.substring(i + "/items/".length)
+    if (rel.isEmpty) recorded else new HPath(itemsRoot, rel)
   }
 
   /** Idempotent per-file restore: copy every `expected` file that is
@@ -2415,59 +2349,14 @@ class Store private[sources] (
       }
     }
 
-  /** Replace item dir `p` with the (eagerly written) result of `df`,
-    * crash-safely, through the FileSystem abstraction. On the versioned
-    * layout this is a rename-free pointer swap ([[versionSwap]]); the
-    * flat layout below stages OUTSIDE items/ so a half-written
-    * directory is never visible to [[listItems]], with a two-marker
-    * commit protocol:
-    *
-    *  1. write new data to `.staging/KEY.tmp-ID`
-    *  2. create marker `.staging/KEY.swap-ID`   (intent recorded)
-    *  3. rename live -> `.staging/KEY.old-ID`
-    *  4. create marker `.staging/KEY.mid-ID`    (old data is out)
-    *  5. rename tmp -> live
-    *  6. delete old dir, then both markers
-    *
-    * A crash at any point between steps is recoverable by [[vacuum]]
-    * from the marker pair: `swap` without `mid` → the swap never
-    * committed → roll BACK; `swap`+`mid` → the old data is already out
-    * → roll FORWARD (promote tmp, drop old). Marker names encode
-    * key+ID; marker CONTENT carries a file manifest — the swap marker
-    * lists the old live dir, the mid marker lists the staged tmp
-    * ([[manifestOf]]) — and marker creation is a single
-    * create-and-close, visible atomically on object stores too.
-    *
-    * Atomicity fine print: on HDFS/file: the renames themselves are
-    * atomic, so marker-pair recovery alone covers every crash point.
-    * On raw object stores (s3a:) a directory "rename" is a per-object
-    * copy+delete, and a crash INSIDE step 3/5 leaves a split directory
-    * — this is where the manifests close the protocol: copy-before-
-    * delete guarantees one complete side at every crash point, and
-    * recovery restores or resumes per file against the manifest
-    * (roll-back refills a partially-moved live dir from the complete
-    * trash copy; roll-forward resumes the promote from tmp), so the
-    * item always lands byte-complete on one side of the swap. Files
-    * OUTSIDE the manifest are never touched — a post-crash append's
-    * rows survive recovery — and clobbering unrelated newer data is
-    * structurally impossible: [[write]] refuses to create a key whose
-    * crash markers still pend and [[drop]] retires them, so no
-    * re-created incarnation can coexist with these markers. For write
-    * paths with NO rename at all (the commit primitive raw object
-    * stores actually guarantee), use the versioned layout's
-    * single-object `_current` pointer swap ([[versionSwap]]).
-    */
-  private def stagedOverwrite(key: String, p: HPath, df: DataFrame): Unit =
-    if (versioned) versionSwap(key, df)
-    else stagedOverwriteFlat(key, p, df)
-
-  /** Versioned-layout rewrite: write a fresh immutable version dir,
-    * commit it by overwriting the `_current` pointer — ONE single-object
-    * PUT, atomic on every real object store, no directory rename
-    * anywhere — then best-effort delete the superseded version (a crash
-    * before the delete leaves an invisible orphan for [[vacuum]]).
-    * A crash before the pointer write leaves readers on the old
-    * complete version; there is no intermediate state at all.
+  /** Item-level rewrite ([[append]], [[compact]]): write a fresh
+    * immutable version dir, commit it by overwriting the `_current`
+    * pointer — ONE single-object PUT, atomic on every real object store,
+    * no directory rename anywhere — then best-effort delete the
+    * superseded version (a crash before the delete leaves an invisible
+    * orphan for [[vacuum]]). A crash before the pointer write leaves
+    * readers on the old complete version; there is no intermediate
+    * state at all.
     */
   private def versionSwap(key: String, df: DataFrame): Unit = {
     val k = validateKey(key)
@@ -2482,19 +2371,46 @@ class Store private[sources] (
     } finally Store.activeStagingIds.remove(id.stripPrefix("v-"))
   }
 
-  private def stagedOverwriteFlat(key: String, p: HPath, df: DataFrame): Unit =
-    stagedSwapFlat(key, p, tmp => writer(df).mode("overwrite").parquet(tmp))
-
-  /** The two-marker swap protocol itself, target-path-generic: `p` may
-    * be an item dir (append/compact) or a single bucket dir inside one
-    * ([[compactBuckets]]) — the swap/mid markers record `p` in their
-    * CONTENT (line 1), and [[vacuum]] recovers against that recorded
-    * path, so bucket-level swaps crash-recover exactly like item-level
-    * ones. `writeTmp` materializes the replacement into the staged tmp
-    * path (parquet write included — it runs INSIDE the in-flight id
-    * guard so a concurrent force-vacuum never sweeps a tmp mid-write).
+  /** Replace bucket dir `p` (inside the current version) with what
+    * `writeTmp` materializes, crash-safely, through the FileSystem
+    * abstraction — the in-place rewrite of [[compactBuckets]], which
+    * must not copy the item's other buckets into a fresh version. It
+    * stages OUTSIDE items/ so a half-written directory is never visible
+    * to readers, with a two-marker commit protocol:
+    *
+    *  1. write new data to `.staging/KEY.tmp-ID` (`writeTmp`, run
+    *     INSIDE the in-flight id guard so a concurrent force-vacuum
+    *     never sweeps a tmp mid-write)
+    *  2. create marker `.staging/KEY.swap-ID`   (intent recorded)
+    *  3. rename live -> `.staging/KEY.old-ID`
+    *  4. create marker `.staging/KEY.mid-ID`    (old data is out)
+    *  5. rename tmp -> live
+    *  6. delete old dir, then both markers
+    *
+    * A crash at any point between steps is recoverable by [[vacuum]]
+    * from the marker pair: `swap` without `mid` → the swap never
+    * committed → roll BACK; `swap`+`mid` → the old data is already out
+    * → roll FORWARD (promote tmp, drop old). Marker names encode
+    * key+ID; marker CONTENT records `p` (line 1, so recovery targets the
+    * swapped bucket, never its siblings) and a file manifest — the swap
+    * marker lists the old live dir, the mid marker the staged tmp
+    * ([[manifestOf]]) — and marker creation is a single
+    * create-and-close, visible atomically on object stores too.
+    *
+    * Atomicity fine print: on HDFS/file: the renames themselves are
+    * atomic, so marker-pair recovery alone covers every crash point.
+    * On raw object stores (s3a:) a directory "rename" is a per-object
+    * copy+delete, and a crash INSIDE step 3/5 leaves a split directory
+    * — this is where the manifests close the protocol: copy-before-
+    * delete guarantees one complete side at every crash point, and
+    * recovery restores or resumes per file against the manifest
+    * (roll-back refills a partially-moved live dir from the complete
+    * trash copy; roll-forward resumes the promote from tmp), so the
+    * bucket always lands byte-complete on one side of the swap. Files
+    * OUTSIDE the manifest are never touched — a post-crash append's
+    * rows survive recovery.
     */
-  private def stagedSwapFlat(key: String, p: HPath, writeTmp: String => Unit): Unit = {
+  private def stagedSwap(key: String, p: HPath, writeTmp: String => Unit): Unit = {
     val k = validateKey(key)
     fs.mkdirs(stagingRoot)
     val id = java.util.UUID.randomUUID().toString
@@ -2552,15 +2468,14 @@ class Store private[sources] (
     * footers to read, weaker row-group stats), and compaction is the
     * periodic maintenance step that restores the 1 M-row sorted-chunk
     * contract (store.py:27,174) without paying it on every append.
-    * Atomic: same staged-swap as [[append]].
+    * Atomic: same pointer swap as [[append]].
     */
   def compact(key: String): Unit = withItemLock(key) {
     requireNoPendingMarkers(key)
-    val p = dataPath(key, mustExist = true)
     val canonical = this(key)
       .repartitionByRange(col(indexName))
       .sortWithinPartitions(col(indexName))
-    stagedOverwrite(key, p, canonical)
+    versionSwap(key, canonical)
   }
 
   /** The policy that decides WHEN [[compact]] runs: rewrite the item
@@ -2594,22 +2509,21 @@ class Store private[sources] (
     * an extra file), which makes `dataFiles == canonicalFiles` an
     * exact fixed point: a bucket too large to ever fit under
     * `maxFilesPerBucket` is rewritten once and then skipped, never
-    * re-rewritten forever — each rewrite through the same two-marker
-    * crash-safe swap as [[compact]]
-    * (the markers record the bucket path; [[vacuum]] finishes an
-    * interrupted bucket swap without touching its siblings), so steady-
-    * state maintenance cost tracks the append rate, not the item size.
+    * re-rewritten forever — each rewrite through the two-marker
+    * crash-safe [[stagedSwap]] (the markers record the bucket path;
+    * [[vacuum]] finishes an interrupted bucket swap without touching
+    * its siblings), so steady-state maintenance cost tracks the append
+    * rate, not the item size.
     * Cold buckets are never read OR rewritten — the decision is one
     * LIST per bucket (O(buckets) metadata, zero data rows).
     *
     * Returns the number of buckets rewritten. [[SchemaError]] on
-    * non-bucketed stores (use [[compact]]/[[compactIfNeeded]]). On the
-    * versioned layout this rewrites inside the current version,
-    * in-place like [[prune]] — copying the other 100 TB of buckets
-    * into a fresh version to compact one directory would defeat the
-    * point. Same [[readStream]] caveat as [[compact]]: a rewrite
-    * renames files, so restart streaming tails with a fresh checkpoint
-    * after any bucket trips.
+    * non-bucketed stores (use [[compact]]/[[compactIfNeeded]]). This
+    * rewrites inside the current version, in-place like [[prune]] —
+    * copying the other 100 TB of buckets into a fresh version to
+    * compact one directory would defeat the point. Same [[readStream]]
+    * caveat as [[compact]]: a rewrite renames files, so restart
+    * streaming tails with a fresh checkpoint after any bucket trips.
     *
     * `since` bounds even the metadata cost: only buckets at or after
     * the bucket containing it are LISTed at all (bucket names are
@@ -2637,16 +2551,13 @@ class Store private[sources] (
           s"store at $base is not bucketed; compactBuckets needs directory " +
             "buckets (open with bucket = day|month|year) — use compact()"))
       requireNoPendingMarkers(key)
-      val p = dataPath(key, mustExist = true)
+      val p = dataPath(key)
       val cutoff = since.map(bucketLabel(fmt, _))
       val buckets = bucketDirs(p)(b => cutoff.forall(b >= _))
       var rewritten = 0L
       buckets.foreach { d =>
         val dataPaths = fs.listStatus(d).iterator
-          .filter { st =>
-            val n = st.getPath.getName
-            st.isFile && !n.startsWith("_") && !n.startsWith(".")
-          }
+          .filter(st => st.isFile && !hiddenName(st.getPath.getName))
           .map(_.getPath.toString)
           .toVector
         val dataFiles = dataPaths.size
@@ -2678,8 +2589,8 @@ class Store private[sources] (
               math.min(canonicalFiles, Int.MaxValue.toLong).toInt,
               col(indexName))
             .sortWithinPartitions(col(indexName))
-          stagedSwapFlat(key, d,
-            tmp => flatWriter(canonical)
+          stagedSwap(key, d,
+            tmp => plainWriter(canonical)
               .option("maxRecordsPerFile", 0L)
               .mode("overwrite").parquet(tmp))
           rewritten += 1
@@ -2757,7 +2668,7 @@ class Store private[sources] (
         s"item ${validateKey(key)} does not exist; write it first"
       )
     requireNoPendingMarkers(key)
-    val p = dataPath(key, mustExist = true)
+    val p = dataPath(key)
     val incoming = normalize(df).dropDuplicates().as("i")
     val existing = this(key).as("e")
     val cond = schema.fieldNames
@@ -2776,27 +2687,25 @@ class Store private[sources] (
 
   /** Drop one item entirely (maintenance op, like [[compact]]):
     * [[ItemKeyError]] if absent. The store itself (schema, other
-    * items) is untouched. Crash-safe like every destructive op here:
-    * the live directory is first renamed out of items/ into .staging,
-    * so a kill mid-delete can never leave a half-deleted item visible
-    * to [[listItems]]/[[exists]] — the item is either fully present or
-    * fully gone on rename-atomic filesystems, and where rename is a
-    * copy+delete, a `KEY.del-ID` intent marker (written first) lets
-    * [[vacuum]] finish an interrupted removal exactly.
+    * items) is untouched. The pointer delete IS the atomic disappear:
+    * after it the item is gone from [[listItems]]/[[exists]], and the
+    * data tree left behind is invisible debris that [[vacuum]] sweeps
+    * if the recursive delete is interrupted.
     */
   def drop(key: String): Unit = withItemLock(key) {
     // dropping an item also retires its crash-recovery debris: any
-    // pending markers described a live dir that no longer exists, and
-    // leaving them would block [[write]]'s re-creation refusal forever.
-    // The item lock excludes same-JVM WRITERS of this key; the vacuum
-    // pseudo-lock (which vacuum holds for its whole sweep, taking no
-    // item locks) excludes a same-JVM vacuum for the WHOLE drop — not
-    // just the marker sweep. Holding it only around the sweep left a
-    // window where vacuum, mid-recovery of this key's old markers,
-    // could copyMissing stale files back into items/KEY right after
-    // our rename moved it out — resurrecting a dropped item with no
-    // pending markers left to flag it. Ordering is item-lock →
-    // vacuum-lock everywhere, vacuum takes no item locks: no cycle. (A
+    // pending markers described a bucket dir that no longer exists, and
+    // leaving them would refuse every mutation of a re-created item
+    // ([[requireNoPendingMarkers]]) until vacuum. The item lock
+    // excludes same-JVM WRITERS of this key; the vacuum pseudo-lock
+    // (which vacuum holds for its whole sweep, taking no item locks)
+    // excludes a same-JVM vacuum for the WHOLE drop — not just the
+    // marker sweep. Holding it only around the sweep left a window
+    // where vacuum, mid-recovery of this key's old markers, could
+    // copyMissing stale files back under items/KEY right after our
+    // delete — debris with no pending markers left to flag it.
+    // Ordering is item-lock → vacuum-lock everywhere, vacuum takes no
+    // item locks: no cycle. (A
     // concurrent OTHER-JVM writer racing a drop is already undefined;
     // writerLease serializes that.)
     val vl = Store.lockFor(base, "..vacuum")
@@ -2806,41 +2715,11 @@ class Store private[sources] (
   }
 
   private def dropLocked(key: String): Unit = {
-    def sweepStaging(k: String): Unit =
-      stagingEntries(k).foreach(p => fs.delete(p, true))
-    if (versioned) {
-      val k = validateKey(key)
-      if (!exists(k)) throw new ItemKeyError(s"no such item: $k")
-      // pointer delete IS the atomic disappear; the data tree is
-      // invisible debris after it (vacuum also sweeps orphan versions)
-      fs.delete(ptrPath(k), false)
-      fs.delete(new HPath(itemsRoot, k), true)
-      sweepStaging(k)
-    } else {
-      val p = itemPath(key, mustExist = true)
-      fs.mkdirs(stagingRoot)
-      val id = java.util.UUID.randomUUID().toString
-      val trash = new HPath(stagingRoot, validateKey(key) + ".old-" + id)
-      val del = new HPath(stagingRoot, validateKey(key) + ".del-" + id)
-      Store.activeStagingIds.add(id)
-      try {
-        // deletion intent marker (with the doomed dir's manifest): a
-        // crash mid-rename on a copy+delete filesystem leaves a partial
-        // live dir that the rename-atomic protocol could never see —
-        // vacuum finishes the drop from the marker, deleting exactly
-        // the manifest's files (a later writer's files are preserved;
-        // re-creating the key while markers pend is blocked by
-        // [[write]]'s refusal until vacuum or drop clears them)
-        writeUTF8(fs, del, renderMarker(p, manifestOf(p)))
-        if (!fs.rename(p, trash)) {
-          fs.delete(del, false) // clean failure: nothing moved, intent void
-          throw new java.io.IOException(s"rename $p -> $trash failed")
-        }
-        fs.delete(trash, true)
-        fs.delete(del, false)
-        sweepStaging(validateKey(key))
-      } finally Store.activeStagingIds.remove(id)
-    }
+    val k = validateKey(key)
+    if (!exists(k)) throw new ItemKeyError(s"no such item: $k")
+    fs.delete(ptrPath(k), false)
+    fs.delete(new HPath(itemsRoot, k), true)
+    stagingEntries(k).foreach(p => fs.delete(p, true))
   }
 
   /** Retention: drop every time bucket of `key` strictly OLDER than the
@@ -2850,18 +2729,17 @@ class Store private[sources] (
     * bucket are kept (removing them would mean rewriting that bucket;
     * run with `before` on a bucket boundary for exact cuts). Bucket
     * names are zero-padded so the lexicographic compare below IS the
-    * chronological compare. Crash-safe like [[drop]]: each expired
-    * bucket writes a `KEY.del-ID` intent marker and is renamed into
-    * .staging before deletion, so a kill mid-prune leaves every bucket
-    * either fully present, fully gone, or finished by [[vacuum]].
+    * chronological compare. Crash-safe: each expired bucket writes a
+    * `KEY.del-ID` intent marker and is renamed into .staging before
+    * deletion, so a kill mid-prune leaves every bucket either fully
+    * present, fully gone, or finished by [[vacuum]].
     *
-    * Only valid on bucketed stores ([[SchemaError]] otherwise — a flat
-    * item has no sub-scan deletion unit). Returns the number of buckets
-    * dropped. On the versioned layout this deletes bucket dirs INSIDE
-    * the current version (retention is in-place by design — copying
-    * 100 TB minus a bucket into a fresh version to delete a directory
-    * would defeat the point); a reader listing mid-prune can observe a
-    * bucket disappear, the same contract as the flat layout.
+    * Only valid on bucketed stores ([[SchemaError]] otherwise — an
+    * unbucketed item has no sub-scan deletion unit). Returns the number
+    * of buckets dropped. This deletes bucket dirs INSIDE the current
+    * version (retention is in-place by design — copying 100 TB minus a
+    * bucket into a fresh version to delete a directory would defeat the
+    * point); a reader listing mid-prune can observe a bucket disappear.
     */
   def prune(key: String, before: Timestamp): Long = withItemLock(key) {
     val fmt = bucketFmt.getOrElse(
@@ -2871,7 +2749,7 @@ class Store private[sources] (
       )
     )
     requireNoPendingMarkers(key)
-    val p = dataPath(key, mustExist = true)
+    val p = dataPath(key)
     val cutoff = bucketLabel(fmt, before)
     fs.mkdirs(stagingRoot)
     val expired: Seq[HPath] = bucketDirs(p)(_ < cutoff)
@@ -2881,8 +2759,9 @@ class Store private[sources] (
       val del = new HPath(stagingRoot, validateKey(key) + ".del-" + id)
       Store.activeStagingIds.add(id)
       try {
-        // same deletion-intent marker as [[drop]]: lets vacuum finish a
-        // bucket removal whose copy+delete rename died partway
+        // deletion-intent marker (with the doomed bucket's manifest):
+        // lets vacuum finish a bucket removal whose copy+delete rename
+        // died partway, deleting exactly the manifest's files
         writeUTF8(fs, del, renderMarker(d, manifestOf(d)))
         if (!fs.rename(d, trash)) {
           fs.delete(del, false)
@@ -2896,32 +2775,35 @@ class Store private[sources] (
   }
 
   /** Crash-recovery sweep, finishing the atomicity story of
-    * [[append]]/[[compact]]/[[drop]]/[[prune]]. Four jobs:
+    * [[append]]/[[compact]]/[[compactBuckets]]/[[drop]]/[[prune]].
+    * Five jobs:
     *
-    *  1. **Swap recovery** — an interrupted [[stagedOverwrite]] leaves
-    *     its `KEY.swap-ID` (and possibly `KEY.mid-ID`) marker behind;
-    *     the marker pair says exactly how far the swap got (protocol at
-    *     [[stagedOverwrite]]). `swap` without `mid`: the swap never
-    *     committed → roll BACK — and if the live dir lost files to a
-    *     partially-executed copy+delete rename (strict subset of the
-    *     swap marker's manifest), refill it per file from the complete
-    *     trash copy first. `swap` + `mid`: the old data was already
+    *  1. **Swap recovery** — an interrupted [[stagedSwap]] (a
+    *     [[compactBuckets]] bucket rewrite) leaves its `KEY.swap-ID`
+    *     (and possibly `KEY.mid-ID`) marker behind; the marker pair says
+    *     exactly how far the swap got (protocol at [[stagedSwap]]).
+    *     `swap` without `mid`: the swap never committed → roll BACK —
+    *     and if the live dir lost files to a partially-executed
+    *     copy+delete rename (strict subset of the swap marker's
+    *     manifest), refill it per file from the complete trash copy
+    *     first. `swap` + `mid`: the old data was already
     *     moved out → roll FORWARD by promoting the staged tmp per file
     *     against the mid marker's manifest (idempotent, resumes partial
     *     promotes) — unless the live dir holds files the manifest never
-    *     listed, which means a later writer re-created the item and the
-    *     stale swap is swept instead of promoted. Either way the item
-    *     ends whole and the markers are cleared.
-    *  1b. **Delete recovery** — an interrupted [[drop]]/[[prune]]
-    *     leaves its `KEY.del-ID` intent marker; recovery finishes the
+    *     listed, which means a later writer re-created the bucket and
+    *     the stale swap is swept instead of promoted. Either way the
+    *     bucket ends whole and the markers are cleared.
+    *  1b. **Delete recovery** — an interrupted [[prune]] leaves its
+    *     `KEY.del-ID` intent marker; recovery finishes the
     *     delete (leftover live files and the trash copy), guarded by
     *     the same manifest-subset rule so a re-created path is never
     *     touched.
     *  2. **Orphan sweep** — `*.tmp-*` / `*.old-*` dirs whose op died
     *     between its last rename and its delete: invisible to readers
     *     (staging lives outside items/) but occupying storage; swept.
-    *     (Job 3, further down in [[vacuumLocked]]: the versioned
-    *     layout's orphan-version sweep.)
+    *  3. **Orphan-version sweep** — `v-<id>` dirs no `_current` pointer
+    *     names (a [[versionSwap]] or [[write]] that died around its
+    *     pointer write), after repairing a torn pointer.
     *  4. **Job-staging debris sweep** — committer `_temporary` /
     *     `.spark-staging-*` dirs inside a live data dir, left by an
     *     in-place append that died mid-job: hidden from every read but
@@ -2953,8 +2835,8 @@ class Store private[sources] (
   private def vacuumLocked(olderThanMillis: Long): Long = {
     val staging = stagingRoot
     val cutoff = System.currentTimeMillis() - olderThanMillis
-    // a versioned store with only clean swaps never creates .staging —
-    // jobs 1-2 see no entries, but job 3 must still sweep orphan versions
+    // a store with only clean pointer swaps never creates .staging —
+    // jobs 1-2 see no entries, but jobs 3-4 must still run
     val entries =
       if (fs.exists(staging)) fs.listStatus(staging).toVector
       else Vector.empty[org.apache.hadoop.fs.FileStatus]
@@ -2986,28 +2868,29 @@ class Store private[sources] (
       val tmp = new HPath(staging, s"$k.tmp-$id")
       val trash = new HPath(staging, s"$k.old-$id")
       val mid = new HPath(staging, s"$k.mid-$id")
-      // the swapped dir is recorded in the marker CONTENT (line 1):
-      // item-level swaps record items/KEY, bucket-level swaps
-      // (compactBuckets) record the bucket dir inside it — recovery
-      // targets whichever was swapped, RE-BASED against this store's
-      // own items root (see [[rebase]]: the marker records an absolute
+      // the swapped bucket dir is recorded in the marker CONTENT (line
+      // 1) — recovery targets it RE-BASED against this store's own
+      // items root (see [[rebase]]: the marker records an absolute
       // path, but the store may have been relocated — backup restore,
       // mount move — between crash and recovery, and recovering into
       // the stale original location could orphan or destroy the trash
-      // copy). Markers from vintages that predate the recorded path
-      // fall back to the item dir.
+      // copy). Only the retired flat layout wrote markers without a
+      // recorded path; guessing a target for one could clobber the
+      // item, so recovery stops loudly instead.
       def liveOf(markerContent: String): HPath =
-        parseMarker(markerContent)._1
-          .map(rebase(_, new HPath(itemsRoot, k)))
-          .getOrElse(new HPath(itemsRoot, k))
+        parseMarker(markerContent)._1.map(rebase).getOrElse(
+          throw new java.io.IOException(
+            s"swap marker ${m.getPath} records no target path (flat-layout " +
+              "vintage); recover or remove it by hand"))
       if (fs.exists(mid)) {
-        // old data left items/ before the crash — the swap committed;
-        // roll FORWARD. A clobber of unrelated newer data is
-        // structurally impossible here: [[write]] refuses to create an
-        // item while its crash markers pend and [[drop]] sweeps them,
-        // so a live dir coexisting with these markers can only be this
-        // swap's partial promote plus (at most) post-crash appends —
-        // whose fresh-named files copyMissing leaves untouched.
+        // old data left the bucket before the crash — the swap
+        // committed; roll FORWARD. A clobber of unrelated newer data is
+        // structurally impossible here: mutations are refused while
+        // crash markers pend ([[requireNoPendingMarkers]]), [[drop]]
+        // sweeps them, and a re-created item lives in a fresh version
+        // dir, so a live dir coexisting with these markers can only be
+        // this swap's partial promote plus (at most) post-crash appends
+        // — whose fresh-named files copyMissing leaves untouched.
         val midContent = readUTF8(fs, mid)
         val live = liveOf(midContent)
         val newMan = parseMarker(midContent)._2 // manifest of tmp
@@ -3085,11 +2968,11 @@ class Store private[sources] (
       recovered ++= Seq(tmp.getName, trash.getName, mid.getName)
       } catch { case _: java.io.FileNotFoundException => () }
     }
-    // job 1b: finish interrupted deletes (drop / prune). The del marker
+    // job 1b: finish interrupted deletes (prune). The del marker
     // records the doomed path and its manifest; recovery deletes
     // exactly the MANIFEST files still present there — files outside
-    // the manifest belong to a later writer (a re-created item, or an
-    // append that raced the half-executed delete) and are preserved —
+    // the manifest belong to a later writer (an append that raced the
+    // half-executed delete) and are preserved —
     // then removes the dir only once nothing is left in it.
     val delMarkers = entries.filter { e =>
       val n = e.getPath.getName
@@ -3103,7 +2986,7 @@ class Store private[sources] (
       val id = n.substring(i + ".del-".length)
       val trash = new HPath(staging, s"$k.old-$id")
       val (target, man) = parseMarker(readUTF8(fs, m.getPath))
-      target.map(t => rebase(t, t)).foreach { t => // relocation-safe, like liveOf
+      target.map(rebase).foreach { t => // relocation-safe, like liveOf
         if (fs.exists(t)) {
           man.foreach { case (rel, _) =>
             val f = new HPath(t, rel)
@@ -3125,10 +3008,10 @@ class Store private[sources] (
           !inFlight(n) && fs.delete(e.getPath, true))
         removed += 1
     }
-    // job 3 (versioned layout): sweep version dirs no pointer names —
+    // job 3: sweep version dirs no pointer names —
     // a versionSwap that crashed before its pointer write (invisible
     // new version) or after it but before the old-version delete
-    // (superseded data). Same in-flight + age guards as the flat jobs.
+    // (superseded data). Same in-flight + age guards as jobs 1-2.
     //
     // Pointer-integrity guard: a pointer file that EXISTS but is torn —
     // empty (a crash between its create and its write, on filesystems
@@ -3139,7 +3022,7 @@ class Store private[sources] (
     // exists, leave the item entirely alone. A pointer that is ABSENT
     // is different: that item never finished creating (or finished
     // dropping), and its versions are genuine orphans.
-    if (versioned && fs.exists(itemsRoot)) {
+    if (fs.exists(itemsRoot)) {
       fs.listStatus(itemsRoot).foreach { item =>
         val ptr = new HPath(item.getPath, Store.CurrentPtr)
         // check-then-read tolerance: a concurrent drop() in another JVM
@@ -3206,7 +3089,7 @@ class Store private[sources] (
         }
       }
     }
-    // job 4 (both layouts): sweep dead JOB-STAGING debris inside live
+    // job 4: sweep dead JOB-STAGING debris inside live
     // data dirs — the committer `_temporary`/`.spark-staging-<jobId>`
     // dirs an in-place append that died mid-job leaves behind. Readers
     // and metadata never see them (hidden-segment filters), but nothing
@@ -3215,7 +3098,7 @@ class Store private[sources] (
     // and `.spark-staging` names are per-job UUIDs no later job
     // touches — found by the cross-JVM lifecycle fuzz's halt-on-delete
     // arm, which dies exactly at this cleanup point. Same two
-    // writer-safety layers as the flat jobs: items with an in-place
+    // writer-safety layers as jobs 1-2: items with an in-place
     // append IN FLIGHT IN THIS JVM ([[Store$.activeInPlaceWrites]]) are
     // skipped unconditionally, and the age guard covers writers in
     // other JVMs. Torn/absent version pointers are job 3's territory —
@@ -3224,9 +3107,8 @@ class Store private[sources] (
       fs.listStatus(itemsRoot).filter(_.isDirectory).foreach { item =>
         val k = item.getPath.getName
         val dataDir: HPath =
-          if (!versioned) item.getPath
-          else (try new HPath(item.getPath, currentVersion(k))
-                catch { case _: Throwable => null })
+          try new HPath(item.getPath, currentVersion(k))
+          catch { case _: Throwable => null }
         if (dataDir != null &&
             !Store.activeInPlaceWrites.contains(Store.inPlaceTag(base, k))) {
           val children =
@@ -3299,7 +3181,7 @@ class Store private[sources] (
     * restart the stream with a fresh checkpoint.
     */
   def readStream(key: String): DataFrame = {
-    val p = dataPath(key, mustExist = true)
+    val p = dataPath(key)
     // recursiveFileLookup descends into __bucket=... directories; the
     // bucket value is directory metadata, not file content, so the
     // store schema (which never includes it) is the file schema
@@ -3378,7 +3260,7 @@ class Store private[sources] (
       start: Option[Timestamp],
       end: Option[Timestamp]
   ): Seq[HPath] = {
-    val p = dataPath(key, mustExist = true)
+    val p = dataPath(key)
     bucketFmt match {
       case Some(f) =>
         val lo = start.map(bucketLabel(f, _))

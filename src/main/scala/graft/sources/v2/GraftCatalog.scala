@@ -192,18 +192,12 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
   /** CTAS arrives HERE (Spark prefers the staging protocol when the
     * catalog offers one), not at createTable — which would create an
     * EMPTY VISIBLE item before the SELECT ran and leave it (or a
-    * partial) behind on failure. Nothing is created eagerly:
-    *
-    *  - versioned store: the insert writes a POINTER-LESS version dir
-    *    ([[Store.writeStagedVersion]]); `commitStagedChanges()` lands
-    *    the `_current` pointer in ONE atomic PUT. A crash at any
-    *    earlier point leaves no visible item — only an orphan v-dir
-    *    for vacuum — the reference's errorifexists discipline
-    *    (store.py:203-204) held even across CTAS.
-    *  - flat store (no pointer primitive): the insert writes the live
-    *    dir directly — the same exposure class as the Store API's own
-    *    write() — and `abortStagedChanges()` drops whatever a FAILED
-    *    (non-crash) CTAS left visible.
+    * partial) behind on failure. Nothing is created eagerly: the insert
+    * writes a POINTER-LESS version dir ([[Store.writeStagedVersion]]);
+    * `commitStagedChanges()` lands the `_current` pointer in ONE atomic
+    * PUT. A crash at any earlier point leaves no visible item — only an
+    * orphan v-dir for vacuum — the reference's errorifexists discipline
+    * (store.py:203-204) held even across CTAS.
     *
     * The staged table advertises the STORE schema, so Spark's output
     * resolver aligns the SELECT's columns to it up front; write-time
@@ -226,12 +220,6 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
     new GraftTable(s, k) with StagedTable {
       private val stagedId =
         new java.util.concurrent.atomic.AtomicReference[String]()
-      // flat stores write DIRECTLY (no pointer to stage behind), so the
-      // abort path must know whether THIS CTAS's insert is what made
-      // the item visible — a bare exists(k) check would also drop an
-      // item a CONCURRENT writer created after our staging existence
-      // check, destroying data this statement never touched
-      private val wroteFlat = new java.util.concurrent.atomic.AtomicBoolean(false)
       override def newWriteBuilder(
           info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
           : org.apache.spark.sql.connector.write.WriteBuilder =
@@ -245,14 +233,13 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
                       data: org.apache.spark.sql.DataFrame,
                       overwrite: Boolean): Unit = {
                     Store.pinMicros(data.sparkSession, s"catalog CTAS $k")
-                    if (s.versioned) stagedId.set(s.writeStagedVersion(k, data))
-                    else { s.write(k, data); wroteFlat.set(true) }
+                    stagedId.set(s.writeStagedVersion(k, data))
                   }
                 }
             }
         }
       override def commitStagedChanges(): Unit =
-        if (s.versioned) stagedId.get match {
+        stagedId.get match {
           case null =>
             // CTAS always inserts, but a commit without one must still
             // honor CREATE semantics — an empty committed item
@@ -261,8 +248,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
           case id => s.commitStagedVersion(k, id)
         }
       override def abortStagedChanges(): Unit =
-        if (s.versioned) Option(stagedId.get).foreach(id => s.abortStagedVersion(k, id))
-        else if (wroteFlat.get && s.exists(k)) s.drop(k)
+        Option(stagedId.get).foreach(id => s.abortStagedVersion(k, id))
     }
   }
 
@@ -448,7 +434,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
         s.compactBuckets(itemArg(s, in, 0), in.getLong(1))))
     },
     procMulti("versions",
-      "present versions of a versioned item: the current one plus any " +
+      "present versions of an item: the current one plus any " +
         "crash-orphaned predecessors awaiting vacuum (Store.versionsOf)",
       Seq(param("item", StringType)),
       StructType(Seq(

@@ -45,6 +45,10 @@ object SqlFrontDoorBench {
     store.write("EVENTS", big)
     val buckets = store.describe("EVENTS").files
     println(s"[sqlfd] ingested ${store("EVENTS").count()} rows, $buckets files (day buckets)")
+    // the raw-parquet baselines read what an external reader would: the
+    // current version dir the `_current` pointer names
+    val rawDir = baseDir + "/items/EVENTS/" +
+      store.versionsOf("EVENTS").find(_.current).get.id
 
     val t0 = java.sql.Timestamp.valueOf("2024-01-10 00:00:00")
     val t1 = java.sql.Timestamp.valueOf("2024-01-15 00:00:00")
@@ -83,7 +87,7 @@ object SqlFrontDoorBench {
     timed("raw parquet ranged (no pruning)") {
       // what a user bypassing the store/table pays: every bucket dir
       // listed and scanned, range applied only at row-group stats
-      spark.read.parquet(baseDir + "/items/EVENTS")
+      spark.read.parquet(rawDir)
         .where(col("TS").between(t0, t1))
         .agg(sum("VALUE")).collect()(0).getDouble(0).toLong
     }
@@ -99,7 +103,7 @@ object SqlFrontDoorBench {
         .collect()(0).getLong(0)
     }
     timed("raw parquet count/min/max") {
-      spark.read.parquet(baseDir + "/items/EVENTS")
+      spark.read.parquet(rawDir)
         .agg(count(lit(1)), min("TS"), max("TS")).collect()(0).getLong(0)
     }
     timed("Store.describe (same footers)") {
@@ -123,7 +127,7 @@ object SqlFrontDoorBench {
         .agg(sum("VALUE")).collect()(0).getDouble(0).toLong
     }
     timed("raw parquet dim join") {
-      spark.read.parquet(baseDir + "/items/EVENTS")
+      spark.read.parquet(rawDir)
         .join(dim, col("TS") === col("D"))
         .agg(sum("VALUE")).collect()(0).getDouble(0).toLong
     }
@@ -138,7 +142,7 @@ object SqlFrontDoorBench {
       ).collect()(0).getLong(0)
     }
     timed("raw parquet ranged count") {
-      spark.read.parquet(baseDir + "/items/EVENTS")
+      spark.read.parquet(rawDir)
         .where(col("TS") >= "2024-01-10" && col("TS") < "2024-01-15")
         .agg(count(lit(1)), min("TS"), max("TS")).collect()(0).getLong(0)
     }
@@ -152,7 +156,7 @@ object SqlFrontDoorBench {
           "FROM sqlfd_events GROUP BY 1").collect().length.toLong
     }
     timed("raw parquet daily profile") {
-      spark.read.parquet(baseDir + "/items/EVENTS")
+      spark.read.parquet(rawDir)
         .groupBy(org.apache.spark.sql.functions.date_trunc("DAY", col("TS")))
         .count().collect().length.toLong
     }
@@ -165,7 +169,7 @@ object SqlFrontDoorBench {
         .collect().length.toLong
     }
     timed("raw parquet newest-100") {
-      spark.read.parquet(baseDir + "/items/EVENTS")
+      spark.read.parquet(rawDir)
         .orderBy(col("TS").desc).limit(100).collect().length.toLong
     }
     spark.sql("DROP TABLE IF EXISTS sqlfd_events")

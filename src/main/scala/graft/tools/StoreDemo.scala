@@ -80,23 +80,12 @@ object StoreDemo {
     try Store.open(spark, baseDir, cols = Some(Seq("X" -> DoubleType)), index = Some("D"))
     catch { case e: SchemaError => println(s"[demo] schema conflict rejected: ${e.getMessage}") }
 
-    // versioned layout: same API, rename-free pointer-swap commits
-    // (object-store-native); compaction lands in a fresh v-<id> dir
-    // committed by one _current overwrite
-    val vstore = Store.open(
-      spark, baseDir + "-versioned",
-      cols = Some(Seq(
-        "EVENT_ID" -> LongType, "USER_ID" -> LongType,
-        "EVENT_TYPE" -> StringType, "VALUE" -> DoubleType)),
-      index = Some("TS"), versioned = true)
-    if (!vstore.exists("events")) vstore.write("events", events)
-    vstore.appendNewOnly("events", events) // idempotent, stays in-version
-    vstore.compact("events") // pointer swap: new version, old deleted
+    // every rewrite above (append, compactIfNeeded) committed a fresh
+    // v-<id> dir with one _current pointer overwrite; the store is clean
+    val current = store.versionsOf("events").filter(_.current).map(_.id).mkString
     println(
-      s"[demo] versioned store: rows=${vstore("events").count()} " +
-        s"files=${vstore.describe("events").files} " +
-        s"(compact committed by _current pointer swap; vacuum sweeps " +
-        s"${vstore.vacuum(0L)} orphans on a clean store)")
+      s"[demo] versions: current=$current (pointer-swap commits); " +
+        s"vacuum sweeps ${store.vacuum(0L)} orphans on a clean store")
 
     // SQL front door (DataSource V2): the item as a table, with
     // index-range predicates pruned to bucket dirs exactly like

@@ -11,7 +11,8 @@ import java.sql.Timestamp
   * bucket of many — the steady-state shape of a time-series store
   * (history cold, the current period accumulating small files).
   * compact() pays O(history) to fix it; compactBuckets() pays O(hot
-  * bucket). Run:
+  * bucket). The same run times vacuum's orphan-version sweep, whose
+  * cost must track the orphan count, never the history size. Run:
   *   sbt "runMain graft.tools.StoreMaintBench /tmp/maintbench"
   * Prints one line per strategy; the receipt lives in PLANS.md.
   */
@@ -45,7 +46,7 @@ object StoreMaintBench {
           rand(seed.toLong).as("value"))
     }
 
-    def freshStore(dir: String, versioned: Boolean = false): Store = {
+    def freshStore(dir: String): Store = {
       ToolUtil.wipeDir(dir)
       // chunkRows sized so the hot bucket's canonical rewrite has real
       // parallelism (rows/chunkRows partitions) — at production scale a
@@ -54,12 +55,11 @@ object StoreMaintBench {
       Store.open(spark, dir,
         cols = Some(Seq(
           "EVENT_ID" -> LongType, "USER_ID" -> LongType, "VALUE" -> DoubleType)),
-        index = Some("TS"), bucket = Some("month"), chunkRows = 50000L,
-        versioned = versioned)
+        index = Some("TS"), bucket = Some("month"), chunkRows = 50000L)
     }
 
-    def build(dir: String, versioned: Boolean = false): Store = {
-      val s = freshStore(dir, versioned)
+    def build(dir: String): Store = {
+      val s = freshStore(dir)
       // `months` months of compacted history in one write...
       s.write("EVENTS", (0 until months).map(monthData(_, 0)).reduce(_ unionByName _))
       // ...then append churn into the LAST month only (the hot bucket)
@@ -78,7 +78,8 @@ object StoreMaintBench {
       java.time.LocalDate.parse("2020-01-01")
         .atStartOfDay(java.time.ZoneOffset.UTC).plusMonths((months - 1).toLong).toInstant)
 
-    val s2 = build(baseDir + "-buckets")
+    val s2dir = baseDir + "-buckets"
+    val s2 = build(s2dir)
     timed("compactBuckets") {
       val n = s2.compactBuckets("EVENTS", maxFilesPerBucket = 8,
         since = Some(hotSince))
@@ -96,48 +97,28 @@ object StoreMaintBench {
     // same end state where it matters: the hot bucket is small again
     println(s"[maintbench] rows whole=${s1("EVENTS").count()} buckets=${s2("EVENTS").count()}")
 
-    // ===== versioned layout: the pointer commit must not change the
-    // maintenance cost curve. compactBuckets rewrites IN-PLACE inside
-    // the current version (copying 100 TB of cold buckets into a fresh
-    // version to fix one directory would defeat the point), so its cost
-    // should match the flat numbers above; the only versioned-specific
-    // maintenance is the orphan-version sweep, whose cost must be
-    // bounded by ORPHAN COUNT, never by history size.
-    val s3dir = baseDir + "-versioned"
-    val s3 = build(s3dir, versioned = true)
-    timed("compactBuckets vers") {
-      val n = s3.compactBuckets("EVENTS", maxFilesPerBucket = 8,
-        since = Some(hotSince))
-      println(s"[maintbench] versioned buckets rewritten: $n")
-    }
-    timed("compactBuckets v2nd") {
-      val n = s3.compactBuckets("EVENTS", maxFilesPerBucket = 8,
-        since = Some(hotSince))
-      println(s"[maintbench] versioned buckets rewritten on 2nd call: $n (must be 0)")
-    }
-
     // orphan sweep: plant k version dirs no pointer names — exactly the
     // debris a versionSwap crashed before its pointer write leaves —
     // and time vacuum(0) at two orphan counts over the SAME 48-month
-    // history. Equal-size orphans, so a flat cost-per-orphan line means
-    // the sweep scales with debris, not with the item.
+    // history. Equal-size orphans, so a constant cost-per-orphan line
+    // means the sweep scales with debris, not with the item.
     def plantOrphans(k: Int, tag: String): Unit =
       (1 to k).foreach { i =>
         monthData(0, 1000 + i).limit(20000).write
-          .parquet(s"$s3dir/items/EVENTS/v-$tag$i")
+          .parquet(s"$s2dir/items/EVENTS/v-$tag$i")
       }
     plantOrphans(2, "orphan-a")
     timed("vacuum 2 orphans") {
-      println(s"[maintbench] swept: ${s3.vacuum(0L)} (expect 2)")
+      println(s"[maintbench] swept: ${s2.vacuum(0L)} (expect 2)")
     }
     plantOrphans(8, "orphan-b")
     timed("vacuum 8 orphans") {
-      println(s"[maintbench] swept: ${s3.vacuum(0L)} (expect 8)")
+      println(s"[maintbench] swept: ${s2.vacuum(0L)} (expect 8)")
     }
     timed("vacuum 0 orphans") {
-      println(s"[maintbench] swept: ${s3.vacuum(0L)} (expect 0 — steady state)")
+      println(s"[maintbench] swept: ${s2.vacuum(0L)} (expect 0 — steady state)")
     }
-    println(s"[maintbench] rows versioned=${s3("EVENTS").count()}")
+    println(s"[maintbench] rows after sweeps=${s2("EVENTS").count()} (unchanged)")
 
     spark.stop()
   }

@@ -15,11 +15,11 @@ import org.apache.spark.sql.SparkSession
   *  - `hold <storeDir> <key> <flagFile>` — acquire the item's writer
   *    lease, touch the flag file, park forever (renewer keeps the
   *    lease live until the parent kills the process).
-  *  - `swapcrash <objstoreDir> <key>` — run compact() over the
-  *    objstore:// filesystem with a crash armed INSIDE the live→trash
-  *    rename's delete phase; the armed crash calls Runtime.halt(42),
-  *    so the JVM dies mid-copy+delete leaving a genuinely split
-  *    directory.
+  *  - `swapcrash <objstoreDir> <key> <bucket>` — run compactBuckets()
+  *    over the objstore:// filesystem with a crash armed INSIDE the
+  *    `__bucket=<bucket>` live→trash rename's delete phase; the armed
+  *    crash calls Runtime.halt(42), so the JVM dies mid-copy+delete
+  *    leaving a genuinely split bucket directory.
   *  - `appendloop <storeDir> <key> <nBatches> <seed>` — append
   *    `nBatches` leased 50-row batches ([[TwoProcFixtures.batch]])
   *    while the parent does the same with a different seed; prints
@@ -45,30 +45,30 @@ object CrashChild {
           Thread.sleep(3600000L) // parked: the parent hard-kills us
         }
       case "swapcrash" =>
-        val Array(_, dir, key) = args
+        val Array(_, dir, key, bucket) = args
         spark.sparkContext.hadoopConfiguration
           .set("fs.objstore.impl", classOf[ObjStoreFs].getName)
         val s = Store.open(spark, dir) // existing store: persisted schema
-        // die inside the live→trash move-out, after _SUCCESS plus one
-        // data file were already deleted from the live dir — the
-        // half-moved state only a copy+delete "rename" can produce
+        // die inside the bucket's live→trash move-out, after one data
+        // file was already deleted from the live dir — the half-moved
+        // state only a copy+delete "rename" can produce
         ObjStoreFs.crash = Some(ObjStoreFs.Crash(
-          s"items/$key", phase = "delete", afterFiles = 2, halt = true))
-        s.compact(key)
+          s"__bucket=$bucket", phase = "delete", afterFiles = 1, halt = true))
+        s.compactBuckets(key, maxFilesPerBucket = 1)
         // reaching here means the crash never fired — loud failure
-        System.err.println("CrashChild: compact completed, crash never armed/matched")
+        System.err.println("CrashChild: compactBuckets completed, crash never armed/matched")
         sys.exit(1)
       case "versioncrash" =>
-        // versioned layout: die at the COMMIT point — the new version
+        // die at the COMMIT point of a version swap — the new version
         // dir is fully materialized, and the process halts the instant
         // the `_current` pointer create begins. The parent must keep
         // reading the OLD version exactly and sweep the orphan.
         val Array(_, dir, key) = args
         spark.sparkContext.hadoopConfiguration
           .set("fs.objstore.impl", classOf[ObjStoreFs].getName)
-        val s = Store.open(spark, dir) // existing versioned store
+        val s = Store.open(spark, dir) // existing store
         ObjStoreFs.haltOnCreatePath = Some(s"items/$key/_current")
-        s.compact(key) // versioned compact = versionSwap
+        s.compact(key) // compact = versionSwap
         System.err.println("CrashChild: compact completed, pointer halt never fired")
         sys.exit(1)
       case "ctascrash" =>
@@ -100,7 +100,7 @@ object CrashChild {
         spark.sparkContext.hadoopConfiguration
           .set("fs.objstore.impl", classOf[ObjStoreFs].getName)
         val rnd = new scala.util.Random(seedStr.toLong)
-        val s = Store.open(spark, dir) // versioned marker persisted by parent
+        val s = Store.open(spark, dir) // created by the parent
         def say(l: String): Unit = { println(l); System.out.flush() }
         (0 until nStr.toInt).foreach { i =>
           val armKind = rnd.nextInt(8)
@@ -108,9 +108,9 @@ object CrashChild {
           val b = rnd.nextInt(4)
           // arm AFTER drawing op/b so the sequence is log-reconstructable
           if (armKind == 0) { // p=1/8: die inside any rename that occurs
-            // (the versioned layout is rename-free by design — this arm
+            // (the item-level ops are rename-free by design — this arm
             // documents that: it must never fire here, and a fire would
-            // mean a rename crept back into the versioned write path)
+            // mean a rename crept back into the item-level write path)
             val target = Seq("items/K", ".tmp-", "_temporary")(rnd.nextInt(3))
             val phase = if (rnd.nextBoolean()) "copy" else "delete"
             ObjStoreFs.crash = Some(ObjStoreFs.Crash(

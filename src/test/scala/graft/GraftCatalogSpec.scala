@@ -125,7 +125,7 @@ class GraftCatalogSpec extends AnyFunSuite {
 
   test("a VERSIONED store works through the catalog: list, create-empty, insert, drop") {
     val dir = java.nio.file.Files.createTempDirectory("graft-catalog-vers").toString
-    val s = Store.open(spark, dir, versioned = true)
+    val s = Store.open(spark, dir)
     s.write("MSFT", bars(15))
     spark.conf.set("spark.sql.catalog.gcatv", "graft.sources.v2.GraftCatalog")
     spark.conf.set("spark.sql.catalog.gcatv.path", dir)
@@ -148,7 +148,7 @@ class GraftCatalogSpec extends AnyFunSuite {
 
   test("CALL versions lists a versioned item's current version and crash orphans; flat stores refuse") {
     val dir = java.nio.file.Files.createTempDirectory("graft-catalog-hist").toString
-    val s = Store.open(spark, dir, versioned = true)
+    val s = Store.open(spark, dir)
     s.write("MSFT", bars(15))
     // simulate the debris a swap crashed between pointer-commit and
     // predecessor-delete leaves: a complete but unreferenced v-dir
@@ -174,11 +174,18 @@ class GraftCatalogSpec extends AnyFunSuite {
     assert(spark.sql("CALL gcath.vacuum(older_than_ms => 0)").collect()(0).getLong(0) >= 1L)
     val after = spark.sql("CALL gcath.versions(item => 'MSFT')").collect()
     assert(after.length == 1 && after(0).getBoolean(1))
-    // the non-versioned-layout catalog refuses with an actionable message
-    storeDir // force the suite catalog (flat layout) into existence
+    // a retired flat-layout directory (schema.json, data straight under
+    // items/MSFT, no versioned marker) is refused with an actionable
+    // message naming the layout
+    val flatDir = java.nio.file.Files.createTempDirectory("graft-catalog-flat")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(dir, "schema.json"),
+      flatDir.resolve("schema.json"))
+    s("MSFT").write.parquet(flatDir.resolve("items").resolve("MSFT").toString)
+    spark.conf.set("spark.sql.catalog.gcatflat", "graft.sources.v2.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.gcatflat.path", flatDir.toString)
     val err = intercept[Exception](
-      spark.sql(s"CALL gcat.versions(item => 'MSFT')").collect())
-    assert(err.getMessage.contains("versioned"), s"wrong error: ${err.getMessage}")
+      spark.sql("CALL gcatflat.versions(item => 'MSFT')").collect())
+    assert(err.getMessage.contains("flat"), s"wrong error: ${err.getMessage}")
   }
 
   test("catalog-qualified STREAMING read: spark.readStream.table(gcat.MSFT) drains the item") {
@@ -427,43 +434,9 @@ class GraftCatalogSpec extends AnyFunSuite {
     assert(!Store.attach(spark, storeDir).exists("BAD"))
   }
 
-  test("CTAS end-to-end on the flat store: rows land, errorifexists holds, a failed CTAS leaves no visible item") {
-    storeDir
-    // happy path: the first DDL a SQL user writes after SELECT
-    spark.sql(
-      "CREATE TABLE gcat.CTAS1 AS SELECT * FROM gcat.MSFT WHERE VOLUME >= 1050")
-    val got = spark.sql("SELECT count(*) AS c FROM gcat.CTAS1").as[Long].head()
-    val want = spark.sql(
-      "SELECT count(*) AS c FROM gcat.MSFT WHERE VOLUME >= 1050").as[Long].head()
-    assert(got == want && got > 0, s"CTAS rows $got != source-filtered $want")
-    // errorifexists discipline (store.py:203-204): CTAS to an existing
-    // item refuses and does NOT touch the existing data
-    intercept[Exception](spark.sql(
-      "CREATE TABLE gcat.CTAS1 AS SELECT * FROM gcat.AAPL"))
-    assert(spark.sql("SELECT count(*) FROM gcat.CTAS1").as[Long].head() == want)
-    // empty SELECT still creates (CREATE semantics): 0-row item exists
-    spark.sql("CREATE TABLE gcat.CTAS0 AS SELECT * FROM gcat.MSFT LIMIT 0")
-    assert(Store.attach(spark, storeDir).exists("CTAS0"))
-    assert(spark.sql("SELECT count(*) FROM gcat.CTAS0").as[Long].head() == 0L)
-    // failure MID-CTAS: the SELECT throws at runtime (ANSI divide by
-    // zero on a data-dependent expression) after analysis passed — the
-    // staged create must leave NO visible item behind
-    val boom = intercept[Exception](spark.sql(
-      """CREATE TABLE gcat.CTAS_FAIL AS
-        |SELECT DATE, OPEN, HIGH, LOW, CLOSE,
-        |       CAST(VOLUME / (VOLUME - VOLUME) AS BIGINT) AS VOLUME
-        |FROM gcat.MSFT""".stripMargin))
-    assert(boom.getMessage != null)
-    assert(!Store.attach(spark, storeDir).exists("CTAS_FAIL"),
-      "failed CTAS left a visible item on the flat store")
-    val names = spark.sql("SHOW TABLES IN gcat").select("tableName")
-      .as[String].collect().toSet
-    assert(!names.contains("CTAS_FAIL"))
-  }
-
   test("CTAS on a VERSIONED store is pointer-commit atomic: failure leaves no pointer, only a vacuum-sweepable orphan") {
     val dir = java.nio.file.Files.createTempDirectory("graft-catalog-v").toString
-    val s = Store.open(spark, dir, versioned = true)
+    val s = Store.open(spark, dir)
     s.write("SRC", bars(40, seed = 21))
     spark.conf.set("spark.sql.catalog.gvcat", "graft.sources.v2.GraftCatalog")
     spark.conf.set("spark.sql.catalog.gvcat.path", dir)
@@ -473,6 +446,10 @@ class GraftCatalogSpec extends AnyFunSuite {
     assert(s.exists("CTAS_V"))
     val n = spark.sql("SELECT count(*) FROM gvcat.CTAS_V").as[Long].head()
     assert(n == 30L, s"got $n")
+    // empty SELECT still creates (CREATE semantics): 0-row item exists
+    spark.sql("CREATE TABLE gvcat.CTAS0 AS SELECT * FROM gvcat.SRC LIMIT 0")
+    assert(s.exists("CTAS0"))
+    assert(spark.sql("SELECT count(*) FROM gvcat.CTAS0").as[Long].head() == 0L)
     // failure mid-CTAS: no pointer ever lands -> the item never exists;
     // whatever the write staged is an orphan v-dir the abort deletes
     // (and vacuum would sweep after a crash that skipped the abort)
@@ -483,6 +460,8 @@ class GraftCatalogSpec extends AnyFunSuite {
         |FROM gvcat.SRC""".stripMargin))
     assert(!s.exists("CTAS_VFAIL"),
       "failed CTAS left a visible item on the versioned store")
+    assert(!spark.sql("SHOW TABLES IN gvcat").select("tableName")
+      .as[String].collect().contains("CTAS_VFAIL"))
     val itemDir = new org.apache.hadoop.fs.Path(s"$dir/items/CTAS_VFAIL")
     val fs = itemDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(itemDir)) {
@@ -490,7 +469,7 @@ class GraftCatalogSpec extends AnyFunSuite {
       assert(!fs.exists(new org.apache.hadoop.fs.Path(itemDir, "_current")),
         "failed CTAS landed a version pointer")
     }
-    // errorifexists on the versioned layout: the pointer create race
+    // errorifexists (store.py:203-204): the pointer create race
     // loser (or a plain re-CTAS) refuses without touching the item
     intercept[Exception](spark.sql(
       "CREATE TABLE gvcat.CTAS_V AS SELECT * FROM gvcat.SRC"))
@@ -516,10 +495,11 @@ class GraftCatalogSpec extends AnyFunSuite {
     spark.sql("DROP TABLE IF EXISTS gcat.`bad name!`") // must not crash
     intercept[graft.sources.ItemKeyError](spark.sql(
       "CREATE TABLE gcat.`bad name!` AS SELECT * FROM gcat.MSFT LIMIT 0"))
-    // flat-store CTAS abort scoping: a failed CTAS whose INSERT never
-    // ran must NOT drop an identically-named item a CONCURRENT writer
-    // created in the race window. Simulate via the staging API directly:
-    // stage, let another writer create the item, abort.
+    // CTAS abort scoping: a failed CTAS whose INSERT never ran must NOT
+    // drop an identically-named item a CONCURRENT writer created in the
+    // race window (the abort deletes only its own staged version).
+    // Simulate via the staging API directly: stage, let another writer
+    // create the item, abort.
     val ident = org.apache.spark.sql.connector.catalog.Identifier.of(Array.empty, "RACED")
     val staged = cat.stageCreate(ident,
       Store.attach(spark, storeDir).schema, Array.empty,
@@ -528,7 +508,7 @@ class GraftCatalogSpec extends AnyFunSuite {
     other.write("RACED", bars(5)) // the concurrent writer's data
     staged.abortStagedChanges()    // our CTAS failed WITHOUT inserting
     assert(other.exists("RACED"),
-      "abort of a never-written flat CTAS must not drop the concurrent writer's item")
+      "abort of a never-written CTAS must not drop the concurrent writer's item")
     assert(other.query("RACED", None, None).count() == 5)
     other.drop("RACED")
   }

@@ -75,7 +75,7 @@ class GraftStreamSpec extends AnyFunSuite {
 
   test("streamed projection prunes columns; unbucketed stores stream too") {
     val dir = tmpDir()
-    val s = Store.open(spark, dir) // flat layout
+    val s = Store.open(spark, dir) // unbucketed
     s.write("AAPL", bars(25, seed = 11))
     val out = tmpDir() + "/out"
     val st = spark.readStream.format("graft").option("item", "AAPL").load(dir)
@@ -100,7 +100,7 @@ class GraftStreamSpec extends AnyFunSuite {
     val dir = tmpDir()
     val s = Store.open(spark, dir, bucket = Some("month"))
     s.write("MSFT", bars(10))
-    val itemDir = java.nio.file.Paths.get(dir, "items", "MSFT")
+    val itemDir = LiveDir(s, dir, "MSFT")
     val tmpTask = itemDir.resolve("_temporary").resolve("0").resolve("task-0")
     java.nio.file.Files.createDirectories(tmpTask)
     // an ordinary-named parquet file inside the hidden dir

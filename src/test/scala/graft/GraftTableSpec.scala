@@ -135,7 +135,7 @@ class GraftTableSpec extends AnyFunSuite {
 
   test("unbucketed stores read through the provider; row-group pushdown still applies") {
     val dir = tmpDir()
-    val s = Store.open(spark, dir) // flat layout, no buckets
+    val s = Store.open(spark, dir) // unbucketed
     s.write("MSFT", bars(50))
     val df = spark.read.format("graft").option("item", "MSFT").load(dir)
       .where($"DATE" <= "2015-01-10 00:00:00")
@@ -969,7 +969,7 @@ class GraftTableSpec extends AnyFunSuite {
     val dir = tmpDir()
     val s = Store.open(spark, dir, bucket = Some("month"))
     s.write("MSFT", bars(62)) // 2015-01, 2015-02, 2015-03(2 days)
-    val itemDir = java.nio.file.Paths.get(dir, "items", "MSFT")
+    val itemDir = LiveDir(s, dir, "MSFT")
     val someFile = java.nio.file.Files.walk(itemDir).iterator()
       .asScala.filter(_.toString.endsWith(".parquet")).next()
     val rogue = itemDir.resolve("__bucket=__HIVE_DEFAULT_PARTITION__")

@@ -13,7 +13,7 @@ import java.net.URI
   * Two instruments for specs:
   *  - every rename is recorded in [[ObjStoreFs.renames]] (src, dst), so
   *    a spec can assert which renames a code path performs (e.g. the
-  *    versioned layout's write path performs NO control-plane rename);
+  *    item-level write path performs NO control-plane rename);
   *  - [[ObjStoreFs.crash]] arms an injected crash at an exact point
   *    inside a matching rename — after N files of the copy phase or
   *    after N files of the delete phase — leaving the genuine partial
@@ -81,7 +81,7 @@ class ObjStoreFs extends RawLocalFileSystem {
       }
     }
 
-  // versioned-layout crash point: REAL process death at the instant a
+  // pointer-commit crash point: REAL process death at the instant a
   // matching object is about to be created — armed by the two-process
   // versioncrash child to die between a fully-materialized new version
   // dir and its `_current` pointer commit (the commit IS a create)
@@ -127,6 +127,12 @@ class ObjStoreFs extends RawLocalFileSystem {
     if (ObjStoreFs.traceDeletes)
       System.err.println(s"[objstore-delete] recursive=$recursive ${f.toUri.getPath}")
     maybeHaltOnDelete(f)
+    ObjStoreFs.crashOnDeleteOf.foreach { suffix =>
+      if (f.toUri.getPath.endsWith(suffix)) {
+        ObjStoreFs.crashOnDeleteOf = None // one-shot
+        throw new ObjStoreFs.InjectedCrash(s"injected crash: delete of $f")
+      }
+    }
     super.delete(f, recursive)
   }
 
@@ -196,6 +202,12 @@ object ObjStoreFs {
   @volatile var haltOnDeletePath: Option[String] = None
   val deleteSkips = new java.util.concurrent.atomic.AtomicInteger(0)
 
+  /** When set: the next delete whose path ENDS with this suffix throws
+    * [[InjectedCrash]] before deleting anything (one-shot) — an
+    * in-process crash between two deletes of one op.
+    */
+  @volatile var crashOnDeleteOf: Option[String] = None
+
   /** Diagnostic: print every delete the FS sees (never armed by specs —
     * a human investigating which real delete a kill point hit).
     */
@@ -203,6 +215,6 @@ object ObjStoreFs {
 
   def reset(): Unit = {
     renames.clear(); crash = None; haltOnCreatePath = None
-    haltOnDeletePath = None; deleteSkips.set(0)
+    haltOnDeletePath = None; deleteSkips.set(0); crashOnDeleteOf = None
   }
 }

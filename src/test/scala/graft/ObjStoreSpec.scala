@@ -13,13 +13,15 @@ import scala.jdk.CollectionConverters._
   * `s3a://` really does — with injectable crash points. This spec
   * proves the two layers of the 100 TB object-store story:
   *
-  *  - the FLAT layout's manifest-bearing marker protocol recovers
-  *    EXACTLY from crashes inside a non-atomic rename (partial live
-  *    dirs are restored from the complete side, interrupted drops are
-  *    finished, re-created items are never clobbered);
-  *  - the VERSIONED layout's write path performs ZERO control-plane
-  *    renames at all — its commit primitive is the single-object
-  *    pointer PUT, so none of the above hazards exist to recover from.
+  *  - item-level writes (write/append/appendNewOnly/compact/drop) and
+  *    vacuum perform ZERO control-plane renames — their commit
+  *    primitive is the single-object `_current` pointer PUT, so none of
+  *    the hazards below exist for them;
+  *  - the in-place bucket rewrites that DO rename ([[Store.compactBuckets]]
+  *    and [[Store.prune]]) recover EXACTLY through the manifest-bearing
+  *    marker protocol from crashes inside a non-atomic rename (partial
+  *    live dirs are restored from the complete side, interrupted
+  *    removals are finished, re-created dirs are never clobbered).
   */
 class ObjStoreSpec extends AnyFunSuite {
   lazy val spark: SparkSession = {
@@ -49,12 +51,29 @@ class ObjStoreSpec extends AnyFunSuite {
     (hp.getFileSystem(spark.sparkContext.hadoopConfiguration), hp)
   }
 
-  def open(dir: String, versioned: Boolean = false): Store =
+  def open(dir: String, bucket: Option[String] = None): Store =
     Store.open(spark, dir,
       cols = Some(Seq(
         "price" -> org.apache.spark.sql.types.DoubleType,
         "volume" -> org.apache.spark.sql.types.LongType)),
-      index = Some("date"), versioned = versioned)
+      index = Some("date"), bucket = bucket)
+
+  /** The bucket-swap fixture: a month-bucketed store whose MSFT item
+    * holds 62 rows, all in January 2020, piled into several data files
+    * by an append — so `compactBuckets(maxFilesPerBucket = 1)` rewrites
+    * exactly ONE bucket, through the two-marker rename swap.
+    */
+  def piled(dir: String): Store = {
+    val s = open(dir, bucket = Some("month"))
+    s.write("MSFT", bars(31))
+    s.appendNewOnly("MSFT", bars(31, seed = 12))
+    s
+  }
+
+  /** Crash-point source path of the fixture's bucket move-out. */
+  val Jan = "__bucket=2020-01"
+
+  def compactJan(s: Store): Unit = { s.compactBuckets("MSFT", maxFilesPerBucket = 1); () }
 
   /** Control-plane renames: anything moving an immediate child of
     * items/ or .staging/ (item dirs, staged tmp/trash dirs) or a
@@ -74,57 +93,51 @@ class ObjStoreSpec extends AnyFunSuite {
     ObjStoreFs.renames.asScala.toSeq.filter { case (s, d) => isCtl(s) || isCtl(d) }
   }
 
-  test("flat lifecycle through copy+delete renames: write/append/query/compact/describe/drop/vacuum") {
+  test("versioned lifecycle: ZERO control-plane renames — commits are pointer PUTs only") {
     ObjStoreFs.reset()
     val dir = objDir()
-    val s = open(dir)
+    val s = open(dir, bucket = Some("month"))
     s.write("MSFT", bars(100))
     assert(s("MSFT").count() == 100)
     s.appendNewOnly("MSFT", bars(150)) // 50 new rows through mode(append)
     assert(s("MSFT").count() == 150)
-    s.append("MSFT", bars(150)) // full staged swap over objstore rename
-    assert(s("MSFT").count() == 150)
-    s.compact("MSFT") // second staged swap
-    assert(s("MSFT").count() == 150)
+    s.append("MSFT", bars(200)) // version swap: fresh v-dir + pointer overwrite
+    assert(s("MSFT").count() == 200)
+    s.compact("MSFT") // another version swap
+    assert(s("MSFT").count() == 200)
     val q = s.query("MSFT",
       Some(Timestamp.valueOf("2020-02-01 00:00:00")),
       Some(Timestamp.valueOf("2020-02-29 00:00:00")))
     assert(q.count() == 29)
-    assert(s.describe("MSFT").rows == 150)
+    assert(s.describe("MSFT").rows == 200)
     assert(s.vacuum(0L) == 0L, "clean swaps leave nothing to vacuum")
-    s.drop("MSFT")
-    assert(!s.exists("MSFT"))
-    // the flat swaps really did exercise the non-atomic rename path
-    assert(ctlRenames(dir).nonEmpty, "staged swaps must rename through the FS")
-  }
-
-  test("versioned lifecycle: ZERO control-plane renames — commits are pointer PUTs only") {
-    ObjStoreFs.reset()
-    val dir = objDir()
-    val s = open(dir, versioned = true)
-    s.write("MSFT", bars(100))
-    s.appendNewOnly("MSFT", bars(150))
-    s.append("MSFT", bars(200)) // version swap: fresh v-dir + pointer overwrite
-    s.compact("MSFT") // another version swap
-    assert(s("MSFT").count() == 200)
+    assert(ctlRenames(dir).isEmpty,
+      s"item-level write path must not rename item/staging dirs: ${ctlRenames(dir)}")
+    // the in-place bucket ops are the only renaming paths
+    s.appendNewOnly("MSFT", bars(200, seed = 12))
+    assert(s.compactBuckets("MSFT", maxFilesPerBucket = 1) >= 1L)
+    assert(ctlRenames(dir).nonEmpty, "compactBuckets swaps bucket dirs by rename")
+    ObjStoreFs.renames.clear()
+    assert(s.prune("MSFT", Timestamp.valueOf("2020-02-01 00:00:00")) == 1L)
+    assert(ctlRenames(dir).nonEmpty, "prune moves expired buckets out by rename")
+    ObjStoreFs.renames.clear()
     s.drop("MSFT") // pointer delete, then data-tree delete — no rename
     assert(!s.exists("MSFT"))
-    assert(ctlRenames(dir).isEmpty,
-      s"versioned write path must not rename item/staging dirs: ${ctlRenames(dir)}")
+    assert(s.vacuum(0L) == 0L)
+    assert(ctlRenames(dir).isEmpty, s"drop/vacuum must not rename: ${ctlRenames(dir)}")
   }
 
   test("swap crash in the MOVE-OUT's delete phase: live split in half, vacuum restores the OLD item exactly") {
     ObjStoreFs.reset()
     val dir = objDir()
-    val s = open(dir)
-    s.write("MSFT", bars(100))
+    val s = piled(dir)
     val before = s("MSFT").collect().map(_.toSeq).toSet
-    // compact's first rename (live -> trash) dies after all files were
-    // copied and ONE source file was deleted: live is a strict subset,
-    // trash is complete — the crash point the rename-atomic protocol
-    // could never produce
-    ObjStoreFs.crash = Some(ObjStoreFs.Crash("items/MSFT", "delete", 1))
-    intercept[ObjStoreFs.InjectedCrash](s.compact("MSFT"))
+    // the bucket swap's first rename (live -> trash) dies after all
+    // files were copied and ONE source file was deleted: live is a
+    // strict subset, trash is complete — the crash point the
+    // rename-atomic protocol could never produce
+    ObjStoreFs.crash = Some(ObjStoreFs.Crash(Jan, "delete", 1))
+    intercept[ObjStoreFs.InjectedCrash](compactJan(s))
     // only the swap marker exists (mid never written) -> roll back;
     // the manifest says live is damaged, trash refills it per file
     assert(s.vacuum(0L) >= 1L)
@@ -137,58 +150,26 @@ class ObjStoreSpec extends AnyFunSuite {
   test("swap crash in the PROMOTE's copy phase: vacuum resumes the promote, new data lands complete") {
     ObjStoreFs.reset()
     val dir = objDir()
-    val s = open(dir)
-    s.write("MSFT", bars(100))
-    s.appendNewOnly("MSFT", bars(150)) // multiple files so the promote has >1 object
+    val s = piled(dir)
     val expected = s("MSFT").collect().map(_.toSeq).toSet
-    // compact's second rename (tmp -> live) dies after copying ONE file:
+    // the second rename (tmp -> live) dies after copying ONE file:
     // swap+mid markers present, live partially promoted, tmp intact
     ObjStoreFs.crash = Some(ObjStoreFs.Crash(".tmp-", "copy", 1))
-    intercept[ObjStoreFs.InjectedCrash](s.compact("MSFT"))
+    intercept[ObjStoreFs.InjectedCrash](compactJan(s))
     assert(s.vacuum(0L) >= 1L)
     assert(s("MSFT").collect().map(_.toSeq).toSet == expected,
-      "compacted item promoted complete despite the mid-promote crash")
+      "compacted bucket promoted complete despite the mid-promote crash")
     val (fs, base) = hfs(dir)
-    assert(fs.listStatus(new HPath(base, ".staging")).isEmpty)
-  }
-
-  test("re-creation cannot race a crashed swap: write() refuses while markers pend, vacuum + drop clear the way") {
-    ObjStoreFs.reset()
-    val dir = objDir()
-    val s = open(dir)
-    s.write("MSFT", bars(100))
-    // crash right at the promote's first copy: old data moved out
-    // (swap+mid), tmp staged, live dir about to be rebuilt
-    ObjStoreFs.crash = Some(ObjStoreFs.Crash(".tmp-", "copy", 0))
-    intercept[ObjStoreFs.InjectedCrash](s.compact("MSFT"))
-    val (fs, base) = hfs(dir)
-    fs.delete(new HPath(new HPath(base, "items"), "MSFT"), true)
-    // an operator re-writing the key from source CANNOT create an
-    // ambiguous incarnation next to the crashed swap's markers — the
-    // no-clobber guarantee of recovery rests on this refusal
-    val e = intercept[Exception](s.write("MSFT", bars(30, seed = 77)))
-    assert(e.getMessage.contains("vacuum"), s"unhelpful error: ${e.getMessage}")
-    // the sanctioned path: recover first (the committed swap rolls
-    // forward), then drop and re-create
-    s.vacuum(0L)
-    assert(s("MSFT").count() == 100, "crashed swap recovered whole")
-    s.drop("MSFT")
-    s.write("MSFT", bars(30, seed = 77))
-    val fresh = s("MSFT").collect().map(_.toSeq).toSet
-    s.vacuum(0L)
-    assert(s("MSFT").collect().map(_.toSeq).toSet == fresh,
-      "re-created item untouched by later vacuums")
     assert(fs.listStatus(new HPath(base, ".staging")).isEmpty)
   }
 
   test("drop retires the key's crash markers so the key is re-creatable without vacuum") {
     ObjStoreFs.reset()
     val dir = objDir()
-    val s = open(dir)
-    s.write("MSFT", bars(100))
-    ObjStoreFs.crash = Some(ObjStoreFs.Crash("items/MSFT", "delete", 1))
-    intercept[ObjStoreFs.InjectedCrash](s.compact("MSFT"))
-    // the half-moved item still exists (partial live) — drop it
+    val s = piled(dir)
+    ObjStoreFs.crash = Some(ObjStoreFs.Crash(Jan, "delete", 1))
+    intercept[ObjStoreFs.InjectedCrash](compactJan(s))
+    // the half-moved item still exists (partial live bucket) — drop it
     s.drop("MSFT")
     assert(!s.exists("MSFT"))
     val (fs, base) = hfs(dir)
@@ -201,14 +182,12 @@ class ObjStoreSpec extends AnyFunSuite {
   test("mutating a half-moved item is refused until vacuum; recovery then restores and the append lands") {
     ObjStoreFs.reset()
     val dir = objDir()
-    val s = open(dir)
-    s.write("MSFT", bars(100))
-    s.appendNewOnly("MSFT", bars(150)) // ≥2 data files
+    val s = piled(dir) // ≥2 data files in the bucket
     val before = s("MSFT").collect().map(_.toSeq).toSet
-    // die after deleting _SUCCESS and a DATA file: live is genuinely
-    // missing rows, trash holds the only complete copy
-    ObjStoreFs.crash = Some(ObjStoreFs.Crash("items/MSFT", "delete", 2))
-    intercept[ObjStoreFs.InjectedCrash](s.compact("MSFT"))
+    // die after deleting a data file: live is genuinely missing rows,
+    // trash holds the only complete copy
+    ObjStoreFs.crash = Some(ObjStoreFs.Crash(Jan, "delete", 1))
+    intercept[ObjStoreFs.InjectedCrash](compactJan(s))
     // a writer hitting the half-moved item is REFUSED until recovery —
     // an append here could anti-join against the partial live dir and
     // re-insert rows whose only copy sits in trash, duplicating them
@@ -227,11 +206,10 @@ class ObjStoreSpec extends AnyFunSuite {
   test("mutating a half-promoted item is refused until vacuum; recovery resumes the promote") {
     ObjStoreFs.reset()
     val dir = objDir()
-    val s = open(dir)
-    s.write("MSFT", bars(100))
-    val committed = s("MSFT").collect().map(_.toSeq).toSet // compact preserves rows
+    val s = piled(dir)
+    val committed = s("MSFT").collect().map(_.toSeq).toSet // compaction preserves rows
     ObjStoreFs.crash = Some(ObjStoreFs.Crash(".tmp-", "copy", 1))
-    intercept[ObjStoreFs.InjectedCrash](s.compact("MSFT"))
+    intercept[ObjStoreFs.InjectedCrash](compactJan(s))
     // mutations are refused on the half-promoted item; compact too
     intercept[Exception](s.compact("MSFT"))
     s.vacuum(0L)
@@ -249,14 +227,19 @@ class ObjStoreSpec extends AnyFunSuite {
     val s = open(dir)
     s.write("MSFT", bars(100))
     s.appendNewOnly("MSFT", bars(150))
-    ObjStoreFs.crash = Some(ObjStoreFs.Crash("items/MSFT", "delete", 1))
+    // die at the data-tree delete that follows the pointer delete: the
+    // pointer is gone, the version dir is left behind
+    ObjStoreFs.crashOnDeleteOf = Some("items/MSFT")
     intercept[ObjStoreFs.InjectedCrash](s.drop("MSFT"))
-    // the item dir lost a file mid-move: neither present nor gone —
-    // the del marker's intent finishes it
-    assert(s.vacuum(0L) >= 1L)
-    assert(!s.exists("MSFT"), "interrupted drop completes on vacuum")
+    // the pointer delete IS the disappear: the item is already gone
+    assert(!s.exists("MSFT") && s.listItems().isEmpty)
     val (fs, base) = hfs(dir)
-    assert(fs.listStatus(new HPath(base, ".staging")).isEmpty)
+    val item = new HPath(new HPath(base, "items"), "MSFT")
+    assert(fs.listStatus(item).exists(_.getPath.getName.startsWith("v-")),
+      "fixture must leave the dropped item's version dir behind")
+    // vacuum finishes the drop: the pointer-less version is an orphan
+    assert(s.vacuum(0L) >= 1L)
+    assert(!fs.listStatus(item).exists(_.getPath.getName.startsWith("v-")))
     // and the key is writable again
     s.write("MSFT", bars(10))
     assert(s("MSFT").count() == 10)
@@ -267,19 +250,17 @@ class ObjStoreSpec extends AnyFunSuite {
     // vacuum the item must equal one complete side — never a mix,
     // never a partial — and staging must drain
     val points = for {
-      target <- Seq("items/MSFT", ".tmp-")
+      target <- Seq(Jan, ".tmp-")
       phase <- Seq("copy", "delete")
       idx <- 0 to 1
     } yield ObjStoreFs.Crash(target, phase, idx)
     points.foreach { pt =>
       ObjStoreFs.reset()
       val dir = objDir()
-      val s = open(dir)
-      s.write("MSFT", bars(100))
-      s.appendNewOnly("MSFT", bars(150)) // ≥2 data files + _SUCCESS
-      val content = s("MSFT").collect().map(_.toSeq).toSet // compact preserves rows
+      val s = piled(dir) // ≥2 data files in the bucket
+      val content = s("MSFT").collect().map(_.toSeq).toSet // compaction preserves rows
       ObjStoreFs.crash = Some(pt)
-      try s.compact("MSFT")
+      try compactJan(s)
       catch { case _: ObjStoreFs.InjectedCrash => () }
       // the armed point is one-shot (cleared when it fires) — a point
       // that never fired means the fixture no longer produces that
@@ -290,7 +271,7 @@ class ObjStoreSpec extends AnyFunSuite {
         s"crash point $pt corrupted the item")
       // footer row count catches an old+new mixed dir (duplicated rows)
       // that value-set equality alone would miss
-      assert(s.describe("MSFT").rows == 150, s"crash point $pt lost or duplicated rows")
+      assert(s.describe("MSFT").rows == 62, s"crash point $pt lost or duplicated rows")
       val (fs, base) = hfs(dir)
       assert(fs.listStatus(new HPath(base, ".staging")).isEmpty,
         s"crash point $pt left staging debris")
@@ -322,9 +303,9 @@ class ObjStoreSpec extends AnyFunSuite {
   }
 
   test("bucket-swap crash points (compactBuckets): vacuum recovers the ONE bucket against the marker-recorded path") {
-    // both phases of both renames, like the item-swap property — but
-    // the swapped dir is a single bucket, so recovery must restore or
-    // promote THAT directory (recorded in the marker content) and leave
+    // both phases of both renames, like the crash-point property — but
+    // over TWO piled buckets, so recovery must restore or promote THE
+    // crashed directory (recorded in the marker content) and leave
     // every sibling bucket alone
     val points = Seq(
       ObjStoreFs.Crash("__bucket=2020-01", "delete", 1), // move-out, live split
@@ -349,7 +330,7 @@ class ObjStoreSpec extends AnyFunSuite {
       try s.compactBuckets("MSFT", maxFilesPerBucket = 1)
       catch { case _: ObjStoreFs.InjectedCrash => () }
       assert(ObjStoreFs.crash.isEmpty,
-        s"bucket-swap crash point $pt never fired") // see item-swap loop
+        s"bucket-swap crash point $pt never fired") // see the property above
       s.vacuum(0L)
       assert(s("MSFT").collect().map(_.toSeq).toSet == content,
         s"bucket-swap crash point $pt corrupted the item")
@@ -368,17 +349,15 @@ class ObjStoreSpec extends AnyFunSuite {
   test("LEGACY manifest-less marker + partial live: vacuum refills from trash instead of destroying the only complete copy") {
     ObjStoreFs.reset()
     val dir = objDir()
-    val s = open(dir)
-    s.write("MSFT", bars(100))
-    s.appendNewOnly("MSFT", bars(150)) // ≥2 data files
+    val s = piled(dir) // ≥2 data files
     val before = s("MSFT").collect().map(_.toSeq).toSet
     // crash in move-out's delete phase: live is a strict subset, trash
     // holds the complete copy, only the swap marker exists (no mid)
-    ObjStoreFs.crash = Some(ObjStoreFs.Crash("items/MSFT", "delete", 1))
-    intercept[ObjStoreFs.InjectedCrash](s.compact("MSFT"))
+    ObjStoreFs.crash = Some(ObjStoreFs.Crash(Jan, "delete", 1))
+    intercept[ObjStoreFs.InjectedCrash](compactJan(s))
     // simulate an OLD-VINTAGE marker: truncate the manifest lines so
     // parseMarker sees the manifest-less legacy format — recovery must
-    // still restore the item rather than sweep the trash copy
+    // still restore the bucket rather than sweep the trash copy
     val (fs, base) = hfs(dir)
     val staging = new HPath(base, ".staging")
     val marker = fs.listStatus(staging)
@@ -394,21 +373,19 @@ class ObjStoreSpec extends AnyFunSuite {
     assert(s.vacuum(0L) >= 1L)
     assert(s("MSFT").collect().map(_.toSeq).toSet == before,
       "legacy roll-back restored the partially-moved live dir from trash")
-    assert(s.describe("MSFT").rows == 150, "no duplicated rows either")
+    assert(s.describe("MSFT").rows == 62, "no duplicated rows either")
     assert(fs.listStatus(staging).isEmpty)
   }
 
   test("RELOCATED store: vacuum recovers against the current base, not the marker's recorded absolute path") {
     ObjStoreFs.reset()
     val dirA = objDir()
-    val s = open(dirA)
-    s.write("MSFT", bars(100))
-    s.appendNewOnly("MSFT", bars(150))
+    val s = piled(dirA)
     val before = s("MSFT").collect().map(_.toSeq).toSet
     // crash mid move-out: live split, trash complete, markers recording
     // dirA's ABSOLUTE paths
-    ObjStoreFs.crash = Some(ObjStoreFs.Crash("items/MSFT", "delete", 1))
-    intercept[ObjStoreFs.InjectedCrash](s.compact("MSFT"))
+    ObjStoreFs.crash = Some(ObjStoreFs.Crash(Jan, "delete", 1))
+    intercept[ObjStoreFs.InjectedCrash](compactJan(s))
     // relocate the whole store tree — the backup-restore scenario — and
     // recover at the NEW base: the marker's recorded path must be
     // re-based, not trusted (recovering into dead dirA would strand or
@@ -427,7 +404,7 @@ class ObjStoreSpec extends AnyFunSuite {
     assert(moved.vacuum(0L) >= 1L)
     assert(moved("MSFT").collect().map(_.toSeq).toSet == before,
       "item restored at the RELOCATED base")
-    assert(moved.describe("MSFT").rows == 150)
+    assert(moved.describe("MSFT").rows == 62)
     val (fs, base) = hfs("objstore://" + dstRoot.toString)
     assert(fs.listStatus(new HPath(base, ".staging")).isEmpty)
   }
@@ -435,20 +412,17 @@ class ObjStoreSpec extends AnyFunSuite {
   test("UNGATED-binary re-creation next to stale swap markers: vacuum never mixes the stale promote into the fresh item") {
     ObjStoreFs.reset()
     val dir = objDir()
-    val s = open(dir)
-    s.write("MSFT", bars(100))
+    val s = piled(dir)
+    val live = new HPath(LiveDir.hpath(s, "MSFT"), Jan)
     // crash mid-promote: swap+mid markers pend, tmp staged, live partial
     ObjStoreFs.crash = Some(ObjStoreFs.Crash(".tmp-", "copy", 1))
-    intercept[ObjStoreFs.InjectedCrash](s.compact("MSFT"))
-    // simulate a writer from a binary WITHOUT the write-refusal gate
-    // re-creating the item from source while the markers still pend:
+    intercept[ObjStoreFs.InjectedCrash](compactJan(s))
+    // simulate a writer from a binary WITHOUT the mutation gate
+    // re-creating the bucket from source while the markers still pend:
     // delete live, write a fresh incarnation straight through Spark
     val (fs, base) = hfs(dir)
-    val live = new HPath(new HPath(base, "items"), "MSFT")
     fs.delete(live, true)
-    val fresh = bars(30, seed = 99)
-    fresh.withColumn("date", org.apache.spark.sql.functions.col("date"))
-      .write.parquet(live.toString)
+    bars(30, seed = 99).write.parquet(live.toString)
     val freshCount = 30L
     // vacuum must treat the foreign-named live dir as a re-created
     // incarnation: sweep the stale staging debris, touch nothing in live

@@ -10,9 +10,9 @@ import java.sql.Timestamp
   * (not `java.nio`), so a store base path may carry any Hadoop scheme.
   * This spec drives the full lifecycle through explicit `file:`-scheme
   * URIs — the cheapest scheme-bearing FileSystem — and then proves the
-  * staged-swap crash protocol recovers from every between-step crash
-  * point using only the on-disk marker pair (protocol documented at
-  * Store.stagedOverwrite).
+  * bucket-swap crash protocol ([[Store.compactBuckets]]' in-place
+  * rewrite) recovers from every between-step crash point using only the
+  * on-disk marker pair (protocol documented at Store.stagedSwap).
   */
 class StoreFsSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.session
@@ -87,67 +87,77 @@ class StoreFsSpec extends AnyFunSuite {
     assert(left == 100 - 60, "Jan(31) + Feb(29, leap) rows gone, Mar+ kept")
   }
 
-  /** Builds the staging state of a stagedOverwrite crashed at a chosen
-    * step: a valid 50-row tmp dir (written as a sibling item, then
-    * renamed in — same schema by construction) plus the marker(s).
+  /** A month-bucketed store holding MSFT = 60 rows (Jan 31 + Feb 29,
+    * 2020) — the crash fixtures below swap its Jan bucket.
+    */
+  def bucketed(dir: String): Store = {
+    val s = Store.open(spark, dir, bucket = Some("month"))
+    s.write("MSFT", bars(60))
+    s
+  }
+
+  /** The swapped dir: MSFT's Jan bucket inside its current version. */
+  def jan(s: Store, key: String = "MSFT"): HPath =
+    new HPath(LiveDir.hpath(s, key), "__bucket=2020-01")
+
+  /** Builds the staging state of a bucket swap crashed at a chosen
+    * step: a valid 20-row Jan tmp dir (written as a sibling item's Jan
+    * bucket, then renamed in — same file schema by construction) plus
+    * the marker(s), which record the swapped bucket path.
     */
   def stageCrash(s: Store, fs: FileSystem, base: HPath, withMid: Boolean,
       moveLiveOut: Boolean): Unit = {
     val staging = new HPath(base, ".staging")
     fs.mkdirs(staging)
-    s.write("STAGESRC", bars(50, seed = 99))
-    assert(fs.rename(new HPath(new HPath(base, "items"), "STAGESRC"),
-      new HPath(staging, "MSFT.tmp-crash1")))
-    Store.writeUTF8(fs, new HPath(staging, "MSFT.swap-crash1"), "intent")
-    if (withMid) Store.writeUTF8(fs, new HPath(staging, "MSFT.mid-crash1"), "mid")
-    if (moveLiveOut)
-      assert(fs.rename(new HPath(new HPath(base, "items"), "MSFT"),
-        new HPath(staging, "MSFT.old-crash1")))
+    s.write("STAGESRC", bars(20, seed = 99))
+    assert(fs.rename(jan(s, "STAGESRC"), new HPath(staging, "MSFT.tmp-crash1")))
+    s.drop("STAGESRC")
+    val live = jan(s)
+    Store.writeUTF8(fs, new HPath(staging, "MSFT.swap-crash1"), live.toString)
+    if (withMid) Store.writeUTF8(fs, new HPath(staging, "MSFT.mid-crash1"), live.toString)
+    if (moveLiveOut) assert(fs.rename(live, new HPath(staging, "MSFT.old-crash1")))
   }
 
   test("crash before the live dir moved (swap marker only): vacuum rolls BACK") {
     val dir = fsDir()
     val (fs, base) = hfs(dir)
-    val s = Store.open(spark, dir)
-    s.write("MSFT", bars(100))
+    val s = bucketed(dir)
     stageCrash(s, fs, base, withMid = false, moveLiveOut = false)
     s.vacuum(0L)
     // live item untouched, staged tmp + marker gone
-    assert(s("MSFT").count() == 100)
+    assert(s("MSFT").count() == 60)
     assert(fs.listStatus(new HPath(base, ".staging")).isEmpty)
   }
 
   test("crash after the live dir moved out (swap+mid markers): vacuum rolls FORWARD") {
     val dir = fsDir()
     val (fs, base) = hfs(dir)
-    val s = Store.open(spark, dir)
-    s.write("MSFT", bars(100))
+    val s = bucketed(dir)
+    val live = jan(s)
     stageCrash(s, fs, base, withMid = true, moveLiveOut = true)
     // a partial promote may also have left a half-copied live dir — the
     // recovery must replace it with the complete staged tmp
-    val live = new HPath(new HPath(base, "items"), "MSFT")
     fs.mkdirs(live)
     Store.writeUTF8(fs, new HPath(live, "partial.parquet.junk"), "partial")
     s.vacuum(0L)
-    assert(s("MSFT").count() == 50, "staged 50-row version promoted to live")
+    assert(s("MSFT").count() == 29 + 20, "staged 20-row Jan promoted to live")
     assert(fs.listStatus(new HPath(base, ".staging")).isEmpty)
   }
 
   test("crash after promote but before cleanup (trash+markers left): vacuum finishes") {
     val dir = fsDir()
     val (fs, base) = hfs(dir)
-    val s = Store.open(spark, dir)
-    s.write("MSFT", bars(50, seed = 99)) // the "new" version already live
+    val s = bucketed(dir) // the "new" Jan bucket already live
     val staging = new HPath(base, ".staging")
     fs.mkdirs(staging)
-    // old version sits in trash; tmp already promoted (absent)
-    s.write("OLDSRC", bars(100))
-    assert(fs.rename(new HPath(new HPath(base, "items"), "OLDSRC"),
-      new HPath(staging, "MSFT.old-crash1")))
-    Store.writeUTF8(fs, new HPath(staging, "MSFT.swap-crash1"), "intent")
-    Store.writeUTF8(fs, new HPath(staging, "MSFT.mid-crash1"), "mid")
+    // old Jan bucket sits in trash; tmp already promoted (absent)
+    s.write("OLDSRC", bars(31, seed = 5))
+    assert(fs.rename(jan(s, "OLDSRC"), new HPath(staging, "MSFT.old-crash1")))
+    s.drop("OLDSRC")
+    Store.writeUTF8(fs, new HPath(staging, "MSFT.swap-crash1"), jan(s).toString)
+    Store.writeUTF8(fs, new HPath(staging, "MSFT.mid-crash1"), jan(s).toString)
     s.vacuum(0L)
-    assert(s("MSFT").count() == 50, "promoted version stays live")
+    assert(s("MSFT").count() == 60, "promoted bucket stays live")
     assert(fs.listStatus(staging).isEmpty)
   }
 
@@ -155,18 +165,17 @@ class StoreFsSpec extends AnyFunSuite {
     // The one crash window where the ORIGINAL manifest-less protocol
     // lost data even on rename-atomic filesystems: rename(live->trash)
     // completed but the mid marker was never written, so roll-back
-    // used to sweep the trash — and with it the only copy of the item.
+    // used to sweep the trash — and with it the only copy of the data.
     // The swap marker's manifest now says live (absent = strict subset)
     // is damaged and trash is the complete side: restore, then sweep.
     val dir = fsDir()
     val (fs, base) = hfs(dir)
-    val s = Store.open(spark, dir)
-    s.write("MSFT", bars(100))
+    val s = bucketed(dir)
     val before = s("MSFT").collect().map(_.toSeq).toSet
-    val live = new HPath(new HPath(base, "items"), "MSFT")
+    val live = jan(s)
     val staging = new HPath(base, ".staging")
     fs.mkdirs(staging)
-    // manifest exactly as stagedOverwriteFlat renders it
+    // manifest exactly as stagedSwap renders it
     val files = {
       val it = fs.listFiles(live, true)
       val b = Seq.newBuilder[(String, Long)]
@@ -186,36 +195,35 @@ class StoreFsSpec extends AnyFunSuite {
     assert(!fs.exists(live))
     s.vacuum(0L)
     assert(s("MSFT").collect().map(_.toSeq).toSet == before,
-      "item restored from the trash copy instead of being swept with it")
+      "bucket restored from the trash copy instead of being swept with it")
     assert(fs.listStatus(staging).isEmpty)
   }
 
   test("LEGACY manifest-less marker, live absent: trash is renamed back, not swept") {
-    // same crash window as above but the marker came from a release
-    // that wrote no manifest — recovery can't verify per file, so the
-    // faithful move is the whole-dir rename of trash back to live
+    // same crash window as above but the marker carries no manifest
+    // (the format older releases wrote) — recovery can't verify per
+    // file, so the faithful move is the whole-dir rename of trash back
+    // to live
     val dir = fsDir()
     val (fs, base) = hfs(dir)
-    val s = Store.open(spark, dir)
-    s.write("MSFT", bars(100))
+    val s = bucketed(dir)
     val before = s("MSFT").collect().map(_.toSeq).toSet
-    val live = new HPath(new HPath(base, "items"), "MSFT")
+    val live = jan(s)
     val staging = new HPath(base, ".staging")
     fs.mkdirs(staging)
     Store.writeUTF8(fs, new HPath(staging, "MSFT.tmp-crash1/junk"), "staged")
-    Store.writeUTF8(fs, new HPath(staging, "MSFT.swap-crash1"), "intent")
+    Store.writeUTF8(fs, new HPath(staging, "MSFT.swap-crash1"), live.toString)
     assert(fs.rename(live, new HPath(staging, "MSFT.old-crash1")))
     s.vacuum(0L)
     assert(s("MSFT").collect().map(_.toSeq).toSet == before,
-      "legacy marker: item renamed back from trash")
+      "legacy marker: bucket renamed back from trash")
     assert(fs.listStatus(staging).isEmpty)
   }
 
   test("age guard: a younger-than-cutoff swap marker is NOT recovered") {
     val dir = fsDir()
     val (fs, base) = hfs(dir)
-    val s = Store.open(spark, dir)
-    s.write("MSFT", bars(100))
+    val s = bucketed(dir)
     stageCrash(s, fs, base, withMid = false, moveLiveOut = false)
     // default 1 h window: the just-created marker/tmp are in-flight
     assert(s.vacuum() == 0L)
@@ -231,7 +239,7 @@ class StoreFsSpec extends AnyFunSuite {
     // there — but the fs.listFiles branch (object-store shape: one flat
     // recursive LIST) surfaces EVERY file including `_temporary/**`
     // task payloads, which the r16 ADVICE found still inflating a
-    // version's files/bytes. Route a versioned store through AtomicFs
+    // version's files/bytes. Route a store through AtomicFs
     // (RawLocalFileSystem under a non-file scheme) so walkFiles takes
     // the listFiles branch, then pin the same invariant StoreSpec pins
     // on file://.
@@ -239,7 +247,7 @@ class StoreFsSpec extends AnyFunSuite {
     conf.set("fs.atomicfs.impl", classOf[AtomicFs].getName)
     val local = java.nio.file.Files.createTempDirectory("graft-fs-atomic")
     val dir = "atomicfs://" + local.toString
-    val s = Store.open(spark, dir, versioned = true)
+    val s = Store.open(spark, dir)
     s.write("MSFT", bars(10))
     val cur = s.versionsOf("MSFT").find(_.current).get
     val vDir = local.resolve("items").resolve("MSFT").resolve(cur.id)

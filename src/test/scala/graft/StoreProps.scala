@@ -118,9 +118,10 @@ object StoreProps extends Properties("Store") {
 
   /** The same torture through RAW-OBJECT-STORE rename semantics
     * ([[ObjStoreFs]]: every directory rename is a per-object
-    * copy+delete): the staged swaps and the force-vacuum's marker
-    * recovery must hold up when the swap's two moves are long,
-    * non-atomic multi-file windows rather than instants.
+    * copy+delete): the appends' committer moves are long, non-atomic
+    * multi-file windows rather than instants, racing pointer swaps and
+    * vacuum's orphan sweep and torn-pointer repair (which must never
+    * mis-read a swap mid-commit: it re-lists and honors in-flight ids).
     */
   property("concurrent maintenance over copy+delete renames (objstore://): no lost rows") =
     forAll(Gen.choose(1L, 999L)) { seed =>
@@ -128,16 +129,6 @@ object StoreProps extends Properties("Store") {
         .set("fs.objstore.impl", classOf[ObjStoreFs].getName)
       val dir = "objstore://" + Files.createTempDirectory("graft-prop-obj").toString
       concurrentTorture(Store.open(spark, dir), seed)
-    }
-
-  /** And on the VERSIONED layout: pointer-swap commits + vacuum's
-    * orphan sweep and torn-pointer repair must never mis-read a swap
-    * mid-commit (the repair path re-lists and honors in-flight ids).
-    */
-  property("concurrent maintenance on the versioned layout: no lost rows, pointer stays valid") =
-    forAll(Gen.choose(1L, 999L)) { seed =>
-      val dir = Files.createTempDirectory("graft-prop-v").toString
-      concurrentTorture(Store.open(spark, dir, versioned = true), seed)
     }
 
   /** Bucket-granular compaction under the same torture: per-bucket
@@ -200,14 +191,17 @@ object StoreProps extends Properties("Store") {
   // seeded generator drives a random sequence of lifecycle ops
   // (write / append / appendNewOnly / compact / compactIfNeeded /
   // compactBuckets / prune / drop / vacuum, plus deliberate
-  // invalid-op probes) over the objstore:// copy+delete rename
-  // semantics, arming a random ObjStoreFs crash point before each
-  // renaming op with p≈1/2. A crashed op is recovered exactly the way
-  // the docs prescribe (vacuum(0) then retry once) and the run then
-  // continues. Invariants, checked against a sequentially-replayed
-  // local model: no row lost, no duplicate incarnation (footer row
-  // count == model size catches old+new mixes value-set equality
-  // would miss), refusals only where documented, vacuum converges to
+  // invalid-op probes, plus the CTAS staging triple
+  // writeStagedVersion / commit / abort on fresh item names) over the
+  // objstore:// copy+delete rename semantics, arming a random
+  // ObjStoreFs crash point before each maintenance op with p≈3/4 (only
+  // the bucket ops rename, so only they can fire). A crashed op is
+  // recovered exactly the way the docs prescribe (vacuum(0) then retry
+  // once) and the run then continues. Invariants, checked against a
+  // sequentially-replayed local model: no row lost, no duplicate
+  // incarnation (footer row count == model size catches old+new mixes
+  // value-set equality would miss), refusals only where documented, an
+  // uncommitted or aborted CTAS never visible, vacuum converges to
   // zero, staging drains.
   // ------------------------------------------------------------------
 
@@ -257,12 +251,14 @@ object StoreProps extends Properties("Store") {
     // exactly a date >= cutoff filter)
     val model = scala.collection.mutable.Set.empty[BarRow]
     var exists = false
+    // committed CTAS items, each written once and never touched again
+    val ctas = scala.collection.mutable.Map.empty[String, Set[BarRow]]
     var fired = 0
     val log = new scala.collection.mutable.ArrayBuffer[String]
 
     def maybeArm(): Unit = if (rnd.nextInt(4) > 0) { // p=3/4
-      // rename SOURCES only: items/K covers move-outs (incl. bucket
-      // dirs, whose path contains items/K), .tmp- covers promotes;
+      // rename SOURCES only: items/K covers bucket move-outs
+      // (compactBuckets, prune), .tmp- covers promotes;
       // afterFiles weighted low — most renamed dirs hold 1-3 files
       val target = Seq("items/K", "items/K", ".tmp-")(rnd.nextInt(3))
       val phase = if (rnd.nextBoolean()) "copy" else "delete"
@@ -300,7 +296,25 @@ object StoreProps extends Properties("Store") {
     var step = 0
     while (ok && step < nOps) {
       step += 1
-      if (!exists) {
+      if (rnd.nextInt(6) == 0) {
+        // CTAS on a fresh name: the staged version must stay invisible
+        // until commit; an aborted one must vanish. Every third one
+        // runs a force-vacuum between stage and commit — the registered
+        // in-flight id must survive it.
+        val name = s"C${ctas.size}_$step"
+        val b = rnd.nextInt(batches.size)
+        log += s"op ctas($name, $b)"
+        val id = s.writeStagedVersion(name, df(b))
+        if (s.exists(name)) { log += s"staged $name visible before commit"; ok = false }
+        else if (step % 3 == 0 || rnd.nextBoolean()) {
+          if (step % 3 == 0) s.vacuum(0L)
+          s.commitStagedVersion(name, id)
+          ctas(name) = batches(b).toSet
+        } else {
+          s.abortStagedVersion(name, id)
+          if (s.exists(name)) { log += s"aborted $name visible"; ok = false }
+        }
+      } else if (!exists) {
         // only creation is valid; also probe that everything else
         // refuses with the documented error
         if (rnd.nextBoolean()) {
@@ -375,15 +389,17 @@ object StoreProps extends Properties("Store") {
       if (!drained) log += "staging not drained"
       drained
     }
+    def rowsOf(key: String): Set[BarRow] =
+      s(key).collect().map(r =>
+        (r.getAs[Timestamp]("DATE"), r.getAs[Double]("OPEN"),
+          r.getAs[Double]("HIGH"), r.getAs[Double]("LOW"),
+          r.getAs[Double]("CLOSE"), r.getAs[Long]("VOLUME"))).toSet
     ok = ok && (if (!exists) {
       val gone = !s.exists("K")
       if (!gone) log += "item should not exist"
       gone
     } else {
-      val got = s("K").collect().map(r =>
-        (r.getAs[Timestamp]("DATE"), r.getAs[Double]("OPEN"),
-          r.getAs[Double]("HIGH"), r.getAs[Double]("LOW"),
-          r.getAs[Double]("CLOSE"), r.getAs[Long]("VOLUME"))).toSet
+      val got = rowsOf("K")
       val fRows = s.describe("K").rows
       val contentOk = got == model.toSet
       val countOk = fRows == model.size.toLong
@@ -393,87 +409,24 @@ object StoreProps extends Properties("Store") {
       if (!countOk) log += s"footer rows=$fRows model=${model.size} (duplicate incarnation?)"
       contentOk && countOk
     })
+    ok = ok && {
+      val items = s.listItems().toSet
+      val want = ctas.keySet.toSet ++ (if (exists) Set("K") else Set.empty)
+      val ctasOk = ctas.forall { case (k, rows) =>
+        rowsOf(k) == rows && s.describe(k).rows == rows.size.toLong }
+      if (items != want) log += s"listItems=$items want=$want"
+      if (!ctasOk) log += "a committed CTAS item lost or changed rows"
+      items == want && ctasOk
+    }
     // non-vacuity receipt: one line per sequence so a test-log reader
     // can see the searched interleavings really hit crash windows
     System.err.println(
       s"[lifecycle-fuzz] seed=$seed ops=$step crashesFired=$fired " +
-        s"endRows=${if (exists) model.size else -1} ok=$ok")
+        s"ctas=${ctas.size} endRows=${if (exists) model.size else -1} ok=$ok")
     if (!ok) log.foreach(l => System.err.println(s"[lifecycle-fuzz] $l"))
     ObjStoreFs.reset()
     ok
   }
-
-  /** The same op-sequence search on the VERSIONED layout, plus the
-    * CTAS staging triple (writeStagedVersion / commit / abort) on
-    * fresh item names: pointer swaps replace renames here, so the
-    * interesting interleavings are staged-version visibility (an
-    * uncommitted version must never become visible, an aborted one
-    * must vanish) racing vacuum's orphan sweep mid-sequence.
-    */
-  property("randomized lifecycle fuzz on the versioned layout with CTAS staging") =
-    forAll(Gen.choose(1L, 1000000L)) { seed =>
-      val rnd = new scala.util.Random(seed)
-      val dir = Files.createTempDirectory("graft-lfzv").toString
-      val s = Store.open(spark, dir, versioned = true)
-      val batches = (0 until 3).map(i => barRows(8, seed * 11 + i))
-      def df(i: Int) = batches(i)
-        .toDF("date", "open", "high", "low", "close", "volume")
-      val model = scala.collection.mutable.Map.empty[String, Set[BarRow]]
-      var ctasN = 0
-      var ok = true
-      (0 until 12).foreach { _ =>
-        if (!ok) ()
-        else rnd.nextInt(8) match {
-          case 0 | 1 =>
-            val b = rnd.nextInt(batches.size)
-            if (model.contains("K")) { s.appendNewOnly("K", df(b)); model("K") ++= batches(b).toSet }
-            else { s.write("K", df(b)); model("K") = batches(b).toSet }
-          case 2 =>
-            if (model.contains("K")) { s.drop("K"); model.remove("K") }
-          case 3 =>
-            if (model.contains("K")) s.compact("K")
-          case 4 =>
-            s.vacuum(0L)
-          case 5 | 6 =>
-            // CTAS on a fresh name: commit or abort by coin flip; the
-            // item must be invisible between stage and commit
-            val name = s"C$ctasN"; ctasN += 1
-            val b = rnd.nextInt(batches.size)
-            val id = s.writeStagedVersion(name, df(b))
-            if (s.exists(name)) { ok = false }
-            else if (rnd.nextBoolean()) {
-              s.commitStagedVersion(name, id)
-              model(name) = batches(b).toSet
-            } else {
-              s.abortStagedVersion(name, id)
-              if (s.exists(name)) ok = false
-            }
-          case 7 =>
-            // vacuum must not sweep a registered in-flight staged id —
-            // stage, vacuum, THEN commit
-            val name = s"C$ctasN"; ctasN += 1
-            val b = rnd.nextInt(batches.size)
-            val id = s.writeStagedVersion(name, df(b))
-            s.vacuum(0L)
-            s.commitStagedVersion(name, id)
-            model(name) = batches(b).toSet
-        }
-      }
-      s.vacuum(0L)
-      ok = ok && s.vacuum(0L) == 0L
-      val result = ok && model.forall { case (k, want) =>
-        val got = s(k).collect().map(r =>
-          (r.getAs[Timestamp]("DATE"), r.getAs[Double]("OPEN"),
-            r.getAs[Double]("HIGH"), r.getAs[Double]("LOW"),
-            r.getAs[Double]("CLOSE"), r.getAs[Long]("VOLUME"))).toSet
-        got == want && s.describe(k).rows == want.size.toLong
-      } && s.listItems().toSet == model.keySet
-      // non-vacuity receipt, mirroring the objstore lane's line
-      System.err.println(
-        s"[lifecycle-fuzz-versioned] seed=$seed ctas=$ctasN " +
-          s"items=${model.size} ok=$result")
-      result
-    }
 
   property("normalization is case-insensitive in column names") =
     forAll(Gen.choose(5, 15), Gen.choose(1L, 999L)) { (n, seed) =>

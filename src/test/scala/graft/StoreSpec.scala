@@ -147,9 +147,8 @@ class StoreSpec extends AnyFunSuite {
     intercept[graft.sources.SchemaError] {
       Store.open(spark, dir, bucket = Some("day"))
     }
-    // bucket layout visible on disk
-    val item = java.nio.file.Paths.get(dir, "items", "MSFT")
-    val parts = java.nio.file.Files.list(item).iterator()
+    // bucket layout visible on disk, inside the current version dir
+    val parts = java.nio.file.Files.list(LiveDir(s, dir, "MSFT")).iterator()
     var sawBucketDir = false
     while (parts.hasNext) {
       if (parts.next().getFileName.toString.startsWith("__bucket=")) sawBucketDir = true
@@ -505,8 +504,8 @@ class StoreSpec extends AnyFunSuite {
     val dir = tmpDir()
     val s = Store.open(spark, dir)
     s.write("AAA", bars(200))
-    // simulate a kill between stagedOverwrite's atomic swap and the
-    // final delete: orphaned tmp- and old- dirs (with content) linger
+    // simulate a kill between a bucket swap's promote and its final
+    // delete: orphaned tmp- and old- dirs (with content) linger
     val staging = java.nio.file.Paths.get(dir, ".staging")
     Files.createDirectories(staging)
     for (n <- Seq("AAA.tmp-dead-beef", "AAA.old-cafe-f00d")) {
@@ -566,10 +565,9 @@ class StoreSpec extends AnyFunSuite {
     s.appendNewOnly("MSFT", bars(40, seed = 9))
     s.appendNewOnly("MSFT", bars(10, startDay = "2015-06-01")) // cold bucket
     val before = s("MSFT").collect().map(_.toSeq).toSet
-    val items = java.nio.file.Paths.get(dir, "items", "MSFT")
     import scala.jdk.CollectionConverters._
     def filesIn(bucket: String): Set[String] = {
-      val d = items.resolve(s"__bucket=$bucket")
+      val d = LiveDir(s, dir, "MSFT").resolve(s"__bucket=$bucket")
       val st = java.nio.file.Files.list(d)
       try st.iterator().asScala.map(_.getFileName.toString)
         .filterNot(n => n.startsWith("_") || n.startsWith(".")).toSet
@@ -597,9 +595,9 @@ class StoreSpec extends AnyFunSuite {
     assert(filesIn("2015-01").size == janPiled, "pre-cutoff bucket untouched")
     assert(s.compactBuckets("MSFT", maxFilesPerBucket = 2) >= 1L)
     // non-bucketed stores have no sub-item rewrite unit
-    val flat = Store.open(spark, tmpDir())
-    flat.write("MSFT", bars(10))
-    intercept[SchemaError] { flat.compactBuckets("MSFT") }
+    val unbucketed = Store.open(spark, tmpDir())
+    unbucketed.write("MSFT", bars(10))
+    intercept[SchemaError] { unbucketed.compactBuckets("MSFT") }
   }
 
   test("pending recovery markers gate every mutation; drop retires them; markerless orphans do not block") {
@@ -612,7 +610,7 @@ class StoreSpec extends AnyFunSuite {
     val staging = new HPath(dir, ".staging")
     fs.mkdirs(staging)
     // a crashed writer's swap marker (the exact state an interrupted
-    // stagedSwapFlat leaves): every mutation path must refuse with the
+    // stagedSwap leaves): every mutation path must refuse with the
     // distinct PendingRecoveryError naming the remedy
     Store.writeUTF8(fs, new HPath(staging, "MSFT.swap-dead"), s"$dir/items/MSFT")
     val e = intercept[PendingRecoveryError] { s.append("MSFT", bars(10)) }
@@ -651,8 +649,8 @@ class StoreSpec extends AnyFunSuite {
     val dir = tmpDir()
     val s = Store.open(spark, dir)
     s.write("MSFT", bars(100))
-    // a batch that fails at ACTION time (inside stagedSwapFlat's
-    // writeTmp), like an executor OOM or a flaky object store would:
+    // a batch that fails at ACTION time (inside the swap's version
+    // write), like an executor OOM or a flaky object store would:
     // assert_true throws mid-job, after the swap marker may exist
     val poison = bars(50, seed = 99)
       .withColumn("open", expr("assert_true(open > 1e18)").cast("double"))
@@ -680,12 +678,16 @@ class StoreSpec extends AnyFunSuite {
     // version's files/bytes. Pin that observable here; the race itself
     // is covered by the widened StoreProps torture sweep.
     val dir = tmpDir()
-    val s = Store.open(spark, dir, versioned = true)
+    val s = Store.open(spark, dir)
     s.write("MSFT", bars(10))
     val cur = s.versionsOf("MSFT").find(_.current).get
-    val vDir = java.nio.file.Paths.get(dir, "items", "MSFT", cur.id)
+    val vDir = LiveDir(s, dir, "MSFT")
     val tmpTask = vDir.resolve("_temporary").resolve("0").resolve("task-0")
+    // a `.`-prefixed segment is hidden even when it contains '=' (Spark's
+    // rule: only `_`-prefixed partition segments are exempt)
+    val dotPart = vDir.resolve(".x=1")
     java.nio.file.Files.createDirectories(tmpTask)
+    java.nio.file.Files.createDirectories(dotPart)
     import scala.jdk.CollectionConverters._
     val walk = java.nio.file.Files.walk(vDir)
     val firstParquet =
@@ -693,6 +695,8 @@ class StoreSpec extends AnyFunSuite {
       finally walk.close()
     java.nio.file.Files.copy(
       firstParquet, tmpTask.resolve("part-00000-inflight.snappy.parquet"))
+    java.nio.file.Files.copy(
+      firstParquet, dotPart.resolve("part-00000-hidden.snappy.parquet"))
     val after = s.versionsOf("MSFT").find(_.current).get
     assert(after.files == cur.files,
       s"in-flight _temporary payload leaked into version file count: $cur -> $after")
@@ -700,24 +704,8 @@ class StoreSpec extends AnyFunSuite {
       s"in-flight _temporary payload leaked into version bytes: $cur -> $after")
     assert(s.describe("MSFT").rows == 10)
     assert(s("MSFT").count() == 10, "scan must exclude the hidden subtree")
-  }
-
-  test("vacuum job 4 on the flat layout: dead committer staging inside the item dir is swept") {
-    // flat-layout twin of StoreVersionedSpec's job-4 test: the in-place
-    // append's committer staging lands directly under items/KEY here
-    val dir = tmpDir()
-    val s = Store.open(spark, dir)
-    s.write("IBM", bars(20))
-    val before = s("IBM").collect().map(_.toSeq).toSet
-    val itemDir = java.nio.file.Paths.get(dir, "items", "IBM")
-    val staging = itemDir.resolve(".spark-staging-dead-uuid")
-    java.nio.file.Files.createDirectories(staging)
-    java.nio.file.Files.write(staging.resolve("part-00000-dead.snappy.parquet"),
-      Array[Byte](9, 9, 9))
-    assert(s.vacuum() == 0L, "fresh debris survives the aged sweep")
-    assert(s.vacuum(0L) == 1L, "force sweep reclaims the dead staging dir")
-    assert(!java.nio.file.Files.exists(staging))
-    assert(s("IBM").collect().map(_.toSeq).toSet == before, "data untouched")
-    assert(s.vacuum(0L) == 0L, "sweep converges")
+    // the DSv2 footer-answered count lists through dataFiles
+    assert(spark.read.format("graft").option("item", "MSFT").load(dir).count() == 10,
+      "dataFiles must exclude the hidden subtrees")
   }
 }

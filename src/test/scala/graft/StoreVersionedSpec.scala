@@ -6,16 +6,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import java.sql.Timestamp
 
-/** The opt-in versioned item layout (`Store.open(..., versioned = true)`)
-  * — the object-store-native commit path: immutable `v-<id>` data dirs,
-  * one `_current` pointer object per item, rewrites committed by a
-  * single pointer PUT with NO directory rename anywhere on the write
-  * path. This spec proves layout persistence, full lifecycle parity
-  * with the flat layout, the pointer-swap commit (old version gone, new
-  * pointer target, readers never see an intermediate state), crash
-  * debris collection, and that appendNewOnly still lands incremental
-  * files inside the current version (cheap appends survive the layout
-  * change).
+/** The store's item layout — the object-store-native commit path:
+  * immutable `v-<id>` data dirs, one `_current` pointer object per item,
+  * rewrites committed by a single pointer PUT with NO directory rename
+  * anywhere on the item-level write path. This spec proves the refusal
+  * of retired flat-layout directories, the full lifecycle, the
+  * pointer-swap commit (old version gone, new pointer target, readers
+  * never see an intermediate state), crash debris collection, and that
+  * appendNewOnly lands incremental files inside the current version
+  * (cheap appends).
   */
 class StoreVersionedSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.session
@@ -45,19 +44,26 @@ class StoreVersionedSpec extends AnyFunSuite {
     fs.listStatus(new HPath(new HPath(base, "items"), key))
       .map(_.getPath.getName).filter(_.startsWith("v-")).toSeq
 
-  test("layout is persisted: reopen adopts versioned, flat store refuses versioned reopen") {
+  test("a flat-layout directory (no versioned marker) is refused by open and attach") {
+    // the retired flat layout: schema.json plus parquet files directly
+    // under items/K, no `versioned` marker and no `_current` pointer.
+    // Built by hand — nothing in this codebase writes it any more.
     val dir = freshDir()
-    Store.open(spark, dir, versioned = true)
-    assert(Store.open(spark, dir).versioned, "reopen must adopt the persisted layout")
-    val flat = freshDir()
-    Store.open(spark, flat)
-    intercept[SchemaError] { Store.open(spark, flat, versioned = true) }
+    val (fs, base) = hfs(dir)
+    val schema = Store.open(spark, freshDir()).schema
+    Store.writeUTF8(fs, new HPath(base, "schema.json"), schema.json)
+    bars(10).toDF(schema.fieldNames.toIndexedSeq: _*).write
+      .parquet(new HPath(new HPath(base, "items"), "K").toString)
+    for (e <- Seq(
+        intercept[SchemaError](Store.open(spark, dir)),
+        intercept[SchemaError](Store.attach(spark, dir))))
+      assert(e.getMessage.contains("flat"), s"layout not named: ${e.getMessage}")
   }
 
   test("lifecycle parity: write/read/append/appendNewOnly/query/describe/listItems/drop") {
     val dir = freshDir()
     val (fs, base) = hfs(dir)
-    val s = Store.open(spark, dir, versioned = true)
+    val s = Store.open(spark, dir)
     s.write("MSFT", bars(100))
     assert(s("MSFT").count() == 100)
     assert(s.exists("msft") && s.listItems() == Seq("MSFT"))
@@ -84,7 +90,7 @@ class StoreVersionedSpec extends AnyFunSuite {
   test("rewrites commit by pointer swap: new version live, superseded version deleted") {
     val dir = freshDir()
     val (fs, base) = hfs(dir)
-    val s = Store.open(spark, dir, versioned = true)
+    val s = Store.open(spark, dir)
     s.write("MSFT", bars(100))
     val v0 = versionDirs(fs, base, "MSFT")
     assert(v0.size == 1)
@@ -103,7 +109,7 @@ class StoreVersionedSpec extends AnyFunSuite {
   test("crash debris: an orphan version (no pointer to it) is invisible and vacuum-swept") {
     val dir = freshDir()
     val (fs, base) = hfs(dir)
-    val s = Store.open(spark, dir, versioned = true)
+    val s = Store.open(spark, dir)
     s.write("MSFT", bars(100))
     // simulate a versionSwap that died before its pointer write: a
     // complete version dir the pointer never named
@@ -129,7 +135,7 @@ class StoreVersionedSpec extends AnyFunSuite {
   test("torn pointer: reads fail actionably, vacuum repairs to the newest complete version — never sweeps the data") {
     val dir = freshDir()
     val (fs, base) = hfs(dir)
-    val s = Store.open(spark, dir, versioned = true)
+    val s = Store.open(spark, dir)
     s.write("MSFT", bars(100))
     val ptr = new HPath(new HPath(new HPath(base, "items"), "MSFT"), "_current")
     // a crash between the pointer file's create and its write (create
@@ -150,7 +156,7 @@ class StoreVersionedSpec extends AnyFunSuite {
   test("dangling pointer (names a vanished dir): vacuum repairs to the surviving complete version") {
     val dir = freshDir()
     val (fs, base) = hfs(dir)
-    val s = Store.open(spark, dir, versioned = true)
+    val s = Store.open(spark, dir)
     s.write("MSFT", bars(100))
     val item = new HPath(new HPath(base, "items"), "MSFT")
     val ptr = new HPath(item, "_current")
@@ -162,7 +168,7 @@ class StoreVersionedSpec extends AnyFunSuite {
 
   test("streaming on the versioned layout: ingestStream auto-creates + lands idempotently, readStream tails the current version") {
     val dir = freshDir()
-    val s = Store.open(spark, dir, versioned = true)
+    val s = Store.open(spark, dir)
     val work = java.nio.file.Files.createTempDirectory("graft-vstream").toString
     val data = bars(60)
     data.coalesce(1).write.parquet(s"$work/in/b0")
@@ -187,7 +193,7 @@ class StoreVersionedSpec extends AnyFunSuite {
 
   test("bucketed versioned store: partition pruning and prune() still work") {
     val dir = freshDir()
-    val s = Store.open(spark, dir, bucket = Some("month"), versioned = true)
+    val s = Store.open(spark, dir, bucket = Some("month"))
     s.write("EVT", bars(100))
     // directory pruning reaches the scan through the version dir
     val q = s.query("EVT",
@@ -203,7 +209,7 @@ class StoreVersionedSpec extends AnyFunSuite {
 
   test("bucketed versioned store: compactBuckets rewrites in place inside the current version") {
     val dir = freshDir()
-    val s = Store.open(spark, dir, bucket = Some("month"), versioned = true)
+    val s = Store.open(spark, dir, bucket = Some("month"))
     s.write("EVT", bars(60)) // Jan-Feb 2022
     s.appendNewOnly("EVT", bars(60, seed = 31))
     s.appendNewOnly("EVT", bars(60, seed = 32))
@@ -212,8 +218,7 @@ class StoreVersionedSpec extends AnyFunSuite {
     val vsBefore = versionDirs(fs, base, "EVT")
     assert(vsBefore.size == 1)
     def janFiles(): Int = {
-      val jan = new HPath(new HPath(new HPath(
-        new HPath(base, "items"), "EVT"), vsBefore.head), "__bucket=2022-01")
+      val jan = new HPath(LiveDir.hpath(s, "EVT"), "__bucket=2022-01")
       fs.listStatus(jan).count { st =>
         val n = st.getPath.getName
         !n.startsWith("_") && !n.startsWith(".")
@@ -239,11 +244,10 @@ class StoreVersionedSpec extends AnyFunSuite {
     // dies exactly at the committer's staging cleanup.
     val dir = freshDir()
     val (fs, base) = hfs(dir)
-    val s = Store.open(spark, dir, versioned = true)
+    val s = Store.open(spark, dir)
     s.write("MSFT", bars(50))
     val before = s("MSFT").collect().map(_.toSeq).toSet
-    val cur = s.versionsOf("MSFT").find(_.current).get.id
-    val vDir = java.nio.file.Paths.get(dir, "items", "MSFT", cur)
+    val vDir = LiveDir(s, dir, "MSFT")
     val staging = vDir.resolve(".spark-staging-dead-job-uuid").resolve("DATE_BUCKET=2022-01")
     val temporary = vDir.resolve("_temporary").resolve("0").resolve("task-3")
     java.nio.file.Files.createDirectories(staging)

@@ -152,14 +152,14 @@ class TwoProcessSpec extends AnyFunSuite {
   }
 
   test("a versioned commit halted AT the pointer create in another process: parent reads the OLD version exactly and sweeps the orphan") {
-    // the versioned layout's whole claim is that the commit is ONE
+    // the item layout's whole claim is that the commit is ONE
     // single-object pointer write — so the worst crash a foreign
     // process can inflict is dying with a fully-materialized new
     // version dir and the pointer untouched. Child halt(43)s the
     // instant the `_current` create begins.
     val dir = "objstore://" +
       java.nio.file.Files.createTempDirectory("graft-2proc-vers").toString
-    val s = Store.open(spark, dir, chunkRows = 50, versioned = true)
+    val s = Store.open(spark, dir, chunkRows = 50)
     s.write("MSFT", bars(120))
     val before = s("MSFT").collect().map(_.toSeq).toSet
     assert(before.size == 120)
@@ -200,7 +200,7 @@ class TwoProcessSpec extends AnyFunSuite {
     // re-CTAS of the same name must succeed cleanly.
     val dir = "objstore://" +
       java.nio.file.Files.createTempDirectory("graft-2proc-ctas").toString
-    val s = Store.open(spark, dir, chunkRows = 50, versioned = true)
+    val s = Store.open(spark, dir, chunkRows = 50)
     s.write("SRC", bars(100))
 
     val (proc, log) = forkChild(Seq("ctascrash", dir, "CTASX"), Seq.empty)
@@ -236,17 +236,18 @@ class TwoProcessSpec extends AnyFunSuite {
   test("a swap killed MID-RENAME in another process (halt, objstore semantics) is vacuumed exactly here") {
     val dir = "objstore://" +
       java.nio.file.Files.createTempDirectory("graft-2proc-swap").toString
-    // small chunkRows => several data files in the live dir, so the
-    // child's injected delete-phase crash (after 2 files: _SUCCESS +
-    // one data file) leaves the live dir genuinely MISSING data whose
-    // only complete copy sits in trash — the state per-file restore
-    // exists for
-    val s = Store.open(spark, dir, chunkRows = 50)
-    s.write("MSFT", bars(120))
+    // a piled January bucket (write + append => several data files), so
+    // the child's compactBuckets swaps it by rename and the injected
+    // delete-phase crash (after one data file) leaves the live bucket
+    // genuinely MISSING data whose only complete copy sits in trash —
+    // the state per-file restore exists for
+    val s = Store.open(spark, dir, bucket = Some("month"))
+    s.write("MSFT", bars(31))
+    s.appendNewOnly("MSFT", bars(31, seed = 32))
     val before = s("MSFT").collect().map(_.toSeq).toSet
-    assert(before.size == 120)
+    assert(before.size == 62)
 
-    val (proc, log) = forkChild(Seq("swapcrash", dir, "MSFT"), Seq.empty)
+    val (proc, log) = forkChild(Seq("swapcrash", dir, "MSFT", "2021-01"), Seq.empty)
     assert(proc.waitFor(180, java.util.concurrent.TimeUnit.SECONDS),
       s"child did not finish; log:\n${tail(log)}")
     assert(proc.exitValue() == 42,
@@ -260,8 +261,8 @@ class TwoProcessSpec extends AnyFunSuite {
     val after = s("MSFT").collect().map(_.toSeq).toSet
     assert(after == before, "rows must survive a mid-rename process death exactly")
     // the item is writable again, and no recovery debris remains
-    s.appendNewOnly("MSFT", bars(130))
-    assert(s("MSFT").count() == 130)
+    s.appendNewOnly("MSFT", bars(130)) // extends the seed-31 prefix
+    assert(s("MSFT").count() == 130 + 31)
     val (fs, base) = hfs(dir)
     val staging = new HPath(base, ".staging")
     val leftovers =
@@ -274,7 +275,7 @@ class TwoProcessSpec extends AnyFunSuite {
     // Composition of StoreProps' randomized lifecycle fuzz with this
     // spec's real-process-death machinery (r16 verdict task #7): a
     // forked JVM drives a SEEDED random op sequence (appendNewOnly /
-    // append / compact / vacuum) over a shared versioned objstore://,
+    // append / compact / vacuum) over a shared objstore:// store,
     // arming halt=true crash points inside rename copy/delete phases,
     // at the `_current` pointer create, and at version-dir deletes
     // (mid-sweep, after 0-1 matches pass) — so the writer dies at
@@ -308,7 +309,7 @@ class TwoProcessSpec extends AnyFunSuite {
       val seed = baseSeed + idx
       val dir = "objstore://" +
         java.nio.file.Files.createTempDirectory("graft-2proc-fuzz").toString
-      val s = Store.open(spark, dir, versioned = true)
+      val s = Store.open(spark, dir)
       s.write("K", TwoProcFixtures.batch(spark, 0, 0))
       val (proc, log) = forkChild(Seq("fuzzlife", dir, seed.toString, "7"), Seq.empty)
       var probes = 0
