@@ -272,6 +272,13 @@ object Store {
     } finally r.close()
   }
 
+  /** [[fileFooterAgg]], or None when `f` vanished since it was listed. */
+  private[sources] def footerIfPresent(
+      conf: org.apache.hadoop.conf.Configuration, f: String,
+      cols: Seq[String], mmCols: Set[String]): Option[FileFooterStats] =
+    try Some(fileFooterAgg(conf, f, cols, mmCols))
+    catch { case _: java.io.FileNotFoundException => None }
+
   /** Epoch-µs → Timestamp, floor semantics for negative values. */
   private[sources] def microsToTimestamp(us: Long): Timestamp = {
     val t = new Timestamp(Math.floorDiv(us, 1000000L) * 1000L)
@@ -745,7 +752,7 @@ object Store {
   * row-group min/max stats are selective (the reference's 1M-row sorted
   * chunks, store.py:27,174); range queries push `>=`/`<=` filters into the
   * Parquet scan (store.py:255-264 equivalent comes free from Catalyst);
-  * appends have an O(new) anti-join path instead of the reference's
+  * appends have an O(new)-write path instead of the reference's
   * O(history) rewrite (store.py:225-236). The control plane runs on
   * `org.apache.hadoop.fs.FileSystem`, so base paths may be `file:`,
   * `hdfs:`, `s3a:`, … — wherever the data plane can read, the
@@ -1424,6 +1431,16 @@ class Store private[sources] (
   private def hiddenBelow(root: HPath, f: HPath): Boolean =
     f.toUri.getPath.stripPrefix(root.toUri.getPath).split('/').exists(hiddenName)
 
+  /** The `.parquet` files under `root` outside hidden segments: an
+    * in-flight committer's `_temporary` task payload is not
+    * data, and neither is a non-parquet file. The root may vanish (it
+    * comes from a point-in-time listing): then it holds nothing.
+    */
+  private def parquetUnder(root: HPath): Seq[org.apache.hadoop.fs.FileStatus] =
+    walkFiles(root, rootMustExist = false).filter(st =>
+      st.isFile && st.getPath.getName.endsWith(".parquet") &&
+        !hiddenBelow(root, st.getPath))
+
   /** The item's `_current` pointer object. */
   private def ptrPath(key: String): HPath =
     new HPath(new HPath(itemsRoot, validateKey(key)), Store.CurrentPtr)
@@ -1470,20 +1487,6 @@ class Store private[sources] (
       .filter(p => fs.exists(new HPath(p, Store.CurrentPtr)))
       .map(_.getName).toVector.sorted
 
-  /** Metadata-only item statistics: row count, index min/max, file
-    * count and byte size — read from Parquet FOOTERS (row-group counts
-    * + column min/max statistics), never the data pages. On a 100 TB
-    * item this is O(files) footer reads instead of a full scan, and the
-    * footer reads themselves run ON EXECUTORS (parallelize over the
-    * file list), so the driver handles only the file listing (one
-    * recursive `listFiles` call — a flat paged LIST on object stores,
-    * not a directory walk) and the final tiny reduce. The index column
-    * is written as INT64 TIMESTAMP(micros) ([[writer]] sets no INT96
-    * legacy mode), so footer min/max are epoch-µs longs.
-    *
-    * Returns (rows, minIndex, maxIndex, nFiles, bytes); min/max are
-    * None for an empty item (or if a writer produced no stats).
-    */
   /** The PRESENT versions of an item — the current one, plus
     * any orphans a crashed swap left behind (a completed swap deletes
     * its predecessor right after the pointer commit, so extras exist
@@ -1502,16 +1505,9 @@ class Store private[sources] (
     fs.listStatus(itemDir).toIndexedSeq
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("v-"))
       .map { st =>
-        // same segment-wise hidden filter as describe/dataFiles — a
-        // name-only .parquet filter would count an in-flight
-        // committer's `_temporary/**/part-*.parquet` payload into the
-        // version's files/bytes on the fs.listFiles branch, where the
-        // walk cannot skip hidden DIRS up front (r16 ADVICE). The
-        // version dir itself comes from a point-in-time listing a
-        // concurrent vacuum can invalidate → rootMustExist = false.
-        val files = walkFiles(st.getPath, rootMustExist = false)
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet") &&
-            !hiddenBelow(st.getPath, f.getPath))
+        // the version dir comes from a point-in-time listing a
+        // concurrent vacuum can invalidate: parquetUnder's root is tolerant
+        val files = parquetUnder(st.getPath)
         Store.ItemVersion(
           id = st.getPath.getName,
           current = st.getPath.getName == cur,
@@ -1522,28 +1518,48 @@ class Store private[sources] (
       .sortBy(v => (!v.current, -v.modifiedMs))
   }
 
+  /** Metadata-only item statistics: row count, index min/max, file
+    * count and byte size — read from Parquet FOOTERS (row-group counts
+    * + column min/max statistics), never the data pages. On a 100 TB
+    * item this is O(files) footer reads instead of a full scan, through
+    * the one footer sweep ([[sweepFooters]]: driver threads for small
+    * file sets, executors past that) after one listing. The index column
+    * is written as INT64 TIMESTAMP(micros) ([[writer]] sets no INT96
+    * legacy mode), so footer min/max are epoch-µs longs, merged over the
+    * row groups that carry stats.
+    *
+    * Rows are exact; min/max are None for an empty item (or if a writer
+    * produced no stats).
+    */
   def describe(key: String): Store.ItemStats = {
+    val files = parquetFiles(key)
+    val idx = indexName
+    // a file a concurrent compact swapped out since the listing
+    // contributes nothing: describe is a point-in-time snapshot
+    val (perFile, _) = sweepFooters(files.map(_._1), Seq(idx), Set(idx))
+    val ranges = perFile.flatMap(_.minMaxByCol.get(idx))
+    Store.ItemStats(
+      rows = perFile.map(_.rows).sum,
+      minIndex = ranges.map(_._1).minOption.map(Store.microsToTimestamp),
+      maxIndex = ranges.map(_._2).maxOption.map(Store.microsToTimestamp),
+      files = files.size.toLong,
+      bytes = files.map(_._2).sum
+    )
+  }
+
+  /** (path, length) of the item's current `.parquet` data files from one
+    * listing ([[parquetUnder]]) — no per-file round-trips for sizes (on
+    * S3 a per-file getFileStatus would be a HEAD request each). The one
+    * file count [[describe]] reports and [[compactIfNeeded]] decides on.
+    */
+  private def parquetFiles(key: String): Seq[(String, Long)] = {
     val p = dataPath(key)
-    // (path, length) pairs from the single listing — no per-file driver
-    // round-trips for sizes (on S3 a per-file getFileStatus would be a
-    // HEAD request each). Paths under hidden segments (leading `_` or
-    // `.`: committer `_temporary` dirs, `_SUCCESS`-style markers) are
-    // excluded exactly as Spark's own file index excludes them — an
-    // in-flight append's uncommitted task files are not item data, and
-    // they vanish when the committer promotes them (reading their
-    // footers would race that rename).
     // the recursive iterator can throw mid-walk if a concurrent
     // committer removes its _temporary dir between the parent listing
     // and the descent — that's a stale snapshot, not an error, so
     // retake it (bounded; a persistent failure is a real one)
     def listing(): Seq[(String, Long)] =
-      // p passed dataPath (the item exists): vanish-mid-call is the
-      // snapshot race, not a missing item — tolerant root (see dataFiles)
-      walkFiles(p, rootMustExist = false).collect {
-        case st if st.isFile && st.getPath.getName.endsWith(".parquet") &&
-            !hiddenBelow(p, st.getPath) =>
-          (st.getPath.toString, st.getLen)
-      }
+      parquetUnder(p).map(st => (st.getPath.toString, st.getLen))
     // "vanished mid-walk" shows up as FileNotFoundException on most
     // FileSystems, but RawLocalFileSystem surfaces it as a
     // RuntimeException from its shelled-out permission probe (`ls`
@@ -1556,88 +1572,19 @@ class Store private[sources] (
         m.contains("No such file or directory") || m.contains("does not exist")) ||
         vanished(e.getCause)
     }
-    val files: Seq[(String, Long)] = {
-      var tries = 0
-      var out: Seq[(String, Long)] = null
-      while (out == null) {
-        try out = listing()
-        catch { case e: Exception if vanished(e) && tries < 5 => tries += 1 }
-      }
-      out
+    var tries = 0
+    var out: Seq[(String, Long)] = null
+    while (out == null) {
+      try out = listing()
+      catch { case e: Exception if vanished(e) && tries < 5 => tries += 1 }
     }
-    val bytes = files.map(_._2).sum
-    val idx = indexName
-    val paths = files.map(_._1)
-    val confEntries = hadoopConfEntries
-    val perFile = spark.sparkContext
-      .parallelize(paths, math.max(1, math.min(paths.size, spark.sparkContext.defaultParallelism)))
-      .mapPartitions { fs =>
-        import org.apache.parquet.hadoop.ParquetFileReader
-        import org.apache.parquet.io.InputFile
-        import org.apache.parquet.hadoop.util.HadoopInputFile
-        // one Configuration per partition, not per file — construction
-        // is measurable at very high file counts. Rebuilt from the
-        // DRIVER's effective entries, not `new Configuration()`: a bare
-        // one would drop every `spark.hadoop.*`-injected setting (s3a
-        // credentials, custom scheme impls) on the executor side.
-        val conf = Store.confFrom(confEntries)
-        fs.flatMap { f =>
-          // a concurrent compact can swap a listed file out between the
-          // listing and this footer read; describe is a point-in-time
-          // metadata snapshot, so a vanished file contributes nothing
-          // rather than failing the whole op
-          val r =
-            try {
-              val in: InputFile = HadoopInputFile.fromPath(
-                new org.apache.hadoop.fs.Path(f), conf
-              )
-              ParquetFileReader.open(in)
-            } catch { case _: java.io.FileNotFoundException => null }
-          if (r == null) Iterator.empty
-          else Iterator.single(try {
-            import scala.jdk.CollectionConverters._
-            val blocks = r.getFooter.getBlocks.asScala
-            var rows = 0L
-            var mn = Long.MaxValue
-            var mx = Long.MinValue
-            blocks.foreach { b =>
-              rows += b.getRowCount
-              b.getColumns.asScala
-                .find(_.getPath.toDotString.equalsIgnoreCase(idx))
-                .foreach { c =>
-                  val st: org.apache.parquet.column.statistics.Statistics[_] =
-                    c.getStatistics
-                  if (st != null && !st.isEmpty && st.hasNonNullValue) {
-                    (st.genericGetMin, st.genericGetMax) match {
-                      case (lo: java.lang.Long, hi: java.lang.Long) =>
-                        if (lo < mn) mn = lo
-                        if (hi > mx) mx = hi
-                      case _ => ()
-                    }
-                  }
-                }
-            }
-            (rows, mn, mx)
-          } finally r.close())
-        }
-      }
-      .collect() // O(files) triples — metadata, not data
-    val rows = perFile.map(_._1).sum
-    val mins = perFile.map(_._2).filter(_ != Long.MaxValue)
-    val maxs = perFile.map(_._3).filter(_ != Long.MinValue)
-    Store.ItemStats(
-      rows = rows,
-      minIndex = mins.minOption.map(Store.microsToTimestamp),
-      maxIndex = maxs.maxOption.map(Store.microsToTimestamp),
-      files = paths.size.toLong,
-      bytes = bytes
-    )
+    out
   }
 
   /** Footer aggregates for the DSv2 aggregate-pushdown path (the SQL
     * front door's `SELECT count(*) / min(idx) / max(idx) / count(col)`
-    * with no WHERE and no GROUP BY): the same executor-parallel footer
-    * sweep [[describe]] runs, but returning everything the scan builder
+    * with no WHERE and no GROUP BY): the same footer sweep
+    * [[describe]] runs, but returning everything the scan builder
     * needs to decide EXACTNESS — aggregate pushdown replaces a scan's
     * answer, so a single row-group whose statistics are absent or
     * untrustworthy must veto the pushdown, never silently skew it.
@@ -1666,7 +1613,7 @@ class Store private[sources] (
     val paths = dataFiles(key)
     val cols = schema.fieldNames.toSeq
     val mmCols: Set[String] = mmStatCols
-    val perFile = sweepFooters(paths, cols, mmCols)
+    val perFile = footersOrRefuse(paths, cols, mmCols)
     val rows = perFile.map(_.rows).sum
     val exactNullCols = cols.filter(c => perFile.forall(_.nullCountOkCols.contains(c)))
     val exactMM = mmCols.filter(c => perFile.forall(_.minMaxOkCols.contains(c)))
@@ -1683,41 +1630,68 @@ class Store private[sources] (
       minMaxExactCols = exactMM)
   }
 
-  /** The footer sweep shared by [[footerAgg]] and [[footerAggInRange]].
-    * Like footerRows: a small file set reads faster on the DRIVER than
+  /** THE footer sweep — every footer read of the store goes through
+    * here: [[describe]], [[footerAgg]], [[footerFilesInRange]] and the
+    * canonical file count of [[compact]]/[[compactBuckets]]. Up to 256
+    * files read on DRIVER threads: a small set reads faster there than
     * the scheduling overhead of a cluster job (this sits on the
-    * sub-second planning path of SQL count(*)) — threaded, because
+    * sub-second planning path of SQL count(*)), and threaded because
     * footer reads are latency-bound (~10-15 ms each even locally, a
-    * HEAD+ranged-GET on object stores) and serializing them would hand
-    * the job path the win back; a large set fans out over executors so
-    * 100k footers never funnel through one machine.
+    * HEAD+ranged-GET on object stores). A larger set fans out over
+    * executors so 100k footers never funnel through one machine.
+    *
+    * A file that vanished since the listing (a concurrent swap) is
+    * returned in the second element rather than thrown: [[describe]],
+    * a point-in-time snapshot, counts it as nothing; callers whose
+    * answer must be exact refuse through [[footersOrRefuse]].
     */
   private def sweepFooters(
       paths: Seq[String], cols: Seq[String], mmCols: Set[String])
+      : (Array[Store.FileFooterStats], Seq[String]) = {
+    val read: Array[Option[Store.FileFooterStats]] =
+      if (paths.size <= 256) {
+        val conf = spark.sparkContext.hadoopConfiguration
+        val pool = java.util.concurrent.Executors.newFixedThreadPool(
+          math.max(1, math.min(16, paths.size)))
+        try {
+          val futures = paths.map { f =>
+            pool.submit(new java.util.concurrent.Callable[Option[Store.FileFooterStats]] {
+              override def call() = Store.footerIfPresent(conf, f, cols, mmCols)
+            })
+          }
+          // rethrow the reader's own exception: callers that degrade on
+          // an IOException must not see it wrapped
+          futures.map { fu =>
+            try fu.get()
+            catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+          }.toArray
+        } finally pool.shutdown()
+      } else {
+        val confEntries = hadoopConfEntries
+        spark.sparkContext
+          .parallelize(paths, math.min(paths.size, spark.sparkContext.defaultParallelism))
+          .mapPartitions { fs =>
+            val conf = Store.confFrom(confEntries)
+            fs.map(f => Store.footerIfPresent(conf, f, cols, mmCols))
+          }
+          .collect() // O(files) metadata tuples, not data; in path order
+      }
+    (read.flatten, paths.zip(read).collect { case (p, None) => p })
+  }
+
+  /** [[sweepFooters]] for callers whose answer must be exact: a file
+    * that vanished mid-sweep refuses with FileNotFoundException (the
+    * footer-answered SQL paths then plan the ordinary scan, which
+    * re-lists).
+    */
+  private def footersOrRefuse(
+      paths: Seq[String], cols: Seq[String], mmCols: Set[String])
       : Array[Store.FileFooterStats] = {
-    if (paths.isEmpty) Array.empty
-    else if (paths.size <= 256) {
-      val conf = spark.sparkContext.hadoopConfiguration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(16, paths.size))
-      try {
-        val futures = paths.map { f =>
-          pool.submit(new java.util.concurrent.Callable[Store.FileFooterStats] {
-            override def call() = Store.fileFooterAgg(conf, f, cols, mmCols)
-          })
-        }
-        futures.map(_.get()).toArray
-      } finally pool.shutdown()
-    } else {
-      val confEntries = hadoopConfEntries
-      spark.sparkContext
-        .parallelize(paths, math.max(1, math.min(paths.size, spark.sparkContext.defaultParallelism)))
-        .mapPartitions { fs =>
-          val conf = Store.confFrom(confEntries)
-          fs.map(f => Store.fileFooterAgg(conf, f, cols, mmCols))
-        }
-        .collect() // O(files) metadata tuples, not data
-    }
+    val (perFile, vanished) = sweepFooters(paths, cols, mmCols)
+    if (vanished.nonEmpty)
+      throw new java.io.FileNotFoundException(
+        s"${vanished.size} file(s) vanished during the footer sweep, e.g. ${vanished.head}")
+    perFile
   }
 
   /** Footer-exact aggregate over an INDEX-RANGE slice — the daily-report
@@ -1770,7 +1744,7 @@ class Store private[sources] (
       lo.map(b => Store.microsToTimestamp(b._1)),
       hi.map(b => Store.microsToTimestamp(b._1)))
     val paths = dataFilesUnder(key, roots)
-    val perFile = sweepFooters(paths, cols, mmCols)
+    val perFile = footersOrRefuse(paths, cols, mmCols)
 
     // a value v is in range iff aboveLo(v) && belowHi(v)
     def aboveLo(v: Long): Boolean = lo.forall {
@@ -1876,41 +1850,47 @@ class Store private[sources] (
       try {
         val st = fs.getFileStatus(r)
         if (st.isFile) st.getLen
-        else walkFiles(r).collect {
-          case st if st.isFile && st.getPath.getName.endsWith(".parquet") &&
-              !hiddenBelow(r, st.getPath) => st.getLen
-        }.sum
+        else parquetUnder(r).map(_.getLen).sum
       } catch { case _: java.io.IOException | _: RuntimeException => 0L }
     }.sum
 
   /** File prefix that satisfies a pushed LIMIT: walk the item's files in
     * listing order accumulating footer row counts until the limit is
-    * covered, so `SELECT * FROM item LIMIT 10` reads one chunk file
-    * instead of 100 TB. Driver-side and bounded: at most 64 sequential
-    * footer reads (each a tail read, milliseconds) — if the limit isn't
-    * covered by then, the remaining files are included UNREAD, which is
-    * merely the no-pushdown plan. Exactness never depends on this
-    * selection (Spark re-applies the limit; `isPartiallyPushed`), so a
-    * file vanishing mid-walk (concurrent compaction) just falls back to
-    * the full listing.
+    * covered ([[coveringPrefix]]), so `SELECT * FROM item LIMIT 10`
+    * reads one chunk file instead of 100 TB. Driver-side and bounded:
+    * at most 64 footer reads (each a tail read, milliseconds) — if the
+    * limit isn't covered by then, the remaining files are included
+    * UNREAD, which is merely the no-pushdown plan. Exactness never
+    * depends on this selection (Spark re-applies the limit;
+    * `isPartiallyPushed`), so a file vanishing mid-walk (concurrent
+    * compaction) just falls back to the full listing.
     */
   private[sources] def filesForLimit(key: String, limit: Long): Seq[String] = {
     val all = dataFiles(key)
+    coveringPrefix(all.map(Seq(_)), limit).getOrElse(all)
+  }
+
+  /** The shortest prefix of `groups` whose footer row counts sum to at
+    * least `k`, read group by group through the footer sweep — or None
+    * when covering would take more than 64 footer reads, a file
+    * vanished mid-walk (concurrent compaction), or all of `groups` hold
+    * fewer than `k` rows. Shared by [[filesForLimit]] (one file per
+    * group) and [[filesForTopN]] (one bucket per group); None means the
+    * caller plans the unpruned listing.
+    */
+  private def coveringPrefix(groups: Seq[Seq[String]], k: Long): Option[Seq[String]] =
     try {
-      import org.apache.parquet.hadoop.ParquetFileReader
-      import org.apache.parquet.hadoop.util.HadoopInputFile
-      val conf = spark.sparkContext.hadoopConfiguration
       var cum = 0L
+      var reads = 0
       var i = 0
-      while (i < all.size && cum < limit && i < 64) {
-        val r = ParquetFileReader.open(
-          HadoopInputFile.fromPath(new HPath(all(i)), conf))
-        try cum += r.getRecordCount finally r.close()
+      while (i < groups.size && cum < k) {
+        reads += groups(i).size
+        if (reads > 64) return None
+        cum += footersOrRefuse(groups(i), Nil, Set.empty).map(_.rows).sum
         i += 1
       }
-      if (cum >= limit) all.take(i) else all
-    } catch { case _: java.io.IOException => all }
-  }
+      if (cum >= k) Some(groups.take(i).flatten) else None
+    } catch { case _: java.io.IOException => None }
 
   /** Groups an item's data files by their `__bucket=` directory and
     * returns them in CHRONOLOGICAL order — or None when the layout is
@@ -1972,42 +1952,29 @@ class Store private[sources] (
     topNBuckets(all) match {
       case None => all
       case Some(asc) =>
-        val ordered = if (desc) asc.reverse else asc
-        try {
-          import org.apache.parquet.hadoop.ParquetFileReader
-          import org.apache.parquet.hadoop.util.HadoopInputFile
-          val conf = spark.sparkContext.hadoopConfiguration
-          var cum = 0L
-          var reads = 0
-          var i = 0
-          var overBudget = false
-          while (i < ordered.size && cum < k && !overBudget) {
-            val bucketFiles = ordered(i)._2
-            if (reads + bucketFiles.size > 64) overBudget = true
-            else {
-              bucketFiles.foreach { f =>
-                val r = ParquetFileReader.open(
-                  HadoopInputFile.fromPath(new HPath(f), conf))
-                try cum += r.getRecordCount finally r.close()
-                reads += 1
-              }
-              i += 1
-            }
-          }
-          if (!overBudget && cum >= k) ordered.take(i).flatMap(_._2) else all
-        } catch { case _: java.io.IOException => all }
+        val ordered = (if (desc) asc.reverse else asc).map(_._2)
+        coveringPrefix(ordered, k).getOrElse(all)
     }
   }
 
   /** Schema normalization (reference `_to_internal_type`,
-    * store.py:141-174): case-insensitive match of every schema column
-    * (missing → [[SchemaError]]), extra columns silently dropped,
-    * names uppercased, values cast to the declared types (the reference
-    * discards its `astype` result at store.py:168 — a bug; we really
-    * cast), index coerced to timestamp, rows range-partitioned + sorted
-    * by the index.
+    * store.py:141-174): [[conform]]'s projection and cast, rows
+    * range-partitioned + sorted by the index.
     */
-  def normalize(df: DataFrame): DataFrame = {
+  def normalize(df: DataFrame): DataFrame =
+    conform(df)
+      .repartitionByRange(col(indexName))
+      .sortWithinPartitions(col(indexName))
+
+  /** The projection and cast of [[normalize]], without its layout:
+    * case-insensitive match of every schema column (missing →
+    * [[SchemaError]]), extra columns silently dropped, names uppercased,
+    * values cast to the declared types (the reference discards its
+    * `astype` result at store.py:168 — a bug; we really cast), index
+    * coerced to timestamp. The appends' merge ([[withNewRowsTagged]])
+    * takes its input through here: its shuffle discards any layout.
+    */
+  private def conform(df: DataFrame): DataFrame = {
     val byLower: Map[String, String] =
       df.columns.map(c => c.toLowerCase -> c).toMap
     val projected = schema.fields.map { f =>
@@ -2025,8 +1992,6 @@ class Store private[sources] (
       castC.as(f.name)
     }
     df.select(projected.toIndexedSeq: _*)
-      .repartitionByRange(col(indexName))
-      .sortWithinPartitions(col(indexName))
   }
 
   /** Initial write — CREATE TABLE AS (reference `_write`,
@@ -2150,7 +2115,7 @@ class Store private[sources] (
 
   /** The mutation gate shared by every writer entry point: an item
     * whose crash RECOVERY MARKERS (`.swap-`/`.mid-`/`.del-`) still pend
-    * is in a HALF-MOVED state — an append could anti-join against the
+    * is in a HALF-MOVED state — an append could merge against the
     * partial live dir and re-insert rows whose only copy sits in trash
     * (duplicated on restore), and a rewrite would make the marker
     * manifests ambiguous. Recovery's correctness rests on mutations
@@ -2227,24 +2192,38 @@ class Store private[sources] (
     * repeated observations; ours is the safer contract for a time store.
     */
   def append(key: String, df: DataFrame): Unit = withItemLock(key) {
+    requireAppendable(key)
+    val merged = withNewRowsTagged(key, df)
+      .drop(NewTag)
+      .repartitionByRange(col(indexName))
+      .sortWithinPartitions(col(indexName))
+    versionSwap(key, merged)
+  }
+
+  /** The one merge of both appends (reference `_append`,
+    * store.py:214-236: `pd.concat` + `drop_duplicates(keep='first')`):
+    * the item's rows tagged 0 and the conformed batch's rows tagged 1,
+    * grouped by every column, each distinct row carrying the min tag in
+    * [[NewTag]] — true exactly for rows the item does not hold yet.
+    * Grouping matches rows the way `<=>` join keys and dropDuplicates
+    * do: NULLs match, and NaN and ±0.0 are normalized (a -0.0 row
+    * leaves the group as +0.0). Duplicates inside the batch collapse to
+    * one row.
+    */
+  private def withNewRowsTagged(key: String, df: DataFrame): DataFrame =
+    this(key).withColumn(NewTag, lit(0))
+      .unionByName(conform(df).withColumn(NewTag, lit(1)))
+      .groupBy(schema.fieldNames.toIndexedSeq.map(col): _*)
+      .agg((min(col(NewTag)) === 1).as(NewTag))
+
+  private val NewTag = "__new"
+
+  private def requireAppendable(key: String): Unit = {
     if (!exists(key))
       throw new ItemKeyError(
         s"item ${validateKey(key)} does not exist; write it first"
       )
     requireNoPendingMarkers(key)
-    val old = this(key).withColumn("__prov", lit(0))
-    val incoming = normalize(df).withColumn("__prov", lit(1))
-    // old-wins tie-break: min(__prov) row per full-row key. dropDuplicates
-    // keeps an arbitrary row, so order provenance explicitly.
-    val valueCols = schema.fieldNames.toIndexedSeq
-    val merged = old
-      .unionByName(incoming)
-      .groupBy(valueCols.map(col): _*)
-      .agg(min(col("__prov")).as("__prov"))
-      .drop("__prov")
-      .repartitionByRange(col(indexName))
-      .sortWithinPartitions(col(indexName))
-    versionSwap(key, merged)
   }
 
   /** Recursive (relative-path, byte-length) listing of `p` — the
@@ -2472,18 +2451,35 @@ class Store private[sources] (
     */
   def compact(key: String): Unit = withItemLock(key) {
     requireNoPendingMarkers(key)
-    val canonical = this(key)
-      .repartitionByRange(col(indexName))
-      .sortWithinPartitions(col(indexName))
-    versionSwap(key, canonical)
+    versionSwap(key, canonicalLayout(this(key), canonicalFiles(dataFiles(key))))
   }
+
+  /** The canonical file count of the data in `paths`: ceil(footer rows
+    * / [[chunkRows]]), at least 1 — the rewrite target of [[compact]]
+    * and [[compactBuckets]].
+    */
+  private def canonicalFiles(paths: Seq[String]): Long = {
+    val rows = footersOrRefuse(paths, Nil, Set.empty).map(_.rows).sum
+    math.max(1L, (rows + chunkRows - 1) / chunkRows)
+  }
+
+  /** `df` range-partitioned by the index into exactly `files`
+    * partitions, sorted within each. An explicit count, not the
+    * planner's (shuffle.partitions / AQE advice), so a rewrite emits the
+    * canonical layout at any item size; one partition (a small item)
+    * skips the range-sampling job.
+    */
+  private def canonicalLayout(df: DataFrame, files: Long): DataFrame =
+    df.repartitionByRange(math.min(files, Int.MaxValue.toLong).toInt, col(indexName))
+      .sortWithinPartitions(col(indexName))
 
   /** The policy that decides WHEN [[compact]] runs: rewrite the item
     * only once [[appendNewOnly]]'s accumulated small files exceed
-    * `maxFiles`, using [[describe]]'s footer-only file count — the
-    * decision itself reads zero data rows, so calling this after every
-    * append batch costs O(files) footer metadata until the threshold
-    * trips. Returns true when a compaction ran. Typical loop:
+    * `maxFiles`, counted from ONE listing of the item's data files —
+    * the same `.parquet` files outside hidden segments [[describe]]
+    * counts. The decision reads no footer and starts no Spark job, so
+    * calling this after every append batch costs one LIST until the
+    * threshold trips. Returns true when a compaction ran. Typical loop:
     * `appendNewOnly(k, batch); compactIfNeeded(k)`.
     *
     * Same contract caveat as [[compact]]: a rewrite invalidates any live
@@ -2493,7 +2489,7 @@ class Store private[sources] (
     */
   def compactIfNeeded(key: String, maxFiles: Long = 64L): Boolean = {
     require(maxFiles > 0, "maxFiles must be positive")
-    val needed = describe(key).files > maxFiles
+    val needed = parquetFiles(key).size > maxFiles
     if (needed) compact(key)
     needed
   }
@@ -2568,27 +2564,20 @@ class Store private[sources] (
         // row counts (read only for over-threshold buckets, from the
         // SAME listing) bound the target: rewrite only when the bucket
         // holds more files than its rows canonically need.
-        lazy val canonicalFiles =
-          math.max(1L, (footerRows(dataPaths) + chunkRows - 1) / chunkRows)
-        if (dataFiles > maxFilesPerBucket && dataFiles > canonicalFiles) {
+        lazy val target = canonicalFiles(dataPaths)
+        if (dataFiles > maxFilesPerBucket && dataFiles > target) {
           // bucket files store the data columns only (the bucket value
           // lives in the dir name), so the rewrite is a plain parquet
-          // round-trip sorted by the index. The partition count is the
-          // EXPLICIT canonical file count — letting the planner pick
-          // (shuffle.partitions / AQE) emits however many range
-          // partitions it advises — and per-file row capping is OFF for
-          // this write (maxRecordsPerFile=0): a range partition nudged
-          // past chunkRows by sampling skew must not split into an
-          // extra file, so the output is EXACTLY canonicalFiles files
-          // and the next call's dataFiles == canonicalFiles skips — an
+          // round-trip sorted by the index, in the EXPLICIT canonical
+          // partition count ([[canonicalLayout]]), and per-file row
+          // capping is OFF for this write (maxRecordsPerFile=0): a range
+          // partition nudged past chunkRows by sampling skew must not
+          // split into an extra file, so the output is EXACTLY `target`
+          // files and the next call's dataFiles == target skips — an
           // exact fixed point, no slack factor scaling debris with
           // bucket size. Files target chunkRows rows ± that skew;
           // row-group stats stay per-group either way.
-          val canonical = spark.read.parquet(d.toString)
-            .repartitionByRange(
-              math.min(canonicalFiles, Int.MaxValue.toLong).toInt,
-              col(indexName))
-            .sortWithinPartitions(col(indexName))
+          val canonical = canonicalLayout(spark.read.parquet(d.toString), target)
           stagedSwap(key, d,
             tmp => plainWriter(canonical)
               .option("maxRecordsPerFile", 0L)
@@ -2621,62 +2610,18 @@ class Store private[sources] (
       }
       .toVector
 
-  /** Exact row count over `paths` from parquet FOOTERS only (the
-    * listing comes from the caller — no second LIST of a dir the
-    * caller just listed). Driver-side sequential reads up to a few
-    * dozen files; past that (exactly the piled-up-small-files state
-    * this count exists to diagnose) the footer reads fan out over
-    * executors like [[describe]]'s — a 256-small-file bucket must not
-    * serialize 256 open/read round-trips on the driver. Executors get
-    * the DRIVER's effective conf ([[hadoopConfEntries]]), not a bare
-    * `new Configuration()` that would drop `spark.hadoop.*` settings.
-    */
-  private def footerRows(paths: Seq[String]): Long = {
-    def countOne(conf: org.apache.hadoop.conf.Configuration, p: String): Long = {
-      import org.apache.parquet.hadoop.ParquetFileReader
-      import org.apache.parquet.hadoop.util.HadoopInputFile
-      val r = ParquetFileReader.open(
-        HadoopInputFile.fromPath(new HPath(p), conf))
-      try r.getRecordCount finally r.close()
-    }
-    if (paths.size <= 32) {
-      val conf = spark.sparkContext.hadoopConfiguration
-      paths.map(countOne(conf, _)).sum
-    } else {
-      val sc = spark.sparkContext
-      val entries = hadoopConfEntries
-      sc.parallelize(paths, math.max(1, math.min(paths.size / 8, sc.defaultParallelism)))
-        .mapPartitions { it =>
-          val conf = Store.confFrom(entries)
-          Iterator.single(it.map(countOne(conf, _)).sum)
-        }
-        .sum().toLong
-    }
-  }
-
-  /** Scalable append: left-anti join the incoming batch against existing
-    * rows and append only genuinely-new files — O(new ⋈ old-overlap)
-    * instead of the reference's O(history) rewrite. Equivalent end state
-    * to [[append]] (duplicates never written; old rows untouched, so
-    * "old wins" trivially holds). The anti-join matches per column with
-    * `<=>` (null-safe equality): a plain `usingColumns` join is
-    * null-unsafe, so NULL-bearing rows would re-append forever.
+  /** Scalable append: [[append]]'s merge ([[withNewRowsTagged]]), but
+    * only the rows the item does not hold yet are written, as new files
+    * in place. It still READS the whole item (the merge groups old and
+    * new rows together); only the write is O(new), instead of the
+    * reference's O(history) rewrite. Equivalent end state to [[append]]
+    * (duplicates never written; old rows untouched, so "old wins"
+    * trivially holds; NULL-bearing rows match, so they never re-append).
     */
   def appendNewOnly(key: String, df: DataFrame): Unit = withItemLock(key) {
-    if (!exists(key))
-      throw new ItemKeyError(
-        s"item ${validateKey(key)} does not exist; write it first"
-      )
-    requireNoPendingMarkers(key)
+    requireAppendable(key)
     val p = dataPath(key)
-    val incoming = normalize(df).dropDuplicates().as("i")
-    val existing = this(key).as("e")
-    val cond = schema.fieldNames
-      .map(c => col(s"i.$c") <=> col(s"e.$c"))
-      .reduce(_ && _)
-    val fresh = incoming
-      .join(existing, cond, "left_anti")
-      .select(schema.fieldNames.map(col).toIndexedSeq: _*)
+    val fresh = withNewRowsTagged(key, df).where(col(NewTag)).drop(NewTag)
     // registered so vacuum's job-staging sweep (job 4) never reclaims
     // THIS job's live `_temporary`/`.spark-staging-*` out from under it
     val tag = Store.inPlaceTag(base, validateKey(key))
@@ -3132,9 +3077,9 @@ class Store private[sources] (
     * reference's incremental `store[k] += df` loop (store.py:57-59):
     * every micro-batch lands through [[appendNewOnly]]. That makes the
     * sink IDEMPOTENT at the row level: after a crash between a batch
-    * landing and its checkpoint commit, the replayed batch anti-joins
-    * to nothing and appends zero files — effectively-once end-to-end
-    * without a transactional sink, at any scale the anti-join handles.
+    * landing and its checkpoint commit, the replayed batch merges
+    * to nothing new and appends zero files — effectively-once end-to-end
+    * without a transactional sink, at any scale the merge handles.
     * First batch auto-creates the item if absent (same crash window:
     * a replayed creation batch dedups to a no-op).
     *

@@ -420,7 +420,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
       s.compact(itemArg(s, in, 0)); Seq(java.lang.Boolean.TRUE)
     },
     proc("compact_if_needed",
-      "compact only past a file-count threshold, footer-checked (Store.compactIfNeeded)",
+      "compact only past a file-count threshold, one listing (Store.compactIfNeeded)",
       Seq(param("item", StringType), param("max_files", LongType, Some("64"))),
       oneBool("ran")) { (s, in) =>
       Seq(java.lang.Boolean.valueOf(

@@ -28,7 +28,7 @@ import org.apache.spark.sql.types._
   *     [[Store.ingestStream]]) — then deletes the epoch's staging dir.
   *     A replayed epoch (checkpoint restart, task-level retry, a whole
   *     re-run from a fresh checkpoint) re-stages and re-commits, and
-  *     the anti-join lands ZERO duplicate rows: exactly-once without
+  *     the dedup merge lands ZERO duplicate rows: exactly-once without
   *     any sink-side epoch bookkeeping.
   *
   * Crash debris: a query killed mid-epoch leaves files under its

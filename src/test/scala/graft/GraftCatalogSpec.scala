@@ -328,7 +328,7 @@ class GraftCatalogSpec extends AnyFunSuite {
     assert(removed > 0)
     assert(s("MSFT").where($"DATE" < "2015-03-01").count() == 0)
 
-    // compact_if_needed: footer-counted threshold decision from SQL
+    // compact_if_needed: listing-counted threshold decision from SQL
     assert(!spark.sql("CALL gcatm.compact_if_needed(item => 'MSFT', max_files => 64)")
       .collect()(0).getBoolean(0), "under threshold → no-op")
 

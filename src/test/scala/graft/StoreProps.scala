@@ -88,28 +88,38 @@ object StoreProps extends Properties("Store") {
     }
 
   property("append idempotence with NULL-bearing rows, both paths") =
-    forAll(Gen.choose(5, 20), Gen.choose(1L, 999L)) { (n, seed) =>
-      // every 3rd row carries NULLs in two value columns: a null-unsafe
-      // anti-join (plain = semantics) never matches those rows, so they
-      // would re-append forever
+    forAll(Gen.choose(6, 20), Gen.choose(1L, 999L)) { (n, seed) =>
+      // stored rows: every 3rd carries NULLs in two value columns (a
+      // null-unsafe match never pairs those, so they would re-append
+      // forever), every 4th a NaN, row 2 a -0.0. The batch overlaps
+      // half of them, re-sends row 2 with +0.0, repeats rows inside
+      // itself, and adds new rows, among them a -0.0/+0.0 sign-twin pair
       val rnd = new scala.util.Random(seed)
       val t0 = java.time.LocalDate.parse("2021-01-01")
         .atStartOfDay(java.time.ZoneOffset.UTC)
-      val data = (0 until n).map { i =>
+      def row(i: Int) =
         (Timestamp.from(t0.plusDays(i).toInstant),
-          rnd.nextDouble(), rnd.nextDouble(), rnd.nextDouble(),
+          if (i % 4 == 1) Double.NaN else rnd.nextDouble(),
+          if (i == 2) -0.0 else rnd.nextDouble(), rnd.nextDouble(),
           if (i % 3 == 0) None else Some(rnd.nextDouble()),
           if (i % 3 == 0) None else Some(rnd.nextInt(1000).toLong))
-      }.toDF("date", "open", "high", "low", "close", "volume")
+      val stored = (0 until n).map(row)
+      val fresh = (n until n + 4).map(row)
+      val batch = stored.take(n / 2) ++ Seq(stored(2).copy(_3 = 0.0)) ++
+        fresh ++ fresh.take(2) ++
+        Seq(fresh.head.copy(_3 = -0.0), fresh.head.copy(_3 = 0.0))
+      def df(rows: Seq[(Timestamp, Double, Double, Double, Option[Double], Option[Long])]) =
+        rows.toDF("date", "open", "high", "low", "close", "volume")
+      val want = n + fresh.size + 1 // the sign twins are one new row
       val viaAppend = freshStore()
-      viaAppend.write("K", data)
-      viaAppend.append("K", data)
-      viaAppend.append("K", data)
+      viaAppend.write("K", df(stored))
+      viaAppend.append("K", df(batch))
+      viaAppend.append("K", df(batch))
       val viaNewOnly = freshStore()
-      viaNewOnly.write("K", data)
-      viaNewOnly.appendNewOnly("K", data)
-      viaNewOnly.appendNewOnly("K", data)
-      viaAppend("K").count() == n && viaNewOnly("K").count() == n &&
+      viaNewOnly.write("K", df(stored))
+      viaNewOnly.appendNewOnly("K", df(batch))
+      viaNewOnly.appendNewOnly("K", df(batch))
+      viaAppend("K").count() == want && viaNewOnly("K").count() == want &&
         viaAppend("K").exceptAll(viaNewOnly("K")).count() == 0
     }
 
@@ -195,7 +205,9 @@ object StoreProps extends Properties("Store") {
   // writeStagedVersion / commit / abort on fresh item names) over the
   // objstore:// copy+delete rename semantics, arming a random
   // ObjStoreFs crash point before each maintenance op with p≈3/4 (only
-  // the bucket ops rename, so only they can fire). A crashed op is
+  // the bucket ops rename, so only they can fire; each compactBuckets
+  // first piles two one-row appends into a day bucket, so it always
+  // has a bucket to rename). A crashed op is
   // recovered exactly the way the docs prescribe (vacuum(0) then retry
   // once) and the run then continues. Invariants, checked against a
   // sequentially-replayed local model: no row lost, no duplicate
@@ -325,7 +337,7 @@ object StoreProps extends Properties("Store") {
         val b = rnd.nextInt(batches.size)
         ok = ok && run(s"write($b)", () => s.write("K", df(b)), never)
         if (ok) { model.clear(); model ++= batches(b); exists = true }
-      } else rnd.nextInt(10) match {
+      } else rnd.nextInt(12) match {
         case 0 | 1 =>
           val b = rnd.nextInt(batches.size)
           ok = run(s"appendNewOnly($b)", () => s.appendNewOnly("K", df(b)), never)
@@ -337,10 +349,23 @@ object StoreProps extends Properties("Store") {
         case 3 =>
           maybeArm()
           ok = run("compact", () => s.compact("K"), never)
-        case 4 =>
-          maybeArm()
-          ok = run("compactBuckets",
-            () => { s.compactBuckets("K", maxFilesPerBucket = 1L); () }, never)
+        case 4 | 10 | 11 =>
+          // pile two fresh one-row appends into one day bucket, so it
+          // holds more than maxFilesPerBucket files and the
+          // compactBuckets below rewrites (renames) it — an armed crash
+          // point then has a rename to fire in
+          val day = rnd.nextInt(nDays)
+          (0 until 2).foreach { j =>
+            val pile = barRows(1, seed * 31 + step * 2 + j).map(_.copy(_1 = dayTs(day)))
+            ok = ok && run(s"appendNewOnly(pile $day)", () => s.appendNewOnly("K",
+              pile.toDF("date", "open", "high", "low", "close", "volume")), never)
+            if (ok) model ++= pile
+          }
+          if (ok) {
+            maybeArm()
+            ok = run("compactBuckets",
+              () => { s.compactBuckets("K", maxFilesPerBucket = 1L); () }, never)
+          }
         case 5 =>
           val cut = rnd.nextInt(nDays)
           maybeArm()

@@ -328,8 +328,16 @@ class StoreSpec extends AnyFunSuite {
     val dir = tmpDir()
     val s = Store.open(spark, dir, bucket = Some("month"))
     s.write("MSFT", bars(123))
-    s.appendNewOnly("MSFT", bars(200)) // multiple files, incl. appended ones
-    val st = s.describe("MSFT")
+    // multiple files, incl. appended ones; the merge of a local batch
+    // is one shuffle stage and the write — no sampling job, no join
+    val (_, appendJobs) =
+      TestSpark.jobsDuring(s.appendNewOnly("MSFT", bars(200)))
+    assert(appendJobs <= 2, s"appendNewOnly started $appendJobs Spark jobs")
+    // footers of a small item are read on driver threads: no job
+    val (st, describeJobs) = TestSpark.jobsDuring(s.describe("MSFT"))
+    assert(describeJobs == 0, s"describe started $describeJobs Spark jobs")
+    assert(TestSpark.jobsDuring(s("MSFT").count())._2 >= 1,
+      "the job counter must see a scan's jobs")
     val scan = s("MSFT").agg(
       count(lit(1)), min(col("DATE")), max(col("DATE"))
     ).head()
@@ -353,7 +361,9 @@ class StoreSpec extends AnyFunSuite {
     (1 to 6).foreach(i => s.appendNewOnly("MSFT", bars(100 + i * 20)))
     val before = s.describe("MSFT")
     val rowsBefore = s("MSFT").collect().toSet
-    assert(!s.compactIfNeeded("MSFT", maxFiles = before.files + 1), "under threshold: no-op")
+    // the decision is one listing: no footer read, no Spark job
+    assert(TestSpark.jobsDuring(s.compactIfNeeded("MSFT", maxFiles = before.files + 1)) ==
+      ((false, 0)), "under threshold: a no-op that starts no Spark job")
     assert(s.describe("MSFT").files == before.files, "no-op must not touch files")
     assert(s.compactIfNeeded("MSFT", maxFiles = before.files / 2), "over threshold: compacts")
     val after = s.describe("MSFT")
@@ -707,5 +717,11 @@ class StoreSpec extends AnyFunSuite {
     // the DSv2 footer-answered count lists through dataFiles
     assert(spark.read.format("graft").option("item", "MSFT").load(dir).count() == 10,
       "dataFiles must exclude the hidden subtrees")
+    // compactIfNeeded counts the files describe counts: neither the
+    // in-flight payload nor a non-parquet file trips it
+    java.nio.file.Files.write(vDir.resolve("notes.txt"), "not data".getBytes)
+    assert(s.describe("MSFT").files == cur.files)
+    assert(!s.compactIfNeeded("MSFT", maxFiles = cur.files),
+      "hidden or non-parquet files counted toward the compaction threshold")
   }
 }

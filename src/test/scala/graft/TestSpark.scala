@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.GraftTestBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole test run. */
@@ -19,5 +21,31 @@ object TestSpark {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** Runs `body` and returns its result with the number of Spark jobs it
+    * started. Jobs are attributed through a job group set on this thread
+    * (threads it starts inherit it), so a concurrent job elsewhere in the
+    * shared session is not counted.
+    */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = session.sparkContext
+    val group = "counted-" + java.util.UUID.randomUUID()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "jobsDuring")
+    try {
+      val out = body
+      GraftTestBridge.drainListeners(sc)
+      (out, jobs.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
   }
 }
