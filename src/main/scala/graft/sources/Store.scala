@@ -1310,14 +1310,6 @@ class Store private[sources] (
     else spark.read.schema(schema).parquet(p)
   }
 
-  /** Sorted listing of the item's current DATA files (full path
-    * strings), recursive across bucket dirs, hidden/marker files
-    * (`_SUCCESS`, dot-files) excluded. One flat recursive LIST (a
-    * paged object-store LIST, not a directory walk) — the metadata
-    * backbone of the DSv2 micro-batch stream's offsets
-    * ([[graft.sources.v2.GraftMicroBatchStream]]). It resolves the
-    * CURRENT version pointer at call time, like every read.
-    */
   /** Recursive file listing, shaped per scheme:
     *
     *  - `file://`: a per-directory `listStatus` walk. Same round-trip
@@ -1396,20 +1388,6 @@ class Store private[sources] (
       }
     }
     buf.result()
-  }
-
-  private[sources] def dataFiles(key: String): Seq[String] = {
-    val root = dataPath(key)
-    val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-    // dataPath above already excludes never-existed roots, so a root
-    // missing INSIDE the walk is the vanished-mid-call snapshot race
-    // (concurrent compact / drop) — tolerant, like every
-    // listing here; a strict root would re-introduce the very
-    // throw-on-vanish the point-in-time contract forbids
-    walkFiles(root, rootMustExist = false).foreach { st =>
-      if (st.isFile && !hiddenBelow(root, st.getPath)) buf += st.getPath.toString
-    }
-    buf.sorted.toSeq
   }
 
   /** Spark's hidden-path rule for one path segment — the rule its file
@@ -1581,6 +1559,16 @@ class Store private[sources] (
     out
   }
 
+  /** Sorted listing of the item's current data files (full path
+    * strings): the [[parquetFiles]] listing, so every footer read,
+    * compaction count and stream offset sees the files [[describe]]
+    * counts. The metadata backbone of the DSv2 micro-batch stream's
+    * offsets ([[graft.sources.v2.GraftMicroBatchStream]]). It resolves
+    * the CURRENT version pointer at call time, like every read.
+    */
+  private[sources] def dataFiles(key: String): Seq[String] =
+    parquetFiles(key).map(_._1).sorted
+
   /** Footer aggregates for the DSv2 aggregate-pushdown path (the SQL
     * front door's `SELECT count(*) / min(idx) / max(idx) / count(col)`
     * with no WHERE and no GROUP BY): the same footer sweep
@@ -1743,7 +1731,7 @@ class Store private[sources] (
     val roots = prunedRoots(key,
       lo.map(b => Store.microsToTimestamp(b._1)),
       hi.map(b => Store.microsToTimestamp(b._1)))
-    val paths = dataFilesUnder(key, roots)
+    val paths = dataFilesUnder(roots)
     val perFile = footersOrRefuse(paths, cols, mmCols)
 
     // a value v is in range iff aboveLo(v) && belowHi(v)
@@ -1818,21 +1806,14 @@ class Store private[sources] (
       minMaxExactCols = exactMM))
   }
 
-  /** The item's data files under the given pruned roots — the same
-    * per-segment hidden filter as [[dataFiles]], scoped so metadata
-    * sweeps over a range slice pay for the slice, not the item.
+  /** The data files under the given pruned roots — [[parquetUnder]],
+    * the filter [[dataFiles]] applies, scoped so metadata sweeps over a
+    * range slice pay for the slice, not the item. Pruned bucket roots
+    * come from a point-in-time listing a concurrent compaction/prune
+    * can delete; such a root holds nothing.
     */
-  private def dataFilesUnder(key: String, roots: Seq[HPath]): Seq[String] = {
-    val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-    roots.foreach { root =>
-      // pruned bucket roots come from a point-in-time listing a
-      // concurrent compaction/prune can delete → tolerant root
-      walkFiles(root, rootMustExist = false).foreach { st =>
-        if (st.isFile && !hiddenBelow(root, st.getPath)) buf += st.getPath.toString
-      }
-    }
-    buf.sorted.toSeq
-  }
+  private def dataFilesUnder(roots: Seq[HPath]): Seq[String] =
+    roots.flatMap(parquetUnder).map(_.getPath.toString).sorted
 
   /** Total DATA bytes under the given roots (pruned bucket dirs, or
     * individual files from a LIMIT prefix) — the planner-facing size
@@ -2451,7 +2432,10 @@ class Store private[sources] (
     */
   def compact(key: String): Unit = withItemLock(key) {
     requireNoPendingMarkers(key)
-    versionSwap(key, canonicalLayout(this(key), canonicalFiles(dataFiles(key))))
+    // rewrite exactly the listed files: the ones describe counts
+    val files = dataFiles(key)
+    versionSwap(key,
+      canonicalLayout(spark.read.schema(schema).parquet(files: _*), canonicalFiles(files)))
   }
 
   /** The canonical file count of the data in `paths`: ceil(footer rows
@@ -2552,10 +2536,7 @@ class Store private[sources] (
       val buckets = bucketDirs(p)(b => cutoff.forall(b >= _))
       var rewritten = 0L
       buckets.foreach { d =>
-        val dataPaths = fs.listStatus(d).iterator
-          .filter(st => st.isFile && !hiddenName(st.getPath.getName))
-          .map(_.getPath.toString)
-          .toVector
+        val dataPaths = parquetUnder(d).map(_.getPath.toString)
         val dataFiles = dataPaths.size
         // convergence guard: a bucket holding more rows than
         // maxFilesPerBucket × chunkRows can never compact below the
@@ -2577,7 +2558,7 @@ class Store private[sources] (
           // exact fixed point, no slack factor scaling debris with
           // bucket size. Files target chunkRows rows ± that skew;
           // row-group stats stay per-group either way.
-          val canonical = canonicalLayout(spark.read.parquet(d.toString), target)
+          val canonical = canonicalLayout(spark.read.parquet(dataPaths: _*), target)
           stagedSwap(key, d,
             tmp => plainWriter(canonical)
               .option("maxRecordsPerFile", 0L)

@@ -88,7 +88,7 @@ object StoreProps extends Properties("Store") {
     }
 
   property("append idempotence with NULL-bearing rows, both paths") =
-    forAll(Gen.choose(6, 20), Gen.choose(1L, 999L)) { (n, seed) =>
+    forAll(Gen.choose(5, 20), Gen.choose(1L, 999L)) { (n, seed) =>
       // stored rows: every 3rd carries NULLs in two value columns (a
       // null-unsafe match never pairs those, so they would re-append
       // forever), every 4th a NaN, row 2 a -0.0. The batch overlaps

@@ -723,5 +723,13 @@ class StoreSpec extends AnyFunSuite {
     assert(s.describe("MSFT").files == cur.files)
     assert(!s.compactIfNeeded("MSFT", maxFiles = cur.files),
       "hidden or non-parquet files counted toward the compaction threshold")
+    // the footer-answered SQL count and compact list through the same
+    // filter, and compact rewrites only the files it listed
+    assert(spark.read.format("graft").option("item", "MSFT").load(dir).count() == 10,
+      "dataFiles must exclude non-parquet files")
+    s.compact("MSFT")
+    val compacted = s.describe("MSFT")
+    assert(compacted.rows == 10 && compacted.files == 1,
+      s"compact must rewrite the 10 rows into one canonical file: $compacted")
   }
 }

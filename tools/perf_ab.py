@@ -1,19 +1,16 @@
 #!/usr/bin/env python3
 """Alternating parent/change A/B of the repository benchmark.
 
-    python3 tools/perf_ab.py PARENT_REV [--pairs 10] [--seconds 10]
-        [--workloads tick_store,query_sweep] [--seed0 801]
-        [--workdir DIR] [--parent-dir DIR]
+    python3 tools/perf_ab.py PARENT_REV [--pairs 10] [--workdir DIR]
 
-Checks PARENT_REV out as a detached `git worktree` in a temporary
-directory (or uses --parent-dir, an existing checkout of it), then runs
-each workload once per seed from both checkouts through
-`perfbench/run.py --out`, seed by seed, alternating which side goes
-first. The change side is this working tree, uncommitted edits
-included. Result files land in WORKDIR/parent and WORKDIR/change. Then
-it runs `perfbench/compare.py` on the two sets, whose verdict rule wants
-ten seed pairs, and prints each call kind's median latency per side from
-the result files' `calls_ms`.
+Exports PARENT_REV (`git archive`) into a temporary directory, then runs
+each workload BENCHMARK.json lists for its run_seconds, once per seed
+from both checkouts through `perfbench/run.py --out`, seed by seed,
+alternating which side goes first. The change side is this working
+tree, uncommitted edits included. Result files land in WORKDIR/parent
+and WORKDIR/change. Then it runs `perfbench/compare.py` on the two sets,
+whose verdict rule wants ten seed pairs, and prints each call kind's
+median latency per side from the result files' `calls_ms`.
 """
 import argparse
 import glob
@@ -26,6 +23,23 @@ import sys
 import tempfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+SEED0 = 801
+
+
+def spec():
+    """(run_seconds, workload names) from BENCHMARK.json."""
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+        b = json.load(f)
+    return b["run_seconds"], [w["name"] for w in b["workloads"]]
+
+
+def export(rev):
+    """A fresh directory holding the files of `rev`."""
+    d = tempfile.mkdtemp(prefix="perf_ab-parent-")
+    archive = subprocess.run(["git", "-C", ROOT, "archive", "--format=tar", rev],
+                             stdout=subprocess.PIPE, check=True).stdout
+    subprocess.run(["tar", "-x", "-C", d], input=archive, check=True)
+    return d
 
 
 def run_one(checkout, workload, seed, seconds, out):
@@ -68,39 +82,28 @@ def main():
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("parent_rev")
     ap.add_argument("--pairs", type=int, default=10)
-    ap.add_argument("--seconds", type=float, default=10)
-    ap.add_argument("--workloads", default="tick_store,query_sweep")
-    ap.add_argument("--seed0", type=int, default=801)
     ap.add_argument("--workdir", help="result directory (default: a new temporary one)")
-    ap.add_argument("--parent-dir", help="existing checkout of PARENT_REV to use instead of a worktree")
     a = ap.parse_args()
+    seconds, workloads = spec()
     workdir = a.workdir or tempfile.mkdtemp(prefix="perf_ab-")
-    sides = {"parent": a.parent_dir, "change": ROOT}
-    worktree = None
-    if not a.parent_dir:
-        worktree = os.path.join(tempfile.mkdtemp(prefix="perf_ab-parent-"), "parent")
-        subprocess.run(["git", "-C", ROOT, "worktree", "add", "--detach", worktree, a.parent_rev],
-                       check=True)
-        sides["parent"] = worktree
+    parent = export(a.parent_rev)
+    sides = {"parent": parent, "change": ROOT}
     try:
         for side in sides:
             os.makedirs(os.path.join(workdir, side), exist_ok=True)
-        workloads = a.workloads.split(",")
         for i in range(a.pairs):
-            seed = a.seed0 + i
+            seed = SEED0 + i
             order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
             for w in workloads:
                 for side in order:
-                    run_one(sides[side], w, seed, a.seconds,
+                    run_one(sides[side], w, seed, seconds,
                             os.path.join(workdir, side, f"{w}-{seed}.json"))
         print(f"\nresults in {workdir}")
         subprocess.run([sys.executable, os.path.join(ROOT, "perfbench", "compare.py"),
                         os.path.join(workdir, "parent"), os.path.join(workdir, "change")])
         print_calls(os.path.join(workdir, "parent"), os.path.join(workdir, "change"))
     finally:
-        if worktree:
-            subprocess.run(["git", "-C", ROOT, "worktree", "remove", "--force", worktree])
-            shutil.rmtree(os.path.dirname(worktree), ignore_errors=True)
+        shutil.rmtree(parent, ignore_errors=True)
 
 
 if __name__ == "__main__":
