@@ -85,6 +85,27 @@ object TextKernels {
   def hashString(s: String): Long =
     XXH64.hashUTF8String(UTF8String.fromString(s), HashSeed)
 
+  /** Most shingles one document may have in [[shingleHashes]]: its
+    * dedup table holds twice that many slots, and 2^30 is the largest
+    * power of two an `Int`-indexed array can have.
+    */
+  val MaxShingles: Int = 1 << 29
+
+  /** Slots of [[shingleHashes]]' open-addressed dedup table for `n`
+    * shingles: the smallest power of two ≥ 2n (at least 4), sized in
+    * `Long` so it cannot overflow. Above [[MaxShingles]] it throws,
+    * because an `Int` table that large would overflow and its probe
+    * loop would never end.
+    */
+  def dedupTableCapacity(n: Int): Int = {
+    if (n > MaxShingles)
+      throw new IllegalArgumentException(
+        s"shingleHashes: $n shingles in one document exceed the limit of $MaxShingles")
+    var cap = 4L
+    while (cap < 2L * n) cap <<= 1
+    cap.toInt
+  }
+
   /** Sorted distinct shingle hashes of a document (sorted so pairwise
     * intersection is a linear merge).
     *
@@ -101,6 +122,12 @@ object TextKernels {
     * copies — the literal multiset `distinctShingles → hash` produced.
     * (TextKernelsSpec: equality vs the string path on random
     * unicode/multi-space docs, and vs the SQL pipeline on the corpus.)
+    *
+    * Precondition: `text` is well-formed UTF-16. UTF-8 encoding turns
+    * every unpaired surrogate into '?', so shingles that differ only
+    * there (or by a literal '?') have equal bytes: this dedup keeps one
+    * hash where the string path keeps one per distinct string. At most
+    * 2^29 shingles per document ([[dedupTableCapacity]]).
     */
   def shingleHashes(text: String, k: Int): Array[Long] = {
     val bytes = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
@@ -117,8 +144,7 @@ object TextKernels {
     starts(nToks) = nBytes + 1 // sentinel: end(last) = starts(nToks) - 1
     val n = nToks - k + 1
     // open-addressed dedup table over kept-shingle indices
-    var cap = 4
-    while (cap < n * 2) cap <<= 1
+    val cap = dedupTableCapacity(n)
     val table = new Array[Int](cap)
     java.util.Arrays.fill(table, -1)
     val mask = cap - 1
@@ -280,7 +306,10 @@ object TextKernels {
       var t = 0
       while (n < k && t < nRep) { out(n) = repH(byDfH(t)); n += 1; t += 1 }
     }
-    if (n == k) out else java.util.Arrays.copyOf(out, n)
+    // n == k here: each repeated shingle matched above consumed one of
+    // the nRep pairs, so singles + nRep >= sz >= k and the top-up fills
+    // the prefix
+    out
   }
 
   /** Positions where two equal-length signatures agree. */

@@ -1,10 +1,13 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThanOrEqual}
 import org.apache.spark.sql.types._
 
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
+
+import graft.sources.v2.SparkInternals
 
 import java.nio.charset.StandardCharsets
 import java.sql.Timestamp
@@ -1535,14 +1538,20 @@ class Store private[sources] (
     // the recursive iterator can throw mid-walk if a concurrent
     // committer removes its _temporary dir between the parent listing
     // and the descent — that's a stale snapshot, not an error, so
-    // retake it (bounded; a persistent failure is a real one)
-    def listing(): Seq[(String, Long)] =
-      parquetUnder(p).map(st => (st.getPath.toString, st.getLen))
-    // "vanished mid-walk" shows up as FileNotFoundException on most
-    // FileSystems, but RawLocalFileSystem surfaces it as a
-    // RuntimeException from its shelled-out permission probe (`ls`
-    // exiting 2 on the removed dir) — match the condition, not the
-    // wrapper class
+    // retake it
+    retryVanished(parquetUnder(p).map(st => (st.getPath.toString, st.getLen)))
+  }
+
+  /** Runs `body`, retaking it (at most 5 more times) while it fails
+    * because a path it listed vanished under it — a concurrent
+    * committer's cleanup, compaction or prune; the last failure is
+    * rethrown (a persistent one is a real one).
+    */
+  private def retryVanished[T](body: => T): T = {
+    // "vanished" shows up as FileNotFoundException on most FileSystems,
+    // but RawLocalFileSystem surfaces it as a RuntimeException from its
+    // shelled-out permission probe (`ls` exiting 2 on the removed dir)
+    // — match the condition, not the wrapper class
     def vanished(e: Throwable): Boolean = e match {
       case null => false
       case _: java.io.FileNotFoundException => true
@@ -1550,13 +1559,10 @@ class Store private[sources] (
         m.contains("No such file or directory") || m.contains("does not exist")) ||
         vanished(e.getCause)
     }
-    var tries = 0
-    var out: Seq[(String, Long)] = null
-    while (out == null) {
-      try out = listing()
-      catch { case e: Exception if vanished(e) && tries < 5 => tries += 1 }
-    }
-    out
+    def attempt(retries: Int): T =
+      try body
+      catch { case e: Exception if retries > 0 && vanished(e) => attempt(retries - 1) }
+    attempt(5)
   }
 
   /** Sorted listing of the item's current data files (full path
@@ -3118,19 +3124,35 @@ class Store private[sources] (
       .select(schema.fieldNames.map(col).toIndexedSeq: _*)
   }
 
-  /** Inclusive time-range scan (reference `_query`, store.py:238-267):
-    * bounds inclusive on BOTH ends; Catalyst pushes the predicates to
-    * Parquet row-group stats (the reference passes explicit pyarrow
-    * filters, store.py:255-264). `None` bounds = unbounded — the
+  /** Inclusive time-range read (reference `_query`, store.py:238-267):
+    * bounds inclusive on BOTH ends. `None` bounds = unbounded — the
     * reference's non-deterministic `datetime.now()` upper default
     * (store.py:253) lives only in [[sliceCompat]].
-    */
-  /** @param columns optional projection (case-insensitive names from
-    *   the store schema; unknown names → [[SchemaError]]). The pruned
-    *   column set reaches the Parquet scan's ReadSchema, so a 2-column
-    *   read of a wide store only decodes 2 columns — at 100 TB the
-    *   difference between a column-pruned scan and a full-width one is
-    *   the whole game (asserted in StoreSpec).
+    *
+    * A SMALL slice is read on the driver when `query` is called, like
+    * the reference's in-process pyarrow read: the pruned data files
+    * ([[prunedRoots]], one listing) are read whole on this thread and
+    * the result is a DataFrame over a `LocalRelation`, so collecting it
+    * starts no Spark job. Small means the listed bytes, sized the way
+    * the SQL front door's scan reports them
+    * ([[SparkInternals.scanSize]]), are within
+    * `spark.sql.autoBroadcastJoinThreshold` — the size Spark itself
+    * collects to the driver to broadcast; ≤ 0 turns the driver read
+    * off. A larger slice is a lazy distributed scan: bucket directories
+    * pruned by partition filters, the bounds pushed to Parquet
+    * row-group stats (the reference passes explicit pyarrow filters,
+    * store.py:255-264), read when the DataFrame is acted on. Both give
+    * the same rows and schema (StoreProps). A concurrent rewrite that
+    * swaps a listed file out before the driver read reaches it makes
+    * the read re-resolve the item and start over (bounded, then the
+    * error is rethrown), never return part of the slice.
+    *
+    * @param columns optional projection (case-insensitive names from
+    *   the store schema; unknown names → [[SchemaError]], before any
+    *   I/O). Only the index (for the range predicate) and these columns
+    *   are decoded — on the distributed scan the pruned set reaches the
+    *   Parquet ReadSchema, so a 2-column read of a wide store only
+    *   decodes 2 columns (asserted in StoreSpec).
     */
   def query(
       key: String,
@@ -3138,7 +3160,17 @@ class Store private[sources] (
       end: Option[Timestamp] = None,
       columns: Option[Seq[String]] = None
   ): DataFrame = {
-    val outCols = columns.fold(schema.fieldNames.toSeq) { cs =>
+    val outCols = projection(columns)
+    val k = validateKey(key)
+    sliceOnDriver(Seq(k), start, end, outCols, None)
+      .getOrElse(scanSlice(k, start, end, outCols))
+  }
+
+  /** Store-schema names of a requested projection (all columns when
+    * `None`); [[SchemaError]] for an unknown name. No I/O.
+    */
+  private def projection(columns: Option[Seq[String]]): Seq[String] =
+    columns.fold(schema.fieldNames.toSeq) { cs =>
       cs.map { c =>
         schema.fieldNames
           .find(_.equalsIgnoreCase(c))
@@ -3146,8 +3178,19 @@ class Store private[sources] (
             s"unknown column '$c' (have: ${schema.fieldNames.mkString(", ")})"))
       }
     }
+
+  /** The inclusive range predicates on the index column. */
+  private def inRange(start: Option[Timestamp], end: Option[Timestamp]): Seq[Column] =
+    start.map(s => col(indexName) >= lit(s)).toSeq ++ end.map(e => col(indexName) <= lit(e)).toSeq
+
+  /** The distributed read of one slice: a lazy scan of the item. */
+  private def scanSlice(
+      key: String,
+      start: Option[Timestamp],
+      end: Option[Timestamp],
+      outCols: Seq[String]
+  ): DataFrame = {
     val df = loadRaw(key)
-    val idx = col(indexName)
     // directory-level pruning first (bucketed stores): the bucket format
     // is lexicographically ordered, so the time range maps to a string
     // range on the partition column and Spark prunes whole directories.
@@ -3156,17 +3199,67 @@ class Store private[sources] (
     // compare instants, so reads are correct under ANY session
     // timezone — only writes require alignment ([[requireTzAligned]]).
     val bucketPreds = bucketFmt.toSeq.flatMap { f =>
-      val fmt = java.time.format.DateTimeFormatter.ofPattern(f)
-        .withZone(java.time.ZoneId.of(storeTz))
-      start.map(s => col(BucketCol) >= fmt.format(s.toInstant)).toSeq ++
-        end.map(e => col(BucketCol) <= fmt.format(e.toInstant)).toSeq
+      start.map(s => col(BucketCol) >= bucketLabel(f, s)).toSeq ++
+        end.map(e => col(BucketCol) <= bucketLabel(f, e)).toSeq
     }
     // row-group pruning + residual exactness (reference store.py:255-266)
-    val tsPreds = start.map(s => idx >= lit(s)).toSeq ++ end.map(e => idx <= lit(e)).toSeq
-    val preds = bucketPreds ++ tsPreds
-    preds.reduceOption(_ && _).map(df.filter).getOrElse(df)
+    (bucketPreds ++ inRange(start, end)).reduceOption(_ && _).map(df.filter).getOrElse(df)
       .drop(BucketCol)
       .select(outCols.map(col).toIndexedSeq: _*)
+  }
+
+  /** The slice of `keys` read on the driver (see [[query]]), or `None`
+    * when the driver read is off or the slice is too large for it. With
+    * `labelCol` set, a leading column of that name holds each row's key.
+    */
+  private def sliceOnDriver(
+      keys: Seq[String],
+      start: Option[Timestamp],
+      end: Option[Timestamp],
+      outCols: Seq[String],
+      labelCol: Option[String]
+  ): Option[DataFrame] = {
+    val limit = SparkInternals.driverReadLimit(spark)
+    if (limit <= 0) None
+    else {
+      val read = StructType(schema.filter(f => f.name == indexName || outCols.contains(f.name)))
+      val pushed = start.map(GreaterThanOrEqual(indexName, _)).toSeq ++
+        end.map(LessThanOrEqual(indexName, _)).toSeq
+      // a listed file swapped out by a concurrent rewrite fails the read:
+      // re-resolve the version pointer and re-list (smallSlice does both)
+      retryVanished {
+        smallSlice(keys, start, end, limit).map(files =>
+          SparkInternals.readOnDriver(
+            spark, files, schema, read, pushed.toArray, labelCol))
+      }.map { df =>
+        inRange(start, end).reduceOption(_ && _).map(df.filter).getOrElse(df)
+          .select((labelCol.toSeq ++ outCols).map(col): _*)
+      }
+    }
+  }
+
+  /** The data files of `keys`' slices, each paired with its key, from
+    * one listing of each key's pruned roots — or `None` once their bytes
+    * pass `limit` (sized like the scan's estimate; the listing stops
+    * there).
+    */
+  private def smallSlice(
+      keys: Seq[String],
+      start: Option[Timestamp],
+      end: Option[Timestamp],
+      limit: Long
+  ): Option[Seq[(String, FileStatus)]] = {
+    def fits(bytes: Long) = SparkInternals.scanSize(spark, bytes) <= limit
+    val listings = keys.iterator.flatMap(k =>
+      prunedRoots(k, start, end).iterator.map(r => parquetUnder(r).map(k -> _)))
+    val files = Vector.newBuilder[(String, FileStatus)]
+    var bytes = 0L
+    while (listings.hasNext && fits(bytes)) {
+      val l = listings.next()
+      files ++= l
+      bytes += l.map(_._2.getLen).sum
+    }
+    if (fits(bytes)) Some(files.result()) else None
   }
 
   /** Directory roots a time-range read of `key` must scan — the
@@ -3198,12 +3291,16 @@ class Store private[sources] (
 
   /** Multi-key union read (at-scale extension; the reference reads one
     * key per call — store.py:238). Returns the union of `query(k, …)`
-    * over the resolved, deduplicated keys with an `ITEM` column naming
-    * each row's origin, so a portfolio-style range read is ONE Spark
-    * job over N pruned scans (directory + row-group pruning applies per
-    * branch exactly as in [[query]]) instead of N driver round-trips.
-    * Rejects stores whose schema already carries an `ITEM` column — the
-    * origin column would silently duplicate the name otherwise.
+    * over the resolved, deduplicated keys with a leading `ITEM` column
+    * naming each row's origin. The driver-or-distributed choice of
+    * [[query]] is made ONCE, on the slices' total size, so many small
+    * keys never add up to an unbounded driver read: a small total is
+    * read on the driver when `queryMany` is called; otherwise a
+    * portfolio-style range read is ONE Spark job over N pruned scans
+    * (directory + row-group pruning applies per branch exactly as in
+    * [[query]]) instead of N driver round-trips. Rejects stores whose
+    * schema already carries an `ITEM` column — the origin column would
+    * silently duplicate the name otherwise.
     */
   def queryMany(
       keys: Seq[String],
@@ -3218,12 +3315,14 @@ class Store private[sources] (
     val resolved = keys.map(validateKey).distinct
     if (resolved.isEmpty)
       throw new SchemaError("queryMany requires at least one key")
-    resolved
-      .map { k =>
-        val df = query(k, start, end, columns)
-        df.select(lit(k).as("ITEM") +: df.columns.map(col).toIndexedSeq: _*)
-      }
-      .reduce(_.unionByName(_))
+    val outCols = projection(columns)
+    sliceOnDriver(resolved, start, end, outCols, Some("ITEM")).getOrElse(
+      resolved
+        .map { k =>
+          val df = scanSlice(k, start, end, outCols)
+          df.select(lit(k).as("ITEM") +: df.columns.map(col).toIndexedSeq: _*)
+        }
+        .reduce(_.unionByName(_)))
   }
 
   /** Reference-default bounds: start=1678-01-01 (store.py:250-251),

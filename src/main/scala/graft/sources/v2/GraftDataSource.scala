@@ -20,7 +20,8 @@ import scala.jdk.CollectionConverters._
 /** SQL/catalog front door for Store items: a DataSource V2 table
   * provider registered as format `graft`, so ANY Spark binding — SQL,
   * Python, R — can read an item as a table with the same pruning the
-  * Scala `store.query(...)` helper applies:
+  * Scala `store.query(...)` helper applies (which, unlike this lazy
+  * scan, reads a small slice on the driver when it is called):
   *
   * {{{
   *   spark.read.format("graft")

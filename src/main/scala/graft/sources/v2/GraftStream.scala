@@ -103,13 +103,9 @@ final class GraftScan(
     */
   private lazy val stats: V2Statistics = {
     val size: java.util.OptionalLong =
-      try {
-        val factor = SparkSession.active.conf
-          .getOption("spark.sql.sources.fileCompressionFactor")
-          .map(_.toDouble).getOrElse(1.0)
-        java.util.OptionalLong.of(
-          math.max(1L, (store.bytesUnder(batchRootsMemo) * factor).toLong))
-      } catch { case _: Exception => java.util.OptionalLong.empty() }
+      try java.util.OptionalLong.of(
+        SparkInternals.scanSize(SparkSession.active, store.bytesUnder(batchRootsMemo)))
+      catch { case _: Exception => java.util.OptionalLong.empty() }
     new V2Statistics {
       override def sizeInBytes(): java.util.OptionalLong = size
       override def numRows(): java.util.OptionalLong = java.util.OptionalLong.empty()

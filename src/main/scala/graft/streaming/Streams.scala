@@ -869,9 +869,11 @@ object Streams {
   def storeIngest(s: SparkSession, dir: String): DataFrame = {
     import graft.sources.Store
     val tmp = java.nio.file.Files.createTempDirectory("graft-stream-store").toString
-    // the returned DataFrame reads the store's files LAZILY, so the
-    // temp store cannot be deleted here — enqueue it for the single
-    // static exit sweep (one hook total, not one Thread per invocation)
+    // store.query reads a small slice on the driver when it is called,
+    // but a larger one is a distributed scan that reads the store's
+    // files LAZILY, so the temp store cannot be deleted here — enqueue
+    // it for the single static exit sweep (one hook total, not one
+    // Thread per invocation)
     sweepAtExit(tmp)
     val drive = driveSession(s)
     val store = Store.open(

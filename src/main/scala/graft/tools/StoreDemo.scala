@@ -51,7 +51,16 @@ object StoreDemo {
     println(s"[demo] rows in [$t0, $t1]: ${ranged.count()}")
     import org.apache.spark.sql.functions._
     ranged.agg(min(col("TS")), max(col("TS"))).show(false)
+    // a slice this small is read on the driver when query is called: its
+    // plan is a LocalTableScan; with the driver read off
+    // (autoBroadcastJoinThreshold -1) the same query is the distributed
+    // scan, bucket-pruned with the bounds pushed to Parquet
     ranged.explain("formatted")
+    val threshold = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.getOption(threshold)
+    spark.conf.set(threshold, "-1")
+    try store.query("events", Some(t0), Some(t1)).explain("formatted")
+    finally saved.fold(spark.conf.unset(threshold))(spark.conf.set(threshold, _))
 
     store.append("events", events)
     println(s"[demo] after re-append (idempotent): ${store("events").count()}")

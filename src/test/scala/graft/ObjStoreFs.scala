@@ -136,6 +136,15 @@ class ObjStoreFs extends RawLocalFileSystem {
     super.delete(f, recursive)
   }
 
+  override def open(f: HPath, bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
+    if (f.getName.endsWith(".parquet"))
+      ObjStoreFs.beforeDataOpen.foreach { act =>
+        ObjStoreFs.beforeDataOpen = None // one-shot
+        act()
+      }
+    super.open(f, bufferSize)
+  }
+
   override def rename(src: HPath, dst: HPath): Boolean = {
     ObjStoreFs.renames.add((src.toUri.getPath, dst.toUri.getPath))
     if (!exists(src)) return false
@@ -208,6 +217,12 @@ object ObjStoreFs {
     */
   @volatile var crashOnDeleteOf: Option[String] = None
 
+  /** When set: runs before the next open of a `.parquet` file
+    * (one-shot; the action may re-arm it) — a concurrent rewrite landing
+    * between a reader's listing and its read.
+    */
+  @volatile var beforeDataOpen: Option[() => Unit] = None
+
   /** Diagnostic: print every delete the FS sees (never armed by specs —
     * a human investigating which real delete a kill point hit).
     */
@@ -216,5 +231,6 @@ object ObjStoreFs {
   def reset(): Unit = {
     renames.clear(); crash = None; haltOnCreatePath = None
     haltOnDeletePath = None; deleteSkips.set(0); crashOnDeleteOf = None
+    beforeDataOpen = None
   }
 }

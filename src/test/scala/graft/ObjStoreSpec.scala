@@ -127,6 +127,43 @@ class ObjStoreSpec extends AnyFunSuite {
     assert(ctlRenames(dir).isEmpty, s"drop/vacuum must not rename: ${ctlRenames(dir)}")
   }
 
+  test("driver-read slice: a file swapped out between listing and read gives the full slice or a named error") {
+    // a whole-item rewrite (compact: fresh version, old one deleted) and
+    // an in-place bucket rewrite (compactBuckets) land after query()
+    // listed the files and before it reads the first one
+    val rewrites = Seq[(Option[String], Store => Unit)](
+      None -> (_.compact("MSFT")), Some("month") -> compactJan)
+    for ((bucket, rewrite) <- rewrites) {
+      ObjStoreFs.reset()
+      val s = open(objDir(), bucket)
+      s.write("MSFT", bars(31))
+      s.appendNewOnly("MSFT", bars(31, seed = 12))
+      val want = s("MSFT").collect().map(_.toSeq).toSet
+      assert(want.size == 62)
+      var fired = 0
+      ObjStoreFs.beforeDataOpen = Some(() => { rewrite(s); fired += 1 })
+      val got = s.query("MSFT")
+      assert(fired == 1 && TestSpark.wasReadOnDriver(got), s"bucket=$bucket fired=$fired")
+      val rows = got.collect()
+      assert(rows.length == 62 && rows.map(_.toSeq).toSet == want, s"bucket=$bucket")
+    }
+    // a rewrite before EVERY read attempt: the bounded retry gives up
+    // with the vanished file's error instead of returning part of it
+    ObjStoreFs.reset()
+    val s = open(objDir())
+    s.write("MSFT", bars(31))
+    var fired = 0
+    def arm(): Unit = ObjStoreFs.beforeDataOpen = Some(() => { s.compact("MSFT"); fired += 1; arm() })
+    arm()
+    val e = try { s.query("MSFT"); None } catch { case e: Exception => Some(e) }
+    ObjStoreFs.reset()
+    assert(fired == 6, s"one read plus five retries, got $fired")
+    assert(Iterator.iterate[Throwable](e.orNull)(_.getCause).takeWhile(_ != null)
+      .exists(c => c.isInstanceOf[java.io.FileNotFoundException] && c.getMessage.contains(".parquet")),
+      s"expected the vanished file named: $e")
+    assert(s("MSFT").count() == 31)
+  }
+
   test("swap crash in the MOVE-OUT's delete phase: live split in half, vacuum restores the OLD item exactly") {
     ObjStoreFs.reset()
     val dir = objDir()

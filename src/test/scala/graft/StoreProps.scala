@@ -453,6 +453,76 @@ object StoreProps extends Properties("Store") {
     ok
   }
 
+  /** `Store.query` and `queryMany` read small slices on the driver; with
+    * the driver read off (threshold -1) the same calls are distributed
+    * scans. Both must give the same schema and the same row multiset on
+    * bucketed and unbucketed stores, for unbounded, single-instant,
+    * empty and arbitrary ranges, mixed-case projections, NULL / NaN /
+    * ±0.0 values, and a non-UTC session time zone at read time.
+    */
+  property("driver-read slices ≡ distributed scans: rows and schema") =
+    forAll(Gen.choose(1L, 1000000L)) { seed => driverReadEqualsScan(seed) }
+
+  private def driverReadEqualsScan(seed: Long): Boolean = {
+    val rnd = new scala.util.Random(seed)
+    val bucket = Seq(None, Some("day"), Some("month"))(rnd.nextInt(3))
+    val s = Store.open(spark, Files.createTempDirectory("graft-prop-q").toString,
+      cols = Some(Seq("v" -> org.apache.spark.sql.types.DoubleType,
+        "w" -> org.apache.spark.sql.types.DoubleType,
+        "x" -> org.apache.spark.sql.types.LongType,
+        "label" -> org.apache.spark.sql.types.StringType)),
+      index = Some("ts"), bucket = bucket)
+    val t0 = java.time.Instant.parse("2021-01-01T00:00:00Z")
+    val stepSec = Seq(5 * 3600L, 11 * 3600L, 3 * 86400L)(rnd.nextInt(3))
+    def rows(from: Int, n: Int) = (from until from + n).map { i =>
+      (Timestamp.from(t0.plusSeconds(i * stepSec + rnd.nextInt(3600))),
+        i % 5 match { case 0 => Double.NaN; case 1 => -0.0; case 2 => 0.0; case _ => rnd.nextDouble() },
+        if (i % 3 == 0) None else Some(if (i % 2 == 0) -0.0 else rnd.nextGaussian()),
+        if (i % 4 == 0) None else Some(rnd.nextLong()),
+        if (i % 6 == 0) None else Some(s"r$i"))
+    }
+    def df(rs: Seq[(Timestamp, Double, Option[Double], Option[Long], Option[String])]) =
+      rs.toDF("ts", "v", "w", "x", "label")
+    val n = 10 + rnd.nextInt(40)
+    val kRows = rows(0, n)
+    s.write("K", df(kRows))
+    s.appendNewOnly("K", df(rows(n, 1 + rnd.nextInt(10)))) // a second file
+    s.write("L", df(rows(rnd.nextInt(n), n)))
+    val times = kRows.map(_._1)
+    def instant(): Timestamp = new Timestamp(
+      times.head.getTime - 86400000L + (rnd.nextDouble() * (times.last.getTime - times.head.getTime + 2 * 86400000L)).toLong)
+    val (start, end) = rnd.nextInt(5) match {
+      case 0 => val t = times(rnd.nextInt(times.size)); (Some(t), Some(t)) // one instant
+      case 1 => val (a, b) = (instant(), instant()) // empty: start after end
+        (Some(if (a.after(b)) a else b), Some(if (a.after(b)) b else a))
+      case _ =>
+        def bound() = if (rnd.nextInt(4) == 0) None else Some(instant())
+        (bound(), bound())
+    }
+    def mixedCase(c: String) = c.map(ch => if (rnd.nextBoolean()) ch.toUpper else ch.toLower)
+    val columns =
+      if (rnd.nextInt(3) == 0) None
+      else Some(rnd.shuffle(Seq("ts", "v", "w", "x", "label")).take(1 + rnd.nextInt(5)).map(mixedCase))
+    val tz = Seq("UTC", "America/New_York", "Asia/Kolkata", "Pacific/Chatham")(rnd.nextInt(4))
+
+    def canon(d: DataFrame) = (d.schema, d.collect().toSeq.map(_.toSeq.map {
+      case v: Double => java.lang.Double.doubleToLongBits(v) // NaN and -0.0 kept apart
+      case v => v
+    }).groupBy(identity).map { case (r, rs) => r -> rs.size })
+    def same(what: String, local: => DataFrame): Boolean = {
+      val (l, d) = (local, TestSpark.distributed(local))
+      val (cl, cd) = (canon(l), canon(d))
+      val ok = TestSpark.wasReadOnDriver(l) && !TestSpark.wasReadOnDriver(d) && cl == cd
+      if (!ok) System.err.println(s"[driver-read-prop] seed=$seed $what bucket=$bucket tz=$tz " +
+        s"range=($start, $end) columns=$columns\n driver=$cl\n scan=$cd")
+      ok
+    }
+    TestSpark.withConf("spark.sql.session.timeZone", tz) {
+      same("query", s.query("K", start, end, columns)) &&
+        same("queryMany", s.queryMany(Seq("k", "L"), start, end, columns))
+    }
+  }
+
   property("normalization is case-insensitive in column names") =
     forAll(Gen.choose(5, 15), Gen.choose(1L, 999L)) { (n, seed) =>
       val s = freshStore()

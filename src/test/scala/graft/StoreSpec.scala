@@ -154,10 +154,11 @@ class StoreSpec extends AnyFunSuite {
       if (parts.next().getFileName.toString.startsWith("__bucket=")) sawBucketDir = true
     }
     assert(sawBucketDir, "expected __bucket=... partition directories")
-    // range query: correct inclusive result + PartitionFilters in plan
+    // range query: correct inclusive result + PartitionFilters in the
+    // distributed plan
     val t0 = Timestamp.valueOf("2015-02-01 00:00:00")
     val t1 = Timestamp.valueOf("2015-03-01 00:00:00")
-    val q = s.query("MSFT", Some(t0), Some(t1))
+    val q = TestSpark.distributed(s.query("MSFT", Some(t0), Some(t1)))
     assert(q.count() == 29)
     val plan = q.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("__bucket"),
@@ -475,12 +476,12 @@ class StoreSpec extends AnyFunSuite {
     val dir = tmpDir()
     val s = Store.open(spark, dir)
     s.write("MSFT", bars())
-    val q = s.query(
+    val q = TestSpark.distributed(s.query(
       "MSFT",
       Some(Timestamp.valueOf("2015-02-01 00:00:00")),
       Some(Timestamp.valueOf("2015-03-01 00:00:00")),
       columns = Some(Seq("close", "Volume")) // case-insensitive
-    )
+    ))
     assert(q.columns.toSeq == Seq("CLOSE", "VOLUME"))
     assert(q.count() == 29) // inclusive bounds
     // the scan must decode only the index (for the residual range
@@ -493,6 +494,77 @@ class StoreSpec extends AnyFunSuite {
       s"unpruned scan: $readSchema")
     // unknown column fails fast
     intercept[SchemaError](s.query("MSFT", None, None, Some(Seq("nope"))))
+  }
+
+  test("driver-read slice: bucket pruning keeps an out-of-range corrupt file unread") {
+    val dir = tmpDir()
+    val s = Store.open(spark, dir, bucket = Some("month"))
+    s.write("MSFT", bars(400))
+    Files.write(LiveDir(s, dir, "MSFT").resolve("__bucket=2015-06").resolve("part-corrupt.parquet"),
+      "not parquet".getBytes)
+    val t0 = Timestamp.valueOf("2015-02-01 00:00:00")
+    val t1 = Timestamp.valueOf("2015-03-01 00:00:00")
+    val q = s.query("MSFT", Some(t0), Some(t1))
+    assert(TestSpark.wasReadOnDriver(q))
+    assert(q.count() == 29)
+    // the file is listed and read when its bucket is in range
+    intercept[Exception](s.query("MSFT", Some(t0), Some(Timestamp.valueOf("2015-06-15 00:00:00"))))
+  }
+
+  test("driver-read slice: the LocalRelation holds only the index and the requested columns") {
+    val s = Store.open(spark, tmpDir())
+    s.write("MSFT", bars())
+    val q = s.query(
+      "MSFT",
+      Some(Timestamp.valueOf("2015-02-01 00:00:00")),
+      Some(Timestamp.valueOf("2015-03-01 00:00:00")),
+      columns = Some(Seq("close", "Volume")))
+    assert(q.columns.toSeq == Seq("CLOSE", "VOLUME"))
+    assert(q.count() == 29)
+    val leaves = q.queryExecution.analyzed.collectLeaves()
+    assert(leaves.size == 1 && TestSpark.wasReadOnDriver(q), leaves.mkString("\n"))
+    assert(leaves.head.output.map(_.name) == Seq("DATE", "CLOSE", "VOLUME"))
+    // the row-based parquet reader (schemas the vectorized one cannot
+    // decode) reads the same rows
+    val rowBased = TestSpark.withConf("spark.sql.parquet.enableVectorizedReader", "false") {
+      s.query("MSFT", Some(Timestamp.valueOf("2015-02-01 00:00:00")),
+        Some(Timestamp.valueOf("2015-03-01 00:00:00")), columns = Some(Seq("close", "Volume")))
+    }
+    assert(TestSpark.wasReadOnDriver(rowBased))
+    assert(rowBased.collect().toSeq == q.collect().toSeq)
+  }
+
+  test("driver-read slice: collecting a small query starts no Spark job") {
+    val s = Store.open(spark, tmpDir(), bucket = Some("day"))
+    s.write("MSFT", bars(100))
+    val t0 = Timestamp.valueOf("2015-02-01 00:00:00")
+    val t1 = Timestamp.valueOf("2015-03-01 00:00:00")
+    val (rows, jobs) = TestSpark.jobsDuring(s.query("MSFT", Some(t0), Some(t1)).collect())
+    assert(rows.length == 29 && jobs == 0, s"driver read started $jobs jobs")
+    val (many, manyJobs) =
+      TestSpark.jobsDuring(s.queryMany(Seq("MSFT"), Some(t0), Some(t1)).collect())
+    assert(many.length == 29 && manyJobs == 0, s"driver queryMany started $manyJobs jobs")
+    val (_, scanJobs) =
+      TestSpark.jobsDuring(TestSpark.distributed(s.query("MSFT", Some(t0), Some(t1))).collect())
+    assert(scanJobs > 0, "the distributed branch runs a job: the counter sees it")
+  }
+
+  test("queryMany decides on the total size: small keys that add up past the limit are scanned") {
+    val s = Store.open(spark, tmpDir())
+    s.write("MSFT", bars(400))
+    s.write("AAPL", bars(400, seed = 8))
+    val (a, b) = (s.describe("MSFT").bytes, s.describe("AAPL").bytes)
+    TestSpark.withConf("spark.sql.sources.fileCompressionFactor", "1.0") {
+      TestSpark.withConf("spark.sql.autoBroadcastJoinThreshold", (math.max(a, b) + 1).toString) {
+        assert(TestSpark.wasReadOnDriver(s.query("MSFT")) && TestSpark.wasReadOnDriver(s.query("AAPL")))
+        val both = s.queryMany(Seq("MSFT", "AAPL"))
+        assert(!TestSpark.wasReadOnDriver(both), "a + b bytes are past the limit")
+        assert(both.count() == 800)
+      }
+      TestSpark.withConf("spark.sql.autoBroadcastJoinThreshold", (a + b).toString) {
+        assert(TestSpark.wasReadOnDriver(s.queryMany(Seq("MSFT", "AAPL"))))
+      }
+    }
   }
 
   test("drop removes one item, leaves the store and other items intact") {

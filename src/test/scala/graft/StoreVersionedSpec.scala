@@ -196,9 +196,9 @@ class StoreVersionedSpec extends AnyFunSuite {
     val s = Store.open(spark, dir, bucket = Some("month"))
     s.write("EVT", bars(100))
     // directory pruning reaches the scan through the version dir
-    val q = s.query("EVT",
+    val q = TestSpark.distributed(s.query("EVT",
       Some(Timestamp.valueOf("2022-02-01 00:00:00")),
-      Some(Timestamp.valueOf("2022-02-10 00:00:00")))
+      Some(Timestamp.valueOf("2022-02-10 00:00:00"))))
     val plan = q.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters"), s"no partition filters:\n$plan")
     assert(q.count() == 10)

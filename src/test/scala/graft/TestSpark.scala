@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.GraftTestBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 
 /** One shared local session for the whole test run. */
 object TestSpark {
@@ -48,4 +49,27 @@ object TestSpark {
       sc.removeSparkListener(listener)
     }
   }
+
+  /** Runs `body` with session conf `key` set to `value`, restoring the
+    * previous setting afterwards.
+    */
+  def withConf[T](key: String, value: String)(body: => T): T = {
+    val conf = session.conf
+    val prev = conf.getOption(key)
+    conf.set(key, value)
+    try body
+    finally prev.fold(conf.unset(key))(conf.set(key, _))
+  }
+
+  /** Runs `body` with `Store.query`'s driver read off, so every slice it
+    * builds is the distributed scan.
+    */
+  def distributed[T](body: => T): T =
+    withConf("spark.sql.autoBroadcastJoinThreshold", "-1")(body)
+
+  /** Whether `df` was read on the driver: every leaf of its analyzed
+    * plan is a `LocalRelation`.
+    */
+  def wasReadOnDriver(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation])
 }

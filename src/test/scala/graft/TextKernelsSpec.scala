@@ -195,6 +195,19 @@ class TextKernelsSpec extends AnyFunSuite {
     }
   }
 
+  test("shingleHashes dedup table: sized in Long, named error past 2^29 shingles") {
+    assert(TextKernels.dedupTableCapacity(0) == 4)
+    assert(TextKernels.dedupTableCapacity(2) == 4)
+    assert(TextKernels.dedupTableCapacity(3) == 8)
+    assert(TextKernels.dedupTableCapacity(1000) == 2048)
+    // the old Int arithmetic overflowed 2n here and never terminated
+    assert(TextKernels.dedupTableCapacity(TextKernels.MaxShingles) == (1 << 30))
+    for (n <- Seq(TextKernels.MaxShingles + 1, (1 << 30) + 1, Int.MaxValue)) {
+      val e = intercept[IllegalArgumentException](TextKernels.dedupTableCapacity(n))
+      assert(e.getMessage.contains("shingleHashes") && e.getMessage.contains(n.toString))
+    }
+  }
+
   test("shingleHashes byte-slice path equals hash-of-distinctShingles on adversarial docs") {
     def reference(text: String, k: Int): Seq[Long] =
       TextKernels.distinctShingles(text, k).map(TextKernels.hashString).sorted.toSeq
