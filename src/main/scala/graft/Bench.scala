@@ -549,7 +549,7 @@ object Bench {
           headlineElevated.mkString(", "))
     // flag adjudication (r15 verdict task #6): a flag that SURVIVES
     // re-sampling arrives pre-evidenced instead of costing a manual
-    // AdjudicateContainment round-trip — two AQE-FINAL plan skeletons
+    // re-run round-trip — two AQE-FINAL plan skeletons
     // are captured for it (toRdd drains AdaptiveSparkPlanExec to
     // isFinalPlan=true; a noop-sink write would print the pre-adaptive
     // plan, the mistake the containment adjudication corrected).

@@ -272,6 +272,36 @@ object LlmOps {
   private[operators] def probeCodes(code: Int, bits: Int, maxHamming: Int): Seq[Int] =
     (0 until (1 << bits)).filter(c => Integer.bitCount(c ^ code) <= maxHamming)
 
+  /** The IVF coarse layer of [[ivfCandidates]], [[semDedup]],
+    * [[ivfBatchCandidates]] and [[annIvfPq]]: the `k` hash-sampled
+    * centroids of `e` as (`cid`, `cemb`). Callers choose whether to
+    * cache it.
+    */
+  private def ivfCentroids(e: DataFrame, k: Int): DataFrame =
+    e.orderBy(xxhash64(col("vec_id")).asc, col("vec_id").asc)
+      .limit(k)
+      .select(col("vec_id").as("cid"), col("emb").as("cemb"))
+
+  /** Shuffle-free nearest-centroid assignment (r18, the embed_pq_encode
+    * pattern): the k-row centroid table packs into ONE broadcast row and
+    * the argmax folds inside the row via the codegen'd CosArgmaxCid
+    * kernel — same per-pair cosine accumulation and the same (csim, cid)
+    * struct-max tie-break as the crossJoin + groupBy(vec_id) it
+    * replaced, whose struct-typed buffer forced SortAggregate (k-fold
+    * row explosion, two corpus sorts, a corpus-wide exchange) and whose
+    * join-back re-keyed the corpus a second time. Packs `cents` at the
+    * call and returns `assign(rows, name)`, which adds column `name`:
+    * the cid nearest each row's `emb`. Packing at the call keeps each
+    * caller's plan-building order, so its plan is unchanged.
+    */
+  private def centroidAssigner(cents: DataFrame): (DataFrame, String) => DataFrame = {
+    val packed = cents.agg(sort_array(collect_list(struct(col("cid"), col("cemb")))).as("cbs"))
+    (rows, name) =>
+      rows.crossJoin(broadcast(packed))
+        .withColumn(name, VectorKernels.cosArgmaxCid(col("emb"), col("cbs")))
+        .drop("cbs")
+  }
+
   /** IVF candidate set for the query vector (vec_id 0): every corpus
     * vector whose nearest sampled centroid is one of the `probes`
     * centroids closest to the query, with `emb`/`probe` columns ready
@@ -289,30 +319,16 @@ object LlmOps {
     // corpus-sized scan (hash-ranked sample / probe filter). Caching
     // the constant-size frames computes each once per invocation —
     // intra-query reuse, never cross-run state.
-    val cents = e
-      .orderBy(xxhash64(col("vec_id")).asc, col("vec_id").asc)
-      .limit(centroids)
-      .select(col("vec_id").as("cid"), col("emb").as("cemb"))
-      .cache()
+    val cents = ivfCentroids(e, centroids).cache()
     val probe = e.filter(col("vec_id") === 0).select(col("emb").as("probe")).cache()
     CacheTracker.track("ivfCandidates", cents, probe)
-    // shuffle-free assignment (r18, the embed_pq_encode pattern): the
-    // k-row centroid table packs into ONE broadcast row and the argmax
-    // folds inside the row via the codegen'd CosArgmaxCid kernel —
-    // same per-pair cosine accumulation and the same (csim, cid)
-    // struct-max tie-break as the crossJoin + groupBy(vec_id) it
-    // replaces, whose struct-typed buffer forced SortAggregate (k-fold
-    // row explosion, two corpus sorts, a corpus-wide exchange) and
-    // whose join-back re-keyed the corpus a second time.
-    val packed = cents.agg(sort_array(collect_list(struct(col("cid"), col("cemb")))).as("cbs"))
+    val assign = centroidAssigner(cents)
     val probeClusters = cents
       .crossJoin(broadcast(probe))
       .orderBy(CosineSimilarity.cosineSim(col("cemb"), col("probe")).desc, col("cid"))
       .limit(probes)
       .select(col("cid").as("cluster"))
-    e.crossJoin(broadcast(packed))
-      .withColumn("cluster", VectorKernels.cosArgmaxCid(col("emb"), col("cbs")))
-      .drop("cbs")
+    assign(e, "cluster")
       .join(broadcast(probeClusters), "cluster")
       .filter(col("vec_id") =!= 0)
       .crossJoin(broadcast(probe))
@@ -346,26 +362,15 @@ object LlmOps {
   private[graft] def semDedup(
       s: SparkSession, e0: DataFrame, centroids: Int, thr: Double): DataFrame = {
     val e = e0.withColumn("emb", toDouble(col("embedding")))
-    val cents = e
-      .orderBy(xxhash64(col("vec_id")).asc, col("vec_id").asc)
-      .limit(centroids)
-      .select(col("vec_id").as("cid"), col("emb").as("cemb"))
+    val cents = ivfCentroids(e, centroids)
     // persist: the tagged table feeds both sides of the cell self-join.
     // The cache is registered in the session CacheManager for the
     // lifetime of the returned (lazy) plan — it cannot be unpersisted
     // here. Verify/Bench clearCache between queries; a long-lived
     // session embedding this op should spark.catalog.clearCache() (or
     // df.unpersist the consumed plan) once the result is materialized.
-    // shuffle-free assignment (r18, the embed_pq_encode pattern — see
-    // ivfCandidates): cell = CosArgmaxCid over the packed centroid
-    // row, replacing crossJoin + SortAggregate + a corpus exchange +
-    // the join-back with a narrow projection
-    val packed = cents.agg(sort_array(collect_list(struct(col("cid"), col("cemb")))).as("cbs"))
-    val tagged = e
-      .crossJoin(broadcast(packed))
-      .select(
-        VectorKernels.cosArgmaxCid(col("emb"), col("cbs")).as("cell"),
-        col("vec_id"), col("emb"))
+    val tagged = centroidAssigner(cents)(e, "cell")
+      .select(col("cell"), col("vec_id"), col("emb"))
       .persist()
     // sequence the shared cache build BEFORE AQE plans the self-join:
     // un-materialized, the join's two sides race to cache the same
@@ -418,17 +423,10 @@ object LlmOps {
     // cents feeds both the packed assignment row and the per-query
     // probe selection — cache the k-row frame (the ivfCandidates
     // discipline) instead of re-deriving its corpus-sized sample scan
-    val cents = e
-      .orderBy(xxhash64(col("vec_id")).asc, col("vec_id").asc)
-      .limit(centroids)
-      .select(col("vec_id").as("cid"), col("emb").as("cemb"))
-      .cache()
+    val cents = ivfCentroids(e, centroids).cache()
     CacheTracker.track("ivfBatchCandidates", cents)
     val corpus = e.filter(col("vec_id") % 100 =!= 0)
-    // shuffle-free assignment via CosArgmaxCid (see ivfCandidates) —
-    // the corpus is tagged in a narrow projection, no SortAggregate,
-    // no corpus exchange, no join-back
-    val packed = cents.agg(sort_array(collect_list(struct(col("cid"), col("cemb")))).as("cbs"))
+    val assign = centroidAssigner(cents)
     val queries = e.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("q_id"), col("emb").as("qv"))
     val probeC = queries
@@ -444,10 +442,7 @@ object LlmOps {
       .agg(slice(array_sort(collect_list(col("p"))), 1, probes).as("ps"))
       .select(col("q_id"), explode(col("ps")).as("p"))
       .select(col("q_id"), col("p.cid").as("cluster"))
-    corpus
-      .crossJoin(broadcast(packed))
-      .withColumn("cluster", VectorKernels.cosArgmaxCid(col("emb"), col("cbs")))
-      .drop("cbs")
+    assign(corpus, "cluster")
       .join(broadcast(probeC), "cluster")
       .join(broadcast(queries), "q_id")
   }
@@ -509,19 +504,8 @@ object LlmOps {
     // several consumers each; uncached, every reference re-derived a
     // corpus-sized pipeline (the round-17 plan counted 13 parquet
     // scans). Cached = computed once per invocation, intra-query only.
-    val cents = e
-      .orderBy(xxhash64(col("vec_id")).asc, col("vec_id").asc)
-      .limit(centroids)
-      .select(col("vec_id").as("cid"), col("emb").as("cemb"))
-      .cache()
-    // shuffle-free coarse assignment via CosArgmaxCid (see
-    // ivfCandidates): narrow projection instead of crossJoin +
-    // SortAggregate + corpus exchange
-    val packedIvf =
-      cents.agg(sort_array(collect_list(struct(col("cid"), col("cemb")))).as("cbs"))
-    val assigned = corpus
-      .crossJoin(broadcast(packedIvf))
-      .withColumn("cluster", VectorKernels.cosArgmaxCid(col("emb"), col("cbs")))
+    val cents = ivfCentroids(e, centroids).cache()
+    val assigned = centroidAssigner(cents)(corpus, "cluster")
       .select(col("vec_id"), col("cluster"))
     val probe = e.filter(col("vec_id") === 0).select(col("emb").as("probe")).cache()
     val probeClusters = cents

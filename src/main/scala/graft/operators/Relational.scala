@@ -961,6 +961,8 @@ object Relational {
           ).as("corr")
         ).orderBy("event_type")
       },
+      // + 0.0: the pinned ±0.0 normalization — DuckDB's round keeps
+      // -0.0 (round(-1e-9, 6) = -0.0), Spark's returns +0.0
       Some(
         s"""WITH t AS (SELECT event_type,
           |             CAST(hour(ts) AS BIGINT) AS x,
@@ -984,7 +986,7 @@ object Relational {
           |      / (sqrt(CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
           |              - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
           |         * sqrt(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
-          |                - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))), 6)
+          |                - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))), 6) + 0.0
           |  END AS corr
           |FROM m ORDER BY event_type""".stripMargin
       )
@@ -1174,7 +1176,7 @@ object Relational {
       // single-field extraction via from_json with the narrowest
       // schema, not get_json_object: both parse per row, but the
       // schema'd Jackson path is measurably cheaper through this
-      // query's sort (JsonBench receipt, sf0.1 medians of 5:
+      // query's sort (BASELINE.md receipt, sf0.1 medians of 5:
       // from_json+sort 0.82 s vs get_json_object+sort 1.02 s —
       // closing the round-10 1.32x ratio to ~1.0x of baseline).
       // Semantics identical here: props is always {"k": <int>}

@@ -903,6 +903,8 @@ object TimeSeries {
           ).as("corr")
         ).orderBy("type_x", "type_y", "slot")
       },
+      // + 0.0: the pinned ±0.0 normalization — DuckDB's round keeps
+      // -0.0 (round(-1e-9, 6) = -0.0), Spark's returns +0.0
       Some(
         s"""WITH b AS (SELECT event_type, epoch_us(ts) // 3600000000 AS slot,
           |             ${Grid.gridSql("max(value)", "100")} AS c
@@ -932,7 +934,7 @@ object TimeSeries {
           |      / (sqrt(CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
           |              - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
           |         * sqrt(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
-          |                - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))), 6)
+          |                - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))), 6) + 0.0
           |  END AS corr
           |FROM w ORDER BY type_x, type_y, slot""".stripMargin
       )

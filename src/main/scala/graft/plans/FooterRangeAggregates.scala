@@ -11,37 +11,45 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, DataSourceV2ScanRelation}
 import org.apache.spark.sql.types.{DateType, IntegerType, LongType, TimestampType}
 
-/** Footer-exact RANGED aggregates — the daily-report shape:
+/** Footer-exact aggregates: the ONE place that answers an aggregate
+  * over a graft relation from parquet footer statistics instead of a
+  * scan. Three shapes, all count(*) / count(col) / min/max(<trusted-type
+  * col>):
   *
-  * {{{ SELECT count(*) FROM graft.EVENTS WHERE TS >= a AND TS < b }}}
+  * {{{
+  *   SELECT count(*), min(TS), max(TS) FROM graft.EVENTS            -- unfiltered
+  *   SELECT count(*) FROM graft.EVENTS WHERE TS >= a AND TS < b     -- ranged
+  *   SELECT date_trunc('DAY', TS), count(*) FROM graft.EVENTS GROUP BY 1
+  * }}}
   *
-  * The DSv2 aggregate pushdown ([[graft.sources.v2.GraftScanBuilder]])
-  * answers the FILTERLESS shapes from parquet footers, but Spark only
-  * offers an aggregation to a scan builder when no post-scan filter
-  * remains — and the graft scan declares every filter residual (bucket
-  * pruning is a superset; exactness must never ride on pushdown), so a
-  * WHERE always leaves a Filter node and the DSv2 path can never fire.
-  * This rule closes that gap one level up, where the whole shape is
-  * visible: a global (no GROUP BY) count/min/max aggregate over an
-  * index-range filter over a graft relation is answered from
-  * [[Store.footerAggInRange]] — each pruned file classifies by its
-  * footer min/max of the index as fully-inside / fully-outside /
-  * straddling; exact iff NO file straddles a bound (bucket-aligned
-  * ranges, the common report shape). Strict vs inclusive bounds are
-  * honored; rows with a NULL index never satisfy a range predicate and
-  * are excluded via footer null counts; min/max/count of NON-index
-  * columns additionally require zero null-index rows in the slice
-  * (their values could otherwise belong to excluded rows). Anything
-  * unprovable leaves the plan untouched — the ordinary (bucket-pruned)
-  * scan answers, so exactness never depends on this rule.
+  *  - UNFILTERED (no WHERE, no GROUP BY): every row of every item file
+  *    counts, null-index rows included, and every column stays
+  *    answerable — nothing is classified against a bound, so no file
+  *    needs index stats ([[Store.footerFiles]]).
+  *  - RANGED: each bucket-pruned file classifies by its footer min/max
+  *    of the index as fully-inside / fully-outside / straddling; exact
+  *    iff NO file straddles a bound (bucket-aligned ranges, the common
+  *    report shape — [[Store.footerFilesInRange]]). Strict vs inclusive
+  *    bounds are honored; rows with a NULL index never satisfy a range
+  *    predicate and are excluded via footer null counts; min/max/count
+  *    of NON-index columns additionally require zero null-index rows in
+  *    the slice (their values could otherwise belong to excluded rows).
+  *  - GROUPED by `date_trunc(idx)` (optionally with one more key, a
+  *    range WHERE allowed): see [[answerGrouped]].
+  *
+  * All three fold their files through [[Store.foldFooters]]. Anything
+  * unprovable — including a file that vanished since the listing —
+  * leaves the plan untouched: the ordinary (bucket-pruned) scan
+  * answers, so exactness never depends on this rule. It needs
+  * [[GraftExtensions]]; a session without it always scans.
   *
   * Injected as a PRE-CBO rule (runs ONCE, after the operator batches
   * and the V2 pushdown): the filter tree is constant-folded by then
   * (timestamp literals are epoch-µs longs), and a once-batch keeps the
   * footer sweep from re-running on every fixed-point iteration. At
-  * 100 TB this turns a month-aligned `count(*)` report into O(pruned
-  * files) metadata reads instead of a cluster-wide scan — the same
-  * footer-stat posture as the reference (oakstore store.py:255-264).
+  * 100 TB this turns a `count(*)` or a month-aligned report into
+  * O(pruned files) metadata reads instead of a cluster-wide scan — the
+  * footer-stat posture of the reference (oakstore store.py:255-264).
   */
 object FooterRangeAggregates extends Rule[LogicalPlan] with PredicateHelper {
 
@@ -65,24 +73,26 @@ object FooterRangeAggregates extends Rule[LogicalPlan] with PredicateHelper {
       } catch { case scala.util.control.NonFatal(_) => agg }
   }
 
-  /** The graft relation + filter condition under an optional
+  /** The graft table read by `plan`, a (pushed-down or not) V2 relation. */
+  private def graftTable(plan: LogicalPlan): Option[GraftTable] =
+    (plan match {
+      case r: DataSourceV2ScanRelation => Some(r.relation.table)
+      case r: DataSourceV2Relation => Some(r.table)
+      case _ => None
+    }).collect { case g: GraftTable => g }
+
+  /** The graft relation + optional filter condition under an optional
     * column-pruning Project (plain attributes only — an expression
     * Project could re-bind the names the matchers below rely on).
     */
-  private def unwrap(child: LogicalPlan): Option[(Expression, GraftTable)] = {
-    val filter = child match {
-      case Project(pl, f: Filter) if pl.forall(_.isInstanceOf[AttributeReference]) => f
-      case f: Filter => f
-      case _ => return None
+  private def unwrap(child: LogicalPlan): Option[(Option[Expression], GraftTable)] = {
+    val below = child match {
+      case Project(pl, c) if pl.forall(_.isInstanceOf[AttributeReference]) => c
+      case c => c
     }
-    val table = filter.child match {
-      case r: DataSourceV2ScanRelation => r.relation.table
-      case r: DataSourceV2Relation => r.table
-      case _ => return None
-    }
-    table match {
-      case g: GraftTable => Some((filter.condition, g))
-      case _ => None
+    below match {
+      case Filter(cond, r) => graftTable(r).map(g => (Some(cond), g))
+      case r => graftTable(r).map(g => (None, g))
     }
   }
 
@@ -194,12 +204,38 @@ object FooterRangeAggregates extends Rule[LogicalPlan] with PredicateHelper {
     for {
       (cond, table) <- unwrap(child)
       ps <- shapes(aggExprs)
-      (lo, hi) <- exactBounds(cond, table.store.indexName)
-      stats <- table.store.footerAggInRange(table.key, lo, hi)
+      stats <- cond match {
+        case None => Some(unfiltered(table))
+        case Some(c) => exactBounds(c, table.store.indexName)
+          .flatMap { case (lo, hi) => ranged(table, lo, hi) }
+      }
       values <- render(ps, stats)
     } yield LocalRelation(
       aggExprs.map(_.toAttribute), Seq(new GenericInternalRow(values)),
       isStreaming = false)
+
+  /** No WHERE: every row counts, every column stays answerable. */
+  private def unfiltered(table: GraftTable): Store.FooterAgg =
+    Store.foldFooters(table.store.footerFiles(table.key),
+      table.store.schema.fieldNames.toSeq, _.rows)
+
+  /** Under index bounds: `count(*)` is the non-null-index rows of the
+    * fully-inside files. The index column stays exact; the others only
+    * when no included file holds null-index rows (their values/nulls
+    * could belong to rows the range excludes).
+    */
+  private def ranged(
+      table: GraftTable,
+      lo: Option[(Long, Boolean)],
+      hi: Option[(Long, Boolean)]): Option[Store.FooterAgg] = {
+    val idx = table.store.indexName
+    table.store.footerFilesInRange(table.key, lo, hi).map { case (inc, _) =>
+      val idxClean = inc.forall(t => t.nonNullByCol(idx) == t.rows)
+      val cols = table.store.schema.fieldNames.toSeq
+        .filter(c => idxClean || c.equalsIgnoreCase(idx))
+      Store.foldFooters(inc, cols, _.nonNullByCol(idx))
+    }
+  }
 
   // ---- GROUP BY date_trunc(<level>, idx): the time-series profile ----
   //
@@ -230,15 +266,7 @@ object FooterRangeAggregates extends Rule[LogicalPlan] with PredicateHelper {
       case Project(_, f: Filter) => Some(f.condition)
       case _ => None
     }
-    val table = below match {
-      case r: DataSourceV2ScanRelation => r.relation.table
-      case r: DataSourceV2Relation => r.table
-      case _ => return None
-    }
-    val graft = table match {
-      case g: GraftTable => g
-      case _ => return None
-    }
+    val graft = graftTable(below).getOrElse(return None)
     val idx = graft.store.indexName
     var trunc: Option[TruncTimestamp] = None
     val clean = projList.forall {
@@ -372,23 +400,9 @@ object FooterRangeAggregates extends Rule[LogicalPlan] with PredicateHelper {
         key2: Option[Long],
         fs: Seq[Store.FileFooterStats])
         : Option[org.apache.spark.sql.catalyst.InternalRow] = {
-      // a column's min/max is exact only when EVERY file vouches for it
-      // (computed once — this set feeds both colMinMax and the
-      // exactness roster, which must never diverge)
-      val exactCols = fs.flatMap(_.minMaxOkCols).toSet
-        .filter(c => fs.forall(_.minMaxOkCols.contains(c)))
-      val stats = Store.FooterAgg(
-        files = fs.map(f => (f.path, f.rows)),
-        rows = fs.map(_.rows).sum,
-        nonNullCounts = table.store.schema.fieldNames.toSeq
-          .filter(c => fs.forall(_.nullCountOkCols.contains(c)))
-          .map(c => c -> fs.map(_.nonNullByCol(c)).sum).toMap,
-        colMinMax = exactCols.flatMap { c =>
-          val vs = fs.flatMap(_.minMaxByCol.get(c))
-          if (vs.isEmpty) None
-          else Some(c -> (vs.map(_._1).min, vs.map(_._2).max))
-        }.toMap,
-        minMaxExactCols = exactCols)
+      // every file of a group is whole: either all of its rows carry an
+      // index inside the group, or all are in the NULL group
+      val stats = Store.foldFooters(fs, table.store.schema.fieldNames.toSeq, _.rows)
       val vals = outs.map {
         case Key => Some(key.map(java.lang.Long.valueOf).orNull: Any)
         case Key2 => Some(key2.map { v =>

@@ -22,7 +22,10 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *  - `minhash_band(text, r)` — coarse MinHash LSH bucket (5-word shingles)
   *
   * Plus the [[NanosRangePushdown]] optimizer rule (natural-form
-  * timestamp predicates pushed into raw-nanos parquet scans).
+  * timestamp predicates pushed into raw-nanos parquet scans) and the
+  * [[FooterRangeAggregates]] rule, the only path that answers graft
+  * aggregates from parquet footers: a session without this extension
+  * always scans.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -58,9 +61,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     register(e, "minhash_band", classOf[TextExprs.MinhashBand], 2,
       c => TextExprs.MinhashBand(c(0), c(1)))
     e.injectOptimizerRule(_ => NanosRangePushdown)
-    // once-batch, post-V2-pushdown: ranged footer aggregates (a WHERE
-    // always leaves a Filter above the graft relation — see the rule's
-    // scaladoc for why the DSv2 aggregate pushdown can never see it)
+    // once-batch, post-V2-pushdown: footer-answered aggregates, with or
+    // without a WHERE (a WHERE always leaves a Filter above the graft
+    // relation, which only a rule sees)
     e.injectPreCBORule(_ => FooterRangeAggregates)
   }
 }

@@ -55,7 +55,6 @@ object Store {
     */
   val MinStart: Timestamp = Timestamp.valueOf("1678-01-01 00:00:00")
 
-  /** Metadata-only item statistics (see [[Store.describe]]). */
   /** One retained version of an item (see
     * [[Store!.versionsOf]]).
     */
@@ -67,6 +66,7 @@ object Store {
       modifiedMs: Long
   )
 
+  /** Metadata-only item statistics (see [[Store.describe]]). */
   case class ItemStats(
       rows: Long,
       minIndex: Option[Timestamp],
@@ -75,19 +75,17 @@ object Store {
       bytes: Long
   )
 
-  /** Footer-aggregate answers for the DSv2 aggregate/limit pushdown —
-    * see [[Store!.footerAgg]]. `nonNullCounts` carries only columns
-    * whose null counts are exact across every row group.
-    * `minMaxExactCols` are the integer-family columns (timestamp/date/
-    * long/int — fixed-width physical types, whose footer stats are
-    * never truncated and cannot be NaN-compromised) whose min/max is
-    * provably exact across every row-bearing group; `colMinMax` holds
-    * their values widened to Long (µs for timestamps, days for dates) —
-    * an exact column ABSENT from the map is provably all-null (SQL
-    * min/max → NULL).
+  /** Footer-aggregate answers of [[graft.plans.FooterRangeAggregates]],
+    * built only by [[foldFooters]]. `rows` is the slice's `count(*)`.
+    * `nonNullCounts` carries only columns whose null counts are exact
+    * across every row group. `minMaxExactCols` are the trusted-type
+    * columns ([[footerMinMaxTrusted]]) whose min/max is provably exact
+    * across every row-bearing group; `colMinMax` holds their values
+    * widened to Long (µs for timestamps, days for dates, sortable bits
+    * for float/double) — an exact column ABSENT from the map is
+    * provably all-null (SQL min/max → NULL).
     */
   private[graft] case class FooterAgg(
-      files: Seq[(String, Long)],
       rows: Long,
       nonNullCounts: Map[String, Long],
       colMinMax: Map[String, (Long, Long)],
@@ -108,19 +106,11 @@ object Store {
       minMaxByCol: Map[String, (Long, Long)],
       minMaxOkCols: Set[String])
 
-  /** Order-preserving (signed-long) encoding of a non-NaN double —
-    * Lucene's sortableDoubleBits shape: negatives flip mantissa and
-    * exponent so signed-long comparison matches IEEE order; the
-    * function is its own inverse. Footer double/float min/max travel
-    * through the engine's (Long, Long) stat plumbing in this encoding
-    * (min/max merging across files stays plain math.min/max); the
-    * render sites decode by the column's data type.
-    */
   /** THE data types whose parquet footer min/max this engine trusts —
-    * the single definition behind Store.mmStatCols, the DSv2 builder's
-    * gate, and the FooterRangeAggregates rule's gate (three consumers
-    * that must never drift: a type admitted in one but not another
-    * silently degrades to a scan with no error). Integer-family is
+    * the single definition behind Store.mmStatCols and the
+    * FooterRangeAggregates rule's gate (two consumers that must never
+    * drift: a type admitted in one but not the other silently degrades
+    * to a scan with no error). Integer-family is
     * exact by construction; float/double under the per-file NaN-proof
     * discipline ([[fileFooterAgg]]); string/binary refuse (truncation +
     * legacy-comparator hazards).
@@ -152,6 +142,14 @@ object Store {
     */
   private[graft] val NanProofProbedVintages: Set[(Int, Int)] = Set((1, 16))
 
+  /** Order-preserving (signed-long) encoding of a non-NaN double —
+    * Lucene's sortableDoubleBits shape: negatives flip mantissa and
+    * exponent so signed-long comparison matches IEEE order; the
+    * function is its own inverse. Footer double/float min/max travel
+    * through the engine's (Long, Long) stat plumbing in this encoding
+    * (min/max merging across files stays plain math.min/max); the
+    * render sites decode by the column's data type.
+    */
   private[graft] def sortableDoubleBits(d: Double): Long = {
     val b = java.lang.Double.doubleToLongBits(d)
     b ^ ((b >> 63) & 0x7fffffffffffffffL)
@@ -160,10 +158,10 @@ object Store {
   private[graft] def sortableBitsToDouble(l: Long): Double =
     java.lang.Double.longBitsToDouble(l ^ ((l >> 63) & 0x7fffffffffffffffL))
 
-  /** One file's footer aggregate for [[Store!.footerAgg]]. STATIC so
+  /** One file's footer statistics for [[Store!.sweepFooters]]. STATIC so
     * executor closures capture only strings — never a Store. Exactness
     * discipline: a row-bearing group with absent/untyped stats drops
-    * the column from the ok sets, which vetoes the aggregate pushdown
+    * the column from the ok sets, which vetoes the footer answer
     * for it. Min/max is tracked only for `mmCols`: the integer-family
     * columns (INT64/INT32 physical, where footer stats are exact by
     * construction — no truncation, no legacy-UTF-8-comparator
@@ -273,6 +271,28 @@ object Store {
       }
       FileFooterStats(f, rows, nonNull.toMap, nullOk.toSet, mm.toMap, mmOk.toSet)
     } finally r.close()
+  }
+
+  /** THE fold from per-file footer stats to a [[FooterAgg]], shared by
+    * the unfiltered, ranged and grouped footer answers. `rowsOf` is one
+    * file's contribution to `count(*)`; only `cols` may be answered. A
+    * column's null count (min/max) is exact only when EVERY file vouches
+    * for it; an empty file set is exact too — zero rows, NULL min/max.
+    */
+  private[graft] def foldFooters(
+      files: Seq[FileFooterStats], cols: Seq[String],
+      rowsOf: FileFooterStats => Long): FooterAgg = {
+    val exactMM = cols.filter(c => files.forall(_.minMaxOkCols.contains(c))).toSet
+    FooterAgg(
+      rows = files.map(rowsOf).sum,
+      nonNullCounts = cols.filter(c => files.forall(_.nullCountOkCols.contains(c)))
+        .map(c => c -> files.map(_.nonNullByCol(c)).sum).toMap,
+      colMinMax = exactMM.flatMap { c =>
+        val vs = files.flatMap(_.minMaxByCol.get(c))
+        if (vs.isEmpty) None // provably all-null: exact, SQL min/max = NULL
+        else Some(c -> (vs.map(_._1).min, vs.map(_._2).max))
+      }.toMap,
+      minMaxExactCols = exactMM)
   }
 
   /** [[fileFooterAgg]], or None when `f` vanished since it was listed. */
@@ -635,10 +655,6 @@ object Store {
     } finally in.close()
   }
 
-  /** Slot number of a lease-log entry name (`e<zero-padded seq>`) —
-    * the ONE parser of the log's naming scheme, shared by the protocol
-    * ([[Store!.withLease]]) and the diagnostic below.
-    */
   /** How the lease's slot claims achieve exclusive-create EXACTNESS on
     * a given filesystem scheme (protocol at [[Store!.withLease]]):
     *
@@ -702,6 +718,10 @@ object Store {
       case _ => ()
     }
 
+  /** Slot number of a lease-log entry name (`e<zero-padded seq>`) —
+    * the ONE parser of the log's naming scheme, shared by the protocol
+    * ([[Store!.withLease]]) and the diagnostic below.
+    */
   private[sources] def leaseSeqOf(name: String): Option[Long] =
     if (name.length > 1 && name.charAt(0) == 'e')
       scala.util.Try(name.substring(1).toLong).toOption
@@ -789,11 +809,6 @@ class Store private[sources] (
   private def stagingRoot: HPath = new HPath(base, StagingDir)
   private def leaseRoot: HPath = new HPath(base, LeaseDir)
 
-  /** Serialize same-item mutations within this JVM (see
-    * [[Store$.lockFor]]); reads never take it. When the store was
-    * opened with `writerLease = true`, the outermost hold additionally
-    * takes the cross-JVM [[withLease]] on the item.
-    */
   /** Columns whose footer min/max this engine trusts — the schema
     * projection of [[Store$.footerMinMaxTrusted]] (one shared type
     * predicate; see its scaladoc for the discipline).
@@ -802,6 +817,11 @@ class Store private[sources] (
     schema.fields.filter(f => Store.footerMinMaxTrusted(f.dataType))
       .map(_.name).toSet
 
+  /** Serialize same-item mutations within this JVM (see
+    * [[Store$.lockFor]]); reads never take it. When the store was
+    * opened with `writerLease = true`, the outermost hold additionally
+    * takes the cross-JVM [[withLease]] on the item.
+    */
   private def withItemLock[T](key: String)(body: => T): T = {
     val l = Store.lockFor(base, validateKey(key))
     l.lock()
@@ -1296,7 +1316,6 @@ class Store private[sources] (
       )
   }
 
-  /** Raw read keeping the partition column (for pruning predicates). */
   /** Raw item read, always under the store's OWN schema — never
     * inference. Three reasons: an EMPTY item (a just-created table, a
     * fully-retained-away one) has no footer to infer from and must
@@ -1575,57 +1594,15 @@ class Store private[sources] (
   private[sources] def dataFiles(key: String): Seq[String] =
     parquetFiles(key).map(_._1).sorted
 
-  /** Footer aggregates for the DSv2 aggregate-pushdown path (the SQL
-    * front door's `SELECT count(*) / min(idx) / max(idx) / count(col)`
-    * with no WHERE and no GROUP BY): the same footer sweep
-    * [[describe]] runs, but returning everything the scan builder
-    * needs to decide EXACTNESS — aggregate pushdown replaces a scan's
-    * answer, so a single row-group whose statistics are absent or
-    * untrustworthy must veto the pushdown, never silently skew it.
-    *
-    *  - `rows` is always exact: parquet footers record per-row-group row
-    *    counts unconditionally.
-    *  - min/max of every INTEGER-FAMILY column (timestamp/date/long/int
-    *    — the store's INT64/INT32 physical types, where footer stats
-    *    are exact by construction: fixed width, never truncated, no NaN
-    *    or comparator hazard; the index is just one of them, its µs
-    *    stats guaranteed by the store's own INT64-micros writer) are
-    *    exact iff EVERY row-bearing group either carries usable stats
-    *    or is provably all-null; otherwise the column leaves
-    *    `minMaxExactCols` and the caller must fall back to scanning.
-    *    Float/double (NaN ordering) and string/binary (legacy
-    *    comparators, possible truncation) never qualify.
-    *  - `nonNullCounts` holds `count(col)` answers (SQL count ignores
-    *    nulls) for exactly the columns whose null counts every group
-    *    records; columns with any unknown group are omitted.
-    *
-    * Reference lineage: the footer-stat posture of oakstore
-    * store.py:255-264 — metadata answers what metadata can, the scan is
-    * for everything else.
+  /** Footer stats of every current data file of the item, for the
+    * unfiltered footer answer; a file that vanished mid-sweep refuses
+    * with FileNotFoundException ([[footersOrRefuse]]).
     */
-  private[sources] def footerAgg(key: String): Store.FooterAgg = {
-    val paths = dataFiles(key)
-    val cols = schema.fieldNames.toSeq
-    val mmCols: Set[String] = mmStatCols
-    val perFile = footersOrRefuse(paths, cols, mmCols)
-    val rows = perFile.map(_.rows).sum
-    val exactNullCols = cols.filter(c => perFile.forall(_.nullCountOkCols.contains(c)))
-    val exactMM = mmCols.filter(c => perFile.forall(_.minMaxOkCols.contains(c)))
-    val colMinMax = exactMM.flatMap { c =>
-      val vs = perFile.flatMap(_.minMaxByCol.get(c))
-      if (vs.isEmpty) None // provably all-null: exact, SQL min/max = NULL
-      else Some(c -> (vs.map(_._1).min, vs.map(_._2).max))
-    }.toMap
-    Store.FooterAgg(
-      files = perFile.map(t => (t.path, t.rows)).sortBy(_._1).toIndexedSeq,
-      rows = rows,
-      nonNullCounts = exactNullCols.map(c => c -> perFile.map(_.nonNullByCol(c)).sum).toMap,
-      colMinMax = colMinMax,
-      minMaxExactCols = exactMM)
-  }
+  private[graft] def footerFiles(key: String): Array[Store.FileFooterStats] =
+    footersOrRefuse(dataFiles(key), schema.fieldNames.toSeq, mmStatCols)
 
   /** THE footer sweep — every footer read of the store goes through
-    * here: [[describe]], [[footerAgg]], [[footerFilesInRange]] and the
+    * here: [[describe]], [[footerFiles]], [[footerFilesInRange]] and the
     * canonical file count of [[compact]]/[[compactBuckets]]. Up to 256
     * files read on DRIVER threads: a small set reads faster there than
     * the scheduling overhead of a cluster job (this sits on the
@@ -1688,42 +1665,26 @@ class Store private[sources] (
     perFile
   }
 
-  /** Footer-exact aggregate over an INDEX-RANGE slice — the daily-report
-    * shape: `SELECT count(*) FROM item WHERE ts >= a AND ts < b`.
-    * Bounds are (epoch-µs, inclusive?) pairs so strict and non-strict
-    * comparisons both stay exact. The sweep runs over the bucket-PRUNED
-    * file set only; each file classifies by its footer min/max of the
-    * index:
+  /** The files of an INDEX-RANGE slice, with their footer stats — the
+    * daily-report shape `SELECT count(*) FROM item WHERE ts >= a AND
+    * ts < b`. Bounds are (epoch-µs, inclusive?) pairs so strict and
+    * non-strict comparisons both stay exact. The sweep runs over the
+    * bucket-PRUNED file set only; each row-bearing file classifies by
+    * its footer min/max of the index:
     *
-    *  - fully OUTSIDE the range → contributes nothing;
-    *  - fully INSIDE → its non-null-index row count (rows with a NULL
-    *    index never satisfy a range predicate, so they are excluded by
-    *    construction — which requires the file's index null count to be
-    *    footer-known);
-    *  - STRADDLING a bound → the answer depends on row-level data the
-    *    footer cannot see: the whole aggregation refuses (None) and the
-    *    query plans the ordinary scan.
+    *  - fully OUTSIDE the range → dropped;
+    *  - fully INSIDE → returned in the first array;
+    *  - STRADDLING a bound, or unclassifiable (index stats not
+    *    footer-exact) → the answer depends on row-level data the footer
+    *    cannot see: None, and the query plans the ordinary scan.
     *
-    * min/max/count of NON-index columns are exact only when every
-    * included file additionally has ZERO null-index rows (otherwise a
-    * value/null could belong to an excluded row); the returned
-    * FooterAgg encodes that by dropping non-index columns from its
-    * exact sets. An empty included set is exact: zero rows match, so
-    * counts are 0 and min/max are NULL. At 100 TB a bucket-aligned
-    * range report is O(pruned files) metadata reads instead of a
-    * cluster-wide scan — the same footer-stat posture as the unfiltered
-    * path (reference lineage: oakstore store.py:255-264).
-    */
-  /** The fully-inside files of an index-range slice, with their footer
-    * stats — or None when any file is unclassifiable (missing index
-    * stats) or STRADDLES a bound. Shared by [[footerAggInRange]] and
-    * the GROUP-BY face of [[graft.plans.FooterRangeAggregates]]. The
-    * SECOND array returns the row-bearing files whose index is provably
-    * ALL-NULL (a NULL index satisfies no range predicate, so they never
-    * join the included set — but with `lo = hi = None` their rows are
-    * real table rows forming SQL's NULL group, and a caller answering
-    * an UNFILTERED aggregation must account for them or refuse; see the
-    * round-13 ADVICE on the silently-dropped NULL group).
+    * The SECOND array returns the row-bearing files whose index is
+    * provably ALL-NULL: a NULL index satisfies no range predicate, so
+    * they never join the included set, but with `lo = hi = None` their
+    * rows are real table rows forming SQL's NULL group, which an
+    * unfiltered GROUP BY must account for. Consumed by
+    * [[graft.plans.FooterRangeAggregates]] (reference lineage: the
+    * footer-stat posture of oakstore store.py:255-264).
     */
   private[graft] def footerFilesInRange(
       key: String,
@@ -1771,45 +1732,6 @@ class Store private[sources] (
       i += 1
     }
     if (unprovable) None else Some((included.toArray, allNull.toArray))
-  }
-
-  private[graft] def footerAggInRange(
-      key: String,
-      lo: Option[(Long, Boolean)],
-      hi: Option[(Long, Boolean)]): Option[Store.FooterAgg] = {
-    val cols = schema.fieldNames.toSeq
-    val mmCols: Set[String] = mmStatCols
-    val idx = indexName
-    // the all-null-index files are correctly invisible here: this path
-    // only ever answers an aggregation under a WHERE whose conjuncts
-    // are index range / IsNotNull predicates (FooterRangeAggregates
-    // .answer unwraps a Filter unconditionally), and a NULL index
-    // satisfies none of those — the filter itself excludes those rows
-    val inc = footerFilesInRange(key, lo, hi) match {
-      case None => return None
-      case Some((files, _)) => files
-    }
-    // count(*) over the slice = non-null-index rows of included files
-    val rows = inc.map(_.nonNullByCol(idx)).sum
-    // NON-index columns stay exact only when no included file carries
-    // null-index rows (their values/nulls could belong to excluded rows)
-    val idxClean = inc.forall(t => t.nonNullByCol(idx) == t.rows)
-    def keep(c: String): Boolean = c.equalsIgnoreCase(idx) || idxClean
-    val exactNullCols =
-      cols.filter(c => keep(c) && inc.forall(_.nullCountOkCols.contains(c)))
-    val exactMM =
-      mmCols.filter(c => keep(c) && inc.forall(_.minMaxOkCols.contains(c)))
-    val colMinMax = exactMM.flatMap { c =>
-      val vs = inc.flatMap(_.minMaxByCol.get(c))
-      if (vs.isEmpty) None // no values in slice: exact, min/max = NULL
-      else Some(c -> (vs.map(_._1).min, vs.map(_._2).max))
-    }.toMap
-    Some(Store.FooterAgg(
-      files = inc.map(t => (t.path, t.nonNullByCol(idx))).sortBy(_._1).toIndexedSeq,
-      rows = rows,
-      nonNullCounts = exactNullCols.map(c => c -> inc.map(_.nonNullByCol(c)).sum).toMap,
-      colMinMax = colMinMax,
-      minMaxExactCols = exactMM))
   }
 
   /** The data files under the given pruned roots — [[parquetUnder]],

@@ -3,19 +3,15 @@ package graft.sources.v2
 import graft.sources.{SchemaError, Store}
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{NamedReference, SortDirection, SortOrder => V2SortOrder, Transform}
-import org.apache.spark.sql.connector.expressions.aggregate.{AggregateFunc, Aggregation, Count, CountStar, Max, Min}
-import org.apache.spark.sql.connector.read.{LocalScan, Scan, ScanBuilder, SupportsPushDownAggregates, SupportsPushDownFilters, SupportsPushDownLimit, SupportsPushDownRequiredColumns, SupportsPushDownTopN}
+import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownLimit, SupportsPushDownRequiredColumns, SupportsPushDownTopN}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, WriteBuilder}
 import org.apache.spark.sql.sources._
-import org.apache.spark.sql.types.{LongType, StructField, StructType, TimestampType}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import java.sql.Timestamp
-import scala.jdk.CollectionConverters._
 
 /** SQL/catalog front door for Store items: a DataSource V2 table
   * provider registered as format `graft`, so ANY Spark binding — SQL,
@@ -238,18 +234,21 @@ class GraftTable(private[graft] val store: Store, private[graft] val key: String
   * codegen compatibility, split planning — is delegated to Spark's own
   * [[ParquetScan]], assembled over the pruned file index: this provider
   * adds knowledge, not a reader.
+  *
+  * Aggregates are not pushed here: the footer-answerable ones, filtered
+  * or not, are answered one level up by the
+  * [[graft.plans.FooterRangeAggregates]] optimizer rule, which sees the
+  * Filter that Spark keeps above this scan.
   */
 class GraftScanBuilder(store: Store, key: String, options: CaseInsensitiveStringMap)
     extends ScanBuilder
     with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns
-    with SupportsPushDownAggregates
     with SupportsPushDownLimit
     with SupportsPushDownTopN {
 
   private var pushed: Array[Filter] = Array.empty
   private var required: StructType = store.schema
-  private var aggScan: Option[GraftAggScan] = None
   private var limit: Option[Int] = None
   private var topN: Option[(Int, Boolean)] = None // (k, descending)
 
@@ -262,163 +261,6 @@ class GraftScanBuilder(store: Store, key: String, options: CaseInsensitiveString
 
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
-
-  // ---- aggregate pushdown: answer count/min/max from parquet footers ----
-
-  /** The footer sweep runs at most once per scan build, shared by
-    * `supportCompletePushDown` and `pushAggregation` (Spark calls both
-    * with the same Aggregation). Keyed by toString, NOT the record
-    * itself: Aggregation is a Java record over ARRAYS, so its equals is
-    * reference-based and a fresh-but-identical instance would miss.
-    */
-  private var evalCache: Option[(String, Option[GraftAggScan])] = None
-
-  private def colOf(e: org.apache.spark.sql.connector.expressions.Expression): Option[String] =
-    e match {
-      case nr: NamedReference if nr.fieldNames().length == 1 => Some(nr.fieldNames()(0))
-      case _ => None
-    }
-
-  /** Accept `count(*)`, `count(col)` and `min/max(<integer-family
-    * col>)` (timestamp/date/long/int — INT64/INT32 physical, whose
-    * footer stats are exact by construction; the index is just one of
-    * them) with no GROUP BY, and ONLY when the footer statistics prove
-    * the answer exact: row counts always are; a `count(col)` needs
-    * every row group's null count; `min/max(col)` need every
-    * row-bearing group to carry usable stats (or be provably all-null
-    * — SQL min/max ignore nulls). This builder answers the FILTERLESS
-    * shapes ([[Store.footerAgg]]); the INDEX-RANGE shapes — the
-    * daily-report `count(*) WHERE ts >= a AND ts < b` — are answered
-    * by the [[graft.plans.FooterRangeAggregates]] optimizer rule via
-    * [[Store.footerAggInRange]], because Spark never offers an
-    * aggregation to a scan whose filters stayed residual (ours always
-    * do). Float/double (parquet stats
-    * omit NaN, Spark orders NaN highest) and string/binary (legacy
-    * comparators, truncation) never qualify. Anything short of proof
-    * returns None and the query plans the ordinary scan — pushdown is
-    * an optimization, exactness never depends on it. At 100 TB this is
-    * the difference between an O(pruned-files) metadata sweep and a
-    * cluster-wide scan (reference posture: oakstore store.py:255-264).
-    */
-  private def evalAggregation(agg: Aggregation): Option[GraftAggScan] = {
-    // CONTENT key, not agg.toString: Aggregation is a Java record over
-    // arrays whose generated toString renders the array components by
-    // identity hash — a fresh-but-identical instance would never hit
-    // the cache (extra footer sweep), and a recycled identity hash
-    // could in principle serve a stale wrong answer
-    val keyStr = (agg.aggregateExpressions().map(_.describe()) ++
-      agg.groupByExpressions().map(_.describe())).mkString("aggs[", ";", "]")
-    evalCache match {
-      case Some((a, r)) if a == keyStr => return r
-      case _ => ()
-    }
-    val result = computeAggregation(agg)
-    evalCache = Some((keyStr, result))
-    result
-  }
-
-  /** The ONE shared trusted-footer-min/max type predicate
-    * ([[graft.sources.Store.footerMinMaxTrusted]] — see its scaladoc
-    * for the integer-exactness / NaN-proof / string-refusal
-    * discipline).
-    */
-  private def mmSupported(dt: org.apache.spark.sql.types.DataType): Boolean =
-    Store.footerMinMaxTrusted(dt)
-
-  private def computeAggregation(agg: Aggregation): Option[GraftAggScan] = {
-    // pushed.nonEmpty cannot actually reach here — Spark only offers an
-    // aggregation when no post-scan filter remains, and this builder
-    // declares every filter residual. The FILTERED shapes (index-range
-    // reports like `count(*) WHERE ts >= a AND ts < b`) are answered one
-    // level up by graft.plans.FooterRangeAggregates, which sees the
-    // whole Aggregate-Filter-relation tree; refusing here is defense in
-    // depth against a future Spark offering the combination.
-    if (pushed.nonEmpty || agg.groupByExpressions().nonEmpty) return None
-    if (!store.exists(key)) return None
-    def field(col: String): Option[StructField] =
-      store.schema.fields.find(_.name.equalsIgnoreCase(col))
-    // shape check first — only a supportable aggregation pays the
-    // (cheap, but nonzero) footer sweep
-    sealed trait P
-    case object CntStar extends P
-    case class CntCol(raw: String, f: StructField) extends P
-    case class MinCol(raw: String, f: StructField) extends P
-    case class MaxCol(raw: String, f: StructField) extends P
-    val plan: Option[Seq[P]] = {
-      val ps = agg.aggregateExpressions().toSeq.map {
-        case _: CountStar => Some(CntStar)
-        case c: Count if !c.isDistinct =>
-          colOf(c.column).flatMap(n => field(n).map(f => CntCol(n, f)))
-        case m: Min => colOf(m.column).flatMap(n =>
-          field(n).filter(f => mmSupported(f.dataType)).map(f => MinCol(n, f)))
-        case m: Max => colOf(m.column).flatMap(n =>
-          field(n).filter(f => mmSupported(f.dataType)).map(f => MaxCol(n, f)))
-        case _ => None
-      }
-      if (ps.forall(_.isDefined)) Some(ps.flatten) else None
-    }
-    plan.flatMap { ps =>
-      // vanish tolerance, like filesForLimit/filesForTopN/bytesUnder: a
-      // file deleted between listing and footer read (concurrent
-      // compact/prune swap) must degrade to the ordinary scan — which
-      // re-lists and never sees the removed file — not fail the whole
-      // query at plan time
-      val statsOpt =
-        try Some(store.footerAgg(key))
-        catch { case _: java.io.IOException => None }
-      statsOpt.flatMap { stats =>
-      // footerAgg normalizes INT32 stats to Long and float/double to
-      // the order-preserving sortable-bits encoding; render back to the
-      // column's InternalRow representation (Int for int/date, Long
-      // for long/timestamp-µs, decoded IEEE for float/double)
-      def render(f: StructField, v: Long): Any = f.dataType match {
-        case org.apache.spark.sql.types.IntegerType |
-             org.apache.spark.sql.types.DateType => java.lang.Integer.valueOf(v.toInt)
-        case org.apache.spark.sql.types.DoubleType =>
-          java.lang.Double.valueOf(Store.sortableBitsToDouble(v))
-        case org.apache.spark.sql.types.FloatType =>
-          java.lang.Float.valueOf(Store.sortableBitsToDouble(v).toFloat)
-        case _ => java.lang.Long.valueOf(v)
-      }
-      val answered = ps.map {
-        case CntStar =>
-          Some((StructField("count(*)", LongType, nullable = false),
-            java.lang.Long.valueOf(stats.rows): Any))
-        case CntCol(raw, f) =>
-          stats.nonNullCounts.get(f.name).map(n =>
-            (StructField(s"count($raw)", LongType, nullable = false),
-              java.lang.Long.valueOf(n): Any))
-        case MinCol(raw, f) if stats.minMaxExactCols.contains(f.name) =>
-          Some((StructField(s"min($raw)", f.dataType),
-            stats.colMinMax.get(f.name).map(v => render(f, v._1)).orNull: Any))
-        case MaxCol(raw, f) if stats.minMaxExactCols.contains(f.name) =>
-          Some((StructField(s"max($raw)", f.dataType),
-            stats.colMinMax.get(f.name).map(v => render(f, v._2)).orNull: Any))
-        case _ => None
-      }
-      if (answered.exists(_.isEmpty)) None // some stat unprovable → scan
-      else {
-        val fields = answered.flatten
-        Some(new GraftAggScan(
-          StructType(fields.map(_._1)),
-          new GenericInternalRow(fields.map(_._2).toArray),
-          s"item=$key store=${store.base} " +
-            s"pushedAggregates=[${agg.aggregateExpressions().mkString(", ")}]"))
-      }
-      }
-    }
-  }
-
-  /** True whenever we accept at all: the footer answer IS the final
-    * answer (no partial-aggregation semantics needed).
-    */
-  override def supportCompletePushDown(agg: Aggregation): Boolean =
-    evalAggregation(agg).isDefined
-
-  override def pushAggregation(agg: Aggregation): Boolean = {
-    aggScan = evalAggregation(agg)
-    aggScan.isDefined
-  }
 
   // ---- limit pushdown: read only a row-covering file prefix ----
 
@@ -472,7 +314,7 @@ class GraftScanBuilder(store: Store, key: String, options: CaseInsensitiveString
 
   override def isPartiallyPushed(): Boolean = true
 
-  override def build(): Scan = aggScan.getOrElse {
+  override def build(): Scan = {
     val (start, end) = GraftBounds.tsBounds(pushed.toIndexedSeq, store.indexName)
     // batch: the pruning decision — LIST only the bucket dirs the
     // bounds allow (or, under a pushed LIMIT, only a row-covering file
@@ -568,20 +410,4 @@ private[v2] object GraftBounds {
       case ((lo, hi), (l, h)) => (later(lo, l), earlier(hi, h))
     }
   }
-}
-
-/** The aggregate-pushdown result: a [[LocalScan]] carrying the ONE row
-  * the footer sweep proved exact. Spark plans it as a
-  * LocalTableScanExec — the query's "scan" is a driver-local row, no
-  * file I/O, no executors; `SELECT count(*) FROM graft.EVENTS` on a
-  * 100 TB item costs O(files) footer metadata instead of a
-  * cluster-wide scan. Built ONLY by [[GraftScanBuilder.pushAggregation]]
-  * after exactness is proved; never load-bearing for correctness — an
-  * unprovable statistic refuses the pushdown instead of degrading it.
-  */
-final class GraftAggScan(
-    out: StructType, row: InternalRow, desc: String) extends LocalScan {
-  override def readSchema(): StructType = out
-  override def rows(): Array[InternalRow] = Array(row)
-  override def description(): String = s"GraftAggScan(footer-stats) $desc"
 }

@@ -91,14 +91,15 @@ object SqlFrontDoorBench {
         .where(col("TS").between(t0, t1))
         .agg(sum("VALUE")).collect()(0).getDouble(0).toLong
     }
-    // footer-answered aggregates (round-12): count(*)/min/max of the
-    // index on the unfiltered table plan a LocalScan fed by the footer
-    // sweep — O(files) metadata reads vs a cluster-wide column scan.
+    // footer-answered aggregates: count(*)/min/max of the index on the
+    // unfiltered table plan a LocalRelation fed by the footer sweep —
+    // the FooterRangeAggregates rule of GraftExtensions, installed
+    // above — O(files) metadata reads vs a cluster-wide column scan.
     // The raw-parquet comparison is the same question answered by
     // scanning (Spark's own parquet agg pushdown is off by default and
     // min/max(TS) must read the whole TS column).
     import org.apache.spark.sql.functions.{count, lit, max, min}
-    timed("DSv2 count/min/max (footers)") {
+    timed("SQL count/min/max (footer rule)") {
       spark.sql("SELECT count(*), min(TS), max(TS) FROM sqlfd_events")
         .collect()(0).getLong(0)
     }

@@ -160,7 +160,7 @@ object StoreDemo {
         s"failed CTAS left no visible item: $ctasFailClean")
 
     // footer-answered SQL: the unfiltered AND the bucket-aligned ranged
-    // report shapes plan NO file scan (DSv2 aggregate pushdown + the
+    // report shapes plan NO file scan (both answered by the
     // FooterRangeAggregates rule); "newest k" reads a bucket suffix
     val fa = spark.sql(
       "SELECT count(*), min(TS), max(TS) FROM demostore.EVENTS").collect()(0)

@@ -414,10 +414,9 @@ class GraftTableSpec extends AnyFunSuite {
 
   test("ranged footer aggregates: count/min/max over a bucket-aligned index range plan NO scan") {
     // graft.plans.FooterRangeAggregates — the daily-report shape. The
-    // DSv2 builder can never see a filtered aggregation (this scan
-    // declares every filter residual, and Spark only offers aggregates
-    // to fully-filter-pushed scans), so the optimizer rule answers it
-    // one level up from the same footer machinery.
+    // scan declares every filter residual, so a WHERE always leaves a
+    // Filter above it; the optimizer rule sees that Filter and answers
+    // from the bucket-pruned files' footers.
     val dir = tmpDir()
     val s = Store.open(spark, dir, bucket = Some("month"))
     s.write("MSFT", bars(100)) // 2015-01(31) 02(28) 03(31) 04(10)
@@ -680,6 +679,19 @@ class GraftTableSpec extends AnyFunSuite {
       .toMap
     assert(got == api, "footer-answered NULL group must match the scan")
 
+    // ungrouped and unfiltered, null-index rows are real rows too:
+    // count(*) counts them and min(VOLUME) sees their values (a ranged
+    // fold would drop both)
+    val whole = spark.sql(
+      "SELECT count(*) AS c, count(DATE) AS cd, min(VOLUME) AS v FROM gagg_ng")
+    assertFooterAnswered(whole)
+    val w = whole.collect()(0)
+    val scanned = s("NG").agg(count(lit(1)), count($"DATE"), min($"VOLUME")).collect()(0)
+    assert(w.getLong(0) == 67L && w.getLong(1) == 60L)
+    assert((w.getLong(0), w.getLong(1), w.getLong(2)) ==
+      ((scanned.getLong(0), scanned.getLong(1), scanned.getLong(2))),
+      "footer-answered unfiltered aggregate must match the scan")
+
     // under a range WHERE the NULL group is correctly absent (a NULL
     // index satisfies no range predicate) and still footer-answered
     val ranged = spark.sql(
@@ -700,7 +712,7 @@ class GraftTableSpec extends AnyFunSuite {
   }
 
   test("footer aggregates fan out over executors past the driver-thread threshold (>256 files)") {
-    // footerAgg's sweep switches from a driver thread pool to an RDD
+    // the footer sweep switches from a driver thread pool to an RDD
     // job above 256 files (100k footers must never funnel through one
     // machine) — pin the fan-out path end to end
     val dir = tmpDir()
@@ -736,8 +748,8 @@ class GraftTableSpec extends AnyFunSuite {
 
     // AQE hides physical scans inside query stages for shuffling
     // aggregates, so refusal is asserted on the OPTIMIZED plan: the
-    // relation must still carry the ordinary file scan, never the
-    // footer-answered GraftAggScan
+    // relation must still carry the ordinary file scan, never a
+    // footer-answered LocalRelation in its place
     def scanOf(df: DataFrame): org.apache.spark.sql.connector.read.Scan = {
       val scans = df.queryExecution.optimizedPlan.collect {
         case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
@@ -753,8 +765,7 @@ class GraftTableSpec extends AnyFunSuite {
     }
 
     // a WHERE whose inclusive hi lands inside the March bucket straddles
-    // a file — neither the DSv2 builder (never offered filters) nor the
-    // FooterRangeAggregates rule (straddle refusal) may answer: scan
+    // a file — the FooterRangeAggregates rule refuses the straddle: scan
     val filtered = spark.sql(
       "SELECT count(*) AS c FROM noagg_msft " +
         "WHERE DATE BETWEEN '2015-02-01' AND '2015-03-01'")
