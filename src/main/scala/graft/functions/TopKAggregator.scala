@@ -66,4 +66,7 @@ class TopKAggregator(k: Int) extends Aggregator[Scored, TopKBuf, TopKBuf] {
 
   override def bufferEncoder: Encoder[TopKBuf] = Encoders.product[TopKBuf]
   override def outputEncoder: Encoder[TopKBuf] = Encoders.product[TopKBuf]
+
+  /** Stable across runs: plans print the aggregator by this name. */
+  override def toString: String = s"TopKAggregator(k=$k)"
 }

@@ -1,7 +1,12 @@
 package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThanOrEqual}
 import org.apache.spark.sql.types._
 
@@ -355,13 +360,21 @@ object Store {
   private[sources] val activeStagingIds: java.util.Set[String] =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
+  /** Name prefix of a file [[Store!.appendNewOnly]], [[Store!.append]]
+    * or [[Store!.compact]] is writing on the driver: hidden, so no
+    * listing counts it, until it is renamed to its final name.
+    */
+  private[sources] val DriverTmpPrefix = ".graft-tmp-"
+
   /** Tags (base#KEY) of items with an IN-PLACE append running in this
-    * JVM ([[Store!.appendNewOnly]]'s `mode("append")` job — the one
-    * write that materializes committer staging inside the LIVE data
-    * dir). [[Store!.vacuum]]'s job-staging debris sweep (job 4) skips
-    * them unconditionally, same split as [[activeStagingIds]]: this set
-    * makes a force-sweep safe against same-driver concurrent appends,
-    * the age guard covers writers in other JVMs.
+    * JVM ([[Store!.appendNewOnly]] — the one write into the LIVE data
+    * dir: its `mode("append")` job materializes committer staging there,
+    * and its driver-side write leaves hidden [[DriverTmpPrefix]] files
+    * there until it renames them). [[Store!.vacuum]]'s staging debris
+    * sweep (job 4) skips them unconditionally, same split as
+    * [[activeStagingIds]]: this set makes a force-sweep safe against
+    * same-driver concurrent appends, the age guard covers writers in
+    * other JVMs.
     */
   private[graft] val activeInPlaceWrites: java.util.Set[String] =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
@@ -2093,6 +2106,12 @@ class Store private[sources] (
     * version ([[versionSwap]]). O(history) per append — kept for
     * small/compat use; the scalable path is [[appendNewOnly]].
     *
+    * A batch already on the driver (a `LocalRelation`) whose item fits
+    * the driver-read limit is merged and written on the calling thread
+    * with no Spark job ([[appendOnDriver]]); anything else is the
+    * distributed merge. Both give the same rows and layout: one file per
+    * bucket, split at [[chunkRows]].
+    *
     * Documented divergence: the dedup key here is the FULL row including
     * the time index; the reference dedups on value columns only (its
     * `drop_duplicates` runs after `set_index`, store.py:229-230), so two
@@ -2102,11 +2121,13 @@ class Store private[sources] (
     */
   def append(key: String, df: DataFrame): Unit = withItemLock(key) {
     requireAppendable(key)
-    val merged = withNewRowsTagged(key, df)
-      .drop(NewTag)
-      .repartitionByRange(col(indexName))
-      .sortWithinPartitions(col(indexName))
-    versionSwap(key, merged)
+    if (!appendOnDriver(key, df, rewrite = true)) {
+      val merged = withNewRowsTagged(key, df)
+        .drop(NewTag)
+        .repartitionByRange(col(indexName))
+        .sortWithinPartitions(col(indexName))
+      versionSwap(key)(v => writer(merged).mode("overwrite").parquet(v.toString))
+    }
   }
 
   /** The one merge of both appends (reference `_append`,
@@ -2117,7 +2138,7 @@ class Store private[sources] (
     * Grouping matches rows the way `<=>` join keys and dropDuplicates
     * do: NULLs match, and NaN and ±0.0 are normalized (a -0.0 row
     * leaves the group as +0.0). Duplicates inside the batch collapse to
-    * one row.
+    * one row. [[appendOnDriver]] is its driver-side twin.
     */
   private def withNewRowsTagged(key: String, df: DataFrame): DataFrame =
     this(key).withColumn(NewTag, lit(0))
@@ -2238,7 +2259,9 @@ class Store private[sources] (
     }
 
   /** Item-level rewrite ([[append]], [[compact]]): write a fresh
-    * immutable version dir, commit it by overwriting the `_current`
+    * immutable version dir (`writeVersion`, handed its path; it leaves a
+    * `_SUCCESS` marker there, as the committer does), commit it by
+    * overwriting the `_current`
     * pointer — ONE single-object PUT, atomic on every real object store,
     * no directory rename anywhere — then best-effort delete the
     * superseded version (a crash before the delete leaves an invisible
@@ -2246,14 +2269,13 @@ class Store private[sources] (
     * readers on the old complete version; there is no intermediate
     * state at all.
     */
-  private def versionSwap(key: String, df: DataFrame): Unit = {
+  private def versionSwap(key: String)(writeVersion: HPath => Unit): Unit = {
     val k = validateKey(key)
     val old = currentVersion(k)
     val id = "v-" + java.util.UUID.randomUUID().toString
     Store.activeStagingIds.add(id.stripPrefix("v-"))
     try {
-      writer(df).mode("overwrite")
-        .parquet(new HPath(new HPath(itemsRoot, k), id).toString)
+      writeVersion(new HPath(new HPath(itemsRoot, k), id))
       writeUTF8(fs, ptrPath(k), id) // the commit point
       fs.delete(new HPath(new HPath(itemsRoot, k), old), true)
     } finally Store.activeStagingIds.remove(id.stripPrefix("v-"))
@@ -2356,24 +2378,30 @@ class Store private[sources] (
     * footers to read, weaker row-group stats), and compaction is the
     * periodic maintenance step that restores the 1 M-row sorted-chunk
     * contract (store.py:27,174) without paying it on every append.
-    * Atomic: same pointer swap as [[append]].
+    * Atomic: same pointer swap as [[append]]. An item within the
+    * driver-read limit is read and rewritten on the calling thread with
+    * no Spark job ([[compactOnDriver]]), in the same layout.
     */
   def compact(key: String): Unit = withItemLock(key) {
     requireNoPendingMarkers(key)
-    // rewrite exactly the listed files: the ones describe counts
-    val files = dataFiles(key)
-    versionSwap(key,
-      canonicalLayout(spark.read.schema(schema).parquet(files: _*), canonicalFiles(files)))
+    if (!compactOnDriver(key)) {
+      // rewrite exactly the listed files: the ones describe counts
+      val files = dataFiles(key)
+      val canonical =
+        canonicalLayout(spark.read.schema(schema).parquet(files: _*), canonicalFiles(files))
+      versionSwap(key)(v => writer(canonical).mode("overwrite").parquet(v.toString))
+    }
   }
 
   /** The canonical file count of the data in `paths`: ceil(footer rows
     * / [[chunkRows]]), at least 1 — the rewrite target of [[compact]]
     * and [[compactBuckets]].
     */
-  private def canonicalFiles(paths: Seq[String]): Long = {
-    val rows = footersOrRefuse(paths, Nil, Set.empty).map(_.rows).sum
+  private def canonicalFiles(paths: Seq[String]): Long =
+    canonicalCount(footersOrRefuse(paths, Nil, Set.empty).map(_.rows).sum)
+
+  private def canonicalCount(rows: Long): Long =
     math.max(1L, (rows + chunkRows - 1) / chunkRows)
-  }
 
   /** `df` range-partitioned by the index into exactly `files`
     * partitions, sorted within each. An explicit count, not the
@@ -2391,7 +2419,9 @@ class Store private[sources] (
     * the same `.parquet` files outside hidden segments [[describe]]
     * counts. The decision reads no footer and starts no Spark job, so
     * calling this after every append batch costs one LIST until the
-    * threshold trips. Returns true when a compaction ran. Typical loop:
+    * threshold trips; a tripping call on a small item is a driver-side
+    * [[compact]], still with no Spark job. Returns true when a compaction
+    * ran. Typical loop:
     * `appendNewOnly(k, batch); compactIfNeeded(k)`.
     *
     * Same contract caveat as [[compact]]: a rewrite invalidates any live
@@ -2519,24 +2549,242 @@ class Store private[sources] (
       }
       .toVector
 
-  /** Scalable append: [[append]]'s merge ([[withNewRowsTagged]]), but
-    * only the rows the item does not hold yet are written, as new files
-    * in place. It still READS the whole item (the merge groups old and
-    * new rows together); only the write is O(new), instead of the
-    * reference's O(history) rewrite. Equivalent end state to [[append]]
-    * (duplicates never written; old rows untouched, so "old wins"
-    * trivially holds; NULL-bearing rows match, so they never re-append).
+  /** Scalable append: [[append]]'s merge, but only the rows the item
+    * does not hold yet are written, as new files in place (one per
+    * bucket, split at [[chunkRows]]) — the write is O(new), instead of
+    * the reference's O(history) rewrite. Equivalent end state to
+    * [[append]] (duplicates never written; old rows untouched, so "old
+    * wins" trivially holds; NULL-bearing rows match, so they never
+    * re-append).
+    *
+    * What it reads depends on where the batch is. A batch already on
+    * the driver (a `LocalRelation`: `createDataFrame` of local rows,
+    * `INSERT … VALUES`) is merged against only the bucket dirs its index
+    * values map to — full-row dedup includes the index, so a duplicate
+    * can only live in its own row's bucket — and, when those files fit
+    * the driver-read limit, read, merged and written on the calling
+    * thread with no Spark job ([[appendOnDriver]]). Any other batch, or
+    * one whose buckets are too large, runs the distributed merge
+    * ([[withNewRowsTagged]]), which reads the whole item.
     */
   def appendNewOnly(key: String, df: DataFrame): Unit = withItemLock(key) {
     requireAppendable(key)
-    val p = dataPath(key)
-    val fresh = withNewRowsTagged(key, df).where(col(NewTag)).drop(NewTag)
-    // registered so vacuum's job-staging sweep (job 4) never reclaims
-    // THIS job's live `_temporary`/`.spark-staging-*` out from under it
+    // registered so vacuum's staging sweep (job 4) never reclaims THIS
+    // write's live `_temporary`/`.spark-staging-*` or driver temp files
     val tag = Store.inPlaceTag(base, validateKey(key))
     Store.activeInPlaceWrites.add(tag)
-    try writer(fresh).mode("append").parquet(p.toString)
-    finally Store.activeInPlaceWrites.remove(tag)
+    try {
+      if (!appendOnDriver(key, df, rewrite = false)) {
+        val p = dataPath(key)
+        val fresh = withNewRowsTagged(key, df).where(col(NewTag)).drop(NewTag)
+        writer(fresh).mode("append").parquet(p.toString)
+      }
+    } finally Store.activeInPlaceWrites.remove(tag)
+  }
+
+  /** The driver-side twin of [[withNewRowsTagged]] for [[append]]
+    * (`rewrite`: every distinct row goes into a fresh version) and
+    * [[appendNewOnly]] (only the batch's new rows, written in place).
+    * Returns false, having done nothing, when the batch is not on the
+    * driver ([[batchOnDriver]]) or the files to merge against pass the
+    * driver-read limit; the caller then runs the distributed merge.
+    *
+    * Rows are grouped exactly as the `GROUP BY` groups them: the
+    * [[groupKey]] `UnsafeRow` of every column, so NULLs match, NaN and
+    * ±0.0 normalize, and the stored row is the normalized one.
+    */
+  private def appendOnDriver(key: String, df: DataFrame, rewrite: Boolean): Boolean = {
+    val k = validateKey(key)
+    val merged = batchOnDriver(df).flatMap { batch =>
+      retryVanished {
+        val p = dataPath(k)
+        val segs = if (rewrite) None else Some(batch.map(_._1).toSet)
+        filesOnDriver(p, segs).map { files =>
+          val keyOf = groupKey()
+          val seen = scala.collection.mutable.HashSet.empty[UnsafeRow]
+          val kept = Vector.newBuilder[(String, InternalRow)]
+          def offer(seg: String, r: InternalRow, keep: Boolean): Unit = {
+            val g = keyOf(r)
+            if (!seen.contains(g)) {
+              val c = g.copy()
+              seen += c
+              if (keep) kept += seg -> c
+            }
+          }
+          rowsWithBucket(files).foreach(r => offer(r.getUTF8String(schema.length).toString, r, rewrite))
+          batch.foreach { case (seg, r) => offer(seg, r, keep = true) }
+          (p, kept.result())
+        }
+      }
+    }
+    merged.foreach { case (p, rows) =>
+      if (rewrite) versionSwap(k)(v => writeOnDriver(v, Seq(rows), committed = true))
+      else writeOnDriver(p, Seq(rows), committed = false)
+    }
+    merged.isDefined
+  }
+
+  /** [[compact]] on the driver: the item's files read on this thread and
+    * rewritten as a fresh version in [[canonicalLayout]]'s shape — rows
+    * cut into [[canonicalCount]] index ranges ([[rangeRuns]]), one file
+    * per bucket of each range, split at [[chunkRows]]. False, having done
+    * nothing, when the driver path is off or the files pass the limit.
+    */
+  private def compactOnDriver(key: String): Boolean = {
+    val k = validateKey(key)
+    val read =
+      if (!driverMutable) None
+      else retryVanished(filesOnDriver(dataPath(k), None).map(rowsWithBucket))
+    read.foreach { rows =>
+      val own = storeRow()
+      val runs = rangeRuns(sortedByIndex(rows), canonicalCount(rows.size.toLong))
+        .map(_.map(r => r.getUTF8String(schema.length).toString -> own(r).copy()))
+      versionSwap(k)(v => writeOnDriver(v, runs, committed = true))
+    }
+    read.isDefined
+  }
+
+  /** Writes rows on the calling thread ([[SparkInternals.writeOnDriver]])
+    * under version dir `root`: each run's rows of each bucket, sorted by
+    * the index, as files of at most [[chunkRows]] rows in the bucket's
+    * dir. Every file is written under a hidden name
+    * ([[Store$.DriverTmpPrefix]]) in its final dir and then renamed, so
+    * a reader never lists a torn file. A `committed` write fills a fresh
+    * version and, like the committer, leaves `_SUCCESS` in it.
+    */
+  private def writeOnDriver(
+      root: HPath, runs: Seq[Seq[(String, InternalRow)]], committed: Boolean): Unit = {
+    requireTzAligned() // the same guards as [[writer]]
+    requireMicrosTimestamps()
+    val chunk = math.min(chunkRows, Int.MaxValue.toLong).toInt
+    val files = runs.flatMap(_.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (seg, rs) =>
+      sortedByIndex(rs.map(_._2)).grouped(chunk).map(seg -> _)
+    })
+    val id = java.util.UUID.randomUUID().toString
+    val named = files.zipWithIndex.map { case ((seg, rows), i) =>
+      (if (seg.isEmpty) root else new HPath(root, seg), f"part-$i%05d-$id-c000.snappy.parquet", rows)
+    }
+    SparkInternals.writeOnDriver(spark, StructType(schema.map(_.copy(nullable = true))),
+      Map("compression" -> "snappy"),
+      named.map { case (dir, name, rows) => new HPath(dir, DriverTmpPrefix + name) -> rows })
+    named.foreach { case (dir, name, _) =>
+      val (tmp, dst) = (new HPath(dir, DriverTmpPrefix + name), new HPath(dir, name))
+      if (!fs.rename(tmp, dst)) throw new java.io.IOException(s"rename $tmp -> $dst failed")
+    }
+    if (committed) fs.create(new HPath(root, "_SUCCESS"), true).close()
+  }
+
+  /** Whether mutations may run on the driver: the driver-read limit is
+    * positive and every column is atomic (a nested column is left to the
+    * distributed merge, which groups it — or refuses it — its own way).
+    */
+  private def driverMutable: Boolean =
+    SparkInternals.driverReadLimit(spark) > 0 && schema.forall(f => Bridge.isAtomic(f.dataType))
+
+  /** The conformed batch, each row paired with its bucket dir name, when
+    * the batch is already on the driver: the optimized plan of
+    * `withBucket(conform(df))` is a `LocalRelation`, so the bucket labels
+    * are [[withBucket]]'s own `date_format`, evaluated by the optimizer.
+    * Names are escaped the way Spark's partitioned writer escapes them
+    * (a NULL index lands in `__HIVE_DEFAULT_PARTITION__`); an unbucketed
+    * store has the one name "".
+    */
+  private def batchOnDriver(df: DataFrame): Option[Seq[(String, InternalRow)]] =
+    if (!driverMutable) None
+    else {
+      requireTzAligned() // withBucket's date_format renders in session tz
+      withBucket(conform(df)).queryExecution.optimizedPlan match {
+        case LocalRelation(_, data, false, _) =>
+          val n = schema.length
+          Some(data.map { r =>
+            val seg =
+              if (bucket.isEmpty) ""
+              else ExternalCatalogUtils.getPartitionPathString(
+                BucketCol, if (r.isNullAt(n)) null else r.getUTF8String(n).toString)
+            seg -> r
+          })
+        case _ => None
+      }
+    }
+
+  /** The data files under bucket dirs `segs` of version dir `p` (every
+    * file when None), each labelled with its bucket dir name — or None
+    * once their bytes, sized like [[smallSlice]] sizes a slice, pass the
+    * driver-read limit. A named dir that does not exist holds nothing.
+    */
+  private def filesOnDriver(
+      p: HPath, segs: Option[Set[String]]): Option[Seq[(String, FileStatus)]] = {
+    def segOf(f: FileStatus) = if (bucket.isEmpty) "" else f.getPath.getParent.getName
+    val files = segs match {
+      case Some(ss) => ss.toSeq.sorted.flatMap(s =>
+        parquetUnder(if (s.isEmpty) p else new HPath(p, s)).map(s -> _))
+      case None => parquetUnder(p).map(f => segOf(f) -> f)
+    }
+    val limit = SparkInternals.driverReadLimit(spark)
+    if (SparkInternals.scanSize(spark, files.map(_._2.getLen).sum) <= limit) Some(files)
+    else None
+  }
+
+  /** Every row of `files`, in the store schema plus a trailing column of
+    * its file's bucket dir name.
+    */
+  private def rowsWithBucket(files: Seq[(String, FileStatus)]): Vector[InternalRow] =
+    SparkInternals.readRowsOnDriver(spark, files, schema, schema, Array.empty, Some(BucketCol))
+
+  /** Projection of a row's store columns (a trailing bucket column
+    * dropped) into an `UnsafeRow`. Not thread-safe: one per mutation.
+    */
+  private def storeRow(): UnsafeProjection =
+    UnsafeProjection.create(schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
+      BoundReference(i, f.dataType, nullable = true) })
+
+  /** [[storeRow]] with every column normalized the way a `GROUP BY` key
+    * is: two rows are one group iff their keys' bytes are equal.
+    */
+  private def groupKey(): UnsafeProjection =
+    UnsafeProjection.create(schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
+      Bridge.normalizeFloats(BoundReference(i, f.dataType, nullable = true)) })
+
+  /** `rows` sorted by the index, NULLs first — `sortWithinPartitions`'
+    * ascending order. The index is column 0, a timestamp.
+    */
+  private def sortedByIndex(rows: Seq[InternalRow]): Vector[InternalRow] =
+    rows.toVector.sortBy(indexKey)
+
+  private def indexKey(r: InternalRow): Long = if (r.isNullAt(0)) Long.MinValue else r.getLong(0)
+
+  /** Index-sorted `sorted` cut into at most `parts` runs where Spark's
+    * range partitioner cuts them when its sample holds every row
+    * (`RangePartitioner.determineBounds`, weight 1 per row): the bound of
+    * run j is the first key, greater than the previous bound, at which
+    * the running row count reaches (j + 1) · n / parts, and a run ends
+    * after the last row equal to its bound.
+    */
+  private def rangeRuns(sorted: Vector[InternalRow], parts: Long): Seq[Vector[InternalRow]] = {
+    val n = sorted.size
+    val partitions = math.min(parts, n.toLong).toInt
+    if (partitions <= 1) Seq(sorted)
+    else {
+      val step = n.toDouble / partitions
+      val bounds = Vector.newBuilder[Long]
+      var (target, found, i) = (step, 0, 0)
+      var prev = Option.empty[Long]
+      while (i < n && found < partitions - 1) {
+        val key = indexKey(sorted(i))
+        if (i + 1 >= target && prev.forall(key > _)) {
+          bounds += key
+          target += step
+          found += 1
+          prev = Some(key)
+        }
+        i += 1
+      }
+      val bs = bounds.result()
+      sorted.groupBy(r => bs.indexWhere(indexKey(r) <= _) match {
+        case -1 => bs.size
+        case b => b
+      }).toSeq.sortBy(_._1).map(_._2)
+    }
   }
 
   /** Drop one item entirely (maintenance op, like [[compact]]):
@@ -2558,8 +2806,8 @@ class Store private[sources] (
     // where vacuum, mid-recovery of this key's old markers, could
     // copyMissing stale files back under items/KEY right after our
     // delete — debris with no pending markers left to flag it.
-    // Ordering is item-lock → vacuum-lock everywhere, vacuum takes no
-    // item locks: no cycle. (A
+    // Ordering is item-lock → vacuum-lock everywhere, vacuum only ever
+    // tryLocks an item lock: no cycle. (A
     // concurrent OTHER-JVM writer racing a drop is already undefined;
     // writerLease serializes that.)
     val vl = Store.lockFor(base, "..vacuum")
@@ -2899,24 +3147,38 @@ class Store private[sources] (
               fs.exists(new HPath(item.getPath, r)) => // fresh check, not
             Some(r) // a stale pre-listing snapshot (a swap may commit mid-walk)
           case Some(Some(_)) => // torn pointer: repair, never sweep blind
-            // re-list NOW: the version a concurrent swap is committing
-            // was created before its pointer write, so a fresh listing
-            // sees it; skip the whole item while any of its versions
-            // belongs to an op in flight in this JVM (the transiently-
-            // truncated pointer of a same-JVM versionSwap overwrite
-            // must not be "repaired" backward mid-commit)
-            val fresh = fs.listStatus(item.getPath)
-              .filter(_.getPath.getName.startsWith("v-"))
-            val swapInFlight = fresh.exists(v => Store.activeStagingIds
-              .contains(v.getPath.getName.stripPrefix("v-")))
-            val complete = fresh.filter(v =>
-              fs.exists(new HPath(v.getPath, "_SUCCESS")))
-            if (swapInFlight || complete.isEmpty) None // hands off
-            else {
-              val best = complete.maxBy(_.getModificationTime).getPath.getName
-              writeUTF8(fs, ptr, best)
-              Some(best)
-            }
+            // only under the item lock, and only if the pointer still
+            // reads torn there: a same-JVM commit holds that lock while
+            // its pointer overwrite is transiently empty, and "repairing"
+            // such a pointer once the commit has finished truncates it
+            // again under a concurrent reader. A lock held elsewhere is a
+            // mutation in flight: hands off this round (tryLock — vacuum
+            // never waits on an item lock, see drop)
+            val l = Store.lockFor(base, item.getPath.getName)
+            if (!l.tryLock()) None
+            else try {
+              val again = try readUTF8(fs, ptr).trim catch { case _: Throwable => "" }
+              if (again.nonEmpty && fs.exists(new HPath(item.getPath, again))) Some(again)
+              else {
+                // re-list NOW: the version a concurrent swap in another
+                // JVM is committing was created before its pointer
+                // write, so a fresh listing sees it; skip the whole item
+                // while any of its versions belongs to an op in flight
+                // in this JVM
+                val fresh = fs.listStatus(item.getPath)
+                  .filter(_.getPath.getName.startsWith("v-"))
+                val swapInFlight = fresh.exists(v => Store.activeStagingIds
+                  .contains(v.getPath.getName.stripPrefix("v-")))
+                val complete = fresh.filter(v =>
+                  fs.exists(new HPath(v.getPath, "_SUCCESS")))
+                if (swapInFlight || complete.isEmpty) None // hands off
+                else {
+                  val best = complete.maxBy(_.getModificationTime).getPath.getName
+                  writeUTF8(fs, ptr, best)
+                  Some(best)
+                }
+              }
+            } finally l.unlock()
         }
         current.foreach { cur =>
           fs.listStatus(item.getPath)
@@ -2956,7 +3218,11 @@ class Store private[sources] (
     // append IN FLIGHT IN THIS JVM ([[Store$.activeInPlaceWrites]]) are
     // skipped unconditionally, and the age guard covers writers in
     // other JVMs. Torn/absent version pointers are job 3's territory —
-    // an unresolvable item is left alone here.
+    // an unresolvable item is left alone here. The same sweep takes the
+    // hidden temp files ([[Store$.DriverTmpPrefix]]) a driver-side
+    // appendNewOnly that died before its rename left in the live bucket
+    // dirs (a driver append or compact writes into a fresh version,
+    // which job 3 sweeps whole).
     if (fs.exists(itemsRoot)) {
       fs.listStatus(itemsRoot).filter(_.isDirectory).foreach { item =>
         val k = item.getPath.getName
@@ -2974,6 +3240,11 @@ class Store private[sources] (
                 (n == "_temporary" || n.startsWith(".spark-staging")) &&
                 st.getModificationTime <= cutoff &&
                 fs.delete(st.getPath, true))
+              removed += 1
+          }
+          walkFiles(dataDir, rootMustExist = false).foreach { st =>
+            if (st.getPath.getName.startsWith(DriverTmpPrefix) &&
+                st.getModificationTime <= cutoff && fs.delete(st.getPath, false))
               removed += 1
           }
         }

@@ -124,8 +124,10 @@ class GraftDataSource extends TableProvider with DataSourceRegister {
   * dedup contract, not blind file appends. Implemented through the V1
   * write bridge (`V1Write` → `InsertableRelation`): the insert arrives
   * as one driver-side DataFrame, exactly what the append path wants —
-  * the distribution happens inside appendNewOnly's dedup merge, and the
-  * write inherits the store's staged-swap/lease machinery for free.
+  * an `INSERT … VALUES` batch is a `LocalRelation`, merged and written
+  * on the driver with no Spark job; any other query's rows are merged
+  * by appendNewOnly's distributed dedup — and the write inherits the
+  * store's lease machinery for free.
   * `INSERT OVERWRITE` is refused: the destructive rewrite has richer
   * semantics (drop + write) that belong behind the Store API.
   *

@@ -1,11 +1,15 @@
 package graft.sources.v2
 
-import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.hadoop.fs.{FileStatus, Path => HPath, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
 import org.apache.spark.sql.execution.datasources.{FilePartition, InMemoryFileIndex, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.FilePartitionReaderFactory
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
 import org.apache.spark.sql.graft.Bridge
@@ -14,10 +18,13 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
+import java.nio.file.attribute.PosixFilePermissions
+
 import scala.jdk.CollectionConverters._
 
 /** The ONE deliberate crossing into Spark-INTERNAL API in the store's
-  * read paths (the `v2` provider and `Store.query`), quarantined so a
+  * read and write paths (the `v2` provider, `Store.query` and the
+  * store's driver-side mutations), quarantined so a
   * Spark version bump breaks exactly this file (plus the
   * `org.apache.spark.sql.graft` bridge it builds frames through).
   * Written against **Spark 4.1.2**; the internal touchpoints and why
@@ -41,6 +48,11 @@ import scala.jdk.CollectionConverters._
   *     driven on the calling thread ([[readOnDriver]]), so a slice
   *     small enough to collect is read with no Spark job: same decoder,
   *     same pushed row-group filters, same session conf.
+  *  5. `ParquetFileFormat.prepareWrite` → `OutputWriterFactory` — the
+  *     writer a write task runs, driven on the calling thread
+  *     ([[writeOnDriver]]), so a small append or compaction writes its
+  *     files with no Spark job: same write support, same codec, same
+  *     session conf (timestamp type, rebase mode) as a `DataFrameWriter`.
   *
   * No `FileStatusCache` is passed (default = NoopCache): every scan
   * LISTs fresh, because items are APPEND-ABLE and a shared cache could
@@ -100,17 +112,7 @@ private[sources] object SparkInternals {
 
   /** Reads `files` whole on the calling thread and returns their rows as
     * a DataFrame over a `LocalRelation`, so collecting it starts no
-    * Spark job. Each file goes through the reader factory of the
-    * [[parquetScanOver]] scan (its file index is unused: the files are
-    * handed to the factory directly), decoding only `readDataSchema`
-    * and skipping row groups `pushedFilters` exclude — the residual
-    * predicate is the caller's. With `labelCol` set, every row also
-    * carries its file's label (the first of each pair) in a non-null
-    * string column of that name, appended as a partition value.
-    *
-    * Sequential on purpose: a reader factory shared across threads
-    * fails inside the vectorized parquet reader. A file that cannot be
-    * read throws — the caller decides whether to re-list and retry.
+    * Spark job ([[readRowsOnDriver]] does the reading).
     */
   def readOnDriver(
       spark: SparkSession,
@@ -119,11 +121,38 @@ private[sources] object SparkInternals {
       readDataSchema: StructType,
       pushedFilters: Array[Filter],
       labelCol: Option[String]): DataFrame = {
-    val partSchema = StructType(labelCol.map(StructField(_, StringType, nullable = false)).toSeq)
+    val partSchema = labelSchema(labelCol)
+    Bridge.localFrame(spark, StructType(readDataSchema.fields ++ partSchema.fields),
+      readRowsOnDriver(spark, files, dataSchema, readDataSchema, pushedFilters, labelCol))
+  }
+
+  private def labelSchema(labelCol: Option[String]): StructType =
+    StructType(labelCol.map(StructField(_, StringType, nullable = false)).toSeq)
+
+  /** Reads `files` whole on the calling thread into `UnsafeRow`s. Each
+    * file goes through the reader factory of the [[parquetScanOver]]
+    * scan (its file index is unused: the files are handed to the factory
+    * directly), decoding only `readDataSchema` and skipping row groups
+    * `pushedFilters` exclude — the residual predicate is the caller's.
+    * With `labelCol` set, every row also carries its file's label (the
+    * first of each pair) in a trailing non-null string column, appended
+    * as a partition value.
+    *
+    * Sequential on purpose: a reader factory shared across threads
+    * fails inside the vectorized parquet reader. A file that cannot be
+    * read throws — the caller decides whether to re-list and retry.
+    */
+  def readRowsOnDriver(
+      spark: SparkSession,
+      files: Seq[(String, FileStatus)],
+      dataSchema: StructType,
+      readDataSchema: StructType,
+      pushedFilters: Array[Filter],
+      labelCol: Option[String]): Vector[InternalRow] = {
+    val partSchema = labelSchema(labelCol)
     val factory = parquetScanOver(spark, Nil, dataSchema, readDataSchema, pushedFilters, partSchema)
       .createReaderFactory().asInstanceOf[FilePartitionReaderFactory]
-    val outSchema = StructType(readDataSchema.fields ++ partSchema.fields)
-    val toUnsafe = UnsafeProjection.create(outSchema)
+    val toUnsafe = UnsafeProjection.create(StructType(readDataSchema.fields ++ partSchema.fields))
     val columnar = factory.supportColumnarReads(FilePartition(0, Array.empty))
     val rows = Vector.newBuilder[InternalRow]
     files.foreach { case (label, st) =>
@@ -141,6 +170,60 @@ private[sources] object SparkInternals {
         finally reader.close()
       }
     }
-    Bridge.localFrame(spark, outSchema, rows.result())
+    rows.result()
   }
+
+  /** Writes each `(path, rows)` pair as one Parquet file of `dataSchema`
+    * on the calling thread, so a small write starts no Spark job. The
+    * writer comes from `ParquetFileFormat.prepareWrite` →
+    * `OutputWriterFactory.newInstance`, the same write support, session
+    * conf and codec (`options`, as a `DataFrameWriter` would pass them)
+    * a write task uses; rows are internal rows of `dataSchema`. Each
+    * path is written directly — making it visible atomically is the
+    * caller's. On the local filesystem the files are created through
+    * [[NioLocalFileSystem]]: the default checksummed one writes a `.crc`
+    * twin of every file and, without Hadoop's native library, forks a
+    * `chmod` for both (measured 10–30 ms per created file, most of a
+    * small write). Readers do not need the `.crc`.
+    */
+  def writeOnDriver(
+      spark: SparkSession,
+      dataSchema: StructType,
+      options: Map[String, String],
+      files: Seq[(HPath, Iterable[InternalRow])]): Unit = if (files.nonEmpty) {
+    val session = classic(spark)
+    val job = Job.getInstance(session.sessionState.newHadoopConfWithOptions(options))
+    job.setOutputKeyClass(classOf[Void])
+    job.setOutputValueClass(classOf[InternalRow])
+    val factory = new ParquetFileFormat().prepareWrite(session, job, options, dataSchema)
+    val conf = job.getConfiguration
+    if (files.head._1.getFileSystem(conf).getUri.getScheme == "file") {
+      conf.set("fs.file.impl", classOf[NioLocalFileSystem].getName)
+      conf.setBoolean("fs.file.impl.disable.cache", true)
+    }
+    val attempt = new TaskAttemptID(new TaskID(new JobID("graft", 0), TaskType.MAP, 0), 0)
+    conf.set("mapreduce.job.id", attempt.getJobID.toString)
+    conf.set("mapreduce.task.id", attempt.getTaskID.toString)
+    conf.set("mapreduce.task.attempt.id", attempt.toString)
+    conf.setBoolean("mapreduce.task.ismap", true)
+    conf.setInt("mapreduce.task.partition", 0)
+    val context = new TaskAttemptContextImpl(conf, attempt)
+    files.foreach { case (path, rows) =>
+      val w = factory.newInstance(path.toString, dataSchema, context)
+      try rows.foreach(w.write)
+      finally w.close()
+    }
+  }
+}
+
+/** The unchecksummed local filesystem, setting permissions through
+  * `java.nio` instead of forking `chmod` (what `RawLocalFileSystem`
+  * does without Hadoop's native library). [[SparkInternals.writeOnDriver]]
+  * creates its files through it.
+  */
+private[sources] final class NioLocalFileSystem extends RawLocalFileSystem {
+  override def setPermission(p: HPath, permission: FsPermission): Unit =
+    java.nio.file.Files.setPosixFilePermissions(pathToFile(p).toPath, PosixFilePermissions.fromString(
+      Seq(permission.getUserAction, permission.getGroupAction, permission.getOtherAction)
+        .map(_.SYMBOL).mkString))
 }

@@ -66,15 +66,23 @@ object StoreDemo {
     println(s"[demo] after re-append (idempotent): ${store("events").count()}")
     store.appendNewOnly("events", events)
     println(s"[demo] after appendNewOnly same batch: ${store("events").count()}")
+    // a batch already on the driver (local rows) is merged against only
+    // its own buckets and written on this thread: no Spark job
+    val local = spark.createDataFrame(
+      java.util.Arrays.asList(store("events").limit(3).collect(): _*), store.schema)
+    val (_, localJobs) = jobsDuring(spark)(store.appendNewOnly("events", local))
+    println(s"[demo] appendNewOnly of 3 local rows already stored: " +
+      s"${store("events").count()} rows, $localJobs Spark jobs")
 
     // maintenance policy: compact only when small appended files pile up
     val f0 = store.describe("EVENTS").files
     val ran = store.compactIfNeeded("events", maxFiles = f0) // at threshold: no-op
-    val ran2 = store.compactIfNeeded("events", maxFiles = math.max(1, f0 / 2))
+    val (ran2, compactJobs) =
+      jobsDuring(spark)(store.compactIfNeeded("events", maxFiles = math.max(1, f0 / 2)))
     println(
       s"[demo] compactIfNeeded: files=$f0 -> noop@maxFiles=$f0 (ran=$ran), " +
-        s"compacted@maxFiles=${math.max(1, f0 / 2)} (ran=$ran2, files now " +
-        s"${store.describe("EVENTS").files}, rows ${store("events").count()})")
+        s"compacted@maxFiles=${math.max(1, f0 / 2)} (ran=$ran2, $compactJobs Spark jobs, " +
+        s"files now ${store.describe("EVENTS").files}, rows ${store("events").count()})")
     // the 100 TB-shape maintenance op: rewrite only OVERSIZED buckets
     // (O(append-rate), not O(history)); on this freshly-compacted
     // day-bucketed store every bucket is already one file, so it's a
@@ -110,8 +118,8 @@ object StoreDemo {
     // against an existing baseDir the row already exists and both
     // inserts honestly report 0
     val before = spark.sql("SELECT count(*) FROM demo_events").collect()(0).getLong(0)
-    spark.sql(
-      "INSERT INTO demo_events VALUES (TIMESTAMP'2024-02-01 00:00:00', 999999, 1, 'click', 1.0)")
+    val (_, insertJobs) = jobsDuring(spark)(spark.sql(
+      "INSERT INTO demo_events VALUES (TIMESTAMP'2024-02-01 00:00:00', 999999, 1, 'click', 1.0)"))
     val mid = spark.sql("SELECT count(*) FROM demo_events").collect()(0).getLong(0)
     spark.sql( // idempotent: the same insert again appends zero rows
       "INSERT INTO demo_events VALUES (TIMESTAMP'2024-02-01 00:00:00', 999999, 1, 'click', 1.0)")
@@ -120,7 +128,8 @@ object StoreDemo {
     println(
       s"[demo] sql front door: $sqlRows rows in range via SELECT (bucket-pruned), " +
         s"INSERT INTO twice: $before -> $mid -> $after rows " +
-        s"(first +${mid - before}, second +${after - mid}: a dedup no-op)")
+        s"(first +${mid - before} with $insertJobs Spark jobs, second +${after - mid}: " +
+        "a dedup no-op)")
 
     // catalog plugin: one conf pair makes the store a SQL catalog —
     // items are discoverable (SHOW TABLES) and queryable by name with
@@ -218,5 +227,23 @@ object StoreDemo {
         s"released after: $leaseClear)")
 
     spark.stop()
+  }
+
+  /** `body`'s result and the number of Spark jobs it starts (the demo
+    * runs nothing else meanwhile), counted once the listener bus has
+    * delivered them.
+    */
+  private def jobsDuring[T](spark: SparkSession)(body: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.sql.graft.Bridge.drainListeners(spark)
+      (out, jobs.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 }

@@ -3,17 +3,19 @@ package org.apache.spark.sql.graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic.{Dataset, ExpressionUtils}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{AtomicType, DataType, StructType}
 
 /** Column ⇄ Expression bridge. Spark 4 made the converters
   * `private[sql]` (`org.apache.spark.sql.classic.ExpressionUtils`), so
   * extension libraries expose them via a shim in the sql package
   * namespace — the standard pattern for custom-Expression libraries.
   * `Dataset.ofRows` is `private[sql]` too: [[localFrame]] reaches it
-  * the same way.
+  * the same way, and so do [[normalizeFloats]], [[isAtomic]] and
+  * [[drainListeners]].
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -27,4 +29,17 @@ object Bridge {
     Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
       LocalRelation(DataTypeUtils.toAttributes(schema), rows))
+
+  /** `e` with NaN and -0.0 normalized the way a `GROUP BY` key is
+    * (`NormalizeFloatingNumbers.normalize`; other types pass through).
+    */
+  def normalizeFloats(e: Expression): Expression = NormalizeFloatingNumbers.normalize(e)
+
+  /** Blocks until every queued listener event has been delivered, so a
+    * listener's counts are complete (`listenerBus` is `private[spark]`).
+    */
+  def drainListeners(spark: SparkSession): Unit = spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** Whether `dt` is an atomic (non-nested) type. */
+  def isAtomic(dt: DataType): Boolean = dt.isInstanceOf[AtomicType]
 }

@@ -102,9 +102,11 @@ class GraftCatalogSpec extends AnyFunSuite {
     spark.sql("CREATE TABLE gcat.FRESH")
     assert(s.exists("FRESH") && s("FRESH").count() == 0,
       "CREATE TABLE must make an empty item")
-    spark.sql("INSERT INTO gcat.FRESH VALUES " +
+    // a VALUES batch is already on the driver: merged and written there
+    val (_, insertJobs) = TestSpark.jobsDuring(spark.sql("INSERT INTO gcat.FRESH VALUES " +
       "(TIMESTAMP'2015-05-01 00:00:00', 1.0, 2.0, 0.5, 1.5, 100), " +
-      "(TIMESTAMP'2015-05-02 00:00:00', 1.1, 2.1, 0.6, 1.6, 101)")
+      "(TIMESTAMP'2015-05-02 00:00:00', 1.1, 2.1, 0.6, 1.6, 101)"))
+    assert(insertJobs == 0, s"INSERT INTO … VALUES started $insertJobs Spark jobs")
     assert(s("FRESH").count() == 2)
     // re-running the SAME insert appends zero rows (appendNewOnly)
     spark.sql("INSERT INTO gcat.FRESH VALUES " +

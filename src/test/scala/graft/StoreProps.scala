@@ -2,6 +2,7 @@ package graft
 
 import graft.sources.Store
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, count, lit, max, min}
 import org.scalacheck.{Gen, Properties, Test}
 import org.scalacheck.Prop.forAll
 import java.nio.file.Files
@@ -521,6 +522,114 @@ object StoreProps extends Properties("Store") {
       same("query", s.query("K", start, end, columns)) &&
         same("queryMany", s.queryMany(Seq("k", "L"), start, end, columns))
     }
+  }
+
+  /** `append`, `appendNewOnly` and `compact` of a batch already on the
+    * driver run on the driver (no Spark job); with the threshold at -1
+    * the same calls run the distributed merge and write. Each case runs
+    * append → appendNewOnly → compact on both sides and, after every op,
+    * both stores must hold the same row multiset (-0.0 and +0.0 kept
+    * apart, so normalization must agree), the same row-bearing files per
+    * bucket, the same `describe` rows and index bounds, and the same
+    * footer-answered SQL count/min/max, answered from footers on both
+    * sides or on neither. Inputs: NULL, NaN and ±0.0 values, NULL-index
+    * rows, a batch spanning two buckets with duplicates inside it,
+    * None/day/month buckets and small `chunkRows`. Bytes are not
+    * compared (row order inside a file may differ), nor are zero-row
+    * files: the distributed write of an all-duplicate batch into an
+    * unbucketed item leaves one, the driver writes nothing.
+    */
+  property("driver mutations ≡ distributed mutations: rows, files, describe, footer SQL") =
+    forAll(Gen.choose(1L, 1000000L)) { seed => driverMutationsEqualDistributed(seed) }
+
+  private type MRow = (Option[Timestamp], Double, Option[Double], Option[Long], Option[String])
+
+  private def driverMutationsEqualDistributed(seed: Long): Boolean = {
+    val rnd = new scala.util.Random(seed)
+    val bucket = Seq(None, Some("day"), Some("month"))(rnd.nextInt(3))
+    val chunkRows = Seq(1000000L, 2L, 3L, 7L)(rnd.nextInt(4))
+    // 2021-01-31 → 2021-02-02 in 5 h steps: every batch crosses a day
+    // AND a month boundary
+    val t0 = java.time.Instant.parse("2021-01-31T00:00:00Z")
+    def row(i: Int): MRow =
+      (if (i % 11 == 5) None else Some(Timestamp.from(t0.plusSeconds(i * 5 * 3600L + rnd.nextInt(3) * 60))),
+        i % 5 match { case 0 => Double.NaN; case 1 => -0.0; case 2 => 0.0; case _ => rnd.nextInt(50) / 4.0 },
+        if (i % 3 == 0) None else Some(if (i % 2 == 0) -0.0 else rnd.nextInt(9) / 2.0),
+        if (i % 4 == 0) None else Some(rnd.nextInt(100).toLong),
+        if (i % 6 == 0) None else Some(s"r${i % 4}"))
+    val n = 4 + rnd.nextInt(8)
+    val stored = (0 until n).map(row)
+    val second = (n until n + 3 + rnd.nextInt(4)).map(row)
+    val third = (n + 8 until n + 12 + rnd.nextInt(4)).map(row)
+    def sign(r: MRow): MRow = r.copy(_2 = if (r._2 == 0.0) -r._2 else r._2)
+    // overlap with stored rows (a ±0.0 twin among them), new rows,
+    // duplicates inside the batch
+    val batch1 = stored.take(n / 2).map(sign) ++ second ++ second.take(2)
+    val batch2 = stored.takeRight(2) ++ second.take(1) ++ third ++ third.take(1).map(sign)
+    def df(rs: Seq[MRow]) = rs.toDF("ts", "v", "w", "x", "label")
+
+    def open(): (Store, String) = {
+      val dir = Files.createTempDirectory("graft-prop-m").toString
+      (Store.open(spark, dir, cols = Some(Seq("v" -> org.apache.spark.sql.types.DoubleType,
+        "w" -> org.apache.spark.sql.types.DoubleType, "x" -> org.apache.spark.sql.types.LongType,
+        "label" -> org.apache.spark.sql.types.StringType)),
+        index = Some("ts"), bucket = bucket, chunkRows = chunkRows), dir)
+    }
+    val (drv, drvDir) = open()
+    val (dist, distDir) = open()
+    Seq(drv, dist).foreach(s => TestSpark.distributed(s.write("K", df(stored))))
+
+    def canon(d: DataFrame) = d.collect().toSeq.map(_.toSeq.map {
+      case v: Double => java.lang.Double.doubleToLongBits(v)
+      case v => v
+    }).groupBy(identity).map { case (r, rs) => r -> rs.size }
+    /** Row-bearing data files per bucket dir of the current version. */
+    def filesPerBucket(s: Store, dir: String): Map[String, Int] = {
+      import scala.jdk.CollectionConverters._
+      val v = java.nio.file.Paths.get(dir, "items", "K", s.versionsOf("K").find(_.current).get.id)
+      val walk = Files.walk(v)
+      try walk.iterator().asScala.toVector
+        .filter(f => f.toString.endsWith(".parquet") && !v.relativize(f).iterator().asScala
+          .exists(seg => seg.toString.startsWith(".") || seg.toString.startsWith("_") && !seg.toString.contains("=")))
+        .filter { f =>
+          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+              new org.apache.hadoop.fs.Path(f.toString), new org.apache.hadoop.conf.Configuration()))
+          try r.getRecordCount > 0 finally r.close()
+        }
+        .groupBy(f => v.relativize(f.getParent).toString).map { case (b, fs) => b -> fs.size }
+      finally walk.close()
+    }
+    def footerSql(dir: String) = {
+      val agg = spark.read.format("graft").option("item", "K").load(dir)
+        .agg(count(lit(1)), min(col("TS")), max(col("TS")), min(col("X")), max(col("X")))
+      (agg.collect().toSeq.map(_.toSeq),
+        !agg.queryExecution.optimizedPlan.toString.contains("RelationV2"))
+    }
+    def same(step: String): Boolean = {
+      val checks = Seq(
+        "rows" -> (canon(drv("K")), canon(dist("K"))),
+        "files per bucket" -> (filesPerBucket(drv, drvDir), filesPerBucket(dist, distDir)),
+        "describe" -> (drv.describe("K").copy(files = 0, bytes = 0),
+          dist.describe("K").copy(files = 0, bytes = 0)),
+        "footer sql" -> (footerSql(drvDir), footerSql(distDir)))
+      val bad = checks.filter { case (_, (a, b)) => a != b }
+      bad.foreach { case (what, (a, b)) =>
+        System.err.println(s"[driver-mutation-prop] seed=$seed bucket=$bucket chunkRows=$chunkRows " +
+          s"after $step: $what differs\n driver=$a\n distributed=$b")
+      }
+      bad.isEmpty
+    }
+    def step(name: String)(op: Store => Unit): Boolean = {
+      val jobs = TestSpark.jobsDuring(op(drv))._2
+      TestSpark.distributed(op(dist))
+      if (jobs != 0)
+        System.err.println(s"[driver-mutation-prop] seed=$seed $name on the driver started $jobs jobs")
+      jobs == 0 && same(name)
+    }
+    step("append")(_.append("K", df(batch1))) &&
+      step("appendNewOnly")(_.appendNewOnly("K", df(batch2))) &&
+      step("compact")(_.compact("K"))
   }
 
   property("normalization is case-insensitive in column names") =

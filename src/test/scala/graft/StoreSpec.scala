@@ -329,11 +329,16 @@ class StoreSpec extends AnyFunSuite {
     val dir = tmpDir()
     val s = Store.open(spark, dir, bucket = Some("month"))
     s.write("MSFT", bars(123))
-    // multiple files, incl. appended ones; the merge of a local batch
-    // is one shuffle stage and the write — no sampling job, no join
+    // multiple files, incl. appended ones; a local batch is merged and
+    // written on the driver — no Spark job at all
     val (_, appendJobs) =
       TestSpark.jobsDuring(s.appendNewOnly("MSFT", bars(200)))
-    assert(appendJobs <= 2, s"appendNewOnly started $appendJobs Spark jobs")
+    assert(appendJobs == 0, s"appendNewOnly started $appendJobs Spark jobs")
+    // with the driver path off, the merge of a local batch is one
+    // shuffle stage and the write — no sampling job, no join
+    val (_, distributedJobs) =
+      TestSpark.jobsDuring(TestSpark.distributed(s.appendNewOnly("MSFT", bars(230))))
+    assert(distributedJobs <= 2, s"distributed appendNewOnly started $distributedJobs Spark jobs")
     // footers of a small item are read on driver threads: no job
     val (st, describeJobs) = TestSpark.jobsDuring(s.describe("MSFT"))
     assert(describeJobs == 0, s"describe started $describeJobs Spark jobs")
@@ -366,7 +371,9 @@ class StoreSpec extends AnyFunSuite {
     assert(TestSpark.jobsDuring(s.compactIfNeeded("MSFT", maxFiles = before.files + 1)) ==
       ((false, 0)), "under threshold: a no-op that starts no Spark job")
     assert(s.describe("MSFT").files == before.files, "no-op must not touch files")
-    assert(s.compactIfNeeded("MSFT", maxFiles = before.files / 2), "over threshold: compacts")
+    // a small item is read and rewritten on the driver: no Spark job
+    assert(TestSpark.jobsDuring(s.compactIfNeeded("MSFT", maxFiles = before.files / 2)) ==
+      ((true, 0)), "over threshold: compacts, on the driver")
     val after = s.describe("MSFT")
     // canonical floor for a month-bucketed item: one file per bucket
     val buckets = s("MSFT").select(date_format(col("DATE"), "yyyy-MM")).distinct().count()
@@ -378,6 +385,31 @@ class StoreSpec extends AnyFunSuite {
     val t0 = Timestamp.valueOf("2015-02-01 00:00:00")
     val t1 = Timestamp.valueOf("2015-03-01 00:00:00")
     assert(s.query("MSFT", Some(t0), Some(t1)).count() == 29)
+  }
+
+  test("vacuum: sweeps stale driver-write temp files in live buckets; no read counts them") {
+    val dir = tmpDir()
+    val s = Store.open(spark, dir, bucket = Some("month"))
+    s.write("MSFT", bars(100))
+    s.appendNewOnly("MSFT", bars(130))
+    val want = (s.describe("MSFT"), s("MSFT").count(), s.query("MSFT").count())
+    // a driver-side append that died between writing a file under its
+    // hidden temp name and renaming it: plant two such files, a copy of
+    // a real data file each, one past vacuum's age guard, one fresh
+    val bucketDir = java.nio.file.Paths.get(dir, "items", "MSFT",
+      s.versionsOf("MSFT").find(_.current).get.id, "__bucket=2015-02")
+    val data = Files.list(bucketDir).filter(_.toString.endsWith(".parquet")).findFirst().get
+    val stale = bucketDir.resolve(".graft-tmp-part-00000-stale-c000.snappy.parquet")
+    val fresh = bucketDir.resolve(".graft-tmp-part-00000-fresh-c000.snappy.parquet")
+    Files.copy(data, stale)
+    Files.copy(data, fresh)
+    assert(stale.toFile.setLastModified(System.currentTimeMillis() - 2 * 3600 * 1000L))
+    def reads = (s.describe("MSFT"), s("MSFT").count(), s.query("MSFT").count())
+    assert(reads == want, "a temp file must never be counted")
+    assert(TestSpark.distributed(s.query("MSFT").count()) == want._2)
+    assert(s.vacuum() == 1L, "the default age guard sweeps only the stale temp file")
+    assert(!Files.exists(stale) && Files.exists(fresh))
+    assert(reads == want)
   }
 
   /** Parquet files under `itemDir` whose index column lacks INT64

@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.GraftTestBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.graft.Bridge
 
 /** One shared local session for the whole test run. */
 object TestSpark {
@@ -42,7 +42,7 @@ object TestSpark {
     sc.setJobGroup(group, "jobsDuring")
     try {
       val out = body
-      GraftTestBridge.drainListeners(sc)
+      Bridge.drainListeners(session)
       (out, jobs.get)
     } finally {
       sc.clearJobGroup()
@@ -61,8 +61,9 @@ object TestSpark {
     finally prev.fold(conf.unset(key))(conf.set(key, _))
   }
 
-  /** Runs `body` with `Store.query`'s driver read off, so every slice it
-    * builds is the distributed scan.
+  /** Runs `body` with the store's driver paths off: every `Store.query`
+    * slice it builds is the distributed scan, and every append or
+    * compaction runs as Spark jobs.
     */
   def distributed[T](body: => T): T =
     withConf("spark.sql.autoBroadcastJoinThreshold", "-1")(body)
