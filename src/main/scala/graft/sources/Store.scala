@@ -360,9 +360,11 @@ object Store {
   private[sources] val activeStagingIds: java.util.Set[String] =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  /** Name prefix of a file [[Store!.appendNewOnly]], [[Store!.append]]
-    * or [[Store!.compact]] is writing on the driver: hidden, so no
-    * listing counts it, until it is renamed to its final name.
+  /** Name prefix of what the store writes before renaming it into
+    * place: a data file [[Store!.appendNewOnly]], [[Store!.append]] or
+    * [[Store!.compact]] writes on the driver, the output dir of a
+    * distributed `appendNewOnly`, and a local pointer or marker file
+    * ([[writeUTF8]]). Hidden, so no listing counts it.
     */
   private[sources] val DriverTmpPrefix = ".graft-tmp-"
 
@@ -439,8 +441,8 @@ object Store {
 
   /** Time-bucket granularities for directory partitioning. Formats are
     * zero-padded so lexicographic string comparison equals time order —
-    * that is what makes partition pruning expressible as a string range
-    * predicate on the bucket column.
+    * that is what makes bucket pruning a string range test on the
+    * bucket dir labels ([[Store!.files]]).
     */
   val BucketFormats: Map[String, String] = Map(
     "day" -> "yyyy-MM-dd",
@@ -465,13 +467,14 @@ object Store {
     *
     * `bucket` (None | "day" | "month" | "year") selects directory-level
     * time partitioning: items are written `partitionBy` a derived bucket
-    * column so range queries prune whole directories before any file I/O
-    * — the at-scale complement of the reference's row-group-stat pruning
-    * (store.py:255-264). Persisted and enforced like the schema. Bucket
-    * strings are rendered in the session timezone at write AND query
+    * column so range reads list only the in-range directories, before
+    * any file I/O — the at-scale complement of the reference's
+    * row-group-stat pruning (store.py:255-264). Persisted and enforced
+    * like the schema. Bucket strings are rendered in the session
+    * timezone at write time and in the persisted store timezone at read
     * time; the creating session's timezone is persisted alongside the
-    * bucket and a reopen under a different timezone fails fast (silently
-    * mis-pruned partitions otherwise).
+    * bucket, and a bucketed write under a different session timezone
+    * fails fast (mislabeled buckets otherwise).
     *
     * `chunkRows` caps rows per written Parquet file — the reference pins
     * 1 M-row sorted chunks (store.py:27, applied store.py:174) so
@@ -766,14 +769,38 @@ object Store {
     }
   }
 
-  /** Single-stream create-and-close: on object stores the object only
-    * becomes visible at close, which makes each marker/metadata write
-    * all-or-nothing — the property the swap protocol leans on.
+  /** All-or-nothing write of a pointer, marker or metadata file — the
+    * property the pointer commit and the swap protocol lean on. An
+    * object store gets one create-and-close: the object becomes visible
+    * at close. On the local filesystem, where a create truncates in
+    * place, the content goes to a hidden temp beside `p` (created
+    * through [[graft.sources.v2.NioLocalFileSystem]]: no `chmod` fork,
+    * no `.crc`) that is renamed over `p` — or, when `overwrite` is
+    * false, renamed only if `p` does not exist yet. Readers see
+    * the old content or the new, never a torn file. A `.crc` an older
+    * checksummed write left beside `p` is removed first (it would fail
+    * a checksummed reader of the new content); [[Store!.vacuum]] sweeps
+    * a temp a crash left.
     */
   private[graft] def writeUTF8(
       fs: FileSystem, p: HPath, s: String, overwrite: Boolean = true): Unit = {
-    val out = fs.create(p, overwrite)
-    try out.write(s.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    val local = Option.when(fs.getScheme == "file")(graft.sources.v2.NioLocalFileSystem.shared)
+    val id = java.util.UUID.randomUUID().toString
+    val tmp = local.fold(p)(_ => new HPath(p.getParent, DriverTmpPrefix + id))
+    activeStagingIds.add(id)
+    try {
+      val out = local.getOrElse(fs).create(tmp, overwrite)
+      try out.write(s.getBytes(StandardCharsets.UTF_8)) finally out.close()
+      local.foreach { l =>
+        val (src, dst) = (l.pathToFile(tmp).toPath, l.pathToFile(p).toPath)
+        java.nio.file.Files.deleteIfExists(dst.resolveSibling(s".${p.getName}.crc"))
+        if (overwrite) java.nio.file.Files.move(src, dst, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+        else java.nio.file.Files.move(src, dst)
+      }
+    } finally {
+      local.foreach(l => java.nio.file.Files.deleteIfExists(l.pathToFile(tmp).toPath))
+      activeStagingIds.remove(id)
+    }
   }
 }
 
@@ -786,8 +813,9 @@ object Store {
   *
   * Scale posture: writes are `repartitionByRange` on the index so Parquet
   * row-group min/max stats are selective (the reference's 1M-row sorted
-  * chunks, store.py:27,174); range queries push `>=`/`<=` filters into the
-  * Parquet scan (store.py:255-264 equivalent comes free from Catalyst);
+  * chunks, store.py:27,174); a read lists the item once ([[files]]: only
+  * the in-range bucket dirs) and scans exactly those files, with the
+  * `>=`/`<=` bounds pushed to Parquet row-group stats (store.py:255-264);
   * appends have an O(new)-write path instead of the reference's
   * O(history) rewrite (store.py:225-236). The control plane runs on
   * `org.apache.hadoop.fs.FileSystem`, so base paths may be `file:`,
@@ -1257,7 +1285,7 @@ class Store private[sources] (
     * rows into wrong buckets — mislabeled data, not just mis-pruning).
     *
     * READS and label-driven maintenance need no such guard: every
-    * read-side label ([[query]]'s bucket bounds, [[prunedRoots]],
+    * read-side label ([[files]]' bucket bounds,
     * [[prune]]/[[compactBuckets]]'s cutoffs) is rendered by
     * [[bucketLabel]] under the PERSISTED store timezone, and the
     * residual time predicates compare instants — both
@@ -1329,45 +1357,24 @@ class Store private[sources] (
       )
   }
 
-  /** Raw item read, always under the store's OWN schema — never
-    * inference. Three reasons: an EMPTY item (a just-created table, a
-    * fully-retained-away one) has no footer to infer from and must
-    * still read as zero rows of the right shape; inference costs a
-    * footer read per query; and on bucketed stores partition-value
-    * inference would type a day-format `__bucket` as DATE, when the
-    * pruning contract (lexicographic label comparison, [[query]]) is
-    * defined on the zero-padded STRING.
-    */
-  private def loadRaw(key: String): DataFrame = {
-    val p = dataPath(key).toString
-    if (bucket.isDefined)
-      spark.read.schema(schema.add(BucketCol, StringType)).parquet(p)
-    else spark.read.schema(schema).parquet(p)
-  }
-
   /** Recursive file listing, shaped per scheme:
     *
     *  - `file://`: a per-directory `listStatus` walk. Same round-trip
     *    count as `fs.listFiles(p, true)` but WITHOUT materializing
     *    `LocatedFileStatus` block locations, which on the local
-    *    filesystem cost a per-file metadata probe (measured ~6 ms each
-    *    — 0.4 s to list a 61-file item, dominating every metadata-only
-    *    op) and carry nothing any caller here uses.
+    *    filesystem cost a per-file metadata probe (measured ~6 ms each)
+    *    and carry nothing any caller here uses.
     *  - everything else: `fs.listFiles(p, true)`, because object
     *    stores implement it as ONE flat paged LIST over the key prefix
     *    — a per-directory walk there would pay one round-trip per
     *    bucket directory (10k buckets = 10k LISTs vs ~10 pages).
-    */
-  /** `rootMustExist = true` (default): a ROOT that does not exist
-    * surfaces as FileNotFoundException instead of an empty listing — a
-    * caller passing an unchecked root must not read "empty item" where
-    * the truth is "no such path" (r16 ADVICE). The vanish-tolerance
-    * below is only for CHILDREN disappearing mid-walk (point-in-time
-    * snapshot semantics). Callers that walk dirs taken from a fresh
-    * listing — which a concurrent vacuum/compaction can legitimately
-    * delete before the walk starts — pass `rootMustExist = false`.
-    * Strictness costs no extra round-trip: the root's own listStatus /
-    * listFiles call already throws FNF when it is missing.
+    *
+    * With `rootMustExist` (default) a missing ROOT throws
+    * FileNotFoundException instead of reading as empty — "no such path"
+    * is not "empty item" (r16 ADVICE); callers walking a dir taken from
+    * a point-in-time listing, which a concurrent vacuum or compaction
+    * may delete, pass false. CHILDREN vanishing mid-walk are always
+    * tolerated (snapshot semantics). Strictness costs no round-trip.
     */
   private def walkFiles(
       root: HPath,
@@ -1446,11 +1453,13 @@ class Store private[sources] (
 
   /** The `.parquet` files under `root` outside hidden segments: an
     * in-flight committer's `_temporary` task payload is not
-    * data, and neither is a non-parquet file. The root may vanish (it
-    * comes from a point-in-time listing): then it holds nothing.
+    * data, and neither is a non-parquet file. Unless `rootMustExist`,
+    * the root may vanish (it comes from a point-in-time listing): then
+    * it holds nothing.
     */
-  private def parquetUnder(root: HPath): Seq[org.apache.hadoop.fs.FileStatus] =
-    walkFiles(root, rootMustExist = false).filter(st =>
+  private def parquetUnder(
+      root: HPath, rootMustExist: Boolean = false): Seq[org.apache.hadoop.fs.FileStatus] =
+    walkFiles(root, rootMustExist).filter(st =>
       st.isFile && st.getPath.getName.endsWith(".parquet") &&
         !hiddenBelow(root, st.getPath))
 
@@ -1460,18 +1469,26 @@ class Store private[sources] (
 
   /** The active version id named by the pointer. */
   private def currentVersion(key: String): String = {
-    val ptr = ptrPath(key)
-    if (!fs.exists(ptr)) throw new ItemKeyError(s"no such item: ${validateKey(key)}")
-    val v = readUTF8(fs, ptr).trim
-    // a torn pointer (empty file from a crash between create and write,
-    // or naming a vanished dir) would otherwise surface as a baffling
-    // FileNotFound deep inside a scan; fail actionably instead —
-    // vacuum() repairs the pointer to the newest complete version
-    if (v.isEmpty || !fs.exists(new HPath(new HPath(itemsRoot, validateKey(key)), v)))
-      throw new java.io.IOException(
-        s"item ${validateKey(key)}: version pointer is torn or dangling " +
-          s"('$v'); run vacuum() to repair it to the newest complete version")
-    v
+    val k = validateKey(key)
+    val ptr = ptrPath(k)
+    if (!fs.exists(ptr)) throw new ItemKeyError(s"no such item: $k")
+    // a commit can move the pointer on, and delete the version it named,
+    // between the read and the check: re-read while the pointer moves
+    def resolve(v: String, moves: Int): String =
+      if (v.nonEmpty && fs.exists(new HPath(new HPath(itemsRoot, k), v))) v
+      else {
+        val again = readUTF8(fs, ptr).trim
+        // a torn pointer (empty, or naming a vanished dir) would
+        // otherwise surface as a baffling FileNotFound deep inside a
+        // scan; fail actionably instead — vacuum() repairs the pointer
+        // to the newest complete version
+        if (again == v || moves >= 5)
+          throw new java.io.IOException(
+            s"item $k: version pointer is torn or dangling " +
+              s"('$v'); run vacuum() to repair it to the newest complete version")
+        resolve(again, moves + 1)
+      }
+    resolve(readUTF8(fs, ptr).trim, 0)
   }
 
   /** The directory holding an item's live DATA — the `_current`-named
@@ -1542,37 +1559,62 @@ class Store private[sources] (
     * row groups that carry stats.
     *
     * Rows are exact; min/max are None for an empty item (or if a writer
-    * produced no stats).
+    * produced no stats). `files` and `bytes` count the [[files]]
+    * listing, the one every read and [[compactIfNeeded]] use.
     */
   def describe(key: String): Store.ItemStats = {
-    val files = parquetFiles(key)
+    val listed = files(key)
     val idx = indexName
     // a file a concurrent compact swapped out since the listing
     // contributes nothing: describe is a point-in-time snapshot
-    val (perFile, _) = sweepFooters(files.map(_._1), Seq(idx), Set(idx))
+    val (perFile, _) = sweepFooters(listed, Seq(idx), Set(idx))
     val ranges = perFile.flatMap(_.minMaxByCol.get(idx))
     Store.ItemStats(
       rows = perFile.map(_.rows).sum,
       minIndex = ranges.map(_._1).minOption.map(Store.microsToTimestamp),
       maxIndex = ranges.map(_._2).maxOption.map(Store.microsToTimestamp),
-      files = files.size.toLong,
-      bytes = files.map(_._2).sum
+      files = listed.size.toLong,
+      bytes = listed.map(_.getLen).sum
     )
   }
 
-  /** (path, length) of the item's current `.parquet` data files from one
-    * listing ([[parquetUnder]]) — no per-file round-trips for sizes (on
-    * S3 a per-file getFileStatus would be a HEAD request each). The one
-    * file count [[describe]] reports and [[compactIfNeeded]] decides on.
+  /** THE listing of an item's data: every read of item data takes its
+    * files from here, and every scan is built over exactly this list
+    * ([[SparkInternals]] hands Spark the statuses). It resolves the
+    * `_current` pointer once, lists the bucket dirs whose label falls in
+    * the inclusive range [start, end] — all of them when unbounded, the
+    * version dir on an unbucketed store — and keeps the `.parquet` files
+    * outside hidden segments, sorted by path. Labels are rendered under
+    * the PERSISTED store timezone ([[bucketLabel]]); no per-file
+    * round-trip. A listing a concurrent committer, compaction or prune
+    * invalidates is retaken ([[retryVanished]]). When readers take their
+    * files from a manifest instead, this body is what changes.
     */
-  private def parquetFiles(key: String): Seq[(String, Long)] = {
-    val p = dataPath(key)
-    // the recursive iterator can throw mid-walk if a concurrent
-    // committer removes its _temporary dir between the parent listing
-    // and the descent — that's a stale snapshot, not an error, so
-    // retake it
-    retryVanished(parquetUnder(p).map(st => (st.getPath.toString, st.getLen)))
-  }
+  private[sources] def files(
+      key: String,
+      start: Option[Timestamp] = None,
+      end: Option[Timestamp] = None): Seq[FileStatus] =
+    filesWhere(key, bucketFmt.filter(_ => start.isDefined || end.isDefined).map { f =>
+      val (lo, hi) = (start.map(bucketLabel(f, _)), end.map(bucketLabel(f, _)))
+      (b: String) => lo.forall(b >= _) && hi.forall(b <= _)
+    })
+
+  /** [[files]] of the bucket dirs whose label passes `keep` (every bucket
+    * dir when None; the whole version dir on an unbucketed store). A data
+    * file of a bucketed item lies directly inside a bucket dir.
+    */
+  private def filesWhere(key: String, keep: Option[String => Boolean]): Seq[FileStatus] =
+    retryVanished {
+      val p = dataPath(key)
+      val listed = keep match {
+        case Some(k) if bucket.isDefined => bucketDirs(p)(k).flatMap(parquetUnder(_))
+        // the version dir was just resolved: vanishing is a concurrent
+        // swap, retaken above, never an empty item
+        case _ => parquetUnder(p, rootMustExist = true)
+      }
+      listed.filter(st => bucket.isEmpty || st.getPath.getParent.getName.startsWith(BucketCol + "="))
+        .sortBy(_.getPath.toString)
+    }
 
   /** Runs `body`, retaking it (at most 5 more times) while it fails
     * because a path it listed vanished under it — a concurrent
@@ -1597,22 +1639,12 @@ class Store private[sources] (
     attempt(5)
   }
 
-  /** Sorted listing of the item's current data files (full path
-    * strings): the [[parquetFiles]] listing, so every footer read,
-    * compaction count and stream offset sees the files [[describe]]
-    * counts. The metadata backbone of the DSv2 micro-batch stream's
-    * offsets ([[graft.sources.v2.GraftMicroBatchStream]]). It resolves
-    * the CURRENT version pointer at call time, like every read.
-    */
-  private[sources] def dataFiles(key: String): Seq[String] =
-    parquetFiles(key).map(_._1).sorted
-
   /** Footer stats of every current data file of the item, for the
     * unfiltered footer answer; a file that vanished mid-sweep refuses
     * with FileNotFoundException ([[footersOrRefuse]]).
     */
   private[graft] def footerFiles(key: String): Array[Store.FileFooterStats] =
-    footersOrRefuse(dataFiles(key), schema.fieldNames.toSeq, mmStatCols)
+    footersOrRefuse(files(key), schema.fieldNames.toSeq, mmStatCols)
 
   /** THE footer sweep — every footer read of the store goes through
     * here: [[describe]], [[footerFiles]], [[footerFilesInRange]] and the
@@ -1630,8 +1662,9 @@ class Store private[sources] (
     * answer must be exact refuse through [[footersOrRefuse]].
     */
   private def sweepFooters(
-      paths: Seq[String], cols: Seq[String], mmCols: Set[String])
+      files: Seq[FileStatus], cols: Seq[String], mmCols: Set[String])
       : (Array[Store.FileFooterStats], Seq[String]) = {
+    val paths = files.map(_.getPath.toString)
     val read: Array[Option[Store.FileFooterStats]] =
       if (paths.size <= 256) {
         val conf = spark.sparkContext.hadoopConfiguration
@@ -1669,9 +1702,9 @@ class Store private[sources] (
     * re-lists).
     */
   private def footersOrRefuse(
-      paths: Seq[String], cols: Seq[String], mmCols: Set[String])
+      files: Seq[FileStatus], cols: Seq[String], mmCols: Set[String])
       : Array[Store.FileFooterStats] = {
-    val (perFile, vanished) = sweepFooters(paths, cols, mmCols)
+    val (perFile, vanished) = sweepFooters(files, cols, mmCols)
     if (vanished.nonEmpty)
       throw new java.io.FileNotFoundException(
         s"${vanished.size} file(s) vanished during the footer sweep, e.g. ${vanished.head}")
@@ -1708,11 +1741,9 @@ class Store private[sources] (
     val mmCols: Set[String] = mmStatCols
     // scope the sweep to the bucket-pruned superset (inclusive
     // timestamps are a superset of any strictness)
-    val roots = prunedRoots(key,
+    val perFile = footersOrRefuse(files(key,
       lo.map(b => Store.microsToTimestamp(b._1)),
-      hi.map(b => Store.microsToTimestamp(b._1)))
-    val paths = dataFilesUnder(roots)
-    val perFile = footersOrRefuse(paths, cols, mmCols)
+      hi.map(b => Store.microsToTimestamp(b._1))), cols, mmCols)
 
     // a value v is in range iff aboveLo(v) && belowHi(v)
     def aboveLo(v: Long): Boolean = lo.forall {
@@ -1747,35 +1778,6 @@ class Store private[sources] (
     if (unprovable) None else Some((included.toArray, allNull.toArray))
   }
 
-  /** The data files under the given pruned roots — [[parquetUnder]],
-    * the filter [[dataFiles]] applies, scoped so metadata sweeps over a
-    * range slice pay for the slice, not the item. Pruned bucket roots
-    * come from a point-in-time listing a concurrent compaction/prune
-    * can delete; such a root holds nothing.
-    */
-  private def dataFilesUnder(roots: Seq[HPath]): Seq[String] =
-    roots.flatMap(parquetUnder).map(_.getPath.toString).sorted
-
-  /** Total DATA bytes under the given roots (pruned bucket dirs, or
-    * individual files from a LIMIT prefix) — the planner-facing size
-    * estimate behind [[graft.sources.v2.GraftScan]]'s
-    * `SupportsReportStatistics`. One listing per directory root (the
-    * same hidden-segment filter every read path applies, so an
-    * in-flight committer's `_temporary` payload never inflates the
-    * estimate), `getFileStatus` per file root. Vanish-tolerant like
-    * every listing here: a root deleted mid-walk (concurrent
-    * compaction/prune) contributes zero — stats are estimates, the
-    * scan itself will surface any real error.
-    */
-  private[sources] def bytesUnder(roots: Seq[HPath]): Long =
-    roots.map { r =>
-      try {
-        val st = fs.getFileStatus(r)
-        if (st.isFile) st.getLen
-        else parquetUnder(r).map(_.getLen).sum
-      } catch { case _: java.io.IOException | _: RuntimeException => 0L }
-    }.sum
-
   /** File prefix that satisfies a pushed LIMIT: walk the item's files in
     * listing order accumulating footer row counts until the limit is
     * covered ([[coveringPrefix]]), so `SELECT * FROM item LIMIT 10`
@@ -1787,8 +1789,8 @@ class Store private[sources] (
     * `isPartiallyPushed`), so a file vanishing mid-walk (concurrent
     * compaction) just falls back to the full listing.
     */
-  private[sources] def filesForLimit(key: String, limit: Long): Seq[String] = {
-    val all = dataFiles(key)
+  private[sources] def filesForLimit(key: String, limit: Long): Seq[FileStatus] = {
+    val all = files(key)
     coveringPrefix(all.map(Seq(_)), limit).getOrElse(all)
   }
 
@@ -1800,7 +1802,7 @@ class Store private[sources] (
     * group) and [[filesForTopN]] (one bucket per group); None means the
     * caller plans the unpruned listing.
     */
-  private def coveringPrefix(groups: Seq[Seq[String]], k: Long): Option[Seq[String]] =
+  private def coveringPrefix(groups: Seq[Seq[FileStatus]], k: Long): Option[Seq[FileStatus]] =
     try {
       var cum = 0L
       var reads = 0
@@ -1814,70 +1816,44 @@ class Store private[sources] (
       if (cum >= k) Some(groups.take(i).flatten) else None
     } catch { case _: java.io.IOException => None }
 
-  /** Groups an item's data files by their `__bucket=` directory and
-    * returns them in CHRONOLOGICAL order — or None when the layout is
-    * not order-prunable: unbucketed items, fewer than two buckets
-    * (no pruning win), any file outside a bucket dir, or any bucket
-    * value that isn't the store's zero-padded date shape (this is also
-    * what rejects a `__HIVE_DEFAULT_PARTITION__` null-index bucket —
-    * rows with a NULL index must veto order pruning, since SQL sorts
-    * place them at an end the bucket order knows nothing about).
-    * Zero-padded same-length digit/dash labels make lexicographic
-    * order chronological regardless of the store timezone (the mapping
-    * instant→label is monotone under any fixed tz).
+  /** A [[files]] listing grouped by bucket dir in CHRONOLOGICAL order —
+    * or None when the layout is not order-prunable, which is what a
+    * pushed `ORDER BY <index> LIMIT k` probes at plan time
+    * ([[graft.sources.v2.GraftScanBuilder]]): unbucketed items, fewer
+    * than two buckets (no pruning win), or any bucket value that isn't
+    * the store's zero-padded date shape (this is also what rejects a
+    * `__HIVE_DEFAULT_PARTITION__` null-index bucket — rows with a NULL
+    * index must veto order pruning, since SQL sorts place them at an
+    * end the bucket order knows nothing about). Zero-padded same-length
+    * digit/dash labels make lexicographic order chronological
+    * regardless of the store timezone (the mapping instant→label is
+    * monotone under any fixed tz).
     */
-  private def topNBuckets(files: Seq[String])
-      : Option[Seq[(String, Seq[String])]] = {
-    if (files.isEmpty) return None
-    val shaped = files.map { f =>
-      val segs = f.split('/')
-      if (segs.length < 2) None
-      else {
-        val parent = segs(segs.length - 2)
-        if (!parent.startsWith(BucketCol + "=")) None
-        else {
-          val v = parent.substring(BucketCol.length + 1)
-          if (v.nonEmpty && v.head.isDigit && v.forall(c => c.isDigit || c == '-'))
-            Some((v, f))
-          else None
-        }
-      }
-    }
-    if (shaped.exists(_.isEmpty)) return None
-    val byBucket = shaped.flatten.groupBy(_._1)
-    if (byBucket.size < 2) return None
-    if (byBucket.keys.map(_.length).toSet.size != 1) return None // mixed shapes
-    Some(byBucket.toSeq.sortBy(_._1).map { case (b, fs) => (b, fs.map(_._2)) })
+  private[sources] def topNBuckets(files: Seq[FileStatus]): Option[Seq[Seq[FileStatus]]] = {
+    val byBucket = files.groupBy(_.getPath.getParent.getName.stripPrefix(BucketCol + "="))
+    val dated = byBucket.keys.forall(v =>
+      v.nonEmpty && v.head.isDigit && v.forall(c => c.isDigit || c == '-'))
+    if (bucket.isEmpty || byBucket.size < 2 || !dated ||
+        byBucket.keys.map(_.length).toSet.size != 1) None // mixed shapes
+    else Some(byBucket.toSeq.sortBy(_._1).map(_._2))
   }
 
-  /** Whether a pushed TopN on the index can prune this item at all —
-    * the cheap feasibility probe the DSv2 scan builder runs at plan
-    * time (one listing, no footer reads).
+  /** Bucket prefix (ASC) / suffix (DESC) of `buckets` (a [[topNBuckets]]
+    * grouping) whose footer row counts cover a pushed
+    * `ORDER BY <index> [DESC] LIMIT k`: bucket dirs partition time, so
+    * every excluded file's index values lie strictly beyond every
+    * included bucket's range — once the included rows number ≥ k, the
+    * true top-k live inside the selection. `SELECT * FROM item ORDER BY
+    * ts DESC LIMIT 100` on a 100 TB item reads the newest bucket(s)
+    * instead of the corpus. Exactness never depends on the selection
+    * (Spark re-sorts and re-limits above the scan —
+    * `isPartiallyPushed`), so anything unprovable — > 64 footer reads,
+    * vanished files, uncovered k — returns every file, which is merely
+    * the unpruned plan.
     */
-  private[sources] def orderPrunable(key: String): Boolean =
-    topNBuckets(dataFiles(key)).isDefined
-
-  /** Bucket prefix (ASC) / suffix (DESC) whose footer row counts cover
-    * a pushed `ORDER BY <index> [DESC] LIMIT k`: bucket dirs partition
-    * time, so every excluded file's index values lie strictly beyond
-    * every included bucket's range — once the included rows number ≥ k,
-    * the true top-k live inside the selection. `SELECT * FROM item
-    * ORDER BY ts DESC LIMIT 100` on a 100 TB item reads the newest
-    * bucket(s) instead of the corpus. Exactness never depends on the
-    * selection (Spark re-sorts and re-limits above the scan —
-    * `isPartiallyPushed`), so anything unprovable — non-prunable
-    * layout, > 64 footer reads, vanished files, uncovered k — returns
-    * the full listing, which is merely the unpruned plan.
-    */
-  private[sources] def filesForTopN(key: String, k: Long, desc: Boolean): Seq[String] = {
-    val all = dataFiles(key)
-    topNBuckets(all) match {
-      case None => all
-      case Some(asc) =>
-        val ordered = (if (desc) asc.reverse else asc).map(_._2)
-        coveringPrefix(ordered, k).getOrElse(all)
-    }
-  }
+  private[sources] def filesForTopN(
+      buckets: Seq[Seq[FileStatus]], k: Long, desc: Boolean): Seq[FileStatus] =
+    coveringPrefix(if (desc) buckets.reverse else buckets, k).getOrElse(buckets.flatten)
 
   /** Schema normalization (reference `_to_internal_type`,
     * store.py:141-174): [[conform]]'s projection and cast, rows
@@ -2067,11 +2043,17 @@ class Store private[sources] (
           "first — vacuum(0) if no other writer can be live")
   }
 
-  /** Lazy handle: full scan of one item (reference `_Item`,
-    * store.py:49-71 — no I/O until an action).
+  /** Full scan of one item (reference `_Item`, store.py:49-71): the
+    * item is listed once when this is called ([[files]]) and the
+    * returned DataFrame is a lazy scan of exactly those files — no data
+    * is read until an action.
     */
-  def apply(key: String): DataFrame =
-    loadRaw(key).drop(BucketCol).select(schema.fieldNames.map(col).toIndexedSeq: _*)
+  def apply(key: String): DataFrame = frameOver(files(key))
+
+  /** A lazy DataFrame of the store schema over exactly `files`
+    * ([[SparkInternals.frameOver]]: nothing is listed again). */
+  private def frameOver(files: Seq[FileStatus]): DataFrame =
+    SparkInternals.frameOver(spark, files, schema)
 
   /** Assignment sugar: `store("KEY") = df` — Scala's `update` desugaring
     * mirrors the reference's `store['KEY'] = df` (`__setitem__`,
@@ -2082,7 +2064,8 @@ class Store private[sources] (
   def update(key: String, df: DataFrame): Unit = write(key, df)
 
   /** Mutable-looking handle for the reference's `store[k] += df` append
-    * idiom: `store.item("KEY") += df`. Reads stay lazy via [[toDF]];
+    * idiom: `store.item("KEY") += df`. [[toDF]] is [[Store!.apply]]: the
+    * item listed at the call, its data read lazily;
     * `store.item("KEY")(t0, t1)` mirrors the reference's item slicing
     * `store[k][t0:t1]` (`_Item.__getitem__`, store.py:61-68), including
     * its defaulted bounds (1678-01-01 .. now, via [[sliceCompat]]).
@@ -2386,19 +2369,18 @@ class Store private[sources] (
     requireNoPendingMarkers(key)
     if (!compactOnDriver(key)) {
       // rewrite exactly the listed files: the ones describe counts
-      val files = dataFiles(key)
-      val canonical =
-        canonicalLayout(spark.read.schema(schema).parquet(files: _*), canonicalFiles(files))
+      val listed = files(key)
+      val canonical = canonicalLayout(frameOver(listed), canonicalFiles(listed))
       versionSwap(key)(v => writer(canonical).mode("overwrite").parquet(v.toString))
     }
   }
 
-  /** The canonical file count of the data in `paths`: ceil(footer rows
+  /** The canonical file count of the data in `files`: ceil(footer rows
     * / [[chunkRows]]), at least 1 — the rewrite target of [[compact]]
     * and [[compactBuckets]].
     */
-  private def canonicalFiles(paths: Seq[String]): Long =
-    canonicalCount(footersOrRefuse(paths, Nil, Set.empty).map(_.rows).sum)
+  private def canonicalFiles(files: Seq[FileStatus]): Long =
+    canonicalCount(footersOrRefuse(files, Nil, Set.empty).map(_.rows).sum)
 
   private def canonicalCount(rows: Long): Long =
     math.max(1L, (rows + chunkRows - 1) / chunkRows)
@@ -2415,9 +2397,8 @@ class Store private[sources] (
 
   /** The policy that decides WHEN [[compact]] runs: rewrite the item
     * only once [[appendNewOnly]]'s accumulated small files exceed
-    * `maxFiles`, counted from ONE listing of the item's data files —
-    * the same `.parquet` files outside hidden segments [[describe]]
-    * counts. The decision reads no footer and starts no Spark job, so
+    * `maxFiles`, counted from ONE [[files]] listing — the files
+    * [[describe]] counts and every read scans. The decision reads no footer and starts no Spark job, so
     * calling this after every append batch costs one LIST until the
     * threshold trips; a tripping call on a small item is a driver-side
     * [[compact]], still with no Spark job. Returns true when a compaction
@@ -2431,7 +2412,7 @@ class Store private[sources] (
     */
   def compactIfNeeded(key: String, maxFiles: Long = 64L): Boolean = {
     require(maxFiles > 0, "maxFiles must be positive")
-    val needed = parquetFiles(key).size > maxFiles
+    val needed = files(key).size > maxFiles
     if (needed) compact(key)
     needed
   }
@@ -2453,7 +2434,9 @@ class Store private[sources] (
     * its siblings), so steady-state maintenance cost tracks the append
     * rate, not the item size.
     * Cold buckets are never read OR rewritten — the decision is one
-    * LIST per bucket (O(buckets) metadata, zero data rows).
+    * [[files]] listing (one LIST per bucket: O(buckets) metadata, zero
+    * data rows), and each rewrite reads exactly its bucket's listed
+    * files.
     *
     * Returns the number of buckets rewritten. [[SchemaError]] on
     * non-bucketed stores (use [[compact]]/[[compactIfNeeded]]). This
@@ -2489,13 +2472,11 @@ class Store private[sources] (
           s"store at $base is not bucketed; compactBuckets needs directory " +
             "buckets (open with bucket = day|month|year) — use compact()"))
       requireNoPendingMarkers(key)
-      val p = dataPath(key)
       val cutoff = since.map(bucketLabel(fmt, _))
-      val buckets = bucketDirs(p)(b => cutoff.forall(b >= _))
+      val buckets = filesWhere(key, Some(b => cutoff.forall(b >= _))).groupBy(_.getPath.getParent)
       var rewritten = 0L
-      buckets.foreach { d =>
-        val dataPaths = parquetUnder(d).map(_.getPath.toString)
-        val dataFiles = dataPaths.size
+      buckets.toSeq.sortBy(_._1.toString).foreach { case (d, listed) =>
+        val dataFiles = listed.size
         // convergence guard: a bucket holding more rows than
         // maxFilesPerBucket × chunkRows can never compact below the
         // threshold — without the canonical-count clamp it would be
@@ -2503,7 +2484,7 @@ class Store private[sources] (
         // row counts (read only for over-threshold buckets, from the
         // SAME listing) bound the target: rewrite only when the bucket
         // holds more files than its rows canonically need.
-        lazy val target = canonicalFiles(dataPaths)
+        lazy val target = canonicalFiles(listed)
         if (dataFiles > maxFilesPerBucket && dataFiles > target) {
           // bucket files store the data columns only (the bucket value
           // lives in the dir name), so the rewrite is a plain parquet
@@ -2516,7 +2497,7 @@ class Store private[sources] (
           // exact fixed point, no slack factor scaling debris with
           // bucket size. Files target chunkRows rows ± that skew;
           // row-group stats stay per-group either way.
-          val canonical = canonicalLayout(spark.read.parquet(dataPaths: _*), target)
+          val canonical = canonicalLayout(frameOver(listed), target)
           stagedSwap(key, d,
             tmp => plainWriter(canonical)
               .option("maxRecordsPerFile", 0L)
@@ -2536,9 +2517,9 @@ class Store private[sources] (
       .withZone(java.time.ZoneId.of(storeTz))
       .format(t.toInstant)
 
-  /** Bucket directories of item dir `p` whose label satisfies `pred` —
-    * the one shared listing both bucket-granular maintenance ops
-    * ([[prune]], [[compactBuckets]]) filter on.
+  /** Bucket directories of version dir `p` whose label satisfies
+    * `pred` — the bucket-pruning step of [[files]], and [[prune]]'s
+    * deletion unit.
     */
   private def bucketDirs(p: HPath)(pred: String => Boolean): Vector[HPath] =
     fs.listStatus(p).iterator
@@ -2565,7 +2546,10 @@ class Store private[sources] (
     * the driver-read limit, read, merged and written on the calling
     * thread with no Spark job ([[appendOnDriver]]). Any other batch, or
     * one whose buckets are too large, runs the distributed merge
-    * ([[withNewRowsTagged]]), which reads the whole item.
+    * ([[withNewRowsTagged]]), which reads the whole item; its output is
+    * written into a hidden dir of the version and only the files that
+    * hold rows are renamed into place ([[landRowBearing]]), so a batch
+    * with nothing new writes no file.
     */
   def appendNewOnly(key: String, df: DataFrame): Unit = withItemLock(key) {
     requireAppendable(key)
@@ -2577,9 +2561,32 @@ class Store private[sources] (
       if (!appendOnDriver(key, df, rewrite = false)) {
         val p = dataPath(key)
         val fresh = withNewRowsTagged(key, df).where(col(NewTag)).drop(NewTag)
-        writer(fresh).mode("append").parquet(p.toString)
+        val staged = new HPath(p, DriverTmpPrefix + java.util.UUID.randomUUID())
+        writer(fresh).mode("errorifexists").parquet(staged.toString)
+        landRowBearing(staged, p)
       }
     } finally Store.activeInPlaceWrites.remove(tag)
+  }
+
+  /** Renames the data files of `staged` that hold rows (by their
+    * footers, [[sweepFooters]]) into the same bucket dirs of version dir
+    * `p` and deletes `staged`. Spark's writer opens a file for the first
+    * partition of an unpartitioned write even when it holds no row; that
+    * file is dropped, so appending nothing new adds no file.
+    */
+  private def landRowBearing(staged: HPath, p: HPath): Unit = {
+    val written = parquetUnder(staged, rootMustExist = true)
+    val rows = sweepFooters(written, Nil, Set.empty)._1.map(f => f.path -> f.rows).toMap
+    val kept = written.filter(st => rows.getOrElse(st.getPath.toString, 0L) > 0)
+    kept.groupBy(bucketOf).foreach { case (seg, inSeg) =>
+      val dir = if (seg.isEmpty) p else new HPath(p, seg)
+      if (!fs.exists(dir)) fs.mkdirs(dir)
+      inSeg.foreach { st =>
+        val dst = new HPath(dir, st.getPath.getName)
+        if (!fs.rename(st.getPath, dst)) throw new java.io.IOException(s"rename ${st.getPath} -> $dst failed")
+      }
+    }
+    fs.delete(staged, true)
   }
 
   /** The driver-side twin of [[withNewRowsTagged]] for [[append]]
@@ -2596,10 +2603,13 @@ class Store private[sources] (
   private def appendOnDriver(key: String, df: DataFrame, rewrite: Boolean): Boolean = {
     val k = validateKey(key)
     val merged = batchOnDriver(df).flatMap { batch =>
+      // a listed file swapped out before the read reaches it: re-list
       retryVanished {
-        val p = dataPath(k)
-        val segs = if (rewrite) None else Some(batch.map(_._1).toSet)
-        filesOnDriver(p, segs).map { files =>
+        // full-row dedup includes the index, so an appended row's twin
+        // can only live in the row's own bucket
+        val segs = batch.map(_._1).toSet
+        val listed = filesWhere(k, if (rewrite) None else Some(l => segs(s"$BucketCol=$l")))
+        Option.when(fitsDriver(listed)) {
           val keyOf = groupKey()
           val seen = scala.collection.mutable.HashSet.empty[UnsafeRow]
           val kept = Vector.newBuilder[(String, InternalRow)]
@@ -2611,15 +2621,15 @@ class Store private[sources] (
               if (keep) kept += seg -> c
             }
           }
-          rowsWithBucket(files).foreach(r => offer(r.getUTF8String(schema.length).toString, r, rewrite))
+          rowsWithBucket(listed).foreach(r => offer(r.getUTF8String(schema.length).toString, r, rewrite))
           batch.foreach { case (seg, r) => offer(seg, r, keep = true) }
-          (p, kept.result())
+          kept.result()
         }
       }
     }
-    merged.foreach { case (p, rows) =>
+    merged.foreach { rows =>
       if (rewrite) versionSwap(k)(v => writeOnDriver(v, Seq(rows), committed = true))
-      else writeOnDriver(p, Seq(rows), committed = false)
+      else writeOnDriver(dataPath(k), Seq(rows), committed = false)
     }
     merged.isDefined
   }
@@ -2634,7 +2644,10 @@ class Store private[sources] (
     val k = validateKey(key)
     val read =
       if (!driverMutable) None
-      else retryVanished(filesOnDriver(dataPath(k), None).map(rowsWithBucket))
+      else retryVanished {
+        val listed = files(k)
+        Option.when(fitsDriver(listed))(rowsWithBucket(listed))
+      }
     read.foreach { rows =>
       val own = storeRow()
       val runs = rangeRuns(sortedByIndex(rows), canonicalCount(rows.size.toLong))
@@ -2671,7 +2684,7 @@ class Store private[sources] (
       val (tmp, dst) = (new HPath(dir, DriverTmpPrefix + name), new HPath(dir, name))
       if (!fs.rename(tmp, dst)) throw new java.io.IOException(s"rename $tmp -> $dst failed")
     }
-    if (committed) fs.create(new HPath(root, "_SUCCESS"), true).close()
+    if (committed) writeUTF8(fs, new HPath(root, "_SUCCESS"), "")
   }
 
   /** Whether mutations may run on the driver: the driver-read limit is
@@ -2707,29 +2720,23 @@ class Store private[sources] (
       }
     }
 
-  /** The data files under bucket dirs `segs` of version dir `p` (every
-    * file when None), each labelled with its bucket dir name — or None
-    * once their bytes, sized like [[smallSlice]] sizes a slice, pass the
-    * driver-read limit. A named dir that does not exist holds nothing.
-    */
-  private def filesOnDriver(
-      p: HPath, segs: Option[Set[String]]): Option[Seq[(String, FileStatus)]] = {
-    def segOf(f: FileStatus) = if (bucket.isEmpty) "" else f.getPath.getParent.getName
-    val files = segs match {
-      case Some(ss) => ss.toSeq.sorted.flatMap(s =>
-        parquetUnder(if (s.isEmpty) p else new HPath(p, s)).map(s -> _))
-      case None => parquetUnder(p).map(f => segOf(f) -> f)
-    }
+  /** Whether `files`, sized like the scan's estimate, fit the driver
+    * read ([[SparkInternals.driverReadLimit]]; ≤ 0: nothing does). */
+  private def fitsDriver(files: Seq[FileStatus]): Boolean = {
     val limit = SparkInternals.driverReadLimit(spark)
-    if (SparkInternals.scanSize(spark, files.map(_._2.getLen).sum) <= limit) Some(files)
-    else None
+    limit > 0 && SparkInternals.scanSize(spark, files.map(_.getLen).sum) <= limit
   }
+
+  /** The bucket dir name of data file `f` ("" on an unbucketed store). */
+  private def bucketOf(f: FileStatus): String =
+    if (bucket.isEmpty) "" else f.getPath.getParent.getName
 
   /** Every row of `files`, in the store schema plus a trailing column of
     * its file's bucket dir name.
     */
-  private def rowsWithBucket(files: Seq[(String, FileStatus)]): Vector[InternalRow] =
-    SparkInternals.readRowsOnDriver(spark, files, schema, schema, Array.empty, Some(BucketCol))
+  private def rowsWithBucket(files: Seq[FileStatus]): Vector[InternalRow] =
+    SparkInternals.readRowsOnDriver(spark, files.map(f => bucketOf(f) -> f), schema, schema,
+      Array.empty, Some(BucketCol))
 
   /** Projection of a row's store columns (a trailing bucket column
     * dropped) into an `UnsafeRow`. Not thread-safe: one per mutation.
@@ -2905,9 +2912,13 @@ class Store private[sources] (
     *     (staging lives outside items/) but occupying storage; swept.
     *  3. **Orphan-version sweep** — `v-<id>` dirs no `_current` pointer
     *     names (a [[versionSwap]] or [[write]] that died around its
-    *     pointer write), after repairing a torn pointer.
+    *     pointer write), after repairing a torn pointer; also the hidden
+    *     temp a local pointer commit that died before its rename left
+    *     beside the pointer ([[Store$.writeUTF8]]).
     *  4. **Job-staging debris sweep** — committer `_temporary` /
-    *     `.spark-staging-*` dirs inside a live data dir, left by an
+    *     `.spark-staging-*` dirs inside a live data dir, and the hidden
+    *     output dir of a distributed [[appendNewOnly]]
+    *     ([[landRowBearing]]), left by an
     *     in-place append that died mid-job: hidden from every read but
     *     holding staged bytes nothing else reclaims (`.spark-staging`
     *     names are per-job UUIDs no later job touches). Skips items
@@ -3181,10 +3192,15 @@ class Store private[sources] (
             } finally l.unlock()
         }
         current.foreach { cur =>
-          fs.listStatus(item.getPath)
-            .filter(_.getPath.getName.startsWith("v-")).foreach { v =>
+          fs.listStatus(item.getPath).foreach { v =>
             val n = v.getPath.getName
-            if (n != cur && v.getModificationTime <= cutoff &&
+            // a pointer commit that died between its temp write and its
+            // rename leaves the hidden temp ([[Store$.writeUTF8]])
+            if (n.startsWith(DriverTmpPrefix) && v.getModificationTime <= cutoff &&
+                !Store.activeStagingIds.contains(n.stripPrefix(DriverTmpPrefix)) &&
+                fs.delete(v.getPath, false))
+              removed += 1
+            else if (n.startsWith("v-") && n != cur && v.getModificationTime <= cutoff &&
                 !Store.activeStagingIds.contains(n.stripPrefix("v-"))) {
               // last-instant re-read: a versionSwap that fully
               // committed between our pointer read and this delete has
@@ -3222,7 +3238,8 @@ class Store private[sources] (
     // hidden temp files ([[Store$.DriverTmpPrefix]]) a driver-side
     // appendNewOnly that died before its rename left in the live bucket
     // dirs (a driver append or compact writes into a fresh version,
-    // which job 3 sweeps whole).
+    // which job 3 sweeps whole), and the hidden output dir of a
+    // distributed appendNewOnly that died before landing its files.
     if (fs.exists(itemsRoot)) {
       fs.listStatus(itemsRoot).filter(_.isDirectory).foreach { item =>
         val k = item.getPath.getName
@@ -3237,7 +3254,7 @@ class Store private[sources] (
           children.foreach { st =>
             val n = st.getPath.getName
             if (st.isDirectory &&
-                (n == "_temporary" || n.startsWith(".spark-staging")) &&
+                (n == "_temporary" || n.startsWith(".spark-staging") || n.startsWith(DriverTmpPrefix)) &&
                 st.getModificationTime <= cutoff &&
                 fs.delete(st.getPath, true))
               removed += 1
@@ -3322,23 +3339,25 @@ class Store private[sources] (
     * reference's non-deterministic `datetime.now()` upper default
     * (store.py:253) lives only in [[sliceCompat]].
     *
-    * A SMALL slice is read on the driver when `query` is called, like
-    * the reference's in-process pyarrow read: the pruned data files
-    * ([[prunedRoots]], one listing) are read whole on this thread and
-    * the result is a DataFrame over a `LocalRelation`, so collecting it
-    * starts no Spark job. Small means the listed bytes, sized the way
-    * the SQL front door's scan reports them
-    * ([[SparkInternals.scanSize]]), are within
+    * The item is listed ONCE when `query` is called ([[files]]: the
+    * bucket dirs inside the range, like the reference's single dataset
+    * scan, store.py:238-267), and that list both decides where the
+    * slice is read and is what gets read. A SMALL slice is read on the
+    * driver, like the reference's in-process pyarrow read: the listed
+    * files are read whole on this thread and the result is a DataFrame
+    * over a `LocalRelation`, so collecting it starts no Spark job.
+    * Small means the listed bytes, sized the way the SQL front door's
+    * scan reports them ([[SparkInternals.scanSize]]), are within
     * `spark.sql.autoBroadcastJoinThreshold` — the size Spark itself
     * collects to the driver to broadcast; ≤ 0 turns the driver read
-    * off. A larger slice is a lazy distributed scan: bucket directories
-    * pruned by partition filters, the bounds pushed to Parquet
-    * row-group stats (the reference passes explicit pyarrow filters,
-    * store.py:255-264), read when the DataFrame is acted on. Both give
-    * the same rows and schema (StoreProps). A concurrent rewrite that
-    * swaps a listed file out before the driver read reaches it makes
-    * the read re-resolve the item and start over (bounded, then the
-    * error is rethrown), never return part of the slice.
+    * off. A larger slice is a lazy distributed scan of exactly the
+    * listed files, the bounds pushed to Parquet row-group stats (the
+    * reference passes explicit pyarrow filters, store.py:255-264), read
+    * when the DataFrame is acted on. Both give the same rows and schema
+    * (StoreProps). A concurrent rewrite that swaps a listed file out
+    * before the driver read reaches it makes the read re-resolve the
+    * item and start over (bounded, then the error is rethrown), never
+    * return part of the slice.
     *
     * @param columns optional projection (case-insensitive names from
     *   the store schema; unknown names → [[SchemaError]], before any
@@ -3354,9 +3373,7 @@ class Store private[sources] (
       columns: Option[Seq[String]] = None
   ): DataFrame = {
     val outCols = projection(columns)
-    val k = validateKey(key)
-    sliceOnDriver(Seq(k), start, end, outCols, None)
-      .getOrElse(scanSlice(k, start, end, outCols))
+    slice(Seq(validateKey(key)), start, end, outCols, None)
   }
 
   /** Store-schema names of a requested projection (all columns when
@@ -3376,109 +3393,35 @@ class Store private[sources] (
   private def inRange(start: Option[Timestamp], end: Option[Timestamp]): Seq[Column] =
     start.map(s => col(indexName) >= lit(s)).toSeq ++ end.map(e => col(indexName) <= lit(e)).toSeq
 
-  /** The distributed read of one slice: a lazy scan of the item. */
-  private def scanSlice(
-      key: String,
-      start: Option[Timestamp],
-      end: Option[Timestamp],
-      outCols: Seq[String]
-  ): DataFrame = {
-    val df = loadRaw(key)
-    // directory-level pruning first (bucketed stores): the bucket format
-    // is lexicographically ordered, so the time range maps to a string
-    // range on the partition column and Spark prunes whole directories.
-    // The bounds are rendered under the PERSISTED store timezone (same
-    // zone the labels were written in) and the residual ts predicates
-    // compare instants, so reads are correct under ANY session
-    // timezone — only writes require alignment ([[requireTzAligned]]).
-    val bucketPreds = bucketFmt.toSeq.flatMap { f =>
-      start.map(s => col(BucketCol) >= bucketLabel(f, s)).toSeq ++
-        end.map(e => col(BucketCol) <= bucketLabel(f, e)).toSeq
-    }
-    // row-group pruning + residual exactness (reference store.py:255-266)
-    (bucketPreds ++ inRange(start, end)).reduceOption(_ && _).map(df.filter).getOrElse(df)
-      .drop(BucketCol)
-      .select(outCols.map(col).toIndexedSeq: _*)
-  }
-
-  /** The slice of `keys` read on the driver (see [[query]]), or `None`
-    * when the driver read is off or the slice is too large for it. With
+  /** The slices of `keys` (see [[query]]): each key listed once, the
+    * slices read on the driver when their total size fits, otherwise
+    * one lazy scan per key over its listed files, unioned. With
     * `labelCol` set, a leading column of that name holds each row's key.
     */
-  private def sliceOnDriver(
+  private def slice(
       keys: Seq[String],
       start: Option[Timestamp],
       end: Option[Timestamp],
       outCols: Seq[String],
       labelCol: Option[String]
-  ): Option[DataFrame] = {
-    val limit = SparkInternals.driverReadLimit(spark)
-    if (limit <= 0) None
-    else {
-      val read = StructType(schema.filter(f => f.name == indexName || outCols.contains(f.name)))
-      val pushed = start.map(GreaterThanOrEqual(indexName, _)).toSeq ++
-        end.map(LessThanOrEqual(indexName, _)).toSeq
-      // a listed file swapped out by a concurrent rewrite fails the read:
-      // re-resolve the version pointer and re-list (smallSlice does both)
-      retryVanished {
-        smallSlice(keys, start, end, limit).map(files =>
-          SparkInternals.readOnDriver(
-            spark, files, schema, read, pushed.toArray, labelCol))
-      }.map { df =>
-        inRange(start, end).reduceOption(_ && _).map(df.filter).getOrElse(df)
+  ): DataFrame = {
+    val read = StructType(schema.filter(f => f.name == indexName || outCols.contains(f.name)))
+    val pushed = start.map(GreaterThanOrEqual(indexName, _)).toSeq ++
+      end.map(LessThanOrEqual(indexName, _)).toSeq
+    // row-group pruning + residual exactness (reference store.py:255-266)
+    def exact(df: DataFrame) = inRange(start, end).reduceOption(_ && _).fold(df)(df.filter)
+    // a listed file swapped out by a concurrent rewrite fails the driver
+    // read: re-resolve the version pointers and re-list
+    retryVanished {
+      val listed = keys.map(k => k -> files(k, start, end))
+      if (fitsDriver(listed.flatMap(_._2)))
+        exact(SparkInternals.readOnDriver(spark, listed.flatMap { case (k, kf) => kf.map(k -> _) },
+          schema, read, pushed.toArray, labelCol))
           .select((labelCol.toSeq ++ outCols).map(col): _*)
-      }
-    }
-  }
-
-  /** The data files of `keys`' slices, each paired with its key, from
-    * one listing of each key's pruned roots — or `None` once their bytes
-    * pass `limit` (sized like the scan's estimate; the listing stops
-    * there).
-    */
-  private def smallSlice(
-      keys: Seq[String],
-      start: Option[Timestamp],
-      end: Option[Timestamp],
-      limit: Long
-  ): Option[Seq[(String, FileStatus)]] = {
-    def fits(bytes: Long) = SparkInternals.scanSize(spark, bytes) <= limit
-    val listings = keys.iterator.flatMap(k =>
-      prunedRoots(k, start, end).iterator.map(r => parquetUnder(r).map(k -> _)))
-    val files = Vector.newBuilder[(String, FileStatus)]
-    var bytes = 0L
-    while (listings.hasNext && fits(bytes)) {
-      val l = listings.next()
-      files ++= l
-      bytes += l.map(_._2.getLen).sum
-    }
-    if (fits(bytes)) Some(files.result()) else None
-  }
-
-  /** Directory roots a time-range read of `key` must scan — the
-    * pruning decision of [[query]] exposed as metadata, for consumers
-    * that assemble their own scan (the DataSource V2 provider,
-    * [[graft.sources.v2.GraftDataSource]]). On a bucketed store this
-    * is the list of bucket directories whose zero-padded label falls
-    * inside the range (ALL bucket dirs when unbounded — returning the
-    * item dir instead would re-expose the internal `__bucket` column
-    * through partition discovery); on an unbucketed store, the item
-    * data dir. Bounds are inclusive, mirroring [[query]]; one
-    * directory LIST, no data I/O. Returns an empty seq when no bucket
-    * matches (an empty relation, not an error).
-    */
-  private[sources] def prunedRoots(
-      key: String,
-      start: Option[Timestamp],
-      end: Option[Timestamp]
-  ): Seq[HPath] = {
-    val p = dataPath(key)
-    bucketFmt match {
-      case Some(f) =>
-        val lo = start.map(bucketLabel(f, _))
-        val hi = end.map(bucketLabel(f, _))
-        bucketDirs(p)(b => lo.forall(b >= _) && hi.forall(b <= _))
-      case None => Seq(p)
+      else listed.map { case (k, kf) =>
+        val df = exact(frameOver(kf)).select(outCols.map(col): _*)
+        labelCol.fold(df)(l => df.select(lit(k).as(l) +: df.columns.map(col).toIndexedSeq: _*))
+      }.reduce(_.unionByName(_))
     }
   }
 
@@ -3489,9 +3432,9 @@ class Store private[sources] (
     * [[query]] is made ONCE, on the slices' total size, so many small
     * keys never add up to an unbounded driver read: a small total is
     * read on the driver when `queryMany` is called; otherwise a
-    * portfolio-style range read is ONE Spark job over N pruned scans
-    * (directory + row-group pruning applies per branch exactly as in
-    * [[query]]) instead of N driver round-trips. Rejects stores whose
+    * portfolio-style range read is ONE Spark job over N scans, each of
+    * its key's listed files with the bounds pushed to row-group stats
+    * exactly as in [[query]], instead of N driver round-trips. Rejects stores whose
     * schema already carries an `ITEM` column — the origin column would
     * silently duplicate the name otherwise.
     */
@@ -3508,14 +3451,7 @@ class Store private[sources] (
     val resolved = keys.map(validateKey).distinct
     if (resolved.isEmpty)
       throw new SchemaError("queryMany requires at least one key")
-    val outCols = projection(columns)
-    sliceOnDriver(resolved, start, end, outCols, Some("ITEM")).getOrElse(
-      resolved
-        .map { k =>
-          val df = scanSlice(k, start, end, outCols)
-          df.select(lit(k).as("ITEM") +: df.columns.map(col).toIndexedSeq: _*)
-        }
-        .reduce(_.unionByName(_)))
+    slice(resolved, start, end, projection(columns), Some("ITEM"))
   }
 
   /** Reference-default bounds: start=1678-01-01 (store.py:250-251),

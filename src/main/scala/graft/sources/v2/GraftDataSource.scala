@@ -2,6 +2,7 @@ package graft.sources.v2
 
 import graft.sources.{SchemaError, Store}
 
+import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{NamedReference, SortDirection, SortOrder => V2SortOrder, Transform}
@@ -36,12 +37,12 @@ import java.sql.Timestamp
   * translation inside the Spark pushdown contract: range filters on
   * the index column reach [[GraftScanBuilder]] via
   * `SupportsPushDownFilters`, are mapped to the store's zero-padded
-  * bucket-label range, and the scan is assembled over ONLY the
-  * matching bucket directories (plus the same filters pushed on to
-  * parquet row-group stats) — `SELECT … WHERE ts BETWEEN` prunes
-  * directories before any file I/O, exactly like `store.query`
-  * (`Store.scala` query/prunedRoots; reference contract
-  * oakstore/store.py:255-264 generalized to the SQL surface).
+  * bucket-label range, and the scan is assembled over ONLY the files
+  * of the matching bucket directories (plus the same filters pushed on
+  * to parquet row-group stats) — `SELECT … WHERE ts BETWEEN` prunes
+  * directories before any file I/O, exactly like `store.query`: both
+  * take their files from the one listing `Store.files` (reference
+  * contract oakstore/store.py:255-264 generalized to the SQL surface).
   *
   * Writes: `INSERT INTO` is supported with the store's `+=` contract
   * (see [[GraftTable]] — appendNewOnly, idempotent re-runs, creation
@@ -222,9 +223,9 @@ class GraftTable(private[graft] val store: Store, private[graft] val key: String
   * on them), while the accepted set drives two scan-time decisions:
   *
   *  - index-column range bounds → bucket-directory pruning
-  *    ([[Store.prunedRoots]]): the scan's file index is built over only
-  *    the matching bucket dirs, so out-of-range directories are never
-  *    even LISTed for files;
+  *    ([[Store.files]]): only the matching bucket dirs are LISTed, and
+  *    the scan's file index is exactly the files that listing returned
+  *    — Spark lists nothing itself;
   *  - the same filters ride into the parquet scan's `pushedFilters`,
   *    where row-group min/max stats skip non-matching groups inside
   *    the surviving files (the store writes INT64-micros timestamps
@@ -234,7 +235,7 @@ class GraftTable(private[graft] val store: Store, private[graft] val key: String
   * parquet ReadSchema — a 2-column projection of a wide item decodes 2
   * columns. The heavy lifting — vectorized parquet reading, whole-stage
   * codegen compatibility, split planning — is delegated to Spark's own
-  * [[ParquetScan]], assembled over the pruned file index: this provider
+  * [[ParquetScan]], assembled over the listed files: this provider
   * adds knowledge, not a reader.
   *
   * Aggregates are not pushed here: the footer-answerable ones, filtered
@@ -252,7 +253,7 @@ class GraftScanBuilder(store: Store, key: String, options: CaseInsensitiveString
   private var pushed: Array[Filter] = Array.empty
   private var required: StructType = store.schema
   private var limit: Option[Int] = None
-  private var topN: Option[(Int, Boolean)] = None // (k, descending)
+  private var topN: Option[(Int, Boolean, Seq[Seq[FileStatus]])] = None // (k, desc, buckets)
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     pushed = filters
@@ -286,7 +287,8 @@ class GraftScanBuilder(store: Store, key: String, options: CaseInsensitiveString
   /** PARTIAL TopN pushdown (Spark re-sorts and re-limits above the
     * scan): accept `ORDER BY <index> [ASC|DESC] LIMIT k` with no
     * filters, and only when the item's bucket layout is order-prunable
-    * ([[Store.orderPrunable]] — the probe that also vetoes NULL-index
+    * ([[Store.topNBuckets]]: one listing, which the scan selects from,
+    * and the probe that also vetoes NULL-index
     * buckets, whose sort position the bucket order cannot know). The
     * flagship time-series shape — "the newest k rows of a 100 TB item"
     * — becomes a read of the newest bucket(s): bucket dirs partition
@@ -306,10 +308,12 @@ class GraftScanBuilder(store: Store, key: String, options: CaseInsensitiveString
           nr.fieldNames()(0).equalsIgnoreCase(store.indexName) => true
         case _ => false
       }
-      if (!onIndex || !store.orderPrunable(key)) false
-      else {
-        topN = Some((n, o.direction() == SortDirection.DESCENDING))
-        true
+      if (!onIndex) false
+      else store.topNBuckets(store.files(key)) match {
+        case None => false
+        case Some(buckets) =>
+          topN = Some((n, o.direction() == SortDirection.DESCENDING, buckets))
+          true
       }
     }
   }
@@ -321,8 +325,8 @@ class GraftScanBuilder(store: Store, key: String, options: CaseInsensitiveString
     // batch: the pruning decision — LIST only the bucket dirs the
     // bounds allow (or, under a pushed LIMIT, only a row-covering file
     // prefix), deferred to first batch use so a streaming read never
-    // pays for it. The scan assembly itself (pruned file index +
-    // Spark's vectorized ParquetScan) is Spark-internal API,
+    // pays for it. The scan assembly itself (a file index of the listed
+    // files + Spark's vectorized ParquetScan) is Spark-internal API,
     // quarantined in [[SparkInternals]] — the one file a Spark bump
     // may break. Streaming: [[GraftScan.toMicroBatchStream]].
     val mft = Option(options.get("maxFilesPerTrigger")).map(_.trim.toInt)
@@ -330,13 +334,12 @@ class GraftScanBuilder(store: Store, key: String, options: CaseInsensitiveString
     val snapEvery = Option(options.get("snapshotEvery")).map(_.trim.toInt)
       .getOrElse(GraftMicroBatchStream.DefaultSnapshotEvery)
     (topN, limit) match {
-      case (Some((k, desc)), _) =>
-        // selection re-runs lazily at first batch use (vanish-tolerant:
-        // an uncoverable k degrades to the full listing, never an
-        // error); like LIMIT, the fixed file set ignores runtime filters
+      case (Some((k, desc, buckets)), _) =>
+        // pushTopN's listing, selected lazily at first batch use
+        // (vanish-tolerant: an uncoverable k degrades to the whole
+        // listing); like LIMIT, the fixed file set ignores runtime filters
         new GraftScan(store, key, required, pushed,
-          () => store.filesForTopN(key, k.toLong, desc)
-            .map(new org.apache.hadoop.fs.Path(_)),
+          () => store.filesForTopN(buckets, k.toLong, desc),
           maxFilesPerTrigger = mft,
           snapshotEvery = snapEvery,
           tag = s"pushedTopN=[${store.indexName} ${if (desc) "DESC" else "ASC"} LIMIT $k]")
@@ -345,17 +348,15 @@ class GraftScanBuilder(store: Store, key: String, options: CaseInsensitiveString
         // filters would only shrink what the re-applied limit already
         // bounds, not worth re-listing
         new GraftScan(store, key, required, pushed,
-          () => store.filesForLimit(key, n.toLong)
-            .map(new org.apache.hadoop.fs.Path(_)),
+          () => store.filesForLimit(key, n.toLong),
           maxFilesPerTrigger = mft,
           snapshotEvery = snapEvery,
           tag = s"pushedLimit=$n")
       case (None, None) =>
         new GraftScan(store, key, required, pushed,
-          () => store.prunedRoots(key, start, end),
+          () => store.files(key, start, end),
           maxFilesPerTrigger = mft,
-          staticBounds = (start, end),
-          runtimePrune = Some((s2, e2) => store.prunedRoots(key, s2, e2)),
+          bounds = Some((start, end)),
           snapshotEvery = snapEvery)
     }
   }

@@ -2,7 +2,7 @@ package graft.sources.v2
 
 import graft.sources.Store
 
-import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory, Scan, SupportsReportStatistics, SupportsRuntimeFiltering, Statistics => V2Statistics}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxFiles, SupportsTriggerAvailableNow}
@@ -10,53 +10,53 @@ import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 
 /** The Scan served by [[GraftScanBuilder]]: batch reads delegate to
-  * Spark's vectorized ParquetScan assembled over the bucket-PRUNED
-  * roots (via [[SparkInternals]] — unchanged from the batch-only
-  * vintage), and `toMicroBatchStream` makes the same table readable
-  * with `spark.readStream.format("graft")` from any binding — the
-  * DSv2 face of [[Store.readStream]].
+  * Spark's vectorized ParquetScan assembled over exactly the files one
+  * [[Store.files]] listing returned (via [[SparkInternals]]), and
+  * `toMicroBatchStream` makes the same table readable with
+  * `spark.readStream.format("graft")` from any binding — the DSv2 face
+  * of [[Store.readStream]].
   */
 final class GraftScan(
     store: Store,
     key: String,
     required: StructType,
     pushed: Array[Filter],
-    batchRoots: () => Seq[HPath],
+    batchFiles: () => Seq[FileStatus],
     maxFilesPerTrigger: Option[Int] = None,
-    staticBounds: (Option[java.sql.Timestamp], Option[java.sql.Timestamp]) = (None, None),
-    runtimePrune: Option[(Option[java.sql.Timestamp], Option[java.sql.Timestamp]) => Seq[HPath]] = None,
+    // the listed range, re-listed tighter by a runtime filter; None: the
+    // file set is fixed
+    bounds: Option[(Option[java.sql.Timestamp], Option[java.sql.Timestamp])] = None,
     snapshotEvery: Int = GraftMicroBatchStream.DefaultSnapshotEvery,
     tag: String = ""
 ) extends Scan with SupportsReportStatistics with SupportsRuntimeFiltering {
 
-  /** Roots override installed by a runtime (DPP) filter; when set, the
-    * next assembly prunes by the TIGHTENED bounds.
+  /** File-list override installed by a runtime (DPP) filter; when set,
+    * the next assembly lists by the TIGHTENED bounds.
     */
-  @volatile private var runtimeRoots: Option[() => Seq[HPath]] = None
+  @volatile private var runtimeFiles: Option[() => Seq[FileStatus]] = None
   private val parquetRef =
     new java.util.concurrent.atomic.AtomicReference[Scan](null)
 
-  // memoized: the thunk is fixed for a scan's lifetime by design, but
-  // both estimateStatistics and the parquet assembly consume it — for
-  // a TopN scan the un-memoized thunk re-ran the listing plus up to 64
-  // driver footer reads a second time per query
-  private lazy val batchRootsMemo: Seq[HPath] = batchRoots()
+  // memoized: the thunk is fixed for a scan's lifetime by design, and
+  // both estimateStatistics and the parquet assembly consume it — one
+  // listing (plus, for a LIMIT or TopN prefix, its footer reads) per scan
+  private lazy val batchFilesMemo: Seq[FileStatus] = batchFiles()
 
-  private def roots(): Seq[HPath] =
-    runtimeRoots.map(_()).getOrElse(batchRootsMemo)
+  private def files(): Seq[FileStatus] =
+    runtimeFiles.map(_()).getOrElse(batchFilesMemo)
 
   /** The batch parquet assembly, built on first batch use (a streaming
-    * read never lists the batch roots) and REBUILT if a runtime filter
+    * read never lists the batch files) and REBUILT if a runtime filter
     * lands after it (Spark calls `filter(...)` then `toBatch` again —
     * verified against 4.1.2's BatchScanExec.filteredPartitions).
-    * Public so plan-asserting specs can reach the pruned file index.
+    * Public so plan-asserting specs can reach the listed file index.
     */
   def parquet: Scan = {
     val cached = parquetRef.get()
     if (cached != null) cached
     else {
-      val built = SparkInternals.parquetScanOver(
-        SparkSession.active, roots(), store.schema, required, pushed)
+      val built = SparkInternals.parquetScan(
+        SparkSession.active, files(), store.schema, required, pushed)
       if (parquetRef.compareAndSet(null, built)) built else parquetRef.get()
     }
   }
@@ -67,44 +67,43 @@ final class GraftScan(
   //
   // A join whose key is the index column gets its build-side values
   // pushed here at runtime as an In(idx, values) — the value envelope
-  // [min, max] re-prunes the bucket dirs, so `events JOIN dims ON
+  // [min, max] re-lists only its bucket dirs, so `events JOIN dims ON
   // events.TS = dims.day` scans only the days the dim side actually
   // holds. Pruning is a superset by construction (envelope, inclusive
   // bounds); the join itself keeps exactness.
 
   override def filterAttributes(): Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    if (runtimePrune.isDefined)
+    if (bounds.isDefined)
       Array(org.apache.spark.sql.connector.expressions.Expressions.column(store.indexName))
     else Array.empty
 
-  override def filter(filters: Array[Filter]): Unit = runtimePrune.foreach { mk =>
+  override def filter(filters: Array[Filter]): Unit = bounds.foreach { case (start, end) =>
     val (rs, re) = GraftBounds.tsBounds(filters.toIndexedSeq, store.indexName)
     if (rs.isDefined || re.isDefined) {
-      val s2 = GraftBounds.later(staticBounds._1, rs)
-      val e2 = GraftBounds.earlier(staticBounds._2, re)
-      runtimeRoots = Some(() => mk(s2, e2))
+      val (s2, e2) = (GraftBounds.later(start, rs), GraftBounds.earlier(end, re))
+      runtimeFiles = Some(() => store.files(key, s2, e2))
       parquetRef.set(null) // the re-requested toBatch re-assembles pruned
     }
   }
 
-  /** Planner-facing size estimate: bytes under the PRUNED roots (so a
-    * range-sliced join side of a huge item reports its slice, not the
+  /** Planner-facing size estimate: the listed files' lengths summed (so
+    * a range-sliced join side of a huge item reports its slice, not the
     * item), times the session's file-compression factor — the same
     * shape Spark's own FileScan reports. Without this, DSv2 relations
     * fall back to `spark.sql.defaultSizeInBytes` (Long.MaxValue): a
     * graft table could NEVER be statically chosen as the broadcast
     * side of a join, and at cluster scale the fact table pays a full
     * shuffle AQE can only partially claw back (the map-side write
-    * still happens). Lazy-cached: one listing per scan — for a
-    * streaming query (whose per-batch re-planning also consults it)
-    * that is one listing at stream start, never per trigger.
-    * Exceptions yield the unknown estimate — stats must never fail a
-    * plan the scan itself could execute.
+    * still happens). The listing the batch scan reads, so no second
+    * one — for a streaming query (whose per-batch re-planning also
+    * consults it) that is one listing at stream start, never per
+    * trigger. Exceptions yield the unknown estimate — stats must never
+    * fail a plan the scan itself could execute.
     */
   private lazy val stats: V2Statistics = {
     val size: java.util.OptionalLong =
       try java.util.OptionalLong.of(
-        SparkInternals.scanSize(SparkSession.active, store.bytesUnder(batchRootsMemo)))
+        SparkInternals.scanSize(SparkSession.active, batchFilesMemo.map(_.getLen).sum))
       catch { case _: Exception => java.util.OptionalLong.empty() }
     new V2Statistics {
       override def sizeInBytes(): java.util.OptionalLong = size
@@ -115,7 +114,7 @@ final class GraftScan(
   override def estimateStatistics(): V2Statistics = stats
 
   /** Static on purpose: delegating to the ParquetScan's description
-    * would force the lazy batch assembly — a full bucket-dir LIST — on
+    * would force the lazy batch assembly — the bucket-dir LISTs — on
     * any plan rendering (explain, progress reports), including for
     * streaming reads that never execute the batch side.
     */
@@ -331,8 +330,8 @@ private[v2] final class GraftSeenLog(location: String, snapshotEvery: Int) {
 }
 
 /** Micro-batch stream over one item: each trigger lists the item's
-  * data files (one recursive LIST, same cost as a batch scan's
-  * planning), and the new-since-last-offset files become the batch —
+  * data files ([[Store.files]], the listing a batch scan plans from),
+  * and the new-since-last-offset files become the batch —
   * read by a per-batch ParquetScan assembled over exactly those files,
   * so the streaming reader reuses Spark's vectorized parquet path
   * end-to-end. Appends surface as new chunk files (the store never
@@ -371,10 +370,10 @@ final class GraftMicroBatchStream(
 ) extends MicroBatchStream with SupportsTriggerAvailableNow {
 
   /** Factory is file-list-independent (FilePartitions carry their own
-    * files), so ONE assembly over zero roots serves every batch.
+    * files), so ONE assembly over no files serves every batch.
     */
   private lazy val factory: PartitionReaderFactory =
-    SparkInternals.parquetScanOver(
+    SparkInternals.parquetScan(
       SparkSession.active, Nil, store.schema, required, Array.empty)
       .toBatch.createReaderFactory()
 
@@ -383,14 +382,19 @@ final class GraftMicroBatchStream(
     * `maxFilesPerTrigger`-sized batches if set) and terminates, even
     * while appends keep landing.
     */
-  @volatile private var availableNowTarget: Seq[String] = _
+  @volatile private var availableNowTarget: Seq[FileStatus] = _
 
   override def prepareForTriggerAvailableNow(): Unit =
-    availableNowTarget = store.dataFiles(key)
+    availableNowTarget = store.files(key)
 
-  private def listing(): Seq[String] =
-    if (availableNowTarget != null) availableNowTarget
-    else store.dataFiles(key)
+  // the latest listing's statuses: a fresh offset's batch needs no stat
+  @volatile private var listed: Map[String, FileStatus] = Map.empty
+
+  private def listing(): Seq[String] = {
+    val fs = if (availableNowTarget != null) availableNowTarget else store.files(key)
+    listed = fs.map(f => f.getPath.toString -> f).toMap
+    fs.map(_.getPath.toString)
+  }
 
   /** Fresh checkpoints start in the current (seq + delta) offset
     * format; a checkpoint recovered with legacy cumulative offsets
@@ -534,9 +538,15 @@ final class GraftMicroBatchStream(
         legacy.files.filterNot(seen)
     }
     if (fresh.isEmpty) Array.empty
-    else SparkInternals.parquetScanOver(
-      SparkSession.active, fresh.map(new HPath(_)), store.schema, required,
-      Array.empty).toBatch.planInputPartitions()
+    else {
+      // a batch replayed from its offset after a restart names files no
+      // listing of this instance returned: stat those
+      val known = listed
+      val statuses = fresh.map(f => known.getOrElse(f, store.fs.getFileStatus(new HPath(f))))
+      SparkInternals.parquetScan(
+        SparkSession.active, statuses, store.schema, required,
+        Array.empty).toBatch.planInputPartitions()
+    }
   }
 
   override def createReaderFactory(): PartitionReaderFactory = factory

@@ -8,7 +8,7 @@ import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
-import org.apache.spark.sql.execution.datasources.{FilePartition, InMemoryFileIndex, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelation, PartitionedFile, PartitionSpec, PartitioningAwareFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.FilePartitionReaderFactory
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
@@ -20,30 +20,32 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import java.nio.file.attribute.PosixFilePermissions
 
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 /** The ONE deliberate crossing into Spark-INTERNAL API in the store's
-  * read and write paths (the `v2` provider, `Store.query` and the
-  * store's driver-side mutations), quarantined so a
-  * Spark version bump breaks exactly this file (plus the
-  * `org.apache.spark.sql.graft` bridge it builds frames through).
-  * Written against **Spark 4.1.2**; the internal touchpoints and why
-  * each is worth the coupling:
+  * read and write paths (the `v2` provider, the Store's reads and its
+  * driver-side mutations), quarantined so a Spark version bump breaks
+  * exactly this file (plus the `org.apache.spark.sql.graft` bridge it
+  * builds frames through). Written against **Spark 4.1.2**; the
+  * internal touchpoints and why each is worth the coupling:
   *
   *  1. `org.apache.spark.sql.classic.SparkSession` — the Spark-4
   *     split moved the concrete session behind the `classic` package;
-  *     `InMemoryFileIndex`/`ParquetScan` constructors require it, and
-  *     the public `SparkSession` the connector API hands us IS one
-  *     (single-JVM deployments; Spark Connect would need a different
-  *     front door entirely).
-  *  2. `InMemoryFileIndex` — the pruning decision: building the file
-  *     index over ONLY the in-range bucket directories is the entire
-  *     point of the provider, and there is no public-API way to hand
-  *     a DSv2 `ParquetScan` a restricted root set.
+  *     the constructors below require it, and the public `SparkSession`
+  *     the connector API hands us IS one (single-JVM deployments; Spark
+  *     Connect would need a different front door entirely).
+  *  2. `PartitioningAwareFileIndex` — [[ListedFileIndex]] serves exactly
+  *     the `FileStatus`es of one `Store.files` listing, so Spark never
+  *     lists or stats a store path (nor starts its parallel-listing job
+  *     past `spark.sql.sources.parallelPartitionDiscovery.threshold`
+  *     paths); no public API hands a scan an explicit file list.
   *  3. `ParquetScan` — delegating to Spark's own scan buys the
   *     vectorized reader, row-group statistics pushdown, split
   *     planning, and whole-stage-codegen compatibility; reimplementing
-  *     a parquet reader on the public API would lose all four.
+  *     a parquet reader on the public API would lose all four. The
+  *     Store's DataFrames ([[frameOver]]) put the same file index in a
+  *     `HadoopFsRelation`, Spark's V1 parquet scan.
   *  4. `FilePartitionReaderFactory` — the same scan's reader factory
   *     driven on the calling thread ([[readOnDriver]]), so a slice
   *     small enough to collect is read with no Spark job: same decoder,
@@ -54,45 +56,57 @@ import scala.jdk.CollectionConverters._
   *     files with no Spark job: same write support, same codec, same
   *     session conf (timestamp type, rebase mode) as a `DataFrameWriter`.
   *
-  * No `FileStatusCache` is passed (default = NoopCache): every scan
-  * LISTs fresh, because items are APPEND-ABLE and a shared cache could
-  * serve a pre-append listing and silently drop the newest rows. The
-  * listing is already bounded by bucket pruning, so freshness costs
-  * one LIST of only the in-range directories.
+  * There is no file-status cache to go stale: every scan is built over
+  * the one listing taken for it (items are APPEND-ABLE; a listing shared
+  * across scans could drop the newest rows), bounded by bucket pruning.
   */
 private[sources] object SparkInternals {
 
   private def classic(spark: SparkSession) =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
 
-  /** Assemble Spark's vectorized parquet scan over an explicit,
-    * already-pruned set of directory roots. `readPartitionSchema`
-    * columns are appended to every row from each file's
-    * `partitionValues` (only [[readOnDriver]] sets them).
+  /** Spark's vectorized parquet scan over exactly `files` (a
+    * `Store.files` listing): no path is listed or stat'ed again.
     */
-  def parquetScanOver(
+  def parquetScan(
       spark: SparkSession,
-      roots: Seq[HPath],
+      files: Seq[FileStatus],
+      dataSchema: StructType,
+      readDataSchema: StructType,
+      pushedFilters: Array[Filter]): ParquetScan =
+    scanOf(spark, new ListedFileIndex(classic(spark), files), dataSchema, readDataSchema,
+      pushedFilters, new StructType())
+
+  /** `index` is null for the driver read, whose factory never asks. */
+  private def scanOf(
+      spark: SparkSession,
+      index: PartitioningAwareFileIndex,
       dataSchema: StructType,
       readDataSchema: StructType,
       pushedFilters: Array[Filter],
-      readPartitionSchema: StructType = new StructType()): ParquetScan = {
+      readPartitionSchema: StructType): ParquetScan = {
     val classic = this.classic(spark)
-    val fileIndex = new InMemoryFileIndex(
-      classic,
-      roots.toIndexedSeq,
-      Map.empty[String, String],
-      Some(dataSchema))
     ParquetScan(
       classic,
       classic.sessionState.newHadoopConf(),
-      fileIndex,
+      index,
       dataSchema = dataSchema,
       readDataSchema = readDataSchema,
       readPartitionSchema = readPartitionSchema,
       pushedFilters = pushedFilters,
       options = new CaseInsensitiveStringMap(
         java.util.Collections.emptyMap[String, String]()))
+  }
+
+  /** A lazy DataFrame of `dataSchema` over exactly `files`: Spark's V1
+    * parquet scan (`FileSourceScanExec`: row-group filter pushdown,
+    * column pruning, split planning) on a [[ListedFileIndex]], so
+    * planning it lists nothing.
+    */
+  def frameOver(spark: SparkSession, files: Seq[FileStatus], dataSchema: StructType): DataFrame = {
+    val session = classic(spark)
+    session.baseRelationToDataFrame(HadoopFsRelation(new ListedFileIndex(session, files),
+      new StructType(), dataSchema, None, new ParquetFileFormat(), Map.empty)(session))
   }
 
   /** The planner-facing size of `bytes` of files: times
@@ -130,9 +144,10 @@ private[sources] object SparkInternals {
     StructType(labelCol.map(StructField(_, StringType, nullable = false)).toSeq)
 
   /** Reads `files` whole on the calling thread into `UnsafeRow`s. Each
-    * file goes through the reader factory of the [[parquetScanOver]]
-    * scan (its file index is unused: the files are handed to the factory
-    * directly), decoding only `readDataSchema` and skipping row groups
+    * file goes through the reader factory of a `ParquetScan` built with
+    * no file index at all — the files are handed to the factory
+    * directly, and `createReaderFactory` reads only the scan's schemas,
+    * filters and conf — decoding only `readDataSchema` and skipping row groups
     * `pushedFilters` exclude — the residual predicate is the caller's.
     * With `labelCol` set, every row also carries its file's label (the
     * first of each pair) in a trailing non-null string column, appended
@@ -150,7 +165,7 @@ private[sources] object SparkInternals {
       pushedFilters: Array[Filter],
       labelCol: Option[String]): Vector[InternalRow] = {
     val partSchema = labelSchema(labelCol)
-    val factory = parquetScanOver(spark, Nil, dataSchema, readDataSchema, pushedFilters, partSchema)
+    val factory = scanOf(spark, null, dataSchema, readDataSchema, pushedFilters, partSchema)
       .createReaderFactory().asInstanceOf[FilePartitionReaderFactory]
     val toUnsafe = UnsafeProjection.create(StructType(readDataSchema.fields ++ partSchema.fields))
     val columnar = factory.supportColumnarReads(FilePartition(0, Array.empty))
@@ -216,14 +231,41 @@ private[sources] object SparkInternals {
   }
 }
 
+/** A file index over exactly `files`, in their order: Spark plans a
+  * scan from these statuses and never lists or stats a path (no
+  * partition columns; the store's bucket value lives in the dir name).
+  */
+private[sources] final class ListedFileIndex(
+    spark: org.apache.spark.sql.classic.SparkSession, files: Seq[FileStatus])
+    extends PartitioningAwareFileIndex(spark, Map.empty, None) {
+  override lazy val rootPaths: Seq[HPath] = files.map(_.getPath)
+  override def partitionSpec(): PartitionSpec = PartitionSpec.emptySpec
+  override protected lazy val leafFiles: mutable.LinkedHashMap[HPath, FileStatus] =
+    mutable.LinkedHashMap(files.map(f => f.getPath -> f): _*)
+  override protected lazy val leafDirToChildrenFiles: Map[HPath, Array[FileStatus]] =
+    files.toArray.groupBy(_.getPath.getParent)
+  override def allFiles(): Seq[FileStatus] = files
+  override def refresh(): Unit = ()
+}
+
 /** The unchecksummed local filesystem, setting permissions through
   * `java.nio` instead of forking `chmod` (what `RawLocalFileSystem`
   * does without Hadoop's native library). [[SparkInternals.writeOnDriver]]
-  * creates its files through it.
+  * creates its files through it, and `Store.writeUTF8` its small ones
+  * through [[NioLocalFileSystem.shared]].
   */
 private[sources] final class NioLocalFileSystem extends RawLocalFileSystem {
   override def setPermission(p: HPath, permission: FsPermission): Unit =
     java.nio.file.Files.setPosixFilePermissions(pathToFile(p).toPath, PosixFilePermissions.fromString(
       Seq(permission.getUserAction, permission.getGroupAction, permission.getOtherAction)
         .map(_.SYMBOL).mkString))
+}
+
+private[sources] object NioLocalFileSystem {
+  /** One instance for the store's pointer, marker and metadata files. */
+  lazy val shared: NioLocalFileSystem = {
+    val fs = new NioLocalFileSystem
+    fs.initialize(java.net.URI.create("file:///"), new org.apache.hadoop.conf.Configuration())
+    fs
+  }
 }

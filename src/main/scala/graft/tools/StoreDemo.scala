@@ -54,13 +54,18 @@ object StoreDemo {
     // a slice this small is read on the driver when query is called: its
     // plan is a LocalTableScan; with the driver read off
     // (autoBroadcastJoinThreshold -1) the same query is the distributed
-    // scan, bucket-pruned with the bounds pushed to Parquet
+    // scan of exactly the in-range buckets' files, bounds pushed to Parquet
     ranged.explain("formatted")
     val threshold = "spark.sql.autoBroadcastJoinThreshold"
     val saved = spark.conf.getOption(threshold)
     spark.conf.set(threshold, "-1")
-    try store.query("events", Some(t0), Some(t1)).explain("formatted")
-    finally saved.fold(spark.conf.unset(threshold))(spark.conf.set(threshold, _))
+    try {
+      val dist = store.query("events", Some(t0), Some(t1))
+      val perBucket = dist.inputFiles.groupBy(f => new org.apache.hadoop.fs.Path(f).getParent.getName)
+      println(s"[demo] distributed scan: ${dist.inputFiles.length} files, per bucket " +
+        perBucket.toSeq.sortBy(_._1).map { case (b, fs) => s"$b:${fs.length}" }.mkString(", "))
+      dist.explain("formatted")
+    } finally saved.fold(spark.conf.unset(threshold))(spark.conf.set(threshold, _))
 
     store.append("events", events)
     println(s"[demo] after re-append (idempotent): ${store("events").count()}")

@@ -49,8 +49,9 @@ class GraftTableSpec extends AnyFunSuite {
     }
   }
 
+  /** The bucket dirs of the files the scan was built over. */
   def bucketDirNames(ps: ParquetScan): Set[String] =
-    ps.fileIndex.rootPaths.map(_.getName).toSet
+    ps.fileIndex.allFiles().map(_.getPath.getParent.getName).toSet
 
   test("range read prunes to exactly the matching bucket dirs, pushes row-group filters, and is bit-equal to store.query") {
     val dir = tmpDir()
@@ -66,9 +67,9 @@ class GraftTableSpec extends AnyFunSuite {
     assert(df.count() == 29)
     assert(df.exceptAll(api).count() == 0 && api.exceptAll(df).count() == 0)
 
-    // plan-asserted pruning: the scan's file index holds ONLY the two
-    // bucket dirs the range touches — 2015-01 and 2015-04 were never
-    // listed for files, let alone read
+    // plan-asserted pruning: the scan's files all lie in the two bucket
+    // dirs the range touches — 2015-01 and 2015-04 were never listed
+    // for files, let alone read
     val scans = parquetScans(df)
     assert(scans.size == 1, s"expected one parquet scan, got ${scans.size}")
     assert(bucketDirNames(scans.head) ==
@@ -886,9 +887,9 @@ class GraftTableSpec extends AnyFunSuite {
     assert(lim.count() == 5)
     val scans = parquetScans(lim)
     assert(scans.size == 1)
-    val roots = scans.head.fileIndex.rootPaths
-    assert(roots.size == 1 && roots.head.getName.endsWith(".parquet"),
-      s"LIMIT 5 must read a single chunk file, planned: $roots")
+    val files = scans.head.fileIndex.allFiles()
+    assert(files.size == 1 && files.head.getPath.getName.endsWith(".parquet"),
+      s"LIMIT 5 must read a single chunk file, planned: $files")
 
     // a limit past the item's row count degrades to the full listing
     val all = t.limit(1000)
@@ -908,8 +909,7 @@ class GraftTableSpec extends AnyFunSuite {
     s.write("MSFT", bars(100)) // 2015-01..04: buckets of 31/28/31/10 rows
     val t = spark.read.format("graft").option("item", "MSFT").load(dir)
     def scannedBuckets(df: DataFrame): Set[String] =
-      parquetScans(df).head.fileIndex.rootPaths
-        .map(_.getParent.getName).toSet
+      bucketDirNames(parquetScans(df).head)
 
     // "the newest k rows of a 100 TB item": one bucket, not the corpus
     val newest = t.orderBy($"DATE".desc).limit(5)

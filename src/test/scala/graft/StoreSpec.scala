@@ -154,15 +154,19 @@ class StoreSpec extends AnyFunSuite {
       if (parts.next().getFileName.toString.startsWith("__bucket=")) sawBucketDir = true
     }
     assert(sawBucketDir, "expected __bucket=... partition directories")
-    // range query: correct inclusive result + PartitionFilters in the
-    // distributed plan
+    // range query: correct inclusive result; the distributed scan reads
+    // only files of the in-range bucket dirs, with the bounds pushed to
+    // Parquet row-group stats
     val t0 = Timestamp.valueOf("2015-02-01 00:00:00")
     val t1 = Timestamp.valueOf("2015-03-01 00:00:00")
     val q = TestSpark.distributed(s.query("MSFT", Some(t0), Some(t1)))
     assert(q.count() == 29)
+    val buckets = q.inputFiles.map(f => new org.apache.hadoop.fs.Path(f).getParent.getName).toSet
+    assert(buckets == Set("__bucket=2015-02", "__bucket=2015-03"),
+      s"expected only the in-range bucket dirs' files, scanned: $buckets")
     val plan = q.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("__bucket"),
-      s"expected partition pruning in plan:\n$plan")
+    assert(plan.contains("PushedFilters: [IsNotNull(DATE), GreaterThanOrEqual(DATE") &&
+      plan.contains("LessThanOrEqual(DATE"), s"expected the bounds pushed in plan:\n$plan")
     // append paths preserve the bucketed layout
     s.append("MSFT", bars(450))
     assert(s("MSFT").count() == 450)
@@ -403,12 +407,22 @@ class StoreSpec extends AnyFunSuite {
     val fresh = bucketDir.resolve(".graft-tmp-part-00000-fresh-c000.snappy.parquet")
     Files.copy(data, stale)
     Files.copy(data, fresh)
-    assert(stale.toFile.setLastModified(System.currentTimeMillis() - 2 * 3600 * 1000L))
+    // likewise a local pointer commit that died before its rename, and a
+    // distributed appendNewOnly that died before landing its output dir
+    val itemDir = java.nio.file.Paths.get(dir, "items", "MSFT")
+    val stalePtr = Files.write(itemDir.resolve(".graft-tmp-stale"), "v-x".getBytes)
+    val freshPtr = Files.write(itemDir.resolve(".graft-tmp-fresh"), "v-x".getBytes)
+    val staleOut = bucketDir.getParent.resolve(".graft-tmp-out")
+    Files.createDirectories(staleOut.resolve("__bucket=2015-02"))
+    Files.copy(data, staleOut.resolve("__bucket=2015-02").resolve("part-00000-out-c000.snappy.parquet"))
+    Seq(stale, stalePtr, staleOut).foreach(f =>
+      assert(f.toFile.setLastModified(System.currentTimeMillis() - 2 * 3600 * 1000L)))
     def reads = (s.describe("MSFT"), s("MSFT").count(), s.query("MSFT").count())
     assert(reads == want, "a temp file must never be counted")
     assert(TestSpark.distributed(s.query("MSFT").count()) == want._2)
-    assert(s.vacuum() == 1L, "the default age guard sweeps only the stale temp file")
+    assert(s.vacuum() == 3L, "the default age guard sweeps only the stale temps")
     assert(!Files.exists(stale) && Files.exists(fresh))
+    assert(!Files.exists(stalePtr) && Files.exists(freshPtr) && !Files.exists(staleOut))
     assert(reads == want)
   }
 
@@ -818,9 +832,9 @@ class StoreSpec extends AnyFunSuite {
       s"in-flight _temporary payload leaked into version bytes: $cur -> $after")
     assert(s.describe("MSFT").rows == 10)
     assert(s("MSFT").count() == 10, "scan must exclude the hidden subtree")
-    // the DSv2 footer-answered count lists through dataFiles
+    // the DSv2 footer-answered count lists through Store.files
     assert(spark.read.format("graft").option("item", "MSFT").load(dir).count() == 10,
-      "dataFiles must exclude the hidden subtrees")
+      "the listing must exclude the hidden subtrees")
     // compactIfNeeded counts the files describe counts: neither the
     // in-flight payload nor a non-parquet file trips it
     java.nio.file.Files.write(vDir.resolve("notes.txt"), "not data".getBytes)
@@ -830,10 +844,96 @@ class StoreSpec extends AnyFunSuite {
     // the footer-answered SQL count and compact list through the same
     // filter, and compact rewrites only the files it listed
     assert(spark.read.format("graft").option("item", "MSFT").load(dir).count() == 10,
-      "dataFiles must exclude non-parquet files")
+      "the listing must exclude non-parquet files")
     s.compact("MSFT")
     val compacted = s.describe("MSFT")
     assert(compacted.rows == 10 && compacted.files == 1,
       s"compact must rewrite the 10 rows into one canonical file: $compacted")
+  }
+
+  test("distributed appendNewOnly: a batch of stored rows writes no file; new rows land in at most 2 jobs") {
+    val dir = tmpDir()
+    val s = Store.open(spark, dir) // unbucketed: Spark's writer would open a file even for no rows
+    s.write("MSFT", bars(50))
+    val before = s.describe("MSFT")
+    TestSpark.distributed(s.appendNewOnly("MSFT", bars(40)))
+    assert(s.describe("MSFT") == before,
+      s"an all-duplicate batch changed the item: $before -> ${s.describe("MSFT")}")
+    val (_, jobs) = TestSpark.jobsDuring(TestSpark.distributed(s.appendNewOnly("MSFT", bars(60))))
+    assert(jobs <= 2, s"distributed appendNewOnly started $jobs Spark jobs")
+    val after = s.describe("MSFT")
+    assert(after.rows == 60 && after.files > before.files, s"$before -> $after")
+    import scala.jdk.CollectionConverters._
+    val names = Files.list(LiveDir(s, dir, "MSFT")).iterator().asScala.map(_.getFileName.toString).toSeq
+    assert(!names.exists(_.startsWith(".graft-tmp-")), s"the hidden output dir was left: $names")
+  }
+
+  test("one listing per read: LIMIT and TopN planning, compact and compactBuckets over 40 files start no listing job") {
+    // chunkRows = 1 writes one file per row; reopening with the default
+    // makes the rewrites emit one file
+    def written(n: Int, bucket: Option[String]): Store = {
+      val dir = tmpDir()
+      Store.open(spark, dir, bucket = bucket, chunkRows = 1).write("K", bars(n))
+      val s = Store.open(spark, dir, bucket = bucket)
+      assert(s.describe("K").files == n)
+      s
+    }
+    val day = written(40, Some("day"))
+    val t = spark.read.format("graft").option("item", "K").load(day.base.toString)
+    def planJobs(df: DataFrame): (Int, Int) = TestSpark.jobsDuring {
+      df.queryExecution.sparkPlan.collect {
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+          b.scan.toBatch.planInputPartitions().length
+      }.sum
+    }.swap
+    // a 35-file prefix is past Spark's 32-path parallel-listing threshold
+    val (limitJobs, limitSplits) = planJobs(t.limit(35))
+    assert(limitJobs == 0 && limitSplits > 0, s"planning a LIMIT scan started $limitJobs jobs")
+    val (topJobs, topSplits) = planJobs(t.orderBy(col("DATE").desc).limit(35))
+    assert(topJobs == 0 && topSplits > 0, s"planning a TopN scan started $topJobs jobs")
+    // a rewrite's own jobs do not depend on how many files it reads
+    def compactJobs(n: Int): Int = {
+      val s = written(n, None)
+      val jobs = TestSpark.jobsDuring(TestSpark.distributed(s.compact("K")))._2
+      assert(s.describe("K").files == 1 && s("K").count() == n)
+      jobs
+    }
+    assert(compactJobs(40) == compactJobs(2), "a distributed compact of 40 files started a listing job")
+    def bucketJobs(n: Int): Int = {
+      val s = written(n, Some("year")) // one bucket of n files
+      val (rewritten, jobs) = TestSpark.jobsDuring(s.compactBuckets("K", maxFilesPerBucket = 16))
+      assert(rewritten == 1 && s.describe("K").files == 1 && s("K").count() == n)
+      jobs
+    }
+    assert(bucketJobs(40) == bucketJobs(17), "a compactBuckets rewrite of 40 files started a listing job")
+  }
+
+  test("the pointer commit never tears under readers: describe and query race 50 tripping compactIfNeeded calls") {
+    val s = Store.open(spark, tmpDir())
+    s.write("MSFT", bars(20))
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val torn = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val reads = new java.util.concurrent.atomic.AtomicInteger()
+    val reader = new Thread(() =>
+      while (!stop.get()) {
+        try {
+          s.describe("MSFT")
+          s.query("MSFT").collect()
+          reads.incrementAndGet()
+        } catch {
+          case e: Throwable if Option(e.getMessage).exists(_.contains("torn")) => torn.add(e)
+        }
+      })
+    reader.start()
+    try (1 to 50).foreach { i =>
+      s.appendNewOnly("MSFT", bars(20 + i)) // a second file
+      assert(s.compactIfNeeded("MSFT", maxFiles = 1), s"compaction $i did not trip")
+    } finally {
+      stop.set(true)
+      reader.join()
+    }
+    assert(torn.isEmpty, s"${torn.size} reads saw a torn pointer, e.g. ${torn.peek()}")
+    assert(reads.get() > 0)
+    assert(s.describe("MSFT").rows == 70)
   }
 }

@@ -195,12 +195,18 @@ class StoreVersionedSpec extends AnyFunSuite {
     val dir = freshDir()
     val s = Store.open(spark, dir, bucket = Some("month"))
     s.write("EVT", bars(100))
-    // directory pruning reaches the scan through the version dir
+    // directory pruning reaches the scan through the version dir: its
+    // files all lie in the current version's in-range bucket dir
     val q = TestSpark.distributed(s.query("EVT",
       Some(Timestamp.valueOf("2022-02-01 00:00:00")),
       Some(Timestamp.valueOf("2022-02-10 00:00:00"))))
+    val cur = s.versionsOf("EVT").find(_.current).get.id
+    val dirs = q.inputFiles.map(f => new org.apache.hadoop.fs.Path(f).getParent).toSet
+    assert(dirs.map(_.getName) == Set("__bucket=2022-02") && dirs.forall(_.getParent.getName == cur),
+      s"expected only the current version's 2022-02 bucket, scanned: $dirs")
     val plan = q.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters"), s"no partition filters:\n$plan")
+    assert(plan.contains("PushedFilters: [IsNotNull(DATE), GreaterThanOrEqual(DATE"),
+      s"expected the bounds pushed in plan:\n$plan")
     assert(q.count() == 10)
     val dropped = s.prune("EVT", Timestamp.valueOf("2022-03-01 00:00:00"))
     assert(dropped == 2, "Jan + Feb buckets expired")
