@@ -183,99 +183,111 @@ object Store {
   private[graft] def fileFooterAgg(
       conf: org.apache.hadoop.conf.Configuration, f: String,
       cols: Seq[String], mmCols: Set[String]): FileFooterStats = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
     import scala.jdk.CollectionConverters._
-    val r = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f), conf))
-    try {
-      // the NaN-proof discipline (stats-present ⇒ NaN-free) is a
-      // WRITER property, probed on parquet-mr: it omits a chunk's
-      // min/max when any NaN was seen. arrow-cpp (pyarrow/pandas — the
-      // reference's own writer) instead SKIPS NaNs and records finite
-      // bounds, so a foreign file's finite stats prove nothing about
-      // NaN and footer-answering max() would silently disagree with
-      // the scan (Spark orders NaN greatest). Strict veto: float/double
-      // min/max is trusted only under a parquet-mr created_by; integer
-      // columns are unaffected (no NaN exists to skip).
-      val createdBy = Option(r.getFooter.getFileMetaData.getCreatedBy).getOrElse("")
-      // ...and the proof is a VINTAGE property too: the omission
-      // behavior was probed on parquet-mr 1.16 (tools/NanProbe); older
-      // parquet-mr writers' NaN handling varied (PARQUET-1222 history —
-      // some recorded finite bounds while SKIPPING NaNs, exactly the
-      // unprovable case) and FUTURE ones may adopt the spec's
-      // NaN-skipping finite bounds. Trust ONLY the explicitly probed
-      // major.minor allowlist; anything else refuses float/double,
-      // which is perf-only.
-      val floatProofOk = {
-        val m = ParquetMrVersion.findFirstMatchIn(createdBy)
-        m.exists(g =>
-          NanProofProbedVintages.contains((g.group(1).toInt, g.group(2).toInt)))
-      }
-      val blocks = r.getFooter.getBlocks.asScala
-      var rows = 0L
-      val nonNull = scala.collection.mutable.Map(cols.map(_ -> 0L): _*)
-      val nullOk = scala.collection.mutable.Set(cols: _*)
-      val mm = scala.collection.mutable.Map.empty[String, (Long, Long)]
-      val mmOk = scala.collection.mutable.Set(mmCols.toSeq: _*)
-      blocks.foreach { b =>
-        rows += b.getRowCount
-        val byName = b.getColumns.asScala
-          .map(c => c.getPath.toDotString.toUpperCase -> c).toMap
-        cols.foreach { col =>
-          byName.get(col.toUpperCase) match {
-            case Some(c) =>
-              val st = c.getStatistics
-              val nullsKnown = st != null && !st.isEmpty && st.isNumNullsSet
-              if (nullsKnown) nonNull(col) += b.getRowCount - st.getNumNulls
-              else if (b.getRowCount > 0) nullOk -= col
-              if (mmCols.contains(col) && b.getRowCount > 0) {
-                if (st == null || st.isEmpty) mmOk -= col
-                else if (st.hasNonNullValue) {
-                  val loHi = (st.genericGetMin, st.genericGetMax) match {
-                    case (lo: java.lang.Long, hi: java.lang.Long) =>
-                      Some((lo.longValue, hi.longValue))
-                    case (lo: java.lang.Integer, hi: java.lang.Integer) =>
-                      Some((lo.longValue, hi.longValue))
-                    case (lo: java.lang.Double, hi: java.lang.Double) =>
-                      // foreign writer (NaN-skipping stats possible) or
-                      // NaN bounds → the proof fails, refuse the column.
-                      // A ±0.0 bound is refused too: parquet-mr WIDENS
-                      // signed zeros (an actual min of +0.0 is recorded
-                      // as -0.0, an actual max of -0.0 as +0.0), so a
-                      // zero bound's sign is unknowable from the footer
-                      // and a footer answer could render the opposite
-                      // zero from the scan path — numerically equal but
-                      // bit-distinguishable, breaking the exactness
-                      // contract. (`x == 0.0` is true for both signs.)
-                      if (!floatProofOk || lo.isNaN || hi.isNaN ||
-                        lo.doubleValue == 0.0 || hi.doubleValue == 0.0) None
-                      else Some((sortableDoubleBits(lo.doubleValue),
-                        sortableDoubleBits(hi.doubleValue)))
-                    case (lo: java.lang.Float, hi: java.lang.Float) =>
-                      if (!floatProofOk || lo.isNaN || hi.isNaN ||
-                        lo.floatValue == 0.0f || hi.floatValue == 0.0f) None
-                      else Some((sortableDoubleBits(lo.doubleValue),
-                        sortableDoubleBits(hi.doubleValue)))
-                    case _ => None // unexpected physical type
-                  }
-                  loHi match {
-                    case Some((lo, hi)) =>
-                      val cur = mm.get(col)
-                      mm(col) = (cur.fold(lo)(c0 => math.min(c0._1, lo)),
-                        cur.fold(hi)(c0 => math.max(c0._2, hi)))
-                    case None => mmOk -= col
-                  }
-                } else if (!(st.isNumNullsSet && st.getNumNulls == b.getRowCount)) {
-                  mmOk -= col // no values recorded, not provably all-null
+    val footer = readFooter(conf, new HPath(f))
+    // the NaN-proof discipline (stats-present ⇒ NaN-free) is a
+    // WRITER property, probed on parquet-mr: it omits a chunk's
+    // min/max when any NaN was seen. arrow-cpp (pyarrow/pandas — the
+    // reference's own writer) instead SKIPS NaNs and records finite
+    // bounds, so a foreign file's finite stats prove nothing about
+    // NaN and footer-answering max() would silently disagree with
+    // the scan (Spark orders NaN greatest). Strict veto: float/double
+    // min/max is trusted only under a parquet-mr created_by; integer
+    // columns are unaffected (no NaN exists to skip).
+    val createdBy = Option(footer.getFileMetaData.getCreatedBy).getOrElse("")
+    // ...and the proof is a VINTAGE property too: the omission
+    // behavior was probed on parquet-mr 1.16 (tools/NanProbe); older
+    // parquet-mr writers' NaN handling varied (PARQUET-1222 history —
+    // some recorded finite bounds while SKIPPING NaNs, exactly the
+    // unprovable case) and FUTURE ones may adopt the spec's
+    // NaN-skipping finite bounds. Trust ONLY the explicitly probed
+    // major.minor allowlist; anything else refuses float/double,
+    // which is perf-only.
+    val floatProofOk = {
+      val m = ParquetMrVersion.findFirstMatchIn(createdBy)
+      m.exists(g =>
+        NanProofProbedVintages.contains((g.group(1).toInt, g.group(2).toInt)))
+    }
+    val blocks = footer.getBlocks.asScala
+    var rows = 0L
+    val nonNull = scala.collection.mutable.Map(cols.map(_ -> 0L): _*)
+    val nullOk = scala.collection.mutable.Set(cols: _*)
+    val mm = scala.collection.mutable.Map.empty[String, (Long, Long)]
+    val mmOk = scala.collection.mutable.Set(mmCols.toSeq: _*)
+    blocks.foreach { b =>
+      rows += b.getRowCount
+      val byName = b.getColumns.asScala
+        .map(c => c.getPath.toDotString.toUpperCase -> c).toMap
+      cols.foreach { col =>
+        byName.get(col.toUpperCase) match {
+          case Some(c) =>
+            val st = c.getStatistics
+            val nullsKnown = st != null && !st.isEmpty && st.isNumNullsSet
+            if (nullsKnown) nonNull(col) += b.getRowCount - st.getNumNulls
+            else if (b.getRowCount > 0) nullOk -= col
+            if (mmCols.contains(col) && b.getRowCount > 0) {
+              if (st == null || st.isEmpty) mmOk -= col
+              else if (st.hasNonNullValue) {
+                val loHi = (st.genericGetMin, st.genericGetMax) match {
+                  case (lo: java.lang.Long, hi: java.lang.Long) =>
+                    Some((lo.longValue, hi.longValue))
+                  case (lo: java.lang.Integer, hi: java.lang.Integer) =>
+                    Some((lo.longValue, hi.longValue))
+                  case (lo: java.lang.Double, hi: java.lang.Double) =>
+                    // foreign writer (NaN-skipping stats possible) or
+                    // NaN bounds → the proof fails, refuse the column.
+                    // A ±0.0 bound is refused too: parquet-mr WIDENS
+                    // signed zeros (an actual min of +0.0 is recorded
+                    // as -0.0, an actual max of -0.0 as +0.0), so a
+                    // zero bound's sign is unknowable from the footer
+                    // and a footer answer could render the opposite
+                    // zero from the scan path — numerically equal but
+                    // bit-distinguishable, breaking the exactness
+                    // contract. (`x == 0.0` is true for both signs.)
+                    if (!floatProofOk || lo.isNaN || hi.isNaN ||
+                      lo.doubleValue == 0.0 || hi.doubleValue == 0.0) None
+                    else Some((sortableDoubleBits(lo.doubleValue),
+                      sortableDoubleBits(hi.doubleValue)))
+                  case (lo: java.lang.Float, hi: java.lang.Float) =>
+                    if (!floatProofOk || lo.isNaN || hi.isNaN ||
+                      lo.floatValue == 0.0f || hi.floatValue == 0.0f) None
+                    else Some((sortableDoubleBits(lo.doubleValue),
+                      sortableDoubleBits(hi.doubleValue)))
+                  case _ => None // unexpected physical type
                 }
+                loHi match {
+                  case Some((lo, hi)) =>
+                    val cur = mm.get(col)
+                    mm(col) = (cur.fold(lo)(c0 => math.min(c0._1, lo)),
+                      cur.fold(hi)(c0 => math.max(c0._2, hi)))
+                  case None => mmOk -= col
+                }
+              } else if (!(st.isNumNullsSet && st.getNumNulls == b.getRowCount)) {
+                mmOk -= col // no values recorded, not provably all-null
               }
-            case None => if (b.getRowCount > 0) { nullOk -= col; mmOk -= col }
-          }
+            }
+          case None => if (b.getRowCount > 0) { nullOk -= col; mmOk -= col }
         }
       }
-      FileFooterStats(f, rows, nonNull.toMap, nullOk.toSet, mm.toMap, mmOk.toSet)
-    } finally r.close()
+    }
+    FileFooterStats(f, rows, nonNull.toMap, nullOk.toSet, mm.toMap, mmOk.toSet)
+  }
+
+  /** The footer of parquet file `f`, read with options built from
+    * `conf`. `ParquetFileReader.open(InputFile)` alone builds its
+    * default options over a freshly loaded Hadoop `Configuration`
+    * (~10 ms, against ~0.3-0.5 ms for the read itself on a local
+    * file). A missing file throws FileNotFoundException.
+    */
+  private[graft] def readFooter(
+      conf: org.apache.hadoop.conf.Configuration,
+      f: HPath): org.apache.parquet.hadoop.metadata.ParquetMetadata = {
+    import org.apache.parquet.HadoopReadOptions
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val r = ParquetFileReader.open(
+      HadoopInputFile.fromPath(f, conf), HadoopReadOptions.builder(conf).build())
+    try r.getFooter finally r.close()
   }
 
   /** THE fold from per-file footer stats to a [[FooterAgg]], shared by
@@ -1652,8 +1664,8 @@ class Store private[sources] (
     * files read on DRIVER threads: a small set reads faster there than
     * the scheduling overhead of a cluster job (this sits on the
     * sub-second planning path of SQL count(*)), and threaded because
-    * footer reads are latency-bound (~10-15 ms each even locally, a
-    * HEAD+ranged-GET on object stores). A larger set fans out over
+    * footer reads are latency-bound (~0.3-0.5 ms each locally through
+    * [[Store$.readFooter]], a HEAD+ranged-GET on object stores). A larger set fans out over
     * executors so 100k footers never funnel through one machine.
     *
     * A file that vanished since the listing (a concurrent swap) is

@@ -234,12 +234,14 @@ private[v2] final class GraftSeenLog(location: String, snapshotEvery: Int) {
     * Spark commits the offset, leaving rebuild() to fail the restart.
     * The contract already guarantees no committed offset references the
     * destination while we (over)write it, so delete-then-rename is
-    * race-free here.
+    * race-free here. On the local filesystem the temp is created
+    * through [[NioLocalFileSystem.shared]], as `Store.writeUTF8` does:
+    * no `.crc` twin and no forked `chmod` for it or a new directory.
     */
   private def writeLines(p: HPath, header: String, files: Iterable[String]): Unit = {
     val tmp = new HPath(p.getParent, s".${p.getName}.tmp")
     try {
-      val out = fs.create(tmp, true)
+      val out = (if (fs.getScheme == "file") NioLocalFileSystem.shared else fs).create(tmp, true)
       try {
         val w = new java.io.BufferedWriter(
           new java.io.OutputStreamWriter(out, java.nio.charset.StandardCharsets.UTF_8))

@@ -8,10 +8,10 @@ import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+import org.apache.spark.sql.connector.read.PartitionReaderFactory
 import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelation, PartitionedFile, PartitionSpec, PartitioningAwareFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.datasources.v2.FilePartitionReaderFactory
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
+import org.apache.spark.sql.execution.datasources.v2.parquet.{ParquetPartitionReaderFactory, ParquetScan}
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -43,13 +43,18 @@ import scala.jdk.CollectionConverters._
   *  3. `ParquetScan` — delegating to Spark's own scan buys the
   *     vectorized reader, row-group statistics pushdown, split
   *     planning, and whole-stage-codegen compatibility; reimplementing
-  *     a parquet reader on the public API would lose all four. The
-  *     Store's DataFrames ([[frameOver]]) put the same file index in a
-  *     `HadoopFsRelation`, Spark's V1 parquet scan.
-  *  4. `FilePartitionReaderFactory` — the same scan's reader factory
+  *     a parquet reader on the public API would lose all four. Its
+  *     `createReaderFactory` is overridden only to broadcast the conf
+  *     once per read shape (session, schemas, Hadoop conf entries):
+  *     Spark's own factory for the first scan of a shape is the
+  *     template every later scan of it copies with its own filters.
+  *     The Store's DataFrames ([[frameOver]]) put the same file index
+  *     in a `HadoopFsRelation`, Spark's V1 parquet scan.
+  *  4. `ParquetPartitionReaderFactory` — the same scan's reader factory
   *     driven on the calling thread ([[readOnDriver]]), so a slice
   *     small enough to collect is read with no Spark job: same decoder,
-  *     same pushed row-group filters, same session conf.
+  *     same pushed row-group filters, same session conf, broadcast once
+  *     per read shape; `copy(filters = …)` is how a scan gets its own.
   *  5. `ParquetFileFormat.prepareWrite` → `OutputWriterFactory` — the
   *     writer a write task runs, driven on the calling thread
   *     ([[writeOnDriver]]), so a small append or compaction writes its
@@ -77,7 +82,12 @@ private[sources] object SparkInternals {
     scanOf(spark, new ListedFileIndex(classic(spark), files), dataSchema, readDataSchema,
       pushedFilters, new StructType())
 
-  /** `index` is null for the driver read, whose factory never asks. */
+  /** `index` is null for the driver read, whose factory never asks.
+    * The scan's reader factory comes from [[factories]]: a copy, with
+    * this scan's filters, of the factory Spark built for the first scan
+    * of the same read shape, so the conf Spark broadcast for that scan
+    * serves every scan of the shape.
+    */
   private def scanOf(
       spark: SparkSession,
       index: PartitioningAwareFileIndex,
@@ -86,7 +96,7 @@ private[sources] object SparkInternals {
       pushedFilters: Array[Filter],
       readPartitionSchema: StructType): ParquetScan = {
     val classic = this.classic(spark)
-    ParquetScan(
+    new ParquetScan(
       classic,
       classic.sessionState.newHadoopConf(),
       index,
@@ -95,7 +105,42 @@ private[sources] object SparkInternals {
       readPartitionSchema = readPartitionSchema,
       pushedFilters = pushedFilters,
       options = new CaseInsensitiveStringMap(
-        java.util.Collections.emptyMap[String, String]()))
+        java.util.Collections.emptyMap[String, String]())) {
+      override def createReaderFactory(): PartitionReaderFactory = {
+        // taken before Spark's createReaderFactory sets its own entries
+        val shape = ReadShape(sparkSession, this.dataSchema, this.readDataSchema,
+          this.readPartitionSchema, hadoopConf.iterator().asScala.map(e => e.getKey -> e.getValue).toMap)
+        factories.synchronized(Option(factories.get(shape))).getOrElse {
+          val built = super.createReaderFactory().asInstanceOf[ParquetPartitionReaderFactory]
+          factories.synchronized(factories.put(shape, built))
+          built
+        }.copy(filters = this.pushedFilters)
+      }
+    }
+  }
+
+  /** What a reader factory depends on besides its filters: the session
+    * (its SQL conf and SparkContext), the schemas, and every entry of
+    * the scan's Hadoop conf — which carries the session's SQL conf too.
+    */
+  private final case class ReadShape(
+      session: SparkSession,
+      dataSchema: StructType,
+      readDataSchema: StructType,
+      readPartitionSchema: StructType,
+      conf: Map[String, String])
+
+  /** The last [[FactoryCacheSize]] read shapes' factories, least
+    * recently used evicted first. Each is only ever a template: a scan
+    * gets its own `copy`, so no factory is shared across scans or
+    * threads (see [[readRowsOnDriver]]).
+    */
+  private val FactoryCacheSize = 16
+  private val factories = new java.util.LinkedHashMap[ReadShape, ParquetPartitionReaderFactory](
+      FactoryCacheSize, 0.75f, true) {
+    override def removeEldestEntry(
+        e: java.util.Map.Entry[ReadShape, ParquetPartitionReaderFactory]): Boolean =
+      size() > FactoryCacheSize
   }
 
   /** A lazy DataFrame of `dataSchema` over exactly `files`: Spark's V1
@@ -143,19 +188,32 @@ private[sources] object SparkInternals {
   private def labelSchema(labelCol: Option[String]): StructType =
     StructType(labelCol.map(StructField(_, StringType, nullable = false)).toSeq)
 
+  /** The reader factory [[readRowsOnDriver]] reads through: the files
+    * are handed to it directly, and `createReaderFactory` reads only
+    * the scan's schemas, filters and conf, so its scan has no file index.
+    */
+  private[v2] def driverReaderFactory(
+      spark: SparkSession,
+      dataSchema: StructType,
+      readDataSchema: StructType,
+      pushedFilters: Array[Filter],
+      partSchema: StructType): ParquetPartitionReaderFactory =
+    scanOf(spark, null, dataSchema, readDataSchema, pushedFilters, partSchema)
+      .createReaderFactory().asInstanceOf[ParquetPartitionReaderFactory]
+
   /** Reads `files` whole on the calling thread into `UnsafeRow`s. Each
     * file goes through the reader factory of a `ParquetScan` built with
-    * no file index at all — the files are handed to the factory
-    * directly, and `createReaderFactory` reads only the scan's schemas,
-    * filters and conf — decoding only `readDataSchema` and skipping row groups
-    * `pushedFilters` exclude — the residual predicate is the caller's.
-    * With `labelCol` set, every row also carries its file's label (the
-    * first of each pair) in a trailing non-null string column, appended
-    * as a partition value.
+    * no file index at all ([[driverReaderFactory]]), decoding only
+    * `readDataSchema` and skipping row groups `pushedFilters` exclude —
+    * the residual predicate is the caller's. With `labelCol` set, every
+    * row also carries its file's label (the first of each pair) in a
+    * trailing non-null string column, appended as a partition value.
     *
     * Sequential on purpose: a reader factory shared across threads
-    * fails inside the vectorized parquet reader. A file that cannot be
-    * read throws — the caller decides whether to re-list and retry.
+    * fails inside the vectorized parquet reader, so each read gets its
+    * own factory (over the conf broadcast once per read shape). A file
+    * that cannot be read throws — the caller decides whether to re-list
+    * and retry.
     */
   def readRowsOnDriver(
       spark: SparkSession,
@@ -165,8 +223,7 @@ private[sources] object SparkInternals {
       pushedFilters: Array[Filter],
       labelCol: Option[String]): Vector[InternalRow] = {
     val partSchema = labelSchema(labelCol)
-    val factory = scanOf(spark, null, dataSchema, readDataSchema, pushedFilters, partSchema)
-      .createReaderFactory().asInstanceOf[FilePartitionReaderFactory]
+    val factory = driverReaderFactory(spark, dataSchema, readDataSchema, pushedFilters, partSchema)
     val toUnsafe = UnsafeProjection.create(StructType(readDataSchema.fields ++ partSchema.fields))
     val columnar = factory.supportColumnarReads(FilePartition(0, Array.empty))
     val rows = Vector.newBuilder[InternalRow]

@@ -13,21 +13,17 @@ object NanProbe {
     Seq(1.0, 2.0, 3.0).toDF("v").coalesce(1).write.mode("overwrite").parquet(s"$dir/clean")
     Seq(Double.NaN, Double.NaN).toDF("v").coalesce(1).write.mode("overwrite").parquet(s"$dir/all_nan")
     import org.apache.hadoop.fs.Path
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val conf = spark.sparkContext.hadoopConfiguration
     for (d <- Seq("with_nan", "with_nanf", "clean", "all_nan")) {
-      val fs = new Path(s"$dir/$d").getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fs = new Path(s"$dir/$d").getFileSystem(conf)
       val f = fs.listStatus(new Path(s"$dir/$d")).map(_.getPath).filter(_.getName.endsWith(".parquet")).head
-      val rd = ParquetFileReader.open(HadoopInputFile.fromPath(f, spark.sparkContext.hadoopConfiguration))
-      val footer = rd.getFooter
-      footer.getBlocks.forEach { b =>
+      graft.sources.Store.readFooter(conf, f).getBlocks.forEach { b =>
         b.getColumns.forEach { c =>
           val st = c.getStatistics
           println(s"$d col=${c.getPath} stats=$st hasNonNull=${st.hasNonNullValue} " +
             s"min=${if (st.hasNonNullValue) st.genericGetMin else "-"} max=${if (st.hasNonNullValue) st.genericGetMax else "-"} nulls=${st.getNumNulls}")
         }
       }
-      rd.close()
     }
     spark.stop()
   }

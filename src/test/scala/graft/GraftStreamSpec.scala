@@ -415,6 +415,27 @@ class GraftStreamSpec extends AnyFunSuite {
     assert(got.exceptAll(batch).count() == 0 && batch.exceptAll(got).count() == 0)
   }
 
+  test("seen-log writes on the local filesystem leave no .crc twin") {
+    val dir = tmpDir()
+    val s = Store.open(spark, dir, bucket = Some("month"))
+    s.write("MSFT", bars(100)) // ~4 monthly files → deltas and a snapshot
+    val ckpt = tmpDir() + "/ckpt"
+    spark.readStream.format("graft").option("item", "MSFT")
+      .option("maxFilesPerTrigger", "1")
+      .option("snapshotEvery", "2").load(dir)
+      .writeStream.format("parquet")
+      .option("path", tmpDir() + "/out")
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+    val seenDir = java.nio.file.Paths.get(ckpt, "sources", "0", "graft-seen")
+    val names = java.nio.file.Files.list(seenDir).iterator().asScala
+      .map(_.getFileName.toString).toSeq
+    assert(names.exists(_.endsWith(".delta")) && names.exists(_.endsWith(".snap")), names)
+    assert(!names.exists(_.endsWith(".crc")), s"the seen log wrote checksum files: $names")
+  }
+
   test("seen-log crash window: a delta written but never offset-committed is overwritten by the retried batch") {
     // the durability contract on GraftSeenLog: latestOffset writes the
     // delta BEFORE returning, so Spark-committed offsets always have

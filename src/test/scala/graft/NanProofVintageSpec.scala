@@ -3,8 +3,6 @@ package graft
 import java.nio.file.Files
 
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.Store
@@ -50,16 +48,14 @@ class NanProofVintageSpec extends AnyFunSuite {
     val fs = new HPath(dir).getFileSystem(conf)
     val f = fs.listStatus(new HPath(dir)).map(_.getPath)
       .filter(_.getName.endsWith(".parquet")).head
-    val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
-    try {
-      val createdBy = r.getFooter.getFileMetaData.getCreatedBy
-      import scala.jdk.CollectionConverters._
-      val blocks = r.getFooter.getBlocks.asScala
-      assert(blocks.size == 1, s"expected one row group, got ${blocks.size}")
-      val stats = blocks.head.getColumns.asScala
-        .map(c => c.getPath.toDotString -> c.getStatistics).toMap
-      (createdBy, stats)
-    } finally r.close()
+    val footer = Store.readFooter(conf, f)
+    val createdBy = footer.getFileMetaData.getCreatedBy
+    import scala.jdk.CollectionConverters._
+    val blocks = footer.getBlocks.asScala
+    assert(blocks.size == 1, s"expected one row group, got ${blocks.size}")
+    val stats = blocks.head.getColumns.asScala
+      .map(c => c.getPath.toDotString -> c.getStatistics).toMap
+    (createdBy, stats)
   }
 
   private def dataFile(dir: String): String = {
@@ -176,15 +172,9 @@ class NanProofVintageSpec extends AnyFunSuite {
 
   test("parquet-cpp-arrow vintage: finite NaN-skipping bounds are refused (the veto's reason made flesh)") {
     // first verify the fixture still shows the dangerous footer shape
-    val r = ParquetFileReader.open(HadoopInputFile.fromPath(
-      new HPath(fixture("with_nan.pyarrow.parquet")), conf))
-    val (createdBy, st) =
-      try {
-        import scala.jdk.CollectionConverters._
-        val b = r.getFooter.getBlocks.asScala.head
-        (r.getFooter.getFileMetaData.getCreatedBy,
-          b.getColumns.asScala.head.getStatistics)
-      } finally r.close()
+    val footer = Store.readFooter(conf, new HPath(fixture("with_nan.pyarrow.parquet")))
+    val createdBy = footer.getFileMetaData.getCreatedBy
+    val st = footer.getBlocks.get(0).getColumns.get(0).getStatistics
     assert(createdBy.startsWith("parquet-cpp-arrow"), createdBy)
     assert(st.hasNonNullValue &&
       st.genericGetMin == java.lang.Double.valueOf(1.0) &&

@@ -164,6 +164,35 @@ class ObjStoreSpec extends AnyFunSuite {
     assert(s("MSFT").count() == 31)
   }
 
+  test("footer sweep: a file swapped out after the listing counts as vanished — describe skips it, footer SQL scans") {
+    // compact (fresh version, old file deleted) lands after the sweep
+    // listed the one-file item and before it reads the footer
+    ObjStoreFs.reset()
+    val dir = objDir()
+    val s = open(dir)
+    s.write("MSFT", bars(31))
+    val before = s.describe("MSFT")
+    assert(before.rows == 31 && before.files == 1, s"$before")
+    var fired = 0
+    ObjStoreFs.beforeDataOpen = Some(() => { s.compact("MSFT"); fired += 1 })
+    val d = s.describe("MSFT")
+    assert(fired == 1 && d.rows == 0 && d.files == 1 && d.minIndex.isEmpty, s"$d")
+    assert(s.describe("MSFT").rows == 31)
+
+    spark.read.format("graft").option("item", "MSFT").load(dir).createOrReplaceTempView("vanish_msft")
+    def scans(df: DataFrame): Boolean = df.queryExecution.optimizedPlan.exists {
+      case _: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => true
+      case _ => false
+    }
+    val count = "SELECT count(*) FROM vanish_msft"
+    assert(!scans(spark.sql(count)), "footer-answered with no file swapped out")
+    ObjStoreFs.beforeDataOpen = Some(() => { s.compact("MSFT"); fired += 1 })
+    val df = spark.sql(count)
+    assert(scans(df) && fired == 2, "a vanished footer must fall back to the scan")
+    assert(df.collect()(0).getLong(0) == 31L)
+    ObjStoreFs.reset()
+  }
+
   test("swap crash in the MOVE-OUT's delete phase: live split in half, vacuum restores the OLD item exactly") {
     ObjStoreFs.reset()
     val dir = objDir()

@@ -433,16 +433,12 @@ class StoreSpec extends AnyFunSuite {
     */
   def filesWithoutIndexStats(itemDir: java.nio.file.Path, idx: String): Seq[String] = {
     import scala.jdk.CollectionConverters._
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val conf = new org.apache.hadoop.conf.Configuration()
+    val conf = spark.sparkContext.hadoopConfiguration
     val walk = Files.walk(itemDir)
     try walk.iterator().asScala
       .filter(f => f.toString.endsWith(".parquet") && Files.isRegularFile(f))
       .filterNot { f =>
-        val r = ParquetFileReader.open(
-          HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f.toString), conf))
-        try r.getFooter.getBlocks.asScala.forall { b =>
+        Store.readFooter(conf, new org.apache.hadoop.fs.Path(f.toString)).getBlocks.asScala.forall { b =>
           b.getColumns.asScala
             .find(_.getPath.toDotString.equalsIgnoreCase(idx))
             .exists { c =>
@@ -450,7 +446,7 @@ class StoreSpec extends AnyFunSuite {
               st != null && !st.isEmpty && st.hasNonNullValue &&
                 st.genericGetMin.isInstanceOf[java.lang.Long]
             }
-        } finally r.close()
+        }
       }
       .map(_.toString).toVector
     finally walk.close()
