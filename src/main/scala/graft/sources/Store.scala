@@ -519,7 +519,10 @@ object Store {
     * Spark's INT96 default. That is a strict improvement for stats and
     * pruning, but consumers that expected INT96 (e.g. pandas readers
     * treating INT96 as tz-naive) will see tz-aware µs timestamps; set
-    * the conf back per write if a downstream truly requires INT96.
+    * the conf back per write if a downstream truly requires INT96. It
+    * also makes [[graft.sources.v2.GraftCheckpointFileManager]] the
+    * session's streaming checkpoint file manager unless the session
+    * names one ([[SparkInternals.useCheckpointFileManager]]).
     */
   def open(
       spark: SparkSession,
@@ -543,6 +546,7 @@ object Store {
     // session invariant enforced per-write (like the timezone guard)
     // has no such window.
     pinMicros(spark, s"Store.open($basePath)")
+    SparkInternals.useCheckpointFileManager(spark)
     val raw = new HPath(basePath)
     // sparkContext.hadoopConfiguration carries the deployment's fs.*
     // settings (credentials, endpoints) — the same conf the parquet
@@ -3333,6 +3337,11 @@ class Store private[sources] (
     * (the source never re-reads processed files; an unprocessed deleted
     * file fails the batch). After a rewrite (or an unsafe prune),
     * restart the stream with a fresh checkpoint.
+    *
+    * A `file:` checkpoint is written without `.crc` files or forked
+    * `chmod`/`readlink` ([[graft.sources.v2.GraftCheckpointFileManager]],
+    * installed by [[Store.open]]); a manager class the session already
+    * names is kept.
     */
   def readStream(key: String): DataFrame = {
     val p = dataPath(key)

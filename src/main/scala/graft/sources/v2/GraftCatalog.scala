@@ -142,6 +142,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
     // the standard TABLE_OR_VIEW_NOT_FOUND, so SQL tooling (IF EXISTS,
     // suggestions, notebook autocompletion) behaves
     if (!s.exists(k)) throw new NoSuchTableException(ident)
+    // before a stream over this table clones the session
+    SparkInternals.useCheckpointFileManager(SparkSession.active)
     new GraftTable(s, k)
   }
 

@@ -102,6 +102,8 @@ class GraftDataSource extends TableProvider with DataSourceRegister {
       properties: java.util.Map[String, String]): Table = {
     val options = new CaseInsensitiveStringMap(properties)
     val store = attachOnce(options)
+    // before a stream over this table clones the session
+    SparkInternals.useCheckpointFileManager(spark)
     val key = store.validateKey(itemKey(options))
     // a catalog-persisted schema (CREATE TABLE round-trip) must agree
     // with the store's source of truth — a store whose schema changed

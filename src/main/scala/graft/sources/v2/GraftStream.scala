@@ -339,6 +339,11 @@ private[v2] final class GraftSeenLog(location: String, snapshotEvery: Int) {
   * end-to-end. Appends surface as new chunk files (the store never
   * edits a data file in place), so delta-only processing is exact.
   *
+  * The query's own `file:` checkpoint (offset and commit logs,
+  * `metadata`) is written by [[GraftCheckpointFileManager]], which
+  * resolving a `graft` table installs unless the session names a
+  * manager class already: no `.crc` files, no forked `chmod`/`readlink`.
+  *
   * Caveat shared with [[Store.readStream]]: COMPACTION rewrites
   * history into new files, which a live streaming reader would re-see
   * as fresh input. Stream from items whose maintenance window is
@@ -372,12 +377,13 @@ final class GraftMicroBatchStream(
 ) extends MicroBatchStream with SupportsTriggerAvailableNow {
 
   /** Factory is file-list-independent (FilePartitions carry their own
-    * files), so ONE assembly over no files serves every batch.
+    * files), so one factory with no file index serves every batch; its
+    * conf broadcast is shared by every drain of the stream (see
+    * [[SparkInternals.driverReaderFactory]]).
     */
   private lazy val factory: PartitionReaderFactory =
-    SparkInternals.parquetScan(
-      SparkSession.active, Nil, store.schema, required, Array.empty)
-      .toBatch.createReaderFactory()
+    SparkInternals.driverReaderFactory(
+      SparkSession.active, store.schema, required, Array.empty, new StructType())
 
   /** Under Trigger.AvailableNow, the run's END is pinned at start —
     * the drive processes exactly the files that existed then (in

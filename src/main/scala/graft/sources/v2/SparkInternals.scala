@@ -1,6 +1,7 @@
 package graft.sources.v2
 
-import org.apache.hadoop.fs.{FileStatus, Path => HPath, RawLocalFileSystem}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FSDataInputStream, FileAlreadyExistsException, FileStatus, FileSystem, Path => HPath, PathFilter, RawLocalFileSystem, UnsupportedFileSystemException}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
@@ -12,12 +13,15 @@ import org.apache.spark.sql.connector.read.PartitionReaderFactory
 import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelation, PartitionedFile, PartitionSpec, PartitioningAwareFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.parquet.{ParquetPartitionReaderFactory, ParquetScan}
+import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileContextBasedCheckpointFileManager, FileSystemBasedCheckpointFileManager}
+import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.CancellableFSDataOutputStream
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
+import java.nio.file.{Files, StandardCopyOption}
 import java.nio.file.attribute.PosixFilePermissions
 
 import scala.collection.mutable
@@ -45,7 +49,7 @@ import scala.jdk.CollectionConverters._
   *     planning, and whole-stage-codegen compatibility; reimplementing
   *     a parquet reader on the public API would lose all four. Its
   *     `createReaderFactory` is overridden only to broadcast the conf
-  *     once per read shape (session, schemas, Hadoop conf entries):
+  *     once per read shape (SparkContext, schemas, Hadoop conf entries):
   *     Spark's own factory for the first scan of a shape is the
   *     template every later scan of it copies with its own filters.
   *     The Store's DataFrames ([[frameOver]]) put the same file index
@@ -60,6 +64,16 @@ import scala.jdk.CollectionConverters._
   *     ([[writeOnDriver]]), so a small append or compaction writes its
   *     files with no Spark job: same write support, same codec, same
   *     session conf (timestamp type, rebase mode) as a `DataFrameWriter`.
+  *  6. `CheckpointFileManager` — [[GraftCheckpointFileManager]] writes a
+  *     streaming query's `file:` checkpoint (offset and commit logs,
+  *     `metadata`) through [[NioLocalFileSystem]], so no `.crc` twin is
+  *     written and no `chmod` or `readlink` is forked. Without Hadoop's
+  *     native library, Spark's default manager forks about 20 of them
+  *     per resumed drain and about 34 on a fresh checkpoint, each one
+  *     on the stream's thread. [[useCheckpointFileManager]] installs it
+  *     per session through Spark's
+  *     `spark.sql.streaming.checkpointFileManagerClass`; every other
+  *     scheme gets Spark's own choice of manager.
   *
   * There is no file-status cache to go stale: every scan is built over
   * the one listing taken for it (items are APPEND-ABLE; a listing shared
@@ -108,23 +122,27 @@ private[sources] object SparkInternals {
         java.util.Collections.emptyMap[String, String]())) {
       override def createReaderFactory(): PartitionReaderFactory = {
         // taken before Spark's createReaderFactory sets its own entries
-        val shape = ReadShape(sparkSession, this.dataSchema, this.readDataSchema,
+        val shape = ReadShape(sparkSession.sparkContext, this.dataSchema, this.readDataSchema,
           this.readPartitionSchema, hadoopConf.iterator().asScala.map(e => e.getKey -> e.getValue).toMap)
         factories.synchronized(Option(factories.get(shape))).getOrElse {
           val built = super.createReaderFactory().asInstanceOf[ParquetPartitionReaderFactory]
           factories.synchronized(factories.put(shape, built))
           built
-        }.copy(filters = this.pushedFilters)
+        }.copy(sqlConf = sparkSession.sessionState.conf, filters = this.pushedFilters)
       }
     }
   }
 
-  /** What a reader factory depends on besides its filters: the session
-    * (its SQL conf and SparkContext), the schemas, and every entry of
-    * the scan's Hadoop conf — which carries the session's SQL conf too.
+  /** What a reader factory's broadcast depends on: the SparkContext it
+    * is broadcast on, the schemas, and every entry of the scan's Hadoop
+    * conf — which carries every SQL conf entry set on the session too
+    * (`newHadoopConf` copies them). Sessions with the same conf share a
+    * shape, so the drains of one stream, each in its own clone of the
+    * session, share one broadcast; each scan's copy reads its own
+    * session's SQL conf.
     */
   private final case class ReadShape(
-      session: SparkSession,
+      context: org.apache.spark.SparkContext,
       dataSchema: StructType,
       readDataSchema: StructType,
       readPartitionSchema: StructType,
@@ -168,6 +186,22 @@ private[sources] object SparkInternals {
     */
   def driverReadLimit(spark: SparkSession): Long =
     classic(spark).sessionState.conf.autoBroadcastJoinThreshold
+
+  /** Spark's key for the class it builds every checkpoint file manager
+    * from; read from the Hadoop conf, which carries the session's SQL
+    * conf.
+    */
+  private val CheckpointManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
+
+  /** Makes [[GraftCheckpointFileManager]] the session's checkpoint file
+    * manager, once, unless the session already names one. A streaming
+    * query runs in a clone of the session taken at `start()`, so this
+    * must run before then: `Store.open` and the `graft` provider's and
+    * catalog's table resolution call it.
+    */
+  def useCheckpointFileManager(spark: SparkSession): Unit =
+    if (spark.conf.getOption(CheckpointManagerKey).isEmpty)
+      spark.conf.set(CheckpointManagerKey, classOf[GraftCheckpointFileManager].getName)
 
   /** Reads `files` whole on the calling thread and returns their rows as
     * a DataFrame over a `LocalRelation`, so collecting it starts no
@@ -308,8 +342,9 @@ private[sources] final class ListedFileIndex(
 /** The unchecksummed local filesystem, setting permissions through
   * `java.nio` instead of forking `chmod` (what `RawLocalFileSystem`
   * does without Hadoop's native library). [[SparkInternals.writeOnDriver]]
-  * creates its files through it, and `Store.writeUTF8` its small ones
-  * through [[NioLocalFileSystem.shared]].
+  * creates its files through it; `Store.writeUTF8`, the `graft` stream's
+  * seen log and [[GraftCheckpointFileManager]] write theirs through
+  * [[NioLocalFileSystem.shared]].
   */
 private[sources] final class NioLocalFileSystem extends RawLocalFileSystem {
   override def setPermission(p: HPath, permission: FsPermission): Unit =
@@ -319,10 +354,107 @@ private[sources] final class NioLocalFileSystem extends RawLocalFileSystem {
 }
 
 private[sources] object NioLocalFileSystem {
-  /** One instance for the store's pointer, marker and metadata files. */
+  /** One instance for the store's small files and stream checkpoints. */
   lazy val shared: NioLocalFileSystem = {
     val fs = new NioLocalFileSystem
     fs.initialize(java.net.URI.create("file:///"), new org.apache.hadoop.conf.Configuration())
     fs
   }
+}
+
+/** A streaming checkpoint's file manager (touchpoint 6 of
+  * [[SparkInternals]]). On the local filesystem it writes, renames,
+  * lists and deletes through [[NioLocalFileSystem.shared]]: no `.crc`
+  * twins, no forked `chmod` or `readlink`, and the same atomicity as
+  * Spark's `createAtomic` — a hidden temp beside the target, renamed
+  * into place, refused with `FileAlreadyExistsException` when the
+  * target exists and overwriting was not asked for. A `.crc` that
+  * Spark's default manager left beside a file this one replaces or
+  * deletes is deleted first, so a later checksummed reader of the same
+  * checkpoint never checks new content against it. Every other scheme
+  * gets Spark's default choice: `FileContextBasedCheckpointFileManager`,
+  * or `FileSystemBasedCheckpointFileManager` where the filesystem has no
+  * `FileContext` binding. Spark builds several managers per query run,
+  * so a local one holds no conf of its own.
+  */
+final class GraftCheckpointFileManager(path: HPath, hadoopConf: Configuration)
+    extends CheckpointFileManager {
+
+  /** Spark's own manager for a non-local checkpoint; None on `file:`. */
+  private val other: Option[CheckpointFileManager] =
+    if (Option(path.toUri.getScheme).getOrElse(FileSystem.getDefaultUri(hadoopConf).getScheme) == "file")
+      None
+    else Some(
+      try new FileContextBasedCheckpointFileManager(path, hadoopConf)
+      catch {
+        case _: UnsupportedFileSystemException => new FileSystemBasedCheckpointFileManager(path, hadoopConf)
+      })
+
+  private def fs = NioLocalFileSystem.shared
+  private def file(p: HPath) = fs.pathToFile(p).toPath
+  private def dropCrc(p: HPath): Unit =
+    Files.deleteIfExists(file(p).resolveSibling(s".${p.getName}.crc"))
+
+  override def createAtomic(p: HPath, overwriteIfPossible: Boolean): CancellableFSDataOutputStream =
+    other.fold(localAtomic(p, overwriteIfPossible))(_.createAtomic(p, overwriteIfPossible))
+
+  /** Writes a hidden temp beside `p`: closing renames it into place,
+    * cancelling (or a failed rename) deletes it.
+    */
+  private def localAtomic(p: HPath, overwrite: Boolean): CancellableFSDataOutputStream = {
+    val tmp = new HPath(p.getParent, s".${p.getName}.${java.util.UUID.randomUUID()}.tmp")
+    new CancellableFSDataOutputStream(fs.create(tmp, true)) {
+      private var done = false
+      private def finish(commit: Boolean): Unit = synchronized {
+        if (!done) {
+          done = true
+          try {
+            underlyingStream.close()
+            if (commit) rename(tmp, p, overwrite)
+          } finally Files.deleteIfExists(file(tmp))
+        }
+      }
+      override def close(): Unit = finish(commit = true)
+      override def cancel(): Unit = finish(commit = false)
+    }
+  }
+
+  private def rename(src: HPath, dst: HPath, overwrite: Boolean): Unit = {
+    val (from, to) = (file(src), file(dst))
+    if (!overwrite && Files.exists(to))
+      throw new FileAlreadyExistsException(s"$dst already exists")
+    dropCrc(dst)
+    try {
+      if (overwrite) Files.move(from, to, StandardCopyOption.ATOMIC_MOVE)
+      else Files.move(from, to)
+    } catch {
+      case e: java.nio.file.FileAlreadyExistsException =>
+        throw new FileAlreadyExistsException(e.getMessage)
+    }
+  }
+
+  override def open(p: HPath): FSDataInputStream = other.fold(fs.open(p))(_.open(p))
+
+  override def list(p: HPath, filter: PathFilter): Array[FileStatus] =
+    other.fold(fs.listStatus(p, filter))(_.list(p, filter))
+
+  override def mkdirs(p: HPath): Unit =
+    other.fold[Unit](fs.mkdirs(p, FsPermission.getDirDefault))(_.mkdirs(p))
+
+  override def exists(p: HPath): Boolean = other.fold(fs.exists(p))(_.exists(p))
+
+  override def delete(p: HPath): Unit = other.fold[Unit] {
+    fs.delete(p, true)
+    dropCrc(p)
+  }(_.delete(p))
+
+  override def isLocal: Boolean = other.forall(_.isLocal)
+
+  override def createCheckpointDirectory(): HPath = other.fold {
+    val qualified = fs.makeQualified(path)
+    fs.mkdirs(qualified, FsPermission.getDirDefault)
+    qualified
+  }(_.createCheckpointDirectory())
+
+  override def close(): Unit = other.foreach(_.close())
 }

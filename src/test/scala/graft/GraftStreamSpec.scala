@@ -535,4 +535,137 @@ class GraftStreamSpec extends AnyFunSuite {
     val rep2 = st.reportLatestOffset()
     assert(rep2 != null && !rep2.json().contains("\"pending\":0"), rep2.json())
   }
+
+  private val ManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
+
+  /** The names in a checkpoint's root, `offsets/` and `commits/`. */
+  def checkpointNames(ckpt: String): Seq[String] =
+    Seq("", "offsets", "commits").flatMap { d =>
+      java.nio.file.Files.list(java.nio.file.Paths.get(ckpt, d)).iterator().asScala
+        .map(p => s"$d/${p.getFileName}").toSeq
+    }
+
+  /** One AvailableNow drain of item MSFT of the store at `dir` into a
+    * parquet sink. With `unpin`, the session's checkpoint file manager
+    * is unset while the stream starts, so its clone of the session gets
+    * Spark's default manager.
+    */
+  def drainTo(session: SparkSession, dir: String, out: String, ckpt: String,
+      unpin: Boolean = false): Unit = {
+    val w = session.readStream.format("graft").option("item", "MSFT").load(dir)
+      .writeStream.format("parquet")
+      .option("path", out)
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow())
+    val prior = session.conf.getOption(ManagerKey)
+    if (unpin) session.conf.unset(ManagerKey)
+    val q = try w.start() finally prior.foreach(session.conf.set(ManagerKey, _))
+    q.awaitTermination()
+  }
+
+  test("fresh and resumed drains leave no .crc in a checkpoint's offsets/, commits/ or metadata") {
+    val dir = tmpDir()
+    val s = Store.open(spark, dir, bucket = Some("month"))
+    s.write("MSFT", bars(40))
+    val (out, ckpt) = (tmpDir() + "/out", tmpDir() + "/ckpt")
+    drainTo(spark, dir, out, ckpt)
+    s.appendNewOnly("MSFT", bars(60))
+    drainTo(spark, dir, out, ckpt)
+    assert(spark.read.parquet(out).count() == 60)
+    val names = checkpointNames(ckpt)
+    assert(Seq("/metadata", "offsets/1", "commits/1").forall(names.contains), names)
+    assert(!names.exists(_.endsWith(".crc")), s"the checkpoint logs wrote checksum files: $names")
+  }
+
+  test("a session that already names a checkpoint file manager keeps it") {
+    import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
+    val session = spark.newSession()
+    val theirs = classOf[FileSystemBasedCheckpointFileManager].getName
+    session.conf.set(ManagerKey, theirs)
+    val dir = tmpDir()
+    Store.open(session, dir).write("MSFT", bars(10))
+    val (out, ckpt) = (tmpDir() + "/out", tmpDir() + "/ckpt")
+    drainTo(session, dir, out, ckpt)
+    assert(session.conf.get(ManagerKey) == theirs)
+    assert(session.read.parquet(out).count() == 10)
+    // Spark's manager writes through the checksummed local filesystem
+    assert(checkpointNames(ckpt).exists(_.endsWith(".crc")), checkpointNames(ckpt))
+  }
+
+  test("a non-file: checkpoint still goes through Spark's default manager") {
+    spark.sparkContext.hadoopConfiguration.set("fs.objstore.impl", classOf[ObjStoreFs].getName)
+    val dir = tmpDir()
+    Store.open(spark, dir).write("MSFT", bars(10))
+    val ckpt = tmpDir() + "/ckpt"
+    val q = spark.readStream.format("graft").option("item", "MSFT").load(dir)
+      .writeStream.format("noop")
+      .option("checkpointLocation", "objstore://" + ckpt)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    assert(q.recentProgress.map(_.numInputRows).sum == 10)
+    // Spark's FileSystem-based manager renames each log entry into place
+    // through the objstore filesystem (which has no FileContext binding)
+    val renamed = ObjStoreFs.renames.asScala.map(_._2).filter(_.startsWith(ckpt)).toSeq
+    assert(Seq("/offsets/0", "/commits/0").forall(e => renamed.exists(_.endsWith(e))), renamed)
+  }
+
+  test("the local checkpoint manager drops the .crc twin of a file it replaces or deletes") {
+    import graft.sources.v2.GraftCheckpointFileManager
+    import org.apache.hadoop.fs.{FileAlreadyExistsException, Path => HPath}
+    import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager,
+      FileContextBasedCheckpointFileManager}
+    val dir = tmpDir()
+    val conf = spark.sparkContext.hadoopConfiguration
+    val sparks = new FileContextBasedCheckpointFileManager(new HPath(dir), conf)
+    val ours = new GraftCheckpointFileManager(new HPath(dir), conf)
+    def write(m: CheckpointFileManager, p: HPath, text: String, overwrite: Boolean): Unit = {
+      val out = m.createAtomic(p, overwrite)
+      out.write(text.getBytes("UTF-8"))
+      out.close()
+    }
+    def names() = java.nio.file.Files.list(java.nio.file.Paths.get(dir)).iterator().asScala
+      .map(_.getFileName.toString).toSeq.sorted
+    val (a, b) = (new HPath(dir, "a"), new HPath(dir, "b"))
+    write(sparks, a, "old", overwrite = false)
+    write(sparks, b, "old", overwrite = false)
+    assert(names() == Seq(".a.crc", ".b.crc", "a", "b"))
+    write(ours, a, "new content", overwrite = true)
+    ours.delete(b)
+    assert(names() == Seq("a"))
+    // a checksummed read of the replaced file sees the new content
+    val in = sparks.open(a)
+    try assert(new String(in.readAllBytes(), "UTF-8") == "new content") finally in.close()
+    // an existing target is refused the way Spark's log writer expects,
+    // and the temp is gone
+    intercept[FileAlreadyExistsException](write(ours, a, "again", overwrite = false))
+    assert(names() == Seq("a"))
+  }
+
+  test("checkpoints pass between Spark's default manager and the local one, both ways, exactly once") {
+    val dir = tmpDir()
+    val s = Store.open(spark, dir, bucket = Some("month"))
+    val (out, ckpt) = (tmpDir() + "/out", tmpDir() + "/ckpt")
+    // one log entry kept: each drain purges entries the other manager wrote
+    TestSpark.withConf("spark.sql.streaming.minBatchesToRetain", "1") {
+      s.write("MSFT", bars(20))
+      drainTo(spark, dir, out, ckpt, unpin = true)
+      assert(checkpointNames(ckpt).exists(_.endsWith(".crc")), "Spark's manager wrote the start")
+      for (n <- Seq(40, 60)) {
+        s.appendNewOnly("MSFT", bars(n))
+        drainTo(spark, dir, out, ckpt)
+      }
+      val names = checkpointNames(ckpt)
+      assert(names.filter(_.endsWith(".crc")).forall { c =>
+        val (d, f) = c.splitAt(c.lastIndexOf('/') + 1)
+        names.contains(d + f.stripPrefix(".").stripSuffix(".crc"))
+      }, s"a .crc outlived its file: $names")
+      s.appendNewOnly("MSFT", bars(80))
+      drainTo(spark, dir, out, ckpt, unpin = true)
+    }
+    val got = spark.read.parquet(out)
+    val batch = s("MSFT")
+    assert(got.count() == 80)
+    assert(got.exceptAll(batch).count() == 0 && batch.exceptAll(got).count() == 0)
+  }
 }

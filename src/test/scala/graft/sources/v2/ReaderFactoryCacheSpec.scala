@@ -1,19 +1,25 @@
 package graft.sources.v2
 
 import graft.TestSpark
+import graft.sources.Store
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.datasources.FilePartition
+import org.apache.spark.sql.execution.datasources.v2.MicroBatchScanExec
+import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetPartitionReaderFactory
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.apache.spark.sql.sources.{Filter, GreaterThanOrEqual}
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The reader factories of [[SparkInternals]]' scans broadcast the conf
-  * once per read shape: scans of one shape share the broadcast, while a
-  * changed schema, SQL conf, Hadoop conf entry or session gets its own.
-  * Each read runs in a fresh session, so SQL conf set elsewhere in the
-  * shared test session cannot move its shape.
+  * once per read shape: scans of one shape share the broadcast, also
+  * across sessions with the same conf, while a changed schema, SQL conf
+  * or Hadoop conf entry gets its own. Each read runs in a fresh session,
+  * so SQL conf set elsewhere in the shared test session cannot move its
+  * shape.
   */
 class ReaderFactoryCacheSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.session
@@ -57,12 +63,12 @@ class ReaderFactoryCacheSpec extends AnyFunSuite {
     assert(rows(s).size == 200)
   }
 
-  test("a different read schema, SQL conf, Hadoop conf entry or session gets a new broadcast") {
+  test("a new read schema, SQL conf or Hadoop conf entry gets a new broadcast; a new session does not") {
     val s = spark.newSession()
     val default = broadcastId(s)
     assert(broadcastId(s) == default)
     assert(broadcastId(s, StructType(schema.fields.take(1))) != default, "read schema")
-    assert(broadcastId(spark.newSession()) != default, "session")
+    assert(broadcastId(spark.newSession()) == default, "a new session with the same conf")
 
     val key = "graft.test.factory-cache." + java.util.UUID.randomUUID()
     val hadoopConf = spark.sparkContext.hadoopConfiguration
@@ -78,5 +84,35 @@ class ReaderFactoryCacheSpec extends AnyFunSuite {
     assert(rows(s) == want)
     s.conf.unset("spark.sql.parquet.enableVectorizedReader")
     assert(columnar(s))
+  }
+
+  /** A resumed drain's clone of the session also carries the conf its
+    * checkpoint's offset log recorded, so the fresh drain has a shape of
+    * its own; every resumed drain shares one.
+    */
+  test("the resumed drains of one graft stream share one conf broadcast") {
+    val s = spark.newSession()
+    val dir = java.nio.file.Files.createTempDirectory("factory-cache-stream").toString
+    val store = Store.open(s, dir, cols = Some(Seq("V" -> LongType)), index = Some("DATE"))
+    def day(d: Int) = java.sql.Timestamp.valueOf(s"2024-01-${10 + d} 00:00:00")
+    val frame = s.createDataFrame(java.util.Arrays.asList((0 until 4).map(d => Row(day(d), d.toLong)): _*),
+      StructType(Seq(StructField("DATE", TimestampType), StructField("V", LongType))))
+    store.write("T", frame.where("V < 1"))
+    val ckpt = dir + "-ckpt"
+    def drainBroadcastId(): Long = {
+      val q = s.readStream.format("graft").option("item", "T").load(dir)
+        .writeStream.format("noop").option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      assert(q.recentProgress.map(_.numInputRows).sum == 1)
+      q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+        .collectFirst { case m: MicroBatchScanExec => m.readerFactory }.get
+        .asInstanceOf[ParquetPartitionReaderFactory].broadcastedConf.id
+    }
+    drainBroadcastId()
+    store.appendNewOnly("T", frame.where("V < 2"))
+    val resumed = drainBroadcastId()
+    store.appendNewOnly("T", frame.where("V < 3"))
+    assert(drainBroadcastId() == resumed)
   }
 }
