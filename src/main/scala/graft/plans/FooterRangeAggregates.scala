@@ -37,7 +37,8 @@ import org.apache.spark.sql.types.{DateType, IntegerType, LongType, TimestampTyp
   *  - GROUPED by `date_trunc(idx)` (optionally with one more key, a
   *    range WHERE allowed): see [[answerGrouped]].
   *
-  * All three fold their files through [[Store.foldFooters]]. Anything
+  * All three sweep the files the table's scan would read
+  * ([[GraftTable.files]]) and fold them through [[Store.foldFooters]]. Anything
   * unprovable — including a file that vanished since the listing —
   * leaves the plan untouched: the ordinary (bucket-pruned) scan
   * answers, so exactness never depends on this rule. It needs
@@ -216,8 +217,12 @@ object FooterRangeAggregates extends Rule[LogicalPlan] with PredicateHelper {
 
   /** No WHERE: every row counts, every column stays answerable. */
   private def unfiltered(table: GraftTable): Store.FooterAgg =
-    Store.foldFooters(table.store.footerFiles(table.key),
+    Store.foldFooters(table.store.footerFiles(table.files()),
       table.store.schema.fieldNames.toSeq, _.rows)
+
+  /** The table's files under µs bounds, taken inclusive: a superset of any strictness. */
+  private def filesIn(table: GraftTable, lo: Option[(Long, Boolean)], hi: Option[(Long, Boolean)]) =
+    table.files(lo.map(b => Store.microsToTimestamp(b._1)), hi.map(b => Store.microsToTimestamp(b._1)))
 
   /** Under index bounds: `count(*)` is the non-null-index rows of the
     * fully-inside files. The index column stays exact; the others only
@@ -229,7 +234,7 @@ object FooterRangeAggregates extends Rule[LogicalPlan] with PredicateHelper {
       lo: Option[(Long, Boolean)],
       hi: Option[(Long, Boolean)]): Option[Store.FooterAgg] = {
     val idx = table.store.indexName
-    table.store.footerFilesInRange(table.key, lo, hi).map { case (inc, _) =>
+    table.store.footerFilesInRange(filesIn(table, lo, hi), lo, hi).map { case (inc, _) =>
       val idxClean = inc.forall(t => t.nonNullByCol(idx) == t.rows)
       val cols = table.store.schema.fieldNames.toSeq
         .filter(c => idxClean || c.equalsIgnoreCase(idx))
@@ -334,7 +339,7 @@ object FooterRangeAggregates extends Rule[LogicalPlan] with PredicateHelper {
       case None => (None, None)
     }
     val (files, nullFiles) =
-      table.store.footerFilesInRange(table.key, lo, hi) match {
+      table.store.footerFilesInRange(filesIn(table, lo, hi), lo, hi) match {
         case Some(fs) => fs
         case None => return None
       }

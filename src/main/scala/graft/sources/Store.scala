@@ -12,7 +12,7 @@ import org.apache.spark.sql.types._
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
 
-import graft.sources.v2.SparkInternals
+import graft.sources.v2.{GraftTable, SparkInternals}
 
 import java.nio.charset.StandardCharsets
 import java.sql.Timestamp
@@ -320,7 +320,7 @@ object Store {
     catch { case _: java.io.FileNotFoundException => None }
 
   /** Epoch-µs → Timestamp, floor semantics for negative values. */
-  private[sources] def microsToTimestamp(us: Long): Timestamp = {
+  private[graft] def microsToTimestamp(us: Long): Timestamp = {
     val t = new Timestamp(Math.floorDiv(us, 1000000L) * 1000L)
     t.setNanos((Math.floorMod(us, 1000000L) * 1000L).toInt)
     t
@@ -1655,12 +1655,11 @@ class Store private[sources] (
     attempt(5)
   }
 
-  /** Footer stats of every current data file of the item, for the
-    * unfiltered footer answer; a file that vanished mid-sweep refuses
-    * with FileNotFoundException ([[footersOrRefuse]]).
+  /** Footer stats of every file of `listed`, for the unfiltered footer
+    * answer; a vanished file refuses ([[footersOrRefuse]]).
     */
-  private[graft] def footerFiles(key: String): Array[Store.FileFooterStats] =
-    footersOrRefuse(files(key), schema.fieldNames.toSeq, mmStatCols)
+  private[graft] def footerFiles(listed: Seq[FileStatus]): Array[Store.FileFooterStats] =
+    footersOrRefuse(listed, schema.fieldNames.toSeq, mmStatCols)
 
   /** THE footer sweep — every footer read of the store goes through
     * here: [[describe]], [[footerFiles]], [[footerFilesInRange]] and the
@@ -1730,9 +1729,9 @@ class Store private[sources] (
   /** The files of an INDEX-RANGE slice, with their footer stats — the
     * daily-report shape `SELECT count(*) FROM item WHERE ts >= a AND
     * ts < b`. Bounds are (epoch-µs, inclusive?) pairs so strict and
-    * non-strict comparisons both stay exact. The sweep runs over the
-    * bucket-PRUNED file set only; each row-bearing file classifies by
-    * its footer min/max of the index:
+    * non-strict comparisons both stay exact. The sweep reads `listed`,
+    * a bucket-pruned superset of the range; each row-bearing file
+    * classifies by its footer min/max of the index:
     *
     *  - fully OUTSIDE the range → dropped;
     *  - fully INSIDE → returned in the first array;
@@ -1749,17 +1748,11 @@ class Store private[sources] (
     * footer-stat posture of oakstore store.py:255-264).
     */
   private[graft] def footerFilesInRange(
-      key: String,
+      listed: Seq[FileStatus],
       lo: Option[(Long, Boolean)],
       hi: Option[(Long, Boolean)])
       : Option[(Array[Store.FileFooterStats], Array[Store.FileFooterStats])] = {
-    val cols = schema.fieldNames.toSeq
-    val mmCols: Set[String] = mmStatCols
-    // scope the sweep to the bucket-pruned superset (inclusive
-    // timestamps are a superset of any strictness)
-    val perFile = footersOrRefuse(files(key,
-      lo.map(b => Store.microsToTimestamp(b._1)),
-      hi.map(b => Store.microsToTimestamp(b._1))), cols, mmCols)
+    val perFile = footersOrRefuse(listed, schema.fieldNames.toSeq, mmStatCols)
 
     // a value v is in range iff aboveLo(v) && belowHi(v)
     def aboveLo(v: Long): Boolean = lo.forall {
@@ -1768,47 +1761,28 @@ class Store private[sources] (
       case (b, incl) => if (incl) v <= b else v < b }
 
     val idx = indexName
-    val included = scala.collection.mutable.ArrayBuffer.empty[Store.FileFooterStats]
-    val allNull = scala.collection.mutable.ArrayBuffer.empty[Store.FileFooterStats]
-    var unprovable = false
-    var i = 0
-    while (i < perFile.length && !unprovable) {
-      val t = perFile(i)
-      if (t.rows > 0L) {
-        // the index's stats must be footer-exact to classify at all
-        if (!t.nullCountOkCols.contains(idx) || !t.minMaxOkCols.contains(idx))
-          unprovable = true
-        else if (t.nonNullByCol(idx) > 0L) {
-          val (fmin, fmax) = t.minMaxByCol(idx)
-          val fullyIn = aboveLo(fmin) && belowHi(fmax)
-          val fullyOut = !belowHi(fmin) || !aboveLo(fmax)
-          if (fullyIn) included += t
-          else if (!fullyOut) unprovable = true // straddles a bound
-        }
-        // non-null count 0: provably all-null index — no row matches
-        // any range predicate, but the rows exist (SQL's NULL group)
-        else allNull += t
-      }
-      i += 1
-    }
-    if (unprovable) None else Some((included.toArray, allNull.toArray))
+    val rowBearing = perFile.filter(_.rows > 0L)
+    // the index's stats must be footer-exact to classify at all
+    if (!rowBearing.forall(t => t.nullCountOkCols.contains(idx) && t.minMaxOkCols.contains(idx)))
+      return None
+    // non-null count 0: provably all-null index — no row matches any
+    // range predicate, but the rows exist (SQL's NULL group)
+    val (allNull, valued) = rowBearing.partition(_.nonNullByCol(idx) == 0L)
+    val (included, rest) = valued.partition { t =>
+      val (fmin, fmax) = t.minMaxByCol(idx); aboveLo(fmin) && belowHi(fmax) }
+    // a file neither fully inside nor fully outside straddles a bound
+    val straddles = rest.exists { t => val (fmin, fmax) = t.minMaxByCol(idx); belowHi(fmin) && aboveLo(fmax) }
+    if (straddles) None else Some((included, allNull))
   }
 
-  /** File prefix that satisfies a pushed LIMIT: walk the item's files in
-    * listing order accumulating footer row counts until the limit is
-    * covered ([[coveringPrefix]]), so `SELECT * FROM item LIMIT 10`
-    * reads one chunk file instead of 100 TB. Driver-side and bounded:
-    * at most 64 footer reads (each a tail read, milliseconds) — if the
-    * limit isn't covered by then, the remaining files are included
-    * UNREAD, which is merely the no-pushdown plan. Exactness never
-    * depends on this selection (Spark re-applies the limit;
-    * `isPartiallyPushed`), so a file vanishing mid-walk (concurrent
-    * compaction) just falls back to the full listing.
+  /** The prefix of `listed` whose footer row counts cover a pushed LIMIT
+    * ([[coveringPrefix]]), so `SELECT * FROM item LIMIT 10` reads one
+    * chunk file instead of 100 TB; all of `listed` when that takes over
+    * 64 footer reads or a file vanished. Exactness never depends on it:
+    * Spark re-applies the limit (`isPartiallyPushed`).
     */
-  private[sources] def filesForLimit(key: String, limit: Long): Seq[FileStatus] = {
-    val all = files(key)
-    coveringPrefix(all.map(Seq(_)), limit).getOrElse(all)
-  }
+  private[sources] def filesForLimit(listed: Seq[FileStatus], limit: Long): Seq[FileStatus] =
+    coveringPrefix(listed.map(Seq(_)), limit).getOrElse(listed)
 
   /** The shortest prefix of `groups` whose footer row counts sum to at
     * least `k`, read group by group through the footer sweep — or None
@@ -2061,15 +2035,16 @@ class Store private[sources] (
 
   /** Full scan of one item (reference `_Item`, store.py:49-71): the
     * item is listed once when this is called ([[files]]) and the
-    * returned DataFrame is a lazy scan of exactly those files — no data
-    * is read until an action.
+    * returned DataFrame is a lazy `GraftScan` of exactly those files,
+    * never listed again. `count()` and `min`/`max` are answered from
+    * their footers ([[graft.plans.FooterRangeAggregates]]), and
+    * `limit(n)` reads a file prefix whose footer row counts cover `n`.
     */
-  def apply(key: String): DataFrame = frameOver(files(key))
+  def apply(key: String): DataFrame = pinnedFrame(key, files(key))
 
-  /** A lazy DataFrame of the store schema over exactly `files`
-    * ([[SparkInternals.frameOver]]: nothing is listed again). */
-  private def frameOver(files: Seq[FileStatus]): DataFrame =
-    SparkInternals.frameOver(spark, files, schema)
+  /** A lazy DataFrame over the `graft` table of `key` pinned to `listed`. */
+  private def pinnedFrame(key: String, listed: Seq[FileStatus]): DataFrame =
+    SparkInternals.tableFrame(spark, new GraftTable(this, key, Some(listed)))
 
   /** Assignment sugar: `store("KEY") = df` — Scala's `update` desugaring
     * mirrors the reference's `store['KEY'] = df` (`__setitem__`,
@@ -2386,7 +2361,7 @@ class Store private[sources] (
     if (!compactOnDriver(key)) {
       // rewrite exactly the listed files: the ones describe counts
       val listed = files(key)
-      val canonical = canonicalLayout(frameOver(listed), canonicalFiles(listed))
+      val canonical = canonicalLayout(pinnedFrame(key, listed), canonicalFiles(listed))
       versionSwap(key)(v => writer(canonical).mode("overwrite").parquet(v.toString))
     }
   }
@@ -2513,7 +2488,7 @@ class Store private[sources] (
           // exact fixed point, no slack factor scaling debris with
           // bucket size. Files target chunkRows rows ± that skew;
           // row-group stats stay per-group either way.
-          val canonical = canonicalLayout(frameOver(listed), target)
+          val canonical = canonicalLayout(pinnedFrame(key, listed), target)
           stagedSwap(key, d,
             tmp => plainWriter(canonical)
               .option("maxRecordsPerFile", 0L)
@@ -3361,24 +3336,20 @@ class Store private[sources] (
     * (store.py:253) lives only in [[sliceCompat]].
     *
     * The item is listed ONCE when `query` is called ([[files]]: the
-    * bucket dirs inside the range, like the reference's single dataset
-    * scan, store.py:238-267), and that list both decides where the
-    * slice is read and is what gets read. A SMALL slice is read on the
-    * driver, like the reference's in-process pyarrow read: the listed
-    * files are read whole on this thread and the result is a DataFrame
-    * over a `LocalRelation`, so collecting it starts no Spark job.
-    * Small means the listed bytes, sized the way the SQL front door's
-    * scan reports them ([[SparkInternals.scanSize]]), are within
-    * `spark.sql.autoBroadcastJoinThreshold` — the size Spark itself
-    * collects to the driver to broadcast; ≤ 0 turns the driver read
-    * off. A larger slice is a lazy distributed scan of exactly the
-    * listed files, the bounds pushed to Parquet row-group stats (the
-    * reference passes explicit pyarrow filters, store.py:255-264), read
-    * when the DataFrame is acted on. Both give the same rows and schema
-    * (StoreProps). A concurrent rewrite that swaps a listed file out
-    * before the driver read reaches it makes the read re-resolve the
-    * item and start over (bounded, then the error is rethrown), never
-    * return part of the slice.
+    * bucket dirs inside the range), and that list both decides where the
+    * slice is read and is what gets read. A SMALL slice — listed bytes,
+    * sized like the SQL scan's estimate ([[SparkInternals.scanSize]]),
+    * within `spark.sql.autoBroadcastJoinThreshold` (≤ 0: never) — is read
+    * whole on this thread, like the reference's in-process pyarrow read,
+    * into a `LocalRelation`: collecting it starts no Spark job. A larger
+    * slice is a lazy `GraftScan` of exactly the listed files, as
+    * [[apply]] is, the bounds pushed to Parquet row-group stats
+    * (store.py:255-264): aggregates the footers prove exact (a
+    * bucket-aligned count, say) are answered from them, and an unbounded
+    * slice's LIMIT reads a covering file prefix. Both give the same rows
+    * and schema (StoreProps). A listed file that a concurrent rewrite
+    * swaps out before the driver read reaches it makes the read re-list
+    * and start over (bounded), never return part of the slice.
     *
     * @param columns optional projection (case-insensitive names from
     *   the store schema; unknown names → [[SchemaError]], before any
@@ -3440,7 +3411,7 @@ class Store private[sources] (
           schema, read, pushed.toArray, labelCol))
           .select((labelCol.toSeq ++ outCols).map(col): _*)
       else listed.map { case (k, kf) =>
-        val df = exact(frameOver(kf)).select(outCols.map(col): _*)
+        val df = exact(pinnedFrame(k, kf)).select(outCols.map(col): _*)
         labelCol.fold(df)(l => df.select(lit(k).as(l) +: df.columns.map(col).toIndexedSeq: _*))
       }.reduce(_.unionByName(_))
     }
@@ -3453,9 +3424,9 @@ class Store private[sources] (
     * [[query]] is made ONCE, on the slices' total size, so many small
     * keys never add up to an unbounded driver read: a small total is
     * read on the driver when `queryMany` is called; otherwise a
-    * portfolio-style range read is ONE Spark job over N scans, each of
-    * its key's listed files with the bounds pushed to row-group stats
-    * exactly as in [[query]], instead of N driver round-trips. Rejects stores whose
+    * portfolio-style range read is ONE Spark job over N `GraftScan`s,
+    * each pinned to its key's listed files as in [[query]], instead of N
+    * driver round-trips. Rejects stores whose
     * schema already carries an `ITEM` column — the origin column would
     * silently duplicate the name otherwise.
     */

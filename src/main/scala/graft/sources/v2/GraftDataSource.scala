@@ -120,6 +120,10 @@ class GraftDataSource extends TableProvider with DataSourceRegister {
 /** One Store item as a DSv2 table. Existence is checked lazily at scan
   * build (the catalog may hold entries for items created later).
   *
+  * Reads take their files from [[files]]: a fresh listing per read, or
+  * the `pinned` listing a Store DataFrame was made over ([[Store!.apply]],
+  * a distributed slice or merge), which is never listed again.
+  *
   * Writes: `INSERT INTO` carries the reference's `store[k] += df`
   * semantics — [[Store.appendNewOnly]] (creation on first insert, like
   * [[Store.ingestStream]]'s first batch), so re-running the same INSERT
@@ -149,8 +153,17 @@ class GraftDataSource extends TableProvider with DataSourceRegister {
   * the same cross-JVM lease — without it an INSERT mutates under only
   * the in-JVM item lock.
   */
-class GraftTable(private[graft] val store: Store, private[graft] val key: String)
+class GraftTable(
+    private[graft] val store: Store,
+    private[graft] val key: String,
+    private[v2] val pinned: Option[Seq[FileStatus]] = None)
     extends Table with SupportsRead with SupportsWrite {
+
+  /** The pinned listing, else [[Store.files]] of the bucket dirs in [start, end]. */
+  private[graft] def files(
+      start: Option[Timestamp] = None, end: Option[Timestamp] = None): Seq[FileStatus] =
+    pinned.getOrElse(store.files(key, start, end))
+
   override def name(): String = s"graft.`${store.base}`.$key"
   override def schema(): StructType = store.schema
   override def capabilities(): java.util.Set[TableCapability] =
@@ -161,7 +174,7 @@ class GraftTable(private[graft] val store: Store, private[graft] val key: String
       TableCapability.V1_BATCH_WRITE,
       TableCapability.STREAMING_WRITE)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftScanBuilder(store, key, options)
+    new GraftScanBuilder(this, options)
 
   /** Batch INSERT rides the V1 bridge (the driver-side frame is exactly
     * what appendNewOnly wants); streaming writes are the public DSv2
@@ -245,13 +258,14 @@ class GraftTable(private[graft] val store: Store, private[graft] val key: String
   * [[graft.plans.FooterRangeAggregates]] optimizer rule, which sees the
   * Filter that Spark keeps above this scan.
   */
-class GraftScanBuilder(store: Store, key: String, options: CaseInsensitiveStringMap)
+class GraftScanBuilder(table: GraftTable, options: CaseInsensitiveStringMap)
     extends ScanBuilder
     with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns
     with SupportsPushDownLimit
     with SupportsPushDownTopN {
 
+  private val (store, key) = (table.store, table.key)
   private var pushed: Array[Filter] = Array.empty
   private var required: StructType = store.schema
   private var limit: Option[Int] = None
@@ -311,7 +325,7 @@ class GraftScanBuilder(store: Store, key: String, options: CaseInsensitiveString
         case _ => false
       }
       if (!onIndex) false
-      else store.topNBuckets(store.files(key)) match {
+      else store.topNBuckets(table.files()) match {
         case None => false
         case Some(buckets) =>
           topN = Some((n, o.direction() == SortDirection.DESCENDING, buckets))
@@ -324,43 +338,30 @@ class GraftScanBuilder(store: Store, key: String, options: CaseInsensitiveString
 
   override def build(): Scan = {
     val (start, end) = GraftBounds.tsBounds(pushed.toIndexedSeq, store.indexName)
-    // batch: the pruning decision — LIST only the bucket dirs the
-    // bounds allow (or, under a pushed LIMIT, only a row-covering file
-    // prefix), deferred to first batch use so a streaming read never
-    // pays for it. The scan assembly itself (a file index of the listed
-    // files + Spark's vectorized ParquetScan) is Spark-internal API,
-    // quarantined in [[SparkInternals]] — the one file a Spark bump
-    // may break. Streaming: [[GraftScan.toMicroBatchStream]].
-    val mft = Option(options.get("maxFilesPerTrigger")).map(_.trim.toInt)
-    // streaming seen-log snapshot cadence (tests shrink it; 0 disables)
-    val snapEvery = Option(options.get("snapshotEvery")).map(_.trim.toInt)
-      .getOrElse(GraftMicroBatchStream.DefaultSnapshotEvery)
-    (topN, limit) match {
+    // batch: the pruning decision — the files of the bucket dirs the
+    // bounds allow (or a row-covering prefix under a pushed LIMIT or
+    // TopN), taken at first batch use so a streaming read never pays
+    // for it; only an unpinned, unprefixed scan re-lists under a runtime
+    // filter. The scan assembly itself is Spark-internal API,
+    // quarantined in [[SparkInternals]]. Streaming:
+    // [[GraftScan.toMicroBatchStream]].
+    val (files, bounds, tag) = (topN, limit) match {
       case (Some((k, desc, buckets)), _) =>
-        // pushTopN's listing, selected lazily at first batch use
-        // (vanish-tolerant: an uncoverable k degrades to the whole
-        // listing); like LIMIT, the fixed file set ignores runtime filters
-        new GraftScan(store, key, required, pushed,
-          () => store.filesForTopN(buckets, k.toLong, desc),
-          maxFilesPerTrigger = mft,
-          snapshotEvery = snapEvery,
-          tag = s"pushedTopN=[${store.indexName} ${if (desc) "DESC" else "ASC"} LIMIT $k]")
+        // pushTopN's listing; an uncoverable k degrades to all of it
+        (() => store.filesForTopN(buckets, k.toLong, desc), None,
+          s"pushedTopN=[${store.indexName} ${if (desc) "DESC" else "ASC"} LIMIT $k]")
       case (None, Some(n)) =>
-        // a LIMIT-prefixed scan keeps its fixed file list — runtime
-        // filters would only shrink what the re-applied limit already
-        // bounds, not worth re-listing
-        new GraftScan(store, key, required, pushed,
-          () => store.filesForLimit(key, n.toLong),
-          maxFilesPerTrigger = mft,
-          snapshotEvery = snapEvery,
-          tag = s"pushedLimit=$n")
+        (() => store.filesForLimit(table.files(), n.toLong), None, s"pushedLimit=$n")
       case (None, None) =>
-        new GraftScan(store, key, required, pushed,
-          () => store.files(key, start, end),
-          maxFilesPerTrigger = mft,
-          bounds = Some((start, end)),
-          snapshotEvery = snapEvery)
+        (() => table.files(start, end), Option.when(table.pinned.isEmpty)((start, end)), "")
     }
+    new GraftScan(store, key, required, pushed, files,
+      maxFilesPerTrigger = Option(options.get("maxFilesPerTrigger")).map(_.trim.toInt),
+      bounds = bounds,
+      // streaming seen-log snapshot cadence (tests shrink it; 0 disables)
+      snapshotEvery = Option(options.get("snapshotEvery")).map(_.trim.toInt)
+        .getOrElse(GraftMicroBatchStream.DefaultSnapshotEvery),
+      tag = tag)
   }
 }
 

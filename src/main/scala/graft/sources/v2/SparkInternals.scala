@@ -10,8 +10,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
 import org.apache.spark.sql.connector.read.PartitionReaderFactory
-import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelation, PartitionedFile, PartitionSpec, PartitioningAwareFileIndex}
+import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile, PartitionSpec, PartitioningAwareFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.execution.datasources.v2.parquet.{ParquetPartitionReaderFactory, ParquetScan}
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileContextBasedCheckpointFileManager, FileSystemBasedCheckpointFileManager}
 import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.CancellableFSDataOutputStream
@@ -30,9 +31,12 @@ import scala.jdk.CollectionConverters._
 /** The ONE deliberate crossing into Spark-INTERNAL API in the store's
   * read and write paths (the `v2` provider, the Store's reads and its
   * driver-side mutations), quarantined so a Spark version bump breaks
-  * exactly this file (plus the `org.apache.spark.sql.graft` bridge it
-  * builds frames through). Written against **Spark 4.1.2**; the
-  * internal touchpoints and why each is worth the coupling:
+  * exactly this file plus the `org.apache.spark.sql.graft.Bridge` shim,
+  * whose `Dataset.ofRows` builds every Store DataFrame: a driver read's
+  * `LocalRelation` ([[readOnDriver]]), else a `DataSourceV2Relation` of
+  * a `graft` table pinned to one listing ([[GraftTable]]). Written
+  * against **Spark 4.1.2**; the internal touchpoints and why each is
+  * worth the coupling:
   *
   *  1. `org.apache.spark.sql.classic.SparkSession` — the Spark-4
   *     split moved the concrete session behind the `classic` package;
@@ -52,8 +56,6 @@ import scala.jdk.CollectionConverters._
   *     once per read shape (SparkContext, schemas, Hadoop conf entries):
   *     Spark's own factory for the first scan of a shape is the
   *     template every later scan of it copies with its own filters.
-  *     The Store's DataFrames ([[frameOver]]) put the same file index
-  *     in a `HadoopFsRelation`, Spark's V1 parquet scan.
   *  4. `ParquetPartitionReaderFactory` — the same scan's reader factory
   *     driven on the calling thread ([[readOnDriver]]), so a slice
   *     small enough to collect is read with no Spark job: same decoder,
@@ -120,10 +122,13 @@ private[sources] object SparkInternals {
       pushedFilters = pushedFilters,
       options = new CaseInsensitiveStringMap(
         java.util.Collections.emptyMap[String, String]())) {
+      // taken before Spark's createReaderFactory first sets its own
+      // entries in this scan's conf: each copy of the plan node asks for
+      // a factory again, and every ask keys on the same shape
+      private lazy val shape = ReadShape(sparkSession.sparkContext, this.dataSchema,
+        this.readDataSchema, this.readPartitionSchema, hadoopConf.iterator().asScala
+          .map(e => e.getKey -> e.getValue).filterNot { case (k, v) => Bridge.isSqlDefault(k, v) }.toMap)
       override def createReaderFactory(): PartitionReaderFactory = {
-        // taken before Spark's createReaderFactory sets its own entries
-        val shape = ReadShape(sparkSession.sparkContext, this.dataSchema, this.readDataSchema,
-          this.readPartitionSchema, hadoopConf.iterator().asScala.map(e => e.getKey -> e.getValue).toMap)
         factories.synchronized(Option(factories.get(shape))).getOrElse {
           val built = super.createReaderFactory().asInstanceOf[ParquetPartitionReaderFactory]
           factories.synchronized(factories.put(shape, built))
@@ -136,10 +141,13 @@ private[sources] object SparkInternals {
   /** What a reader factory's broadcast depends on: the SparkContext it
     * is broadcast on, the schemas, and every entry of the scan's Hadoop
     * conf — which carries every SQL conf entry set on the session too
-    * (`newHadoopConf` copies them). Sessions with the same conf share a
-    * shape, so the drains of one stream, each in its own clone of the
-    * session, share one broadcast; each scan's copy reads its own
-    * session's SQL conf.
+    * (`newHadoopConf` copies them) — except a SQL entry at its
+    * registered default, which reads like an unset one
+    * ([[Bridge.isSqlDefault]]). Sessions with the same conf share a
+    * shape, so every drain of one stream shares one broadcast: a resumed
+    * drain's clone of the session sets the entries its offset log
+    * recorded, at their defaults, a fresh one leaves them unset. Each
+    * scan's copy reads its own session's SQL conf.
     */
   private final case class ReadShape(
       context: org.apache.spark.SparkContext,
@@ -161,16 +169,9 @@ private[sources] object SparkInternals {
       size() > FactoryCacheSize
   }
 
-  /** A lazy DataFrame of `dataSchema` over exactly `files`: Spark's V1
-    * parquet scan (`FileSourceScanExec`: row-group filter pushdown,
-    * column pruning, split planning) on a [[ListedFileIndex]], so
-    * planning it lists nothing.
-    */
-  def frameOver(spark: SparkSession, files: Seq[FileStatus], dataSchema: StructType): DataFrame = {
-    val session = classic(spark)
-    session.baseRelationToDataFrame(HadoopFsRelation(new ListedFileIndex(session, files),
-      new StructType(), dataSchema, None, new ParquetFileFormat(), Map.empty)(session))
-  }
+  /** A lazy DataFrame reading `table` through its `GraftScan`. */
+  def tableFrame(spark: SparkSession, table: GraftTable): DataFrame =
+    Bridge.frame(spark, DataSourceV2Relation.create(table, None, None))
 
   /** The planner-facing size of `bytes` of files: times
     * `spark.sql.sources.fileCompressionFactor`, at least 1 — the shape

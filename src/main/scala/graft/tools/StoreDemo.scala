@@ -1,7 +1,10 @@
 package graft.tools
 
 import graft.sources.{ItemKeyError, SchemaError, Store}
+import graft.sources.v2.GraftScan
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
 import org.apache.spark.sql.types._
 import java.sql.Timestamp
 
@@ -61,8 +64,11 @@ object StoreDemo {
     spark.conf.set(threshold, "-1")
     try {
       val dist = store.query("events", Some(t0), Some(t1))
-      val perBucket = dist.inputFiles.groupBy(f => new org.apache.hadoop.fs.Path(f).getParent.getName)
-      println(s"[demo] distributed scan: ${dist.inputFiles.length} files, per bucket " +
+      // the scan's file index (Dataset.inputFiles only sees a FileTable's)
+      val files = dist.queryExecution.executedPlan.collect { case b: BatchScanExec => b.scan }
+        .collect { case g: GraftScan => g.parquet.asInstanceOf[ParquetScan].fileIndex.allFiles() }.flatten
+      val perBucket = files.groupBy(_.getPath.getParent.getName)
+      println(s"[demo] distributed scan: ${files.length} files, per bucket " +
         perBucket.toSeq.sortBy(_._1).map { case (b, fs) => s"$b:${fs.length}" }.mkString(", "))
       dist.explain("formatted")
     } finally saved.fold(spark.conf.unset(threshold))(spark.conf.set(threshold, _))

@@ -5,7 +5,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
 import org.scalatest.funsuite.AnyFunSuite
 import java.sql.Timestamp
 import scala.jdk.CollectionConverters._
@@ -21,6 +20,7 @@ import scala.jdk.CollectionConverters._
 class GraftCatalogSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.session
   import spark.implicits._
+  import TestSpark.parquetScans
 
   def bars(n: Int, seed: Long = 7): DataFrame = {
     val rnd = new scala.util.Random(seed)
@@ -31,19 +31,6 @@ class GraftCatalogSpec extends AnyFunSuite {
       px = math.max(1.0, px + rnd.nextGaussian())
       (Timestamp.from(t0.plusDays(i).toInstant), px, px + 1, px - 1, px, 1000L + i)
     }.toDF("date", "open", "high", "low", "close", "volume")
-  }
-
-  def parquetScans(df: DataFrame): Seq[ParquetScan] = {
-    df.collect()
-    val root = df.queryExecution.executedPlan
-    def strip(p: SparkPlan): SparkPlan = p match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case other => other
-    }
-    strip(root).collect { case b: BatchScanExec => b.scan }.collect {
-      case ps: ParquetScan => ps
-      case g: graft.sources.v2.GraftScan => g.parquet.asInstanceOf[ParquetScan]
-    }
   }
 
   /** One catalog (name `gcat`) over one bucketed store for the whole

@@ -20,6 +20,7 @@ import scala.jdk.CollectionConverters._
 class GraftTableSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.session
   import spark.implicits._
+  import TestSpark.{bucketDirNames, parquetScans}
 
   def bars(n: Int, seed: Long = 7): DataFrame = {
     val rnd = new scala.util.Random(seed)
@@ -34,24 +35,6 @@ class GraftTableSpec extends AnyFunSuite {
 
   def tmpDir(): String =
     java.nio.file.Files.createTempDirectory("graft-dsv2").toString
-
-  /** The ParquetScans of a materialized DataFrame's final plan. */
-  def parquetScans(df: DataFrame): Seq[ParquetScan] = {
-    df.collect()
-    val root = df.queryExecution.executedPlan
-    def strip(p: SparkPlan): SparkPlan = p match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case other => other
-    }
-    strip(root).collect { case b: BatchScanExec => b.scan }.collect {
-      case ps: ParquetScan => ps
-      case g: graft.sources.v2.GraftScan => g.parquet.asInstanceOf[ParquetScan]
-    }
-  }
-
-  /** The bucket dirs of the files the scan was built over. */
-  def bucketDirNames(ps: ParquetScan): Set[String] =
-    ps.fileIndex.allFiles().map(_.getPath.getParent.getName).toSet
 
   test("range read prunes to exactly the matching bucket dirs, pushes row-group filters, and is bit-equal to store.query") {
     val dir = tmpDir()
@@ -901,6 +884,46 @@ class GraftTableSpec extends AnyFunSuite {
     // it defensively): all in-range rows surface
     val fl = t.where($"DATE" >= "2015-03-25").limit(50)
     assert(fl.count() == 17, "29-day window starting 2015-03-25 through 04-10")
+  }
+
+  /** Whether `df`'s optimized plan reads no file: every leaf is a
+    * `LocalRelation`, the footer-answered aggregate's.
+    */
+  private def footerAnsweredPlan(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.collectLeaves().forall(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+
+  test("store(k) is a graft scan of its listing: count and min/max answered from footers, LIMIT reads a covering prefix") {
+    val dir = tmpDir()
+    val s = Store.open(spark, dir, bucket = Some("month"))
+    s.write("MSFT", bars(100)) // 4 month buckets → 4 chunk files
+    val n = s("MSFT").groupBy().count()
+    assert(footerAnsweredPlan(n), s"count() must be footer-answered:\n${n.queryExecution.optimizedPlan}")
+    assert(n.collect()(0).getLong(0) == 100L && s("MSFT").count() == 100L)
+    val mm = s("MSFT").agg(org.apache.spark.sql.functions.min($"DATE"),
+      org.apache.spark.sql.functions.max($"DATE"))
+    assert(footerAnsweredPlan(mm), s"min/max must be footer-answered:\n${mm.queryExecution.optimizedPlan}")
+    val row = mm.collect()(0)
+    assert(row.getTimestamp(0) == Timestamp.valueOf("2015-01-01 00:00:00") &&
+      row.getTimestamp(1) == Timestamp.valueOf("2015-04-10 00:00:00"))
+    val lim = s("MSFT").limit(5)
+    assert(lim.count() == 5)
+    assert(parquetScans(lim).map(_.fileIndex.allFiles().size) == Seq(1),
+      "LIMIT 5 must read a single chunk file")
+    assert(parquetScans(s("MSFT")).map(_.fileIndex.allFiles().size) == Seq(4))
+  }
+
+  test("a Store frame keeps the listing taken when it was made: a later append is in neither its footer answer nor its scan") {
+    val dir = tmpDir()
+    val s = Store.open(spark, dir, bucket = Some("month"))
+    s.write("MSFT", bars(100))
+    val df = s("MSFT")
+    s.appendNewOnly("MSFT", bars(120)) // the first 100 rows again, and 20 new ones
+    assert(s("MSFT").count() == 120L)
+    val n = df.groupBy().count()
+    assert(footerAnsweredPlan(n))
+    assert(n.collect()(0).getLong(0) == 100L && df.count() == 100L, "footer-answered count")
+    assert(df.collect().length == 100, "scanned rows")
   }
 
   test("topN pushdown: ORDER BY index LIMIT k reads only the covering bucket prefix/suffix; order stays exact") {

@@ -201,11 +201,13 @@ class StoreVersionedSpec extends AnyFunSuite {
       Some(Timestamp.valueOf("2022-02-01 00:00:00")),
       Some(Timestamp.valueOf("2022-02-10 00:00:00"))))
     val cur = s.versionsOf("EVT").find(_.current).get.id
-    val dirs = q.inputFiles.map(f => new org.apache.hadoop.fs.Path(f).getParent).toSet
-    assert(dirs.map(_.getName) == Set("__bucket=2022-02") && dirs.forall(_.getParent.getName == cur),
+    val scans = TestSpark.parquetScans(q)
+    val dirs = scans.flatMap(_.fileIndex.allFiles()).map(_.getPath.getParent).toSet
+    assert(scans.flatMap(TestSpark.bucketDirNames).toSet == Set("__bucket=2022-02") &&
+      dirs.forall(_.getParent.getName == cur),
       s"expected only the current version's 2022-02 bucket, scanned: $dirs")
     val plan = q.queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters: [IsNotNull(DATE), GreaterThanOrEqual(DATE"),
+    assert(plan.contains("pushed=[IsNotNull(DATE), GreaterThanOrEqual(DATE"),
       s"expected the bounds pushed in plan:\n$plan")
     assert(q.count() == 10)
     val dropped = s.prune("EVT", Timestamp.valueOf("2022-03-01 00:00:00"))

@@ -3,6 +3,10 @@ package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
 import org.apache.spark.sql.graft.Bridge
 
 /** One shared local session for the whole test run. */
@@ -73,4 +77,24 @@ object TestSpark {
     */
   def wasReadOnDriver(df: DataFrame): Boolean =
     df.queryExecution.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation])
+
+  /** The ParquetScans of a materialized DataFrame's final plan: every
+    * `graft` scan's, the Store's own DataFrames included.
+    */
+  def parquetScans(df: DataFrame): Seq[ParquetScan] = {
+    df.collect()
+    val root = df.queryExecution.executedPlan
+    def strip(p: SparkPlan): SparkPlan = p match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case other => other
+    }
+    strip(root).collect { case b: BatchScanExec => b.scan }.collect {
+      case ps: ParquetScan => ps
+      case g: graft.sources.v2.GraftScan => g.parquet.asInstanceOf[ParquetScan]
+    }
+  }
+
+  /** The bucket dirs of the files the scan was built over. */
+  def bucketDirNames(ps: ParquetScan): Set[String] =
+    ps.fileIndex.allFiles().map(_.getPath.getParent.getName).toSet
 }

@@ -6,7 +6,8 @@ import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.datasources.FilePartition
-import org.apache.spark.sql.execution.datasources.v2.MicroBatchScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, MicroBatchScanExec}
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetPartitionReaderFactory
 import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.apache.spark.sql.sources.{Filter, GreaterThanOrEqual}
@@ -18,8 +19,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * once per read shape: scans of one shape share the broadcast, also
   * across sessions with the same conf, while a changed schema, SQL conf
   * or Hadoop conf entry gets its own. Each read runs in a fresh session,
-  * so SQL conf set elsewhere in the shared test session cannot move its
-  * shape.
+  * or, for the distributed Store slices, back to back in the shared one,
+  * so SQL conf set elsewhere in the shared test session cannot move a
+  * compared shape.
   */
 class ReaderFactoryCacheSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.session
@@ -86,11 +88,12 @@ class ReaderFactoryCacheSpec extends AnyFunSuite {
     assert(columnar(s))
   }
 
-  /** A resumed drain's clone of the session also carries the conf its
-    * checkpoint's offset log recorded, so the fresh drain has a shape of
-    * its own; every resumed drain shares one.
+  /** A resumed drain's clone of the session also sets the conf entries
+    * its checkpoint's offset log recorded, at their defaults; the fresh
+    * drain's clone leaves them unset. Both read the same, so they share
+    * one shape.
     */
-  test("the resumed drains of one graft stream share one conf broadcast") {
+  test("every drain of one graft stream, fresh or resumed, shares one conf broadcast") {
     val s = spark.newSession()
     val dir = java.nio.file.Files.createTempDirectory("factory-cache-stream").toString
     val store = Store.open(s, dir, cols = Some(Seq("V" -> LongType)), index = Some("DATE"))
@@ -109,10 +112,32 @@ class ReaderFactoryCacheSpec extends AnyFunSuite {
         .collectFirst { case m: MicroBatchScanExec => m.readerFactory }.get
         .asInstanceOf[ParquetPartitionReaderFactory].broadcastedConf.id
     }
-    drainBroadcastId()
+    val fresh = drainBroadcastId()
     store.appendNewOnly("T", frame.where("V < 2"))
     val resumed = drainBroadcastId()
     store.appendNewOnly("T", frame.where("V < 3"))
     assert(drainBroadcastId() == resumed)
+    assert(fresh == resumed, "the fresh drain has a read shape of its own")
+  }
+
+  test("distributed Store slices of one shape share one conf broadcast") {
+    val dir = java.nio.file.Files.createTempDirectory("factory-cache-slice").toString
+    val store = Store.open(spark, dir, cols = Some(Seq("V" -> LongType)), index = Some("DATE"))
+    def day(d: Int) = java.sql.Timestamp.valueOf(s"2024-01-${10 + d} 00:00:00")
+    store.write("T", spark.createDataFrame(
+      java.util.Arrays.asList((0 until 8).map(d => Row(day(d), d.toLong)): _*),
+      StructType(Seq(StructField("DATE", TimestampType), StructField("V", LongType)))))
+    def sliceBroadcastId(from: Int, to: Int): Long = TestSpark.distributed {
+      val q = store.query("T", Some(day(from)), Some(day(to)))
+      assert(q.collect().length == to - from + 1)
+      val plan = q.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+      plan.collectFirst { case b: BatchScanExec => b.readerFactory }
+        .getOrElse(fail(s"expected a BatchScanExec:\n$plan"))
+        .asInstanceOf[ParquetPartitionReaderFactory].broadcastedConf.id
+    }
+    assert(sliceBroadcastId(0, 1) == sliceBroadcastId(3, 6))
   }
 }
