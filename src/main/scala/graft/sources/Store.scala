@@ -2,8 +2,6 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
@@ -346,11 +344,9 @@ object Store {
     * plane op runs on the DRIVER (they orchestrate Spark jobs, they
     * don't run inside them), so one JVM is the natural mutual-exclusion
     * domain: serializing same-item mutations here closes the real
-    * single-driver races — two concurrent `mode("append")` jobs into
-    * one directory share the committer's `_temporary/0` staging dir
-    * (one job's cleanup can delete the other's in-flight task files),
-    * and a compact swap racing an append can strand the appended files
-    * in the swapped-out dir. Different items lock independently, so
+    * single-driver races — a compact swap racing an append can strand
+    * the appended files in the swapped-out dir, and two appendNewOnly
+    * calls merging one batch concurrently would both write it. Different items lock independently, so
     * parallel multi-item ingest keeps its concurrency. Writers in
     * OTHER JVMs are outside this domain — for them the staging age
     * guard ([[Store!.vacuum]]) is the (weaker, documented) protection;
@@ -373,18 +369,24 @@ object Store {
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   /** Name prefix of what the store writes before renaming it into
-    * place: a data file [[Store!.appendNewOnly]], [[Store!.append]] or
-    * [[Store!.compact]] writes on the driver, the output dir of a
-    * distributed `appendNewOnly`, and a local pointer or marker file
-    * ([[writeUTF8]]). Hidden, so no listing counts it.
+    * place: every data file [[MutationKernel]] writes, on the driver or
+    * in a task, and a local pointer or marker file ([[writeUTF8]]).
+    * Hidden, so no listing counts it.
     */
   private[sources] val DriverTmpPrefix = ".graft-tmp-"
 
+  /** The output dir of a [[MutationKernel]] unit under version dir
+    * `root`: its bucket dir, or `root` itself for the unbucketed unit "".
+    */
+  private[sources] def dirsUnder(root: HPath): String => String = {
+    val r = root.toString
+    u => if (u.isEmpty) r else s"$r/$u"
+  }
+
   /** Tags (base#KEY) of items with an IN-PLACE append running in this
     * JVM ([[Store!.appendNewOnly]] — the one write into the LIVE data
-    * dir: its `mode("append")` job materializes committer staging there,
-    * and its driver-side write leaves hidden [[DriverTmpPrefix]] files
-    * there until it renames them). [[Store!.vacuum]]'s staging debris
+    * dir: its kernel leaves hidden [[DriverTmpPrefix]] files there
+    * until it lands them). [[Store!.vacuum]]'s hidden-file
     * sweep (job 4) skips them unconditionally, same split as
     * [[activeStagingIds]]: this set makes a force-sweep safe against
     * same-driver concurrent appends, the age guard covers writers in
@@ -478,8 +480,8 @@ object Store {
     * the reference's own unmet TODO (cloud storage, store.py:86).
     *
     * `bucket` (None | "day" | "month" | "year") selects directory-level
-    * time partitioning: items are written `partitionBy` a derived bucket
-    * column so range reads list only the in-range directories, before
+    * time partitioning: items are written one directory per bucket
+    * (`__bucket=<label>`) so range reads list only the in-range directories, before
     * any file I/O — the at-scale complement of the reference's
     * row-group-stat pruning (store.py:255-264). Persisted and enforced
     * like the schema. Bucket strings are rendered in the session
@@ -827,9 +829,12 @@ object Store {
   * reads are lazy DataFrames; the time index is an ordinary TimestampType
   * column used for range-partitioned writes and pushdown range queries.
   *
-  * Scale posture: writes are `repartitionByRange` on the index so Parquet
-  * row-group min/max stats are selective (the reference's 1M-row sorted
-  * chunks, store.py:27,174); a read lists the item once ([[files]]: only
+  * Scale posture: every mutation writes through one kernel per bucket
+  * ([[MutationKernel]]: on the calling thread when small, in Spark tasks
+  * otherwise, never through Spark's committer), rows sorted by the index
+  * in files of at most [[chunkRows]] rows so Parquet row-group min/max
+  * stats are selective (the reference's 1M-row sorted chunks,
+  * store.py:27,174); a read lists the item once ([[files]]: only
   * the in-range bucket dirs) and scans exactly those files, with the
   * `>=`/`<=` bounds pushed to Parquet row-group stats (store.py:255-264);
   * appends have an O(new)-write path instead of the reference's
@@ -955,10 +960,13 @@ class Store private[sources] (
     * poll until `-Dgraft.store.lease.waitMs` (default 60 s) then fail
     * loudly, naming the remedy. A daemon thread renews every ttl/4
     * while the op runs — the TTL is a crashed-writer detector, not a
-    * bound on op duration. An unparseable max entry (torn write, or a
-    * pre-log-vintage lease FILE at the dir's path) is neither held nor
-    * expired: contenders wait to their deadline and fail loudly; the
-    * named remedy is deleting the corrupt entry.
+    * bound on op duration. An unparseable max entry (a writer killed
+    * while it wrote its slot) has no expiry of its own: it lapses once
+    * its file's modification time is older than the TTL, and is then
+    * stolen like an expired lease; until then contenders wait to their
+    * deadline and fail loudly, naming the entry. A pre-log-vintage
+    * lease FILE at the dir's path never lapses: contenders fail loudly,
+    * and the remedy is deleting it.
     */
   private[graft] def withLease[T](k: String)(body: => T): T = {
     val dir = new HPath(leaseRoot, k)
@@ -982,8 +990,10 @@ class Store private[sources] (
     sealed trait View
     case object NoLease extends View
     case object Unknown extends View
-    case class Cur(seq: Long, uuid: String, exp: Option[Long]) extends View
-    // Cur.exp None = torn/garbage entry (neither held nor expired).
+    case class Cur(seq: Long, uuid: String, exp: Option[Long], modified: Long) extends View {
+      // a torn/garbage entry (exp None) lapses with its file's mtime
+      def expiry: Long = exp.getOrElse(modified + ttl)
+    }
     // A read failure on the max entry usually means a newer slot landed
     // and GC removed this one — re-LIST (never re-read blind), bounded.
     def state(): View = {
@@ -992,7 +1002,7 @@ class Store private[sources] (
         tries += 1
         val entries =
           try fs.listStatus(dir).flatMap(s =>
-            seqOf(s.getPath.getName).map(_ -> s.getPath))
+            seqOf(s.getPath.getName).map(_ -> s))
           catch {
             case _: java.io.FileNotFoundException =>
               return NoLease // dir never created: genuinely no lease
@@ -1002,14 +1012,15 @@ class Store private[sources] (
           }
         if (entries != null) {
           if (entries.isEmpty) return NoLease
-          val (mx, p) = entries.maxBy(_._1)
+          val (mx, st) = entries.maxBy(_._1)
           try {
-            val lines = readUTF8(fs, p).split("\n")
+            val lines = readUTF8(fs, st.getPath).split("\n")
             return Cur(mx, lines.headOption.getOrElse("").trim,
-              lines.lift(1).flatMap(s => scala.util.Try(s.trim.toLong).toOption))
+              lines.lift(1).flatMap(s => scala.util.Try(s.trim.toLong).toOption),
+              st.getModificationTime)
           } catch {
             case _: Throwable if tries < 5 => Thread.sleep(20L * tries)
-            case _: Throwable => return Cur(mx, "", None) // torn: wait path
+            case _: Throwable => return Cur(mx, "", None, st.getModificationTime) // torn
           }
         }
       }
@@ -1034,18 +1045,20 @@ class Store private[sources] (
     def claim(seq: Long, content: String): Boolean = {
       val p = new HPath(dir, entryName(seq))
       try fs.mkdirs(dir) catch { case _: java.io.IOException => return false }
-      val out =
+      val out: java.io.OutputStream =
         if (nioClaim) {
           // local FS: Hadoop's create(overwrite=false) is
           // check-then-act, but the OS has true O_CREAT|O_EXCL — the
           // ARBITRATION is the nio createFile; the content then goes
-          // into the exclusively-owned slot via an overwrite stream
-          // (same two-step shape as an object store's conditional PUT
-          // followed by content visibility at close)
+          // into the exclusively-owned slot through java.nio too (same
+          // two-step shape as an object store's conditional PUT
+          // followed by content visibility at close): the checksummed
+          // `fs.create` forks `chmod` while the slot is still empty, and
+          // a writer killed in that window leaves a torn max entry
           val f = new java.io.File(p.toUri.getPath)
           try java.nio.file.Files.createFile(f.toPath)
           catch { case _: Throwable => return false } // lost the race
-          try fs.create(p, true)
+          try java.nio.file.Files.newOutputStream(f.toPath, java.nio.file.StandardOpenOption.WRITE)
           catch {
             case _: java.io.IOException =>
               // the slot IS ours (create won) but we cannot write it:
@@ -1107,8 +1120,8 @@ class Store private[sources] (
       while (tries < 5) {
         tries += 1
         state() match {
-          case Cur(s, uuid, _) if s == seq && uuid == who => return Confirmed
-          case Cur(s, _, _) if s > seq => return Superseded
+          case Cur(s, uuid, _, _) if s == seq && uuid == who => return Confirmed
+          case Cur(s, _, _, _) if s > seq => return Superseded
           case _ =>
             // torn read of our own entry, a listing that missed our
             // just-created file, or an outright failure: retry bounded
@@ -1165,8 +1178,9 @@ class Store private[sources] (
           } else waitOrFail(now,
             s"cannot create lease log at $dir (no entries, yet the first-slot " +
               "claim keeps failing — a pre-log lease file or a permission problem?)")
-        case Cur(seq, _, exp) if exp.exists(_ <= now) =>
-          // expired (or released sentinel): steal = claim the next slot.
+        case c @ Cur(seq, _, _, _) if c.expiry <= now =>
+          // expired (or released sentinel, or a torn entry older than
+          // the TTL): steal = claim the next slot.
           // Two stealers, or a stealer racing a late renewal, all
           // target seq+1 — exactly one wins, no deletes involved. The
           // winner still CONFIRMS (see confirmedMax): if this steal
@@ -1185,13 +1199,12 @@ class Store private[sources] (
               waitOrFail(now, s"steal claim at $dir succeeded but could not be confirmed (listings failing)")
           } else waitOrFail(now,
             s"expired lease at $dir/${entryName(seq)} but the steal claim keeps failing")
-        case Cur(seq, _, exp) =>
-          // live foreign lease (or torn entry: neither held nor
-          // expired — never steal what we cannot judge)
+        case c @ Cur(seq, _, exp, _) =>
+          // live foreign lease (or a torn entry younger than the TTL:
+          // its writer may still be mid-claim — never steal it early)
           waitOrFail(now,
             s"writer lease $dir/${entryName(seq)} held by another process" +
-              exp.fold(" (entry unparseable — delete it if its writer is known dead)")(
-                e => s" (expires $e)"))
+              exp.fold(s" (entry unparseable; it lapses at ${c.expiry})")(e => s" (expires $e)"))
         case Unknown =>
           // could not LIST: indistinguishable from a live holder —
           // acting on it (claiming slot 1) could seat two writers
@@ -1209,7 +1222,7 @@ class Store private[sources] (
       while (renewing.get()) {
         try Thread.sleep(interval) catch { case _: InterruptedException => () }
         if (renewing.get()) state() match {
-          case Cur(seq, uuid, _) if uuid == id =>
+          case Cur(seq, uuid, _, _) if uuid == id =>
             if (claim(seq + 1, stamp())) confirmClaim(seq + 1, id) match {
               case Confirmed => gc(seq + 1)
               case Superseded =>
@@ -1232,7 +1245,7 @@ class Store private[sources] (
             }
           // claim failed: a thief (after our expiry) or our own release
           // won the slot; the next tick's read resolves which
-          case Cur(_, uuid, _) if uuid.nonEmpty =>
+          case Cur(_, uuid, _, _) if uuid.nonEmpty =>
             renewing.set(false) // POSITIVELY foreign: stolen, hands off
           case _ =>
             // torn read of the max entry (Cur with empty uuid), no
@@ -1264,7 +1277,7 @@ class Store private[sources] (
       while (!done && tries < 20) {
         tries += 1
         state() match {
-          case Cur(seq, uuid, _) if uuid == id =>
+          case Cur(seq, uuid, _, _) if uuid == id =>
             if (claim(seq + 1, "-\n0")) {
               // confirm before sweeping: if the sentinel landed on a
               // recycled GC'd number under a foreign max (the same
@@ -1282,7 +1295,7 @@ class Store private[sources] (
               }
               done = true
             } else if (tries < 20) Thread.sleep(50)
-          case Cur(_, uuid, _) if uuid.nonEmpty =>
+          case Cur(_, uuid, _, _) if uuid.nonEmpty =>
             done = true // positively foreign: stolen, not ours to release
           case NoLease => done = true // positively gone
           case _ => if (tries < 20) Thread.sleep(50) // Unknown/torn: retry
@@ -1324,27 +1337,6 @@ class Store private[sources] (
   private def withBucket(df: DataFrame): DataFrame =
     bucketFmt.fold(df)(f =>
       df.withColumn(BucketCol, date_format(col(indexName), f)))
-
-  /** The write-side invariants every parquet write of this store must
-    * carry — session guards + snappy + the reference 1 M-row chunk
-    * contract (store.py:27,174: cap rows per file so row-group stats
-    * stay selective without a driver count). [[writer]] adds the bucket
-    * column + partitioning on top; [[compactBuckets]] writes single
-    * bucket dirs through this directly (the bucket value lives in the
-    * dir name, not the files).
-    */
-  private def plainWriter(df: DataFrame) = {
-    requireMicrosTimestamps()
-    df.write
-      .option("compression", "snappy")
-      .option("maxRecordsPerFile", chunkRows)
-  }
-
-  private def writer(df: DataFrame) = {
-    requireTzAligned() // withBucket's date_format renders in session tz
-    val w = plainWriter(withBucket(df))
-    bucket.fold(w)(_ => w.partitionBy(BucketCol))
-  }
 
   /** Every store write must run under `spark.sql.parquet.
     * outputTimestampType = TIMESTAMP_MICROS`. The Spark default, INT96,
@@ -1570,8 +1562,8 @@ class Store private[sources] (
     * item this is O(files) footer reads instead of a full scan, through
     * the one footer sweep ([[sweepFooters]]: driver threads for small
     * file sets, executors past that) after one listing. The index column
-    * is written as INT64 TIMESTAMP(micros) ([[writer]] sets no INT96
-    * legacy mode), so footer min/max are epoch-µs longs, merged over the
+    * is written as INT64 TIMESTAMP(micros) ([[requireMicrosTimestamps]]
+    * guards every write), so footer min/max are epoch-µs longs, merged over the
     * row groups that carry stats.
     *
     * Rows are exact; min/max are None for an empty item (or if a writer
@@ -1602,8 +1594,8 @@ class Store private[sources] (
     * version dir on an unbucketed store — and keeps the `.parquet` files
     * outside hidden segments, sorted by path. Labels are rendered under
     * the PERSISTED store timezone ([[bucketLabel]]); no per-file
-    * round-trip. A listing a concurrent committer, compaction or prune
-    * invalidates is retaken ([[retryVanished]]). When readers take their
+    * round-trip. A listing a concurrent landing rename, compaction or
+    * prune invalidates is retaken ([[retryVanished]]). When readers take their
     * files from a manifest instead, this body is what changes.
     */
   private[sources] def files(
@@ -1633,8 +1625,8 @@ class Store private[sources] (
     }
 
   /** Runs `body`, retaking it (at most 5 more times) while it fails
-    * because a path it listed vanished under it — a concurrent
-    * committer's cleanup, compaction or prune; the last failure is
+    * because a path it listed vanished under it — a concurrent landing
+    * rename, compaction or prune; the last failure is
     * rethrown (a persistent one is a real one).
     */
   private def retryVanished[T](body: => T): T = {
@@ -1859,8 +1851,8 @@ class Store private[sources] (
     * [[SchemaError]]), extra columns silently dropped, names uppercased,
     * values cast to the declared types (the reference discards its
     * `astype` result at store.py:168 — a bug; we really cast), index
-    * coerced to timestamp. The appends' merge ([[withNewRowsTagged]])
-    * takes its input through here: its shuffle discards any layout.
+    * coerced to timestamp. Every mutation's batch ([[mutate]]) takes its
+    * input through here: the kernel lays the rows out itself.
     */
   private def conform(df: DataFrame): DataFrame = {
     val byLower: Map[String, String] =
@@ -1884,7 +1876,8 @@ class Store private[sources] (
 
   /** Initial write — CREATE TABLE AS (reference `_write`,
     * store.py:196-212): fails with [[ItemExistsError]] if the item
-    * exists; normalizes; writes snappy Parquet.
+    * exists; writes the conformed rows as snappy Parquet into a fresh
+    * version ([[writeVersion]]) and commits it with the pointer PUT.
     */
   def write(key: String, df: DataFrame): Unit = withItemLock(key) {
     val k = validateKey(key)
@@ -1898,10 +1891,9 @@ class Store private[sources] (
     // written this instant
     Store.activeStagingIds.add(id.stripPrefix("v-"))
     try {
-      writer(normalize(df)).mode("errorifexists")
-        .parquet(new HPath(new HPath(itemsRoot, k), id).toString)
-      // overwrite=false: the loser of a cross-JVM create race gets the
-      // same error an errorifexists write would — first pointer wins
+      writeVersion(new HPath(new HPath(itemsRoot, k), id), MutationKernel.Write, Some(df), _ => Nil)
+      // overwrite=false: the loser of a cross-JVM create race fails
+      // here — first pointer wins
       writeUTF8(fs, ptrPath(k), id, overwrite = false)
     } finally Store.activeStagingIds.remove(id.stripPrefix("v-"))
   }
@@ -1921,8 +1913,7 @@ class Store private[sources] (
     val id = "v-" + java.util.UUID.randomUUID().toString
     Store.activeStagingIds.add(id.stripPrefix("v-"))
     try {
-      writer(normalize(df)).mode("errorifexists")
-        .parquet(new HPath(new HPath(itemsRoot, k), id).toString)
+      writeVersion(new HPath(new HPath(itemsRoot, k), id), MutationKernel.Write, Some(df), _ => Nil)
       id
     } catch {
       case t: Throwable =>
@@ -1936,40 +1927,30 @@ class Store private[sources] (
     * the loser of a cross-JVM create race fail exactly like an
     * errorifexists write (first pointer wins).
     *
-    * The staged dir is re-verified (dir + `_SUCCESS`) immediately
-    * before the PUT: the activeStagingIds vacuum guard is same-JVM
-    * only, so a vacuum in ANOTHER process whose retention is shorter
-    * than this CTAS's insert phase may have swept the pointer-less
-    * v-dir as an orphan — committing blind would publish a visible
-    * item whose version dir is gone. Failing the CTAS here is the
-    * correct outcome (the statement reruns); the residual TOCTOU
-    * window between this check and the PUT is the same one
-    * versionSwap documents: cross-process vacuum retention MUST
-    * exceed the longest in-flight mutation.
+    * The staged dir is re-verified (dir + `_SUCCESS`, which
+    * [[writeVersion]] writes last) immediately before the PUT: the
+    * activeStagingIds vacuum guard is same-JVM only, so a vacuum in
+    * ANOTHER process whose retention is shorter than this CTAS's insert
+    * phase may have swept the pointer-less v-dir as an orphan —
+    * committing blind would publish a visible item whose version dir is
+    * gone. Failing the CTAS here is the correct outcome (the statement
+    * reruns); the residual TOCTOU window between this check and the PUT
+    * is the same one versionSwap documents: cross-process vacuum
+    * retention MUST exceed the longest in-flight mutation.
     */
   def commitStagedVersion(key: String, id: String): Unit = withItemLock(key) {
     val k = validateKey(key)
     try {
       val vdir = new HPath(new HPath(itemsRoot, k), id)
-      // The marker is only evidence where the committer produces one:
-      // deployments with mapreduce.fileoutputcommitter.marksuccessfuljobs
-      // =false (common on object-store committers) stage complete dirs
-      // with no _SUCCESS, and requiring it there would fail EVERY CTAS
-      // with a misleading vacuum message. Dir existence is the
-      // vacuum-sweep check either way; the marker is the completeness
-      // check only when the committer writes markers.
-      val marksEnabled = fs.getConf.getBoolean(
-        "mapreduce.fileoutputcommitter.marksuccessfuljobs", true)
       if (!fs.exists(vdir))
         throw new IllegalStateException(
           s"staged version $id for item $k is gone " +
             "(swept by a concurrent vacuum with retention shorter than " +
             "the CTAS insert?); the CTAS must be rerun")
-      if (marksEnabled && !fs.exists(new HPath(vdir, "_SUCCESS")))
+      if (!fs.exists(new HPath(vdir, "_SUCCESS")))
         throw new IllegalStateException(
           s"staged version $id for item $k exists but has no _SUCCESS " +
-            "marker while the committer is configured to write one — " +
-            "the staged write is incomplete; the CTAS must be rerun")
+            "marker — the staged write is incomplete; the CTAS must be rerun")
       Store.writeUTF8(fs, ptrPath(k), id, overwrite = false)
     } finally Store.activeStagingIds.remove(id.stripPrefix("v-"))
   }
@@ -2039,6 +2020,12 @@ class Store private[sources] (
     * never listed again. `count()` and `min`/`max` are answered from
     * their footers ([[graft.plans.FooterRangeAggregates]]), and
     * `limit(n)` reads a file prefix whose footer row counts cover `n`.
+    *
+    * `Dataset.inputFiles` of this frame (and of any Store frame not read
+    * on the driver) is empty: Spark collects a DSv2 table's files only
+    * for its own file tables. To find an item's files, take the current
+    * entry of [[versionsOf]] and list `items/<KEY>/<id>/`, as an
+    * external reader does.
     */
   def apply(key: String): DataFrame = pinnedFrame(key, files(key))
 
@@ -2078,13 +2065,9 @@ class Store private[sources] (
     * union old+new, drop full-row duplicates with old rows winning
     * (`keep='first'`, store.py:230), rewrite atomically as a fresh
     * version ([[versionSwap]]). O(history) per append — kept for
-    * small/compat use; the scalable path is [[appendNewOnly]].
-    *
-    * A batch already on the driver (a `LocalRelation`) whose item fits
-    * the driver-read limit is merged and written on the calling thread
-    * with no Spark job ([[appendOnDriver]]); anything else is the
-    * distributed merge. Both give the same rows and layout: one file per
-    * bucket, split at [[chunkRows]].
+    * small/compat use; the scalable path is [[appendNewOnly]]. Every
+    * bucket is merged by [[MutationKernel]] ([[mutate]]: on the calling
+    * thread or in tasks): one file per bucket, split at [[chunkRows]].
     *
     * Documented divergence: the dedup key here is the FULL row including
     * the time index; the reference dedups on value columns only (its
@@ -2095,32 +2078,10 @@ class Store private[sources] (
     */
   def append(key: String, df: DataFrame): Unit = withItemLock(key) {
     requireAppendable(key)
-    if (!appendOnDriver(key, df, rewrite = true)) {
-      val merged = withNewRowsTagged(key, df)
-        .drop(NewTag)
-        .repartitionByRange(col(indexName))
-        .sortWithinPartitions(col(indexName))
-      versionSwap(key)(v => writer(merged).mode("overwrite").parquet(v.toString))
-    }
+    requireGroupable(df)
+    val k = validateKey(key)
+    versionSwap(k)(v => writeVersion(v, MutationKernel.Append, Some(df), _ => files(k)))
   }
-
-  /** The one merge of both appends (reference `_append`,
-    * store.py:214-236: `pd.concat` + `drop_duplicates(keep='first')`):
-    * the item's rows tagged 0 and the conformed batch's rows tagged 1,
-    * grouped by every column, each distinct row carrying the min tag in
-    * [[NewTag]] — true exactly for rows the item does not hold yet.
-    * Grouping matches rows the way `<=>` join keys and dropDuplicates
-    * do: NULLs match, and NaN and ±0.0 are normalized (a -0.0 row
-    * leaves the group as +0.0). Duplicates inside the batch collapse to
-    * one row. [[appendOnDriver]] is its driver-side twin.
-    */
-  private def withNewRowsTagged(key: String, df: DataFrame): DataFrame =
-    this(key).withColumn(NewTag, lit(0))
-      .unionByName(conform(df).withColumn(NewTag, lit(1)))
-      .groupBy(schema.fieldNames.toIndexedSeq.map(col): _*)
-      .agg((min(col(NewTag)) === 1).as(NewTag))
-
-  private val NewTag = "__new"
 
   private def requireAppendable(key: String): Unit = {
     if (!exists(key))
@@ -2233,8 +2194,8 @@ class Store private[sources] (
     }
 
   /** Item-level rewrite ([[append]], [[compact]]): write a fresh
-    * immutable version dir (`writeVersion`, handed its path; it leaves a
-    * `_SUCCESS` marker there, as the committer does), commit it by
+    * immutable version dir (`fill`, handed its path — [[writeVersion]],
+    * which leaves a `_SUCCESS` marker there last), commit it by
     * overwriting the `_current`
     * pointer — ONE single-object PUT, atomic on every real object store,
     * no directory rename anywhere — then best-effort delete the
@@ -2243,13 +2204,13 @@ class Store private[sources] (
     * readers on the old complete version; there is no intermediate
     * state at all.
     */
-  private def versionSwap(key: String)(writeVersion: HPath => Unit): Unit = {
+  private def versionSwap(key: String)(fill: HPath => Unit): Unit = {
     val k = validateKey(key)
     val old = currentVersion(k)
     val id = "v-" + java.util.UUID.randomUUID().toString
     Store.activeStagingIds.add(id.stripPrefix("v-"))
     try {
-      writeVersion(new HPath(new HPath(itemsRoot, k), id))
+      fill(new HPath(new HPath(itemsRoot, k), id))
       writeUTF8(fs, ptrPath(k), id) // the commit point
       fs.delete(new HPath(new HPath(itemsRoot, k), old), true)
     } finally Store.activeStagingIds.remove(id.stripPrefix("v-"))
@@ -2345,46 +2306,43 @@ class Store private[sources] (
     } finally Store.activeStagingIds.remove(id)
   }
 
-  /** Rewrite one item into the canonical layout: range-partitioned and
-    * sorted by the time index, files capped at [[chunkRows]] rows.
+  /** Rewrite one item into the canonical layout, bucket by bucket: each
+    * bucket's rows sorted by the time index and cut into its canonical
+    * count of runs, ceil(rows / [[chunkRows]]), each at most
+    * [[chunkRows]] rows ([[MutationKernel.Compact]]).
     * [[appendNewOnly]] trades the reference's O(history) rewrite-per-
     * append for small appended files; at scale those accumulate (more
     * footers to read, weaker row-group stats), and compaction is the
     * periodic maintenance step that restores the 1 M-row sorted-chunk
     * contract (store.py:27,174) without paying it on every append.
     * Atomic: same pointer swap as [[append]]. An item within the
-    * driver-read limit is read and rewritten on the calling thread with
-    * no Spark job ([[compactOnDriver]]), in the same layout.
+    * driver-read limit is rewritten on the calling thread with no Spark
+    * job ([[mutate]]).
     */
   def compact(key: String): Unit = withItemLock(key) {
     requireNoPendingMarkers(key)
-    if (!compactOnDriver(key)) {
-      // rewrite exactly the listed files: the ones describe counts
-      val listed = files(key)
-      val canonical = canonicalLayout(pinnedFrame(key, listed), canonicalFiles(listed))
-      versionSwap(key)(v => writer(canonical).mode("overwrite").parquet(v.toString))
-    }
+    val k = validateKey(key)
+    // rewrite exactly the listed files: the ones describe counts
+    versionSwap(k)(v => writeVersion(v, MutationKernel.Compact, None, _ => files(k)))
   }
 
-  /** The canonical file count of the data in `files`: ceil(footer rows
-    * / [[chunkRows]]), at least 1 — the rewrite target of [[compact]]
-    * and [[compactBuckets]].
+  /** Whether `files` already hold their rows in the layout
+    * [[compactBuckets]] writes: at most the canonical count ceil(footer
+    * rows / [[chunkRows]]) (at least 1) of files whose index ranges do
+    * not overlap (NULL index values are not compared). When a row-bearing
+    * file's index stats are not footer-exact, the overlap cannot be told
+    * and the count decides alone.
     */
-  private def canonicalFiles(files: Seq[FileStatus]): Long =
-    canonicalCount(footersOrRefuse(files, Nil, Set.empty).map(_.rows).sum)
-
-  private def canonicalCount(rows: Long): Long =
-    math.max(1L, (rows + chunkRows - 1) / chunkRows)
-
-  /** `df` range-partitioned by the index into exactly `files`
-    * partitions, sorted within each. An explicit count, not the
-    * planner's (shuffle.partitions / AQE advice), so a rewrite emits the
-    * canonical layout at any item size; one partition (a small item)
-    * skips the range-sampling job.
-    */
-  private def canonicalLayout(df: DataFrame, files: Long): DataFrame =
-    df.repartitionByRange(math.min(files, Int.MaxValue.toLong).toInt, col(indexName))
-      .sortWithinPartitions(col(indexName))
+  private def isCanonical(files: Seq[FileStatus]): Boolean = {
+    val idx = indexName
+    val stats = footersOrRefuse(files, Seq(idx), Set(idx))
+    val bearing = stats.filter(_.rows > 0L)
+    files.size <= MutationKernel.canonicalCount(stats.map(_.rows).sum, chunkRows) &&
+      (!bearing.forall(_.minMaxOkCols.contains(idx)) || {
+        val ranges = bearing.flatMap(_.minMaxByCol.get(idx)).sortBy(_._1)
+        ranges.zip(ranges.drop(1)).forall { case ((_, hi), (lo, _)) => hi < lo }
+      })
+  }
 
   /** The policy that decides WHEN [[compact]] runs: rewrite the item
     * only once [[appendNewOnly]]'s accumulated small files exceed
@@ -2413,11 +2371,14 @@ class Store private[sources] (
     * store that is O(history) I/O to fix small files that only ever
     * accumulate in the buckets appends currently land in. This rewrites
     * ONLY buckets whose data-file count exceeds `maxFilesPerBucket`
-    * AND exceeds the canonical count ceil(rows / chunkRows) — the
-    * rewrite emits EXACTLY that canonical file count (per-file row
-    * capping off for this write, so range-sampling skew cannot split
-    * an extra file), which makes `dataFiles == canonicalFiles` an
-    * exact fixed point: a bucket too large to ever fit under
+    * AND that are not canonical yet: more files than the canonical
+    * count ceil(rows / chunkRows), or files whose index ranges overlap
+    * (appends each write canonical `chunkRows` files, but each covers
+    * the whole range its batch spans). The rewrite emits at most that
+    * canonical file count, in index ranges that do not overlap (no
+    * per-file row cap, so a run nudged past `chunkRows` by equal index
+    * keys cannot split an extra file), which makes the canonical layout
+    * an exact fixed point: a bucket too large to ever fit under
     * `maxFilesPerBucket` is rewritten once and then skipped, never
     * re-rewritten forever — each rewrite through the two-marker
     * crash-safe [[stagedSwap]] (the markers record the bucket path;
@@ -2470,29 +2431,24 @@ class Store private[sources] (
         val dataFiles = listed.size
         // convergence guard: a bucket holding more rows than
         // maxFilesPerBucket × chunkRows can never compact below the
-        // threshold — without the canonical-count clamp it would be
-        // fully rewritten on EVERY maintenance call, forever. Footer
-        // row counts (read only for over-threshold buckets, from the
-        // SAME listing) bound the target: rewrite only when the bucket
-        // holds more files than its rows canonically need.
-        lazy val target = canonicalFiles(listed)
-        if (dataFiles > maxFilesPerBucket && dataFiles > target) {
+        // threshold — without the canonical clamp it would be fully
+        // rewritten on EVERY maintenance call, forever. Footers (read
+        // only for over-threshold buckets, from the SAME listing)
+        // decide: rewrite only when the bucket holds more files than
+        // its rows canonically need, or files whose ranges overlap.
+        if (dataFiles > maxFilesPerBucket && !isCanonical(listed)) {
           // bucket files store the data columns only (the bucket value
-          // lives in the dir name), so the rewrite is a plain parquet
-          // round-trip sorted by the index, in the EXPLICIT canonical
-          // partition count ([[canonicalLayout]]), and per-file row
-          // capping is OFF for this write (maxRecordsPerFile=0): a range
-          // partition nudged past chunkRows by sampling skew must not
-          // split into an extra file, so the output is EXACTLY `target`
-          // files and the next call's dataFiles == target skips — an
-          // exact fixed point, no slack factor scaling debris with
-          // bucket size. Files target chunkRows rows ± that skew;
-          // row-group stats stay per-group either way.
-          val canonical = canonicalLayout(pinnedFrame(key, listed), target)
-          stagedSwap(key, d,
-            tmp => plainWriter(canonical)
-              .option("maxRecordsPerFile", 0L)
-              .mode("overwrite").parquet(tmp))
+          // lives in the dir name), sorted by the index in at most the
+          // canonical count of disjoint runs with no per-file row cap
+          // ([[MutationKernel.CompactExact]]): a run nudged past
+          // chunkRows by equal index keys must not split into an extra
+          // file, so the next call finds the bucket canonical and skips
+          // — an exact fixed point, no slack factor scaling debris with
+          // bucket size
+          stagedSwap(key, d, { tmp =>
+            fs.mkdirs(new HPath(tmp))
+            land(mutate(MutationKernel.CompactExact, None, _ => listed, _ => tmp))
+          })
           rewritten += 1
         }
       }
@@ -2529,187 +2485,118 @@ class Store private[sources] (
     * wins" trivially holds; NULL-bearing rows match, so they never
     * re-append).
     *
-    * What it reads depends on where the batch is. A batch already on
-    * the driver (a `LocalRelation`: `createDataFrame` of local rows,
-    * `INSERT … VALUES`) is merged against only the bucket dirs its index
-    * values map to — full-row dedup includes the index, so a duplicate
-    * can only live in its own row's bucket — and, when those files fit
-    * the driver-read limit, read, merged and written on the calling
-    * thread with no Spark job ([[appendOnDriver]]). Any other batch, or
-    * one whose buckets are too large, runs the distributed merge
-    * ([[withNewRowsTagged]]), which reads the whole item; its output is
-    * written into a hidden dir of the version and only the files that
-    * hold rows are renamed into place ([[landRowBearing]]), so a batch
-    * with nothing new writes no file.
+    * Full-row dedup includes the index, so a duplicate can only live in
+    * its own row's bucket: only the buckets the batch touches are read
+    * ([[MutationKernel.NewOnly]]), wherever the merge runs ([[mutate]]),
+    * and a batch with nothing new writes no file.
     */
   def appendNewOnly(key: String, df: DataFrame): Unit = withItemLock(key) {
     requireAppendable(key)
+    requireGroupable(df)
+    val k = validateKey(key)
     // registered so vacuum's staging sweep (job 4) never reclaims THIS
-    // write's live `_temporary`/`.spark-staging-*` or driver temp files
-    val tag = Store.inPlaceTag(base, validateKey(key))
+    // write's hidden files before they land
+    val tag = Store.inPlaceTag(base, k)
     Store.activeInPlaceWrites.add(tag)
-    try {
-      if (!appendOnDriver(key, df, rewrite = false)) {
-        val p = dataPath(key)
-        val fresh = withNewRowsTagged(key, df).where(col(NewTag)).drop(NewTag)
-        val staged = new HPath(p, DriverTmpPrefix + java.util.UUID.randomUUID())
-        writer(fresh).mode("errorifexists").parquet(staged.toString)
-        landRowBearing(staged, p)
-      }
-    } finally Store.activeInPlaceWrites.remove(tag)
+    try land(mutate(MutationKernel.NewOnly, Some(df),
+      units => filesWhere(k, units.map(us => (l: String) => us(s"$BucketCol=$l"))),
+      Store.dirsUnder(dataPath(k))))
+    finally Store.activeInPlaceWrites.remove(tag)
   }
 
-  /** Renames the data files of `staged` that hold rows (by their
-    * footers, [[sweepFooters]]) into the same bucket dirs of version dir
-    * `p` and deletes `staged`. Spark's writer opens a file for the first
-    * partition of an unpartitioned write even when it holds no row; that
-    * file is dropped, so appending nothing new adds no file.
+  /** Fills fresh version dir `v`: what [[mutate]] writes in `mode` lands
+    * under it, then `_SUCCESS` marks it complete (vacuum's pointer repair
+    * and [[commitStagedVersion]] trust only a marked version).
     */
-  private def landRowBearing(staged: HPath, p: HPath): Unit = {
-    val written = parquetUnder(staged, rootMustExist = true)
-    val rows = sweepFooters(written, Nil, Set.empty)._1.map(f => f.path -> f.rows).toMap
-    val kept = written.filter(st => rows.getOrElse(st.getPath.toString, 0L) > 0)
-    kept.groupBy(bucketOf).foreach { case (seg, inSeg) =>
-      val dir = if (seg.isEmpty) p else new HPath(p, seg)
-      if (!fs.exists(dir)) fs.mkdirs(dir)
-      inSeg.foreach { st =>
-        val dst = new HPath(dir, st.getPath.getName)
-        if (!fs.rename(st.getPath, dst)) throw new java.io.IOException(s"rename ${st.getPath} -> $dst failed")
-      }
-    }
-    fs.delete(staged, true)
+  private def writeVersion(
+      v: HPath,
+      mode: MutationKernel.Mode,
+      batch: Option[DataFrame],
+      listing: Option[Set[String]] => Seq[FileStatus]): Unit = {
+    fs.mkdirs(v)
+    land(mutate(mode, batch, listing, Store.dirsUnder(v)))
+    writeUTF8(fs, new HPath(v, "_SUCCESS"), "")
   }
 
-  /** The driver-side twin of [[withNewRowsTagged]] for [[append]]
-    * (`rewrite`: every distinct row goes into a fresh version) and
-    * [[appendNewOnly]] (only the batch's new rows, written in place).
-    * Returns false, having done nothing, when the batch is not on the
-    * driver ([[batchOnDriver]]) or the files to merge against pass the
-    * driver-read limit; the caller then runs the distributed merge.
+  /** Runs [[MutationKernel]] in `mode` over the item's units — one per
+    * bucket dir, "" on an unbucketed store — and returns the hidden files
+    * it wrote, for the caller to [[land]] and commit. `listing` lists the
+    * files the mutation reads (only the given units', when it is handed
+    * the batch's units); `dirOf` maps a unit to the dir its files go to.
     *
-    * Rows are grouped exactly as the `GROUP BY` groups them: the
-    * [[groupKey]] `UnsafeRow` of every column, so NULLs match, NaN and
-    * ±0.0 normalize, and the stored row is the normalized one.
+    * One placement rule for every mutation: on the calling thread, with
+    * no Spark job, when the batch is already on the driver
+    * ([[batchOnDriver]]) or there is none, and the files it reads fit
+    * the driver read ([[fitsDriver]]). Otherwise in Spark tasks
+    * ([[MutationKernel.inTasks]]): the batch is evaluated once, shuffled
+    * by bucket, and each task reads its units' files from this one
+    * listing. A listed file that a concurrent rewrite swaps out before
+    * it is read makes the mutation re-list and start over.
     */
-  private def appendOnDriver(key: String, df: DataFrame, rewrite: Boolean): Boolean = {
-    val k = validateKey(key)
-    val merged = batchOnDriver(df).flatMap { batch =>
-      // a listed file swapped out before the read reaches it: re-list
-      retryVanished {
-        // full-row dedup includes the index, so an appended row's twin
-        // can only live in the row's own bucket
-        val segs = batch.map(_._1).toSet
-        val listed = filesWhere(k, if (rewrite) None else Some(l => segs(s"$BucketCol=$l")))
-        Option.when(fitsDriver(listed)) {
-          val keyOf = groupKey()
-          val seen = scala.collection.mutable.HashSet.empty[UnsafeRow]
-          val kept = Vector.newBuilder[(String, InternalRow)]
-          def offer(seg: String, r: InternalRow, keep: Boolean): Unit = {
-            val g = keyOf(r)
-            if (!seen.contains(g)) {
-              val c = g.copy()
-              seen += c
-              if (keep) kept += seg -> c
-            }
-          }
-          rowsWithBucket(listed).foreach(r => offer(r.getUTF8String(schema.length).toString, r, rewrite))
-          batch.foreach { case (seg, r) => offer(seg, r, keep = true) }
-          kept.result()
-        }
-      }
-    }
-    merged.foreach { rows =>
-      if (rewrite) versionSwap(k)(v => writeOnDriver(v, Seq(rows), committed = true))
-      else writeOnDriver(dataPath(k), Seq(rows), committed = false)
-    }
-    merged.isDefined
-  }
-
-  /** [[compact]] on the driver: the item's files read on this thread and
-    * rewritten as a fresh version in [[canonicalLayout]]'s shape — rows
-    * cut into [[canonicalCount]] index ranges ([[rangeRuns]]), one file
-    * per bucket of each range, split at [[chunkRows]]. False, having done
-    * nothing, when the driver path is off or the files pass the limit.
-    */
-  private def compactOnDriver(key: String): Boolean = {
-    val k = validateKey(key)
-    val read =
-      if (!driverMutable) None
-      else retryVanished {
-        val listed = files(k)
-        Option.when(fitsDriver(listed))(rowsWithBucket(listed))
-      }
-    read.foreach { rows =>
-      val own = storeRow()
-      val runs = rangeRuns(sortedByIndex(rows), canonicalCount(rows.size.toLong))
-        .map(_.map(r => r.getUTF8String(schema.length).toString -> own(r).copy()))
-      versionSwap(k)(v => writeOnDriver(v, runs, committed = true))
-    }
-    read.isDefined
-  }
-
-  /** Writes rows on the calling thread ([[SparkInternals.writeOnDriver]])
-    * under version dir `root`: each run's rows of each bucket, sorted by
-    * the index, as files of at most [[chunkRows]] rows in the bucket's
-    * dir. Every file is written under a hidden name
-    * ([[Store$.DriverTmpPrefix]]) in its final dir and then renamed, so
-    * a reader never lists a torn file. A `committed` write fills a fresh
-    * version and, like the committer, leaves `_SUCCESS` in it.
-    */
-  private def writeOnDriver(
-      root: HPath, runs: Seq[Seq[(String, InternalRow)]], committed: Boolean): Unit = {
-    requireTzAligned() // the same guards as [[writer]]
+  private def mutate(
+      mode: MutationKernel.Mode,
+      batch: Option[DataFrame],
+      listing: Option[Set[String]] => Seq[FileStatus],
+      dirOf: String => String): Seq[Written] = retryVanished {
     requireMicrosTimestamps()
-    val chunk = math.min(chunkRows, Int.MaxValue.toLong).toInt
-    val files = runs.flatMap(_.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (seg, rs) =>
-      sortedByIndex(rs.map(_._2)).grouped(chunk).map(seg -> _)
-    })
-    val id = java.util.UUID.randomUUID().toString
-    val named = files.zipWithIndex.map { case ((seg, rows), i) =>
-      (if (seg.isEmpty) root else new HPath(root, seg), f"part-$i%05d-$id-c000.snappy.parquet", rows)
+    val fileSchema = StructType(schema.map(_.copy(nullable = true)))
+    val (writer, conf) = SparkInternals.parquetWriter(spark, fileSchema, Map("compression" -> "snappy"), base)
+    val kernel = new MutationKernel(mode, schema, chunkRows,
+      SparkInternals.driverReaderFactory(spark, schema, schema, Array.empty, new StructType()), writer, conf)
+    def units(listed: Seq[FileStatus]) = listed.groupBy(bucketOf).map { case (u, inUnit) =>
+      u -> inUnit.map(f => UnitFile(f.getPath.toString, f.getLen, f.getModificationTime)) }
+    val local = if (!driverMutable) None else batch.fold(Option(Seq.empty[(String, InternalRow)]))(batchOnDriver)
+    local.flatMap { rows =>
+      val listed = listing(Option.when(mode == MutationKernel.NewOnly)(rows.map(_._1).toSet))
+      Option.when(fitsDriver(listed))(kernel.onDriver(units(listed), rows, dirOf))
+    }.getOrElse {
+      val rows = batch.map { df =>
+        requireTzAligned() // withBucket's date_format renders in session tz
+        withBucket(conform(df))
+      }
+      kernel.inTasks(spark, units(listing(None)), rows, bucketFmt.map(_ => BucketCol), dirOf)
     }
-    SparkInternals.writeOnDriver(spark, StructType(schema.map(_.copy(nullable = true))),
-      Map("compression" -> "snappy"),
-      named.map { case (dir, name, rows) => new HPath(dir, DriverTmpPrefix + name) -> rows })
-    named.foreach { case (dir, name, _) =>
-      val (tmp, dst) = (new HPath(dir, DriverTmpPrefix + name), new HPath(dir, name))
-      if (!fs.rename(tmp, dst)) throw new java.io.IOException(s"rename $tmp -> $dst failed")
-    }
-    if (committed) writeUTF8(fs, new HPath(root, "_SUCCESS"), "")
   }
+
+  /** Renames every file [[mutate]] wrote from its hidden name to its own;
+    * files of a failed or superseded task attempt stay hidden until
+    * [[vacuum]] sweeps them.
+    */
+  private def land(written: Seq[Written]): Unit = written.foreach { w =>
+    if (!fs.rename(w.hidden, w.landed))
+      throw new java.io.IOException(s"rename ${w.hidden} -> ${w.landed} failed")
+  }
+
+  /** The refusal the merge's `GROUP BY` of every column gave a nested
+    * schema: Spark's analysis of that grouping, which refuses a map
+    * column. Atomic schemas always group.
+    */
+  private def requireGroupable(df: DataFrame): Unit =
+    if (!schema.forall(f => Bridge.isAtomic(f.dataType)))
+      conform(df).groupBy(schema.fieldNames.toIndexedSeq.map(col): _*).count()
 
   /** Whether mutations may run on the driver: the driver-read limit is
-    * positive and every column is atomic (a nested column is left to the
-    * distributed merge, which groups it — or refuses it — its own way).
+    * positive and every column is atomic (a nested column is merged in
+    * tasks).
     */
   private def driverMutable: Boolean =
     SparkInternals.driverReadLimit(spark) > 0 && schema.forall(f => Bridge.isAtomic(f.dataType))
 
-  /** The conformed batch, each row paired with its bucket dir name, when
-    * the batch is already on the driver: the optimized plan of
-    * `withBucket(conform(df))` is a `LocalRelation`, so the bucket labels
-    * are [[withBucket]]'s own `date_format`, evaluated by the optimizer.
-    * Names are escaped the way Spark's partitioned writer escapes them
-    * (a NULL index lands in `__HIVE_DEFAULT_PARTITION__`); an unbucketed
-    * store has the one name "".
+  /** The conformed batch, each row paired with its unit
+    * ([[MutationKernel.unitOf]]), when the batch is already on the
+    * driver: the optimized plan of `withBucket(conform(df))` is a
+    * `LocalRelation`, so the bucket labels are [[withBucket]]'s own
+    * `date_format`, evaluated by the optimizer.
     */
-  private def batchOnDriver(df: DataFrame): Option[Seq[(String, InternalRow)]] =
-    if (!driverMutable) None
-    else {
-      requireTzAligned() // withBucket's date_format renders in session tz
-      withBucket(conform(df)).queryExecution.optimizedPlan match {
-        case LocalRelation(_, data, false, _) =>
-          val n = schema.length
-          Some(data.map { r =>
-            val seg =
-              if (bucket.isEmpty) ""
-              else ExternalCatalogUtils.getPartitionPathString(
-                BucketCol, if (r.isNullAt(n)) null else r.getUTF8String(n).toString)
-            seg -> r
-          })
-        case _ => None
-      }
+  private def batchOnDriver(df: DataFrame): Option[Seq[(String, InternalRow)]] = {
+    requireTzAligned() // withBucket's date_format renders in session tz
+    withBucket(conform(df)).queryExecution.optimizedPlan match {
+      case LocalRelation(_, data, false, _) =>
+        val (n, col) = (schema.length, bucketFmt.map(_ => BucketCol))
+        Some(data.map(r => MutationKernel.unitOf(r, n, col) -> r))
+      case _ => None
     }
+  }
 
   /** Whether `files`, sized like the scan's estimate, fit the driver
     * read ([[SparkInternals.driverReadLimit]]; ≤ 0: nothing does). */
@@ -2721,69 +2608,6 @@ class Store private[sources] (
   /** The bucket dir name of data file `f` ("" on an unbucketed store). */
   private def bucketOf(f: FileStatus): String =
     if (bucket.isEmpty) "" else f.getPath.getParent.getName
-
-  /** Every row of `files`, in the store schema plus a trailing column of
-    * its file's bucket dir name.
-    */
-  private def rowsWithBucket(files: Seq[FileStatus]): Vector[InternalRow] =
-    SparkInternals.readRowsOnDriver(spark, files.map(f => bucketOf(f) -> f), schema, schema,
-      Array.empty, Some(BucketCol))
-
-  /** Projection of a row's store columns (a trailing bucket column
-    * dropped) into an `UnsafeRow`. Not thread-safe: one per mutation.
-    */
-  private def storeRow(): UnsafeProjection =
-    UnsafeProjection.create(schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
-      BoundReference(i, f.dataType, nullable = true) })
-
-  /** [[storeRow]] with every column normalized the way a `GROUP BY` key
-    * is: two rows are one group iff their keys' bytes are equal.
-    */
-  private def groupKey(): UnsafeProjection =
-    UnsafeProjection.create(schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
-      Bridge.normalizeFloats(BoundReference(i, f.dataType, nullable = true)) })
-
-  /** `rows` sorted by the index, NULLs first — `sortWithinPartitions`'
-    * ascending order. The index is column 0, a timestamp.
-    */
-  private def sortedByIndex(rows: Seq[InternalRow]): Vector[InternalRow] =
-    rows.toVector.sortBy(indexKey)
-
-  private def indexKey(r: InternalRow): Long = if (r.isNullAt(0)) Long.MinValue else r.getLong(0)
-
-  /** Index-sorted `sorted` cut into at most `parts` runs where Spark's
-    * range partitioner cuts them when its sample holds every row
-    * (`RangePartitioner.determineBounds`, weight 1 per row): the bound of
-    * run j is the first key, greater than the previous bound, at which
-    * the running row count reaches (j + 1) · n / parts, and a run ends
-    * after the last row equal to its bound.
-    */
-  private def rangeRuns(sorted: Vector[InternalRow], parts: Long): Seq[Vector[InternalRow]] = {
-    val n = sorted.size
-    val partitions = math.min(parts, n.toLong).toInt
-    if (partitions <= 1) Seq(sorted)
-    else {
-      val step = n.toDouble / partitions
-      val bounds = Vector.newBuilder[Long]
-      var (target, found, i) = (step, 0, 0)
-      var prev = Option.empty[Long]
-      while (i < n && found < partitions - 1) {
-        val key = indexKey(sorted(i))
-        if (i + 1 >= target && prev.forall(key > _)) {
-          bounds += key
-          target += step
-          found += 1
-          prev = Some(key)
-        }
-        i += 1
-      }
-      val bs = bounds.result()
-      sorted.groupBy(r => bs.indexWhere(indexKey(r) <= _) match {
-        case -1 => bs.size
-        case b => b
-      }).toSeq.sortBy(_._1).map(_._2)
-    }
-  }
 
   /** Drop one item entirely (maintenance op, like [[compact]]):
     * [[ItemKeyError]] if absent. The store itself (schema, other
@@ -2906,15 +2730,16 @@ class Store private[sources] (
     *     pointer write), after repairing a torn pointer; also the hidden
     *     temp a local pointer commit that died before its rename left
     *     beside the pointer ([[Store$.writeUTF8]]).
-    *  4. **Job-staging debris sweep** — committer `_temporary` /
-    *     `.spark-staging-*` dirs inside a live data dir, and the hidden
-    *     output dir of a distributed [[appendNewOnly]]
-    *     ([[landRowBearing]]), left by an
-    *     in-place append that died mid-job: hidden from every read but
-    *     holding staged bytes nothing else reclaims (`.spark-staging`
-    *     names are per-job UUIDs no later job touches). Skips items
-    *     with a same-JVM in-place append in flight
-    *     ([[Store$.activeInPlaceWrites]]).
+    *  4. **Hidden-file sweep** — the hidden [[Store$.DriverTmpPrefix]]
+    *     files [[MutationKernel]] writes before they land, inside the
+    *     current version: an in-place [[appendNewOnly]] that died before
+    *     landing them, or a failed or superseded task attempt's files
+    *     (a fresh version carries those along when it commits). Also the
+    *     committer `_temporary` / `.spark-staging-*` dirs and hidden
+    *     output dirs that writes of earlier vintages could leave in a
+    *     live data dir. All hidden from every read, holding bytes
+    *     nothing else reclaims. Skips items with a same-JVM in-place
+    *     append in flight ([[Store$.activeInPlaceWrites]]).
     *
     * Two writer-safety layers: entries whose staging id belongs to an
     * op IN FLIGHT IN THIS JVM ([[Store$.activeStagingIds]]) are always
@@ -3212,25 +3037,19 @@ class Store private[sources] (
         }
       }
     }
-    // job 4: sweep dead JOB-STAGING debris inside live
-    // data dirs — the committer `_temporary`/`.spark-staging-<jobId>`
-    // dirs an in-place append that died mid-job leaves behind. Readers
-    // and metadata never see them (hidden-segment filters), but nothing
-    // else reclaims the staging bytes: `_temporary` is only swept by
-    // the NEXT successful append's committer (which may never come),
-    // and `.spark-staging` names are per-job UUIDs no later job
-    // touches — found by the cross-JVM lifecycle fuzz's halt-on-delete
-    // arm, which dies exactly at this cleanup point. Same two
-    // writer-safety layers as jobs 1-2: items with an in-place
-    // append IN FLIGHT IN THIS JVM ([[Store$.activeInPlaceWrites]]) are
-    // skipped unconditionally, and the age guard covers writers in
-    // other JVMs. Torn/absent version pointers are job 3's territory —
-    // an unresolvable item is left alone here. The same sweep takes the
-    // hidden temp files ([[Store$.DriverTmpPrefix]]) a driver-side
-    // appendNewOnly that died before its rename left in the live bucket
-    // dirs (a driver append or compact writes into a fresh version,
-    // which job 3 sweeps whole), and the hidden output dir of a
-    // distributed appendNewOnly that died before landing its files.
+    // job 4: sweep dead hidden files inside live data dirs — the
+    // kernel's unlanded [[Store$.DriverTmpPrefix]] files (an in-place
+    // appendNewOnly that died before landing them, a failed or
+    // superseded task attempt's files) and, from stores written before
+    // the kernel, the committer `_temporary`/`.spark-staging-<jobId>`
+    // dirs and the hidden output dir of a distributed appendNewOnly.
+    // Readers and metadata never see them (hidden-segment filters), but
+    // nothing else reclaims their bytes. Same two writer-safety layers
+    // as jobs 1-2: items with an in-place append IN FLIGHT IN THIS JVM
+    // ([[Store$.activeInPlaceWrites]]) are skipped unconditionally, and
+    // the age guard covers writers in other JVMs. Torn/absent version
+    // pointers are job 3's territory — an unresolvable item is left
+    // alone here.
     if (fs.exists(itemsRoot)) {
       fs.listStatus(itemsRoot).filter(_.isDirectory).foreach { item =>
         val k = item.getPath.getName

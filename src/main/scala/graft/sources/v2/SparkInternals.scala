@@ -3,14 +3,14 @@ package graft.sources.v2
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FSDataInputStream, FileAlreadyExistsException, FileStatus, FileSystem, Path => HPath, PathFilter, RawLocalFileSystem, UnsupportedFileSystemException}
 import org.apache.hadoop.fs.permission.FsPermission
-import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
+import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptContext, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
 import org.apache.spark.sql.connector.read.PartitionReaderFactory
-import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile, PartitionSpec, PartitioningAwareFileIndex}
+import org.apache.spark.sql.execution.datasources.{FilePartition, OutputWriterFactory, PartitionedFile, PartitionSpec, PartitioningAwareFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.execution.datasources.v2.parquet.{ParquetPartitionReaderFactory, ParquetScan}
@@ -21,6 +21,7 @@ import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 import java.nio.file.{Files, StandardCopyOption}
 import java.nio.file.attribute.PosixFilePermissions
@@ -30,7 +31,7 @@ import scala.jdk.CollectionConverters._
 
 /** The ONE deliberate crossing into Spark-INTERNAL API in the store's
   * read and write paths (the `v2` provider, the Store's reads and its
-  * driver-side mutations), quarantined so a Spark version bump breaks
+  * mutation kernel), quarantined so a Spark version bump breaks
   * exactly this file plus the `org.apache.spark.sql.graft.Bridge` shim,
   * whose `Dataset.ofRows` builds every Store DataFrame: a driver read's
   * `LocalRelation` ([[readOnDriver]]), else a `DataSourceV2Relation` of
@@ -57,15 +58,20 @@ import scala.jdk.CollectionConverters._
   *     Spark's own factory for the first scan of a shape is the
   *     template every later scan of it copies with its own filters.
   *  4. `ParquetPartitionReaderFactory` — the same scan's reader factory
-  *     driven on the calling thread ([[readOnDriver]]), so a slice
-  *     small enough to collect is read with no Spark job: same decoder,
-  *     same pushed row-group filters, same session conf, broadcast once
-  *     per read shape; `copy(filters = …)` is how a scan gets its own.
+  *     driven outside a scan: on the calling thread ([[readOnDriver]]),
+  *     so a slice small enough to collect is read with no Spark job, and
+  *     by the Store's mutation kernel ([[foreachRow]]) on the driver or
+  *     inside its own tasks, so a merge reads exactly the files of its
+  *     bucket. Same decoder, same pushed row-group filters, same session
+  *     conf, broadcast once per read shape; `copy(filters = …)` is how a
+  *     scan gets its own.
   *  5. `ParquetFileFormat.prepareWrite` → `OutputWriterFactory` — the
-  *     writer a write task runs, driven on the calling thread
-  *     ([[writeOnDriver]]), so a small append or compaction writes its
-  *     files with no Spark job: same write support, same codec, same
-  *     session conf (timestamp type, rebase mode) as a `DataFrameWriter`.
+  *     writer a write task runs ([[parquetWriter]], [[writeFile]]),
+  *     driven by the Store's mutation kernel on the calling thread or
+  *     inside its tasks, so every Store write has the write support,
+  *     codec and session conf (timestamp type, rebase mode) of a
+  *     `DataFrameWriter` without Spark's committer: no `_temporary`
+  *     staging, no `.crc` twins, no forked `chmod`.
   *  6. `CheckpointFileManager` — [[GraftCheckpointFileManager]] writes a
   *     streaming query's `file:` checkpoint (offset and commit logs,
   *     `metadata`) through [[NioLocalFileSystem]], so no `.crc` twin is
@@ -227,7 +233,7 @@ private[sources] object SparkInternals {
     * are handed to it directly, and `createReaderFactory` reads only
     * the scan's schemas, filters and conf, so its scan has no file index.
     */
-  private[v2] def driverReaderFactory(
+  private[sources] def driverReaderFactory(
       spark: SparkSession,
       dataSchema: StructType,
       readDataSchema: StructType,
@@ -260,66 +266,97 @@ private[sources] object SparkInternals {
     val partSchema = labelSchema(labelCol)
     val factory = driverReaderFactory(spark, dataSchema, readDataSchema, pushedFilters, partSchema)
     val toUnsafe = UnsafeProjection.create(StructType(readDataSchema.fields ++ partSchema.fields))
-    val columnar = factory.supportColumnarReads(FilePartition(0, Array.empty))
     val rows = Vector.newBuilder[InternalRow]
-    files.foreach { case (label, st) =>
-      val file = PartitionedFile(
-        if (labelCol.isEmpty) InternalRow.empty else InternalRow(UTF8String.fromString(label)),
-        SparkPath.fromPath(st.getPath), 0L, st.getLen, Array.empty[String],
-        st.getModificationTime, st.getLen)
-      if (columnar) {
-        val reader = factory.buildColumnarReader(file)
-        try while (reader.next()) reader.get().rowIterator().asScala.foreach(r => rows += toUnsafe(r).copy())
-        finally reader.close()
-      } else {
-        val reader = factory.buildReader(file)
-        try while (reader.next()) rows += toUnsafe(reader.get()).copy()
-        finally reader.close()
-      }
-    }
+    foreachRow(factory, files.map { case (label, st) =>
+      (if (labelCol.isEmpty) InternalRow.empty else InternalRow(UTF8String.fromString(label)),
+        st.getPath.toString, st.getLen, st.getModificationTime)
+    })(r => rows += toUnsafe(r).copy())
     rows.result()
   }
 
-  /** Writes each `(path, rows)` pair as one Parquet file of `dataSchema`
-    * on the calling thread, so a small write starts no Spark job. The
-    * writer comes from `ParquetFileFormat.prepareWrite` →
-    * `OutputWriterFactory.newInstance`, the same write support, session
-    * conf and codec (`options`, as a `DataFrameWriter` would pass them)
-    * a write task uses; rows are internal rows of `dataSchema`. Each
-    * path is written directly — making it visible atomically is the
-    * caller's. On the local filesystem the files are created through
-    * [[NioLocalFileSystem]]: the default checksummed one writes a `.crc`
-    * twin of every file and, without Hadoop's native library, forks a
-    * `chmod` for both (measured 10–30 ms per created file, most of a
-    * small write). Readers do not need the `.crc`.
+  /** Hands every row of `files` — (partition values, path, length,
+    * modification time) — to `f` as `factory` decodes it, file by file,
+    * on the calling thread: on the driver for a driver read, inside a
+    * task for the Store's mutation kernel. The row is reused; copy it
+    * to keep it. Each reader is closed when its file is done.
     */
-  def writeOnDriver(
+  def foreachRow(
+      factory: ParquetPartitionReaderFactory,
+      files: Seq[(InternalRow, String, Long, Long)])(f: InternalRow => Unit): Unit = {
+    val columnar = factory.supportColumnarReads(FilePartition(0, Array.empty))
+    files.foreach { case (part, path, len, modified) =>
+      val file = PartitionedFile(part, SparkPath.fromPath(new HPath(path)), 0L, len,
+        Array.empty[String], modified, len)
+      if (columnar) {
+        val reader = factory.buildColumnarReader(file)
+        try while (reader.next()) reader.get().rowIterator().asScala.foreach(f)
+        finally reader.close()
+      } else {
+        val reader = factory.buildReader(file)
+        try while (reader.next()) f(reader.get())
+        finally reader.close()
+      }
+    }
+  }
+
+  /** The Parquet writer of a write task, prepared on the driver:
+    * `ParquetFileFormat.prepareWrite`'s `OutputWriterFactory` and the
+    * job conf it prepared — the same write support, session conf
+    * (timestamp type, rebase mode) and codec (`options`, as a
+    * `DataFrameWriter` would pass them) a write task uses. Both are
+    * serializable ([[SerializableConfiguration]]), so [[writeFile]] can
+    * run on the driver or inside a task. When `root` is on the local
+    * filesystem the files are created through [[NioLocalFileSystem]]:
+    * the default checksummed one writes a `.crc` twin of every file
+    * and, without Hadoop's native library, forks a `chmod` for both
+    * (measured 10–30 ms per created file). Readers do not need the
+    * `.crc`.
+    */
+  def parquetWriter(
       spark: SparkSession,
       dataSchema: StructType,
       options: Map[String, String],
-      files: Seq[(HPath, Iterable[InternalRow])]): Unit = if (files.nonEmpty) {
+      root: HPath): (OutputWriterFactory, SerializableConfiguration) = {
     val session = classic(spark)
     val job = Job.getInstance(session.sessionState.newHadoopConfWithOptions(options))
     job.setOutputKeyClass(classOf[Void])
     job.setOutputValueClass(classOf[InternalRow])
     val factory = new ParquetFileFormat().prepareWrite(session, job, options, dataSchema)
     val conf = job.getConfiguration
-    if (files.head._1.getFileSystem(conf).getUri.getScheme == "file") {
+    if (root.getFileSystem(conf).getUri.getScheme == "file") {
       conf.set("fs.file.impl", classOf[NioLocalFileSystem].getName)
       conf.setBoolean("fs.file.impl.disable.cache", true)
     }
+    (factory, new SerializableConfiguration(conf))
+  }
+
+  /** The task attempt context [[writeFile]] writes under, over `conf`
+    * (a [[parquetWriter]] conf). Building one copies the conf: build it
+    * once per writer, not per file.
+    */
+  def writeContext(conf: Configuration): TaskAttemptContext = {
     val attempt = new TaskAttemptID(new TaskID(new JobID("graft", 0), TaskType.MAP, 0), 0)
     conf.set("mapreduce.job.id", attempt.getJobID.toString)
     conf.set("mapreduce.task.id", attempt.getTaskID.toString)
     conf.set("mapreduce.task.attempt.id", attempt.toString)
     conf.setBoolean("mapreduce.task.ismap", true)
     conf.setInt("mapreduce.task.partition", 0)
-    val context = new TaskAttemptContextImpl(conf, attempt)
-    files.foreach { case (path, rows) =>
-      val w = factory.newInstance(path.toString, dataSchema, context)
-      try rows.foreach(w.write)
-      finally w.close()
-    }
+    new TaskAttemptContextImpl(conf, attempt)
+  }
+
+  /** Writes `rows` (internal rows of `dataSchema`) as one Parquet file
+    * at `path` on the calling thread. The path is written directly —
+    * making it visible atomically is the caller's.
+    */
+  def writeFile(
+      factory: OutputWriterFactory,
+      context: TaskAttemptContext,
+      path: HPath,
+      dataSchema: StructType,
+      rows: Iterable[InternalRow]): Unit = {
+    val w = factory.newInstance(path.toString, dataSchema, context)
+    try rows.foreach(w.write)
+    finally w.close()
   }
 }
 
@@ -342,8 +379,8 @@ private[sources] final class ListedFileIndex(
 
 /** The unchecksummed local filesystem, setting permissions through
   * `java.nio` instead of forking `chmod` (what `RawLocalFileSystem`
-  * does without Hadoop's native library). [[SparkInternals.writeOnDriver]]
-  * creates its files through it; `Store.writeUTF8`, the `graft` stream's
+  * does without Hadoop's native library). [[SparkInternals.parquetWriter]]'s
+  * writers create their files through it; `Store.writeUTF8`, the `graft` stream's
   * seen log and [[GraftCheckpointFileManager]] write theirs through
   * [[NioLocalFileSystem.shared]].
   */

@@ -11,8 +11,12 @@ import java.sql.Timestamp
   * bucket of many — the steady-state shape of a time-series store
   * (history cold, the current period accumulating small files).
   * compact() pays O(history) to fix it; compactBuckets() pays O(hot
-  * bucket). The same run times vacuum's orphan-version sweep, whose
-  * cost must track the orphan count, never the history size. Run:
+  * bucket). It also times each store's 12 M-row write and its eight
+  * non-local appendNewOnly calls into the hot bucket, the write and
+  * compact of the same 12 M rows as one unbucketed item (a single unit
+  * of the mutation kernel, so each runs in one task), and vacuum's
+  * orphan-version sweep, whose cost must track the orphan count, never
+  * the history size. Run:
   *   sbt "runMain graft.tools.StoreMaintBench /tmp/maintbench"
   * Prints one line per strategy; the receipt lives in PLANS.md.
   */
@@ -46,27 +50,22 @@ object StoreMaintBench {
           rand(seed.toLong).as("value"))
     }
 
-    def freshStore(dir: String): Store = {
+    def freshStore(dir: String, bucket: Option[String]): Store = {
       ToolUtil.wipeDir(dir)
-      // chunkRows sized so the hot bucket's canonical rewrite has real
-      // parallelism (rows/chunkRows partitions) — at production scale a
-      // hot bucket holds many chunks by construction; the default 1 M
-      // would make this small fixture a degenerate 1-partition rewrite
+      // chunkRows sized so the hot bucket holds many canonical chunks
+      // (45 for its 2.25 M rows) — at production scale a hot bucket
+      // holds many chunks by construction; the default 1 M would make
+      // this small fixture a degenerate 3-file rewrite. Each bucket is
+      // one unit of the mutation kernel, so the rewrite runs in one task
       Store.open(spark, dir,
         cols = Some(Seq(
           "EVENT_ID" -> LongType, "USER_ID" -> LongType, "VALUE" -> DoubleType)),
-        index = Some("TS"), bucket = Some("month"), chunkRows = 50000L)
+        index = Some("TS"), bucket = bucket, chunkRows = 50000L)
     }
 
-    def build(dir: String): Store = {
-      val s = freshStore(dir)
-      // `months` months of compacted history in one write...
+    // `months` months of history in one write
+    def writeHistory(s: Store): Unit =
       s.write("EVENTS", (0 until months).map(monthData(_, 0)).reduce(_ unionByName _))
-      // ...then append churn into the LAST month only (the hot bucket)
-      (1 to hotAppends).foreach(i =>
-        s.appendNewOnly("EVENTS", monthData(months - 1, i)))
-      s
-    }
 
     def timed(label: String)(body: => Unit): Unit = {
       val t0 = System.nanoTime()
@@ -74,12 +73,23 @@ object StoreMaintBench {
       println(f"[maintbench] $label%-18s ${(System.nanoTime() - t0) / 1e9}%.2f s")
     }
 
+    def build(dir: String, tag: String): Store = {
+      val s = freshStore(dir, Some("month"))
+      timed(s"write ($tag)") { writeHistory(s) }
+      // then append churn into the LAST month only (the hot bucket)
+      timed(s"$hotAppends appendNewOnly ($tag)") {
+        (1 to hotAppends).foreach(i =>
+          s.appendNewOnly("EVENTS", monthData(months - 1, i)))
+      }
+      s
+    }
+
     val hotSince = Timestamp.from(
       java.time.LocalDate.parse("2020-01-01")
         .atStartOfDay(java.time.ZoneOffset.UTC).plusMonths((months - 1).toLong).toInstant)
 
     val s2dir = baseDir + "-buckets"
-    val s2 = build(s2dir)
+    val s2 = build(s2dir, "buckets")
     timed("compactBuckets") {
       val n = s2.compactBuckets("EVENTS", maxFilesPerBucket = 8,
         since = Some(hotSince))
@@ -92,10 +102,18 @@ object StoreMaintBench {
       println(s"[maintbench] buckets rewritten on 2nd call: $n (must be 0)")
     }
 
-    val s1 = build(baseDir + "-whole")
+    val s1 = build(baseDir + "-whole", "whole")
     timed("compact (whole)") { s1.compact("EVENTS") }
     // same end state where it matters: the hot bucket is small again
     println(s"[maintbench] rows whole=${s1("EVENTS").count()} buckets=${s2("EVENTS").count()}")
+
+    // an unbucketed item is a single unit: the same 12 M rows written
+    // and compacted with no bucket to split them by
+    val s3 = freshStore(baseDir + "-flat", None)
+    timed("write (flat)") { writeHistory(s3) }
+    timed("compact (flat)") { s3.compact("EVENTS") }
+    println(s"[maintbench] rows flat=${s3("EVENTS").count()} (expect ${months * rowsPerMonth})")
+    ToolUtil.wipeDir(baseDir + "-flat")
 
     // orphan sweep: plant k version dirs no pointer names — exactly the
     // debris a versionSwap crashed before its pointer write leaves —

@@ -2,20 +2,20 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{ArrayTransform, CreateNamedStruct, Expression, GetStructField, If, IsNull, LambdaFunction, Literal, MapSort, NamedLambdaVariable, TransformValues}
 import org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic.{Dataset, ExpressionUtils}
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.{AtomicType, DataType, StructType}
+import org.apache.spark.sql.types.{ArrayType, AtomicType, DataType, MapType, StructType}
 
 /** Column ⇄ Expression bridge. Spark 4 made the converters
   * `private[sql]` (`org.apache.spark.sql.classic.ExpressionUtils`), so
   * extension libraries expose them via a shim in the sql package
   * namespace — the standard pattern for custom-Expression libraries.
   * `Dataset.ofRows` is `private[sql]` too: [[frame]] reaches it the
-  * same way, and so do [[normalizeFloats]], [[isAtomic]],
+  * same way, and so do [[groupKey]], [[isAtomic]],
   * [[drainListeners]] and [[isSqlDefault]].
   */
 object Bridge {
@@ -38,10 +38,32 @@ object Bridge {
     SQLConf.containsConfigKey(key) && sqlDefaults.getConfString(key) == value
   private val sqlDefaults = new SQLConf // nothing set: every entry reads its default
 
-  /** `e` with NaN and -0.0 normalized the way a `GROUP BY` key is
-    * (`NormalizeFloatingNumbers.normalize`; other types pass through).
+  /** `e` normalized the way a `GROUP BY` key is: maps sorted by key at
+    * any depth ([[sortMaps]]), then NaN and -0.0 normalized
+    * (`NormalizeFloatingNumbers.normalize`); other types pass through.
     */
-  def normalizeFloats(e: Expression): Expression = NormalizeFloatingNumbers.normalize(e)
+  def groupKey(e: Expression): Expression = NormalizeFloatingNumbers.normalize(sortMaps(e))
+
+  /** `e` with every map in it sorted by key — the `MapSort` Spark's
+    * optimizer-private `InsertMapSortExpression` adds to a grouping key.
+    */
+  private def sortMaps(e: Expression): Expression = {
+    def hasMap(dt: DataType) = dt.existsRecursively(_.isInstanceOf[MapType])
+    def lambda(dts: Seq[DataType])(body: Seq[NamedLambdaVariable] => Expression) = {
+      val vs = dts.zipWithIndex.map { case (dt, i) => NamedLambdaVariable(s"x$i", dt, nullable = true) }
+      LambdaFunction(body(vs), vs)
+    }
+    e.dataType match {
+      case MapType(kt, vt, _) =>
+        MapSort(if (!hasMap(vt)) e else TransformValues(e, lambda(Seq(kt, vt))(vs => sortMaps(vs(1)))))
+      case ArrayType(et, _) if hasMap(et) => ArrayTransform(e, lambda(Seq(et))(vs => sortMaps(vs.head)))
+      case st: StructType if hasMap(st) =>
+        If(IsNull(e), Literal(null, st), CreateNamedStruct(st.fields.toSeq.zipWithIndex.flatMap {
+          case (f, i) => Seq(Literal(f.name), sortMaps(GetStructField(e, i)))
+        }))
+      case _ => e
+    }
+  }
 
   /** Blocks until every queued listener event has been delivered, so a
     * listener's counts are complete (`listenerBus` is `private[spark]`).

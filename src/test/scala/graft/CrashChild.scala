@@ -108,16 +108,19 @@ object CrashChild {
           val b = rnd.nextInt(4)
           // arm AFTER drawing op/b so the sequence is log-reconstructable
           if (armKind == 0) { // p=1/8: die inside any rename that occurs
-            // (the item-level ops are rename-free by design — this arm
-            // documents that: it must never fire here, and a fire would
-            // mean a rename crept back into the item-level write path)
-            val target = Seq("items/K", ".tmp-", "_temporary")(rnd.nextInt(3))
+            // (the item-level ops rename no dir — the "items/K" and
+            // ".tmp-" targets must never fire here; the only renames
+            // are the kernel's landing renames of its hidden data
+            // files, so a ".graft-tmp-" target dies mid-landing)
+            val target = Seq("items/K", ".tmp-", ObjStoreFs.HiddenPrefix)(rnd.nextInt(3))
             val phase = if (rnd.nextBoolean()) "copy" else "delete"
             ObjStoreFs.crash = Some(ObjStoreFs.Crash(
-              target, phase, Seq(0, 0, 1, 2)(rnd.nextInt(4)), halt = true))
+              target, phase, Seq(0, 0, 1, 2)(rnd.nextInt(4)),
+              srcExcludes = Option.when(target != ObjStoreFs.HiddenPrefix)(ObjStoreFs.HiddenPrefix),
+              halt = true))
           } else if (armKind == 1) { // p=1/8: die mid-MATERIALIZATION —
             // at a data-file create under the item's version tree
-            // (compact's fresh v-dir, or an append's in-place/_temporary
+            // (compact's fresh v-dir, or an append's hidden in-place
             // file), leaving uncommitted debris for the hidden-segment
             // filters and the orphan sweep
             ObjStoreFs.haltOnCreatePath = Some("items/K/v-")

@@ -69,7 +69,7 @@ class ObjStoreFs extends RawLocalFileSystem {
   private def maybeCrash(src: HPath, phase: String, n: Int): Unit =
     ObjStoreFs.crash.foreach { c =>
       if (src.toUri.getPath.contains(c.srcContains) &&
-          !src.toUri.getPath.contains(c.srcExcludes) && c.phase == phase &&
+          !c.srcExcludes.exists(src.toUri.getPath.contains) && c.phase == phase &&
           n == c.afterFiles) {
         ObjStoreFs.crash = None // one-shot, like the process death it models
         // halt = REAL process death (no finally blocks, no cleanup —
@@ -113,12 +113,12 @@ class ObjStoreFs extends RawLocalFileSystem {
   // old-version reclaim are pure delete paths a rename crash can never
   // reach. `deleteSkips` lets the arm pass over the first N matching
   // deletes so a multi-orphan sweep dies PARTWAY, not at its first
-  // decision (committer `_temporary` cleanup is excluded — that's the
-  // rename/create families' territory).
+  // decision (the delete half of a hidden `.graft-tmp-` file's landing
+  // rename is excluded — that's the rename family's territory).
   private def maybeHaltOnDelete(f: HPath): Unit =
     ObjStoreFs.haltOnDeletePath.foreach { sub =>
       val p = f.toUri.getPath
-      if (p.contains(sub) && !p.contains("_temporary") &&
+      if (p.contains(sub) && !p.contains(ObjStoreFs.HiddenPrefix) &&
           ObjStoreFs.deleteSkips.getAndDecrement() <= 0)
         Runtime.getRuntime.halt(44)
     }
@@ -180,20 +180,26 @@ class ObjStoreFs extends RawLocalFileSystem {
 object ObjStoreFs {
   val SchemeUri: URI = URI.create("objstore:///")
 
-  /** Every rename the FS saw, (src path, dst path) — includes Spark's
-    * committer renames; specs filter by path shape.
+  /** Every rename the FS saw, (src path, dst path) — includes the
+    * Store's landing renames of single files; specs filter by path
+    * shape.
     */
   val renames = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
 
   /** Armed crash point: the next rename whose SOURCE path contains
-    * `srcContains` (and not `srcExcludes` — Spark committer renames all
-    * carry `_temporary`) throws [[InjectedCrash]] after `afterFiles`
-    * files of the given phase ("copy" | "delete") have been processed,
-    * leaving partial state behind. One-shot: disarms when it fires.
+    * `srcContains` (and not `srcExcludes` — by default the Store's
+    * landing renames of the hidden files its mutation kernel wrote, so
+    * a point aimed at a swap's dir rename fires there) throws
+    * [[InjectedCrash]] after `afterFiles` files of the given phase
+    * ("copy" | "delete") have been processed, leaving partial state
+    * behind. One-shot: disarms when it fires.
     */
   @volatile var crash: Option[Crash] = None
   final case class Crash(srcContains: String, phase: String, afterFiles: Int,
-      srcExcludes: String = "_temporary", halt: Boolean = false)
+      srcExcludes: Option[String] = Some(HiddenPrefix), halt: Boolean = false)
+
+  /** Name prefix of the Store's not-yet-landed data files. */
+  val HiddenPrefix = ".graft-tmp-"
   final class InjectedCrash(msg: String) extends java.io.IOException(msg)
 
   /** When set: `Runtime.halt(43)` the instant a create targets a path
@@ -203,7 +209,7 @@ object ObjStoreFs {
   @volatile var haltOnCreatePath: Option[String] = None
 
   /** When set: `Runtime.halt(44)` the instant a delete targets a path
-    * containing this substring (committer `_temporary` cleanup
+    * containing this substring (hidden [[HiddenPrefix]] files
     * excluded), after letting [[deleteSkips]] matching deletes pass —
     * real process death partway through a vacuum sweep or an
     * old-version reclaim (see maybeHaltOnDelete).

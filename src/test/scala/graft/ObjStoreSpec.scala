@@ -51,20 +51,22 @@ class ObjStoreSpec extends AnyFunSuite {
     (hp.getFileSystem(spark.sparkContext.hadoopConfiguration), hp)
   }
 
-  def open(dir: String, bucket: Option[String] = None): Store =
+  def open(dir: String, bucket: Option[String] = None, chunkRows: Long = 1000000L): Store =
     Store.open(spark, dir,
       cols = Some(Seq(
         "price" -> org.apache.spark.sql.types.DoubleType,
         "volume" -> org.apache.spark.sql.types.LongType)),
-      index = Some("date"), bucket = bucket)
+      index = Some("date"), bucket = bucket, chunkRows = chunkRows)
 
   /** The bucket-swap fixture: a month-bucketed store whose MSFT item
-    * holds 62 rows, all in January 2020, piled into several data files
-    * by an append — so `compactBuckets(maxFilesPerBucket = 1)` rewrites
-    * exactly ONE bucket, through the two-marker rename swap.
+    * holds 62 rows, all in January 2020, piled into four data files by
+    * a write and an append (25 + 6 rows each) — so
+    * `compactBuckets(maxFilesPerBucket = 1)` rewrites exactly ONE bucket,
+    * into its canonical three files, through the two-marker rename swap:
+    * both renames move several files, so a crash can land between two.
     */
   def piled(dir: String): Store = {
-    val s = open(dir, bucket = Some("month"))
+    val s = open(dir, bucket = Some("month"), chunkRows = 25L)
     s.write("MSFT", bars(31))
     s.appendNewOnly("MSFT", bars(31, seed = 12))
     s
@@ -99,7 +101,7 @@ class ObjStoreSpec extends AnyFunSuite {
     val s = open(dir, bucket = Some("month"))
     s.write("MSFT", bars(100))
     assert(s("MSFT").count() == 100)
-    s.appendNewOnly("MSFT", bars(150)) // 50 new rows through mode(append)
+    s.appendNewOnly("MSFT", bars(150)) // 50 new rows, landed by single-file renames
     assert(s("MSFT").count() == 150)
     s.append("MSFT", bars(200)) // version swap: fresh v-dir + pointer overwrite
     assert(s("MSFT").count() == 200)
@@ -382,11 +384,8 @@ class ObjStoreSpec extends AnyFunSuite {
     points.foreach { pt =>
       ObjStoreFs.reset()
       val dir = objDir()
-      val s = Store.open(spark, dir,
-        cols = Some(Seq(
-          "price" -> org.apache.spark.sql.types.DoubleType,
-          "volume" -> org.apache.spark.sql.types.LongType)),
-        index = Some("date"), bucket = Some("month"))
+      // chunkRows = 50: each bucket's three files rewrite into two
+      val s = open(dir, bucket = Some("month"), chunkRows = 50L)
       s.write("MSFT", bars(60)) // Jan-Feb 2020
       s.appendNewOnly("MSFT", bars(60, seed = 12))
       s.appendNewOnly("MSFT", bars(60, seed = 13))

@@ -336,6 +336,29 @@ class StoreLeaseSpec extends AnyFunSuite {
     assert(s("MSFT").count() == 150)
   }
 
+  test("a torn max slot lapses with its file's ttl: a stale one is stolen, a fresh one waits and fails loudly") {
+    // a writer killed while it wrote its slot entry leaves it torn; the
+    // torn entry has no expiry of its own, so its file's mtime stands in
+    val dir = freshDir()
+    val (fs, base) = hfs(dir)
+    val s = Store.open(spark, dir, writerLease = true)
+    s.write("MSFT", bars(100))
+    slot(fs, leaseDir(base, "MSFT"), 3, "garbage-without-expiry")
+    System.setProperty("graft.store.lease.waitMs", "300")
+    try {
+      // fresh: its writer may still be mid-claim
+      val e = intercept[java.io.IOException](s.appendNewOnly("MSFT", bars(150)))
+      assert(e.getMessage.contains("unparseable"), s"unhelpful error: ${e.getMessage}")
+      assert(s("MSFT").count() == 100, "a blocked writer must not have mutated")
+      // older than the ttl (default 1 h): stolen through the next slot
+      fs.setTimes(new HPath(leaseDir(base, "MSFT"), f"e${3L}%019d"),
+        System.currentTimeMillis() - 2 * 3600000L, -1)
+      s.appendNewOnly("MSFT", bars(150))
+    } finally System.clearProperty("graft.store.lease.waitMs")
+    assert(s("MSFT").count() == 150)
+    assert(released(fs, leaseDir(base, "MSFT")))
+  }
+
   test("a pre-log-vintage lease FILE at the dir path wedges loudly, not silently") {
     val dir = freshDir()
     val (fs, base) = hfs(dir)

@@ -524,18 +524,19 @@ object StoreProps extends Properties("Store") {
     }
   }
 
-  /** `append`, `appendNewOnly` and `compact` of a batch already on the
-    * driver run on the driver (no Spark job); with the threshold at -1
-    * the same calls run the distributed merge and write. Each case runs
-    * append → appendNewOnly → compact on both sides and, after every op,
-    * both stores must hold the same row multiset (-0.0 and +0.0 kept
-    * apart, so normalization must agree), the same data files per
-    * bucket, the same `describe` rows, index bounds and file count, and
-    * the same footer-answered SQL count/min/max, answered from footers
-    * on both sides or on neither. Inputs: NULL, NaN and ±0.0 values,
-    * NULL-index rows, a batch spanning two buckets with duplicates
-    * inside it, None/day/month buckets and small `chunkRows`. Bytes are
-    * not compared: row order inside a file may differ.
+  /** Every mutation runs one kernel in one of two placements: with a
+    * batch already on the driver (or none) and a small item, on the
+    * calling thread with no Spark job; with the threshold at -1, in Spark
+    * tasks. Each case runs write → append → appendNewOnly →
+    * compactBuckets (bucketed stores) → compact on both sides and, after
+    * every op, both stores must hold the same row multiset (-0.0 and
+    * +0.0 kept apart, so normalization must agree), the same data files
+    * per bucket, the same `describe` — rows, index bounds, file count
+    * and bytes, so both placements write byte-identical files — and the
+    * same footer-answered SQL count/min/max, answered from footers on
+    * both sides or on neither. Inputs: NULL, NaN and ±0.0 values,
+    * NULL-index rows, a batch spanning two buckets with duplicates inside
+    * it, None/day/month buckets and small `chunkRows`.
     */
   property("driver mutations ≡ distributed mutations: rows, files, describe, footer SQL") =
     forAll(Gen.choose(1L, 1000000L)) { seed => driverMutationsEqualDistributed(seed) }
@@ -575,7 +576,6 @@ object StoreProps extends Properties("Store") {
     }
     val (drv, drvDir) = open()
     val (dist, distDir) = open()
-    Seq(drv, dist).foreach(s => TestSpark.distributed(s.write("K", df(stored))))
 
     def canon(d: DataFrame) = d.collect().toSeq.map(_.toSeq.map {
       case v: Double => java.lang.Double.doubleToLongBits(v)
@@ -602,7 +602,7 @@ object StoreProps extends Properties("Store") {
       val checks = Seq(
         "rows" -> (canon(drv("K")), canon(dist("K"))),
         "files per bucket" -> (filesPerBucket(drv, drvDir), filesPerBucket(dist, distDir)),
-        "describe" -> (drv.describe("K").copy(bytes = 0), dist.describe("K").copy(bytes = 0)),
+        "describe" -> (drv.describe("K"), dist.describe("K")),
         "footer sql" -> (footerSql(drvDir), footerSql(distDir)))
       val bad = checks.filter { case (_, (a, b)) => a != b }
       bad.foreach { case (what, (a, b)) =>
@@ -618,8 +618,10 @@ object StoreProps extends Properties("Store") {
         System.err.println(s"[driver-mutation-prop] seed=$seed $name on the driver started $jobs jobs")
       jobs == 0 && same(name)
     }
-    step("append")(_.append("K", df(batch1))) &&
+    step("write")(_.write("K", df(stored))) &&
+      step("append")(_.append("K", df(batch1))) &&
       step("appendNewOnly")(_.appendNewOnly("K", df(batch2))) &&
+      (bucket.isEmpty || step("compactBuckets")(s => s.compactBuckets("K", maxFilesPerBucket = 1L))) &&
       step("compact")(_.compact("K"))
   }
 

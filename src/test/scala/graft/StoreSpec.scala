@@ -724,6 +724,37 @@ class StoreSpec extends AnyFunSuite {
     intercept[SchemaError] { unbucketed.compactBuckets("MSFT") }
   }
 
+  test("compactBuckets rewrites a bucket of canonical file count whose files overlap; the rewrite's ranges are disjoint") {
+    import scala.jdk.CollectionConverters._
+    val dir = tmpDir()
+    val s = Store.open(spark, dir, bucket = Some("month"), chunkRows = 10L)
+    // four batches of 10 rows over the same ten January days: each
+    // lands as one 10-row file, so January holds its canonical count of
+    // 4 files, every one spanning Jan 1 .. Jan 10
+    s.write("MSFT", bars(10))
+    (8 to 10).foreach(seed => s.appendNewOnly("MSFT", bars(10, seed = seed.toLong)))
+    val before = s("MSFT").collect().map(_.toSeq).toSet
+    def ranges(): Seq[(Long, Long)] = {
+      val conf = spark.sparkContext.hadoopConfiguration
+      val st = Files.list(LiveDir(s, dir, "MSFT").resolve("__bucket=2015-01"))
+      val files = try st.iterator().asScala.filter(_.toString.endsWith(".parquet")).toVector
+        finally st.close()
+      files.map { f =>
+        val cs = Store.readFooter(conf, new org.apache.hadoop.fs.Path(f.toString)).getBlocks.asScala
+          .map(_.getColumns.asScala.find(_.getPath.toDotString == "DATE").get.getStatistics)
+        (cs.map(_.genericGetMin.asInstanceOf[java.lang.Long].longValue).min,
+          cs.map(_.genericGetMax.asInstanceOf[java.lang.Long].longValue).max)
+      }.sortBy(_._1)
+    }
+    def disjoint(rs: Seq[(Long, Long)]): Boolean =
+      rs.zip(rs.drop(1)).forall { case ((_, hi), (lo, _)) => hi < lo }
+    assert(ranges().size == 4 && !disjoint(ranges()), s"fixture: ${ranges()}")
+    assert(s.compactBuckets("MSFT", maxFilesPerBucket = 2) == 1L)
+    assert(ranges().size <= 4 && disjoint(ranges()), s"after compactBuckets: ${ranges()}")
+    assert(s("MSFT").collect().map(_.toSeq).toSet == before, "rows preserved exactly")
+    assert(s.compactBuckets("MSFT", maxFilesPerBucket = 2) == 0L, "the rewrite is a fixed point")
+  }
+
   test("pending recovery markers gate every mutation; drop retires them; markerless orphans do not block") {
     import graft.sources.PendingRecoveryError
     import org.apache.hadoop.fs.{Path => HPath}

@@ -385,13 +385,14 @@ class TwoProcessSpec extends AnyFunSuite {
         val staging = new HPath(base, ".staging")
         assert(!fs.exists(staging) || fs.listStatus(staging).isEmpty,
           s"seed=$seed: staging not drained")
-        // vacuum job 4: a writer that died mid-append leaves committer
-        // staging (`_temporary` / `.spark-staging-*`) inside the live
-        // version dir; the recovery vacuum must have reclaimed it
+        // vacuum job 4: a writer that died mid-append leaves the
+        // kernel's unlanded hidden files inside the live version dir;
+        // the recovery vacuum must have reclaimed them
         val curDir = new HPath(
           new HPath(new HPath(base, "items"), "K"), versions.head.id)
         val debris = fs.listStatus(curDir).map(_.getPath.getName)
-          .filter(n => n == "_temporary" || n.startsWith(".spark-staging"))
+          .filter(n => n.startsWith(ObjStoreFs.HiddenPrefix) || n == "_temporary" ||
+            n.startsWith(".spark-staging"))
         assert(debris.isEmpty,
           s"seed=$seed: dead job-staging debris survived recovery: ${debris.toSeq}")
         assert(probeOk > 0, s"seed=$seed: vacuous probe loop ($probes probes, 0 ok)")
