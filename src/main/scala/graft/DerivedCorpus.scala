@@ -25,10 +25,10 @@ private[graft] object DerivedCorpus {
       else d
     }
 
-  /** Land `df` as the flat file `<corpus>/<t>.parquet`: write a
+  /** Write `df` as the flat file `<corpus>/<t>.parquet`: write a
     * single-part dir, promote the part file, sweep the staging dir.
     */
-  def land(df: DataFrame, corpus: String, t: String): Unit = {
+  def writeFlat(df: DataFrame, corpus: String, t: String): Unit = {
     val tmpDir = s"$corpus/.tmp-$t"
     asNtz(df).coalesce(1).write.mode("overwrite").parquet(tmpDir)
     val tmp = java.nio.file.Paths.get(tmpDir)

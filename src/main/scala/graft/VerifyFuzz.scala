@@ -149,7 +149,7 @@ object VerifyFuzz {
           .when(col("event_type") =!= "purchase" && gate("events", "neginf", eKey, 10),
             lit(Double.NegativeInfinity))
           .otherwise(col("value")))
-    DerivedCorpus.land(eventsL, corpus, "events")
+    DerivedCorpus.writeFlat(eventsL, corpus, "events")
     report("events", spark.read.parquet(s"$corpus/events.parquet"), Seq(
       "hot_user" -> (col("user_id") === HotUser),
       "pre_epoch" -> (col("ts") < lit("1970-01-01").cast("timestamp")),
@@ -177,7 +177,7 @@ object VerifyFuzz {
         when(gate("documents", "lang_unknown", dKey, 100), lit("zz"))
           .otherwise(col("lang")))
       .withColumn("n_chars", length(col("text")).cast("long"))
-    DerivedCorpus.land(docs, corpus, "documents")
+    DerivedCorpus.writeFlat(docs, corpus, "documents")
     report("documents", spark.read.parquet(s"$corpus/documents.parquet"), Seq(
       "empty" -> (col("text") === ""),
       "whitespace" -> (col("text") === WhitespaceOnly),
@@ -209,7 +209,7 @@ object VerifyFuzz {
             transform(col("embedding"), (x, i) =>
               when(i === 0, lit(Float.PositiveInfinity)).otherwise(x)))
           .otherwise(col("embedding")))
-    DerivedCorpus.land(embL, corpus, "embeddings")
+    DerivedCorpus.writeFlat(embL, corpus, "embeddings")
     report("embeddings", spark.read.parquet(s"$corpus/embeddings.parquet"), Seq(
       "zero_vec" -> (aggregate(col("embedding"), lit(0.0d),
         (acc, x) => acc + abs(x)) === 0.0),
@@ -249,7 +249,7 @@ object VerifyFuzz {
         .withColumn("l_tax",
           when(gate("lineitem", "tax_nan", lKey, 20), lit(Double.NaN))
             .otherwise(col("l_tax")))
-    DerivedCorpus.land(liL, corpus, "lineitem")
+    DerivedCorpus.writeFlat(liL, corpus, "lineitem")
     report("lineitem", spark.read.parquet(s"$corpus/lineitem.parquet"), Seq(
       "zero_var_R" -> (col("l_returnflag") === "R" && col("l_quantity") === 25.0),
       "ship_min" -> (col("l_shipdate") < lit("1900-01-01").cast("timestamp")),
@@ -276,7 +276,7 @@ object VerifyFuzz {
           .when(gate("orders", "total_neginf", oKey, 10),
             lit(Double.NegativeInfinity))
           .otherwise(col("o_totalprice")))
-    DerivedCorpus.land(ordL, corpus, "orders")
+    DerivedCorpus.writeFlat(ordL, corpus, "orders")
     report("orders", spark.read.parquet(s"$corpus/orders.parquet"), Seq(
       "date_min" -> (col("o_orderdate") < lit("1900-01-01").cast("timestamp")),
       "date_max" -> (col("o_orderdate") > lit("2200-01-01").cast("timestamp"))))
@@ -284,7 +284,7 @@ object VerifyFuzz {
     // dimension tables pass through unmutated: they are join targets
     // whose keys must keep referential integrity with the fact sides
     Seq("region", "nation", "customer", "supplier", "part").foreach { t =>
-      DerivedCorpus.land(spark.read.parquet(s"$sfDir/$t.parquet"), corpus, t)
+      DerivedCorpus.writeFlat(spark.read.parquet(s"$sfDir/$t.parquet"), corpus, t)
     }
 
     if (naninf) {

@@ -76,7 +76,7 @@ object VerifyNull {
       }
       // land as a FLAT FILE named <t>.parquet (what Tables and the
       // DuckDB views expect), not a directory — shared with VerifyFuzz
-      DerivedCorpus.land(df, corpus, t)
+      DerivedCorpus.writeFlat(df, corpus, t)
       val nulled = Plan.get(t).map { cols =>
         cols.keys.map { c =>
           val n = spark.read.parquet(s"$corpus/$t.parquet")

@@ -18,15 +18,12 @@ import org.apache.spark.util.SerializableConfiguration
 import scala.collection.mutable
 
 /** One listed data file of a unit, as a task reads it. */
-private[sources] final case class UnitFile(path: String, len: Long, modifiedMs: Long)
+private[sources] final case class UnitFile(path: String, len: Long)
 
-/** A file the kernel wrote as `dir/.graft-tmp-<name>`; landing renames
-  * it to `dir/name`.
+/** A file the kernel wrote: its unit, its name in the unit's dir, and
+  * its length in bytes.
   */
-private[sources] final case class Written(dir: String, name: String) {
-  def hidden: HPath = new HPath(dir, Store.DriverTmpPrefix + name)
-  def landed: HPath = new HPath(dir, name)
-}
+private[sources] final case class Written(unit: String, name: String, len: Long)
 
 private[sources] object MutationKernel {
   sealed trait Mode extends Serializable
@@ -72,10 +69,10 @@ private[sources] object MutationKernel {
   * the bytes of the row written (the normalized row, in the merging
   * modes), so both placements write byte-identical files; each run split
   * at `chunkRows` (except [[MutationKernel.CompactExact]]); every file
-  * written through the writer factory under a hidden
-  * [[Store$.DriverTmpPrefix]] name in its final dir; no file opened for
-  * zero rows. Rows merge the way a `GROUP BY` of every column groups
-  * them ([[Bridge.groupKey]]): NULLs match, NaN and ±0.0 normalize, maps
+  * written through the writer factory under its final, unique name in
+  * its unit's dir, never renamed; no file opened for zero rows. Rows
+  * merge the way a `GROUP BY` of every column groups them
+  * ([[Bridge.groupKey]]): NULLs match, NaN and ±0.0 normalize, maps
   * match whatever their key order, and the stored row is the normalized
   * one.
   *
@@ -102,16 +99,16 @@ private[sources] final class MutationKernel(
   @transient private lazy val context = SparkInternals.writeContext(writeConf.value)
   private val fileSchema = StructType(schema.map(_.copy(nullable = true)))
 
-  /** The kernel over one unit: `files` are its listed files, `batch` the
-    * batch's rows for it, and the files it writes go to `dir`.
+  /** The kernel over unit `unit`: `files` are its listed files, `batch`
+    * the batch's rows for it, and the files it writes go to `dir`.
     */
-  def run(dir: String, files: Seq[UnitFile], batch: Iterator[InternalRow]): Seq[Written] = {
+  def run(unit: String, dir: String, files: Seq[UnitFile], batch: Iterator[InternalRow]): Seq[Written] = {
     val cols = schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
       BoundReference(i, f.dataType, nullable = true) }
     lazy val own = UnsafeProjection.create(cols)
     lazy val keyOf = UnsafeProjection.create(cols.map(Bridge.groupKey))
     def old(f: InternalRow => Unit): Unit = SparkInternals.foreachRow(reader,
-      files.map(u => (InternalRow.empty, u.path, u.len, u.modifiedMs)))(f)
+      files.map(u => (InternalRow.empty, u.path, u.len, 0L)))(f)
     val seen = mutable.HashSet.empty[UnsafeRow]
     def offer(r: InternalRow): Unit = {
       val g = keyOf(r)
@@ -132,13 +129,13 @@ private[sources] final class MutationKernel(
         old(r => b += own(r).copy())
         b.result()
     }
-    write(dir, rows)
+    write(unit, dir, rows)
   }
 
   /** The row's index — column 0 of the store schema — with NULL first. */
   private def indexKey(r: UnsafeRow): Long = if (r.isNullAt(0)) Long.MinValue else r.getLong(0)
 
-  private def write(dir: String, rows: Array[UnsafeRow]): Seq[Written] = {
+  private def write(unit: String, dir: String, rows: Array[UnsafeRow]): Seq[Written] = {
     java.util.Arrays.sort(rows, (a: UnsafeRow, b: UnsafeRow) => {
       val c = java.lang.Long.compare(indexKey(a), indexKey(b))
       if (c != 0) c else java.util.Arrays.compareUnsigned(a.getBytes, b.getBytes)
@@ -152,9 +149,10 @@ private[sources] final class MutationKernel(
     val id = java.util.UUID.randomUUID().toString
     runs.flatMap(r => if (mode == CompactExact) Seq(r) else r.grouped(chunk)).filter(_.nonEmpty)
       .zipWithIndex.map { case (rs, i) =>
-        val w = Written(dir, f"part-$i%05d-$id-c000.snappy.parquet")
-        SparkInternals.writeFile(writer, context, w.hidden, fileSchema, rs)
-        w
+        val name = f"part-$i%05d-$id-c000.snappy.parquet"
+        val path = new HPath(dir, name)
+        SparkInternals.writeFile(writer, context, path, fileSchema, rs)
+        Written(unit, name, path.getFileSystem(context.getConfiguration).getFileStatus(path).getLen)
       }
   }
 
@@ -202,7 +200,7 @@ private[sources] final class MutationKernel(
     val byUnit = batch.groupBy(_._1)
     val todo = byUnit.keySet ++ (if (rewritesUntouched) units.keySet else Set.empty)
     todo.toSeq.sorted.flatMap(u =>
-      run(dirOf(u), units.getOrElse(u, Nil), byUnit.getOrElse(u, Nil).iterator.map(_._2)))
+      run(u, dirOf(u), units.getOrElse(u, Nil), byUnit.getOrElse(u, Nil).iterator.map(_._2)))
   }
 
   /** The task placement. `batch` — `withBucket(conform(df))`: rows of
@@ -246,7 +244,7 @@ private[sources] final class MutationKernel(
         def same(r: InternalRow): Boolean = label(r) == l
         val u = unitOf(in.head, n, bucketCol)
         done += u
-        out ++= run(dirOf(u), units.getOrElse(u, Nil), new Iterator[InternalRow] {
+        out ++= run(u, dirOf(u), units.getOrElse(u, Nil), new Iterator[InternalRow] {
           def hasNext: Boolean = in.hasNext && same(in.head)
           def next(): InternalRow = in.next()
         })
@@ -254,7 +252,7 @@ private[sources] final class MutationKernel(
       }
       if (untouched) units.keys.toSeq.sorted
         .filter(u => partitionOf(u) == p && !done(u))
-        .foreach(u => out ++= run(dirOf(u), units(u), Iterator.empty))
+        .foreach(u => out ++= run(u, dirOf(u), units(u), Iterator.empty))
       out.result().iterator
     }.collect().toSeq
   }

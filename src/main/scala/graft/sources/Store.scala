@@ -28,14 +28,6 @@ class SchemaError(msg: String) extends IllegalArgumentException(msg)
   */
 class ItemExistsError(msg: String) extends IllegalArgumentException(msg)
 
-/** The item has pending crash-recovery markers in `.staging` — mutations
-  * are refused until [[Store!.vacuum]] finishes the interrupted op. A
-  * distinct type from [[ItemExistsError]] so an upsert-style
-  * `catch ItemExistsError → append` caller never converts
-  * "run vacuum() first" into an append attempt.
-  */
-class PendingRecoveryError(msg: String) extends IllegalStateException(msg)
-
 object Store {
 
   /** Reference key charset: `^[-a-zA-Z0-9_.]+\Z` (oakstore/store.py:28). */
@@ -68,6 +60,14 @@ object Store {
       bytes: Long,
       modifiedMs: Long
   )
+
+  /** A unit's data files: (path relative to the item dir, bytes). */
+  private[sources] type Entries = Seq[(String, Long)]
+
+  /** One version of item `key`: its manifest's name `v-<id>`, and each
+    * of its units with the name of that unit's manifest.
+    */
+  private[sources] final case class Version(key: String, id: String, units: Seq[(String, String)])
 
   /** Metadata-only item statistics (see [[Store.describe]]). */
   case class ItemStats(
@@ -335,8 +335,11 @@ object Store {
   private val SchemaFile = "schema.json"
   private val LayoutFile = "layout.json"
   private val ItemsDir = "items"
-  private val StagingDir = ".staging"
   private val VersionedMarker = "versioned"
+  /** Content of [[VersionedMarker]] in the layout this build reads and
+    * writes: versions are manifest files (see [[Store]]).
+    */
+  private val LayoutVintage = "2"
   private[sources] val CurrentPtr = "_current"
   private val LeaseDir = ".lease"
 
@@ -344,13 +347,14 @@ object Store {
     * plane op runs on the DRIVER (they orchestrate Spark jobs, they
     * don't run inside them), so one JVM is the natural mutual-exclusion
     * domain: serializing same-item mutations here closes the real
-    * single-driver races — a compact swap racing an append can strand
-    * the appended files in the swapped-out dir, and two appendNewOnly
-    * calls merging one batch concurrently would both write it. Different items lock independently, so
-    * parallel multi-item ingest keeps its concurrency. Writers in
-    * OTHER JVMs are outside this domain — for them the staging age
-    * guard ([[Store!.vacuum]]) is the (weaker, documented) protection;
-    * multi-driver coordination needs an external lock service.
+    * single-driver races — two commits built on one version would lose
+    * one's update, and two appendNewOnly calls merging one batch
+    * concurrently would both write it. Different items lock
+    * independently, so parallel multi-item ingest keeps its concurrency.
+    * [[Store!.vacuum]] only `tryLock`s them, skipping an item a mutation
+    * holds. Writers in OTHER JVMs are outside this domain — for them the
+    * writer lease ([[Store!.withLease]]) or vacuum's age guard is the
+    * protection.
     */
   private val itemLocks =
     new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.locks.ReentrantLock]()
@@ -359,52 +363,46 @@ object Store {
       base.toString + "#" + key,
       _ => new java.util.concurrent.locks.ReentrantLock())
 
-  /** Staging ids (the UUID suffix of `.tmp-`/`.old-`/`.swap-`/`.mid-`/
-    * `.del-` entries) of ops in flight IN THIS JVM. [[Store!.vacuum]]
-    * skips them unconditionally — unlike the age guard, this makes a
-    * force-sweep (`vacuum(0)`) safe against same-driver concurrent
-    * maintenance, not just old debris.
+  /** Ids (the UUID after `v-`) of staged CTAS versions written in THIS
+    * JVM and not yet committed or aborted ([[Store!.writeStagedVersion]]).
+    * [[Store!.vacuum]] marks every file such a version names, so even a
+    * force-sweep (`vacuum(0)`) keeps it; the age guard covers stagings
+    * in other JVMs.
     */
   private[sources] val activeStagingIds: java.util.Set[String] =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  /** Name prefix of what the store writes before renaming it into
-    * place: every data file [[MutationKernel]] writes, on the driver or
-    * in a task, and a local pointer or marker file ([[writeUTF8]]).
-    * Hidden, so no listing counts it.
+  /** Name prefix of the temp a local control-file write renames over its
+    * target ([[writeUTF8]]).
     */
   private[sources] val DriverTmpPrefix = ".graft-tmp-"
 
-  /** The output dir of a [[MutationKernel]] unit under version dir
-    * `root`: its bucket dir, or `root` itself for the unbucketed unit "".
+  /** The dir of unit `u`'s data files, relative to its item's dir:
+    * `data/<unit>`, or `data` for the unbucketed unit "".
     */
-  private[sources] def dirsUnder(root: HPath): String => String = {
-    val r = root.toString
-    u => if (u.isEmpty) r else s"$r/$u"
-  }
+  private[sources] def unitDir(u: String): String = if (u.isEmpty) "data" else s"data/$u"
 
-  /** Tags (base#KEY) of items with an IN-PLACE append running in this
-    * JVM ([[Store!.appendNewOnly]] — the one write into the LIVE data
-    * dir: its kernel leaves hidden [[DriverTmpPrefix]] files there
-    * until it lands them). [[Store!.vacuum]]'s hidden-file
-    * sweep (job 4) skips them unconditionally, same split as
-    * [[activeStagingIds]]: this set makes a force-sweep safe against
-    * same-driver concurrent appends, the age guard covers writers in
-    * other JVMs.
+  /** A manifest: a header `entries <n>`, then n `<a>\t<b>` lines, every
+    * line ending in a newline. A version manifest's lines are
+    * `<unit>\t<unit manifest name>`; a unit manifest's are
+    * `<bytes>\t<data file path relative to the item dir>`.
     */
-  private[graft] val activeInPlaceWrites: java.util.Set[String] =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  private[graft] def renderManifest(entries: Seq[(String, String)]): String =
+    (s"entries ${entries.size}" +: entries.map { case (a, b) => s"$a\t$b" })
+      .map(_ + "\n").mkString
 
-  private[graft] def inPlaceTag(base: HPath, key: String): String =
-    base.toString + "#" + key
-
-  /** The one list of staging-entry name tokens — [[stagingId]] (the
-    * in-flight guard) and `stagingEntries` (the mutation gate) must
-    * agree on it, or a marker kind added to one but not the other would
-    * silently escape that guard.
+  /** The entries of a manifest, or None when it is not whole: a header
+    * and exactly its count of tab-separated lines, each newline-ended. A
+    * create is visible before its close on HDFS, so a reader can meet a
+    * truncated one.
     */
-  private[sources] val MarkerTokens: Seq[String] =
-    Seq(".tmp-", ".old-", ".swap-", ".mid-", ".del-")
+  private[graft] def parseManifest(s: String): Option[Seq[(String, String)]] =
+    if (!s.endsWith("\n")) None
+    else {
+      val lines = s.stripSuffix("\n").split("\n", -1).toSeq
+      val entries = lines.drop(1).map(_.split("\t", 2)).collect { case Array(a, b) => (a, b) }
+      Option.when(lines.head == s"entries ${entries.size}" && entries.size == lines.size - 1)(entries)
+    }
 
   /** Rebuild a Hadoop Configuration from shipped driver entries — a
     * STATIC helper so executor closures capture only the entry Seq,
@@ -416,12 +414,6 @@ object Store {
     entries.foreach { case (k, v) => c.set(k, v) }
     c
   }
-
-  /** UUID suffix of a staging entry name, if it has one. */
-  private[sources] def stagingId(name: String): Option[String] =
-    MarkerTokens.iterator
-      .map(t => (t, name.indexOf(t)))
-      .collectFirst { case (t, i) if i >= 0 => name.substring(i + t.length) }
 
   /** Session conf pinned by [[open]] and guarded per write — see
     * [[Store!.requireMicrosTimestamps]]. */
@@ -473,16 +465,17 @@ object Store {
     * `basePath` is any Hadoop-FileSystem URI — `/local/dir`,
     * `file:/local/dir`, `hdfs://nn/warehouse/store`, `s3a://bucket/store`
     * — the control plane (schema/layout persistence, item listing,
-    * staging swaps, retention, vacuum) runs through
+    * manifests and commits, retention, vacuum) runs through
     * `org.apache.hadoop.fs.FileSystem` resolved from the path scheme, the
     * same abstraction the Spark data plane already uses, so a 100 TB
     * store can live on the object store next to its compute. This closes
     * the reference's own unmet TODO (cloud storage, store.py:86).
     *
     * `bucket` (None | "day" | "month" | "year") selects directory-level
-    * time partitioning: items are written one directory per bucket
-    * (`__bucket=<label>`) so range reads list only the in-range directories, before
-    * any file I/O — the at-scale complement of the reference's
+    * time partitioning: items are written one unit per bucket
+    * (`__bucket=<label>`, its files in one directory) so range reads open
+    * only the in-range units' manifests, before any file I/O — the
+    * at-scale complement of the reference's
     * row-group-stat pruning (store.py:255-264). Persisted and enforced
     * like the schema. Bucket strings are rendered in the session
     * timezone at write time and in the persisted store timezone at read
@@ -494,16 +487,16 @@ object Store {
     * 1 M-row sorted chunks (store.py:27, applied store.py:174) so
     * row-group min/max stats stay uniformly selective; same default.
     *
-    * Item layout: each item's data lives in immutable `v-<id>` version
-    * directories under `items/<KEY>/`, and the active one is named by a
-    * single `_current` pointer object. Rewrites (append/compact) write a
-    * fresh version and commit it with ONE pointer overwrite — a
-    * single-object PUT, atomic on every real object store — so no
-    * directory rename exists on the item-level write path and a crash
-    * at any point leaves readers on the old complete version (orphaned
-    * versions swept by [[Store!.vacuum]]). A store directory without
-    * the layout marker was written by the retired flat item layout and
-    * is refused with [[SchemaError]]; there is no migration.
+    * Item layout: an item's version is a manifest file under
+    * `items/<KEY>/`, and the current one is named by a single `_current`
+    * pointer object (see [[Store]]). Every mutation writes its data
+    * files and manifests, then commits with ONE pointer overwrite — a
+    * single-object PUT, atomic on every real object store — so nothing
+    * is ever renamed and a crash at any point leaves readers on the old
+    * complete version (files no version names are swept by
+    * [[Store!.vacuum]]). A store of an older item layout (the flat one,
+    * or versions as directories) is refused with [[SchemaError]]; there
+    * is no migration.
     *
     * `writerLease = true` additionally takes a cross-JVM lease file per
     * mutated item (exclusive create + TTL + steal-on-expiry, contract
@@ -595,7 +588,7 @@ object Store {
       )
       // schema.json last: it is what makes the directory a store, so a
       // crash before it leaves nothing a reopen would misread
-      writeUTF8(fs, new HPath(base, VersionedMarker), "1")
+      writeUTF8(fs, new HPath(base, VersionedMarker), LayoutVintage)
       bucket.foreach(b => writeUTF8(fs, layoutPath, s"$b\n$sessionTz"))
       writeUTF8(fs, schemaPath, schema.json)
       new Store(spark, base, schema, bucket, chunkRows, sessionTz, writerLease)
@@ -643,17 +636,26 @@ object Store {
     * rules can never diverge between the write-side and the read-only
     * entry points. A missing layout file means unbucketed; a missing
     * timezone line means the pre-tz vintage's hard-coded UTC invariant
-    * (NOT "skip the check"). A store without the `versioned` marker
-    * file was written by the retired flat item layout (item data
-    * directly in `items/<KEY>/`, no `_current` pointer): refused, so no
-    * read or write ever misreads its items as absent.
+    * (NOT "skip the check"). A store of an older item layout is refused,
+    * so no read or write ever misreads its items: without the
+    * `versioned` marker file it was written by the flat layout (item
+    * data directly in `items/<KEY>/`), and with marker content `1` by
+    * the layout whose versions were directories. There is no migration.
     */
   private def readLayout(fs: FileSystem, base: HPath): (Option[String], String) = {
-    if (!fs.exists(new HPath(base, VersionedMarker)))
+    val marker = new HPath(base, VersionedMarker)
+    if (!fs.exists(marker))
       throw new SchemaError(
         s"store at $base uses the flat item layout (no '$VersionedMarker' " +
           "marker), which this version no longer reads or writes; only " +
-          "the versioned `_current` layout is supported")
+          "the manifest layout is supported")
+    val vintage = readUTF8(fs, marker).trim
+    if (vintage != LayoutVintage)
+      throw new SchemaError(
+        s"store at $base uses item layout $VersionedMarker=$vintage (version " +
+          "directories), which this version no longer reads or writes; only " +
+          s"the manifest layout ($VersionedMarker=$LayoutVintage) is supported, " +
+          "and there is no migration")
     val layoutPath = new HPath(base, LayoutFile)
     val lines =
       if (fs.exists(layoutPath))
@@ -787,25 +789,22 @@ object Store {
     }
   }
 
-  /** All-or-nothing write of a pointer, marker or metadata file — the
-    * property the pointer commit and the swap protocol lean on. An
-    * object store gets one create-and-close: the object becomes visible
-    * at close. On the local filesystem, where a create truncates in
-    * place, the content goes to a hidden temp beside `p` (created
-    * through [[graft.sources.v2.NioLocalFileSystem]]: no `chmod` fork,
-    * no `.crc`) that is renamed over `p` — or, when `overwrite` is
-    * false, renamed only if `p` does not exist yet. Readers see
-    * the old content or the new, never a torn file. A `.crc` an older
-    * checksummed write left beside `p` is removed first (it would fail
-    * a checksummed reader of the new content); [[Store!.vacuum]] sweeps
-    * a temp a crash left.
+  /** All-or-nothing write of a pointer, manifest or metadata file — the
+    * property every commit leans on. An object store gets one
+    * create-and-close: the object becomes visible at close. On the local
+    * filesystem, where a create truncates in place, the content goes to a
+    * hidden temp beside `p` (created through
+    * [[graft.sources.v2.NioLocalFileSystem]]: no `chmod` fork, no `.crc`)
+    * that is renamed over `p` — or, when `overwrite` is false, renamed
+    * only if `p` does not exist yet. Readers see the old content or the
+    * new, never a torn file. A `.crc` an older checksummed write left
+    * beside `p` is removed first (it would fail a checksummed reader of
+    * the new content); [[Store!.vacuum]] sweeps a temp a crash left.
     */
   private[graft] def writeUTF8(
       fs: FileSystem, p: HPath, s: String, overwrite: Boolean = true): Unit = {
     val local = Option.when(fs.getScheme == "file")(graft.sources.v2.NioLocalFileSystem.shared)
-    val id = java.util.UUID.randomUUID().toString
-    val tmp = local.fold(p)(_ => new HPath(p.getParent, DriverTmpPrefix + id))
-    activeStagingIds.add(id)
+    val tmp = local.fold(p)(_ => new HPath(p.getParent, DriverTmpPrefix + java.util.UUID.randomUUID()))
     try {
       val out = local.getOrElse(fs).create(tmp, overwrite)
       try out.write(s.getBytes(StandardCharsets.UTF_8)) finally out.close()
@@ -815,27 +814,38 @@ object Store {
         if (overwrite) java.nio.file.Files.move(src, dst, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
         else java.nio.file.Files.move(src, dst)
       }
-    } finally {
-      local.foreach(l => java.nio.file.Files.deleteIfExists(l.pathToFile(tmp).toPath))
-      activeStagingIds.remove(id)
-    }
+    } finally local.foreach(l => java.nio.file.Files.deleteIfExists(l.pathToFile(tmp).toPath))
   }
 }
 
 /** A keyed, schema-enforced, append-only, time-partitioned Parquet store —
   * the reference's single abstraction (oakstore/store.py) re-expressed on
-  * Spark. Each item is a Parquet dataset directory under
-  * `items/<KEY>/<version>/`, the version named by `items/<KEY>/_current`;
-  * reads are lazy DataFrames; the time index is an ordinary TimestampType
-  * column used for range-partitioned writes and pushdown range queries.
+  * Spark. Reads are lazy DataFrames; the time index is an ordinary
+  * TimestampType column used for range-partitioned writes and pushdown
+  * range queries.
+  *
+  * On disk, under `items/<KEY>/` (manifest format at
+  * [[Store$.renderManifest]]):
+  *  - `_current` names the current version `v-<id>`;
+  *  - `v-<id>`, the version manifest, names one unit manifest per unit —
+  *    a bucket `__bucket=<label>`, or "" for an unbucketed item;
+  *  - `u-<id>`, a unit manifest, names the unit's data files with their
+  *    bytes;
+  *  - the data files live under `data/<unit>/`, written once under
+  *    unique names and never renamed.
+  *
+  * A read follows the pointer to the version manifest and opens only the
+  * in-range units' manifests ([[files]]); every mutation commits a new
+  * version by one pointer PUT ([[commit]]), so a reader sees the old
+  * version or the new one, never a mix.
   *
   * Scale posture: every mutation writes through one kernel per bucket
   * ([[MutationKernel]]: on the calling thread when small, in Spark tasks
   * otherwise, never through Spark's committer), rows sorted by the index
   * in files of at most [[chunkRows]] rows so Parquet row-group min/max
   * stats are selective (the reference's 1M-row sorted chunks,
-  * store.py:27,174); a read lists the item once ([[files]]: only
-  * the in-range bucket dirs) and scans exactly those files, with the
+  * store.py:27,174); a read resolves the item's files once ([[files]]:
+  * only the in-range units) and scans exactly those files, with the
   * `>=`/`<=` bounds pushed to Parquet row-group stats (store.py:255-264);
   * appends have an O(new)-write path instead of the reference's
   * O(history) rewrite (store.py:225-236). The control plane runs on
@@ -868,7 +878,6 @@ class Store private[sources] (
   private def bucketFmt: Option[String] = bucket.map(BucketFormats)
 
   private def itemsRoot: HPath = new HPath(base, ItemsDir)
-  private def stagingRoot: HPath = new HPath(base, StagingDir)
   private def leaseRoot: HPath = new HPath(base, LeaseDir)
 
   /** Columns whose footer min/max this engine trusts — the schema
@@ -1344,7 +1353,7 @@ class Store private[sources] (
     * under it every range query reads every row group of every surviving
     * file, and [[describe]] has no footer min/max. INT64 micros gives
     * both; there is no per-writer option for this (ParquetOptions only
-    * covers compression/rebase), so [[Store.open]] pins the session conf
+    * covers the codec and calendar modes), so [[Store.open]] pins the session conf
     * once and this guard re-checks it per write — a runtime-mutable conf
     * changed mid-session fails fast instead of landing stat-less files.
     * (A scoped set-and-restore swap per write is NOT safe: two
@@ -1365,146 +1374,58 @@ class Store private[sources] (
       )
   }
 
-  /** Recursive file listing, shaped per scheme:
-    *
-    *  - `file://`: a per-directory `listStatus` walk. Same round-trip
-    *    count as `fs.listFiles(p, true)` but WITHOUT materializing
-    *    `LocatedFileStatus` block locations, which on the local
-    *    filesystem cost a per-file metadata probe (measured ~6 ms each)
-    *    and carry nothing any caller here uses.
-    *  - everything else: `fs.listFiles(p, true)`, because object
-    *    stores implement it as ONE flat paged LIST over the key prefix
-    *    — a per-directory walk there would pay one round-trip per
-    *    bucket directory (10k buckets = 10k LISTs vs ~10 pages).
-    *
-    * With `rootMustExist` (default) a missing ROOT throws
-    * FileNotFoundException instead of reading as empty — "no such path"
-    * is not "empty item" (r16 ADVICE); callers walking a dir taken from
-    * a point-in-time listing, which a concurrent vacuum or compaction
-    * may delete, pass false. CHILDREN vanishing mid-walk are always
-    * tolerated (snapshot semantics). Strictness costs no round-trip.
-    */
-  private def walkFiles(
-      root: HPath,
-      rootMustExist: Boolean = true): Seq[org.apache.hadoop.fs.FileStatus] = {
-    val buf = Vector.newBuilder[org.apache.hadoop.fs.FileStatus]
-    if (base.toUri.getScheme == "file") {
-      // Every caller applies the Spark hidden-segment filter
-      // ([[hiddenName]]), so the walk never needs to ENTER a hidden
-      // directory — and must not: a concurrent
-      // committer's `_temporary/` task dirs appear and vanish mid-write,
-      // and RawLocalFileSystem surfaces a dir deleted between the parent
-      // listing and the child listStatus as an opaque
-      // IOException("Invalid directory or I/O error occurred") that no
-      // message-matching retry can own (found by the widened 25-seed
-      // concurrent-torture sweep: describe() in a maintenance thread
-      // died walking an appender's task dir). Visible dirs can vanish
-      // too (a concurrent prune/compactBuckets deleting a bucket dir),
-      // so any child that is GONE on recheck is treated as an empty
-      // subtree — the listing is a point-in-time snapshot and callers
-      // needing stronger consistency already retry; an I/O error on a
-      // dir that still EXISTS stays fatal.
-      def go(d: HPath, atRoot: Boolean): Unit = {
-        val swallow = !atRoot || !rootMustExist
-        val children =
-          try fs.listStatus(d)
-          catch {
-            case _: java.io.FileNotFoundException if swallow =>
-              Array.empty[org.apache.hadoop.fs.FileStatus]
-            case _: java.io.IOException if swallow && !fs.exists(d) =>
-              Array.empty[org.apache.hadoop.fs.FileStatus]
-          }
-        children.foreach { st =>
-          if (!st.isDirectory) buf += st
-          else if (!hiddenName(st.getPath.getName)) go(st.getPath, atRoot = false)
-        }
-      }
-      go(root, atRoot = true)
-    } else {
-      val it =
-        try fs.listFiles(root, true)
-        catch {
-          case e: java.io.FileNotFoundException =>
-            if (rootMustExist) throw e
-            else new org.apache.hadoop.fs.RemoteIterator[org.apache.hadoop.fs.LocatedFileStatus] {
-              def hasNext: Boolean = false
-              def next(): org.apache.hadoop.fs.LocatedFileStatus =
-                throw new java.util.NoSuchElementException
-            }
-        }
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.isFile) buf += st
-      }
-    }
-    buf.result()
-  }
-
-  /** Spark's hidden-path rule for one path segment — the rule its file
-    * index applies: `.`-prefixed is always hidden; `_`-prefixed is
-    * hidden UNLESS it is a partition segment (contains '='), which is
-    * how the `__bucket=...` dirs stay visible while committer
-    * `_temporary` dirs and `_SUCCESS` markers do not. The one
-    * definition every listing below shares.
-    */
-  private def hiddenName(n: String): Boolean =
-    n.startsWith(".") || (n.startsWith("_") && !n.contains("="))
-
-  /** Whether any segment of `f` BELOW `root` is hidden — hidden-ness
-    * applies to every segment, not just the file name: a concurrent
-    * write's in-flight task files live under a `_temporary/` DIRECTORY
-    * with ordinary file names, and a name-only filter would read
-    * uncommitted data.
-    */
-  private def hiddenBelow(root: HPath, f: HPath): Boolean =
-    f.toUri.getPath.stripPrefix(root.toUri.getPath).split('/').exists(hiddenName)
-
-  /** The `.parquet` files under `root` outside hidden segments: an
-    * in-flight committer's `_temporary` task payload is not
-    * data, and neither is a non-parquet file. Unless `rootMustExist`,
-    * the root may vanish (it comes from a point-in-time listing): then
-    * it holds nothing.
-    */
-  private def parquetUnder(
-      root: HPath, rootMustExist: Boolean = false): Seq[org.apache.hadoop.fs.FileStatus] =
-    walkFiles(root, rootMustExist).filter(st =>
-      st.isFile && st.getPath.getName.endsWith(".parquet") &&
-        !hiddenBelow(root, st.getPath))
-
   /** The item's `_current` pointer object. */
-  private def ptrPath(key: String): HPath =
-    new HPath(new HPath(itemsRoot, validateKey(key)), Store.CurrentPtr)
+  private def ptrPath(key: String): HPath = itemFile(validateKey(key), Store.CurrentPtr)
 
-  /** The active version id named by the pointer. */
-  private def currentVersion(key: String): String = {
+  /** `name` directly under the dir of item `k` (a validated key). */
+  private def itemFile(k: String, name: String): HPath =
+    new HPath(new HPath(itemsRoot, k), name)
+
+  /** Manifest `name` of item `k`: None when it is absent or not whole. */
+  private def readManifest(k: String, name: String): Option[Seq[(String, String)]] =
+    if (name.isEmpty) None
+    else try parseManifest(readUTF8(fs, itemFile(k, name)))
+    catch { case _: java.io.FileNotFoundException => None }
+
+  /** The data files unit manifest `name` of item `k` names: (path
+    * relative to the item dir, bytes). A missing one throws
+    * FileNotFoundException — a commit deleted it after the reader
+    * resolved its version ([[retryVanished]] retakes the read).
+    */
+  private def entriesOf(k: String, name: String): Entries =
+    parseManifest(readUTF8(fs, itemFile(k, name))).getOrElse(
+      throw new java.io.IOException(s"item $k: unit manifest $name is not whole"))
+      .map { case (len, rel) => (rel, len.toLong) }
+
+  /** The current version of `key`: the `_current` pointer and the
+    * version manifest it names. A commit can move the pointer on, and
+    * delete the manifest it named, between the two reads; and where a
+    * create is visible before its close (HDFS), a reader can meet the
+    * pointer half-written. Either way the pointer is read again, a few
+    * times over about 150 ms.
+    */
+  private def current(key: String): Version = {
     val k = validateKey(key)
-    val ptr = ptrPath(k)
-    if (!fs.exists(ptr)) throw new ItemKeyError(s"no such item: $k")
-    // a commit can move the pointer on, and delete the version it named,
-    // between the read and the check: re-read while the pointer moves
-    def resolve(v: String, moves: Int): String =
-      if (v.nonEmpty && fs.exists(new HPath(new HPath(itemsRoot, k), v))) v
-      else {
-        val again = readUTF8(fs, ptr).trim
-        // a torn pointer (empty, or naming a vanished dir) would
-        // otherwise surface as a baffling FileNotFound deep inside a
-        // scan; fail actionably instead — vacuum() repairs the pointer
-        // to the newest complete version
-        if (again == v || moves >= 5)
+    def pointer(): String =
+      try readUTF8(fs, ptrPath(k)).trim
+      catch { case _: java.io.FileNotFoundException => throw new ItemKeyError(s"no such item: $k") }
+    def resolve(v: String, tries: Int): Version =
+      readManifest(k, v) match {
+        case Some(units) => Version(k, v, units)
+        // a torn pointer (empty, or naming a missing or partial
+        // manifest) would otherwise surface as a baffling error deep
+        // inside a scan; fail actionably instead — vacuum() repairs the
+        // pointer to the newest complete version
+        case None if tries >= 8 =>
           throw new java.io.IOException(
             s"item $k: version pointer is torn or dangling " +
               s"('$v'); run vacuum() to repair it to the newest complete version")
-        resolve(again, moves + 1)
+        case None =>
+          Thread.sleep(5L * tries)
+          resolve(pointer(), tries + 1)
       }
-    resolve(readUTF8(fs, ptr).trim, 0)
+    resolve(pointer(), 0)
   }
-
-  /** The directory holding an item's live DATA — the `_current`-named
-    * version dir; [[ItemKeyError]] when the item does not exist. Every
-    * read/append/describe resolves through here.
-    */
-  private def dataPath(key: String): HPath =
-    new HPath(new HPath(itemsRoot, validateKey(key)), currentVersion(key))
 
   /** Reference `_validate_key` (store.py:183-194): regex-check, then
     * case-fold to upper for the on-disk directory name.
@@ -1525,33 +1446,29 @@ class Store private[sources] (
       .filter(p => fs.exists(new HPath(p, Store.CurrentPtr)))
       .map(_.getName).toVector.sorted
 
-  /** The PRESENT versions of an item — the current one, plus
-    * any orphans a crashed swap left behind (a completed swap deletes
-    * its predecessor right after the pointer commit, so extras exist
-    * only between a crash and the next [[vacuum]]). Maintenance
+  /** The PRESENT versions of an item — the current one, plus any
+    * orphans a crashed commit left behind (a completed commit deletes
+    * its predecessor's manifest right after the pointer PUT, so extras
+    * exist only between a crash and the next [[vacuum]]). Maintenance
     * visibility: an operator can see exactly what `vacuum(0)` would
-    * reclaim, and a post-incident read can open a listed orphan as raw
-    * parquet (`spark.read.parquet(<item>/<version>)`) before sweeping
-    * it. Metadata-only (one listing per version dir). External readers
-    * (pyarrow, DuckDB) find the live data the same way: the current
-    * entry's id names `items/<KEY>/<id>/`.
+    * reclaim. Metadata-only: one listing of the item dir for its version
+    * manifests, then each version's unit manifests (a unit manifest a
+    * later commit deleted counts nothing). External readers (pyarrow,
+    * DuckDB) find the live data the same way: `_current` names the
+    * version manifest, whose unit manifests name the data files.
     */
   def versionsOf(key: String): Seq[Store.ItemVersion] = {
-    val k = validateKey(key)
-    val cur = currentVersion(k) // throws ItemKeyError when absent
-    val itemDir = new HPath(itemsRoot, k)
-    fs.listStatus(itemDir).toIndexedSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("v-"))
-      .map { st =>
-        // the version dir comes from a point-in-time listing a
-        // concurrent vacuum can invalidate: parquetUnder's root is tolerant
-        val files = parquetUnder(st.getPath)
-        Store.ItemVersion(
-          id = st.getPath.getName,
-          current = st.getPath.getName == cur,
-          files = files.size.toLong,
-          bytes = files.map(_.getLen).sum,
-          modifiedMs = st.getModificationTime)
+    val cur = current(key) // throws ItemKeyError when absent
+    val k = cur.key
+    fs.listStatus(new HPath(itemsRoot, k)).toIndexedSeq
+      .filter(st => st.isFile && st.getPath.getName.startsWith("v-"))
+      .flatMap { st =>
+        val id = st.getPath.getName
+        readManifest(k, id).map { units =>
+          val files = units.flatMap { case (_, m) => readManifest(k, m).getOrElse(Nil) }
+          Store.ItemVersion(id = id, current = id == cur.id, files = files.size.toLong,
+            bytes = files.map(_._1.toLong).sum, modifiedMs = st.getModificationTime)
+        }
       }
       .sortBy(v => (!v.current, -v.modifiedMs))
   }
@@ -1561,7 +1478,7 @@ class Store private[sources] (
     * + column min/max statistics), never the data pages. On a 100 TB
     * item this is O(files) footer reads instead of a full scan, through
     * the one footer sweep ([[sweepFooters]]: driver threads for small
-    * file sets, executors past that) after one listing. The index column
+    * file sets, executors past that) after one [[files]] read. The index column
     * is written as INT64 TIMESTAMP(micros) ([[requireMicrosTimestamps]]
     * guards every write), so footer min/max are epoch-µs longs, merged over the
     * row groups that carry stats.
@@ -1573,7 +1490,7 @@ class Store private[sources] (
   def describe(key: String): Store.ItemStats = {
     val listed = files(key)
     val idx = indexName
-    // a file a concurrent compact swapped out since the listing
+    // a file a concurrent commit deleted since the read of its manifest
     // contributes nothing: describe is a point-in-time snapshot
     val (perFile, _) = sweepFooters(listed, Seq(idx), Set(idx))
     val ranges = perFile.flatMap(_.minMaxByCol.get(idx))
@@ -1588,17 +1505,17 @@ class Store private[sources] (
 
   /** THE listing of an item's data: every read of item data takes its
     * files from here, and every scan is built over exactly this list
-    * ([[SparkInternals]] hands Spark the statuses). It resolves the
-    * `_current` pointer once, lists the bucket dirs whose label falls in
-    * the inclusive range [start, end] — all of them when unbounded, the
-    * version dir on an unbucketed store — and keeps the `.parquet` files
-    * outside hidden segments, sorted by path. Labels are rendered under
-    * the PERSISTED store timezone ([[bucketLabel]]); no per-file
-    * round-trip. A listing a concurrent landing rename, compaction or
-    * prune invalidates is retaken ([[retryVanished]]). When readers take their
-    * files from a manifest instead, this body is what changes.
+    * ([[SparkInternals]] hands Spark the statuses). It follows the
+    * `_current` pointer to the version manifest, reads the unit manifests
+    * of the bucket units whose label falls in the inclusive range
+    * [start, end] — all of them when unbounded, the one unit of an
+    * unbucketed store — and returns their data files, sorted by path. No
+    * data dir is listed. Labels are rendered under the PERSISTED store
+    * timezone ([[bucketLabel]]). A read that a concurrent commit
+    * invalidates (it deletes the manifests it replaced) is retaken
+    * ([[retryVanished]]).
     */
-  private[sources] def files(
+  private[graft] def files(
       key: String,
       start: Option[Timestamp] = None,
       end: Option[Timestamp] = None): Seq[FileStatus] =
@@ -1607,27 +1524,35 @@ class Store private[sources] (
       (b: String) => lo.forall(b >= _) && hi.forall(b <= _)
     })
 
-  /** [[files]] of the bucket dirs whose label passes `keep` (every bucket
-    * dir when None; the whole version dir on an unbucketed store). A data
-    * file of a bucketed item lies directly inside a bucket dir.
+  /** [[files]] of the bucket units whose label passes `keep` (every unit
+    * when None; the one unit of an unbucketed store).
     */
   private def filesWhere(key: String, keep: Option[String => Boolean]): Seq[FileStatus] =
     retryVanished {
-      val p = dataPath(key)
-      val listed = keep match {
-        case Some(k) if bucket.isDefined => bucketDirs(p)(k).flatMap(parquetUnder(_))
-        // the version dir was just resolved: vanishing is a concurrent
-        // swap, retaken above, never an empty item
-        case _ => parquetUnder(p, rootMustExist = true)
-      }
-      listed.filter(st => bucket.isEmpty || st.getPath.getParent.getName.startsWith(BucketCol + "="))
-        .sortBy(_.getPath.toString)
+      val v = current(key)
+      val unit = keep.filter(_ => bucket.isDefined).fold((_: String) => true)(k => u => k(labelOf(u)))
+      statuses(v.key, unitsOf(v, unit))
     }
 
+  /** The units of version `v` that pass `keep`, each with its files. */
+  private def unitsOf(v: Version, keep: String => Boolean): Seq[(String, Entries)] =
+    v.units.collect { case (u, m) if keep(u) => u -> entriesOf(v.key, m) }
+
+  /** The bucket label of unit `u` (the unit itself on an unbucketed store). */
+  private def labelOf(u: String): String = u.stripPrefix(BucketCol + "=")
+
+  /** `FileStatus`es of the files of item `k`'s `units`, sorted by path. */
+  private def statuses(k: String, units: Seq[(String, Entries)]): Seq[FileStatus] = {
+    val dir = new HPath(itemsRoot, k)
+    val blockSize = fs.getDefaultBlockSize(dir)
+    units.flatMap(_._2).map { case (rel, len) =>
+      new FileStatus(len, false, 1, blockSize, 0L, new HPath(dir, rel)) }.sortBy(_.getPath.toString)
+  }
+
   /** Runs `body`, retaking it (at most 5 more times) while it fails
-    * because a path it listed vanished under it — a concurrent landing
-    * rename, compaction or prune; the last failure is
-    * rethrown (a persistent one is a real one).
+    * because a file it resolved vanished under it — a manifest or data
+    * file a concurrent commit deleted after replacing it; the last
+    * failure is rethrown (a persistent one is a real one).
     */
   private def retryVanished[T](body: => T): T = {
     // "vanished" shows up as FileNotFoundException on most FileSystems,
@@ -1663,7 +1588,7 @@ class Store private[sources] (
     * [[Store$.readFooter]], a HEAD+ranged-GET on object stores). A larger set fans out over
     * executors so 100k footers never funnel through one machine.
     *
-    * A file that vanished since the listing (a concurrent swap) is
+    * A file that vanished since the listing (a concurrent commit deleted it) is
     * returned in the second element rather than thrown: [[describe]],
     * a point-in-time snapshot, counts it as nothing; callers whose
     * answer must be exact refuse through [[footersOrRefuse]].
@@ -1876,44 +1801,36 @@ class Store private[sources] (
 
   /** Initial write — CREATE TABLE AS (reference `_write`,
     * store.py:196-212): fails with [[ItemExistsError]] if the item
-    * exists; writes the conformed rows as snappy Parquet into a fresh
-    * version ([[writeVersion]]) and commits it with the pointer PUT.
+    * exists; writes the conformed rows as snappy Parquet, then the first
+    * version's manifests, and commits it by creating the pointer.
     */
   def write(key: String, df: DataFrame): Unit = withItemLock(key) {
     val k = validateKey(key)
     if (exists(k))
       throw new ItemExistsError(s"item $k already exists; use append")
-    requireNoPendingMarkers(k)
-    val id = "v-" + java.util.UUID.randomUUID().toString
-    // register the version id like versionSwap does: before the
-    // pointer exists every v-dir looks like an orphan, and a
-    // concurrent same-JVM vacuum(0) must not sweep the one being
-    // written this instant
-    Store.activeStagingIds.add(id.stripPrefix("v-"))
-    try {
-      writeVersion(new HPath(new HPath(itemsRoot, k), id), MutationKernel.Write, Some(df), _ => Nil)
-      // overwrite=false: the loser of a cross-JVM create race fails
-      // here — first pointer wins
-      writeUTF8(fs, ptrPath(k), id, overwrite = false)
-    } finally Store.activeStagingIds.remove(id.stripPrefix("v-"))
+    val id = newVersionId()
+    writeVersion(k, id, Nil, freshUnits(mutate(k, MutationKernel.Write, Some(df), _ => Nil)._2))
+    // overwrite=false: the loser of a cross-JVM create race fails
+    // here — first pointer wins
+    writeUTF8(fs, ptrPath(k), id, overwrite = false)
   }
 
-  /** CTAS staging, step 1 of 2: write a COMPLETE version directory
-    * for a not-yet-existing item WITHOUT its pointer. The item stays
-    * invisible — the pointer IS existence — so a crash at any later
-    * point before [[commitStagedVersion]] leaves only an orphan v-dir
-    * for vacuum's sweep, never a visible partial item. The returned id
-    * stays registered against same-JVM vacuum(0) until the
+  /** CTAS staging, step 1 of 2: write a COMPLETE version (data files
+    * and manifests) for a not-yet-existing item WITHOUT its pointer.
+    * The item stays invisible — the pointer IS existence — so a crash at
+    * any later point before [[commitStagedVersion]] leaves only files no
+    * pointer names for vacuum's sweep, never a visible partial item. The
+    * returned id stays registered against same-JVM vacuum(0) until the
     * commit/abort that balances this call.
     */
   def writeStagedVersion(key: String, df: DataFrame): String = withItemLock(key) {
     val k = validateKey(key)
     if (exists(k))
       throw new ItemExistsError(s"item $k already exists; use append")
-    val id = "v-" + java.util.UUID.randomUUID().toString
+    val id = newVersionId()
     Store.activeStagingIds.add(id.stripPrefix("v-"))
     try {
-      writeVersion(new HPath(new HPath(itemsRoot, k), id), MutationKernel.Write, Some(df), _ => Nil)
+      writeVersion(k, id, Nil, freshUnits(mutate(k, MutationKernel.Write, Some(df), _ => Nil)._2))
       id
     } catch {
       case t: Throwable =>
@@ -1927,92 +1844,54 @@ class Store private[sources] (
     * the loser of a cross-JVM create race fail exactly like an
     * errorifexists write (first pointer wins).
     *
-    * The staged dir is re-verified (dir + `_SUCCESS`, which
-    * [[writeVersion]] writes last) immediately before the PUT: the
+    * The staged version is re-verified (its manifest and every unit
+    * manifest it names are whole) immediately before the PUT: the
     * activeStagingIds vacuum guard is same-JVM only, so a vacuum in
     * ANOTHER process whose retention is shorter than this CTAS's insert
-    * phase may have swept the pointer-less v-dir as an orphan —
-    * committing blind would publish a visible item whose version dir is
-    * gone. Failing the CTAS here is the correct outcome (the statement
-    * reruns); the residual TOCTOU window between this check and the PUT
-    * is the same one versionSwap documents: cross-process vacuum
-    * retention MUST exceed the longest in-flight mutation.
+    * phase may have swept the pointer-less version as debris —
+    * committing blind would publish a visible item whose files are gone.
+    * Failing the CTAS here is the correct outcome (the statement reruns);
+    * the residual window between this check and the PUT is why
+    * cross-process vacuum retention MUST exceed the longest in-flight
+    * mutation.
     */
   def commitStagedVersion(key: String, id: String): Unit = withItemLock(key) {
     val k = validateKey(key)
     try {
-      val vdir = new HPath(new HPath(itemsRoot, k), id)
-      if (!fs.exists(vdir))
+      if (namedBy(k, id).isEmpty)
         throw new IllegalStateException(
-          s"staged version $id for item $k is gone " +
-            "(swept by a concurrent vacuum with retention shorter than " +
-            "the CTAS insert?); the CTAS must be rerun")
-      if (!fs.exists(new HPath(vdir, "_SUCCESS")))
-        throw new IllegalStateException(
-          s"staged version $id for item $k exists but has no _SUCCESS " +
-            "marker — the staged write is incomplete; the CTAS must be rerun")
-      Store.writeUTF8(fs, ptrPath(k), id, overwrite = false)
+          s"staged version $id for item $k is gone or incomplete (swept by a " +
+            "concurrent vacuum with retention shorter than the CTAS insert?); " +
+            "the CTAS must be rerun")
+      writeUTF8(fs, ptrPath(k), id, overwrite = false)
     } finally Store.activeStagingIds.remove(id.stripPrefix("v-"))
   }
 
-  /** CTAS staging abort: delete the orphan version dir. Best-effort —
-    * anything left behind is invisible and vacuum-swept.
+  /** CTAS staging abort: delete what the staged version names.
+    * Best-effort — anything left behind is invisible and vacuum-swept.
     */
   def abortStagedVersion(key: String, id: String): Unit = withItemLock(key) {
     val k = validateKey(key)
-    try fs.delete(new HPath(new HPath(itemsRoot, k), id), true)
+    try namedBy(k, id).foreach(deleteFiles(k, _))
     finally Store.activeStagingIds.remove(id.stripPrefix("v-"))
   }
 
-  /** Staging entries (markers + staged dirs) belonging to `key`,
-    * matched EXACTLY: the entry name must be `<KEY><token><id>` for one
-    * of the marker tokens — a bare `startsWith(key + ".")` would let
-    * key "A" claim key "A.B"'s entries (dots are legal in keys). The
-    * tokens themselves are lowercase while on-disk keys are uppercased,
-    * so a token can never occur inside a key.
+  /** Every file version `id` of item `k` names — its manifest, its unit
+    * manifests and their data files, relative to the item dir — or None
+    * when the version is not complete: a manifest missing or not whole.
     */
-  private def stagingEntries(key: String): Seq[HPath] = {
-    val k = validateKey(key)
-    if (!fs.exists(stagingRoot)) Seq.empty
-    else fs.listStatus(stagingRoot).iterator.map(_.getPath)
-      .filter { p =>
-        val n = p.getName
-        Store.MarkerTokens.exists(t => n.startsWith(k + t))
-      }
-      .toSeq
-  }
-
-  /** The mutation gate shared by every writer entry point: an item
-    * whose crash RECOVERY MARKERS (`.swap-`/`.mid-`/`.del-`) still pend
-    * is in a HALF-MOVED state — an append could merge against the
-    * partial live dir and re-insert rows whose only copy sits in trash
-    * (duplicated on restore), and a rewrite would make the marker
-    * manifests ambiguous. Recovery's correctness rests on mutations
-    * being refused until [[vacuum]] finishes the interrupted op.
-    *
-    * Deliberately NARROWER than [[stagingEntries]]: a markerless
-    * `.tmp-`/`.old-` orphan is NOT a half-moved state — the protocol
-    * creates the swap marker before the first rename and deletes it
-    * only after the live dir is whole again, so an orphan without its
-    * marker means the live dir was never touched (a crash inside
-    * writeTmp, or debris whose op completed). Blocking on those wedged
-    * every later mutation behind one transient job failure until
-    * vacuum's age guard; now they are just storage debris for vacuum's
-    * orphan sweep.
-    */
-  private def requireNoPendingMarkers(key: String): Unit = {
-    val k = validateKey(key)
-    val recovery = Seq(".swap-", ".mid-", ".del-")
-    val pending = stagingEntries(k).filter { p =>
-      val n = p.getName
-      recovery.exists(t => n.startsWith(k + t))
+  private def namedBy(k: String, id: String): Option[Set[String]] =
+    readManifest(k, id).flatMap { units =>
+      val parts = units.map { case (_, m) => readManifest(k, m).map(m +: _.map(_._2)) }
+      Option.when(parts.forall(_.isDefined))(parts.flatMap(_.get).toSet + id)
     }
-    if (pending.nonEmpty)
-      throw new PendingRecoveryError(
-        s"item $k has pending crash-recovery state in .staging " +
-          "(an interrupted compactBuckets/prune); run vacuum() " +
-          "first — vacuum(0) if no other writer can be live")
-  }
+
+  /** Deletes `rels` (paths relative to item `k`'s dir), best effort:
+    * whatever a failure leaves is vacuum's.
+    */
+  private def deleteFiles(k: String, rels: Iterable[String]): Unit =
+    rels.foreach(r =>
+      try fs.delete(itemFile(k, r), false) catch { case scala.util.control.NonFatal(_) => () })
 
   /** Full scan of one item (reference `_Item`, store.py:49-71): the
     * item is listed once when this is called ([[files]]) and the
@@ -2023,9 +1902,9 @@ class Store private[sources] (
     *
     * `Dataset.inputFiles` of this frame (and of any Store frame not read
     * on the driver) is empty: Spark collects a DSv2 table's files only
-    * for its own file tables. To find an item's files, take the current
-    * entry of [[versionsOf]] and list `items/<KEY>/<id>/`, as an
-    * external reader does.
+    * for its own file tables. To find an item's files, follow `_current`
+    * to its version manifest and that to the unit manifests, as an
+    * external reader does (see [[Store]]).
     */
   def apply(key: String): DataFrame = pinnedFrame(key, files(key))
 
@@ -2063,11 +1942,12 @@ class Store private[sources] (
 
   /** Exact reference append semantics (`_append`, store.py:214-236):
     * union old+new, drop full-row duplicates with old rows winning
-    * (`keep='first'`, store.py:230), rewrite atomically as a fresh
-    * version ([[versionSwap]]). O(history) per append — kept for
-    * small/compat use; the scalable path is [[appendNewOnly]]. Every
-    * bucket is merged by [[MutationKernel]] ([[mutate]]: on the calling
-    * thread or in tasks): one file per bucket, split at [[chunkRows]].
+    * (`keep='first'`, store.py:230), rewrite every unit and commit the
+    * result as a fresh version ([[commit]]). O(history) per append —
+    * kept for small/compat use; the scalable path is [[appendNewOnly]].
+    * Every bucket is merged by [[MutationKernel]] ([[mutate]]: on the
+    * calling thread or in tasks): one file per bucket, split at
+    * [[chunkRows]].
     *
     * Documented divergence: the dedup key here is the FULL row including
     * the time index; the reference dedups on value columns only (its
@@ -2079,72 +1959,14 @@ class Store private[sources] (
   def append(key: String, df: DataFrame): Unit = withItemLock(key) {
     requireAppendable(key)
     requireGroupable(df)
-    val k = validateKey(key)
-    versionSwap(k)(v => writeVersion(v, MutationKernel.Append, Some(df), _ => files(k)))
+    rewrite(validateKey(key), MutationKernel.Append, Some(df))
   }
 
-  private def requireAppendable(key: String): Unit = {
+  private def requireAppendable(key: String): Unit =
     if (!exists(key))
       throw new ItemKeyError(
         s"item ${validateKey(key)} does not exist; write it first"
       )
-    requireNoPendingMarkers(key)
-  }
-
-  /** Recursive (relative-path, byte-length) listing of `p` — the
-    * manifest a staging marker records. Why it matters: on a raw object
-    * store a directory "rename" is a per-object copy followed by a
-    * per-object delete, so a crash can leave BOTH endpoints partial-
-    * looking — but copy-before-delete guarantees exactly one side is
-    * COMPLETE at every crash point. The manifest is how [[vacuum]]
-    * tells which: a directory equal to its manifest is intact, a strict
-    * subset is partially moved (restorable from the other side), and a
-    * directory holding files OUTSIDE the manifest was re-created by a
-    * later writer (parquet part names carry fresh UUIDs, so distinct
-    * writes can never alias) and must not be touched. Metadata-only:
-    * one recursive LIST, no data reads.
-    */
-  private def manifestOf(p: HPath): Set[(String, Long)] =
-    if (!fs.exists(p)) Set.empty
-    else {
-      val root = p.toUri.getPath
-      val b = Set.newBuilder[(String, Long)]
-      // the exists() guard above can race a concurrent remover; absent
-      // then = absent now = empty manifest, so the root stays tolerant
-      walkFiles(p, rootMustExist = false).foreach { f =>
-        // DATA files only: Spark-hidden entries ([[hiddenName]]) are
-        // excluded — `_SUCCESS` is a constant-name zero-length file
-        // present in every parquet dir of every incarnation, so
-        // including it would alias across unrelated writes and defeat
-        // the "manifests of distinct writes never intersect" property
-        if (!hiddenBelow(p, f.getPath))
-          b += ((f.getPath.toUri.getPath.stripPrefix(root).stripPrefix("/"), f.getLen))
-      }
-      b.result()
-    }
-
-  /** Marker wire format: line 1 the absolute path the marker is about,
-    * then one `<bytes>\t<relative path>` line per file. Marker content
-    * from older vintages (a bare note, or nothing) parses as an empty
-    * manifest, downgrading recovery to the manifest-less protocol.
-    */
-  private def renderMarker(about: HPath, manifest: Set[(String, Long)]): String =
-    (about.toString +: manifest.toSeq.sorted.map { case (r, l) => s"$l\t$r" })
-      .mkString("\n")
-
-  private def parseMarker(s: String): (Option[HPath], Set[(String, Long)]) = {
-    val lines = s.split("\n").toVector
-    val about = lines.headOption
-      .filter(l => l.contains("/") && !l.contains("\t"))
-      .map(new HPath(_))
-    val man = lines.drop(1).iterator.flatMap { line =>
-      val i = line.indexOf('\t')
-      if (i <= 0) None
-      else scala.util.Try(
-        (line.substring(i + 1), line.substring(0, i).toLong)).toOption
-    }.toSet
-    (about, man)
-  }
 
   /** The driver session's effective Hadoop conf as plain entries, for
     * shipping to executor-side metadata readers: a bare
@@ -2160,150 +1982,62 @@ class Store private[sources] (
       .toVector
   }
 
-  /** Re-base a marker-recorded absolute path against THIS store's items
-    * root. Markers record the swapped/doomed dir at write time; a store
-    * relocated between crash and recovery (backup restored elsewhere,
-    * mount point moved) must recover into its CURRENT location, not the
-    * recorded one. The suffix below the last `/items/` segment
-    * identifies the dir in any location (keys are uppercased and marker
-    * tokens lowercase, so the literal lowercase segment can only be the
-    * layout's own). Paths without one are kept as recorded.
-    */
-  private def rebase(recorded: HPath): HPath = {
-    val s = recorded.toUri.getPath
-    val i = s.lastIndexOf("/items/")
-    val rel = if (i < 0) "" else s.substring(i + "/items/".length)
-    if (rel.isEmpty) recorded else new HPath(itemsRoot, rel)
-  }
+  /** A fresh version manifest name. */
+  private def newVersionId(): String = "v-" + java.util.UUID.randomUUID()
 
-  /** Idempotent per-file restore: copy every `expected` file that is
-    * absent from (or size-mismatched in) `dst` over from `src`.
-    * Re-runnable after any crash point — completeness is judged per
-    * file against the manifest, never by whether some move "finished".
+  /** The files [[mutate]] wrote, per unit, as manifest entries. */
+  private def freshUnits(written: Seq[Written]): Map[String, Entries] =
+    written.groupBy(_.unit).map { case (u, ws) =>
+      u -> ws.map(w => (s"${unitDir(u)}/${w.name}", w.len)) }
+
+  /** Writes version manifest `id` of item `k`: a unit manifest for each
+    * unit of `fresh` that has files, and the version manifest naming
+    * them and the unit manifests `carried` over unchanged. Nothing is
+    * visible until a pointer names `id`.
     */
-  private def copyMissing(
-      src: HPath, dst: HPath, expected: Set[(String, Long)]): Unit =
-    expected.foreach { case (rel, len) =>
-      val d = new HPath(dst, rel)
-      val ok = fs.exists(d) && fs.getFileStatus(d).getLen == len
-      if (!ok) {
-        val in = fs.open(new HPath(src, rel))
-        val out = fs.create(d, true)
-        org.apache.hadoop.io.IOUtils.copyBytes(in, out, 65536, true)
-      }
+  private def writeVersion(
+      k: String, id: String, carried: Seq[(String, String)], fresh: Map[String, Entries]): Unit = {
+    val units = carried ++ fresh.toSeq.filter(_._2.nonEmpty).map { case (u, es) =>
+      val m = "u-" + java.util.UUID.randomUUID()
+      writeUTF8(fs, itemFile(k, m), renderManifest(es.sortBy(_._1).map { case (r, l) => (l.toString, r) }))
+      u -> m
     }
-
-  /** Item-level rewrite ([[append]], [[compact]]): write a fresh
-    * immutable version dir (`fill`, handed its path — [[writeVersion]],
-    * which leaves a `_SUCCESS` marker there last), commit it by
-    * overwriting the `_current`
-    * pointer — ONE single-object PUT, atomic on every real object store,
-    * no directory rename anywhere — then best-effort delete the
-    * superseded version (a crash before the delete leaves an invisible
-    * orphan for [[vacuum]]). A crash before the pointer write leaves
-    * readers on the old complete version; there is no intermediate
-    * state at all.
-    */
-  private def versionSwap(key: String)(fill: HPath => Unit): Unit = {
-    val k = validateKey(key)
-    val old = currentVersion(k)
-    val id = "v-" + java.util.UUID.randomUUID().toString
-    Store.activeStagingIds.add(id.stripPrefix("v-"))
-    try {
-      fill(new HPath(new HPath(itemsRoot, k), id))
-      writeUTF8(fs, ptrPath(k), id) // the commit point
-      fs.delete(new HPath(new HPath(itemsRoot, k), old), true)
-    } finally Store.activeStagingIds.remove(id.stripPrefix("v-"))
+    writeUTF8(fs, itemFile(k, id), renderManifest(units.sortBy(_._1)))
   }
 
-  /** Replace bucket dir `p` (inside the current version) with what
-    * `writeTmp` materializes, crash-safely, through the FileSystem
-    * abstraction — the in-place rewrite of [[compactBuckets]], which
-    * must not copy the item's other buckets into a fresh version. It
-    * stages OUTSIDE items/ so a half-written directory is never visible
-    * to readers, with a two-marker commit protocol:
-    *
-    *  1. write new data to `.staging/KEY.tmp-ID` (`writeTmp`, run
-    *     INSIDE the in-flight id guard so a concurrent force-vacuum
-    *     never sweeps a tmp mid-write)
-    *  2. create marker `.staging/KEY.swap-ID`   (intent recorded)
-    *  3. rename live -> `.staging/KEY.old-ID`
-    *  4. create marker `.staging/KEY.mid-ID`    (old data is out)
-    *  5. rename tmp -> live
-    *  6. delete old dir, then both markers
-    *
-    * A crash at any point between steps is recoverable by [[vacuum]]
-    * from the marker pair: `swap` without `mid` → the swap never
-    * committed → roll BACK; `swap`+`mid` → the old data is already out
-    * → roll FORWARD (promote tmp, drop old). Marker names encode
-    * key+ID; marker CONTENT records `p` (line 1, so recovery targets the
-    * swapped bucket, never its siblings) and a file manifest — the swap
-    * marker lists the old live dir, the mid marker the staged tmp
-    * ([[manifestOf]]) — and marker creation is a single
-    * create-and-close, visible atomically on object stores too.
-    *
-    * Atomicity fine print: on HDFS/file: the renames themselves are
-    * atomic, so marker-pair recovery alone covers every crash point.
-    * On raw object stores (s3a:) a directory "rename" is a per-object
-    * copy+delete, and a crash INSIDE step 3/5 leaves a split directory
-    * — this is where the manifests close the protocol: copy-before-
-    * delete guarantees one complete side at every crash point, and
-    * recovery restores or resumes per file against the manifest
-    * (roll-back refills a partially-moved live dir from the complete
-    * trash copy; roll-forward resumes the promote from tmp), so the
-    * bucket always lands byte-complete on one side of the swap. Files
-    * OUTSIDE the manifest are never touched — a post-crash append's
-    * rows survive recovery.
+  /** THE commit of every mutation of an existing item: writes the next
+    * version ([[writeVersion]]: `prev`'s units in `carried` unchanged, a
+    * fresh manifest per unit in `fresh`), moves the `_current` pointer to
+    * it — ONE single-object PUT, atomic on every real object store, and
+    * no rename anywhere — then deletes, best effort, what `prev` named
+    * and the new version does not: `prev`'s manifest, its unit manifests
+    * not carried, the `obsolete` data files, and the dir of a unit that
+    * left the item. A crash before the PUT leaves readers on `prev`,
+    * complete; a crash after it leaves only files no manifest names, for
+    * [[vacuum]]. Runs under the item lock (and the writer lease where
+    * configured), so no other commit of this item can interleave.
     */
-  private def stagedSwap(key: String, p: HPath, writeTmp: String => Unit): Unit = {
-    val k = validateKey(key)
-    fs.mkdirs(stagingRoot)
-    val id = java.util.UUID.randomUUID().toString
-    val tmp = new HPath(stagingRoot, s"$k.tmp-$id")
-    val swapMarker = new HPath(stagingRoot, s"$k.swap-$id")
-    val midMarker = new HPath(stagingRoot, s"$k.mid-$id")
-    val trash = new HPath(stagingRoot, s"$k.old-$id")
-    Store.activeStagingIds.add(id) // vacuum in this JVM must not touch us
-    // true once fs.rename MAY have moved live data: from just before
-    // the first rename call — except when that call returned a CLEAN
-    // false (the HDFS/file contract: nothing moved). A rename that
-    // THREW instead may have partially executed on a copy+delete
-    // filesystem, so it keeps the flag.
-    var liveTouched = false
-    try {
-      writeTmp(tmp.toString)
-      // swap marker carries the manifest of the OLD live dir, mid
-      // marker the manifest of the staged tmp — between them vacuum can
-      // reconstruct the intended end state of either move exactly, even
-      // where "rename" is a crash-prone per-object copy+delete
-      writeUTF8(fs, swapMarker, renderMarker(p, manifestOf(p)))
-      liveTouched = true
-      if (!fs.rename(p, trash)) {
-        liveTouched = false
-        throw new java.io.IOException(s"rename $p -> $trash failed")
-      }
-      writeUTF8(fs, midMarker, renderMarker(p, manifestOf(tmp)))
-      if (!fs.rename(tmp, p))
-        throw new java.io.IOException(s"rename $tmp -> $p failed")
-      fs.delete(trash, true)
-      fs.delete(midMarker, false)
-      fs.delete(swapMarker, false)
-    } catch {
-      case e: Throwable =>
-        // a THROWN failure with the live dir still intact — a Spark job
-        // failure inside writeTmp (executor OOM, transient FS error), a
-        // failed marker write, or a cleanly-refused first rename — is
-        // not a half-moved state: retire our own staging debris so one
-        // transient error does not wedge the item behind
-        // [[PendingRecoveryError]] until vacuum's age guard. Once the
-        // first rename may have moved anything, hands off — the markers
-        // are exactly what [[vacuum]] recovers from.
-        if (!liveTouched) {
-          try fs.delete(swapMarker, false) catch { case _: Throwable => () }
-          try fs.delete(tmp, true) catch { case _: Throwable => () }
-        }
-        throw e
-    } finally Store.activeStagingIds.remove(id)
+  private def commit(
+      prev: Version, carried: Seq[(String, String)], fresh: Map[String, Entries],
+      obsolete: Iterable[String]): Unit = {
+    val k = prev.key
+    val id = newVersionId()
+    writeVersion(k, id, carried, fresh)
+    writeUTF8(fs, ptrPath(k), id) // the commit point
+    val kept = carried.map(_._2).toSet
+    deleteFiles(k, prev.id +: prev.units.map(_._2).filterNot(kept) ++: obsolete.toSeq)
+    val left = carried.map(_._1).toSet ++ fresh.filter(_._2.nonEmpty).keySet
+    prev.units.map(_._1).filterNot(left).foreach(u =>
+      try fs.delete(itemFile(k, unitDir(u)), false) catch { case scala.util.control.NonFatal(_) => () })
+  }
+
+  /** Rewrites every unit of item `k` in `mode` and commits the result
+    * ([[append]], [[compact]]).
+    */
+  private def rewrite(k: String, mode: MutationKernel.Mode, batch: Option[DataFrame]): Unit = {
+    val prev = current(k)
+    val (listed, written) = mutate(k, mode, batch, _ => unitsOf(prev, _ => true))
+    commit(prev, Nil, freshUnits(written), listed.flatMap(_._2.map(_._1)))
   }
 
   /** Rewrite one item into the canonical layout, bucket by bucket: each
@@ -2315,15 +2049,12 @@ class Store private[sources] (
     * footers to read, weaker row-group stats), and compaction is the
     * periodic maintenance step that restores the 1 M-row sorted-chunk
     * contract (store.py:27,174) without paying it on every append.
-    * Atomic: same pointer swap as [[append]]. An item within the
+    * Atomic: the same one commit as [[append]]. An item within the
     * driver-read limit is rewritten on the calling thread with no Spark
     * job ([[mutate]]).
     */
   def compact(key: String): Unit = withItemLock(key) {
-    requireNoPendingMarkers(key)
-    val k = validateKey(key)
-    // rewrite exactly the listed files: the ones describe counts
-    versionSwap(k)(v => writeVersion(v, MutationKernel.Compact, None, _ => files(k)))
+    rewrite(validateKey(key), MutationKernel.Compact, None)
   }
 
   /** Whether `files` already hold their rows in the layout
@@ -2347,17 +2078,18 @@ class Store private[sources] (
   /** The policy that decides WHEN [[compact]] runs: rewrite the item
     * only once [[appendNewOnly]]'s accumulated small files exceed
     * `maxFiles`, counted from ONE [[files]] listing — the files
-    * [[describe]] counts and every read scans. The decision reads no footer and starts no Spark job, so
-    * calling this after every append batch costs one LIST until the
-    * threshold trips; a tripping call on a small item is a driver-side
-    * [[compact]], still with no Spark job. Returns true when a compaction
-    * ran. Typical loop:
+    * [[describe]] counts and every read scans, read from the manifests.
+    * The decision reads no footer and starts no Spark job, so calling
+    * this after every append batch costs a few small manifest reads
+    * until the threshold trips; a tripping call on a small item is a
+    * driver-side [[compact]], still with no Spark job. Returns true when
+    * a compaction ran. Typical loop:
     * `appendNewOnly(k, batch); compactIfNeeded(k)`.
     *
-    * Same contract caveat as [[compact]]: a rewrite invalidates any live
-    * [[readStream]] tail of this item (freshly-named files would be
-    * re-ingested as new input) — run it only between streaming reads, or
-    * restart the consumer with a fresh checkpoint after it trips.
+    * Same contract caveat as [[compact]]: a rewrite gives every row a new
+    * file, which a live [[readStream]] tail would re-ingest as new input
+    * — run it only between streaming reads, or restart the consumer with
+    * a fresh checkpoint after it trips.
     */
   def compactIfNeeded(key: String, maxFiles: Long = 64L): Boolean = {
     require(maxFiles > 0, "maxFiles must be positive")
@@ -2380,37 +2112,28 @@ class Store private[sources] (
     * keys cannot split an extra file), which makes the canonical layout
     * an exact fixed point: a bucket too large to ever fit under
     * `maxFilesPerBucket` is rewritten once and then skipped, never
-    * re-rewritten forever — each rewrite through the two-marker
-    * crash-safe [[stagedSwap]] (the markers record the bucket path;
-    * [[vacuum]] finishes an interrupted bucket swap without touching
-    * its siblings), so steady-state maintenance cost tracks the append
-    * rate, not the item size.
-    * Cold buckets are never read OR rewritten — the decision is one
-    * [[files]] listing (one LIST per bucket: O(buckets) metadata, zero
-    * data rows), and each rewrite reads exactly its bucket's listed
-    * files.
+    * re-rewritten forever. All rewritten buckets commit together: the
+    * next version carries every other bucket's unit manifest unchanged
+    * and names a fresh one for each rewritten bucket ([[commit]]), so
+    * a reader sees every bucket old or every bucket new, and
+    * steady-state maintenance cost tracks the append rate, not the item
+    * size. Cold buckets are never read OR rewritten — the decision reads
+    * the unit manifests (O(buckets) metadata, zero data rows) and the
+    * footers of over-threshold buckets only, and each rewrite reads
+    * exactly its bucket's files.
     *
     * Returns the number of buckets rewritten. [[SchemaError]] on
-    * non-bucketed stores (use [[compact]]/[[compactIfNeeded]]). This
-    * rewrites inside the current version, in-place like [[prune]] —
-    * copying the other 100 TB of buckets into a fresh version to
-    * compact one directory would defeat the point. Same [[readStream]]
-    * caveat as [[compact]]: a rewrite renames files, so restart
-    * streaming tails with a fresh checkpoint after any bucket trips.
+    * non-bucketed stores (use [[compact]]/[[compactIfNeeded]]). Same
+    * [[readStream]] caveat as [[compact]]: a rewritten bucket's rows are
+    * in new files, so restart streaming tails with a fresh checkpoint
+    * after any bucket trips.
     *
-    * `since` bounds even the metadata cost: only buckets at or after
-    * the bucket containing it are LISTed at all (bucket names are
-    * zero-padded, so the cutoff is one string compare per name from
-    * the single item-dir listing). A steady-state maintenance loop
-    * passes its append horizon here — e.g. yesterday — and the op
-    * stops scaling with store age entirely.
-    *
-    * Cross-vintage caveat: bucket-swap markers are recovered correctly
-    * only by binaries that read the marker's recorded path (this
-    * vintage onward). In a mixed-version deployment, do not run an
-    * OLDER binary's `vacuum()` against a newer writer's crash debris —
-    * its recovery assumes item-level swaps and would mis-handle a
-    * bucket-level one; recover with the writer's own version first.
+    * `since` bounds even the metadata cost: only the manifests of
+    * buckets at or after the bucket containing it are read at all
+    * (bucket labels are zero-padded, so the cutoff is one string compare
+    * per unit of the version manifest). A steady-state maintenance loop
+    * passes its append horizon here — e.g. yesterday — and the op stops
+    * scaling with store age entirely.
     */
   def compactBuckets(
       key: String,
@@ -2423,36 +2146,32 @@ class Store private[sources] (
         throw new SchemaError(
           s"store at $base is not bucketed; compactBuckets needs directory " +
             "buckets (open with bucket = day|month|year) — use compact()"))
-      requireNoPendingMarkers(key)
+      val prev = current(key)
       val cutoff = since.map(bucketLabel(fmt, _))
-      val buckets = filesWhere(key, Some(b => cutoff.forall(b >= _))).groupBy(_.getPath.getParent)
-      var rewritten = 0L
-      buckets.toSeq.sortBy(_._1.toString).foreach { case (d, listed) =>
-        val dataFiles = listed.size
-        // convergence guard: a bucket holding more rows than
-        // maxFilesPerBucket × chunkRows can never compact below the
-        // threshold — without the canonical clamp it would be fully
-        // rewritten on EVERY maintenance call, forever. Footers (read
-        // only for over-threshold buckets, from the SAME listing)
-        // decide: rewrite only when the bucket holds more files than
-        // its rows canonically need, or files whose ranges overlap.
-        if (dataFiles > maxFilesPerBucket && !isCanonical(listed)) {
-          // bucket files store the data columns only (the bucket value
-          // lives in the dir name), sorted by the index in at most the
-          // canonical count of disjoint runs with no per-file row cap
-          // ([[MutationKernel.CompactExact]]): a run nudged past
-          // chunkRows by equal index keys must not split into an extra
-          // file, so the next call finds the bucket canonical and skips
-          // — an exact fixed point, no slack factor scaling debris with
-          // bucket size
-          stagedSwap(key, d, { tmp =>
-            fs.mkdirs(new HPath(tmp))
-            land(mutate(MutationKernel.CompactExact, None, _ => listed, _ => tmp))
-          })
-          rewritten += 1
-        }
+      // convergence guard: a bucket holding more rows than
+      // maxFilesPerBucket × chunkRows can never compact below the
+      // threshold — without the canonical clamp it would be fully
+      // rewritten on EVERY maintenance call, forever. Footers (read only
+      // for over-threshold buckets) decide: rewrite only when the bucket
+      // holds more files than its rows canonically need, or files whose
+      // ranges overlap.
+      val chosen = unitsOf(prev, u => cutoff.forall(labelOf(u) >= _)).filter { case (u, es) =>
+        es.size > maxFilesPerBucket && !isCanonical(statuses(prev.key, Seq(u -> es)))
       }
-      rewritten
+      if (chosen.nonEmpty) {
+        // bucket files store the data columns only (the bucket value
+        // lives in the dir name), sorted by the index in at most the
+        // canonical count of disjoint runs with no per-file row cap
+        // ([[MutationKernel.CompactExact]]): a run nudged past chunkRows
+        // by equal index keys must not split into an extra file, so the
+        // next call finds the bucket canonical and skips — an exact fixed
+        // point, no slack factor scaling debris with bucket size
+        val out = freshUnits(mutate(prev.key, MutationKernel.CompactExact, None, _ => chosen)._2)
+        val rewritten = chosen.map(_._1).toSet
+        commit(prev, prev.units.filterNot(u => rewritten(u._1)),
+          rewritten.map(u => u -> out.getOrElse(u, Nil)).toMap, chosen.flatMap(_._2.map(_._1)))
+      }
+      chosen.size.toLong
     }
 
   /** Render `t` as the bucket-directory label under format `fmt` in the
@@ -2464,65 +2183,41 @@ class Store private[sources] (
       .withZone(java.time.ZoneId.of(storeTz))
       .format(t.toInstant)
 
-  /** Bucket directories of version dir `p` whose label satisfies
-    * `pred` — the bucket-pruning step of [[files]], and [[prune]]'s
-    * deletion unit.
-    */
-  private def bucketDirs(p: HPath)(pred: String => Boolean): Vector[HPath] =
-    fs.listStatus(p).iterator
-      .map(_.getPath)
-      .filter { d =>
-        val n = d.getName
-        n.startsWith(BucketCol + "=") && pred(n.stripPrefix(BucketCol + "="))
-      }
-      .toVector
-
   /** Scalable append: [[append]]'s merge, but only the rows the item
-    * does not hold yet are written, as new files in place (one per
-    * bucket, split at [[chunkRows]]) — the write is O(new), instead of
-    * the reference's O(history) rewrite. Equivalent end state to
-    * [[append]] (duplicates never written; old rows untouched, so "old
+    * does not hold yet are written, as new files — the write is O(new),
+    * instead of the reference's O(history) rewrite. Equivalent end state
+    * to [[append]] (duplicates never written; old rows untouched, so "old
     * wins" trivially holds; NULL-bearing rows match, so they never
     * re-append).
     *
     * Full-row dedup includes the index, so a duplicate can only live in
     * its own row's bucket: only the buckets the batch touches are read
-    * ([[MutationKernel.NewOnly]]), wherever the merge runs ([[mutate]]),
-    * and a batch with nothing new writes no file.
+    * ([[MutationKernel.NewOnly]]), wherever the merge runs ([[mutate]]).
+    * The commit gives each bucket that got new files a fresh unit
+    * manifest — its old entries plus the new files — and carries every
+    * other unit manifest over ([[commit]]): a reader sees the whole batch
+    * or none of it. A batch with nothing new writes and commits nothing.
     */
   def appendNewOnly(key: String, df: DataFrame): Unit = withItemLock(key) {
     requireAppendable(key)
     requireGroupable(df)
-    val k = validateKey(key)
-    // registered so vacuum's staging sweep (job 4) never reclaims THIS
-    // write's hidden files before they land
-    val tag = Store.inPlaceTag(base, k)
-    Store.activeInPlaceWrites.add(tag)
-    try land(mutate(MutationKernel.NewOnly, Some(df),
-      units => filesWhere(k, units.map(us => (l: String) => us(s"$BucketCol=$l"))),
-      Store.dirsUnder(dataPath(k))))
-    finally Store.activeInPlaceWrites.remove(tag)
+    val prev = current(key)
+    val (listed, written) = mutate(prev.key, MutationKernel.NewOnly, Some(df),
+      units => unitsOf(prev, u => units.forall(_(u))))
+    val fresh = freshUnits(written)
+    if (fresh.nonEmpty) {
+      val old = listed.toMap
+      commit(prev, prev.units.filterNot(u => fresh.contains(u._1)),
+        fresh.map { case (u, es) => u -> (old.getOrElse(u, Nil) ++ es) }, Nil)
+    }
   }
 
-  /** Fills fresh version dir `v`: what [[mutate]] writes in `mode` lands
-    * under it, then `_SUCCESS` marks it complete (vacuum's pointer repair
-    * and [[commitStagedVersion]] trust only a marked version).
-    */
-  private def writeVersion(
-      v: HPath,
-      mode: MutationKernel.Mode,
-      batch: Option[DataFrame],
-      listing: Option[Set[String]] => Seq[FileStatus]): Unit = {
-    fs.mkdirs(v)
-    land(mutate(mode, batch, listing, Store.dirsUnder(v)))
-    writeUTF8(fs, new HPath(v, "_SUCCESS"), "")
-  }
-
-  /** Runs [[MutationKernel]] in `mode` over the item's units — one per
-    * bucket dir, "" on an unbucketed store — and returns the hidden files
-    * it wrote, for the caller to [[land]] and commit. `listing` lists the
-    * files the mutation reads (only the given units', when it is handed
-    * the batch's units); `dirOf` maps a unit to the dir its files go to.
+  /** Runs [[MutationKernel]] in `mode` over units of item `k` — one per
+    * bucket, "" on an unbucketed store — and returns the units it read,
+    * each with its files, and what it wrote: every file under its final
+    * name in its unit's data dir, for the caller to commit. `listing`
+    * gives the units the mutation reads (only the given units, when it
+    * is handed the batch's units).
     *
     * One placement rule for every mutation: on the calling thread, with
     * no Spark job, when the batch is already on the driver
@@ -2530,41 +2225,36 @@ class Store private[sources] (
     * the driver read ([[fitsDriver]]). Otherwise in Spark tasks
     * ([[MutationKernel.inTasks]]): the batch is evaluated once, shuffled
     * by bucket, and each task reads its units' files from this one
-    * listing. A listed file that a concurrent rewrite swaps out before
-    * it is read makes the mutation re-list and start over.
+    * listing. A file of a failed or superseded task attempt is named by
+    * no manifest; [[vacuum]] sweeps it.
     */
   private def mutate(
+      k: String,
       mode: MutationKernel.Mode,
       batch: Option[DataFrame],
-      listing: Option[Set[String]] => Seq[FileStatus],
-      dirOf: String => String): Seq[Written] = retryVanished {
+      listing: Option[Set[String]] => Seq[(String, Entries)]): (Seq[(String, Entries)], Seq[Written]) = {
     requireMicrosTimestamps()
     val fileSchema = StructType(schema.map(_.copy(nullable = true)))
     val (writer, conf) = SparkInternals.parquetWriter(spark, fileSchema, Map("compression" -> "snappy"), base)
     val kernel = new MutationKernel(mode, schema, chunkRows,
       SparkInternals.driverReaderFactory(spark, schema, schema, Array.empty, new StructType()), writer, conf)
-    def units(listed: Seq[FileStatus]) = listed.groupBy(bucketOf).map { case (u, inUnit) =>
-      u -> inUnit.map(f => UnitFile(f.getPath.toString, f.getLen, f.getModificationTime)) }
+    val dir = new HPath(itemsRoot, k).toString
+    def units(listed: Seq[(String, Entries)]) = listed.map { case (u, es) =>
+      u -> es.map { case (rel, len) => UnitFile(s"$dir/$rel", len) } }.toMap
+    val dirOf = (u: String) => s"$dir/${Store.unitDir(u)}"
     val local = if (!driverMutable) None else batch.fold(Option(Seq.empty[(String, InternalRow)]))(batchOnDriver)
     local.flatMap { rows =>
       val listed = listing(Option.when(mode == MutationKernel.NewOnly)(rows.map(_._1).toSet))
-      Option.when(fitsDriver(listed))(kernel.onDriver(units(listed), rows, dirOf))
+      Option.when(fitsDriver(listed.flatMap(_._2).map(_._2).sum))(
+        listed -> kernel.onDriver(units(listed), rows, dirOf))
     }.getOrElse {
       val rows = batch.map { df =>
         requireTzAligned() // withBucket's date_format renders in session tz
         withBucket(conform(df))
       }
-      kernel.inTasks(spark, units(listing(None)), rows, bucketFmt.map(_ => BucketCol), dirOf)
+      val listed = listing(None)
+      listed -> kernel.inTasks(spark, units(listed), rows, bucketFmt.map(_ => BucketCol), dirOf)
     }
-  }
-
-  /** Renames every file [[mutate]] wrote from its hidden name to its own;
-    * files of a failed or superseded task attempt stay hidden until
-    * [[vacuum]] sweeps them.
-    */
-  private def land(written: Seq[Written]): Unit = written.foreach { w =>
-    if (!fs.rename(w.hidden, w.landed))
-      throw new java.io.IOException(s"rename ${w.hidden} -> ${w.landed} failed")
   }
 
   /** The refusal the merge's `GROUP BY` of every column gave a nested
@@ -2598,72 +2288,46 @@ class Store private[sources] (
     }
   }
 
-  /** Whether `files`, sized like the scan's estimate, fit the driver
-    * read ([[SparkInternals.driverReadLimit]]; ≤ 0: nothing does). */
-  private def fitsDriver(files: Seq[FileStatus]): Boolean = {
+  /** Whether files of `bytes` in all, sized like the scan's estimate,
+    * fit the driver read ([[SparkInternals.driverReadLimit]]; ≤ 0:
+    * nothing does). */
+  private def fitsDriver(bytes: Long): Boolean = {
     val limit = SparkInternals.driverReadLimit(spark)
-    limit > 0 && SparkInternals.scanSize(spark, files.map(_.getLen).sum) <= limit
+    limit > 0 && SparkInternals.scanSize(spark, bytes) <= limit
   }
-
-  /** The bucket dir name of data file `f` ("" on an unbucketed store). */
-  private def bucketOf(f: FileStatus): String =
-    if (bucket.isEmpty) "" else f.getPath.getParent.getName
 
   /** Drop one item entirely (maintenance op, like [[compact]]):
     * [[ItemKeyError]] if absent. The store itself (schema, other
     * items) is untouched. The pointer delete IS the atomic disappear:
     * after it the item is gone from [[listItems]]/[[exists]], and the
-    * data tree left behind is invisible debris that [[vacuum]] sweeps
-    * if the recursive delete is interrupted.
+    * files left behind if the recursive delete is interrupted are named
+    * by no pointer: [[vacuum]] sweeps them. The item lock keeps a
+    * same-JVM vacuum off the item meanwhile (a concurrent OTHER-JVM
+    * writer racing a drop is undefined; writerLease serializes that).
     */
   def drop(key: String): Unit = withItemLock(key) {
-    // dropping an item also retires its crash-recovery debris: any
-    // pending markers described a bucket dir that no longer exists, and
-    // leaving them would refuse every mutation of a re-created item
-    // ([[requireNoPendingMarkers]]) until vacuum. The item lock
-    // excludes same-JVM WRITERS of this key; the vacuum pseudo-lock
-    // (which vacuum holds for its whole sweep, taking no item locks)
-    // excludes a same-JVM vacuum for the WHOLE drop — not just the
-    // marker sweep. Holding it only around the sweep left a window
-    // where vacuum, mid-recovery of this key's old markers, could
-    // copyMissing stale files back under items/KEY right after our
-    // delete — debris with no pending markers left to flag it.
-    // Ordering is item-lock → vacuum-lock everywhere, vacuum only ever
-    // tryLocks an item lock: no cycle. (A
-    // concurrent OTHER-JVM writer racing a drop is already undefined;
-    // writerLease serializes that.)
-    val vl = Store.lockFor(base, "..vacuum")
-    vl.lock()
-    try dropLocked(key)
-    finally vl.unlock()
-  }
-
-  private def dropLocked(key: String): Unit = {
     val k = validateKey(key)
     if (!exists(k)) throw new ItemKeyError(s"no such item: $k")
     fs.delete(ptrPath(k), false)
     fs.delete(new HPath(itemsRoot, k), true)
-    stagingEntries(k).foreach(p => fs.delete(p, true))
   }
 
   /** Retention: drop every time bucket of `key` strictly OLDER than the
-    * bucket containing `before` — pure directory deletes, no scan, no
-    * rewrite (the other 100 TB housekeeping op next to [[compact]]).
-    * Retention is bucket-granular by design: rows inside `before`'s own
-    * bucket are kept (removing them would mean rewriting that bucket;
-    * run with `before` on a bucket boundary for exact cuts). Bucket
-    * names are zero-padded so the lexicographic compare below IS the
-    * chronological compare. Crash-safe: each expired bucket writes a
-    * `KEY.del-ID` intent marker and is renamed into .staging before
-    * deletion, so a kill mid-prune leaves every bucket either fully
-    * present, fully gone, or finished by [[vacuum]].
+    * bucket containing `before` — no scan, no rewrite (the other 100 TB
+    * housekeeping op next to [[compact]]). Retention is bucket-granular
+    * by design: rows inside `before`'s own bucket are kept (removing them
+    * would mean rewriting that bucket; run with `before` on a bucket
+    * boundary for exact cuts). Bucket labels are zero-padded so the
+    * lexicographic compare below IS the chronological compare.
+    *
+    * The next version leaves the expired units out and carries every
+    * other unit manifest unchanged, committed by one pointer PUT
+    * ([[commit]]): a reader sees every expired bucket or none, and no
+    * data moves. The expired buckets' files are deleted after the PUT.
     *
     * Only valid on bucketed stores ([[SchemaError]] otherwise — an
     * unbucketed item has no sub-scan deletion unit). Returns the number
-    * of buckets dropped. This deletes bucket dirs INSIDE the current
-    * version (retention is in-place by design — copying 100 TB minus a
-    * bucket into a fresh version to delete a directory would defeat the
-    * point); a reader listing mid-prune can observe a bucket disappear.
+    * of buckets dropped.
     */
   def prune(key: String, before: Timestamp): Long = withItemLock(key) {
     val fmt = bucketFmt.getOrElse(
@@ -2672,85 +2336,45 @@ class Store private[sources] (
           "(open with bucket = day|month|year)"
       )
     )
-    requireNoPendingMarkers(key)
-    val p = dataPath(key)
+    val prev = current(key)
     val cutoff = bucketLabel(fmt, before)
-    fs.mkdirs(stagingRoot)
-    val expired: Seq[HPath] = bucketDirs(p)(_ < cutoff)
-    expired.foreach { d =>
-      val id = java.util.UUID.randomUUID().toString
-      val trash = new HPath(stagingRoot, validateKey(key) + ".old-" + id)
-      val del = new HPath(stagingRoot, validateKey(key) + ".del-" + id)
-      Store.activeStagingIds.add(id)
-      try {
-        // deletion-intent marker (with the doomed bucket's manifest):
-        // lets vacuum finish a bucket removal whose copy+delete rename
-        // died partway, deleting exactly the manifest's files
-        writeUTF8(fs, del, renderMarker(d, manifestOf(d)))
-        if (!fs.rename(d, trash)) {
-          fs.delete(del, false)
-          throw new java.io.IOException(s"rename $d -> $trash failed")
-        }
-        fs.delete(trash, true)
-        fs.delete(del, false)
-      } finally Store.activeStagingIds.remove(id)
+    val expired = unitsOf(prev, u => u.startsWith(BucketCol + "=") && labelOf(u) < cutoff)
+    if (expired.nonEmpty) {
+      val gone = expired.map(_._1).toSet
+      commit(prev, prev.units.filterNot(u => gone(u._1)), Map.empty, expired.flatMap(_._2.map(_._1)))
     }
     expired.size.toLong
   }
 
-  /** Crash-recovery sweep, finishing the atomicity story of
-    * [[append]]/[[compact]]/[[compactBuckets]]/[[drop]]/[[prune]].
-    * Five jobs:
+  /** Garbage collection, one mark-and-sweep per item dir. The mark is
+    * every file the current version names ([[namedBy]]: its manifest,
+    * its unit manifests and their data files) plus the pointer, and
+    * every file of a staged CTAS version of this JVM not yet committed
+    * or aborted ([[Store$.activeStagingIds]]). The sweep deletes every
+    * other file under `items/<KEY>/` older than `olderThanMillis`: what
+    * a commit superseded and did not get to delete, the files a crashed
+    * mutation or a failed task attempt wrote, a version no pointer
+    * names, a local pointer temp ([[Store$.writeUTF8]]), and the whole
+    * tree of an item whose pointer is gone (a dropped item, or a write
+    * that died before its pointer). Emptied data dirs go too, and so
+    * does the dir of an item without a pointer once it is empty.
     *
-    *  1. **Swap recovery** — an interrupted [[stagedSwap]] (a
-    *     [[compactBuckets]] bucket rewrite) leaves its `KEY.swap-ID`
-    *     (and possibly `KEY.mid-ID`) marker behind; the marker pair says
-    *     exactly how far the swap got (protocol at [[stagedSwap]]).
-    *     `swap` without `mid`: the swap never committed → roll BACK —
-    *     and if the live dir lost files to a partially-executed
-    *     copy+delete rename (strict subset of the swap marker's
-    *     manifest), refill it per file from the complete trash copy
-    *     first. `swap` + `mid`: the old data was already
-    *     moved out → roll FORWARD by promoting the staged tmp per file
-    *     against the mid marker's manifest (idempotent, resumes partial
-    *     promotes) — unless the live dir holds files the manifest never
-    *     listed, which means a later writer re-created the bucket and
-    *     the stale swap is swept instead of promoted. Either way the
-    *     bucket ends whole and the markers are cleared.
-    *  1b. **Delete recovery** — an interrupted [[prune]] leaves its
-    *     `KEY.del-ID` intent marker; recovery finishes the
-    *     delete (leftover live files and the trash copy), guarded by
-    *     the same manifest-subset rule so a re-created path is never
-    *     touched.
-    *  2. **Orphan sweep** — `*.tmp-*` / `*.old-*` dirs whose op died
-    *     between its last rename and its delete: invisible to readers
-    *     (staging lives outside items/) but occupying storage; swept.
-    *  3. **Orphan-version sweep** — `v-<id>` dirs no `_current` pointer
-    *     names (a [[versionSwap]] or [[write]] that died around its
-    *     pointer write), after repairing a torn pointer; also the hidden
-    *     temp a local pointer commit that died before its rename left
-    *     beside the pointer ([[Store$.writeUTF8]]).
-    *  4. **Hidden-file sweep** — the hidden [[Store$.DriverTmpPrefix]]
-    *     files [[MutationKernel]] writes before they land, inside the
-    *     current version: an in-place [[appendNewOnly]] that died before
-    *     landing them, or a failed or superseded task attempt's files
-    *     (a fresh version carries those along when it commits). Also the
-    *     committer `_temporary` / `.spark-staging-*` dirs and hidden
-    *     output dirs that writes of earlier vintages could leave in a
-    *     live data dir. All hidden from every read, holding bytes
-    *     nothing else reclaims. Skips items with a same-JVM in-place
-    *     append in flight ([[Store$.activeInPlaceWrites]]).
+    * Pointer repair: a pointer that EXISTS but names no complete version
+    * — empty, or naming a missing or partial manifest (on HDFS a create
+    * is visible before its close) — must never be read as "no version is
+    * current": that would turn the item's data into garbage. It is
+    * repaired to the newest complete version manifest first; with none,
+    * the item is left alone. A pointer that cannot be read is left alone
+    * this round too.
     *
-    * Two writer-safety layers: entries whose staging id belongs to an
-    * op IN FLIGHT IN THIS JVM ([[Store$.activeStagingIds]]) are always
-    * skipped — that makes even a force-sweep (`vacuum(0)`) safe against
-    * same-driver concurrent appends/compacts — and `olderThanMillis`
-    * (modification-time-based) guards against writers in OTHER JVMs,
-    * which this process cannot see. The default sweeps only entries
-    * older than one hour (longer than any plausible single write);
-    * pass 0 only when no out-of-process writer exists. Returns entries
-    * removed (markers not counted; a recovered swap counts its data
-    * dirs). Vacuums of one store serialize on the item-lock of the
+    * Two writer-safety layers: an item whose lock a mutation holds IN
+    * THIS JVM is skipped (`tryLock`), which makes even a force-sweep
+    * (`vacuum(0)`) safe against same-driver concurrent mutations, and the
+    * modification-time guard covers writers in OTHER JVMs, which this
+    * process cannot see. The default sweeps only files older than one
+    * hour (longer than any plausible single write); pass 0 only when no
+    * out-of-process writer exists. Returns the files removed (dirs not
+    * counted). Vacuums of one store serialize on the item-lock of the
     * pseudo-item `..vacuum` (not a legal item key, so it can never
     * collide with a real item's lock).
     */
@@ -2758,326 +2382,55 @@ class Store private[sources] (
     require(olderThanMillis >= 0, "olderThanMillis must be >= 0")
     val l = Store.lockFor(base, "..vacuum")
     l.lock()
-    try vacuumLocked(olderThanMillis) finally l.unlock()
+    try {
+      val cutoff = System.currentTimeMillis() - olderThanMillis
+      val items = if (fs.exists(itemsRoot)) fs.listStatus(itemsRoot).toSeq.filter(_.isDirectory) else Nil
+      items.map { item =>
+        val il = Store.lockFor(base, item.getPath.getName)
+        if (!il.tryLock()) 0L else try sweep(item.getPath.getName, cutoff) finally il.unlock()
+      }.sum
+    } finally l.unlock()
   }
 
-  private def vacuumLocked(olderThanMillis: Long): Long = {
-    val staging = stagingRoot
-    val cutoff = System.currentTimeMillis() - olderThanMillis
-    // a store with only clean pointer swaps never creates .staging —
-    // jobs 1-2 see no entries, but jobs 3-4 must still run
-    val entries =
-      if (fs.exists(staging)) fs.listStatus(staging).toVector
-      else Vector.empty[org.apache.hadoop.fs.FileStatus]
-    def inFlight(name: String): Boolean =
-      Store.stagingId(name).exists(Store.activeStagingIds.contains)
-    var removed = 0L
-    // job 1: complete or roll back interrupted swaps, markers first —
-    // their tmp/old dirs must not hit the age sweep below mid-recovery
-    val swapMarkers = entries.filter { e =>
-      val n = e.getPath.getName
-      n.contains(".swap-") && e.getModificationTime <= cutoff && !inFlight(n)
-    }
-    val recovered = scala.collection.mutable.Set[String]()
-    // Per-marker vanish-tolerance (both recovery loops): `inFlight` is
-    // checked at FILTER time over a listing taken once, so a concurrent
-    // same-store maintenance op can COMPLETE its swap/delete — removing
-    // its staging id and then its marker — between that check and this
-    // loop reaching the marker. A FileNotFoundException on the marker
-    // family here therefore means "the owner finished; nothing left to
-    // recover for this id" (owners delete their markers last), the same
-    // principle as walkFiles' vanished-mid-walk tolerance. Every other
-    // failure still propagates: a half-recovered swap must fail loudly.
-    swapMarkers.foreach { m =>
-      try {
-      val n = m.getPath.getName
-      val i = n.indexOf(".swap-")
-      val k = n.substring(0, i)
-      val id = n.substring(i + ".swap-".length)
-      val tmp = new HPath(staging, s"$k.tmp-$id")
-      val trash = new HPath(staging, s"$k.old-$id")
-      val mid = new HPath(staging, s"$k.mid-$id")
-      // the swapped bucket dir is recorded in the marker CONTENT (line
-      // 1) — recovery targets it RE-BASED against this store's own
-      // items root (see [[rebase]]: the marker records an absolute
-      // path, but the store may have been relocated — backup restore,
-      // mount move — between crash and recovery, and recovering into
-      // the stale original location could orphan or destroy the trash
-      // copy). Only the retired flat layout wrote markers without a
-      // recorded path; guessing a target for one could clobber the
-      // item, so recovery stops loudly instead.
-      def liveOf(markerContent: String): HPath =
-        parseMarker(markerContent)._1.map(rebase).getOrElse(
-          throw new java.io.IOException(
-            s"swap marker ${m.getPath} records no target path (flat-layout " +
-              "vintage); recover or remove it by hand"))
-      if (fs.exists(mid)) {
-        // old data left the bucket before the crash — the swap
-        // committed; roll FORWARD. A clobber of unrelated newer data is
-        // structurally impossible here: mutations are refused while
-        // crash markers pend ([[requireNoPendingMarkers]]), [[drop]]
-        // sweeps them, and a re-created item lives in a fresh version
-        // dir, so a live dir coexisting with these markers can only be
-        // this swap's partial promote plus (at most) post-crash appends
-        // — whose fresh-named files copyMissing leaves untouched.
-        val midContent = readUTF8(fs, mid)
-        val live = liveOf(midContent)
-        val newMan = parseMarker(midContent)._2 // manifest of tmp
-        if (newMan.nonEmpty) {
-          // manifest-bearing marker: promote per file, idempotently —
-          // exact even when the promote itself was a copy+delete rename
-          // that died partway (a strict-subset live simply resumes).
-          // Defense-in-depth guard: under this binary's write-refusal
-          // discipline live can only hold a subset of the manifest
-          // here, but a store last written by an UNGATED binary can
-          // carry a re-created incarnation next to stale markers
-          // (parquet part names bear fresh UUIDs, so its files fall
-          // outside the manifest) — promoting into it would mix two
-          // unrelated writes. Foreign names in live → sweep the stale
-          // staging debris and leave live untouched.
-          val liveForeign =
-            !manifestOf(live).map(_._1).subsetOf(newMan.map(_._1))
-          if (fs.exists(tmp)) {
-            if (!liveForeign) copyMissing(tmp, live, newMan)
-            fs.delete(tmp, true)
-            removed += 1
+  /** [[vacuum]]'s mark-and-sweep of item dir `k`, under its item lock. */
+  private def sweep(k: String, cutoff: Long): Long = {
+    val dir = new HPath(itemsRoot, k)
+    val root = dir.toUri.getPath + "/"
+    def walk(d: HPath): Seq[FileStatus] = fs.listStatus(d).toSeq.flatMap(st =>
+      if (st.isDirectory) walk(st.getPath) :+ st else Seq(st))
+    val (dirs, files) = walk(dir).partition(_.isDirectory)
+    def rel(st: FileStatus) = st.getPath.toUri.getPath.stripPrefix(root)
+    val versions = files.filter(f => rel(f).startsWith("v-")).sortBy(-_.getModificationTime).map(rel)
+    val staged = versions.filter(v => Store.activeStagingIds.contains(v.stripPrefix("v-")))
+      .flatMap(namedBy(k, _).getOrElse(Set.empty[String]))
+    val ptr = itemFile(k, Store.CurrentPtr)
+    // the pointer's content, None when absent; None outside when it
+    // exists but cannot be read
+    val pointer: Option[Option[String]] =
+      try Some(Option.when(fs.exists(ptr))(readUTF8(fs, ptr).trim))
+      catch { case _: java.io.IOException => Option.when(!fs.exists(ptr))(None) }
+    val live: Option[Set[String]] = pointer.flatMap { // None: hands off this item
+      case None => Some(Set.empty) // no pointer: nothing is current
+      case Some(v) =>
+        namedBy(k, v).orElse {
+          // torn or dangling: repair to the newest complete version
+          versions.iterator.map(c => c -> namedBy(k, c)).collectFirst { case (c, Some(n)) =>
+            writeUTF8(fs, ptr, c)
+            n
           }
-          if (fs.delete(trash, true)) removed += 1
-        } else {
-          // legacy manifest-less marker: single-rename promote
-          if (fs.exists(tmp)) {
-            if (fs.exists(live)) fs.delete(live, true) // partial promote
-            if (!fs.rename(tmp, live) && !fs.exists(live))
-              throw new java.io.IOException(s"swap recovery: rename $tmp -> $live failed")
-            removed += 1
-          }
-          if (fs.delete(trash, true)) removed += 1
-        }
-        fs.delete(mid, false)
-      } else {
-        // the swap never committed (live never fully left items/) —
-        // roll BACK. On a copy+delete rename the live dir may have lost
-        // files mid-move; copy-before-delete guarantees trash holds a
-        // complete copy then — restore the MISSING manifest files per
-        // file before sweeping the staging debris. Files outside the
-        // manifest are left alone (a post-crash append's rows survive
-        // recovery), and the write-refusal/drop-sweep discipline (see
-        // roll-forward above) guarantees live is never an unrelated
-        // re-created item.
-        val swapContent = readUTF8(fs, m.getPath)
-        val live = liveOf(swapContent)
-        val oldMan = parseMarker(swapContent)._2
-        // same ungated-binary guard as roll-forward: a live dir holding
-        // names outside the old manifest is a re-created incarnation,
-        // not a partial move-out — never copy stale files into it
-        val liveForeign = oldMan.nonEmpty &&
-          !manifestOf(live).map(_._1).subsetOf(oldMan.map(_._1))
-        if (oldMan.nonEmpty && fs.exists(trash) && !liveForeign &&
-            !oldMan.subsetOf(manifestOf(live)))
-          copyMissing(trash, live, oldMan)
-        else if (oldMan.isEmpty && fs.exists(trash)) {
-          // legacy manifest-less marker with the complete copy in trash
-          // (crash between move-out and mid marker). live absent →
-          // whole-dir rename back; live PRESENT but partially moved out
-          // → refill the missing files from trash per trash's own
-          // listing (without a manifest the trash copy is the only
-          // record of what the item held; copy-before-delete guarantees
-          // it is complete) — falling through to the sweep here used to
-          // destroy the only complete copy.
-          if (!fs.exists(live)) {
-            if (!fs.rename(trash, live) && !fs.exists(live))
-              throw new java.io.IOException(
-                s"swap recovery: rename $trash -> $live failed")
-          } else copyMissing(trash, live, manifestOf(trash))
-        }
-        if (fs.delete(tmp, true)) removed += 1
-        if (fs.delete(trash, true)) removed += 1
-      }
-      fs.delete(m.getPath, false)
-      recovered ++= Seq(tmp.getName, trash.getName, mid.getName)
-      } catch { case _: java.io.FileNotFoundException => () }
+        }.map(_ + Store.CurrentPtr)
     }
-    // job 1b: finish interrupted deletes (prune). The del marker
-    // records the doomed path and its manifest; recovery deletes
-    // exactly the MANIFEST files still present there — files outside
-    // the manifest belong to a later writer (an append that raced the
-    // half-executed delete) and are preserved —
-    // then removes the dir only once nothing is left in it.
-    val delMarkers = entries.filter { e =>
-      val n = e.getPath.getName
-      n.contains(".del-") && e.getModificationTime <= cutoff && !inFlight(n)
+    live.fold(0L) { named =>
+      val keep = named ++ staged
+      val removed = files.count(f =>
+        !keep(rel(f)) && f.getModificationTime <= cutoff && fs.delete(f.getPath, false)).toLong
+      // deepest first, so a parent sees its children gone
+      (dirs.filter(_.getModificationTime <= cutoff) ++
+        Option.when(!fs.exists(ptr))(fs.getFileStatus(dir)).filter(_.getModificationTime <= cutoff))
+        .foreach(d => try if (fs.listStatus(d.getPath).isEmpty) fs.delete(d.getPath, false)
+          catch { case scala.util.control.NonFatal(_) => () })
+      removed
     }
-    delMarkers.foreach { m =>
-      try {
-      val n = m.getPath.getName
-      val i = n.indexOf(".del-")
-      val k = n.substring(0, i)
-      val id = n.substring(i + ".del-".length)
-      val trash = new HPath(staging, s"$k.old-$id")
-      val (target, man) = parseMarker(readUTF8(fs, m.getPath))
-      target.map(rebase).foreach { t => // relocation-safe, like liveOf
-        if (fs.exists(t)) {
-          man.foreach { case (rel, _) =>
-            val f = new HPath(t, rel)
-            if (fs.exists(f)) fs.delete(f, false)
-          }
-          if (manifestOf(t).isEmpty && fs.delete(t, true)) removed += 1
-        }
-      }
-      if (fs.delete(trash, true)) removed += 1
-      fs.delete(m.getPath, false)
-      recovered += trash.getName
-      } catch { case _: java.io.FileNotFoundException => () }
-    }
-    // job 2: age-based orphan sweep of unclaimed tmp/old dirs
-    entries.foreach { e =>
-      val n = e.getPath.getName
-      if ((n.contains(".tmp-") || n.contains(".old-")) &&
-          !recovered.contains(n) && e.getModificationTime <= cutoff &&
-          !inFlight(n) && fs.delete(e.getPath, true))
-        removed += 1
-    }
-    // job 3: sweep version dirs no pointer names —
-    // a versionSwap that crashed before its pointer write (invisible
-    // new version) or after it but before the old-version delete
-    // (superseded data). Same in-flight + age guards as jobs 1-2.
-    //
-    // Pointer-integrity guard: a pointer file that EXISTS but is torn —
-    // empty (a crash between its create and its write, on filesystems
-    // where create is visible before close) or naming a vanished dir —
-    // must never be read as "no version is current": that would turn
-    // the item's entire data set into sweepable orphans. Repair it to
-    // the newest COMPLETE version (`_SUCCESS` present) first; if none
-    // exists, leave the item entirely alone. A pointer that is ABSENT
-    // is different: that item never finished creating (or finished
-    // dropping), and its versions are genuine orphans.
-    if (fs.exists(itemsRoot)) {
-      fs.listStatus(itemsRoot).foreach { item =>
-        val ptr = new HPath(item.getPath, Store.CurrentPtr)
-        // check-then-read tolerance: a concurrent drop() in another JVM
-        // can delete the pointer between exists and read (same-JVM
-        // drops now hold the vacuum lock). Read failure with the
-        // pointer GONE is a completed drop — versions are orphans;
-        // read failure with the pointer still present is a transient
-        // FS error — hands off the whole item this round (sweeping on
-        // a failed read could orphan live data).
-        val raw: Option[Option[String]] = // None = unreadable, skip item
-          if (!fs.exists(ptr)) Some(None)
-          else (try Some(readUTF8(fs, ptr).trim) catch { case _: Throwable => None }) match {
-            case Some(r) => Some(Some(r))
-            case None => if (!fs.exists(ptr)) Some(None) else None
-          }
-        val current: Option[String] = raw match {
-          case None => None // unreadable pointer: skip this item
-          case Some(None) => Some("") // no pointer: all versions are orphans
-          case Some(Some(r)) if r.nonEmpty &&
-              fs.exists(new HPath(item.getPath, r)) => // fresh check, not
-            Some(r) // a stale pre-listing snapshot (a swap may commit mid-walk)
-          case Some(Some(_)) => // torn pointer: repair, never sweep blind
-            // only under the item lock, and only if the pointer still
-            // reads torn there: a same-JVM commit holds that lock while
-            // its pointer overwrite is transiently empty, and "repairing"
-            // such a pointer once the commit has finished truncates it
-            // again under a concurrent reader. A lock held elsewhere is a
-            // mutation in flight: hands off this round (tryLock — vacuum
-            // never waits on an item lock, see drop)
-            val l = Store.lockFor(base, item.getPath.getName)
-            if (!l.tryLock()) None
-            else try {
-              val again = try readUTF8(fs, ptr).trim catch { case _: Throwable => "" }
-              if (again.nonEmpty && fs.exists(new HPath(item.getPath, again))) Some(again)
-              else {
-                // re-list NOW: the version a concurrent swap in another
-                // JVM is committing was created before its pointer
-                // write, so a fresh listing sees it; skip the whole item
-                // while any of its versions belongs to an op in flight
-                // in this JVM
-                val fresh = fs.listStatus(item.getPath)
-                  .filter(_.getPath.getName.startsWith("v-"))
-                val swapInFlight = fresh.exists(v => Store.activeStagingIds
-                  .contains(v.getPath.getName.stripPrefix("v-")))
-                val complete = fresh.filter(v =>
-                  fs.exists(new HPath(v.getPath, "_SUCCESS")))
-                if (swapInFlight || complete.isEmpty) None // hands off
-                else {
-                  val best = complete.maxBy(_.getModificationTime).getPath.getName
-                  writeUTF8(fs, ptr, best)
-                  Some(best)
-                }
-              }
-            } finally l.unlock()
-        }
-        current.foreach { cur =>
-          fs.listStatus(item.getPath).foreach { v =>
-            val n = v.getPath.getName
-            // a pointer commit that died between its temp write and its
-            // rename leaves the hidden temp ([[Store$.writeUTF8]])
-            if (n.startsWith(DriverTmpPrefix) && v.getModificationTime <= cutoff &&
-                !Store.activeStagingIds.contains(n.stripPrefix(DriverTmpPrefix)) &&
-                fs.delete(v.getPath, false))
-              removed += 1
-            else if (n.startsWith("v-") && n != cur && v.getModificationTime <= cutoff &&
-                !Store.activeStagingIds.contains(n.stripPrefix("v-"))) {
-              // last-instant re-read: a versionSwap that fully
-              // committed between our pointer read and this delete has
-              // already unregistered its id — the fresh pointer is the
-              // only evidence left that n became current. (A swap still
-              // BETWEEN its pointer write and its unregister is caught
-              // by the in-flight check above.) A read failure here —
-              // another JVM's drop deleting the pointer mid-read, or a
-              // transient FS error — must not abort the whole vacuum:
-              // treat the candidate as current (skip it this round).
-              val freshCur =
-                try { if (fs.exists(ptr)) readUTF8(fs, ptr).trim else cur }
-                catch { case _: Throwable => n }
-              if (n != freshCur && fs.delete(v.getPath, true))
-                removed += 1
-            }
-          }
-        }
-      }
-    }
-    // job 4: sweep dead hidden files inside live data dirs — the
-    // kernel's unlanded [[Store$.DriverTmpPrefix]] files (an in-place
-    // appendNewOnly that died before landing them, a failed or
-    // superseded task attempt's files) and, from stores written before
-    // the kernel, the committer `_temporary`/`.spark-staging-<jobId>`
-    // dirs and the hidden output dir of a distributed appendNewOnly.
-    // Readers and metadata never see them (hidden-segment filters), but
-    // nothing else reclaims their bytes. Same two writer-safety layers
-    // as jobs 1-2: items with an in-place append IN FLIGHT IN THIS JVM
-    // ([[Store$.activeInPlaceWrites]]) are skipped unconditionally, and
-    // the age guard covers writers in other JVMs. Torn/absent version
-    // pointers are job 3's territory — an unresolvable item is left
-    // alone here.
-    if (fs.exists(itemsRoot)) {
-      fs.listStatus(itemsRoot).filter(_.isDirectory).foreach { item =>
-        val k = item.getPath.getName
-        val dataDir: HPath =
-          try new HPath(item.getPath, currentVersion(k))
-          catch { case _: Throwable => null }
-        if (dataDir != null &&
-            !Store.activeInPlaceWrites.contains(Store.inPlaceTag(base, k))) {
-          val children =
-            try fs.listStatus(dataDir).toSeq
-            catch { case _: Throwable => Seq.empty } // vanished mid-walk
-          children.foreach { st =>
-            val n = st.getPath.getName
-            if (st.isDirectory &&
-                (n == "_temporary" || n.startsWith(".spark-staging") || n.startsWith(DriverTmpPrefix)) &&
-                st.getModificationTime <= cutoff &&
-                fs.delete(st.getPath, true))
-              removed += 1
-          }
-          walkFiles(dataDir, rootMustExist = false).foreach { st =>
-            if (st.getPath.getName.startsWith(DriverTmpPrefix) &&
-                st.getModificationTime <= cutoff && fs.delete(st.getPath, false))
-              removed += 1
-          }
-        }
-      }
-    }
-    removed
   }
 
   /** Streaming ingestion into one item — the 24/7 form of the
@@ -3114,23 +2467,23 @@ class Store private[sources] (
       .start()
   }
 
-  /** Streaming tail-read of one item: every Parquet file appended to the
-    * item after the stream starts becomes a micro-batch — the streaming
-    * analogue of re-running `store[k][t0:]` forever, and the natural
-    * consumer of [[appendNewOnly]]'s incremental files. Schema is the
-    * store schema (bucket column hidden); pair with a watermark on the
+  /** Streaming tail-read of one item: every data file a commit adds to
+    * the item after the stream starts becomes a micro-batch — the
+    * streaming analogue of re-running `store[k][t0:]` forever, and the
+    * natural consumer of [[appendNewOnly]]'s incremental files. It is
+    * the `graft` stream source (`spark.readStream.format("graft")`, see
+    * [[graft.sources.v2.GraftMicroBatchStream]]), which takes each
+    * trigger's files from [[files]], so it only ever reads committed
+    * files. Schema is the store schema; pair with a watermark on the
     * index column for windowed aggregation downstream.
     *
     * CONTRACT: valid producers while a stream is live are [[write]] and
-    * [[appendNewOnly]] (append-only files). [[append]] and [[compact]]
-    * (including [[compactIfNeeded]] when it trips) REWRITE the item
-    * into freshly-named files — a file source would
-    * re-ingest the full history as new input (double-counting), and the
-    * atomic swap briefly unlinks the path. [[prune]] DELETES bucket
-    * directories — safe only once the stream has processed past them
-    * (the source never re-reads processed files; an unprocessed deleted
-    * file fails the batch). After a rewrite (or an unsafe prune),
-    * restart the stream with a fresh checkpoint.
+    * [[appendNewOnly]] (new files only). [[append]], [[compact]]
+    * (including [[compactIfNeeded]] when it trips) and [[compactBuckets]]
+    * REWRITE rows into new files, which the stream would re-ingest as new
+    * input (double-counting); [[prune]] removes files, which is safe
+    * once the stream has read them. After a rewrite, restart the stream
+    * with a fresh checkpoint.
     *
     * A `file:` checkpoint is written without `.crc` files or forked
     * `chmod`/`readlink` ([[graft.sources.v2.GraftCheckpointFileManager]],
@@ -3138,15 +2491,9 @@ class Store private[sources] (
     * names is kept.
     */
   def readStream(key: String): DataFrame = {
-    val p = dataPath(key)
-    // recursiveFileLookup descends into __bucket=... directories; the
-    // bucket value is directory metadata, not file content, so the
-    // store schema (which never includes it) is the file schema
-    spark.readStream
-      .schema(schema)
-      .option("recursiveFileLookup", "true")
-      .parquet(p.toString)
-      .select(schema.fieldNames.map(col).toIndexedSeq: _*)
+    val k = validateKey(key)
+    if (!exists(k)) throw new ItemKeyError(s"no such item: $k")
+    spark.readStream.format("graft").option("item", k).load(base.toString)
   }
 
   /** Inclusive time-range read (reference `_query`, store.py:238-267):
@@ -3225,7 +2572,7 @@ class Store private[sources] (
     // read: re-resolve the version pointers and re-list
     retryVanished {
       val listed = keys.map(k => k -> files(k, start, end))
-      if (fitsDriver(listed.flatMap(_._2)))
+      if (fitsDriver(listed.flatMap(_._2).map(_.getLen).sum))
         exact(SparkInternals.readOnDriver(spark, listed.flatMap { case (k, kf) => kf.map(k -> _) },
           schema, read, pushed.toArray, labelCol))
           .select((labelCol.toSeq ++ outCols).map(col): _*)

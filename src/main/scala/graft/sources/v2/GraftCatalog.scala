@@ -195,10 +195,10 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
     * catalog offers one), not at createTable — which would create an
     * EMPTY VISIBLE item before the SELECT ran and leave it (or a
     * partial) behind on failure. Nothing is created eagerly: the insert
-    * writes a POINTER-LESS version dir ([[Store.writeStagedVersion]]);
-    * `commitStagedChanges()` lands the `_current` pointer in ONE atomic
-    * PUT. A crash at any earlier point leaves no visible item — only an
-    * orphan v-dir for vacuum — the reference's errorifexists discipline
+    * writes a POINTER-LESS version ([[Store.writeStagedVersion]]);
+    * `commitStagedChanges()` writes the `_current` pointer in ONE atomic
+    * PUT. A crash at any earlier point leaves no visible item — only
+    * files no pointer names, for vacuum — the reference's errorifexists discipline
     * (store.py:203-204) held even across CTAS.
     *
     * The staged table advertises the STORE schema, so Spark's output
@@ -436,8 +436,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
         s.compactBuckets(itemArg(s, in, 0), in.getLong(1))))
     },
     procMulti("versions",
-      "present versions of an item: the current one plus any " +
-        "crash-orphaned predecessors awaiting vacuum (Store.versionsOf)",
+      "version manifests of an item: the current one plus any a " +
+        "crashed commit left for vacuum (Store.versionsOf)",
       Seq(param("item", StringType)),
       StructType(Seq(
         StructField("version", StringType, nullable = false),

@@ -48,7 +48,7 @@ import java.sql.Timestamp
   * (see [[GraftTable]] — appendNewOnly, idempotent re-runs, creation
   * on first insert, a `writerLease` option for leased deployments).
   * Everything more destructive — INSERT OVERWRITE, compaction,
-  * retention, drop — stays behind the Store API, whose staged-swap /
+  * retention, drop — stays behind the Store API, whose commit and
   * lease semantics SQL cannot express.
   */
 class GraftDataSource extends TableProvider with DataSourceRegister {

@@ -13,8 +13,8 @@ import org.apache.spark.sql.types.StructType
   * Spark's vectorized ParquetScan assembled over exactly the files one
   * [[Store.files]] listing returned (via [[SparkInternals]]), and
   * `toMicroBatchStream` makes the same table readable with
-  * `spark.readStream.format("graft")` from any binding — the DSv2 face
-  * of [[Store.readStream]].
+  * `spark.readStream.format("graft")` from any binding — what
+  * [[Store.readStream]] returns.
   */
 final class GraftScan(
     store: Store,
@@ -67,7 +67,7 @@ final class GraftScan(
   //
   // A join whose key is the index column gets its build-side values
   // pushed here at runtime as an In(idx, values) — the value envelope
-  // [min, max] re-lists only its bucket dirs, so `events JOIN dims ON
+  // [min, max] re-resolves only its buckets' files, so `events JOIN dims ON
   // events.TS = dims.day` scans only the days the dim side actually
   // holds. Pruning is a superset by construction (envelope, inclusive
   // bounds); the join itself keeps exactness.
@@ -114,7 +114,7 @@ final class GraftScan(
   override def estimateStatistics(): V2Statistics = stats
 
   /** Static on purpose: delegating to the ParquetScan's description
-    * would force the lazy batch assembly — the bucket-dir LISTs — on
+    * would force the lazy batch assembly — the manifest reads — on
     * any plan rendering (explain, progress reports), including for
     * streaming reads that never execute the batch side.
     */
@@ -130,42 +130,11 @@ final class GraftScan(
       checkpointLocation, snapshotEvery)
 }
 
-/** LEGACY (pre-round-12) offset: the full cumulative set of processed
-  * files carried in the offset json itself — O(total files) per
-  * micro-batch. Kept so checkpoints written by earlier builds restart
-  * untouched: [[GraftMicroBatchStream]] dispatches on the recovered
-  * offset's type and keeps emitting this shape for the life of such a
-  * checkpoint. Fresh checkpoints get [[GraftSeqOffset]] (sequence +
-  * per-batch delta, O(batch) json) instead.
-  */
-final class GraftFilesOffset(val files: Seq[String]) extends Offset {
-  override def json(): String =
-    files.map(f =>
-      "\"" + f.replace("\\", "\\\\").replace("\"", "\\\"") + "\"")
-      .mkString("[", ",", "]")
-}
-
-object GraftFilesOffset {
-  /** Parse the json() form back; tolerates the empty list. */
-  def parse(json: String): GraftFilesOffset = {
-    val body = json.trim.stripPrefix("[").stripSuffix("]").trim
-    if (body.isEmpty) new GraftFilesOffset(Nil)
-    else new GraftFilesOffset(
-      // split on "," boundaries between quoted strings; our paths are
-      // store-layout paths (uuid part files under bucket dirs), so the
-      // only escapes ever emitted are the two json() produces
-      body.split("\",\\s*\"").toIndexedSeq
-        .map(_.stripPrefix("\"").stripSuffix("\"")
-          .replace("\\\"", "\"").replace("\\\\", "\\")))
-  }
-}
-
-/** Current offset shape: a sequence number plus THIS batch's admitted
-  * files. O(files-per-trigger) json per micro-batch regardless of how
-  * many files the stream has ever processed — the fix for the legacy
-  * shape's O(total-files)-per-batch checkpoint growth (Spark retains
-  * ~100 offset-log entries, so the legacy shape held ~100 full copies
-  * of the seen-set on disk at all times).
+/** The offset: a sequence number plus THIS batch's admitted files.
+  * O(files-per-trigger) json per micro-batch regardless of how many
+  * files the stream has ever processed (a cumulative file list would
+  * put ~100 full copies of the seen-set on disk, one per retained
+  * offset-log entry).
   *
   * Replay exactness is preserved by construction: Spark always calls
   * `planInputPartitions(start, end)` with CONSECUTIVE offsets from its
@@ -195,8 +164,15 @@ object GraftSeqOffset {
     val tag = json.indexOf("\"delta\"")
     if (tag < 0) new GraftSeqOffset(seq, Nil)
     else {
-      val arr = json.substring(json.indexOf('[', tag), json.lastIndexOf(']') + 1)
-      new GraftSeqOffset(seq, GraftFilesOffset.parse(arr).files)
+      val body = json.substring(json.indexOf('[', tag) + 1, json.lastIndexOf(']')).trim
+      // split on "," boundaries between quoted strings; the paths are
+      // store-layout paths (uuid part files under bucket dirs), so the
+      // only escapes ever emitted are the two json() produces
+      new GraftSeqOffset(seq,
+        if (body.isEmpty) Nil
+        else body.split("\",\\s*\"").toIndexedSeq
+          .map(_.stripPrefix("\"").stripSuffix("\"")
+            .replace("\\\"", "\"").replace("\\\\", "\\")))
     }
   }
 }
@@ -324,8 +300,7 @@ private[v2] final class GraftSeenLog(location: String, snapshotEvery: Int) {
         throw new IllegalStateException(
           s"graft stream checkpoint at $location is missing seen-log delta " +
             s"$d (have snapshot $from); the checkpoint cannot be resumed " +
-            "exactly — restart from a fresh checkpoint, or stream via " +
-            "Store.readStream"))
+            "exactly — restart from a fresh checkpoint"))
     }
     seen
   }
@@ -344,18 +319,16 @@ private[v2] final class GraftSeenLog(location: String, snapshotEvery: Int) {
   * resolving a `graft` table installs unless the session names a
   * manager class already: no `.crc` files, no forked `chmod`/`readlink`.
   *
-  * Caveat shared with [[Store.readStream]]: COMPACTION rewrites
+  * Caveat ([[Store.readStream]] is this stream): COMPACTION rewrites
   * history into new files, which a live streaming reader would re-see
   * as fresh input. Stream from items whose maintenance window is
   * coordinated, or reprocess-tolerant sinks (the store's own
   * [[Store.ingestStream]] sink is idempotent by appendNewOnly).
   */
 object GraftMicroBatchStream {
-  /** ~20k files ≈ 1.7 MiB of offset json per micro-batch under the
-    * LEGACY cumulative offsets (OffsetScale receipt: 8.3 MiB at 100k
-    * files) — past this the checkpoint write dominates small batches.
-    * Current-format streams use the same threshold for the softer
-    * concern that remains: seen-set memory + snapshot size.
+  /** Past ~20k tracked files the seen-set's memory and its O(files)
+    * snapshot stop being metadata-sized: [[GraftMicroBatchStream]] warns
+    * once.
     */
   private[v2] val OffsetFileWarnThreshold: Int = 20000
 
@@ -404,11 +377,6 @@ final class GraftMicroBatchStream(
     fs.map(_.getPath.toString)
   }
 
-  /** Fresh checkpoints start in the current (seq + delta) offset
-    * format; a checkpoint recovered with legacy cumulative offsets
-    * keeps that format for its whole life (dispatch is on the start
-    * offset's type — the two shapes never mix within one checkpoint).
-    */
   override def initialOffset(): Offset = new GraftSeqOffset(0L, Nil)
 
   // in-memory seen-set for the current format; rebuilt from the
@@ -440,111 +408,75 @@ final class GraftMicroBatchStream(
     maxFilesPerTrigger.map(ReadLimit.maxFiles).getOrElse(ReadLimit.allAvailable())
 
   /** One-time warning once the tracked file set stops being
-    * metadata-sized. Legacy checkpoints serialize the FULL list into
-    * every offset-log entry (the original hazard); current-format
-    * streams only pay seen-set memory plus an O(total) snapshot every
-    * [[snapshotEvery]] batches — softer, but still worth a pointer at
-    * the compaction remedies.
+    * metadata-sized: the stream pays seen-set memory plus an O(total)
+    * snapshot every [[snapshotEvery]] batches.
     */
-  private val warnedOffsetScale = new java.util.concurrent.atomic.AtomicBoolean(false)
-  private def warnIfSeenHeavy(n: Int, legacy: Boolean): Unit =
+  private val warnedSeenHeavy = new java.util.concurrent.atomic.AtomicBoolean(false)
+  private def warnIfSeenHeavy(n: Int): Unit =
     if (n > GraftMicroBatchStream.OffsetFileWarnThreshold &&
-        warnedOffsetScale.compareAndSet(false, true))
+        warnedSeenHeavy.compareAndSet(false, true))
       org.slf4j.LoggerFactory.getLogger(classOf[GraftMicroBatchStream]).warn(
-        s"graft stream over ${store.base}/$key now tracks $n files" +
-          (if (legacy)
-            " per checkpoint offset (~" + (n / 12288 + 1) + " MiB of offset " +
-              "json per micro-batch under this checkpoint's legacy offset " +
-              "format; a FRESH checkpoint uses delta-sized offsets)."
-          else
-            s" (delta-sized offsets; the cost is seen-set memory and an " +
-              s"O(files) seen-log snapshot every $snapshotEvery batches).") +
-          " Compact the item (Store.compactBuckets / CALL " +
-          "<cat>.compact_buckets) to shrink the list, or stream via " +
-          "Store.readStream for indefinitely-growing items.")
+        s"graft stream over ${store.base}/$key now tracks $n files (delta-sized " +
+          "offsets; the cost is seen-set memory and an O(files) seen-log " +
+          s"snapshot every $snapshotEvery batches). Compact the item " +
+          "(Store.compactBuckets / CALL <cat>.compact_buckets) to shrink the list.")
 
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = start match {
-    case legacy: GraftFilesOffset =>
-      // pre-round-12 checkpoint: keep its cumulative format verbatim
-      val seen = legacy.files.toSet
-      val fresh = listing().filterNot(seen)
-      val admitted = limit match {
-        case mf: ReadMaxFiles => fresh.take(mf.maxFiles())
-        case _ => fresh
-      }
-      val next = (seen ++ admitted).toSeq.sorted
-      warnIfSeenHeavy(next.size, legacy = true)
-      legacySeen = next.toSet
-      new GraftFilesOffset(next)
-    case v2: GraftSeqOffset =>
-      val seen = seenAsOf(v2.seq)
-      val fresh = listing().filterNot(seen)
-      val admitted = limit match {
-        case mf: ReadMaxFiles => fresh.take(mf.maxFiles())
-        case _ => fresh
-      }
-      if (admitted.isEmpty) v2 // identical json ⇒ Spark plans no batch
-      else {
-        val nextSeq = v2.seq + 1
-        // durably record the delta BEFORE the offset can be committed —
-        // the recovery contract documented on GraftSeenLog
-        seenLog.writeDelta(nextSeq, admitted)
-        seen ++= admitted
-        lastSeq = nextSeq
-        seenLog.maybeSnapshot(nextSeq, seen, seen.size)
-        warnIfSeenHeavy(seen.size, legacy = false)
-        new GraftSeqOffset(nextSeq, admitted)
-      }
+  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
+    val v2 = start.asInstanceOf[GraftSeqOffset]
+    val seen = seenAsOf(v2.seq)
+    val fresh = listing().filterNot(seen)
+    val admitted = limit match {
+      case mf: ReadMaxFiles => fresh.take(mf.maxFiles())
+      case _ => fresh
+    }
+    if (admitted.isEmpty) v2 // identical json ⇒ Spark plans no batch
+    else {
+      val nextSeq = v2.seq + 1
+      // durably record the delta BEFORE the offset can be committed —
+      // the recovery contract documented on GraftSeenLog
+      seenLog.writeDelta(nextSeq, admitted)
+      seen ++= admitted
+      lastSeq = nextSeq
+      seenLog.maybeSnapshot(nextSeq, seen, seen.size)
+      warnIfSeenHeavy(seen.size)
+      new GraftSeqOffset(nextSeq, admitted)
+    }
   }
-
-  /** Legacy-format seen set, tracked so progress reporting stays
-    * informative for pre-round-12 checkpoints (whose latestOffset path
-    * never touches `seenSet` — without this, reportLatestOffset would
-    * return null for the life of an upgraded long-lived stream).
-    */
-  @volatile private var legacySeen: Set[String] = _
 
   /** Informational only (progress reporting): current position plus
     * the backlog size — never committed, never deserialized by Spark.
     */
-  override def reportLatestOffset(): Offset = {
-    val (known, at) =
-      if (seenSet != null) (seenSet.contains(_: String), lastSeq)
-      else if (legacySeen != null) (legacySeen.contains(_: String), legacySeen.size.toLong)
-      else return null
-    // a FRESH listing by design (GraftStreamSpec pins that a backlog
-    // appended between triggers shows up here immediately): the pending
-    // metric costs one extra LIST per progress event — the freshness of
-    // an ops-facing backlog gauge is worth it, and a deployment that
-    // disagrees can ignore progress events, not the other way around
-    val pending = listing().count(f => !known(f))
-    new Offset {
-      override def json(): String = s"""{"v":2,"seq":$at,"pending":$pending}"""
+  override def reportLatestOffset(): Offset =
+    if (seenSet == null) null
+    else {
+      val (known, at) = (seenSet, lastSeq)
+      // a FRESH listing by design (GraftStreamSpec pins that a backlog
+      // appended between triggers shows up here immediately): the
+      // pending metric costs one extra listing per progress event — the
+      // freshness of an ops-facing backlog gauge is worth it, and a
+      // deployment that disagrees can ignore progress events, not the
+      // other way around
+      val pending = listing().count(f => !known(f))
+      new Offset {
+        override def json(): String = s"""{"v":2,"seq":$at,"pending":$pending}"""
+      }
     }
-  }
 
-  override def deserializeOffset(json: String): Offset = {
-    val t = json.trim
-    if (t.startsWith("[")) GraftFilesOffset.parse(t) else GraftSeqOffset.parse(t)
-  }
+  /** A `[...]` offset is the cumulative file-list format of checkpoints
+    * written before the seq + delta format: refused, naming the remedy.
+    */
+  override def deserializeOffset(json: String): Offset =
+    if (json.trim.startsWith("["))
+      throw new IllegalStateException(
+        s"graft stream checkpoint at $checkpointLocation holds a cumulative " +
+          "file-list offset, a format this version no longer reads; start the " +
+          "stream from a fresh checkpoint (rows already delivered are read again)")
+    else GraftSeqOffset.parse(json)
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val fresh = end match {
-      // the batch's input rides in the end offset itself (see
-      // GraftSeqOffset) — replay never consults a listing or the log
-      case v2: GraftSeqOffset => v2.delta
-      case legacy: GraftFilesOffset =>
-        val seen = start match {
-          case f: GraftFilesOffset => f.files.toSet
-          // batch-0 REPLAY of a legacy checkpoint: Spark passes
-          // initialOffset() (a GraftSeqOffset on this build) as the
-          // start when no offset was committed yet — nothing is seen;
-          // an unconditional cast bricked exactly the upgraded
-          // checkpoint this branch exists to keep alive
-          case _ => Set.empty[String]
-        }
-        legacy.files.filterNot(seen)
-    }
+    // the batch's input rides in the end offset itself (see
+    // GraftSeqOffset) — replay never consults a listing or the log
+    val fresh = end.asInstanceOf[GraftSeqOffset].delta
     if (fresh.isEmpty) Array.empty
     else {
       // a batch replayed from its offset after a restart names files no

@@ -69,7 +69,7 @@ import scala.jdk.CollectionConverters._
   *     writer a write task runs ([[parquetWriter]], [[writeFile]]),
   *     driven by the Store's mutation kernel on the calling thread or
   *     inside its tasks, so every Store write has the write support,
-  *     codec and session conf (timestamp type, rebase mode) of a
+  *     codec and session conf (timestamp type, calendar mode) of a
   *     `DataFrameWriter` without Spark's committer: no `_temporary`
   *     staging, no `.crc` twins, no forked `chmod`.
   *  6. `CheckpointFileManager` — [[GraftCheckpointFileManager]] writes a
@@ -302,7 +302,7 @@ private[sources] object SparkInternals {
   /** The Parquet writer of a write task, prepared on the driver:
     * `ParquetFileFormat.prepareWrite`'s `OutputWriterFactory` and the
     * job conf it prepared — the same write support, session conf
-    * (timestamp type, rebase mode) and codec (`options`, as a
+    * (timestamp type, calendar mode) and codec (`options`, as a
     * `DataFrameWriter` would pass them) a write task uses. Both are
     * serializable ([[SerializableConfiguration]]), so [[writeFile]] can
     * run on the driver or inside a task. When `root` is on the local

@@ -108,12 +108,13 @@ object StoreDemo {
     try Store.open(spark, baseDir, cols = Some(Seq("X" -> DoubleType)), index = Some("D"))
     catch { case e: SchemaError => println(s"[demo] schema conflict rejected: ${e.getMessage}") }
 
-    // every rewrite above (append, compactIfNeeded) committed a fresh
-    // v-<id> dir with one _current pointer overwrite; the store is clean
-    val current = store.versionsOf("events").filter(_.current).map(_.id).mkString
+    // every mutation above committed a fresh v-<id> version manifest
+    // with one _current pointer overwrite; the store is clean
+    val current = store.versionsOf("events").filter(_.current)
+      .map(v => s"${v.id} (${v.files} files)").mkString
     println(
-      s"[demo] versions: current=$current (pointer-swap commits); " +
-        s"vacuum sweeps ${store.vacuum(0L)} orphans on a clean store")
+      s"[demo] versions: current manifest=$current (pointer-PUT commits); " +
+        s"vacuum sweeps ${store.vacuum(0L)} files on a clean store")
 
     // SQL front door (DataSource V2): the item as a table, with
     // index-range predicates pruned to bucket dirs exactly like

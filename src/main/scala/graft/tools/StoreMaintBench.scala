@@ -14,9 +14,9 @@ import java.sql.Timestamp
   * bucket). It also times each store's 12 M-row write and its eight
   * non-local appendNewOnly calls into the hot bucket, the write and
   * compact of the same 12 M rows as one unbucketed item (a single unit
-  * of the mutation kernel, so each runs in one task), and vacuum's
-  * orphan-version sweep, whose cost must track the orphan count, never
-  * the history size. Run:
+  * of the mutation kernel, so each runs in one task), vacuum's orphan
+  * sweep, whose cost must track the orphan count, never the history
+  * size, a full describe and a prune of the oldest 12 months. Run:
   *   sbt "runMain graft.tools.StoreMaintBench /tmp/maintbench"
   * Prints one line per strategy; the receipt lives in PLANS.md.
   */
@@ -115,15 +115,19 @@ object StoreMaintBench {
     println(s"[maintbench] rows flat=${s3("EVENTS").count()} (expect ${months * rowsPerMonth})")
     ToolUtil.wipeDir(baseDir + "-flat")
 
-    // orphan sweep: plant k version dirs no pointer names — exactly the
-    // debris a versionSwap crashed before its pointer write leaves —
-    // and time vacuum(0) at two orphan counts over the SAME 48-month
-    // history. Equal-size orphans, so a constant cost-per-orphan line
-    // means the sweep scales with debris, not with the item.
+    // orphan sweep: plant k data files no manifest names — exactly the
+    // debris a mutation that died before its commit leaves — and time
+    // vacuum(0) at two orphan counts over the SAME 48-month history.
+    // Equal-size orphans, so a constant cost-per-orphan line means the
+    // sweep scales with debris, not with the item.
     def plantOrphans(k: Int, tag: String): Unit =
       (1 to k).foreach { i =>
-        monthData(0, 1000 + i).limit(20000).write
-          .parquet(s"$s2dir/items/EVENTS/v-$tag$i")
+        val tmp = s"$baseDir-orphan"
+        monthData(0, 1000 + i).limit(20000).coalesce(1).write.mode("overwrite").parquet(tmp)
+        val part = new java.io.File(tmp).listFiles().find(_.getName.endsWith(".parquet")).get
+        java.nio.file.Files.copy(part.toPath, java.nio.file.Paths.get(
+          s"$s2dir/items/EVENTS/data/__bucket=2020-01/part-$tag$i.parquet"))
+        ToolUtil.wipeDir(tmp)
       }
     plantOrphans(2, "orphan-a")
     timed("vacuum 2 orphans") {
@@ -137,6 +141,18 @@ object StoreMaintBench {
       println(s"[maintbench] swept: ${s2.vacuum(0L)} (expect 0 — steady state)")
     }
     println(s"[maintbench] rows after sweeps=${s2("EVENTS").count()} (unchanged)")
+
+    // metadata over the whole history, then retention of its oldest year
+    timed("describe (full)") {
+      println(s"[maintbench] describe rows=${s2.describe("EVENTS").rows}")
+    }
+    timed("prune 12 months") {
+      val n = s2.prune("EVENTS", Timestamp.from(java.time.LocalDate.parse("2021-01-01")
+        .atStartOfDay(java.time.ZoneOffset.UTC).toInstant))
+      println(s"[maintbench] buckets pruned: $n (expect 12)")
+    }
+    println(s"[maintbench] rows after prune=${s2("EVENTS").count()} " +
+      s"(expect ${(months - 12) * rowsPerMonth + hotAppends * rowsPerMonth})")
 
     spark.stop()
   }

@@ -15,11 +15,10 @@ import org.apache.spark.sql.SparkSession
   *  - `hold <storeDir> <key> <flagFile>` — acquire the item's writer
   *    lease, touch the flag file, park forever (renewer keeps the
   *    lease live until the parent kills the process).
-  *  - `swapcrash <objstoreDir> <key> <bucket>` — run compactBuckets()
-  *    over the objstore:// filesystem with a crash armed INSIDE the
-  *    `__bucket=<bucket>` live→trash rename's delete phase; the armed
-  *    crash calls Runtime.halt(42), so the JVM dies mid-copy+delete
-  *    leaving a genuinely split bucket directory.
+  *  - `manifestcrash <objstoreDir> <key>` — run compactBuckets() over
+  *    the objstore:// filesystem and halt(43) the instant its first unit
+  *    manifest create begins: every rewritten data file is written, no
+  *    manifest and no pointer is.
   *  - `appendloop <storeDir> <key> <nBatches> <seed>` — append
   *    `nBatches` leased 50-row batches ([[TwoProcFixtures.batch]])
   *    while the parent does the same with a different seed; prints
@@ -44,23 +43,19 @@ object CrashChild {
             java.nio.file.Paths.get(flag), "HELD".getBytes("UTF-8"))
           Thread.sleep(3600000L) // parked: the parent hard-kills us
         }
-      case "swapcrash" =>
-        val Array(_, dir, key, bucket) = args
+      case "manifestcrash" =>
+        val Array(_, dir, key) = args
         spark.sparkContext.hadoopConfiguration
           .set("fs.objstore.impl", classOf[ObjStoreFs].getName)
         val s = Store.open(spark, dir) // existing store: persisted schema
-        // die inside the bucket's live→trash move-out, after one data
-        // file was already deleted from the live dir — the half-moved
-        // state only a copy+delete "rename" can produce
-        ObjStoreFs.crash = Some(ObjStoreFs.Crash(
-          s"__bucket=$bucket", phase = "delete", afterFiles = 1, halt = true))
+        ObjStoreFs.haltOnCreatePath = Some(s"items/$key/u-")
         s.compactBuckets(key, maxFilesPerBucket = 1)
-        // reaching here means the crash never fired — loud failure
-        System.err.println("CrashChild: compactBuckets completed, crash never armed/matched")
+        // reaching here means the halt never fired — loud failure
+        System.err.println("CrashChild: compactBuckets completed, manifest halt never fired")
         sys.exit(1)
       case "versioncrash" =>
-        // die at the COMMIT point of a version swap — the new version
-        // dir is fully materialized, and the process halts the instant
+        // die at the COMMIT point of a rewrite — the new version's files
+        // and manifests are all written, and the process halts the instant
         // the `_current` pointer create begins. The parent must keep
         // reading the OLD version exactly and sweep the orphan.
         val Array(_, dir, key) = args
@@ -68,13 +63,13 @@ object CrashChild {
           .set("fs.objstore.impl", classOf[ObjStoreFs].getName)
         val s = Store.open(spark, dir) // existing store
         ObjStoreFs.haltOnCreatePath = Some(s"items/$key/_current")
-        s.compact(key) // compact = versionSwap
+        s.compact(key)
         System.err.println("CrashChild: compact completed, pointer halt never fired")
         sys.exit(1)
       case "ctascrash" =>
         // staged CTAS through the SQL catalog: die the instant the
-        // `_current` pointer create begins — the new item's version dir
-        // is fully materialized (the insert completed), but the commit
+        // `_current` pointer create begins — the new item's version is
+        // fully written (the insert completed), but the commit
         // never lands. The parent must see NO item at all.
         val Array(_, dir, key) = args
         spark.sparkContext.hadoopConfiguration
@@ -89,9 +84,9 @@ object CrashChild {
         // randomized cross-JVM lifecycle writer (r16 verdict task #7):
         // the same op-sequence search as StoreProps' lifecycle fuzz,
         // but the crashes are REAL process death — each op may arm a
-        // halt=true ObjStoreFs crash inside a rename's copy/delete
-        // phase, or a halt at the `_current` pointer create, so the
-        // JVM dies exactly where a preempted executor would. The
+        // halt at a data file or manifest create, at the `_current`
+        // pointer create, or inside a delete, so the JVM dies exactly
+        // where a preempted executor would. The
         // parent replays the truth from this process's confirmed-op
         // log and model-checks the recovered store. Ops print START
         // before and OK after, flushed, because nothing after a halt
@@ -107,32 +102,21 @@ object CrashChild {
           val op = rnd.nextInt(10)
           val b = rnd.nextInt(4)
           // arm AFTER drawing op/b so the sequence is log-reconstructable
-          if (armKind == 0) { // p=1/8: die inside any rename that occurs
-            // (the item-level ops rename no dir — the "items/K" and
-            // ".tmp-" targets must never fire here; the only renames
-            // are the kernel's landing renames of its hidden data
-            // files, so a ".graft-tmp-" target dies mid-landing)
-            val target = Seq("items/K", ".tmp-", ObjStoreFs.HiddenPrefix)(rnd.nextInt(3))
-            val phase = if (rnd.nextBoolean()) "copy" else "delete"
-            ObjStoreFs.crash = Some(ObjStoreFs.Crash(
-              target, phase, Seq(0, 0, 1, 2)(rnd.nextInt(4)),
-              srcExcludes = Option.when(target != ObjStoreFs.HiddenPrefix)(ObjStoreFs.HiddenPrefix),
-              halt = true))
+          if (armKind == 0) { // p=1/8: die at a manifest create — a
+            // unit manifest (the data files are written) or the version
+            // manifest (every manifest but it is written)
+            ObjStoreFs.haltOnCreatePath = Some(Seq("items/K/u-", "items/K/v-")(rnd.nextInt(2)))
           } else if (armKind == 1) { // p=1/8: die mid-MATERIALIZATION —
-            // at a data-file create under the item's version tree
-            // (compact's fresh v-dir, or an append's hidden in-place
-            // file), leaving uncommitted debris for the hidden-segment
-            // filters and the orphan sweep
-            ObjStoreFs.haltOnCreatePath = Some("items/K/v-")
+            // at a data file create, leaving files no manifest names
+            ObjStoreFs.haltOnCreatePath = Some("items/K/data/")
           } else if (armKind == 2) { // p=1/8: die AT the pointer commit
             ObjStoreFs.haltOnCreatePath = Some("items/K/_current")
-          } else if (armKind == 3) { // p=1/8: die mid-SWEEP — at a
-            // version-dir delete (vacuum's orphan sweep, or a swap's
-            // old-version reclaim), after 0-1 matching deletes pass so a
-            // multi-orphan sweep dies PARTWAY; the recovery vacuum must
-            // finish the half-done sweep it inherits
+          } else if (armKind == 3) { // p=1/8: die inside a delete — a
+            // commit's deletes of what it superseded, or vacuum's
+            // sweep — after 0-1 matching deletes pass, so a multi-file
+            // delete dies PARTWAY; the recovery vacuum must finish it
             ObjStoreFs.deleteSkips.set(rnd.nextInt(2))
-            ObjStoreFs.haltOnDeletePath = Some("items/K/v-")
+            ObjStoreFs.haltOnDeletePath = Some("items/K/")
           }
           op match {
             case 0 | 1 | 2 | 3 =>
@@ -149,12 +133,11 @@ object CrashChild {
               // between ops exercises orphan reclaim against whatever
               // debris earlier arms left, and the delete arm above can
               // kill THIS op partway through its sweep. Rows never
-              // change: vacuum touches only non-current versions and
-              // staging, which is exactly what the model asserts.
+              // change: vacuum touches only files the current version
+              // does not name, which is exactly what the model asserts.
               say(s"FUZZLIFE_START vacuum -")
               s.vacuum(0L)
           }
-          ObjStoreFs.crash = None
           ObjStoreFs.haltOnCreatePath = None
           ObjStoreFs.haltOnDeletePath = None
           say("FUZZLIFE_OK")

@@ -139,25 +139,19 @@ class GraftCatalogSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft-catalog-hist").toString
     val s = Store.open(spark, dir)
     s.write("MSFT", bars(15))
-    // simulate the debris a swap crashed between pointer-commit and
-    // predecessor-delete leaves: a complete but unreferenced v-dir
+    // simulate the debris a commit that died between its pointer PUT
+    // and deleting its predecessor leaves: a complete but unreferenced
+    // version manifest (a copy of the current one)
     val itemDir = java.nio.file.Paths.get(dir, "items", "MSFT")
-    val curDir = java.nio.file.Files.list(itemDir).iterator().asScala
-      .filter(p => java.nio.file.Files.isDirectory(p) &&
-        p.getFileName.toString.startsWith("v-")).next()
-    val orphan = itemDir.resolve("v-" + java.util.UUID.randomUUID().toString)
-    java.nio.file.Files.walk(curDir).iterator().asScala.foreach { p =>
-      val dst = orphan.resolve(curDir.relativize(p).toString)
-      if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(dst)
-      else java.nio.file.Files.copy(p, dst)
-    }
+    val cur = new String(java.nio.file.Files.readAllBytes(itemDir.resolve("_current")), "UTF-8").trim
+    java.nio.file.Files.copy(itemDir.resolve(cur), itemDir.resolve("v-" + java.util.UUID.randomUUID()))
     spark.conf.set("spark.sql.catalog.gcath", "graft.sources.v2.GraftCatalog")
     spark.conf.set("spark.sql.catalog.gcath.path", dir)
     val vs = spark.sql("CALL gcath.versions(item => 'MSFT')").collect()
     assert(vs.length == 2, s"expected current + crash orphan, got ${vs.length}")
     assert(vs.count(_.getBoolean(1)) == 1, "exactly one current version")
-    val cur = vs.find(_.getBoolean(1)).get
-    assert(cur.getLong(2) > 0L && cur.getLong(3) > 0L)
+    val current = vs.find(_.getBoolean(1)).get
+    assert(current.getLong(2) > 0L && current.getLong(3) > 0L)
     assert(vs.forall(_.getString(0).startsWith("v-")))
     // vacuum(0) reclaims the predecessor; versions then reports just one
     assert(spark.sql("CALL gcath.vacuum(older_than_ms => 0)").collect()(0).getLong(0) >= 1L)
@@ -280,15 +274,11 @@ class GraftCatalogSpec extends AnyFunSuite {
     assert(d.getTimestamp(1) == st.minIndex.get && d.getTimestamp(2) == st.maxIndex.get)
     assert(d.getLong(3) == st.files && d.getLong(4) == st.bytes)
 
-    // vacuum: fabricate crash debris (orphaned staged-swap dirs, the
-    // kill-between-swap-and-delete shape), then recover it from SQL
-    val staging = java.nio.file.Paths.get(dir, ".staging")
-    java.nio.file.Files.createDirectories(staging)
-    for (n <- Seq("MSFT.tmp-dead-beef", "MSFT.old-cafe-f00d")) {
-      val dd = staging.resolve(n)
-      java.nio.file.Files.createDirectories(dd)
-      java.nio.file.Files.write(dd.resolve("part-orphan.parquet"), Array[Byte](1, 2, 3))
-    }
+    // vacuum: fabricate crash debris (data files a mutation wrote before
+    // dying ahead of its commit), then reclaim it from SQL
+    val data = java.nio.file.Paths.get(dir, "items", "MSFT", "data", "__bucket=2015-01")
+    for (n <- Seq("part-dead-beef.parquet", "part-cafe-f00d.parquet"))
+      java.nio.file.Files.write(data.resolve(n), Array[Byte](1, 2, 3))
     assert(spark.sql("CALL gcatm.vacuum()").collect()(0).getLong(0) == 0L,
       "default vacuum is age-guarded — fresh debris survives")
     assert(spark.sql("CALL gcatm.vacuum(older_than_ms => 0)").collect()(0).getLong(0) == 2L)
@@ -429,7 +419,7 @@ class GraftCatalogSpec extends AnyFunSuite {
     s.write("SRC", bars(40, seed = 21))
     spark.conf.set("spark.sql.catalog.gvcat", "graft.sources.v2.GraftCatalog")
     spark.conf.set("spark.sql.catalog.gvcat.path", dir)
-    // happy path: data staged as a pointer-less v-dir, the _current
+    // happy path: data staged as a pointer-less version, the _current
     // pointer PUT at commitStagedChanges makes it visible atomically
     spark.sql("CREATE TABLE gvcat.CTAS_V AS SELECT * FROM gvcat.SRC WHERE VOLUME >= 1010")
     assert(s.exists("CTAS_V"))
@@ -440,7 +430,7 @@ class GraftCatalogSpec extends AnyFunSuite {
     assert(s.exists("CTAS0"))
     assert(spark.sql("SELECT count(*) FROM gvcat.CTAS0").as[Long].head() == 0L)
     // failure mid-CTAS: no pointer ever lands -> the item never exists;
-    // whatever the write staged is an orphan v-dir the abort deletes
+    // whatever the write staged is orphan files the abort deletes
     // (and vacuum would sweep after a crash that skipped the abort)
     intercept[Exception](spark.sql(
       """CREATE TABLE gvcat.CTAS_VFAIL AS

@@ -94,9 +94,9 @@ class GraftStreamSpec extends AnyFunSuite {
 
   test("in-flight committer files under _temporary are invisible to stream offsets") {
     // a concurrent write materializes task files under a `_temporary/`
-    // DIRECTORY with ordinary file names before commit — the listing
-    // must treat hidden-ness per path SEGMENT, or the stream would
-    // read uncommitted (and soon-renamed-away) data
+    // DIRECTORY with ordinary file names before commit — the stream
+    // takes its files from the manifests, so it never reads what no
+    // commit names
     val dir = tmpDir()
     val s = Store.open(spark, dir, bucket = Some("month"))
     s.write("MSFT", bars(10))
@@ -319,13 +319,10 @@ class GraftStreamSpec extends AnyFunSuite {
   }
 
   test("offsets round-trip their file lists exactly") {
-    import graft.sources.v2.{GraftFilesOffset, GraftSeqOffset}
+    import graft.sources.v2.GraftSeqOffset
     val files = Seq(
-      "file:/store/items/EVENTS/__bucket=2024-01/part-0001.snappy.parquet",
-      "file:/store/items/EVENTS/__bucket=2024-02/part-0002.snappy.parquet")
-    val o = new GraftFilesOffset(files)
-    assert(GraftFilesOffset.parse(o.json()).files == files)
-    assert(GraftFilesOffset.parse(new GraftFilesOffset(Nil).json()).files.isEmpty)
+      "file:/store/items/EVENTS/data/__bucket=2024-01/part-0001.snappy.parquet",
+      "file:/store/items/EVENTS/data/__bucket=2024-02/part-\"0002\\.snappy.parquet")
     val s = new GraftSeqOffset(17L, files)
     val back = GraftSeqOffset.parse(s.json())
     assert(back.seq == 17L && back.delta == files)
@@ -493,47 +490,28 @@ class GraftStreamSpec extends AnyFunSuite {
       s"expected all $nFiles files exactly once across batches, got ${all.size}")
   }
 
-  test("legacy cumulative-offset checkpoints keep their format and semantics") {
-    import graft.sources.v2.{GraftFilesOffset, GraftMicroBatchStream}
-    import org.apache.spark.sql.connector.read.streaming.ReadLimit
+  test("legacy cumulative-offset checkpoints are refused loudly, naming the fresh-checkpoint remedy") {
+    import graft.sources.v2.GraftMicroBatchStream
     val dir = tmpDir()
     val s = Store.open(spark, dir, bucket = Some("month"))
-    s.write("MSFT", bars(40)) // ≥ 2 files
-    val ckpt = tmpDir() + "/srcckpt"
-    val st = new GraftMicroBatchStream(s, "MSFT", s.schema, None, ckpt)
-    // a pre-round-12 checkpoint recovers as the json-array shape
-    val start = st.deserializeOffset("[]")
-    assert(start.isInstanceOf[GraftFilesOffset])
-    val end = st.latestOffset(start, ReadLimit.allAvailable())
-    // the emitted offset stays legacy-cumulative for this checkpoint
-    val endFiles = end.asInstanceOf[GraftFilesOffset].files
-    assert(endFiles.size >= 2)
-    val parts = st.planInputPartitions(start, end)
-    assert(parts.nonEmpty)
-    // batch-0 REPLAY of a legacy checkpoint: Spark passes
-    // initialOffset() (the current GraftSeqOffset shape) as start when
-    // no offset is committed yet — an unconditional GraftFilesOffset
-    // cast threw ClassCastException here, permanently bricking exactly
-    // the upgraded checkpoint the legacy path exists to keep alive
-    val replay = st.planInputPartitions(st.initialOffset(), end)
-    assert(replay.length == parts.length,
-      "batch-0 replay with a seq-shaped start must plan the same legacy input")
-    // steady state: no new files → identical json → Spark plans no batch
-    val again = st.latestOffset(end, ReadLimit.allAvailable())
-    assert(again.json() == end.json())
-    // legacy mode never creates the v2 seen log
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(ckpt, "graft-seen")))
-    // progress reporting stays informative on the legacy path (round-13
-    // ADVICE low: it used to return null permanently for upgraded
-    // checkpoints) — fully drained here, so pending must be 0
-    val rep = st.reportLatestOffset()
-    assert(rep != null, "legacy checkpoints must still report progress")
-    assert(rep.json().contains("\"pending\":0"), rep.json())
-    // ...and counts a genuine backlog once new files land
-    s.append("MSFT", bars(70).where($"date" >= "2015-02-10"))
-    val rep2 = st.reportLatestOffset()
-    assert(rep2 != null && !rep2.json().contains("\"pending\":0"), rep2.json())
+    s.write("MSFT", bars(40))
+    val st = new GraftMicroBatchStream(s, "MSFT", s.schema, None, tmpDir() + "/srcckpt")
+    // the json-array shape of checkpoints written before seq + delta
+    for (legacy <- Seq("[]", """["file:/store/items/MSFT/part-0.parquet"]""")) {
+      val e = intercept[IllegalStateException](st.deserializeOffset(legacy))
+      assert(e.getMessage.contains("fresh checkpoint"), e.getMessage)
+    }
+    // end to end: a checkpoint whose committed source offset has that
+    // shape fails the restarted stream with the same message
+    val (out, ckpt) = (tmpDir() + "/out", tmpDir() + "/ckpt")
+    drainTo(spark, dir, out, ckpt)
+    val log = java.nio.file.Paths.get(ckpt, "offsets", "0")
+    val lines = new String(java.nio.file.Files.readAllBytes(log), "UTF-8").split("\n")
+    java.nio.file.Files.write(log, (lines.init :+ "[]").mkString("\n").getBytes("UTF-8"))
+    s.appendNewOnly("MSFT", bars(50))
+    val e = intercept[Exception](drainTo(spark, dir, out, ckpt))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => Option(c.getMessage).exists(_.contains("fresh checkpoint"))), e.toString)
   }
 
   private val ManagerKey = "spark.sql.streaming.checkpointFileManagerClass"

@@ -1009,6 +1009,7 @@ class GraftTableSpec extends AnyFunSuite {
     val rogue = itemDir.resolve("__bucket=__HIVE_DEFAULT_PARTITION__")
     java.nio.file.Files.createDirectories(rogue)
     java.nio.file.Files.copy(someFile, rogue.resolve("part-rogue.snappy.parquet"))
+    LiveDir.plant(s, "MSFT", new org.apache.hadoop.fs.Path(rogue.resolve("part-rogue.snappy.parquet").toUri))
 
     val t = spark.read.format("graft").option("item", "MSFT").load(dir)
     val top = t.orderBy($"DATE".desc).limit(5)

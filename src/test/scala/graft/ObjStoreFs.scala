@@ -10,14 +10,16 @@ import java.net.URI
   * to the local filesystem, so Spark's parquet data plane runs
   * unmodified through it.
   *
-  * Two instruments for specs:
+  * Instruments for specs:
   *  - every rename is recorded in [[ObjStoreFs.renames]] (src, dst), so
-  *    a spec can assert which renames a code path performs (e.g. the
-  *    item-level write path performs NO control-plane rename);
-  *  - [[ObjStoreFs.crash]] arms an injected crash at an exact point
-  *    inside a matching rename — after N files of the copy phase or
-  *    after N files of the delete phase — leaving the genuine partial
-  *    on-disk state a process death would leave there.
+  *    a spec can assert that a code path performs none;
+  *  - [[ObjStoreFs.afterWrite]] pauses a writer after each file it
+  *    closes, and [[ObjStoreFs.beforeDelete]] before each delete — a
+  *    spec can read the store there, or throw [[ObjStoreFs.InjectedCrash]]
+  *    to model a process death at that point;
+  *  - `haltOnCreatePath`/`haltOnDeletePath` are REAL process death
+  *    (`Runtime.halt`) at a matching create or delete, for the forked
+  *    JVMs of the two-process specs.
   *
   * Registered under the `objstore://` scheme via
   * `fs.objstore.impl = graft.ObjStoreFs` on the session's
@@ -43,7 +45,7 @@ class ObjStoreFs extends RawLocalFileSystem {
     super.listStatus(f).map(solid)
 
   /** Recursive file listing (files only — object stores have no real
-    * directories), stable order so crash points are deterministic.
+    * directories), stable order.
     */
   private def listRec(p: HPath): Seq[FileStatus] = {
     val st = getFileStatus(p)
@@ -66,25 +68,10 @@ class ObjStoreFs extends RawLocalFileSystem {
     org.apache.hadoop.io.IOUtils.copyBytes(in, out, 8192, true)
   }
 
-  private def maybeCrash(src: HPath, phase: String, n: Int): Unit =
-    ObjStoreFs.crash.foreach { c =>
-      if (src.toUri.getPath.contains(c.srcContains) &&
-          !c.srcExcludes.exists(src.toUri.getPath.contains) && c.phase == phase &&
-          n == c.afterFiles) {
-        ObjStoreFs.crash = None // one-shot, like the process death it models
-        // halt = REAL process death (no finally blocks, no cleanup —
-        // the two-process crash spec uses this in a forked child JVM);
-        // otherwise model it as a thrown error inside one JVM
-        if (c.halt) Runtime.getRuntime.halt(42)
-        throw new ObjStoreFs.InjectedCrash(
-          s"injected crash: rename of $src died in $phase phase after $n files")
-      }
-    }
-
-  // pointer-commit crash point: REAL process death at the instant a
-  // matching object is about to be created — armed by the two-process
-  // versioncrash child to die between a fully-materialized new version
-  // dir and its `_current` pointer commit (the commit IS a create)
+  // commit crash point: REAL process death at the instant a matching
+  // object is about to be created — armed by the two-process children
+  // to die at a manifest create or at the `_current` pointer commit
+  // (the commit IS a create)
   private def maybeHaltOnCreate(f: HPath): Unit =
     ObjStoreFs.haltOnCreatePath.foreach { sub =>
       if (f.toUri.getPath.contains(sub)) Runtime.getRuntime.halt(43)
@@ -95,7 +82,7 @@ class ObjStoreFs extends RawLocalFileSystem {
       progress: org.apache.hadoop.util.Progressable)
       : org.apache.hadoop.fs.FSDataOutputStream = {
     maybeHaltOnCreate(f)
-    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+    paused(f, super.create(f, overwrite, bufferSize, replication, blockSize, progress))
   }
 
   override def create(f: HPath,
@@ -104,22 +91,27 @@ class ObjStoreFs extends RawLocalFileSystem {
       blockSize: Long, progress: org.apache.hadoop.util.Progressable)
       : org.apache.hadoop.fs.FSDataOutputStream = {
     maybeHaltOnCreate(f)
-    super.create(f, permission, overwrite, bufferSize, replication,
-      blockSize, progress)
+    paused(f, super.create(f, permission, overwrite, bufferSize, replication,
+      blockSize, progress))
   }
 
-  // mid-sweep crash point: REAL process death the instant a matching
-  // DELETE begins — vacuum's orphan-version sweep and versionSwap's
-  // old-version reclaim are pure delete paths a rename crash can never
-  // reach. `deleteSkips` lets the arm pass over the first N matching
-  // deletes so a multi-orphan sweep dies PARTWAY, not at its first
-  // decision (the delete half of a hidden `.graft-tmp-` file's landing
-  // rename is excluded — that's the rename family's territory).
+  // pause point: the writer stops right after the file is closed, while
+  // [[ObjStoreFs.afterWrite]] runs on its thread
+  private def paused(f: HPath, out: org.apache.hadoop.fs.FSDataOutputStream)
+      : org.apache.hadoop.fs.FSDataOutputStream =
+    ObjStoreFs.afterWrite.fold(out)(hook =>
+      new org.apache.hadoop.fs.FSDataOutputStream(out, null) {
+        override def close(): Unit = { super.close(); hook(f) }
+      })
+
+  // mid-delete crash point: REAL process death the instant a matching
+  // DELETE begins — a commit's deletes of what it superseded and
+  // vacuum's sweep are pure delete paths. `deleteSkips` lets the arm
+  // pass over the first N matching deletes so a multi-file delete dies
+  // PARTWAY, not at its first decision.
   private def maybeHaltOnDelete(f: HPath): Unit =
     ObjStoreFs.haltOnDeletePath.foreach { sub =>
-      val p = f.toUri.getPath
-      if (p.contains(sub) && !p.contains(ObjStoreFs.HiddenPrefix) &&
-          ObjStoreFs.deleteSkips.getAndDecrement() <= 0)
+      if (f.toUri.getPath.contains(sub) && ObjStoreFs.deleteSkips.getAndDecrement() <= 0)
         Runtime.getRuntime.halt(44)
     }
 
@@ -127,12 +119,7 @@ class ObjStoreFs extends RawLocalFileSystem {
     if (ObjStoreFs.traceDeletes)
       System.err.println(s"[objstore-delete] recursive=$recursive ${f.toUri.getPath}")
     maybeHaltOnDelete(f)
-    ObjStoreFs.crashOnDeleteOf.foreach { suffix =>
-      if (f.toUri.getPath.endsWith(suffix)) {
-        ObjStoreFs.crashOnDeleteOf = None // one-shot
-        throw new ObjStoreFs.InjectedCrash(s"injected crash: delete of $f")
-      }
-    }
+    ObjStoreFs.beforeDelete.foreach(_(f))
     super.delete(f, recursive)
   }
 
@@ -149,57 +136,26 @@ class ObjStoreFs extends RawLocalFileSystem {
     ObjStoreFs.renames.add((src.toUri.getPath, dst.toUri.getPath))
     if (!exists(src)) return false
     if (exists(dst)) return false // conservative HDFS-style contract
-    val st = getFileStatus(src)
-    if (st.isFile) {
-      maybeCrash(src, "copy", 0)
+    if (getFileStatus(src).isFile) {
       copyFile(src, dst)
-      maybeCrash(src, "delete", 0)
       delete(src, false)
-      true
     } else {
       val files = listRec(src)
-      var i = 0
-      files.foreach { f =>
-        maybeCrash(src, "copy", i)
-        copyFile(f.getPath, new HPath(dst, relativeTo(src, f.getPath)))
-        i += 1
-      }
+      files.foreach(f => copyFile(f.getPath, new HPath(dst, relativeTo(src, f.getPath))))
       if (files.isEmpty) mkdirs(dst) // empty dir: preserve its existence
-      i = 0
-      files.foreach { f =>
-        maybeCrash(src, "delete", i)
-        delete(f.getPath, false)
-        i += 1
-      }
+      files.foreach(f => delete(f.getPath, false))
       delete(src, true) // sweep the now-empty source dir tree
-      true
     }
+    true
   }
 }
 
 object ObjStoreFs {
   val SchemeUri: URI = URI.create("objstore:///")
 
-  /** Every rename the FS saw, (src path, dst path) — includes the
-    * Store's landing renames of single files; specs filter by path
-    * shape.
-    */
+  /** Every rename the FS saw, (src path, dst path). */
   val renames = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
 
-  /** Armed crash point: the next rename whose SOURCE path contains
-    * `srcContains` (and not `srcExcludes` — by default the Store's
-    * landing renames of the hidden files its mutation kernel wrote, so
-    * a point aimed at a swap's dir rename fires there) throws
-    * [[InjectedCrash]] after `afterFiles` files of the given phase
-    * ("copy" | "delete") have been processed, leaving partial state
-    * behind. One-shot: disarms when it fires.
-    */
-  @volatile var crash: Option[Crash] = None
-  final case class Crash(srcContains: String, phase: String, afterFiles: Int,
-      srcExcludes: Option[String] = Some(HiddenPrefix), halt: Boolean = false)
-
-  /** Name prefix of the Store's not-yet-landed data files. */
-  val HiddenPrefix = ".graft-tmp-"
   final class InjectedCrash(msg: String) extends java.io.IOException(msg)
 
   /** When set: `Runtime.halt(43)` the instant a create targets a path
@@ -209,19 +165,25 @@ object ObjStoreFs {
   @volatile var haltOnCreatePath: Option[String] = None
 
   /** When set: `Runtime.halt(44)` the instant a delete targets a path
-    * containing this substring (hidden [[HiddenPrefix]] files
-    * excluded), after letting [[deleteSkips]] matching deletes pass —
-    * real process death partway through a vacuum sweep or an
-    * old-version reclaim (see maybeHaltOnDelete).
+    * containing this substring, after letting [[deleteSkips]] matching
+    * deletes pass — real process death partway through a commit's
+    * deletes or a vacuum sweep (see maybeHaltOnDelete).
     */
   @volatile var haltOnDeletePath: Option[String] = None
   val deleteSkips = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** When set: the next delete whose path ENDS with this suffix throws
-    * [[InjectedCrash]] before deleting anything (one-shot) — an
-    * in-process crash between two deletes of one op.
+  /** When set: runs on the writing thread after each file the FS
+    * writes is closed, with its path — a pause inside a mutation, after
+    * every data file and manifest it writes, in which a spec can read
+    * the store or throw [[InjectedCrash]]. Not one-shot: the hook
+    * decides.
     */
-  @volatile var crashOnDeleteOf: Option[String] = None
+  @volatile var afterWrite: Option[HPath => Unit] = None
+
+  /** When set: runs before each delete, with its path — throwing
+    * [[InjectedCrash]] from it dies before that delete. Not one-shot.
+    */
+  @volatile var beforeDelete: Option[HPath => Unit] = None
 
   /** When set: runs before the next open of a `.parquet` file
     * (one-shot; the action may re-arm it) — a concurrent rewrite landing
@@ -235,8 +197,8 @@ object ObjStoreFs {
   val traceDeletes: Boolean = sys.env.contains("GRAFT_OBJSTORE_TRACE_DELETES")
 
   def reset(): Unit = {
-    renames.clear(); crash = None; haltOnCreatePath = None
-    haltOnDeletePath = None; deleteSkips.set(0); crashOnDeleteOf = None
-    beforeDataOpen = None
+    renames.clear(); haltOnCreatePath = None
+    haltOnDeletePath = None; deleteSkips.set(0)
+    afterWrite = None; beforeDelete = None; beforeDataOpen = None
   }
 }

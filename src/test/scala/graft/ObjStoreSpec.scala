@@ -7,21 +7,18 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.sql.Timestamp
 import scala.jdk.CollectionConverters._
 
-/** The control plane through RAW-OBJECT-STORE rename semantics.
-  * [[ObjStoreFs]] (`objstore://` scheme) implements every directory
-  * rename as a per-object copy followed by a per-object delete — what
-  * `s3a://` really does — with injectable crash points. This spec
-  * proves the two layers of the 100 TB object-store story:
+/** The control plane through RAW-OBJECT-STORE semantics. [[ObjStoreFs]]
+  * (`objstore://` scheme) implements every rename as a per-object copy
+  * followed by a per-object delete — what `s3a://` really does — with
+  * injectable crash and pause points. This spec proves:
   *
-  *  - item-level writes (write/append/appendNewOnly/compact/drop) and
-  *    vacuum perform ZERO control-plane renames — their commit
-  *    primitive is the single-object `_current` pointer PUT, so none of
-  *    the hazards below exist for them;
-  *  - the in-place bucket rewrites that DO rename ([[Store.compactBuckets]]
-  *    and [[Store.prune]]) recover EXACTLY through the manifest-bearing
-  *    marker protocol from crashes inside a non-atomic rename (partial
-  *    live dirs are restored from the complete side, interrupted
-  *    removals are finished, re-created dirs are never clobbered).
+  *  - every mutation, vacuum and drop performs ZERO renames: each
+  *    commits by the single-object `_current` pointer PUT;
+  *  - a reader paused inside a mutation, after any file it writes, sees
+  *    exactly the old version;
+  *  - a mutation that dies after any file it writes leaves the old
+  *    version (or, past the pointer PUT, the new one) and debris that
+  *    vacuum sweeps completely.
   */
 class ObjStoreSpec extends AnyFunSuite {
   lazy val spark: SparkSession = {
@@ -58,12 +55,10 @@ class ObjStoreSpec extends AnyFunSuite {
         "volume" -> org.apache.spark.sql.types.LongType)),
       index = Some("date"), bucket = bucket, chunkRows = chunkRows)
 
-  /** The bucket-swap fixture: a month-bucketed store whose MSFT item
-    * holds 62 rows, all in January 2020, piled into four data files by
-    * a write and an append (25 + 6 rows each) — so
-    * `compactBuckets(maxFilesPerBucket = 1)` rewrites exactly ONE bucket,
-    * into its canonical three files, through the two-marker rename swap:
-    * both renames move several files, so a crash can land between two.
+  /** A month-bucketed store whose MSFT item holds 62 rows, all in
+    * January 2020, piled into four data files by a write and an append
+    * (25 + 6 rows each) — so `compactBuckets(maxFilesPerBucket = 1)`
+    * rewrites exactly ONE bucket, into its canonical three files.
     */
   def piled(dir: String): Store = {
     val s = open(dir, bucket = Some("month"), chunkRows = 25L)
@@ -72,61 +67,146 @@ class ObjStoreSpec extends AnyFunSuite {
     s
   }
 
-  /** Crash-point source path of the fixture's bucket move-out. */
-  val Jan = "__bucket=2020-01"
-
   def compactJan(s: Store): Unit = { s.compactBuckets("MSFT", maxFilesPerBucket = 1); () }
 
-  /** Control-plane renames: anything moving an immediate child of
-    * items/ or .staging/ (item dirs, staged tmp/trash dirs) or a
-    * version dir — as opposed to Spark committer renames, which only
-    * ever move files/dirs deeper inside a single parquet output.
-    */
-  def ctlRenames(base: String): Seq[(String, String)] = {
+  /** Every rename the FS saw under `base`. */
+  def renamesUnder(base: String): Seq[(String, String)] = {
     val root = new HPath(base).toUri.getPath
-    def isCtl(p: String): Boolean = {
-      if (!p.startsWith(root)) return false
-      val segs = p.stripPrefix(root).stripPrefix("/").split("/").toSeq
-      if (segs.headOption.contains(".staging")) segs.length == 2
-      else if (segs.headOption.contains("items"))
-        segs.length <= 2 || (segs.length == 3 && !segs(2).contains("_temporary"))
-      else false
-    }
-    ObjStoreFs.renames.asScala.toSeq.filter { case (s, d) => isCtl(s) || isCtl(d) }
+    ObjStoreFs.renames.asScala.toSeq.filter { case (s, d) => s.startsWith(root) || d.startsWith(root) }
   }
+
+  def injected(t: Throwable): Boolean =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).exists(_.isInstanceOf[ObjStoreFs.InjectedCrash])
+
+  def rows(s: Store, key: String = "MSFT"): Set[Seq[Any]] =
+    s(key).collect().map(_.toSeq).toSet
 
   test("versioned lifecycle: ZERO control-plane renames — commits are pointer PUTs only") {
     ObjStoreFs.reset()
     val dir = objDir()
     val s = open(dir, bucket = Some("month"))
+    def noRenames(op: String): Unit =
+      assert(renamesUnder(dir).isEmpty, s"$op renamed: ${renamesUnder(dir)}")
     s.write("MSFT", bars(100))
+    noRenames("write")
     assert(s("MSFT").count() == 100)
-    s.appendNewOnly("MSFT", bars(150)) // 50 new rows, landed by single-file renames
+    s.appendNewOnly("MSFT", bars(150)) // 50 new rows
+    noRenames("appendNewOnly")
     assert(s("MSFT").count() == 150)
-    s.append("MSFT", bars(200)) // version swap: fresh v-dir + pointer overwrite
+    s.append("MSFT", bars(200))
+    noRenames("append")
     assert(s("MSFT").count() == 200)
-    s.compact("MSFT") // another version swap
+    s.compact("MSFT")
+    noRenames("compact")
     assert(s("MSFT").count() == 200)
     val q = s.query("MSFT",
       Some(Timestamp.valueOf("2020-02-01 00:00:00")),
       Some(Timestamp.valueOf("2020-02-29 00:00:00")))
     assert(q.count() == 29)
     assert(s.describe("MSFT").rows == 200)
-    assert(s.vacuum(0L) == 0L, "clean swaps leave nothing to vacuum")
-    assert(ctlRenames(dir).isEmpty,
-      s"item-level write path must not rename item/staging dirs: ${ctlRenames(dir)}")
-    // the in-place bucket ops are the only renaming paths
     s.appendNewOnly("MSFT", bars(200, seed = 12))
     assert(s.compactBuckets("MSFT", maxFilesPerBucket = 1) >= 1L)
-    assert(ctlRenames(dir).nonEmpty, "compactBuckets swaps bucket dirs by rename")
-    ObjStoreFs.renames.clear()
+    noRenames("compactBuckets")
     assert(s.prune("MSFT", Timestamp.valueOf("2020-02-01 00:00:00")) == 1L)
-    assert(ctlRenames(dir).nonEmpty, "prune moves expired buckets out by rename")
-    ObjStoreFs.renames.clear()
-    s.drop("MSFT") // pointer delete, then data-tree delete — no rename
+    noRenames("prune")
+    val id = s.writeStagedVersion("CTAS", bars(10))
+    s.commitStagedVersion("CTAS", id)
+    s.abortStagedVersion("GONE", s.writeStagedVersion("GONE", bars(10)))
+    noRenames("the staged CTAS")
+    assert(s.vacuum(0L) == 0L, "clean commits leave nothing to vacuum")
+    s.drop("MSFT") // pointer delete, then data-tree delete
     assert(!s.exists("MSFT"))
     assert(s.vacuum(0L) == 0L)
-    assert(ctlRenames(dir).isEmpty, s"drop/vacuum must not rename: ${ctlRenames(dir)}")
+    noRenames("drop and vacuum")
+  }
+
+  test("reader isolation: a query and a describe paused after any file appendNewOnly, prune or compactBuckets writes see exactly the old version") {
+    // each case: a fixture, the op, and the rows the op leaves
+    val cases = Seq[(String, String => Store, Store => Unit)](
+      // two new files, one per bucket: a pause between them is a
+      // reader's chance to see half the batch
+      ("appendNewOnly", dir => { val s = open(dir, Some("month")); s.write("MSFT", bars(62)); s },
+        s => s.appendNewOnly("MSFT", bars(62, seed = 12))),
+      // two expired buckets: the chance to see one gone, one not
+      ("prune", dir => { val s = open(dir, Some("month")); s.write("MSFT", bars(100)); s },
+        s => { assert(s.prune("MSFT", Timestamp.valueOf("2020-03-01 00:00:00")) == 2L); () }),
+      ("compactBuckets", piled, compactJan))
+    for ((name, fixture, op) <- cases) {
+      ObjStoreFs.reset()
+      val s = fixture(objDir())
+      val old = rows(s)
+      val oldRows = s.describe("MSFT").rows
+      var pauses = 0
+      val seen = scala.collection.mutable.ArrayBuffer.empty[String]
+      ObjStoreFs.afterWrite = Some { p =>
+        if (p.getName != "_current") {
+          val hook = ObjStoreFs.afterWrite
+          ObjStoreFs.afterWrite = None // the reads below write nothing, but never re-enter
+          pauses += 1
+          val got = s.query("MSFT").collect().map(_.toSeq).toSet
+          val d = s.describe("MSFT")
+          if (got != old || d.rows != oldRows)
+            seen += s"after ${p.getName}: query ${got.size} rows, describe ${d.rows} (old ${old.size})"
+          ObjStoreFs.afterWrite = hook
+        }
+      }
+      try op(s) finally ObjStoreFs.afterWrite = None
+      assert(pauses > 0, s"$name wrote no file to pause after")
+      assert(seen.isEmpty, s"$name: a paused reader saw a mix: ${seen.mkString("; ")}")
+      val after = rows(s)
+      assert(after != old || name == "compactBuckets")
+      assert(s.describe("MSFT").rows == after.size)
+    }
+  }
+
+  test("property: a mutation that dies after any file it writes leaves the old version, or past its pointer PUT the new one; vacuum sweeps every leftover") {
+    // each op is run once per file it writes, dying (an injected crash
+    // thrown from the close) after the n-th; a run that completes ends
+    // the search for that op
+    val ops = Seq[(String, Store => Unit)](
+      "appendNewOnly" -> (_.appendNewOnly("MSFT", bars(62, seed = 13))),
+      "append" -> (_.append("MSFT", bars(40, seed = 14))),
+      "compact" -> (_.compact("MSFT")),
+      "compactBuckets" -> compactJan,
+      "prune" -> (s => { s.prune("MSFT", Timestamp.valueOf("2020-02-01 00:00:00")); () }))
+    for ((name, op) <- ops) {
+      val want = { ObjStoreFs.reset(); val s = piled(objDir()); op(s); rows(s) }
+      var n = 1
+      var done = false
+      while (!done) {
+        ObjStoreFs.reset()
+        val dir = objDir()
+        val s = piled(dir)
+        val old = rows(s)
+        var writes = 0
+        var committed = false
+        ObjStoreFs.afterWrite = Some { p =>
+          writes += 1
+          if (p.getName == "_current") committed = true
+          if (writes == n) throw new ObjStoreFs.InjectedCrash(s"injected crash after writing $p")
+        }
+        done = try { op(s); true } catch { case t: Throwable if injected(t) => false }
+          finally ObjStoreFs.afterWrite = None
+        val expect = if (done || committed) want else old
+        assert(rows(s) == expect, s"$name crashed after write $n: wrong rows")
+        s.vacuum(0L)
+        assert(rows(s) == expect && s.describe("MSFT").rows == expect.size,
+          s"$name crashed after write $n: vacuum changed the rows")
+        assert(s.vacuum(0L) == 0L, s"$name crashed after write $n: vacuum did not converge")
+        // every file left under the item is one the current version names
+        val (fs, base) = hfs(dir)
+        val item = new HPath(new HPath(base, "items"), "MSFT")
+        val left = fs.listFiles(item, true)
+        val named = s.versionsOf("MSFT").filter(_.current).map(_.files).sum
+        var data = 0
+        while (left.hasNext) if (left.next().getPath.getName.endsWith(".parquet")) data += 1
+        assert(data == named, s"$name crashed after write $n: $data data files, $named named")
+        // and the op runs to completion on the recovered store
+        if (!done) { op(s); assert(rows(s) == want, s"$name rerun after crash $n") }
+        n += 1
+      }
+      assert(n > 2, s"$name wrote fewer than one file before its commit")
+    }
   }
 
   test("driver-read slice: a file swapped out between listing and read gives the full slice or a named error") {
@@ -195,98 +275,32 @@ class ObjStoreSpec extends AnyFunSuite {
     ObjStoreFs.reset()
   }
 
-  test("swap crash in the MOVE-OUT's delete phase: live split in half, vacuum restores the OLD item exactly") {
+  test("prune crash mid-bucket-removal: vacuum finishes; re-running prune is a no-op") {
     ObjStoreFs.reset()
     val dir = objDir()
-    val s = piled(dir)
-    val before = s("MSFT").collect().map(_.toSeq).toSet
-    // the bucket swap's first rename (live -> trash) dies after all
-    // files were copied and ONE source file was deleted: live is a
-    // strict subset, trash is complete — the crash point the
-    // rename-atomic protocol could never produce
-    ObjStoreFs.crash = Some(ObjStoreFs.Crash(Jan, "delete", 1))
-    intercept[ObjStoreFs.InjectedCrash](compactJan(s))
-    // only the swap marker exists (mid never written) -> roll back;
-    // the manifest says live is damaged, trash refills it per file
+    val s = open(dir, bucket = Some("month"))
+    s.write("MSFT", bars(100)) // Jan..Apr 2020 buckets
+    val total = s("MSFT").count()
+    val jan = s.query("MSFT", None,
+      Some(Timestamp.valueOf("2020-01-31 23:59:59"))).count()
+    // die right after the pointer PUT, before the expired bucket's files
+    // are deleted: the commit is done, the removal is not
+    ObjStoreFs.afterWrite = Some(p => if (p.getName == "_current") {
+      ObjStoreFs.afterWrite = None
+      throw new ObjStoreFs.InjectedCrash(s"injected crash after writing $p")
+    })
+    intercept[ObjStoreFs.InjectedCrash](
+      s.prune("MSFT", Timestamp.valueOf("2020-02-01 00:00:00")))
+    assert(s("MSFT").count() == total - jan, "readers see the pruned version at once")
+    val (fs, base) = hfs(dir)
+    val janDir = new HPath(LiveDir.hpath(s, "MSFT"), "__bucket=2020-01")
+    assert(fs.listStatus(janDir).nonEmpty, "the crash left the expired bucket's files")
     assert(s.vacuum(0L) >= 1L)
-    assert(s("MSFT").collect().map(_.toSeq).toSet == before,
-      "old item restored byte-complete from the trash copy")
-    val (fs, base) = hfs(dir)
-    assert(fs.listStatus(new HPath(base, ".staging")).isEmpty)
-  }
-
-  test("swap crash in the PROMOTE's copy phase: vacuum resumes the promote, new data lands complete") {
-    ObjStoreFs.reset()
-    val dir = objDir()
-    val s = piled(dir)
-    val expected = s("MSFT").collect().map(_.toSeq).toSet
-    // the second rename (tmp -> live) dies after copying ONE file:
-    // swap+mid markers present, live partially promoted, tmp intact
-    ObjStoreFs.crash = Some(ObjStoreFs.Crash(".tmp-", "copy", 1))
-    intercept[ObjStoreFs.InjectedCrash](compactJan(s))
-    assert(s.vacuum(0L) >= 1L)
-    assert(s("MSFT").collect().map(_.toSeq).toSet == expected,
-      "compacted bucket promoted complete despite the mid-promote crash")
-    val (fs, base) = hfs(dir)
-    assert(fs.listStatus(new HPath(base, ".staging")).isEmpty)
-  }
-
-  test("drop retires the key's crash markers so the key is re-creatable without vacuum") {
-    ObjStoreFs.reset()
-    val dir = objDir()
-    val s = piled(dir)
-    ObjStoreFs.crash = Some(ObjStoreFs.Crash(Jan, "delete", 1))
-    intercept[ObjStoreFs.InjectedCrash](compactJan(s))
-    // the half-moved item still exists (partial live bucket) — drop it
-    s.drop("MSFT")
-    assert(!s.exists("MSFT"))
-    val (fs, base) = hfs(dir)
-    assert(fs.listStatus(new HPath(base, ".staging")).isEmpty,
-      "drop swept the crashed swap's markers and staged dirs")
-    s.write("MSFT", bars(30, seed = 88)) // no refusal: markers are gone
-    assert(s("MSFT").count() == 30)
-  }
-
-  test("mutating a half-moved item is refused until vacuum; recovery then restores and the append lands") {
-    ObjStoreFs.reset()
-    val dir = objDir()
-    val s = piled(dir) // ≥2 data files in the bucket
-    val before = s("MSFT").collect().map(_.toSeq).toSet
-    // die after deleting a data file: live is genuinely missing rows,
-    // trash holds the only complete copy
-    ObjStoreFs.crash = Some(ObjStoreFs.Crash(Jan, "delete", 1))
-    intercept[ObjStoreFs.InjectedCrash](compactJan(s))
-    // a writer hitting the half-moved item is REFUSED until recovery —
-    // an append here could anti-join against the partial live dir and
-    // re-insert rows whose only copy sits in trash, duplicating them
-    // when the restore lands
-    val e = intercept[Exception](s.appendNewOnly("MSFT", bars(30, seed = 5151)))
-    assert(e.getMessage.contains("vacuum"), s"unhelpful error: ${e.getMessage}")
-    s.vacuum(0L)
-    val extra = bars(30, seed = 5151).collect().map(_.toSeq).toSet
-    s.appendNewOnly("MSFT", bars(30, seed = 5151)) // markers cleared: flows
-    assert(s("MSFT").collect().map(_.toSeq).toSet == (before ++ extra),
-      "old rows restored from trash, append lands after recovery")
-    val (fs, base) = hfs(dir)
-    assert(fs.listStatus(new HPath(base, ".staging")).isEmpty)
-  }
-
-  test("mutating a half-promoted item is refused until vacuum; recovery resumes the promote") {
-    ObjStoreFs.reset()
-    val dir = objDir()
-    val s = piled(dir)
-    val committed = s("MSFT").collect().map(_.toSeq).toSet // compaction preserves rows
-    ObjStoreFs.crash = Some(ObjStoreFs.Crash(".tmp-", "copy", 1))
-    intercept[ObjStoreFs.InjectedCrash](compactJan(s))
-    // mutations are refused on the half-promoted item; compact too
-    intercept[Exception](s.compact("MSFT"))
-    s.vacuum(0L)
-    val extra = bars(30, seed = 7272).collect().map(_.toSeq).toSet
-    s.appendNewOnly("MSFT", bars(30, seed = 7272))
-    assert(s("MSFT").collect().map(_.toSeq).toSet == (committed ++ extra),
-      "promote resumed from tmp, append lands after recovery")
-    val (fs, base) = hfs(dir)
-    assert(fs.listStatus(new HPath(base, ".staging")).isEmpty)
+    assert(!fs.exists(janDir), "vacuum finished the removal")
+    assert(s("MSFT").count() == total - jan, "later buckets intact")
+    // retention is re-runnable: the already-removed bucket is not seen
+    assert(s.prune("MSFT", Timestamp.valueOf("2020-02-01 00:00:00")) == 0L)
+    assert(s.vacuum(0L) == 0L)
   }
 
   test("drop crash in the delete phase: half-deleted item, vacuum finishes the drop") {
@@ -296,205 +310,23 @@ class ObjStoreSpec extends AnyFunSuite {
     s.write("MSFT", bars(100))
     s.appendNewOnly("MSFT", bars(150))
     // die at the data-tree delete that follows the pointer delete: the
-    // pointer is gone, the version dir is left behind
-    ObjStoreFs.crashOnDeleteOf = Some("items/MSFT")
+    // pointer is gone, the version's manifests and files are left behind
+    ObjStoreFs.beforeDelete = Some(p => if (p.getName == "MSFT") {
+      ObjStoreFs.beforeDelete = None
+      throw new ObjStoreFs.InjectedCrash(s"injected crash: delete of $p")
+    })
     intercept[ObjStoreFs.InjectedCrash](s.drop("MSFT"))
     // the pointer delete IS the disappear: the item is already gone
     assert(!s.exists("MSFT") && s.listItems().isEmpty)
     val (fs, base) = hfs(dir)
     val item = new HPath(new HPath(base, "items"), "MSFT")
     assert(fs.listStatus(item).exists(_.getPath.getName.startsWith("v-")),
-      "fixture must leave the dropped item's version dir behind")
-    // vacuum finishes the drop: the pointer-less version is an orphan
+      "fixture must leave the dropped item's version manifest behind")
+    // vacuum finishes the drop: no pointer names anything left
     assert(s.vacuum(0L) >= 1L)
-    assert(!fs.listStatus(item).exists(_.getPath.getName.startsWith("v-")))
+    assert(!fs.exists(item), "the emptied item dir goes too")
     // and the key is writable again
     s.write("MSFT", bars(10))
     assert(s("MSFT").count() == 10)
-  }
-
-  test("property: EVERY crash point in either swap rename recovers to exactly the old or the new content") {
-    // enumerate crash points: phase x file-index x which-rename; after
-    // vacuum the item must equal one complete side — never a mix,
-    // never a partial — and staging must drain
-    val points = for {
-      target <- Seq(Jan, ".tmp-")
-      phase <- Seq("copy", "delete")
-      idx <- 0 to 1
-    } yield ObjStoreFs.Crash(target, phase, idx)
-    points.foreach { pt =>
-      ObjStoreFs.reset()
-      val dir = objDir()
-      val s = piled(dir) // ≥2 data files in the bucket
-      val content = s("MSFT").collect().map(_.toSeq).toSet // compaction preserves rows
-      ObjStoreFs.crash = Some(pt)
-      try compactJan(s)
-      catch { case _: ObjStoreFs.InjectedCrash => () }
-      // the armed point is one-shot (cleared when it fires) — a point
-      // that never fired means the fixture no longer produces that
-      // crash window and the recovery claim would pass vacuously
-      assert(ObjStoreFs.crash.isEmpty, s"crash point $pt never fired")
-      s.vacuum(0L)
-      assert(s("MSFT").collect().map(_.toSeq).toSet == content,
-        s"crash point $pt corrupted the item")
-      // footer row count catches an old+new mixed dir (duplicated rows)
-      // that value-set equality alone would miss
-      assert(s.describe("MSFT").rows == 62, s"crash point $pt lost or duplicated rows")
-      val (fs, base) = hfs(dir)
-      assert(fs.listStatus(new HPath(base, ".staging")).isEmpty,
-        s"crash point $pt left staging debris")
-    }
-  }
-
-  test("prune crash mid-bucket-removal: vacuum finishes; re-running prune is a no-op") {
-    ObjStoreFs.reset()
-    val dir = objDir()
-    val s = Store.open(spark, dir,
-      cols = Some(Seq(
-        "price" -> org.apache.spark.sql.types.DoubleType,
-        "volume" -> org.apache.spark.sql.types.LongType)),
-      index = Some("date"), bucket = Some("month"))
-    s.write("MSFT", bars(100)) // Jan..Apr 2020 buckets
-    val total = s("MSFT").count()
-    val jan = s.query("MSFT", None,
-      Some(Timestamp.valueOf("2020-01-31 23:59:59"))).count()
-    ObjStoreFs.crash = Some(ObjStoreFs.Crash("__bucket=2020-01", "delete", 0))
-    intercept[ObjStoreFs.InjectedCrash](
-      s.prune("MSFT", Timestamp.valueOf("2020-02-01 00:00:00")))
-    assert(s.vacuum(0L) >= 1L)
-    assert(s("MSFT").count() == total - jan,
-      "expired bucket fully gone after recovery, later buckets intact")
-    // retention is re-runnable: the already-removed bucket is not seen
-    assert(s.prune("MSFT", Timestamp.valueOf("2020-02-01 00:00:00")) == 0L)
-    val (fs, base) = hfs(dir)
-    assert(fs.listStatus(new HPath(base, ".staging")).isEmpty)
-  }
-
-  test("bucket-swap crash points (compactBuckets): vacuum recovers the ONE bucket against the marker-recorded path") {
-    // both phases of both renames, like the crash-point property — but
-    // over TWO piled buckets, so recovery must restore or promote THE
-    // crashed directory (recorded in the marker content) and leave
-    // every sibling bucket alone
-    val points = Seq(
-      ObjStoreFs.Crash("__bucket=2020-01", "delete", 1), // move-out, live split
-      ObjStoreFs.Crash("__bucket=2020-01", "copy", 1), // move-out, copy phase
-      ObjStoreFs.Crash(".tmp-", "copy", 0), // promote never starts landing
-      ObjStoreFs.Crash(".tmp-", "copy", 1) // promote half-landed
-    )
-    points.foreach { pt =>
-      ObjStoreFs.reset()
-      val dir = objDir()
-      // chunkRows = 50: each bucket's three files rewrite into two
-      val s = open(dir, bucket = Some("month"), chunkRows = 50L)
-      s.write("MSFT", bars(60)) // Jan-Feb 2020
-      s.appendNewOnly("MSFT", bars(60, seed = 12))
-      s.appendNewOnly("MSFT", bars(60, seed = 13))
-      val content = s("MSFT").collect().map(_.toSeq).toSet
-      val total = s.describe("MSFT").rows
-      ObjStoreFs.crash = Some(pt)
-      try s.compactBuckets("MSFT", maxFilesPerBucket = 1)
-      catch { case _: ObjStoreFs.InjectedCrash => () }
-      assert(ObjStoreFs.crash.isEmpty,
-        s"bucket-swap crash point $pt never fired") // see the property above
-      s.vacuum(0L)
-      assert(s("MSFT").collect().map(_.toSeq).toSet == content,
-        s"bucket-swap crash point $pt corrupted the item")
-      assert(s.describe("MSFT").rows == total,
-        s"bucket-swap crash point $pt lost or duplicated rows")
-      val (fs, base) = hfs(dir)
-      assert(fs.listStatus(new HPath(base, ".staging")).isEmpty,
-        s"bucket-swap crash point $pt left staging debris")
-      // recovery leaves a consistent store: the compaction can simply
-      // be re-run to completion
-      s.compactBuckets("MSFT", maxFilesPerBucket = 1)
-      assert(s("MSFT").collect().map(_.toSeq).toSet == content)
-    }
-  }
-
-  test("LEGACY manifest-less marker + partial live: vacuum refills from trash instead of destroying the only complete copy") {
-    ObjStoreFs.reset()
-    val dir = objDir()
-    val s = piled(dir) // ≥2 data files
-    val before = s("MSFT").collect().map(_.toSeq).toSet
-    // crash in move-out's delete phase: live is a strict subset, trash
-    // holds the complete copy, only the swap marker exists (no mid)
-    ObjStoreFs.crash = Some(ObjStoreFs.Crash(Jan, "delete", 1))
-    intercept[ObjStoreFs.InjectedCrash](compactJan(s))
-    // simulate an OLD-VINTAGE marker: truncate the manifest lines so
-    // parseMarker sees the manifest-less legacy format — recovery must
-    // still restore the bucket rather than sweep the trash copy
-    val (fs, base) = hfs(dir)
-    val staging = new HPath(base, ".staging")
-    val marker = fs.listStatus(staging)
-      .map(_.getPath).find(_.getName.contains(".swap-")).get
-    val firstLine = {
-      val in = fs.open(marker)
-      val txt = new String(
-        org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-      in.close(); txt.split("\n").head
-    }
-    val out = fs.create(marker, true)
-    out.write(firstLine.getBytes("UTF-8")); out.close()
-    assert(s.vacuum(0L) >= 1L)
-    assert(s("MSFT").collect().map(_.toSeq).toSet == before,
-      "legacy roll-back restored the partially-moved live dir from trash")
-    assert(s.describe("MSFT").rows == 62, "no duplicated rows either")
-    assert(fs.listStatus(staging).isEmpty)
-  }
-
-  test("RELOCATED store: vacuum recovers against the current base, not the marker's recorded absolute path") {
-    ObjStoreFs.reset()
-    val dirA = objDir()
-    val s = piled(dirA)
-    val before = s("MSFT").collect().map(_.toSeq).toSet
-    // crash mid move-out: live split, trash complete, markers recording
-    // dirA's ABSOLUTE paths
-    ObjStoreFs.crash = Some(ObjStoreFs.Crash(Jan, "delete", 1))
-    intercept[ObjStoreFs.InjectedCrash](compactJan(s))
-    // relocate the whole store tree — the backup-restore scenario — and
-    // recover at the NEW base: the marker's recorded path must be
-    // re-based, not trusted (recovering into dead dirA would strand or
-    // destroy the trash copy)
-    val srcRoot = java.nio.file.Paths.get(dirA.stripPrefix("objstore://"))
-    val dstRoot = java.nio.file.Files.createTempDirectory("graft-obj-moved")
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(srcRoot).iterator().asScala.foreach { p =>
-      val t = dstRoot.resolve(srcRoot.relativize(p).toString)
-      if (java.nio.file.Files.isDirectory(p))
-        java.nio.file.Files.createDirectories(t)
-      else java.nio.file.Files.copy(p, t,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
-    val moved = open("objstore://" + dstRoot.toString)
-    assert(moved.vacuum(0L) >= 1L)
-    assert(moved("MSFT").collect().map(_.toSeq).toSet == before,
-      "item restored at the RELOCATED base")
-    assert(moved.describe("MSFT").rows == 62)
-    val (fs, base) = hfs("objstore://" + dstRoot.toString)
-    assert(fs.listStatus(new HPath(base, ".staging")).isEmpty)
-  }
-
-  test("UNGATED-binary re-creation next to stale swap markers: vacuum never mixes the stale promote into the fresh item") {
-    ObjStoreFs.reset()
-    val dir = objDir()
-    val s = piled(dir)
-    val live = new HPath(LiveDir.hpath(s, "MSFT"), Jan)
-    // crash mid-promote: swap+mid markers pend, tmp staged, live partial
-    ObjStoreFs.crash = Some(ObjStoreFs.Crash(".tmp-", "copy", 1))
-    intercept[ObjStoreFs.InjectedCrash](compactJan(s))
-    // simulate a writer from a binary WITHOUT the mutation gate
-    // re-creating the bucket from source while the markers still pend:
-    // delete live, write a fresh incarnation straight through Spark
-    val (fs, base) = hfs(dir)
-    fs.delete(live, true)
-    bars(30, seed = 99).write.parquet(live.toString)
-    val freshCount = 30L
-    // vacuum must treat the foreign-named live dir as a re-created
-    // incarnation: sweep the stale staging debris, touch nothing in live
-    s.vacuum(0L)
-    assert(spark.read.parquet(live.toString).count() == freshCount,
-      "stale swap files were mixed into the re-created item")
-    assert(fs.listStatus(new HPath(base, ".staging")).isEmpty,
-      "stale markers and staged dirs must drain")
   }
 }

@@ -33,12 +33,17 @@ class StoreKernelSpec extends AnyFunSuite {
     val dir = tmpDir()
     val s = Store.open(spark, dir, bucket = Some("day"))
     s.write("K", days(0 until 10))
-    // an unreadable data file in a bucket the batch never touches
+    // an unreadable data file, named by the version, in a bucket the
+    // batch never touches
     val rogue = LiveDir(s, dir, "K").resolve("__bucket=2021-03-03").resolve("part-rogue.parquet")
     Files.write(rogue, "not parquet".getBytes)
+    LiveDir.plant(s, "K", new org.apache.hadoop.fs.Path(rogue.toUri))
     TestSpark.distributed(s.appendNewOnly("K", days(8 until 12)))
-    Files.delete(rogue)
-    assert(s("K").count() == 12)
+    def ts(d: Int) = Some(Timestamp.from(t0.plusDays(d.toLong).toInstant))
+    // every bucket but the rogue's: days 0-1 and 3-11
+    assert(s.query("K", None, ts(1)).count() + s.query("K", ts(3), None).count() == 11)
+    assert(LiveDir.files(s, "K").exists(_.getName == "part-rogue.parquet"),
+      "the untouched bucket's files are carried into the new version")
   }
 
   test("distributed mutations leave no _temporary, .spark-staging, .crc or hidden file in the store") {
@@ -52,6 +57,11 @@ class StoreKernelSpec extends AnyFunSuite {
             n.startsWith(".graft-tmp-")).toVector
         finally walk.close()
       assert(debris.isEmpty, s"after $after: $debris")
+      val data = Files.walk(java.nio.file.Paths.get(dir))
+      val onDisk = try data.iterator().asScala.filter(_.toString.endsWith(".parquet"))
+        .map(_.getFileName.toString).toSet finally data.close()
+      assert(onDisk == LiveDir.files(s, "K").map(_.getName).toSet,
+        s"after $after: a data file no manifest names is left")
     }
     TestSpark.distributed {
       s.write("K", days(0 until 6)); clean("write")

@@ -127,12 +127,10 @@ object StoreProps extends Properties("Store") {
   property("concurrent appendNewOnly + compactIfNeeded + vacuum(0): no lost rows, stats intact") =
     forAll(Gen.choose(1L, 999L)) { seed => concurrentTorture(freshStore(), seed) }
 
-  /** The same torture through RAW-OBJECT-STORE rename semantics
-    * ([[ObjStoreFs]]: every directory rename is a per-object
-    * copy+delete): the appends' committer moves are long, non-atomic
-    * multi-file windows rather than instants, racing pointer swaps and
-    * vacuum's orphan sweep and torn-pointer repair (which must never
-    * mis-read a swap mid-commit: it re-lists and honors in-flight ids).
+  /** The same torture over `objstore://` ([[ObjStoreFs]]), whose
+    * creates and deletes are per-object: commits racing vacuum's sweep
+    * and torn-pointer repair, which must never mis-read a commit in
+    * flight (it skips an item whose lock a mutation holds).
     */
   property("concurrent maintenance over copy+delete renames (objstore://): no lost rows") =
     forAll(Gen.choose(1L, 999L)) { seed =>
@@ -142,9 +140,9 @@ object StoreProps extends Properties("Store") {
       concurrentTorture(Store.open(spark, dir), seed)
     }
 
-  /** Bucket-granular compaction under the same torture: per-bucket
-    * swaps racing appends and a force-vacuum must leave every row and
-    * clear every marker, exactly like whole-item compaction does.
+  /** Bucket-granular compaction under the same torture: bucket
+    * rewrites racing appends and a force-vacuum must leave every row,
+    * exactly like whole-item compaction does.
     */
   property("concurrent maintenance with compactBuckets (bucketed store): no lost rows") =
     forAll(Gen.choose(1L, 999L)) { seed =>
@@ -156,11 +154,11 @@ object StoreProps extends Properties("Store") {
 
   /** 4 appender threads (distinct batches), one compaction loop, one
     * force-vacuum loop, all on ONE item: the per-item JVM locks
-    * serialize the mutations and the in-flight-id registry keeps
-    * vacuum(0) off live staging — end state must hold every distinct
-    * row, and describe() must still see footer stats (INT96 files
-    * carry none, so a non-None minIndex proves no write slipped
-    * through under a racing conf/committer).
+    * serialize the mutations and vacuum(0) skips the item while one
+    * holds its lock — end state must hold every distinct row, and
+    * describe() must still see footer stats (INT96 files carry none, so
+    * a non-None minIndex proves no write slipped through under a racing
+    * conf).
     */
   private def concurrentTorture(
       s: Store, seed: Long,
@@ -203,19 +201,21 @@ object StoreProps extends Properties("Store") {
   // (write / append / appendNewOnly / compact / compactIfNeeded /
   // compactBuckets / prune / drop / vacuum, plus deliberate
   // invalid-op probes, plus the CTAS staging triple
-  // writeStagedVersion / commit / abort on fresh item names) over the
-  // objstore:// copy+delete rename semantics, arming a random
-  // ObjStoreFs crash point before each maintenance op with p≈3/4 (only
-  // the bucket ops rename, so only they can fire; each compactBuckets
-  // first piles two one-row appends into a day bucket, so it always
-  // has a bucket to rename). A crashed op is
-  // recovered exactly the way the docs prescribe (vacuum(0) then retry
-  // once) and the run then continues. Invariants, checked against a
-  // sequentially-replayed local model: no row lost, no duplicate
-  // incarnation (footer row count == model size catches old+new mixes
-  // value-set equality would miss), refusals only where documented, an
-  // uncommitted or aborted CTAS never visible, vacuum converges to
-  // zero, staging drains.
+  // writeStagedVersion / commit / abort on fresh item names) over
+  // objstore://, arming a random crash point before each maintenance op
+  // with p≈3/4: after the n-th file the op writes (a data file or a
+  // manifest), at its version manifest (the instant before the pointer
+  // PUT), at the pointer itself (committed, nothing superseded deleted
+  // yet), or at one of its deletes (inside a commit's best-effort
+  // deletes, a drop's tree delete or vacuum's sweep). Each compactBuckets
+  // first piles two one-row appends into a day bucket, so it always has
+  // a bucket to rewrite. A crashed op is recovered exactly the way the
+  // docs prescribe (vacuum(0) then retry once) and the run then
+  // continues. Invariants, checked against a sequentially-replayed local
+  // model: no row lost, no duplicate incarnation (footer row count ==
+  // model size catches old+new mixes value-set equality would miss),
+  // refusals only where documented, an uncommitted or aborted CTAS never
+  // visible, vacuum converges to zero.
   // ------------------------------------------------------------------
 
   private type BarRow = (Timestamp, Double, Double, Double, Double, Long)
@@ -269,25 +269,38 @@ object StoreProps extends Properties("Store") {
     var fired = 0
     val log = new scala.collection.mutable.ArrayBuffer[String]
 
+    // one-shot: the armed hook disarms itself as it fires
+    def crash(at: String): Nothing = {
+      ObjStoreFs.afterWrite = None; ObjStoreFs.beforeDelete = None
+      fired += 1
+      throw new ObjStoreFs.InjectedCrash(s"injected crash $at")
+    }
     def maybeArm(): Unit = if (rnd.nextInt(4) > 0) { // p=3/4
-      // rename SOURCES only: items/K covers bucket move-outs
-      // (compactBuckets, prune), .tmp- covers promotes;
-      // afterFiles weighted low — most renamed dirs hold 1-3 files
-      val target = Seq("items/K", "items/K", ".tmp-")(rnd.nextInt(3))
-      val phase = if (rnd.nextBoolean()) "copy" else "delete"
-      val c = ObjStoreFs.Crash(target, phase, Seq(0, 0, 1, 2)(rnd.nextInt(4)))
-      ObjStoreFs.crash = Some(c)
-      log += s"  armed $c"
+      val n = 1 + rnd.nextInt(3)
+      var seen = 0
+      rnd.nextInt(4) match {
+        case 0 =>
+          log += s"  armed after write $n"
+          ObjStoreFs.afterWrite = Some { p => seen += 1; if (seen == n) crash(s"after writing $p") }
+        case 1 =>
+          log += "  armed at the version manifest"
+          ObjStoreFs.afterWrite = Some(p => if (p.getName.startsWith("v-")) crash(s"after writing $p"))
+        case 2 =>
+          log += "  armed at the pointer"
+          ObjStoreFs.afterWrite = Some(p => if (p.getName == "_current") crash(s"after writing $p"))
+        case _ =>
+          log += s"  armed before delete $n"
+          ObjStoreFs.beforeDelete = Some { p => seen += 1; if (seen == n) crash(s"before deleting $p") }
+      }
     }
 
     // run op; on an injected crash, recover the documented way
     // (vacuum(0) + retry once). Returns false on an UNdocumented error.
     def run(name: String, body: () => Unit, retryOk: Throwable => Boolean): Boolean = {
-      log += s"op $name (crash=${ObjStoreFs.crash.isDefined})"
-      try { body(); ObjStoreFs.crash = None; true }
+      log += s"op $name"
+      try { body(); true }
       catch {
         case t: Throwable if isInjected(t) =>
-          fired += 1
           log += s"  crashed: ${t.getMessage}"
           s.vacuum(0L)
           try { body(); true }
@@ -353,8 +366,8 @@ object StoreProps extends Properties("Store") {
         case 4 | 10 | 11 =>
           // pile two fresh one-row appends into one day bucket, so it
           // holds more than maxFilesPerBucket files and the
-          // compactBuckets below rewrites (renames) it — an armed crash
-          // point then has a rename to fire in
+          // compactBuckets below rewrites it — an armed crash point then
+          // has files to fire at
           val day = rnd.nextInt(nDays)
           (0 until 2).foreach { j =>
             val pile = barRows(1, seed * 31 + step * 2 + j).map(_.copy(_1 = dayTs(day)))
@@ -394,7 +407,8 @@ object StoreProps extends Properties("Store") {
           ok = run("compactIfNeeded",
             () => { s.compactIfNeeded("K", 2L); () }, never)
       }
-      ObjStoreFs.crash = None // a point that never fired must not leak forward
+      // a point that never fired must not leak forward
+      ObjStoreFs.afterWrite = None; ObjStoreFs.beforeDelete = None
     }
 
     // settle: recovery sweep, then convergence — a second vacuum must
@@ -404,16 +418,6 @@ object StoreProps extends Properties("Store") {
       val second = s.vacuum(0L)
       if (second != 0L) log += s"vacuum did not converge: second pass did $second"
       second == 0L
-    }
-    ok = ok && {
-      val (fsH, base) = {
-        val p = new org.apache.hadoop.fs.Path(dir)
-        (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-      }
-      val staging = new org.apache.hadoop.fs.Path(base, ".staging")
-      val drained = !fsH.exists(staging) || fsH.listStatus(staging).isEmpty
-      if (!drained) log += "staging not drained"
-      drained
     }
     def rowsOf(key: String): Set[BarRow] =
       s(key).collect().map(r =>
@@ -581,17 +585,9 @@ object StoreProps extends Properties("Store") {
       case v: Double => java.lang.Double.doubleToLongBits(v)
       case v => v
     }).groupBy(identity).map { case (r, rs) => r -> rs.size }
-    /** Data files per bucket dir of the current version. */
-    def filesPerBucket(s: Store, dir: String): Map[String, Int] = {
-      import scala.jdk.CollectionConverters._
-      val v = java.nio.file.Paths.get(dir, "items", "K", s.versionsOf("K").find(_.current).get.id)
-      val walk = Files.walk(v)
-      try walk.iterator().asScala.toVector
-        .filter(f => f.toString.endsWith(".parquet") && !v.relativize(f).iterator().asScala
-          .exists(seg => seg.toString.startsWith(".") || seg.toString.startsWith("_") && !seg.toString.contains("=")))
-        .groupBy(f => v.relativize(f.getParent).toString).map { case (b, fs) => b -> fs.size }
-      finally walk.close()
-    }
+    /** Data files per bucket of the current version. */
+    def filesPerBucket(s: Store, dir: String): Map[String, Int] =
+      LiveDir.files(s, "K").groupBy(_.getParent.getName).map { case (b, fs) => b -> fs.size }
     def footerSql(dir: String) = {
       val agg = spark.read.format("graft").option("item", "K").load(dir)
         .agg(count(lit(1)), min(col("TS")), max(col("TS")), min(col("X")), max(col("X")))

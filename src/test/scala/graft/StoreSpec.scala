@@ -147,7 +147,7 @@ class StoreSpec extends AnyFunSuite {
     intercept[graft.sources.SchemaError] {
       Store.open(spark, dir, bucket = Some("day"))
     }
-    // bucket layout visible on disk, inside the current version dir
+    // bucket layout visible on disk, under the item's data dir
     val parts = java.nio.file.Files.list(LiveDir(s, dir, "MSFT")).iterator()
     var sawBucketDir = false
     while (parts.hasNext) {
@@ -397,35 +397,32 @@ class StoreSpec extends AnyFunSuite {
     s.write("MSFT", bars(100))
     s.appendNewOnly("MSFT", bars(130))
     val want = (s.describe("MSFT"), s("MSFT").count(), s.query("MSFT").count())
-    // a driver-side append that died between writing a file under its
-    // hidden temp name and renaming it: plant two such files, a copy of
-    // a real data file each, one past vacuum's age guard, one fresh
-    val bucketDir = java.nio.file.Paths.get(dir, "items", "MSFT",
-      s.versionsOf("MSFT").find(_.current).get.id, "__bucket=2015-02")
+    // a mutation that died after writing a data file and before its
+    // commit: plant two such files, a copy of a real data file each, one
+    // past vacuum's age guard, one fresh
+    val bucketDir = LiveDir(s, dir, "MSFT").resolve("__bucket=2015-02")
     val data = Files.list(bucketDir).filter(_.toString.endsWith(".parquet")).findFirst().get
-    val stale = bucketDir.resolve(".graft-tmp-part-00000-stale-c000.snappy.parquet")
-    val fresh = bucketDir.resolve(".graft-tmp-part-00000-fresh-c000.snappy.parquet")
+    val stale = bucketDir.resolve("part-00000-stale-c000.snappy.parquet")
+    val fresh = bucketDir.resolve("part-00000-fresh-c000.snappy.parquet")
     Files.copy(data, stale)
     Files.copy(data, fresh)
-    // likewise a local pointer commit that died before its rename, and a
-    // distributed appendNewOnly that died before landing its output dir
+    // likewise a local pointer commit that died before its rename, and
+    // a unit manifest whose version never got written
     val itemDir = java.nio.file.Paths.get(dir, "items", "MSFT")
     val stalePtr = Files.write(itemDir.resolve(".graft-tmp-stale"), "v-x".getBytes)
     val freshPtr = Files.write(itemDir.resolve(".graft-tmp-fresh"), "v-x".getBytes)
-    val staleOut = bucketDir.getParent.resolve(".graft-tmp-out")
-    Files.createDirectories(staleOut.resolve("__bucket=2015-02"))
-    Files.copy(data, staleOut.resolve("__bucket=2015-02").resolve("part-00000-out-c000.snappy.parquet"))
-    Seq(stale, stalePtr, staleOut).foreach(f =>
+    val staleUnit = Files.write(itemDir.resolve("u-stale"),
+      Store.renderManifest(Seq("1" -> "data/__bucket=2015-02/part-00000-stale-c000.snappy.parquet")).getBytes)
+    Seq(stale, stalePtr, staleUnit).foreach(f =>
       assert(f.toFile.setLastModified(System.currentTimeMillis() - 2 * 3600 * 1000L)))
     def reads = (s.describe("MSFT"), s("MSFT").count(), s.query("MSFT").count())
-    assert(reads == want, "a temp file must never be counted")
+    assert(reads == want, "a file no manifest names must never be counted")
     assert(TestSpark.distributed(s.query("MSFT").count()) == want._2)
-    assert(s.vacuum() == 3L, "the default age guard sweeps only the stale temps")
+    assert(s.vacuum() == 3L, "the default age guard sweeps only the stale files")
     assert(!Files.exists(stale) && Files.exists(fresh))
-    assert(!Files.exists(stalePtr) && Files.exists(freshPtr) && !Files.exists(staleOut))
+    assert(!Files.exists(stalePtr) && Files.exists(freshPtr) && !Files.exists(staleUnit))
     assert(reads == want)
   }
-
   /** Parquet files under `itemDir` whose index column lacks INT64
     * footer statistics in ANY row group — INT96 legacy timestamps (the
     * Spark default) have none, which silently disables row-group
@@ -542,8 +539,9 @@ class StoreSpec extends AnyFunSuite {
     val dir = tmpDir()
     val s = Store.open(spark, dir, bucket = Some("month"))
     s.write("MSFT", bars(400))
-    Files.write(LiveDir(s, dir, "MSFT").resolve("__bucket=2015-06").resolve("part-corrupt.parquet"),
-      "not parquet".getBytes)
+    val corrupt = LiveDir(s, dir, "MSFT").resolve("__bucket=2015-06").resolve("part-corrupt.parquet")
+    Files.write(corrupt, "not parquet".getBytes)
+    LiveDir.plant(s, "MSFT", new org.apache.hadoop.fs.Path(corrupt.toUri))
     val t0 = Timestamp.valueOf("2015-02-01 00:00:00")
     val t1 = Timestamp.valueOf("2015-03-01 00:00:00")
     val q = s.query("MSFT", Some(t0), Some(t1))
@@ -624,39 +622,6 @@ class StoreSpec extends AnyFunSuite {
     assert(s("AAA").count() == 50)
   }
 
-  test("vacuum: sweeps crash-orphaned .staging dirs, items untouched") {
-    val dir = tmpDir()
-    val s = Store.open(spark, dir)
-    s.write("AAA", bars(200))
-    // simulate a kill between a bucket swap's promote and its final
-    // delete: orphaned tmp- and old- dirs (with content) linger
-    val staging = java.nio.file.Paths.get(dir, ".staging")
-    Files.createDirectories(staging)
-    for (n <- Seq("AAA.tmp-dead-beef", "AAA.old-cafe-f00d")) {
-      val d = staging.resolve(n)
-      Files.createDirectories(d)
-      Files.write(d.resolve("part-orphan.parquet"), Array[Byte](1, 2, 3))
-    }
-    // reopen (crash-recovery shape): the DEFAULT vacuum is age-guarded
-    // (1h) so just-written staging dirs — indistinguishable from a
-    // concurrent writer mid-op — survive; force-sweep takes 0
-    val reopened = Store.open(spark, dir)
-    assert(reopened.vacuum() == 0L, "default vacuum must not sweep fresh staging dirs")
-    assert(reopened.vacuum(olderThanMillis = 0L) == 2L)
-    val left = { val l = Files.list(staging); try l.count() finally l.close() }
-    assert(left == 0L, ".staging must be empty after vacuum")
-    assert(reopened("AAA").count() == 200, "live item must be untouched")
-    // age guard: a fresh orphan survives a vacuum scoped to older dirs
-    val fresh = staging.resolve("AAA.tmp-in-flight")
-    Files.createDirectories(fresh)
-    assert(reopened.vacuum(olderThanMillis = 60000L) == 0L)
-    assert(Files.exists(fresh), "in-flight staging dir must survive an age-scoped vacuum")
-    assert(reopened.vacuum(olderThanMillis = 0L) == 1L)
-    // no staging dir at all: no-op
-    val bare = Store.open(spark, tmpDir())
-    assert(bare.vacuum() == 0L)
-  }
-
   test("key validation (reference :71-82)") {
     val s = Store.open(spark, tmpDir())
     for (bad <- Seq("", "a b", "a/b", "a$b", "ключ", "a\nb", "a:b"))
@@ -690,13 +655,8 @@ class StoreSpec extends AnyFunSuite {
     s.appendNewOnly("MSFT", bars(10, startDay = "2015-06-01")) // cold bucket
     val before = s("MSFT").collect().map(_.toSeq).toSet
     import scala.jdk.CollectionConverters._
-    def filesIn(bucket: String): Set[String] = {
-      val d = LiveDir(s, dir, "MSFT").resolve(s"__bucket=$bucket")
-      val st = java.nio.file.Files.list(d)
-      try st.iterator().asScala.map(_.getFileName.toString)
-        .filterNot(n => n.startsWith("_") || n.startsWith(".")).toSet
-      finally st.close()
-    }
+    def filesIn(bucket: String): Set[String] =
+      LiveDir.files(s, "MSFT").filter(_.getParent.getName == s"__bucket=$bucket").map(_.getName).toSet
     val coldBefore = filesIn("2015-06")
     val janBefore = filesIn("2015-01").size
     assert(janBefore > 2, s"fixture must pile files in Jan (got $janBefore)")
@@ -736,11 +696,9 @@ class StoreSpec extends AnyFunSuite {
     val before = s("MSFT").collect().map(_.toSeq).toSet
     def ranges(): Seq[(Long, Long)] = {
       val conf = spark.sparkContext.hadoopConfiguration
-      val st = Files.list(LiveDir(s, dir, "MSFT").resolve("__bucket=2015-01"))
-      val files = try st.iterator().asScala.filter(_.toString.endsWith(".parquet")).toVector
-        finally st.close()
+      val files = LiveDir.files(s, "MSFT").filter(_.getParent.getName == "__bucket=2015-01")
       files.map { f =>
-        val cs = Store.readFooter(conf, new org.apache.hadoop.fs.Path(f.toString)).getBlocks.asScala
+        val cs = Store.readFooter(conf, f).getBlocks.asScala
           .map(_.getColumns.asScala.find(_.getPath.toDotString == "DATE").get.getStatistics)
         (cs.map(_.genericGetMin.asInstanceOf[java.lang.Long].longValue).min,
           cs.map(_.genericGetMax.asInstanceOf[java.lang.Long].longValue).max)
@@ -755,91 +713,33 @@ class StoreSpec extends AnyFunSuite {
     assert(s.compactBuckets("MSFT", maxFilesPerBucket = 2) == 0L, "the rewrite is a fixed point")
   }
 
-  test("pending recovery markers gate every mutation; drop retires them; markerless orphans do not block") {
-    import graft.sources.PendingRecoveryError
-    import org.apache.hadoop.fs.{Path => HPath}
-    val dir = tmpDir()
-    val s = Store.open(spark, dir, bucket = Some("month"))
-    s.write("MSFT", bars(100))
-    val fs = new HPath(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new HPath(dir, ".staging")
-    fs.mkdirs(staging)
-    // a crashed writer's swap marker (the exact state an interrupted
-    // stagedSwap leaves): every mutation path must refuse with the
-    // distinct PendingRecoveryError naming the remedy
-    Store.writeUTF8(fs, new HPath(staging, "MSFT.swap-dead"), s"$dir/items/MSFT")
-    val e = intercept[PendingRecoveryError] { s.append("MSFT", bars(10)) }
-    assert(e.getMessage.contains("vacuum"), s"remedy not named: ${e.getMessage}")
-    intercept[PendingRecoveryError] { s.appendNewOnly("MSFT", bars(10)) }
-    intercept[PendingRecoveryError] { s.compact("MSFT") }
-    intercept[PendingRecoveryError] { s.compactBuckets("MSFT") }
-    intercept[PendingRecoveryError] {
-      s.prune("MSFT", Timestamp.valueOf("2015-03-01 00:00:00"))
-    }
-    assert(s("MSFT").count() == 100, "reads flow while mutations are gated")
-    // write()'s re-creation refusal: markers pending for an ABSENT key
-    // block creating it (recovery's no-clobber guarantee rests on this)
-    Store.writeUTF8(fs, new HPath(staging, "GONE.del-dead"), s"$dir/items/GONE")
-    intercept[PendingRecoveryError] { s.write("GONE", bars(10)) }
-    // drop() retires the markers with the item: re-creation succeeds
-    s.drop("MSFT")
-    assert(!fs.exists(new HPath(staging, "MSFT.swap-dead")), "drop must sweep markers")
-    s.write("MSFT", bars(50))
-    assert(s("MSFT").count() == 50)
-    // markerless .tmp-/.old- orphans are debris, NOT half-moved state
-    // (the swap marker exists before the first rename): they must not
-    // wedge writers — vacuum's age sweep owns them
-    fs.mkdirs(new HPath(staging, "MSFT.tmp-orphan"))
-    fs.mkdirs(new HPath(staging, "MSFT.old-orphan"))
-    s.appendNewOnly("MSFT", bars(60))
-    assert(s("MSFT").count() == 60)
-    // a marker for key "MSFT.X" must not gate key "MSFT" (dots are
-    // legal in keys; the match is exact, not prefix)
-    Store.writeUTF8(fs, new HPath(staging, "MSFT.X.swap-dead"), s"$dir/items/MSFT.X")
-    s.compact("MSFT")
-    assert(s("MSFT").count() == 60)
-  }
-
-  test("a transient job failure inside a staged swap cleans up after itself — no vacuum needed") {
+  test("a transient job failure inside a mutation leaves the item as it was — no vacuum needed") {
     val dir = tmpDir()
     val s = Store.open(spark, dir)
     s.write("MSFT", bars(100))
-    // a batch that fails at ACTION time (inside the swap's version
-    // write), like an executor OOM or a flaky object store would:
-    // assert_true throws mid-job, after the swap marker may exist
+    val before = s("MSFT").collect().toSet
+    // a batch that fails at ACTION time (inside the mutation's write),
+    // like an executor OOM or a flaky object store would: assert_true
+    // throws mid-job, before the commit
     val poison = bars(50, seed = 99)
       .withColumn("open", expr("assert_true(open > 1e18)").cast("double"))
     intercept[Exception] { s.append("MSFT", poison) }
-    // the failed op retired its own staging debris: the very next
-    // mutation runs WITHOUT any vacuum() in between
+    assert(s("MSFT").collect().toSet == before, "a failed mutation commits nothing")
+    // the very next mutation runs WITHOUT any vacuum() in between
     s.append("MSFT", bars(150))
     assert(s("MSFT").count() == 150)
-    val staging = new java.io.File(dir, ".staging")
-    val leftovers = Option(staging.list()).fold(Seq.empty[String])(_.toSeq)
-      .filter(n => n.contains(".swap-") || n.contains(".mid-") || n.contains(".del-"))
-    assert(leftovers.isEmpty, s"recovery markers left behind: $leftovers")
   }
-
-  test("listing walk never enters hidden dirs: in-flight _temporary payload invisible to ALL metadata") {
-    // Found by the widened 25-seed concurrent-torture sweep: a
-    // maintenance thread's describe() died walking a concurrent
-    // appender's `_temporary/` task dir that vanished between the
-    // parent listing and the descent (RawLocalFileSystem surfaces that
-    // as an opaque IOException no message-matching retry can own).
-    // Every walkFiles caller filters hidden segments anyway, so the
-    // walk must never ENTER a hidden directory — which also closes the
-    // one caller whose own filter was name-only: versions() counted an
-    // in-flight committer's `_temporary/**.parquet` payload into a
-    // version's files/bytes. Pin that observable here; the race itself
-    // is covered by the widened StoreProps torture sweep.
+  test("files no manifest names — in-flight _temporary payload, hidden or non-parquet files — are invisible to ALL metadata") {
+    // Every read takes its files from the version's manifests, so what a
+    // concurrent or failed writer leaves among the data files — a
+    // committer's `_temporary/**.parquet` payload, a `.`-prefixed dir, a
+    // stray non-parquet file — counts nowhere until a commit names it.
     val dir = tmpDir()
     val s = Store.open(spark, dir)
     s.write("MSFT", bars(10))
     val cur = s.versionsOf("MSFT").find(_.current).get
     val vDir = LiveDir(s, dir, "MSFT")
     val tmpTask = vDir.resolve("_temporary").resolve("0").resolve("task-0")
-    // a `.`-prefixed segment is hidden even when it contains '=' (Spark's
-    // rule: only `_`-prefixed partition segments are exempt)
     val dotPart = vDir.resolve(".x=1")
     java.nio.file.Files.createDirectories(tmpTask)
     java.nio.file.Files.createDirectories(dotPart)
@@ -852,32 +752,27 @@ class StoreSpec extends AnyFunSuite {
       firstParquet, tmpTask.resolve("part-00000-inflight.snappy.parquet"))
     java.nio.file.Files.copy(
       firstParquet, dotPart.resolve("part-00000-hidden.snappy.parquet"))
+    java.nio.file.Files.copy(firstParquet, vDir.resolve("part-00000-unnamed.snappy.parquet"))
     val after = s.versionsOf("MSFT").find(_.current).get
     assert(after.files == cur.files,
-      s"in-flight _temporary payload leaked into version file count: $cur -> $after")
+      s"an unnamed file leaked into the version file count: $cur -> $after")
     assert(after.bytes == cur.bytes,
-      s"in-flight _temporary payload leaked into version bytes: $cur -> $after")
+      s"an unnamed file leaked into the version bytes: $cur -> $after")
     assert(s.describe("MSFT").rows == 10)
-    assert(s("MSFT").count() == 10, "scan must exclude the hidden subtree")
-    // the DSv2 footer-answered count lists through Store.files
+    assert(s("MSFT").count() == 10, "scan must exclude unnamed files")
     assert(spark.read.format("graft").option("item", "MSFT").load(dir).count() == 10,
-      "the listing must exclude the hidden subtrees")
-    // compactIfNeeded counts the files describe counts: neither the
-    // in-flight payload nor a non-parquet file trips it
+      "the footer-answered count must exclude unnamed files")
+    // compactIfNeeded counts the files describe counts
     java.nio.file.Files.write(vDir.resolve("notes.txt"), "not data".getBytes)
     assert(s.describe("MSFT").files == cur.files)
     assert(!s.compactIfNeeded("MSFT", maxFiles = cur.files),
-      "hidden or non-parquet files counted toward the compaction threshold")
-    // the footer-answered SQL count and compact list through the same
-    // filter, and compact rewrites only the files it listed
-    assert(spark.read.format("graft").option("item", "MSFT").load(dir).count() == 10,
-      "the listing must exclude non-parquet files")
+      "unnamed files counted toward the compaction threshold")
+    // compact rewrites only the files the version names
     s.compact("MSFT")
     val compacted = s.describe("MSFT")
     assert(compacted.rows == 10 && compacted.files == 1,
       s"compact must rewrite the 10 rows into one canonical file: $compacted")
   }
-
   test("distributed appendNewOnly: a batch of stored rows writes no file; new rows land in at most 2 jobs") {
     val dir = tmpDir()
     val s = Store.open(spark, dir) // unbucketed: Spark's writer would open a file even for no rows
@@ -891,8 +786,10 @@ class StoreSpec extends AnyFunSuite {
     val after = s.describe("MSFT")
     assert(after.rows == 60 && after.files > before.files, s"$before -> $after")
     import scala.jdk.CollectionConverters._
-    val names = Files.list(LiveDir(s, dir, "MSFT")).iterator().asScala.map(_.getFileName.toString).toSeq
-    assert(!names.exists(_.startsWith(".graft-tmp-")), s"the hidden output dir was left: $names")
+    val onDisk = Files.list(LiveDir(s, dir, "MSFT")).iterator().asScala
+      .map(_.getFileName.toString).filter(_.endsWith(".parquet")).toSet
+    assert(onDisk == LiveDir.files(s, "MSFT").map(_.getName).toSet,
+      s"a file no manifest names was left: $onDisk")
   }
 
   test("one listing per read: LIMIT and TopN planning, compact and compactBuckets over 40 files start no listing job") {

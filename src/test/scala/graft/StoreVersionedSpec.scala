@@ -6,15 +6,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import java.sql.Timestamp
 
-/** The store's item layout — the object-store-native commit path:
-  * immutable `v-<id>` data dirs, one `_current` pointer object per item,
-  * rewrites committed by a single pointer PUT with NO directory rename
-  * anywhere on the item-level write path. This spec proves the refusal
-  * of retired flat-layout directories, the full lifecycle, the
-  * pointer-swap commit (old version gone, new pointer target, readers
-  * never see an intermediate state), crash debris collection, and that
-  * appendNewOnly lands incremental files inside the current version
-  * (cheap appends).
+/** The store's item layout — the object-store-native commit path: a
+  * version is a `v-<id>` manifest naming unit manifests that name the
+  * data files, one `_current` pointer object per item, and every
+  * mutation committed by a single pointer PUT with NO rename anywhere.
+  * This spec proves the refusal of retired layouts, the full lifecycle,
+  * the pointer commit (old version gone, new pointer target, readers
+  * never see an intermediate state), that appendNewOnly and
+  * compactBuckets carry untouched units over, and vacuum's
+  * mark-and-sweep of crash debris.
   */
 class StoreVersionedSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.session
@@ -40,9 +40,31 @@ class StoreVersionedSpec extends AnyFunSuite {
     (hp.getFileSystem(spark.sparkContext.hadoopConfiguration), hp)
   }
 
-  def versionDirs(fs: FileSystem, base: HPath, key: String): Seq[String] =
+  def versionManifests(fs: FileSystem, base: HPath, key: String): Seq[String] =
     fs.listStatus(new HPath(new HPath(base, "items"), key))
       .map(_.getPath.getName).filter(_.startsWith("v-")).toSeq
+
+  /** Unit → unit manifest name, as the current version manifest of
+    * `key` names them.
+    */
+  def unitManifests(fs: FileSystem, base: HPath, key: String): Map[String, String] = {
+    val item = new HPath(new HPath(base, "items"), key)
+    val v = Store.readUTF8(fs, new HPath(item, "_current")).trim
+    Store.parseManifest(Store.readUTF8(fs, new HPath(item, v))).get.toMap
+  }
+
+  test("a store of the directory-version layout (versioned = 1) is refused by open and attach") {
+    val dir = freshDir()
+    val (fs, base) = hfs(dir)
+    Store.open(spark, dir).write("K", bars(10))
+    // what the retired layout's marker held: versions were directories
+    Store.writeUTF8(fs, new HPath(base, "versioned"), "1")
+    for (e <- Seq(
+        intercept[SchemaError](Store.open(spark, dir)),
+        intercept[SchemaError](Store.attach(spark, dir))))
+      assert(e.getMessage.contains("versioned=1") && e.getMessage.contains("no migration"),
+        s"layout not named: ${e.getMessage}")
+  }
 
   test("a flat-layout directory (no versioned marker) is refused by open and attach") {
     // the retired flat layout: schema.json plus parquet files directly
@@ -69,10 +91,13 @@ class StoreVersionedSpec extends AnyFunSuite {
     assert(s.exists("msft") && s.listItems() == Seq("MSFT"))
     intercept[ItemExistsError] { s.write("msft", bars(10)) }
 
-    s.appendNewOnly("MSFT", bars(130)) // 30 new rows land INSIDE the current version
+    val filesBefore = LiveDir.files(s, "MSFT").toSet
+    s.appendNewOnly("MSFT", bars(130)) // 30 new rows in a new file
     assert(s("MSFT").count() == 130)
-    assert(versionDirs(fs, base, "MSFT").size == 1,
-      "appendNewOnly must not create a new version — incremental files stay cheap")
+    assert(versionManifests(fs, base, "MSFT").size == 1,
+      "appendNewOnly's commit replaces the version manifest")
+    assert(filesBefore.subsetOf(LiveDir.files(s, "MSFT").toSet),
+      "appendNewOnly rewrites no file — incremental appends stay cheap")
 
     val q = s.query("MSFT",
       Some(Timestamp.valueOf("2022-02-01 00:00:00")),
@@ -92,17 +117,17 @@ class StoreVersionedSpec extends AnyFunSuite {
     val (fs, base) = hfs(dir)
     val s = Store.open(spark, dir)
     s.write("MSFT", bars(100))
-    val v0 = versionDirs(fs, base, "MSFT")
+    val v0 = versionManifests(fs, base, "MSFT")
     assert(v0.size == 1)
     s.append("MSFT", bars(120)) // rewrite path: union-dedup into a fresh version
     assert(s("MSFT").count() == 120)
-    val v1 = versionDirs(fs, base, "MSFT")
-    assert(v1.size == 1 && v1 != v0, "append must land in a NEW version dir and drop the old")
+    val v1 = versionManifests(fs, base, "MSFT")
+    assert(v1.size == 1 && v1 != v0, "append must commit a NEW version and drop the old")
     s.compact("MSFT")
-    val v2 = versionDirs(fs, base, "MSFT")
+    val v2 = versionManifests(fs, base, "MSFT")
     assert(v2.size == 1 && v2 != v1, "compact commits another pointer swap")
     assert(s("MSFT").count() == 120)
-    // no .staging debris and nothing for vacuum to do after clean swaps
+    // nothing for vacuum to do after clean commits
     assert(s.vacuum(0L) == 0L)
   }
 
@@ -111,24 +136,31 @@ class StoreVersionedSpec extends AnyFunSuite {
     val (fs, base) = hfs(dir)
     val s = Store.open(spark, dir)
     s.write("MSFT", bars(100))
-    // simulate a versionSwap that died before its pointer write: a
-    // complete version dir the pointer never named
+    // simulate a commit that died before its pointer write: a complete
+    // version — manifests and data — the pointer never named, taken
+    // from another item
     s.write("GHOST", bars(50, seed = 9))
-    val ghostData = new HPath(new HPath(base, "items"), "GHOST")
-    val orphan = new HPath(new HPath(base, "items"), "MSFT")
-    val vGhost = fs.listStatus(ghostData).map(_.getPath)
-      .find(_.getName.startsWith("v-")).get
-    assert(fs.rename(vGhost, new HPath(orphan, "v-orphan-crash")))
-    fs.delete(ghostData, true)
+    val ghost = java.nio.file.Paths.get(dir, "items", "GHOST")
+    val msft = java.nio.file.Paths.get(dir, "items", "MSFT")
+    import scala.jdk.CollectionConverters._
+    val copied = java.nio.file.Files.walk(ghost).iterator().asScala.toVector
+      .filter(p => java.nio.file.Files.isRegularFile(p) && p.getFileName.toString != "_current")
+    copied.foreach { p =>
+      val t = msft.resolve(ghost.relativize(p))
+      java.nio.file.Files.createDirectories(t.getParent)
+      java.nio.file.Files.copy(p, t)
+    }
+    s.drop("GHOST")
     // readers are completely unaffected by the orphan
     assert(s("MSFT").count() == 100)
     assert(s.describe("MSFT").rows == 100)
-    assert(versionDirs(fs, base, "MSFT").size == 2)
+    assert(versionManifests(fs, base, "MSFT").size == 2)
+    assert(s.versionsOf("MSFT").map(v => (v.current, v.files)).toSet == Set(true -> 1L, false -> 1L))
     // age guard first: a fresh orphan is treated as possibly in flight
     assert(s.vacuum() == 0L)
-    // force-sweep collects it; the live version is untouched
-    assert(s.vacuum(0L) == 1L)
-    assert(versionDirs(fs, base, "MSFT").size == 1)
+    // force-sweep collects its manifests and data; the live version is untouched
+    assert(s.vacuum(0L) == copied.size.toLong)
+    assert(versionManifests(fs, base, "MSFT").size == 1)
     assert(s("MSFT").count() == 100)
   }
 
@@ -145,10 +177,10 @@ class StoreVersionedSpec extends AnyFunSuite {
     Store.writeUTF8(fs, ptr, "")
     val e = intercept[java.io.IOException](s("MSFT").count())
     assert(e.getMessage.contains("vacuum"), s"unhelpful error: ${e.getMessage}")
-    // force-sweep with the torn pointer: the version dir must SURVIVE
-    // and the pointer must be repaired to it
+    // force-sweep with the torn pointer: the version must SURVIVE and
+    // the pointer must be repaired to it
     s.vacuum(0L)
-    assert(versionDirs(fs, base, "MSFT").size == 1)
+    assert(versionManifests(fs, base, "MSFT").size == 1)
     assert(s("MSFT").count() == 100, "repaired pointer serves the data again")
     assert(s.describe("MSFT").rows == 100)
   }
@@ -181,7 +213,7 @@ class StoreVersionedSpec extends AnyFunSuite {
     val q2 = s.ingestStream("MSFT", src, s"$work/chk2")
     q2.awaitTermination()
     assert(s("MSFT").count() == 60, "replayed batches must dedup to zero new rows")
-    // tail-read resolves through the pointer to the current version dir
+    // the tail-read is the graft stream over the committed files
     val tail = s.readStream("MSFT")
     val tq = tail.writeStream.format("parquet")
       .option("path", s"$work/out").option("checkpointLocation", s"$work/tchk")
@@ -195,17 +227,16 @@ class StoreVersionedSpec extends AnyFunSuite {
     val dir = freshDir()
     val s = Store.open(spark, dir, bucket = Some("month"))
     s.write("EVT", bars(100))
-    // directory pruning reaches the scan through the version dir: its
-    // files all lie in the current version's in-range bucket dir
+    // bucket pruning reaches the scan through the manifests: it reads
+    // exactly the files the current version names for the in-range bucket
     val q = TestSpark.distributed(s.query("EVT",
       Some(Timestamp.valueOf("2022-02-01 00:00:00")),
       Some(Timestamp.valueOf("2022-02-10 00:00:00"))))
-    val cur = s.versionsOf("EVT").find(_.current).get.id
     val scans = TestSpark.parquetScans(q)
-    val dirs = scans.flatMap(_.fileIndex.allFiles()).map(_.getPath.getParent).toSet
+    val scanned = scans.flatMap(_.fileIndex.allFiles()).map(_.getPath).toSet
     assert(scans.flatMap(TestSpark.bucketDirNames).toSet == Set("__bucket=2022-02") &&
-      dirs.forall(_.getParent.getName == cur),
-      s"expected only the current version's 2022-02 bucket, scanned: $dirs")
+      scanned == LiveDir.files(s, "EVT").filter(_.getParent.getName == "__bucket=2022-02").toSet,
+      s"expected only the current version's 2022-02 bucket, scanned: $scanned")
     val plan = q.queryExecution.executedPlan.toString
     assert(plan.contains("pushed=[IsNotNull(DATE), GreaterThanOrEqual(DATE"),
       s"expected the bounds pushed in plan:\n$plan")
@@ -215,70 +246,89 @@ class StoreVersionedSpec extends AnyFunSuite {
     assert(s("EVT").count() == 100 - 59, "Jan(31) + Feb(28) rows gone")
   }
 
-  test("bucketed versioned store: compactBuckets rewrites in place inside the current version") {
+  test("bucketed versioned store: compactBuckets commits a new version that carries the untouched buckets") {
     val dir = freshDir()
     val s = Store.open(spark, dir, bucket = Some("month"))
     s.write("EVT", bars(60)) // Jan-Feb 2022
     s.appendNewOnly("EVT", bars(60, seed = 31))
     s.appendNewOnly("EVT", bars(60, seed = 32))
+    s.appendNewOnly("EVT", bars(5, seed = 33)) // Jan only: Feb keeps 3 files
     val before = s("EVT").collect().map(_.toSeq).toSet
     val (fs, base) = hfs(dir)
-    val vsBefore = versionDirs(fs, base, "EVT")
-    assert(vsBefore.size == 1)
-    def janFiles(): Int = {
-      val jan = new HPath(LiveDir.hpath(s, "EVT"), "__bucket=2022-01")
-      fs.listStatus(jan).count { st =>
-        val n = st.getPath.getName
-        !n.startsWith("_") && !n.startsWith(".")
-      }
-    }
+    val unitsBefore = unitManifests(fs, base, "EVT")
+    def janFiles(): Int = LiveDir.files(s, "EVT").count(_.getParent.getName == "__bucket=2022-01")
     val piled = janFiles()
-    assert(piled > 1, s"fixture must pile files (got $piled)")
-    assert(s.compactBuckets("EVT", maxFilesPerBucket = 1) >= 1L)
-    // in-place: the CURRENT version dir is rewritten, no new version
-    assert(versionDirs(fs, base, "EVT") == vsBefore, "no version churn")
-    assert(janFiles() < piled, "bucket rewritten smaller inside the version")
+    assert(piled > 3, s"fixture must pile files (got $piled)")
+    assert(s.compactBuckets("EVT", maxFilesPerBucket = 3) == 1L)
+    val unitsAfter = unitManifests(fs, base, "EVT")
+    assert(unitsAfter("__bucket=2022-02") == unitsBefore("__bucket=2022-02"),
+      "the untouched bucket's unit manifest is carried over")
+    assert(unitsAfter("__bucket=2022-01") != unitsBefore("__bucket=2022-01"))
+    assert(versionManifests(fs, base, "EVT").size == 1, "the superseded version manifest is deleted")
+    assert(janFiles() < piled, "bucket rewritten smaller")
     assert(s("EVT").collect().map(_.toSeq).toSet == before, "rows preserved")
-    assert(s.vacuum(0L) == 0L, "clean bucket swaps leave nothing to vacuum")
+    assert(s.vacuum(0L) == 0L, "a clean commit leaves nothing to vacuum")
   }
 
-  test("vacuum job 4: dead job-staging debris inside the live version dir is swept, live appends are guarded") {
-    // a crashed in-place append leaves its committer staging —
-    // `_temporary` and a per-job-UUID `.spark-staging-*` dir — INSIDE
-    // the current version dir. Hidden-segment filters keep it invisible
-    // to reads and metadata, but the bytes are reclaimed by nothing
-    // (later jobs use fresh staging names), so vacuum owns the sweep.
-    // Found by the cross-JVM lifecycle fuzz's halt-on-delete arm, which
-    // dies exactly at the committer's staging cleanup.
+  test("vacuum: dead task-attempt files among the live data files are swept once past the age guard") {
+    // a task attempt that failed, or lost to a speculative twin, leaves
+    // the files it wrote among the live ones; no manifest names them, so
+    // reads never see them, and vacuum reclaims their bytes
     val dir = freshDir()
-    val (fs, base) = hfs(dir)
     val s = Store.open(spark, dir)
     s.write("MSFT", bars(50))
     val before = s("MSFT").collect().map(_.toSeq).toSet
-    val vDir = LiveDir(s, dir, "MSFT")
-    val staging = vDir.resolve(".spark-staging-dead-job-uuid").resolve("DATE_BUCKET=2022-01")
-    val temporary = vDir.resolve("_temporary").resolve("0").resolve("task-3")
-    java.nio.file.Files.createDirectories(staging)
+    val data = LiveDir(s, dir, "MSFT")
+    val temporary = data.resolve("_temporary").resolve("0").resolve("task-3")
     java.nio.file.Files.createDirectories(temporary)
-    java.nio.file.Files.write(staging.resolve("part-00000-dead.snappy.parquet"),
-      Array[Byte](1, 2, 3))
-    java.nio.file.Files.write(temporary.resolve("part-00001-dead.snappy.parquet"),
-      Array[Byte](4, 5, 6))
+    java.nio.file.Files.write(data.resolve("part-00000-dead.snappy.parquet"), Array[Byte](1, 2, 3))
+    java.nio.file.Files.write(temporary.resolve("part-00001-dead.snappy.parquet"), Array[Byte](4, 5, 6))
     // age guard: a conservative sweep leaves fresh debris (a writer in
-    // another JVM may own it) — both dirs are seconds old
+    // another JVM may own it)
     assert(s.vacuum() == 0L, "fresh debris must survive the aged sweep")
-    // same-JVM in-flight guard: a registered in-place append blocks
-    // even the force sweep for ITS item
-    val tag = Store.inPlaceTag(s.base, "MSFT") // s.base is fs-qualified
-    Store.activeInPlaceWrites.add(tag)
-    try assert(s.vacuum(0L) == 0L, "in-flight append's staging must survive vacuum(0)")
-    finally Store.activeInPlaceWrites.remove(tag)
-    // dead writer: the force sweep reclaims both debris dirs
-    assert(s.vacuum(0L) == 2L, "both debris dirs swept once the writer is provably dead")
-    assert(!java.nio.file.Files.exists(vDir.resolve(".spark-staging-dead-job-uuid")))
-    assert(!java.nio.file.Files.exists(vDir.resolve("_temporary")))
+    assert(s.vacuum(0L) == 2L, "both dead files swept once the writer is provably dead")
+    assert(!java.nio.file.Files.exists(data.resolve("_temporary")), "emptied dirs go too")
     assert(s("MSFT").collect().map(_.toSeq).toSet == before, "data untouched")
     assert(s.describe("MSFT").rows == 50L)
     assert(s.vacuum(0L) == 0L, "sweep converges")
+  }
+
+  test("vacuum(0) keeps every committed row while a same-JVM appendNewOnly is in flight, and a staged CTAS until its commit or abort") {
+    ObjStoreFs.reset()
+    spark.sparkContext.hadoopConfiguration.set("fs.objstore.impl", classOf[ObjStoreFs].getName)
+    val dir = "objstore://" + freshDir()
+    val s = Store.open(spark, dir, bucket = Some("month"))
+    s.write("MSFT", bars(60))
+    // a force sweep from another thread the instant the append has
+    // written its first file: the item's lock is held, so vacuum skips
+    // it — the new file, named by no manifest yet, survives
+    var swept = -1L
+    ObjStoreFs.afterWrite = Some { _ =>
+      ObjStoreFs.afterWrite = None
+      val t = new Thread(() => swept = s.vacuum(0L))
+      t.start(); t.join()
+    }
+    try s.appendNewOnly("MSFT", bars(90)) // 30 new rows
+    finally ObjStoreFs.afterWrite = None
+    assert(swept == 0L, s"vacuum swept $swept files of an append in flight")
+    assert(s("MSFT").count() == 90 && s.describe("MSFT").rows == 90)
+    // a staged CTAS is named by no pointer: vacuum(0) keeps it while it
+    // is staged, then treats an aborted one as debris
+    val id = s.writeStagedVersion("STAGED", bars(20))
+    assert(s.vacuum(0L) == 0L && !s.exists("STAGED"))
+    s.commitStagedVersion("STAGED", id)
+    assert(s("STAGED").count() == 20)
+    val gone = s.writeStagedVersion("ABORTED", bars(20))
+    assert(s.vacuum(0L) == 0L)
+    s.abortStagedVersion("ABORTED", gone)
+    assert(s.vacuum(0L) == 0L && !s.exists("ABORTED"), "abort deletes what it staged")
+    // unnamed files and manifests are swept: the commits above left none
+    val (fs, base) = hfs(dir)
+    val item = new HPath(new HPath(base, "items"), "MSFT")
+    Store.writeUTF8(fs, new HPath(item, "u-dead"), Store.renderManifest(Nil))
+    Store.writeUTF8(fs, new HPath(item, "v-dead"), Store.renderManifest(Seq("" -> "u-dead")))
+    assert(s.vacuum(0L) == 2L)
+    assert(s("MSFT").count() == 90 && s("STAGED").count() == 20)
+    ObjStoreFs.reset()
   }
 }

@@ -1021,7 +1021,7 @@ class StreamsSpec extends AnyFunSuite {
     ).toDF("event_id", "ts", "user_id", "event_type", "value", "props")
     // land as a FLAT FILE: eventsStream's pathGlobFilter matches file
     // names, so a directory-shaped events.parquet reads as empty
-    graft.DerivedCorpus.land(fixture, work, "events")
+    graft.DerivedCorpus.writeFlat(fixture, work, "events")
     val streamed = Streams.zscore(spark, work)
     val batch = SparkEntry.queries("ts_zscore")(spark, work)
       .select("event_id", "user_id", "value", "n_window", "z")
@@ -1049,7 +1049,7 @@ class StreamsSpec extends AnyFunSuite {
       (3L, t("2024-01-01 10:00:00"), 2L, "view", 1.0, "{}"),
       (4L, nullTs, 2L, "click", 1.0, "{}")
     ).toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    graft.DerivedCorpus.land(fixture, work, "events")
+    graft.DerivedCorpus.writeFlat(fixture, work, "events")
     val streamed = Streams.funnel(spark, work)
     val batch = SparkEntry.queries("funnel_steps")(spark, work)
     assert(streamed.exceptAll(batch).count() == 0)
@@ -1121,7 +1121,7 @@ class StreamsSpec extends AnyFunSuite {
     ).toDF("event_id", "ts", "user_id", "event_type", "value", "props")
     // land as a FLAT FILE: eventsStream's pathGlobFilter matches file
     // names, so a directory-shaped events.parquet reads as empty
-    graft.DerivedCorpus.land(fixture, work, "events")
+    graft.DerivedCorpus.writeFlat(fixture, work, "events")
     val streamed = Streams.zscore(spark, work)
     val batch = SparkEntry.queries("ts_zscore")(spark, work)
       .select("event_id", "user_id", "value", "n_window", "z")

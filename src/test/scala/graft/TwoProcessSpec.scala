@@ -1,15 +1,15 @@
 package graft
 
-import graft.sources.{PendingRecoveryError, Store}
+import graft.sources.Store
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import java.sql.Timestamp
 
 /** TRUE cross-process proof of the cross-JVM claims: a real second JVM
-  * (forked on the sbt test classpath) acquires a lease / starts a swap
-  * and is HARD-KILLED — `destroyForcibly` from outside, or
-  * `Runtime.halt` at an injected rename crash point — then THIS
+  * (forked on the sbt test classpath) acquires a lease / starts a
+  * mutation and is HARD-KILLED — `destroyForcibly` from outside, or
+  * `Runtime.halt` at an injected create or delete — then THIS
   * process observes, steals, and vacuums. Everything the in-process
   * suites simulate with thrown exceptions (ObjStoreSpec) or planted
   * files (StoreLeaseSpec) is exercised here across genuine process
@@ -154,9 +154,9 @@ class TwoProcessSpec extends AnyFunSuite {
   test("a versioned commit halted AT the pointer create in another process: parent reads the OLD version exactly and sweeps the orphan") {
     // the item layout's whole claim is that the commit is ONE
     // single-object pointer write — so the worst crash a foreign
-    // process can inflict is dying with a fully-materialized new
-    // version dir and the pointer untouched. Child halt(43)s the
-    // instant the `_current` create begins.
+    // process can inflict is dying with a fully-written new version
+    // (files and manifests) and the pointer untouched. Child halt(43)s
+    // the instant the `_current` create begins.
     val dir = "objstore://" +
       java.nio.file.Files.createTempDirectory("graft-2proc-vers").toString
     val s = Store.open(spark, dir, chunkRows = 50)
@@ -179,7 +179,7 @@ class TwoProcessSpec extends AnyFunSuite {
     def versionDirs(): Seq[String] =
       fs.listStatus(itemDir).map(_.getPath.getName).filter(_.startsWith("v-")).toSeq
     assert(versionDirs().size == 2,
-      s"expected live + orphaned version dirs, got ${versionDirs()}")
+      s"expected live + orphaned version manifests, got ${versionDirs()}")
     // vacuum(0) (safe: the only other writer is provably dead) sweeps
     // the dead child's uncommitted version
     s.vacuum(0L)
@@ -217,13 +217,13 @@ class TwoProcessSpec extends AnyFunSuite {
     val listed = spark.sql("SHOW TABLES IN gpcrash")
       .collect().map(_.getString(1)).toSet
     assert(listed == Set("SRC"), s"catalog must not list the crashed CTAS: $listed")
-    // the dead child left a fully-written orphan version dir
+    // the dead child left a fully-written orphan version
     val (fs, base) = hfs(dir)
     val itemDir = new HPath(new HPath(base, "items"), "CTASX")
     def orphans(): Seq[String] =
       if (!fs.exists(itemDir)) Seq.empty
       else fs.listStatus(itemDir).map(_.getPath.getName).filter(_.startsWith("v-")).toSeq
-    assert(orphans().size == 1, s"expected the staged orphan v-dir, got ${orphans()}")
+    assert(orphans().size == 1, s"expected the staged orphan version manifest, got ${orphans()}")
     // vacuum(0): a pointer-ABSENT item's versions are genuine orphans
     s.vacuum(0L)
     assert(orphans().isEmpty, s"orphan must be swept, got ${orphans()}")
@@ -233,42 +233,41 @@ class TwoProcessSpec extends AnyFunSuite {
     assert(spark.sql("SELECT count(*) FROM gpcrash.CTASX").collect()(0).getLong(0) == 100L)
   }
 
-  test("a swap killed MID-RENAME in another process (halt, objstore semantics) is vacuumed exactly here") {
+  test("a compactBuckets halted at its first manifest create in another process leaves the old version exact; vacuum sweeps its files here") {
     val dir = "objstore://" +
-      java.nio.file.Files.createTempDirectory("graft-2proc-swap").toString
+      java.nio.file.Files.createTempDirectory("graft-2proc-manifest").toString
     // a piled January bucket (write + append => several data files), so
-    // the child's compactBuckets swaps it by rename and the injected
-    // delete-phase crash (after one data file) leaves the live bucket
-    // genuinely MISSING data whose only complete copy sits in trash —
-    // the state per-file restore exists for
+    // the child's compactBuckets rewrites it: every new data file is
+    // written when the halt hits the first unit manifest create
     val s = Store.open(spark, dir, bucket = Some("month"))
     s.write("MSFT", bars(31))
     s.appendNewOnly("MSFT", bars(31, seed = 32))
     val before = s("MSFT").collect().map(_.toSeq).toSet
     assert(before.size == 62)
+    val (fs, base) = hfs(dir)
+    val data = new HPath(new HPath(new HPath(base, "items"), "MSFT"), "data/__bucket=2021-01")
+    def dataFiles(): Int = fs.listStatus(data).count(_.getPath.getName.endsWith(".parquet"))
+    val named = dataFiles()
 
-    val (proc, log) = forkChild(Seq("swapcrash", dir, "MSFT", "2021-01"), Seq.empty)
+    val (proc, log) = forkChild(Seq("manifestcrash", dir, "MSFT"), Seq.empty)
     assert(proc.waitFor(180, java.util.concurrent.TimeUnit.SECONDS),
       s"child did not finish; log:\n${tail(log)}")
-    assert(proc.exitValue() == 42,
-      s"child must die AT the injected halt (exit 42), got ${proc.exitValue()}; log:\n${tail(log)}")
+    assert(proc.exitValue() == 43,
+      s"child must die AT the manifest-create halt (exit 43), got ${proc.exitValue()}; log:\n${tail(log)}")
 
-    // the dead writer's markers gate mutations in this process...
-    intercept[PendingRecoveryError] { s.append("MSFT", bars(10)) }
-    // ...and vacuum(0) (safe: the only other writer is provably dead)
-    // rolls the half-moved live dir back byte-complete
-    s.vacuum(0L)
-    val after = s("MSFT").collect().map(_.toSeq).toSet
-    assert(after == before, "rows must survive a mid-rename process death exactly")
-    // the item is writable again, and no recovery debris remains
+    // nothing was committed: reads here are exact with no recovery
+    assert(s("MSFT").collect().map(_.toSeq).toSet == before,
+      "rows must survive a mid-mutation process death exactly")
+    val dead = dataFiles() - named
+    assert(dead > 0, "the dead writer's new data files are on disk")
+    // vacuum(0) (safe: the only other writer is provably dead) sweeps them
+    assert(s.vacuum(0L) == dead.toLong)
+    assert(dataFiles() == named && s("MSFT").collect().map(_.toSeq).toSet == before)
+    // and the item is writable again
     s.appendNewOnly("MSFT", bars(130)) // extends the seed-31 prefix
     assert(s("MSFT").count() == 130 + 31)
-    val (fs, base) = hfs(dir)
-    val staging = new HPath(base, ".staging")
-    val leftovers =
-      if (!fs.exists(staging)) Seq.empty
-      else fs.listStatus(staging).map(_.getPath.getName).toSeq
-    assert(leftovers.isEmpty, s"staging debris left: $leftovers")
+    assert(s.compactBuckets("MSFT", maxFilesPerBucket = 1) >= 1L)
+    assert(s("MSFT").count() == 130 + 31)
   }
 
   test("randomized cross-JVM lifecycle fuzz: forked writer with halt kill points, in-process reads, model-checked recovery") {
@@ -276,9 +275,9 @@ class TwoProcessSpec extends AnyFunSuite {
     // spec's real-process-death machinery (r16 verdict task #7): a
     // forked JVM drives a SEEDED random op sequence (appendNewOnly /
     // append / compact / vacuum) over a shared objstore:// store,
-    // arming halt=true crash points inside rename copy/delete phases,
-    // at the `_current` pointer create, and at version-dir deletes
-    // (mid-sweep, after 0-1 matches pass) — so the writer dies at
+    // arming halts at data file and manifest creates, at the `_current`
+    // pointer create, and inside deletes (a commit's or vacuum's, after
+    // 0-1 matches pass) — so the writer dies at
     // random protocol offsets like a preempted executor, with no
     // finally blocks and no shared JVM state. This process concurrently probes
     // the reader/metadata surface (the class the round-16 walkFiles
@@ -290,11 +289,11 @@ class TwoProcessSpec extends AnyFunSuite {
     //   - extra rows beyond the model can only come from the ONE
     //     in-flight op, and only if that op was an append form (a
     //     compact is a pointer swap: all or nothing; a vacuum touches
-    //     only non-current versions and staging, never rows),
+    //     only files the current version does not name, never rows),
     //   - footer row count == content count (no duplicate incarnation,
     //     no torn file contributing phantom rows),
-    //   - vacuum converges (second pass sweeps 0), staging drains, and
-    //     exactly one version dir remains (orphans swept).
+    //   - vacuum converges (second pass sweeps 0), exactly one version
+    //     manifest remains, and every data file left is one it names.
     // Mutations stay in the child: cross-JVM mutation without a writer
     // lease is documented-undefined, and objstore's check-then-act
     // create cannot honestly attest lease exactness — one mutator,
@@ -336,9 +335,9 @@ class TwoProcessSpec extends AnyFunSuite {
         assert(proc.waitFor(60, java.util.concurrent.TimeUnit.SECONDS),
           s"child hung; log:\n${tail(log)}")
         val exit = proc.exitValue()
-        // 42 = rename-phase crash, 43 = halt-on-create, 44 = halt-on-
-        // delete (mid-sweep), 0 = all ops completed before any arm fired
-        assert(Set(0, 42, 43, 44).contains(exit),
+        // 43 = halt-on-create, 44 = halt-on-delete, 0 = all ops
+        // completed before any arm fired
+        assert(Set(0, 43, 44).contains(exit),
           s"child died outside its halt points (exit $exit); log:\n${tail(log)}")
         val lines = new String(
           java.nio.file.Files.readAllBytes(log.toPath), "UTF-8").linesIterator.toVector
@@ -381,20 +380,14 @@ class TwoProcessSpec extends AnyFunSuite {
         val versions = s.versionsOf("K")
         assert(versions.size == 1 && versions.head.current,
           s"seed=$seed: orphan versions survived the sweep: $versions")
+        // a writer that died mid-mutation leaves data files no manifest
+        // names; the recovery vacuum must have reclaimed them
         val (fs, base) = hfs(dir)
-        val staging = new HPath(base, ".staging")
-        assert(!fs.exists(staging) || fs.listStatus(staging).isEmpty,
-          s"seed=$seed: staging not drained")
-        // vacuum job 4: a writer that died mid-append leaves the
-        // kernel's unlanded hidden files inside the live version dir;
-        // the recovery vacuum must have reclaimed them
-        val curDir = new HPath(
-          new HPath(new HPath(base, "items"), "K"), versions.head.id)
-        val debris = fs.listStatus(curDir).map(_.getPath.getName)
-          .filter(n => n.startsWith(ObjStoreFs.HiddenPrefix) || n == "_temporary" ||
-            n.startsWith(".spark-staging"))
-        assert(debris.isEmpty,
-          s"seed=$seed: dead job-staging debris survived recovery: ${debris.toSeq}")
+        val left = fs.listFiles(new HPath(new HPath(base, "items"), "K"), true)
+        var data = 0L
+        while (left.hasNext) if (left.next().getPath.getName.endsWith(".parquet")) data += 1
+        assert(data == versions.head.files,
+          s"seed=$seed: $data data files on disk, ${versions.head.files} named: debris survived recovery")
         assert(probeOk > 0, s"seed=$seed: vacuous probe loop ($probes probes, 0 ok)")
         System.err.println(
           s"[xjvm-fuzz] seed=$seed exit=$exit confirmed=$nOk/" +
