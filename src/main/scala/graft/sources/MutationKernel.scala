@@ -87,7 +87,8 @@ private[sources] final class MutationKernel(
     chunkRows: Long,
     reader: ParquetPartitionReaderFactory,
     writer: OutputWriterFactory,
-    writeConf: SerializableConfiguration) extends Serializable {
+    writeConf: SerializableConfiguration,
+    itemDir: String) extends Serializable {
   import MutationKernel._
 
   /** Whether a listed unit with no batch rows is rewritten too. */
@@ -100,9 +101,10 @@ private[sources] final class MutationKernel(
   private val fileSchema = StructType(schema.map(_.copy(nullable = true)))
 
   /** The kernel over unit `unit`: `files` are its listed files, `batch`
-    * the batch's rows for it, and the files it writes go to `dir`.
+    * the batch's rows for it, and the files it writes go to the unit's
+    * data dir under `itemDir`.
     */
-  def run(unit: String, dir: String, files: Seq[UnitFile], batch: Iterator[InternalRow]): Seq[Written] = {
+  def run(unit: String, files: Seq[UnitFile], batch: Iterator[InternalRow]): Seq[Written] = {
     val cols = schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
       BoundReference(i, f.dataType, nullable = true) }
     lazy val own = UnsafeProjection.create(cols)
@@ -129,13 +131,13 @@ private[sources] final class MutationKernel(
         old(r => b += own(r).copy())
         b.result()
     }
-    write(unit, dir, rows)
+    write(unit, rows)
   }
 
   /** The row's index — column 0 of the store schema — with NULL first. */
   private def indexKey(r: UnsafeRow): Long = if (r.isNullAt(0)) Long.MinValue else r.getLong(0)
 
-  private def write(unit: String, dir: String, rows: Array[UnsafeRow]): Seq[Written] = {
+  private def write(unit: String, rows: Array[UnsafeRow]): Seq[Written] = {
     java.util.Arrays.sort(rows, (a: UnsafeRow, b: UnsafeRow) => {
       val c = java.lang.Long.compare(indexKey(a), indexKey(b))
       if (c != 0) c else java.util.Arrays.compareUnsigned(a.getBytes, b.getBytes)
@@ -150,7 +152,7 @@ private[sources] final class MutationKernel(
     runs.flatMap(r => if (mode == CompactExact) Seq(r) else r.grouped(chunk)).filter(_.nonEmpty)
       .zipWithIndex.map { case (rs, i) =>
         val name = f"part-$i%05d-$id-c000.snappy.parquet"
-        val path = new HPath(dir, name)
+        val path = new HPath(s"$itemDir/${Store.unitDir(unit)}", name)
         SparkInternals.writeFile(writer, context, path, fileSchema, rs)
         Written(unit, name, path.getFileSystem(context.getConfiguration).getFileStatus(path).getLen)
       }
@@ -195,12 +197,11 @@ private[sources] final class MutationKernel(
     */
   def onDriver(
       units: Map[String, Seq[UnitFile]],
-      batch: Seq[(String, InternalRow)],
-      dirOf: String => String): Seq[Written] = {
+      batch: Seq[(String, InternalRow)]): Seq[Written] = {
     val byUnit = batch.groupBy(_._1)
     val todo = byUnit.keySet ++ (if (rewritesUntouched) units.keySet else Set.empty)
     todo.toSeq.sorted.flatMap(u =>
-      run(u, dirOf(u), units.getOrElse(u, Nil), byUnit.getOrElse(u, Nil).iterator.map(_._2)))
+      run(u, units.getOrElse(u, Nil), byUnit.getOrElse(u, Nil).iterator.map(_._2)))
   }
 
   /** The task placement. `batch` — `withBucket(conform(df))`: rows of
@@ -218,8 +219,7 @@ private[sources] final class MutationKernel(
       spark: SparkSession,
       units: Map[String, Seq[UnitFile]],
       batch: Option[DataFrame],
-      bucketCol: Option[String],
-      dirOf: String => String): Seq[Written] = {
+      bucketCol: Option[String]): Seq[Written] = {
     val n = schema.length
     val parts = if (bucketCol.isEmpty) 1 else spark.conf.get("spark.sql.shuffle.partitions").toInt
     val none = spark.sparkContext.parallelize(Seq.empty[InternalRow], parts)
@@ -244,7 +244,7 @@ private[sources] final class MutationKernel(
         def same(r: InternalRow): Boolean = label(r) == l
         val u = unitOf(in.head, n, bucketCol)
         done += u
-        out ++= run(u, dirOf(u), units.getOrElse(u, Nil), new Iterator[InternalRow] {
+        out ++= run(u, units.getOrElse(u, Nil), new Iterator[InternalRow] {
           def hasNext: Boolean = in.hasNext && same(in.head)
           def next(): InternalRow = in.next()
         })
@@ -252,7 +252,7 @@ private[sources] final class MutationKernel(
       }
       if (untouched) units.keys.toSeq.sorted
         .filter(u => partitionOf(u) == p && !done(u))
-        .foreach(u => out ++= run(u, dirOf(u), units(u), Iterator.empty))
+        .foreach(u => out ++= run(u, units(u), Iterator.empty))
       out.result().iterator
     }.collect().toSeq
   }

@@ -2236,24 +2236,23 @@ class Store private[sources] (
     requireMicrosTimestamps()
     val fileSchema = StructType(schema.map(_.copy(nullable = true)))
     val (writer, conf) = SparkInternals.parquetWriter(spark, fileSchema, Map("compression" -> "snappy"), base)
-    val kernel = new MutationKernel(mode, schema, chunkRows,
-      SparkInternals.driverReaderFactory(spark, schema, schema, Array.empty, new StructType()), writer, conf)
     val dir = new HPath(itemsRoot, k).toString
+    val kernel = new MutationKernel(mode, schema, chunkRows,
+      SparkInternals.driverReaderFactory(spark, schema, schema, Array.empty, new StructType()), writer, conf, dir)
     def units(listed: Seq[(String, Entries)]) = listed.map { case (u, es) =>
       u -> es.map { case (rel, len) => UnitFile(s"$dir/$rel", len) } }.toMap
-    val dirOf = (u: String) => s"$dir/${Store.unitDir(u)}"
     val local = if (!driverMutable) None else batch.fold(Option(Seq.empty[(String, InternalRow)]))(batchOnDriver)
     local.flatMap { rows =>
       val listed = listing(Option.when(mode == MutationKernel.NewOnly)(rows.map(_._1).toSet))
       Option.when(fitsDriver(listed.flatMap(_._2).map(_._2).sum))(
-        listed -> kernel.onDriver(units(listed), rows, dirOf))
+        listed -> kernel.onDriver(units(listed), rows))
     }.getOrElse {
       val rows = batch.map { df =>
         requireTzAligned() // withBucket's date_format renders in session tz
         withBucket(conform(df))
       }
       val listed = listing(None)
-      listed -> kernel.inTasks(spark, units(listed), rows, bucketFmt.map(_ => BucketCol), dirOf)
+      listed -> kernel.inTasks(spark, units(listed), rows, bucketFmt.map(_ => BucketCol))
     }
   }
 
@@ -2362,10 +2361,15 @@ class Store private[sources] (
     * Pointer repair: a pointer that EXISTS but names no complete version
     * — empty, or naming a missing or partial manifest (on HDFS a create
     * is visible before its close) — must never be read as "no version is
-    * current": that would turn the item's data into garbage. It is
-    * repaired to the newest complete version manifest first; with none,
-    * the item is left alone. A pointer that cannot be read is left alone
-    * this round too.
+    * current": that would turn the item's data into garbage. A version
+    * found incomplete is first checked against the pointer read again —
+    * a commit in another JVM may have moved the pointer on and deleted
+    * that version meanwhile, and then the mark is the version the
+    * pointer names now. A pointer that still names it is repaired to the
+    * newest complete version manifest of a fresh listing of the item
+    * dir; with none, the item is left alone. A pointer that cannot be
+    * read is left alone this round too. A dir that a commit or drop in
+    * another JVM deletes while the sweep lists the item counts as empty.
     *
     * Two writer-safety layers: an item whose lock a mutation holds IN
     * THIS JVM is skipped (`tryLock`), which makes even a force-sweep
@@ -2396,37 +2400,51 @@ class Store private[sources] (
   private def sweep(k: String, cutoff: Long): Long = {
     val dir = new HPath(itemsRoot, k)
     val root = dir.toUri.getPath + "/"
-    def walk(d: HPath): Seq[FileStatus] = fs.listStatus(d).toSeq.flatMap(st =>
+    // a dir a commit or drop in another JVM deletes mid-walk lists empty
+    def list(d: HPath): Seq[FileStatus] =
+      try fs.listStatus(d).toSeq catch { case _: java.io.FileNotFoundException => Nil }
+    def walk(d: HPath): Seq[FileStatus] = list(d).flatMap(st =>
       if (st.isDirectory) walk(st.getPath) :+ st else Seq(st))
     val (dirs, files) = walk(dir).partition(_.isDirectory)
     def rel(st: FileStatus) = st.getPath.toUri.getPath.stripPrefix(root)
-    val versions = files.filter(f => rel(f).startsWith("v-")).sortBy(-_.getModificationTime).map(rel)
-    val staged = versions.filter(v => Store.activeStagingIds.contains(v.stripPrefix("v-")))
+    def isStaged(v: String) = Store.activeStagingIds.contains(v.stripPrefix("v-"))
+    val staged = files.map(rel).filter(v => v.startsWith("v-") && isStaged(v))
       .flatMap(namedBy(k, _).getOrElse(Set.empty[String]))
     val ptr = itemFile(k, Store.CurrentPtr)
     // the pointer's content, None when absent; None outside when it
     // exists but cannot be read
-    val pointer: Option[Option[String]] =
+    def pointer(): Option[Option[String]] =
       try Some(Option.when(fs.exists(ptr))(readUTF8(fs, ptr).trim))
       catch { case _: java.io.IOException => Option.when(!fs.exists(ptr))(None) }
-    val live: Option[Set[String]] = pointer.flatMap { // None: hands off this item
+    // torn or dangling: repair to the newest complete version of a fresh
+    // listing (a version another JVM is committing was created before
+    // its pointer PUT, so a fresh listing sees it)
+    def repair(): Option[Set[String]] =
+      list(dir).filter(st => st.getPath.getName.startsWith("v-") && !isStaged(st.getPath.getName))
+        .sortBy(-_.getModificationTime).iterator
+        .map(st => st.getPath.getName -> namedBy(k, st.getPath.getName))
+        .collectFirst { case (c, Some(n)) => writeUTF8(fs, ptr, c); n }
+    // what the current version names; None: hands off this item. A
+    // commit in another JVM can move the pointer on and delete the
+    // version it named between the pointer read and the manifest read,
+    // so an incomplete version is checked against the pointer read
+    // again: only a pointer that still names it (ids are never reused)
+    // is torn or dangling
+    def mark(p: Option[Option[String]], tries: Int): Option[Set[String]] = p.flatMap {
       case None => Some(Set.empty) // no pointer: nothing is current
-      case Some(v) =>
-        namedBy(k, v).orElse {
-          // torn or dangling: repair to the newest complete version
-          versions.iterator.map(c => c -> namedBy(k, c)).collectFirst { case (c, Some(n)) =>
-            writeUTF8(fs, ptr, c)
-            n
-          }
-        }.map(_ + Store.CurrentPtr)
+      case Some(v) => namedBy(k, v).orElse(pointer() match {
+        case Some(Some(`v`)) => repair()
+        case again => if (tries < 8) mark(again, tries + 1) else None
+      }).map(_ + Store.CurrentPtr)
     }
-    live.fold(0L) { named =>
+    mark(pointer(), 0).fold(0L) { named =>
       val keep = named ++ staged
       val removed = files.count(f =>
         !keep(rel(f)) && f.getModificationTime <= cutoff && fs.delete(f.getPath, false)).toLong
+      val self = if (fs.exists(ptr)) None
+        else try Some(fs.getFileStatus(dir)) catch { case _: java.io.FileNotFoundException => None }
       // deepest first, so a parent sees its children gone
-      (dirs.filter(_.getModificationTime <= cutoff) ++
-        Option.when(!fs.exists(ptr))(fs.getFileStatus(dir)).filter(_.getModificationTime <= cutoff))
+      (dirs ++ self).filter(_.getModificationTime <= cutoff)
         .foreach(d => try if (fs.listStatus(d.getPath).isEmpty) fs.delete(d.getPath, false)
           catch { case scala.util.control.NonFatal(_) => () })
       removed

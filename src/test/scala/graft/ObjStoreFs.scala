@@ -41,8 +41,10 @@ class ObjStoreFs extends RawLocalFileSystem {
       "graft", "graft", st.getPath)
 
   override def getFileStatus(f: HPath): FileStatus = solid(super.getFileStatus(f))
-  override def listStatus(f: HPath): Array[FileStatus] =
+  override def listStatus(f: HPath): Array[FileStatus] = {
+    ObjStoreFs.beforeList.foreach(_(f))
     super.listStatus(f).map(solid)
+  }
 
   /** Recursive file listing (files only — object stores have no real
     * directories), stable order.
@@ -124,6 +126,7 @@ class ObjStoreFs extends RawLocalFileSystem {
   }
 
   override def open(f: HPath, bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
+    ObjStoreFs.beforeOpen.foreach(_(f))
     if (f.getName.endsWith(".parquet"))
       ObjStoreFs.beforeDataOpen.foreach { act =>
         ObjStoreFs.beforeDataOpen = None // one-shot
@@ -191,6 +194,18 @@ object ObjStoreFs {
     */
   @volatile var beforeDataOpen: Option[() => Unit] = None
 
+  /** When set: runs before each open, with its path — another writer's
+    * commit landing between two reads of a control-plane file. Not
+    * one-shot: the hook decides.
+    */
+  @volatile var beforeOpen: Option[HPath => Unit] = None
+
+  /** When set: runs before each directory listing, with its path — a
+    * dir another writer deletes while a walk lists its parent. Not
+    * one-shot: the hook decides.
+    */
+  @volatile var beforeList: Option[HPath => Unit] = None
+
   /** Diagnostic: print every delete the FS sees (never armed by specs —
     * a human investigating which real delete a kill point hit).
     */
@@ -200,5 +215,6 @@ object ObjStoreFs {
     renames.clear(); haltOnCreatePath = None
     haltOnDeletePath = None; deleteSkips.set(0)
     afterWrite = None; beforeDelete = None; beforeDataOpen = None
+    beforeOpen = None; beforeList = None
   }
 }

@@ -329,4 +329,72 @@ class ObjStoreSpec extends AnyFunSuite {
     s.write("MSFT", bars(10))
     assert(s("MSFT").count() == 10)
   }
+
+  test("vacuum: a commit that moves the pointer on between the sweep's pointer read and its manifest read is kept, never rolled back to an orphan version") {
+    ObjStoreFs.reset()
+    def fixture(d: String): Store = { val s = open(d, Some("month")); s.write("MSFT", bars(62)); s }
+    def commit(s: Store): Unit = s.append("MSFT", bars(40, seed = 14))
+    val want = { val s = fixture(objDir()); commit(s); rows(s) }
+    val dir = objDir()
+    val s = fixture(dir)
+    // a complete orphan version: an appendNewOnly that died right after
+    // writing its version manifest, before its pointer PUT
+    ObjStoreFs.afterWrite = Some(p => if (p.getName.startsWith("v-")) {
+      ObjStoreFs.afterWrite = None
+      throw new ObjStoreFs.InjectedCrash(s"injected crash after writing $p")
+    })
+    intercept[ObjStoreFs.InjectedCrash](s.appendNewOnly("MSFT", bars(100, seed = 12)))
+    val (fs, base) = hfs(dir)
+    val item = new HPath(new HPath(base, "items"), "MSFT")
+    def pointer() = Store.readUTF8(fs, new HPath(item, "_current")).trim
+    val read = pointer()
+    val orphan = fs.listStatus(item).map(_.getPath.getName).filter(n => n.startsWith("v-") && n != read)
+    assert(orphan.length == 1, "fixture: one complete orphan version beside the current one")
+    // the sweep has read the pointer; just before it reads the version
+    // manifest the pointer named, another writer commits and deletes
+    // that manifest (the item lock is reentrant, so a commit on the
+    // sweep's own thread passes it as a writer in another JVM would)
+    var fired = 0
+    ObjStoreFs.beforeOpen = Some(p => if (p.getName == read) {
+      ObjStoreFs.beforeOpen = None
+      commit(s)
+      fired += 1
+    })
+    s.vacuum(0L)
+    assert(fired == 1, "the commit landed inside the sweep")
+    assert(pointer() != read && pointer() != orphan.head, "the pointer names the commit's version")
+    assert(rows(s) == want, "the committed rows survive vacuum")
+    assert(!fs.exists(new HPath(item, orphan.head)), "the orphan version is swept")
+    assert(s.vacuum(0L) == 0L)
+    assert(rows(s) == want && s.describe("MSFT").rows == want.size)
+  }
+
+  test("vacuum: a bucket dir a prune deletes while the sweep walks its item counts as empty, and every other item is still swept") {
+    ObjStoreFs.reset()
+    val dir = objDir()
+    val s = open(dir, bucket = Some("month"))
+    s.write("AAPL", bars(100)) // Jan..Apr 2020 buckets
+    s.write("MSFT", bars(100))
+    val want = rows(s, "MSFT")
+    val (fs, _) = hfs(dir)
+    // one data file no manifest names in each item
+    val orphans = Seq("AAPL", "MSFT").map(k =>
+      new HPath(new HPath(LiveDir.hpath(s, k), "__bucket=2020-02"), "part-orphan.snappy.parquet"))
+    orphans.foreach(fs.create(_).close())
+    val jan = new HPath(LiveDir.hpath(s, "AAPL"), "__bucket=2020-01")
+    // the walk has listed AAPL's data dir; just before it lists the
+    // January bucket, a prune commits (on the sweep's thread, as a writer
+    // in another JVM would) and deletes that bucket's dir
+    var pruned = -1L
+    ObjStoreFs.beforeList = Some(p => if (p.toUri.getPath == jan.toUri.getPath) {
+      ObjStoreFs.beforeList = None
+      pruned = s.prune("AAPL", Timestamp.valueOf("2020-02-01 00:00:00"))
+    })
+    assert(s.vacuum(0L) == 2L, "each item's orphan is swept")
+    assert(pruned == 1L && !fs.exists(jan), "the prune deleted the bucket dir mid-walk")
+    assert(!orphans.exists(fs.exists(_)))
+    assert(rows(s, "MSFT") == want)
+    assert(s.describe("AAPL").rows == 100L - 31L)
+    assert(s.vacuum(0L) == 0L)
+  }
 }
