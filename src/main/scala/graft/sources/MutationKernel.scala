@@ -98,6 +98,9 @@ private[sources] final class MutationKernel(
   }
 
   @transient private lazy val context = SparkInternals.writeContext(writeConf.value)
+  // one handle per kernel: the write conf turns the local filesystem's
+  // cache off, so a lookup per file would build a filesystem per file
+  @transient private lazy val outFs = new HPath(itemDir).getFileSystem(context.getConfiguration)
   private val fileSchema = StructType(schema.map(_.copy(nullable = true)))
 
   /** The kernel over unit `unit`: `files` are its listed files, `batch`
@@ -154,7 +157,7 @@ private[sources] final class MutationKernel(
         val name = f"part-$i%05d-$id-c000.snappy.parquet"
         val path = new HPath(s"$itemDir/${Store.unitDir(unit)}", name)
         SparkInternals.writeFile(writer, context, path, fileSchema, rs)
-        Written(unit, name, path.getFileSystem(context.getConfiguration).getFileStatus(path).getLen)
+        Written(unit, name, outFs.getFileStatus(path).getLen)
       }
   }
 
