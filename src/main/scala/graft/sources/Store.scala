@@ -1485,14 +1485,15 @@ class Store private[sources] (
     *
     * Rows are exact; min/max are None for an empty item (or if a writer
     * produced no stats). `files` and `bytes` count the [[files]]
-    * listing, the one every read and [[compactIfNeeded]] use.
+    * listing, the one every read and [[compactIfNeeded]] use. All of
+    * them describe one version: a file that a concurrent commit deleted
+    * after the listing retakes the listing and the sweep
+    * ([[retryVanished]]).
     */
-  def describe(key: String): Store.ItemStats = {
+  def describe(key: String): Store.ItemStats = retryVanished {
     val listed = files(key)
     val idx = indexName
-    // a file a concurrent commit deleted since the read of its manifest
-    // contributes nothing: describe is a point-in-time snapshot
-    val (perFile, _) = sweepFooters(listed, Seq(idx), Set(idx))
+    val perFile = sweepFooters(listed, Seq(idx), Set(idx))
     val ranges = perFile.flatMap(_.minMaxByCol.get(idx))
     Store.ItemStats(
       rows = perFile.map(_.rows).sum,
@@ -1573,10 +1574,10 @@ class Store private[sources] (
   }
 
   /** Footer stats of every file of `listed`, for the unfiltered footer
-    * answer; a vanished file refuses ([[footersOrRefuse]]).
+    * answer; a vanished file refuses ([[sweepFooters]]).
     */
   private[graft] def footerFiles(listed: Seq[FileStatus]): Array[Store.FileFooterStats] =
-    footersOrRefuse(listed, schema.fieldNames.toSeq, mmStatCols)
+    sweepFooters(listed, schema.fieldNames.toSeq, mmStatCols)
 
   /** THE footer sweep — every footer read of the store goes through
     * here: [[describe]], [[footerFiles]], [[footerFilesInRange]] and the
@@ -1588,14 +1589,14 @@ class Store private[sources] (
     * [[Store$.readFooter]], a HEAD+ranged-GET on object stores). A larger set fans out over
     * executors so 100k footers never funnel through one machine.
     *
-    * A file that vanished since the listing (a concurrent commit deleted it) is
-    * returned in the second element rather than thrown: [[describe]],
-    * a point-in-time snapshot, counts it as nothing; callers whose
-    * answer must be exact refuse through [[footersOrRefuse]].
+    * A file that vanished since the listing (a concurrent commit
+    * deleted it) refuses the whole sweep with FileNotFoundException:
+    * [[describe]] then retakes its listing, and the footer-answered SQL
+    * paths plan the ordinary scan, which re-lists.
     */
   private def sweepFooters(
       files: Seq[FileStatus], cols: Seq[String], mmCols: Set[String])
-      : (Array[Store.FileFooterStats], Seq[String]) = {
+      : Array[Store.FileFooterStats] = {
     val paths = files.map(_.getPath.toString)
     val read: Array[Option[Store.FileFooterStats]] =
       if (paths.size <= 256) {
@@ -1625,22 +1626,11 @@ class Store private[sources] (
           }
           .collect() // O(files) metadata tuples, not data; in path order
       }
-    (read.flatten, paths.zip(read).collect { case (p, None) => p })
-  }
-
-  /** [[sweepFooters]] for callers whose answer must be exact: a file
-    * that vanished mid-sweep refuses with FileNotFoundException (the
-    * footer-answered SQL paths then plan the ordinary scan, which
-    * re-lists).
-    */
-  private def footersOrRefuse(
-      files: Seq[FileStatus], cols: Seq[String], mmCols: Set[String])
-      : Array[Store.FileFooterStats] = {
-    val (perFile, vanished) = sweepFooters(files, cols, mmCols)
+    val vanished = paths.zip(read).collect { case (p, None) => p }
     if (vanished.nonEmpty)
       throw new java.io.FileNotFoundException(
         s"${vanished.size} file(s) vanished during the footer sweep, e.g. ${vanished.head}")
-    perFile
+    read.flatten
   }
 
   /** The files of an INDEX-RANGE slice, with their footer stats — the
@@ -1669,7 +1659,7 @@ class Store private[sources] (
       lo: Option[(Long, Boolean)],
       hi: Option[(Long, Boolean)])
       : Option[(Array[Store.FileFooterStats], Array[Store.FileFooterStats])] = {
-    val perFile = footersOrRefuse(listed, schema.fieldNames.toSeq, mmStatCols)
+    val perFile = sweepFooters(listed, schema.fieldNames.toSeq, mmStatCols)
 
     // a value v is in range iff aboveLo(v) && belowHi(v)
     def aboveLo(v: Long): Boolean = lo.forall {
@@ -1717,7 +1707,7 @@ class Store private[sources] (
       while (i < groups.size && cum < k) {
         reads += groups(i).size
         if (reads > 64) return None
-        cum += footersOrRefuse(groups(i), Nil, Set.empty).map(_.rows).sum
+        cum += sweepFooters(groups(i), Nil, Set.empty).map(_.rows).sum
         i += 1
       }
       if (cum >= k) Some(groups.take(i).flatten) else None
@@ -1886,12 +1876,21 @@ class Store private[sources] (
       Option.when(parts.forall(_.isDefined))(parts.flatMap(_.get).toSet + id)
     }
 
-  /** Deletes `rels` (paths relative to item `k`'s dir), best effort:
-    * whatever a failure leaves is vacuum's.
+  /** Deletes `rels` (paths relative to item `k`'s dir: files, or unit
+    * dirs already emptied), best effort: whatever a failure leaves is
+    * vacuum's. On the local filesystem each is one `java.nio` delete,
+    * as [[Store$.writeUTF8]] writes: the checksummed filesystem would
+    * stat every path and probe for a `.crc` twin that no store write
+    * leaves.
     */
-  private def deleteFiles(k: String, rels: Iterable[String]): Unit =
-    rels.foreach(r =>
-      try fs.delete(itemFile(k, r), false) catch { case scala.util.control.NonFatal(_) => () })
+  private def deleteFiles(k: String, rels: Iterable[String]): Unit = {
+    val local = Option.when(fs.getScheme == "file")(graft.sources.v2.NioLocalFileSystem.shared)
+    rels.foreach { r =>
+      val p = itemFile(k, r)
+      try local.fold(fs.delete(p, false))(l => java.nio.file.Files.deleteIfExists(l.pathToFile(p).toPath))
+      catch { case scala.util.control.NonFatal(_) => () }
+    }
+  }
 
   /** Full scan of one item (reference `_Item`, store.py:49-71): the
     * item is listed once when this is called ([[files]]) and the
@@ -2027,8 +2026,7 @@ class Store private[sources] (
     val kept = carried.map(_._2).toSet
     deleteFiles(k, prev.id +: prev.units.map(_._2).filterNot(kept) ++: obsolete.toSeq)
     val left = carried.map(_._1).toSet ++ fresh.filter(_._2.nonEmpty).keySet
-    prev.units.map(_._1).filterNot(left).foreach(u =>
-      try fs.delete(itemFile(k, unitDir(u)), false) catch { case scala.util.control.NonFatal(_) => () })
+    deleteFiles(k, prev.units.map(_._1).filterNot(left).map(unitDir))
   }
 
   /** Rewrites every unit of item `k` in `mode` and commits the result
@@ -2066,7 +2064,7 @@ class Store private[sources] (
     */
   private def isCanonical(files: Seq[FileStatus]): Boolean = {
     val idx = indexName
-    val stats = footersOrRefuse(files, Seq(idx), Set(idx))
+    val stats = sweepFooters(files, Seq(idx), Set(idx))
     val bearing = stats.filter(_.rows > 0L)
     files.size <= MutationKernel.canonicalCount(stats.map(_.rows).sum, chunkRows) &&
       (!bearing.forall(_.minMaxOkCols.contains(idx)) || {

@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{ArrayTransform, CreateNamedStruct, Expression, GetStructField, If, IsNull, LambdaFunction, Literal, MapSort, NamedLambdaVariable, TransformValues}
@@ -16,7 +17,7 @@ import org.apache.spark.sql.types.{ArrayType, AtomicType, DataType, MapType, Str
   * namespace — the standard pattern for custom-Expression libraries.
   * `Dataset.ofRows` is `private[sql]` too: [[frame]] reaches it the
   * same way, and so do [[groupKey]], [[isAtomic]],
-  * [[drainListeners]] and [[isSqlDefault]].
+  * [[drainListeners]], [[isSqlDefault]] and [[setContextConfIfMissing]].
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -32,6 +33,14 @@ object Bridge {
     */
   def localFrame(spark: SparkSession, schema: StructType, rows: Seq[InternalRow]): DataFrame =
     frame(spark, LocalRelation(DataTypeUtils.toAttributes(schema), rows))
+
+  /** Sets `key` to `value` in the active SparkContext's conf unless it
+    * is set there already (`SparkContext.getActive` and `conf` are
+    * `private[spark]`). A session created after this copies it into its
+    * `SQLConf`; one that exists already keeps what it copied.
+    */
+  def setContextConfIfMissing(key: String, value: String): Unit =
+    SparkContext.getActive.foreach(_.conf.setIfMissing(key, value))
 
   /** Whether `key` is a registered SQL conf entry and `value` its default. */
   def isSqlDefault(key: String, value: String): Boolean =

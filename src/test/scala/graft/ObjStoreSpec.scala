@@ -256,10 +256,13 @@ class ObjStoreSpec extends AnyFunSuite {
     val before = s.describe("MSFT")
     assert(before.rows == 31 && before.files == 1, s"$before")
     var fired = 0
+    // one-shot: the compact fires once, and describe retakes its listing
     ObjStoreFs.beforeDataOpen = Some(() => { s.compact("MSFT"); fired += 1 })
     val d = s.describe("MSFT")
-    assert(fired == 1 && d.rows == 0 && d.files == 1 && d.minIndex.isEmpty, s"$d")
-    assert(s.describe("MSFT").rows == 31)
+    val compacted = s.versionsOf("MSFT").head
+    assert(compacted.current && compacted.files == 1)
+    assert(fired == 1 && d.rows == 31 && d.files == 1 && d.bytes == compacted.bytes, s"$d")
+    assert(d.minIndex == before.minIndex && d.maxIndex == before.maxIndex, s"$d")
 
     spark.read.format("graft").option("item", "MSFT").load(dir).createOrReplaceTempView("vanish_msft")
     def scans(df: DataFrame): Boolean = df.queryExecution.optimizedPlan.exists {

@@ -5,6 +5,7 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import java.sql.Timestamp
+import ChildJvm.tail
 
 /** TRUE cross-process proof of the cross-JVM claims: a real second JVM
   * (forked on the sbt test classpath) acquires a lease / starts a
@@ -42,39 +43,9 @@ class TwoProcessSpec extends AnyFunSuite {
     (hp.getFileSystem(spark.sparkContext.hadoopConfiguration), hp)
   }
 
-  /** Fork `CrashChild` with this JVM's module flags + classpath. The
-    * child's stdio lands in a temp log that is printed on failure.
-    */
-  def forkChild(childArgs: Seq[String], extraJvm: Seq[String]): (Process, java.io.File) = {
-    import scala.jdk.CollectionConverters._
-    val rt = java.lang.management.ManagementFactory
-      .getRuntimeMXBean.getInputArguments.asScala.toVector
-    val jvmArgs = {
-      val b = Vector.newBuilder[String]
-      var i = 0
-      while (i < rt.length) {
-        val a = rt(i)
-        if (a == "--add-opens" && i + 1 < rt.length) { b += a += rt(i + 1); i += 2 }
-        else if (a.startsWith("--add-opens")) { b += a; i += 1 }
-        else i += 1
-      }
-      b.result()
-    }
-    val javaBin = new java.io.File(
-      new java.io.File(sys.props("java.home"), "bin"), "java").getAbsolutePath
-    val log = java.io.File.createTempFile("graft-child", ".log")
-    val cmd = Seq(javaBin) ++ jvmArgs ++ extraJvm ++ Seq(
-      "-Xmx2g", "-Dspark.ui.enabled=false",
-      "-cp", sys.props("java.class.path"), "graft.CrashChild") ++ childArgs
-    val pb = new ProcessBuilder(cmd.asJava)
-    pb.redirectErrorStream(true)
-    pb.redirectOutput(log)
-    (pb.start(), log)
-  }
-
-  def tail(log: java.io.File): String =
-    try new String(java.nio.file.Files.readAllBytes(log.toPath), "UTF-8").takeRight(3000)
-    catch { case _: Throwable => "<no log>" }
+  /** Fork `CrashChild` ([[ChildJvm.fork]]). */
+  def forkChild(childArgs: Seq[String], extraJvm: Seq[String]): (Process, java.io.File) =
+    ChildJvm.fork("graft.CrashChild", childArgs, extraJvm)
 
   test("a lease held by a LIVE foreign process blocks this one; hard kill -> TTL lapse -> steal") {
     val dir = java.nio.file.Files.createTempDirectory("graft-2proc-lease").toString
